@@ -565,8 +565,6 @@ object Dedup {
         .coalesce(parts)
         .localCheckpoint(false)
       val changed1 = round1.filter(col("label") =!= col("__prev")).count()
-      if (sys.env.contains("GRAFT_DEBUG_CC"))
-        System.err.println(s"[dupClusters] round 1 (fused init): $changed1 labels changed")
       // labels keeps round1's (id, label, __prev) checkpoint frame
       // directly so unpersistCheckpoint sees the LogicalRDD; __prev is
       // simply never read again
@@ -574,7 +572,6 @@ object Dedup {
       var iter = 1
       var done = changed1 == 0
       while (!done) {
-        val roundT0 = System.nanoTime()
         if (iter >= maxIters) throw new IllegalStateException(
           s"dupClusters did not converge in $maxIters rounds — " +
             "pathological graph diameter; raise maxIters")
@@ -612,9 +609,6 @@ object Dedup {
           // the same job instead of spending a separate eager action
           .localCheckpoint(false)
         val changed = jumped.filter(col("label") =!= col("__prev")).count()
-        if (sys.env.contains("GRAFT_DEBUG_CC"))
-          System.err.println(s"[dupClusters] round ${iter + 1}: $changed labels changed " +
-            s"(${(System.nanoTime() - roundT0) / 1e9}s)")
         // jumped is materialized by the count above — the previous
         // round's checkpoint is now unreferenced and safe to release
         org.apache.spark.sql.GraftBridge.unpersistCheckpoint(labels)

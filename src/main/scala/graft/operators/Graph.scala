@@ -106,12 +106,6 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nodes = nodeOutdeg(e).persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val setupT0 = System.nanoTime()
-      if (sys.env.contains("GRAFT_DEBUG_PR")) {
-        val ec = e.count()
-        System.err.println(s"[pageRank] edge materialize: " +
-          s"${(System.nanoTime() - setupT0) / 1e9}s, |E|=$ec")
-      }
       // N and the initial dangling mass ride the first checkpoint
       // materialization as Observation metrics (exact integer sums);
       // the same job populates the `nodes` cache the rounds join.
@@ -128,9 +122,6 @@ object Graph {
         state.agg(count(lit(1))).head.getLong(0))
       var dang = observed(obs0, "dang",
         state.agg(danglingMass).head.getLong(0))
-      if (sys.env.contains("GRAFT_DEBUG_PR"))
-        System.err.println(s"[pageRank] setup (edges + degrees + initial " +
-          s"state): ${(System.nanoTime() - setupT0) / 1e9}s, n=$n")
       val base = scale * (dampDen - dampNum) / dampDen
       if (n == 0) return state.select(col("id"), col("rank")) // empty graph
       // post-round partitions sized to the observed state (see scaladoc)
@@ -138,8 +129,7 @@ object Graph {
         e.sparkSession.conf.get("spark.sql.shuffle.partitions").toLong,
         math.max(1L, (n + StateRowsPerPartition - 1) / StateRowsPerPartition))
         .toInt
-      for (it <- 0 until iters) {
-        val roundT0 = System.nanoTime()
+      for (_ <- 0 until iters) {
         val obs = Observation()
         val next = round(e, nodes, state, n, base, dampNum, dampDen, dang, parts)
           .observe(obs, danglingMass)
@@ -148,9 +138,6 @@ object Graph {
           next.agg(danglingMass).head.getLong(0))
         GraftBridge.unpersistCheckpoint(state)
         state = next
-        if (sys.env.contains("GRAFT_DEBUG_PR"))
-          System.err.println(s"[pageRank] round ${it + 1}: " +
-            s"${(System.nanoTime() - roundT0) / 1e9}s")
       }
       state.select(col("id"), col("rank"))
     } finally {

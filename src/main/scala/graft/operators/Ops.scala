@@ -843,6 +843,26 @@ object Ops {
   def fanOutForCompute(df: DataFrame, keys: Column*): DataFrame =
     fanOutForCompute(df, 1L, keys: _*)
 
+  /** Size-derived partition count (r18, guide §2 "make partitioning
+    * scale-adaptive — derive from input size, not a constant tuned for
+    * either local mode or the cluster"): one partition per
+    * `bytesPerPartition` of the frame's LEAF-relation size estimate
+    * (real file bytes after column pruning — never a join-cardinality
+    * guess), clamped to [1, spark.sql.shuffle.partitions]. Iterative
+    * operators size their loop-state partitioning through this, so a
+    * benched-SF input stops paying full task waves over near-empty
+    * partitions while any real corpus saturates the configured
+    * parallelism (where the clamp is a no-op). Planning only — no job
+    * runs.
+    */
+  def sizedPartitions(df: DataFrame, bytesPerPartition: Long): Int = {
+    require(bytesPerPartition >= 1, s"bad bytesPerPartition $bytesPerPartition")
+    val cap = BigInt(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+    val sized = df.queryExecution.optimizedPlan.collectLeaves()
+      .map(_.stats.sizeInBytes).sum / bytesPerPartition + 1
+    sized.min(cap).max(BigInt(1)).toInt
+  }
+
   /** Cost-aware fan-out (r18, VERDICT r17 #1): the r17 gate fanned any
     * under-split source out to `defaultParallelism`, which regressed
     * cheap-kernel queries 2× at the benched SF — the exchange plus 32
@@ -869,26 +889,6 @@ object Ops {
     * and the `.rdd` probe below only ever sees exchange-free plans,
     * where it plans without running anything.
     */
-  /** Size-derived partition count (r18, guide §2 "make partitioning
-    * scale-adaptive — derive from input size, not a constant tuned for
-    * either local mode or the cluster"): one partition per
-    * `bytesPerPartition` of the frame's LEAF-relation size estimate
-    * (real file bytes after column pruning — never a join-cardinality
-    * guess), clamped to [1, spark.sql.shuffle.partitions]. Iterative
-    * operators size their loop-state partitioning through this, so a
-    * benched-SF input stops paying full task waves over near-empty
-    * partitions while any real corpus saturates the configured
-    * parallelism (where the clamp is a no-op). Planning only — no job
-    * runs.
-    */
-  def sizedPartitions(df: DataFrame, bytesPerPartition: Long): Int = {
-    require(bytesPerPartition >= 1, s"bad bytesPerPartition $bytesPerPartition")
-    val cap = BigInt(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-    val sized = df.queryExecution.optimizedPlan.collectLeaves()
-      .map(_.stats.sizeInBytes).sum / bytesPerPartition + 1
-    sized.min(cap).max(BigInt(1)).toInt
-  }
-
   def fanOutForCompute(df: DataFrame, maxTaskBytes: Long,
                        keys: Column*): DataFrame = {
     require(maxTaskBytes >= 1, s"maxTaskBytes must be >= 1, got $maxTaskBytes")

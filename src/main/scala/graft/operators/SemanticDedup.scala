@@ -86,36 +86,28 @@ object SemanticDedup {
     require(cosDen <= 10000,
       s"cosDen must be <= 10^4 (decimal(38,0) headroom for dot²·den²), got $cosDen — " +
         "express the threshold with a smaller denominator")
-    import org.apache.spark.storage.StorageLevel
-    val qdf = embs
-      .select(col(idCol).cast("long").as("__id"),
-        KMeans.qVec(col(vecCol)).as("__qv"))
-      .repartition(loopPartitions, col("__id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val cents = KMeans.fit(qdf, k, iters)
-      val qc = typedlit(cents.map(_.toSeq).toSeq)
-      val assigned = qdf.select(col("__id"),
-        KMeans.assignCol(col("__qv"), qc).as("cluster"),
-        col("__qv"), dotCol(col("__qv"), col("__qv")).as("__n2"))
-      val a = assigned.select(col("cluster"), col("__id").as("__ida"),
-        col("__qv").as("__qva"), col("__n2").as("__n2a"))
-      val b = assigned.select(col("cluster"), col("__id").as("__idb"),
-        col("__qv").as("__qvb"), col("__n2").as("__n2b"))
-      val d = dotCol(col("__qva"), col("__qvb"))
-      val dropped = a.join(b, Seq("cluster"))
-        .filter(col("__ida") < col("__idb") &&
-          col("__n2a") > 0 && col("__n2b") > 0 && d > 0 &&
-          d.cast("decimal(38,0)") * d.cast("decimal(38,0)")
-            * lit(cosDen.toLong * cosDen) >=
-          lit(cosNum.toLong * cosNum) * col("__n2a").cast("decimal(38,0)")
-            * col("__n2b").cast("decimal(38,0)"))
-        .select(col("__idb").as("__id")).distinct()
-      assigned.join(dropped.withColumn("__drop", lit(1L)), Seq("__id"), "left")
-        .select(col("__id").as(idCol), col("cluster"),
-          when(col("__drop").isNull, lit(1L)).otherwise(lit(0L)).as("kept"))
-    } finally {
-      qdf.unpersist(blocking = false)
-    }
+    val quantized = KMeans.quantized(embs, vecCol, idCol)
+    val cents = KMeans.fitLoop(quantized, k, iters, loopPartitions)
+    val qdf = quantized.repartition(loopPartitions, col("__id"))
+    val qc = typedlit(cents.map(_.toSeq).toSeq)
+    val assigned = qdf.select(col("__id"),
+      KMeans.assignCol(col("__qv"), qc).as("cluster"),
+      col("__qv"), dotCol(col("__qv"), col("__qv")).as("__n2"))
+    val a = assigned.select(col("cluster"), col("__id").as("__ida"),
+      col("__qv").as("__qva"), col("__n2").as("__n2a"))
+    val b = assigned.select(col("cluster"), col("__id").as("__idb"),
+      col("__qv").as("__qvb"), col("__n2").as("__n2b"))
+    val d = dotCol(col("__qva"), col("__qvb"))
+    val dropped = a.join(b, Seq("cluster"))
+      .filter(col("__ida") < col("__idb") &&
+        col("__n2a") > 0 && col("__n2b") > 0 && d > 0 &&
+        d.cast("decimal(38,0)") * d.cast("decimal(38,0)")
+          * lit(cosDen.toLong * cosDen) >=
+        lit(cosNum.toLong * cosNum) * col("__n2a").cast("decimal(38,0)")
+          * col("__n2b").cast("decimal(38,0)"))
+      .select(col("__idb").as("__id")).distinct()
+    assigned.join(dropped.withColumn("__drop", lit(1L)), Seq("__id"), "left")
+      .select(col("__id").as(idCol), col("cluster"),
+        when(col("__drop").isNull, lit(1L)).otherwise(lit(0L)).as("kept"))
   }
 }

@@ -887,28 +887,6 @@ case class DotLongs(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Minimum squared distance to a centroid list — see
-  * [[graft.functions.VectorKernels.minSqDist]]. */
-case class MinSqDist(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), ArrayType(ArrayType(LongType)))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "min_sq_dist"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    graft.functions.VectorKernels.minSqDist(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorKernels.minSqDist($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): MinSqDist =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Deterministic centroid assignment — see
   * [[graft.functions.VectorKernels.argminSqDist]]. */
 case class ArgminSqDist(left: Expression, right: Expression)

@@ -78,6 +78,101 @@ class KMeansSpec extends SparkSpec {
     assert(purity > 0.126, s"cluster purity $purity no better than one cluster")
   }
 
+  /** Every message down an exception's cause chain — a kernel failure
+    * inside a task reaches the driver wrapped in a SparkException. */
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  test("NULL vectors: a NULL seed fails naming its id, other NULL rows get cluster NULL") {
+    val seedNull = Seq((3L, None), (5L, Some(Seq(0.0, 1.0))), (7L, Some(Seq(1.0, 0.0))))
+      .toDF("id", "vec")
+    val e = intercept[IllegalArgumentException](
+      KMeans.fitAssign(seedNull, "vec", "id", k = 2, iters = 1))
+    assert(e.getMessage.contains("lowest id 3") && e.getMessage.contains("NULL vector"),
+      e.getMessage)
+    // a NULL vector that is not the seed is never picked, never
+    // assigned, and moves no centroid
+    val df = Seq((0L, Some(Seq(1.0, 0.0))), (1L, None), (2L, Some(Seq(0.0, 1.0))),
+      (3L, Some(Seq(0.9, 0.1)))).toDF("id", "vec")
+    val out = KMeans.fitAssign(df, "vec", "id", k = 2, iters = 2)
+      .as[(Long, Option[Long])].collect().toMap
+    assert(out == Map(0L -> Some(0L), 1L -> None, 2L -> Some(1L), 3L -> Some(0L)))
+  }
+
+  test("a NULL component fails with the kernel's null-element message") {
+    val df = Seq((0L, Seq[java.lang.Double](1.0, 0.0)), (1L, Seq[java.lang.Double](0.5, null)),
+      (2L, Seq[java.lang.Double](0.0, 1.0))).toDF("id", "vec")
+    for ((k, iters) <- Seq((2, 1), (1, 1))) {
+      val e = intercept[Exception](KMeans.fitAssign(df, "vec", "id", k, iters))
+      assert(messages(e).contains("null element at index 1"), messages(e))
+    }
+    // the same NULL component in the seed row fails on the driver
+    val seeded = Seq((0L, Seq[java.lang.Double](0.5, null)),
+      (1L, Seq[java.lang.Double](0.0, 1.0))).toDF("id", "vec")
+    val e = intercept[IllegalArgumentException](
+      KMeans.fitCentroids(seeded, "vec", "id", k = 1, iters = 0))
+    assert(e.getMessage.contains("null element at index 1"), e.getMessage)
+  }
+
+  test("a dim-sum past 2^53 fails with the bound's message, never wrapping first") {
+    // one component of 1e10 quantizes to 1e16 micro-units: past the
+    // 2^53 ≈ 9.007e15 exact-double bound in a single row
+    val big = Seq((0L, Seq(1.0e10, 0.0)), (1L, Seq(1.0e10, 0.0))).toDF("id", "vec")
+    val e = intercept[IllegalArgumentException](
+      KMeans.fitCentroids(big, "vec", "id", k = 1, iters = 1))
+    assert(e.getMessage.contains("cluster 0 dim-sum 20000000000000000 exceeds " +
+      "the exact-double bound"), e.getMessage)
+    // 5e12 quantizes to 5e18 — two of them overflow a long; the exact
+    // partials must report the bound, not a wrapped negative sum
+    val huge = Seq((0L, Seq(5.0e12)), (1L, Seq(5.0e12)), (2L, Seq(5.0e12))).toDF("id", "vec")
+    for (parts <- Seq(1, 3)) {
+      val e = intercept[Exception](
+        KMeans.fitCentroids(huge, "vec", "id", k = 1, iters = 1, loopPartitions = parts))
+      assert(messages(e).contains("cluster 0 dim-sum 10000000000000000000 exceeds " +
+        "the exact-double bound"), messages(e))
+    }
+  }
+
+  test("fit runs one job per seed pick and per iteration, with no shuffle") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val k = 10
+    val iters = 4
+    // already-quantized points from a local relation: nothing upstream
+    // of the fit shuffles, so every byte counted below is the fit's own
+    val qdf = (0 until 400).map { i =>
+      val r = new scala.util.Random(i)
+      (i.toLong, Seq.tabulate(8)(j => (if (j == i % k) 1000000L else 0L) + r.nextInt(5000)))
+    }.toDF("__id", "__qv")
+    val group = "kmeans-job-shape"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("spark.jobGroup.id") == group) {
+          jobs.incrementAndGet()
+          js.stageIds.foreach(stages.add(_))
+        }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (stages.contains(te.stageId) && te.taskMetrics != null)
+          shuffleBytes.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val cents = try {
+      spark.sparkContext.setJobGroup(group, "KMeans.fit job shape")
+      try KMeans.fit(qdf, k, iters)
+      finally spark.sparkContext.clearJobGroup()
+    } finally {
+      org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(cents.length == k)
+    assert(jobs.get >= 1 && jobs.get <= k + iters + 2, s"fit submitted ${jobs.get} jobs")
+    assert(shuffleBytes.get == 0L, s"fit wrote ${shuffleBytes.get} shuffle bytes")
+  }
+
   test("argument guards") {
     val df = planted(6)
     intercept[IllegalArgumentException](
