@@ -478,12 +478,18 @@ object Dedup {
     * Algorithm: iterative min-label propagation with pointer jumping —
     * each round every node takes the smallest label among itself and
     * its neighbors (one join + partial-min aggregate), then follows its
-    * label's label (path halving). The jump makes long chains converge
-    * in O(log diameter) rounds instead of O(diameter); near-dup
-    * clusters are near-cliques, so real corpora converge in 2-3 rounds.
-    * Each round is a fixed number of key-partitioned joins — no driver
-    * materialization of the graph. Refuses (throws) rather than return
-    * a partially-converged labeling if `maxIters` is exhausted.
+    * label's label (path halving). The jump halves chains whose ids
+    * rise along the chain (a sorted path of n nodes takes log2(n) + 1
+    * rounds), but where ids lie in random order along a path the
+    * minimum still crawls about one hop per round: measured with
+    * `localEdgeLimit = 0` on shuffled-id paths, 45 rounds at 64 nodes,
+    * 149 at 512, 829 at 2048 (SCALING.md "Dup-cluster resolution").
+    * Near-dup clusters are near-cliques, so real corpora converge in
+    * 2-3 rounds. Each round is a fixed number of key-partitioned joins
+    * — no driver materialization of the graph. Refuses (throws) rather
+    * than return a partially-converged labeling if `maxIters` rounds
+    * are exhausted; the default leaves 2× headroom over the slowest
+    * path measured.
     *
     * Small-graph fast path: the distinct pair graph is usually TINY
     * relative to the corpus (it is the post-threshold near-dup edge
@@ -497,17 +503,16 @@ object Dedup {
     * `localEdgeLimit = 0` forces the distributed loop.
     */
   def dupClusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-                  maxIters: Int = 25, localEdgeLimit: Long = 4_000_000L): DataFrame = {
+                  maxIters: Int = 2500, localEdgeLimit: Long = 4_000_000L): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    // ONE setup shuffle on b (r18, the prepareEdges trick): the
-    // distinct's Aggregate(a, b) needs only co-location on a SUBSET of
-    // its keys, so the explicit HashPartitioning(b) satisfies it with
-    // no second exchange — and every ROUND's neighbor join (keyed on b)
-    // then reuses the cache's recorded partitioning instead of
-    // re-shuffling the edge frame once per round, which is what the
-    // r17 shape paid (the biggest frame in the loop moving every
-    // iteration; guide §2.4 "two operations keyed the same way can
-    // share one exchange").
+    // ONE setup shuffle on b (r18): the distinct's Aggregate(a, b)
+    // needs only co-location on a SUBSET of its keys, so the explicit
+    // HashPartitioning(b) satisfies it with no second exchange — and
+    // every ROUND's neighbor join (keyed on b) then reuses the cache's
+    // recorded partitioning instead of re-shuffling the edge frame once
+    // per round, which is what the r17 shape paid (the biggest frame in
+    // the loop moving every iteration; guide §2.4 "two operations keyed
+    // the same way can share one exchange").
     val sym = pairs.select(col(idA).as("a"), col(idB).as("b"))
       .unionByName(pairs.select(col(idB).as("a"), col(idA).as("b")))
       .repartition(col("b"))
@@ -539,9 +544,8 @@ object Dedup {
       // the label frame is one row per node (≤ |sym|), ~16 B each —
       // coalescing the tiny state to few partitions stops every round
       // paying full 32-task waves over near-empty partitions, while a
-      // real graph keeps every shuffle partition (scale-adaptive, the
-      // same rule as Graph.pageRank's round coalesce; narrow, never a
-      // shuffle).
+      // real graph keeps every shuffle partition (scale-adaptive;
+      // narrow, never a shuffle).
       val parts = math.min(
         sym.sparkSession.conf.get("spark.sql.shuffle.partitions").toLong,
         math.max(1L, sym.count() / 524288L + 1L)).toInt
@@ -600,14 +604,17 @@ object Dedup {
         // a symmetric edge set ⇒ labels constant per component ⇒ equal
         // to the component min — is unchanged; only the round count at
         // which it is reached can differ, never the converged output.
-        val jumped = pulled
+        val next = pulled
           .join(labels.select(col("id").as("__jid"), col("label").as("__jl")),
             col("label") === col("__jid"))
           .select(col("id"), col("__jl").as("label"), col("__prev"))
           .coalesce(parts)
-          // lazy: the changed-count below materializes the checkpoint in
-          // the same job instead of spending a separate eager action
-          .localCheckpoint(false)
+        // lazy: the changed-count below materializes the checkpoint in
+        // the same job instead of spending a separate eager action. Every
+        // round holds round 1's rows, so it carries round 1's size
+        // estimate (the inherited one squares per round)
+        val jumped = org.apache.spark.sql.GraftBridge.withSizeOf(
+          next.localCheckpoint(false), round1)
         val changed = jumped.filter(col("label") =!= col("__prev")).count()
         // jumped is materialized by the count above — the previous
         // round's checkpoint is now unreferenced and safe to release

@@ -1,8 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, Observation}
-import org.apache.spark.sql.functions._
+import java.util.Arrays
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable
 
 /** Link-graph centrality for corpus curation.
   *
@@ -10,7 +17,7 @@ import org.apache.spark.storage.StorageLevel
   * standing of their source in the link graph (Common Crawl publishes
   * harmonic-centrality / PageRank domain rankings for exactly this
   * purpose). This operator computes PageRank over an arbitrary
-  * (src, dst) edge frame as iterative key-partitioned joins — no
+  * (src, dst) edge frame on hash-partitioned per-node state — no
   * driver-side graph materialization, so it scales to edge sets that
   * never fit one machine.
   *
@@ -18,7 +25,7 @@ import org.apache.spark.storage.StorageLevel
   * (`scale` units = rank 1.0, default nano-rank 1e9), all updates are
   * integer multiply/divide, and every aggregation is a sum of longs —
   * associative and exact. A float PageRank changes in the last ulps
-  * whenever Spark re-orders a partial sum (task retry, AQE coalesce,
+  * whenever Spark re-orders a partial sum (task retry, re-partitioning,
   * speculative execution); this one returns bit-identical ranks on
   * every run, which makes it safe to hash-compare, cache, and
   * incrementally diff — and lets an external engine replay the exact
@@ -41,36 +48,31 @@ import org.apache.spark.storage.StorageLevel
   * `dampNum * totalMass` with totalMass = N * scale must stay under
   * 2^63, so at the default scale=1e9, dampNum=17 the operator is safe
   * to ~5×10^8 nodes; drop `scale` to 1e6 for a 5×10^11-node graph.
-  * (Spark 4 runs ANSI mode: an overflow would throw loudly, never
-  * wrap silently.)
+  * Every sum and multiply is `Math.addExact` / `multiplyExact`, so an
+  * overflow throws an ArithmeticException, never a wrapped rank.
   *
-  * Scale shape per iteration (re-derived in r18 from StageProbe
-  * evidence — the r17 round paid FOUR task waves over three exchanges
-  * and the per-stage scheduling floor dominated the benched SF):
-  *   - one shuffle of the state projection to the edge cache's
-  *     hash(src) partitioning (the edges NEVER move — the cache's
-  *     REPARTITION_BY_COL partitioning is reused every round);
-  *   - one shuffle of (dst, contrib) partial sums for the inbound
-  *     aggregation (map-side combiner runs before the exchange);
-  *   - ZERO further exchanges: the rank update joins the inbound sums
-  *     against a static cached `nodes(id, outdeg)` frame whose
-  *     PERSISTED hash(id) partitioning matches the aggregation's —
-  *     the r17 shape re-shuffled the checkpointed state here every
-  *     round, because a localCheckpoint forgets its partitioning
-  *     under AQE while an InMemoryRelation records it.
-  * The dangling total rides each round's checkpoint materialization
-  * as an Observation metric and enters the next round as a literal,
-  * so one round = one job with no side jobs; per-round driver state
-  * is two longs. Each round is `localCheckpoint`ed — lineage would
-  * otherwise grow with the iteration count — and the superseded
-  * round's storage is released eagerly
-  * ([[GraftBridge.unpersistCheckpoint]]); on a real cluster prefer
-  * reliable `checkpoint()`. Before the checkpoint the state is
-  * `coalesce`d (narrow, no shuffle) to a partition count derived from
-  * the OBSERVED node count (~256k state rows per partition), so a
-  * small graph stops paying a full task wave per stage while a
-  * 100 TB one keeps every shuffle partition — the scale-adaptive
-  * partitioning rule of optimization-guide §2.
+  * Scale shape: plain RDD jobs, no Catalyst plan inside the loop.
+  *   - Setup: the (src, dst) pairs shuffle ONCE, hash-partitioned on
+  *     src ([[edgePartitions]] ways). Each partition becomes one cached
+  *     [[Part]]: its node ids, sorted, and a CSR edge layout holding
+  *     every src's distinct dsts. Nodes that are only ever a dst reach
+  *     their home partition through a second, node-sized shuffle on
+  *     the same partitioner. One action builds it and returns N and
+  *     the sink count.
+  *   - Each round is ONE job: a `zipPartitions(graph, ranks)` pass
+  *     sums the contributions per dst in a map-side `LongMap`, so at
+  *     most partitions × nodes (dst, sum) records shuffle and edges
+  *     never move after setup; the sums zip back onto the
+  *     co-partitioned graph to give the new rank array and the round's
+  *     dangling mass, which the round's action returns to the driver.
+  *     That action also materializes the persisted, `localCheckpoint`ed
+  *     rank state, after which the previous round's state is released.
+  *     On a real cluster prefer reliable `checkpoint()`.
+  * Measured on `q_pagerank` (6 rounds, sf0.1, Spark local[4] on a
+  * 4-vCPU VM, traced): its build went from 27 jobs in 3.4–4.3 s, when
+  * each round planned SQL joins that adaptive execution split into 3
+  * jobs (~300–450 ms a round), to 10 jobs in 1.6–1.8 s, with rounds of
+  * 60–100 ms (SCALING.md "Link-graph centrality").
   *
   * Fixed `iters` rather than a convergence test: curation wants a
   * reproducible artifact, and a convergence probe would cost an extra
@@ -84,11 +86,20 @@ import org.apache.spark.storage.StorageLevel
   */
 object Graph {
 
-  /** State rows one post-round partition should hold (~24 B each →
-    * ~6 MB partitions). Derives the coalesce width from the observed
-    * node count; at any real graph size the width saturates at the
-    * shuffle-partition count and the coalesce is a no-op. */
-  private val StateRowsPerPartition = 262144L
+  /** One hash partition of the graph. `ids` are its nodes, ascending;
+    * node i's distinct out-neighbors are `dst(off(i) until off(i + 1))`,
+    * ascending, so its outdegree is `off(i + 1) - off(i)` (0 for a
+    * sink). */
+  private final class Part(val ids: Array[Long], val off: Array[Int], val dst: Array[Long])
+      extends Serializable {
+    def outdeg(i: Int): Int = off(i + 1) - off(i)
+    def sinks: Long = ids.indices.count(outdeg(_) == 0).toLong
+  }
+
+  /** One partition's rank state: `rank(i)` belongs to `ids(i)` (the
+    * [[Part]]'s array), `dang` is the rank mass on its sinks. */
+  private final class Ranks(val ids: Array[Long], val rank: Array[Long], val dang: Long)
+    extends Serializable
 
   /** PageRank over `edges(srcCol, dstCol)` (long-compatible ids).
     * Returns (id LONG, rank LONG) — rank in `scale` fixed-point units,
@@ -96,171 +107,187 @@ object Graph {
     */
   def pageRank(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
                iters: Int = 8, scale: Long = 1_000_000_000L,
-               dampNum: Long = 17L, dampDen: Long = 20L): DataFrame = {
+               dampNum: Long = 17L, dampDen: Long = 20L): DataFrame =
+    pageRank(edges, srcCol, dstCol, iters, scale, dampNum, dampDen, edgePartitions(edges))
+
+  /** [[pageRank]] over `parts` hash partitions of the graph. */
+  private[graft] def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
+                              iters: Int, scale: Long, dampNum: Long, dampDen: Long,
+                              parts: Int): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(dampNum >= 0 && dampNum <= dampDen && dampDen > 0,
       s"damping $dampNum/$dampDen outside [0, 1]")
     require(scale > 0, s"scale must be positive, got $scale")
-    val eParts = edgePartitions(edges)
-    val e = prepareEdges(edges, srcCol, dstCol, eParts)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = nodeOutdeg(e).persist(StorageLevel.MEMORY_AND_DISK)
+    require(parts >= 1, s"parts must be >= 1, got $parts")
+    val base = Math.multiplyExact(scale, dampDen - dampNum) / dampDen
+    val part = new HashPartitioner(parts)
+    val bySrc = srcLayouts(edges, srcCol, dstCol, part)
+    val graph = withDstNodes(bySrc, part)
     try {
-      // N and the initial dangling mass ride the first checkpoint
-      // materialization as Observation metrics (exact integer sums);
-      // the same job populates the `nodes` cache the rounds join.
-      val obs0 = Observation()
-      var state = nodes.withColumn("rank", lit(scale))
-        // narrow width reduction sized like the edge pipeline, so round
-        // 1's contribution scan doesn't pay a full shuffle-partition
-        // task wave over near-empty checkpoint partitions (n is not
-        // observed yet at this point; later rounds re-derive from n)
-        .coalesce(eParts)
-        .observe(obs0, count(lit(1)).as("n"), danglingMass)
-        .localCheckpoint(true)
-      val n = observed(obs0, "n",
-        state.agg(count(lit(1))).head.getLong(0))
-      var dang = observed(obs0, "dang",
-        state.agg(danglingMass).head.getLong(0))
-      val base = scale * (dampDen - dampNum) / dampDen
-      if (n == 0) return state.select(col("id"), col("rank")) // empty graph
-      // post-round partitions sized to the observed state (see scaladoc)
-      val parts = math.min(
-        e.sparkSession.conf.get("spark.sql.shuffle.partitions").toLong,
-        math.max(1L, (n + StateRowsPerPartition - 1) / StateRowsPerPartition))
-        .toInt
-      for (_ <- 0 until iters) {
-        val obs = Observation()
-        val next = round(e, nodes, state, n, base, dampNum, dampDen, dang, parts)
-          .observe(obs, danglingMass)
-          .localCheckpoint(true)
-        dang = observed(obs, "dang",
-          next.agg(danglingMass).head.getLong(0))
-        GraftBridge.unpersistCheckpoint(state)
+      // the setup action: builds and caches the graph, and returns N
+      // and the initial sink mass
+      var state = graph.map(g => new Ranks(g.ids, Array.fill(g.ids.length)(scale),
+        Math.multiplyExact(g.sinks, scale))).localCheckpoint()
+      val (n, dang0) = state.map(r => (r.ids.length.toLong, r.dang))
+        .fold((0L, 0L)) { case ((n1, d1), (n2, d2)) => (n1 + n2, Math.addExact(d1, d2)) }
+      var dang = dang0
+      if (n > 0) for (_ <- 0 until iters) {
+        val next = round(graph, state, part, base, dampNum, dampDen, dang / n)
+          .localCheckpoint()
+        dang = next.map(_.dang).fold(0L)(Math.addExact)
+        state.unpersist(blocking = false)
         state = next
       }
-      state.select(col("id"), col("rank"))
+      val rows = state.flatMap(r => r.ids.indices.iterator.map(i => Row(r.ids(i), r.rank(i))))
+      edges.sparkSession.createDataFrame(rows, StructType(Seq(
+        StructField("id", LongType, nullable = false),
+        StructField("rank", LongType, nullable = false))))
     } finally {
-      e.unpersist(blocking = false)
-      nodes.unpersist(blocking = false)
+      bySrc.unpersist(blocking = false)
+      graph.unpersist(blocking = false)
     }
   }
 
-  /** Bounded Observation read (ADVICE r17): `Observation.get` waits on
-    * an async listener event with no timeout — a dropped event would
-    * hang the driver loop forever. Poll the non-blocking view with a
-    * deadline and fall back to `direct` (a 1-row aggregate over the
-    * already-checkpointed frame — cheap, and arithmetically the same
-    * exact integer sum the metric carries). */
-  private def observed(obs: Observation, key: String, direct: => Long): Long = {
-    val deadlineNs = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (System.nanoTime() < deadlineNs) {
-      val m = GraftBridge.observationOrEmpty(obs)
-      if (m.nonEmpty) return m(key).asInstanceOf[Long]
-      Thread.sleep(2)
-    }
-    direct
+  /** The src side of the graph, cached: ONE shuffle of the (src, dst)
+    * pairs on `part`, then each partition's [[srcLayout]]. */
+  private def srcLayouts(edges: DataFrame, srcCol: String, dstCol: String,
+                         part: HashPartitioner): RDD[Part] =
+    edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"))
+      .queryExecution.toRdd.flatMap { r =>
+        if (r.isNullAt(0) || r.isNullAt(1)) None else Some((r.getLong(0), r.getLong(1)))
+      }
+      .partitionBy(part)
+      .mapPartitions(it => Iterator(srcLayout(it)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** The whole graph, cached: every dst id shuffles to its home
+    * partition on `part` (one record per partition it is a dst in —
+    * node-sized, read from the cached src side, so the edges move
+    * once) and joins there as a sink unless it is a src already. */
+  private def withDstNodes(bySrc: RDD[Part], part: HashPartitioner): RDD[Part] = {
+    val dstIds = bySrc.flatMap(g => distinctSorted(g.dst).iterator.map(d => (d, ())))
+      .partitionBy(part)
+    bySrc.zipPartitions(dstIds) { (gs, ds) =>
+      Iterator(withNodes(gs.next(), distinctSorted(ds.map(_._1).toArray)))
+    }.persist(StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** Total rank mass on sinks — the Observation metric each round's
-    * materialization carries (exact long sum, order-independent). */
-  private def danglingMass: org.apache.spark.sql.Column =
-    coalesce(sum(when(col("outdeg") === 0L, col("rank"))), lit(0L)).as("dang")
+  /** One round: the new rank state, with each partition's sink mass. */
+  private def round(graph: RDD[Part], state: RDD[Ranks], part: HashPartitioner,
+                    base: Long, dampNum: Long, dampDen: Long, dangShare: Long): RDD[Ranks] = {
+    val inbound = graph.zipPartitions(state) { (gs, rs) =>
+      val g = gs.next()
+      val r = rs.next().rank
+      // map-side combine: one (dst, sum) record per dst of this
+      // partition, however many edges point at it
+      val sums = new mutable.LongMap[Long]()
+      var i = 0
+      while (i < g.ids.length) {
+        val deg = g.outdeg(i)
+        if (deg > 0) {
+          val c = r(i) / deg
+          var j = g.off(i)
+          while (j < g.off(i + 1)) {
+            val d = g.dst(j)
+            sums.update(d, Math.addExact(sums.getOrElse(d, 0L), c))
+            j += 1
+          }
+        }
+        i += 1
+      }
+      sums.iterator
+    }.partitionBy(part)
+    graph.zipPartitions(inbound) { (gs, ins) =>
+      val g = gs.next()
+      val in = new Array[Long](g.ids.length)
+      ins.foreach { case (d, s) =>
+        val i = Arrays.binarySearch(g.ids, d)
+        in(i) = Math.addExact(in(i), s)
+      }
+      var dang = 0L
+      var i = 0
+      while (i < in.length) {
+        in(i) = Math.addExact(base,
+          Math.multiplyExact(dampNum, Math.addExact(in(i), dangShare)) / dampDen)
+        if (g.outdeg(i) == 0) dang = Math.addExact(dang, in(i))
+        i += 1
+      }
+      Iterator(new Ranks(g.ids, in, dang))
+    }
+  }
 
-  /** ONE setup shuffle on src: the distinct's Aggregate(src, dst)
-    * requires only co-location on a subset of its keys, so the explicit
-    * HashPartitioning(src) satisfies it with no second exchange — and
-    * every ITERATION's contribution join then reuses the same
-    * partitioning (the per-round shuffle carries the small state frame,
-    * never the edges).
-    *
-    * The partition COUNT is derived from the edge source's size (r18,
-    * guide §2 "make partitioning scale-adaptive — derive from input
-    * size"): the per-round join stage runs one task per edge
-    * partition, and at the benched SF the inherited
-    * spark.sql.shuffle.partitions=cores meant 32 near-empty tasks
-    * whose fixed cost (launch + deserialize, ~10-25 ms each)
-    * dominated every round — the 8-core driver run of the SAME query
-    * was 2.4× faster end to end (PERF r17 scaling 0.42), which is the
-    * whole signature. One partition per ~4 MB of source keeps task
-    * compute well above the fixed cost; the leaf-relation size
-    * estimate is real file bytes (never a join-cardinality guess),
-    * and any real edge set saturates the configured shuffle
-    * parallelism, where this clamp is a no-op. */
-  /** Edge-pipeline partition count from the source's leaf size. */
+  /** The src side of one partition's layout from its (src, dst) pairs:
+    * every src with its distinct dsts. */
+  private def srcLayout(pairs: Iterator[(Long, Long)]): Part = {
+    val srcB = new mutable.ArrayBuilder.ofLong
+    val dstB = new mutable.ArrayBuilder.ofLong
+    pairs.foreach { case (s, d) => srcB += s; dstB += d }
+    val src = srcB.result()
+    val dst = dstB.result()
+    val ids = distinctSorted(src)
+    // counting sort of the dsts into per-src slices
+    val slot = src.map(Arrays.binarySearch(ids, _))
+    val off = new Array[Int](ids.length + 1)
+    slot.foreach(i => off(i + 1) += 1)
+    for (i <- ids.indices) off(i + 1) += off(i)
+    val fill = Arrays.copyOf(off, ids.length)
+    val sorted = new Array[Long](dst.length)
+    for (k <- dst.indices) { sorted(fill(slot(k))) = dst(k); fill(slot(k)) += 1 }
+    // sort each slice and drop parallel edges, compacting in place
+    val dedup = new Array[Int](ids.length + 1)
+    var w = 0
+    for (i <- ids.indices) {
+      Arrays.sort(sorted, off(i), off(i + 1))
+      for (k <- off(i) until off(i + 1) if k == off(i) || sorted(k) != sorted(k - 1)) {
+        sorted(w) = sorted(k)
+        w += 1
+      }
+      dedup(i + 1) = w
+    }
+    new Part(ids, dedup, Arrays.copyOf(sorted, w))
+  }
+
+  /** `g` with the sorted, distinct node ids `extra` merged in — those
+    * that are not already a src here join as sinks. */
+  private def withNodes(g: Part, extra: Array[Long]): Part = {
+    val ids = new mutable.ArrayBuilder.ofLong
+    val off = new mutable.ArrayBuilder.ofInt
+    off += 0
+    var i = 0
+    var k = 0
+    while (i < g.ids.length || k < extra.length) {
+      if (k == extra.length || i < g.ids.length && g.ids(i) <= extra(k)) {
+        if (k < extra.length && g.ids(i) == extra(k)) k += 1
+        ids += g.ids(i)
+        off += g.off(i + 1)
+        i += 1
+      } else {
+        ids += extra(k)
+        off += g.off(i)
+        k += 1
+      }
+    }
+    new Part(ids.result(), off.result(), g.dst)
+  }
+
+  private def distinctSorted(xs: Array[Long]): Array[Long] = {
+    val s = xs.clone()
+    Arrays.sort(s)
+    var w = 0
+    for (k <- s.indices if k == 0 || s(k) != s(k - 1)) { s(w) = s(k); w += 1 }
+    Arrays.copyOf(s, w)
+  }
+
+  /** Graph partition count from the edge source's size (r18, guide §2
+    * "make partitioning scale-adaptive — derive from input size"):
+    * every setup and round stage runs one task per partition, and at
+    * the benched SF the inherited spark.sql.shuffle.partitions = cores
+    * meant near-empty tasks whose fixed cost (launch + deserialize,
+    * ~10-25 ms each) dominated every round. One partition per ~4 MB of
+    * source keeps task compute well above the fixed cost; the
+    * leaf-relation size estimate is real file bytes (never a
+    * join-cardinality guess), and any real edge set saturates the
+    * configured shuffle parallelism, where this clamp is a no-op. */
   private[graft] def edgePartitions(edges: DataFrame): Int =
     Ops.sizedPartitions(edges, 4L * 1024 * 1024)
-
-  private[graft] def prepareEdges(edges: DataFrame, srcCol: String,
-                                  dstCol: String): DataFrame =
-    prepareEdges(edges, srcCol, dstCol, edgePartitions(edges))
-
-  private[graft] def prepareEdges(edges: DataFrame, srcCol: String,
-                                  dstCol: String, parts: Int): DataFrame =
-    edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .repartition(parts, col("src"))
-      .distinct()
-
-  /** The static (id, outdeg) node frame every round's rank update joins
-    * — ONE aggregation over both edge endpoints (src rows weigh 1, dst
-    * rows 0, so the sum IS the out-degree and dst-only nodes land at
-    * 0), partial-aggregated map-side. Built once, cached: its
-    * hash(id) partitioning is RECORDED by the InMemoryRelation, so the
-    * per-round join against the inbound sums needs no exchange on
-    * either side (r18; the r17 shape re-shuffled the state frame here
-    * every round). Replaces the r16/r17 initState's distinct-union +
-    * left-join (one exchange and one join fewer at setup). */
-  private[graft] def nodeOutdeg(e: DataFrame): DataFrame =
-    e.select(col("src").as("id"), lit(1L).as("__d"))
-      .unionByName(e.select(col("dst").as("id"), lit(0L).as("__d")))
-      .groupBy("id").agg(sum(col("__d")).as("outdeg"))
-
-  /** Initial (id, outdeg, rank = scale) state over the node set —
-    * retained for spec use; production setup rides [[nodeOutdeg]]. */
-  private[graft] def initState(e: DataFrame, scale: Long): DataFrame =
-    nodeOutdeg(e).withColumn("rank", lit(scale))
-
-  /** One PageRank round over (id, outdeg, rank) `state` — extracted so
-    * the per-round physical plan itself sits under a PlanSpec pin (the
-    * final query plan is just the last checkpoint's LogicalRDD, which
-    * would hide a regression here). `nodes` is the cached static
-    * (id, outdeg) frame; `parts` the post-round coalesce width. */
-  private[graft] def round(e: DataFrame, nodes: DataFrame, state: DataFrame,
-                           n: Long, base: Long, dampNum: Long, dampDen: Long,
-                           dang: Long, parts: Int): DataFrame = {
-    // the dangling share enters as a LITERAL (r17 opt): the previous
-    // round's Observation already summed the sink mass exactly, so the
-    // old 1-row aggregate + BroadcastExchange subtree is gone — both
-    // floor divisions on non-negative longs, identical arithmetic
-    val dangShare = dang / n
-    // (dst, rank div outdeg) summed per dst — partial-aggregated
-    // map-side, so the shuffle carries one row per (task, dst); the
-    // contribution is computed BEFORE the join so the edge-side probe
-    // carries one long, not (rank, outdeg)
-    val contribs = state.filter(col("outdeg") > 0L)
-      .select(col("id").as("src"), expr("rank div outdeg").as("__c"))
-    // SHUFFLE_HASH on the state-sized side (r17 opt, guide §3.1): the
-    // planner's sort-merge would re-SORT the cached 100 TB-side edge
-    // frame every round (measured: the join stage dominated each
-    // round); hashing the per-partition state slice — bounded by
-    // N/partitions rows — streams the edges unsorted. Same rows out,
-    // different join algorithm only.
-    val inbound = e.join(contribs.hint("shuffle_hash"), Seq("src"))
-      .groupBy(col("dst").as("id"))
-      .agg(sum(col("__c")).as("__in"))
-    // rank update against the CACHED node frame: both sides already
-    // hash(id)-partitioned (cache-recorded / aggregation output), so
-    // no exchange — the r17 shape paid one here per round. `div` (not
-    // `/`): Column./ is DOUBLE division even on longs, which would
-    // silently forfeit the exact-integer contract. The coalesce is
-    // narrow (never a shuffle) and a no-op once parts reaches the
-    // shuffle-partition count.
-    nodes.join(inbound.hint("shuffle_hash"), Seq("id"), "left")
-      .select(col("id"), col("outdeg"),
-        expr(s"$base + ($dampNum * (coalesce(__in, CAST(0 AS BIGINT)) + $dangShare)) " +
-          s"div $dampDen").cast("long").as("rank"))
-      .coalesce(parts)
-  }
 }

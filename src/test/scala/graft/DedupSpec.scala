@@ -458,6 +458,20 @@ class DedupSpec extends SparkSpec {
     assert(dist == local)
   }
 
+  test("dupClusters: a path with shuffled ids converges far past 25 rounds") {
+    // the distributed loop's slowest measured shape: along a path whose
+    // ids are in random order the minimum crawls about one hop per
+    // round, so rounds grow with the path length (sorted ids halve it:
+    // log2(n) + 1). This 64-node one takes 45 rounds; 25 was the old cap
+    val ids = new scala.util.Random(6).shuffle((0L until 64L).toVector)
+    val pairs = ids.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("id_a", "id_b")
+    val out = Dedup.dupClusters(pairs, localEdgeLimit = 0).as[(Long, Long)].collect().toMap
+    assert(out == ids.map(_ -> 0L).toMap)
+    val e = intercept[IllegalStateException](
+      Dedup.dupClusters(pairs, maxIters = 25, localEdgeLimit = 0))
+    assert(e.getMessage.contains("did not converge in 25 rounds"), e.getMessage)
+  }
+
   test("dedupByPairs keeps one representative per cluster plus unpaired rows") {
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
     val kept = Dedup.dedupByPairs(docs, "doc_id", pairs)

@@ -96,4 +96,98 @@ class GraphSpec extends SparkSpec {
     intercept[IllegalArgumentException](Graph.pageRank(e, dampNum = 21L, dampDen = 20L))
     intercept[IllegalArgumentException](Graph.pageRank(e, scale = 0L))
   }
+
+  private type Edge = (java.lang.Long, java.lang.Long)
+
+  /** The recurrence of [[Graph.pageRank]] replayed on the driver in
+    * exact BigInt arithmetic: DISTINCT non-NULL edges, nodes = every
+    * endpoint, floor divisions on non-negative values. */
+  private def reference(edges: Seq[Edge], iters: Int, scale: Long,
+                        dampNum: Long, dampDen: Long): Map[Long, Long] = {
+    val e = edges.collect { case (s, d) if s != null && d != null =>
+      (s.longValue, d.longValue) }.distinct
+    val nodes = (e.map(_._1) ++ e.map(_._2)).distinct
+    val n = BigInt(nodes.size)
+    val outdeg = e.groupMapReduce(_._1)(_ => BigInt(1))(_ + _).withDefaultValue(BigInt(0))
+    val base = BigInt(scale) * (dampDen - dampNum) / dampDen
+    var rank = nodes.map(_ -> BigInt(scale)).toMap
+    for (_ <- 0 until iters) {
+      val dangShare = nodes.filter(outdeg(_) == 0).map(rank).sum / n
+      val in = e.groupMapReduce(_._2)(p => rank(p._1) / outdeg(p._1))(_ + _)
+      rank = nodes.map(v =>
+        v -> (base + dampNum * (in.getOrElse(v, BigInt(0)) + dangShare) / dampDen)).toMap
+    }
+    rank.map { case (v, r) => v -> r.toLong }
+  }
+
+  /** A random graph with every input shape the operator has to get
+    * right: self-loops, parallel edges, NULL endpoints, extreme and
+    * negative ids, dst-only sinks, and one hub dst with 10k in-edges. */
+  private def messyGraph(seed: Int): Seq[Edge] = {
+    val r = new scala.util.Random(seed)
+    val pool = Array(Long.MinValue, Long.MaxValue, Long.MinValue + 1, -1L, 0L) ++
+      Array.fill(60)(r.nextLong() % 1000)
+    def node: java.lang.Long = pool(r.nextInt(pool.length))
+    val random = Seq.fill(400)((node, node))
+    val loops = pool.take(5).toSeq.map(v => (java.lang.Long.valueOf(v), java.lang.Long.valueOf(v)))
+    val hub = java.lang.Long.valueOf(1L << 40)
+    val fans = (0 until 10000).map(i => (java.lang.Long.valueOf(5000L + i), hub))
+    val sinks = (1 to 5).map(i => (node, java.lang.Long.valueOf((7L << 50) + i)))
+    val nulls = Seq[Edge]((null, node), (node, null), (null, null))
+    r.shuffle(random ++ random.take(40) ++ loops ++ fans ++ Seq((hub, node)) ++ sinks ++ nulls)
+  }
+
+  test("pageRank: bit-identical to an exact driver-side replay at 1 and 5 partitions") {
+    for (iters <- 0 to 8) {
+      val edges = messyGraph(iters)
+      val (dampNum, dampDen) = if (iters % 2 == 0) (17L, 20L) else (5L, 7L)
+      val want = reference(edges, iters, 1000000000L, dampNum, dampDen)
+      for (parts <- Seq(1, 5)) {
+        val got = Graph.pageRank(edges.toDF("src", "dst"), "src", "dst", iters,
+          1000000000L, dampNum, dampDen, parts).as[(Long, Long)].collect()
+        assert(got.length == want.size, s"iters $iters parts $parts")
+        assert(got.toMap == want, s"iters $iters parts $parts")
+      }
+    }
+  }
+
+  test("pageRank: an overflowing damping multiply throws, never wraps") {
+    // 1 ⇄ 2: round 1 computes 17 * scale, past 2^63 at this scale
+    val scale = Long.MaxValue / 10
+    assert(ranks(Seq((1L, 2L), (2L, 1L)), iters = 0, scale = scale) ==
+      Map(1L -> scale, 2L -> scale))
+    val e = intercept[Exception](ranks(Seq((1L, 2L), (2L, 1L)), iters = 1, scale = scale))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(_.isInstanceOf[ArithmeticException]), e)
+  }
+
+  test("pageRank: one job per round; rounds shuffle per-node sums, never edges") {
+    // 64 nodes, each a src; within every hash partition the srcs' dst
+    // windows cover all 64 nodes at either fanout, so a round's sums are
+    // one record per (partition, node) whether there are 512 edges or 4x
+    val parts = 4
+    val byPart = (0L until 64L).groupBy(new org.apache.spark.HashPartitioner(parts).getPartition)
+    def edges(fanout: Int) = byPart.values.toSeq.flatMap(_.zipWithIndex.flatMap {
+      case (s, q) => (0 until fanout).map(j => (s, (q * fanout + j) % 64L)) }).toDF("src", "dst")
+    def shape(fanout: Int, iters: Int) =
+      JobShape.of(spark, s"pagerank-$fanout-$iters") {
+        Graph.pageRank(edges(fanout), "src", "dst", iters, 1000000000L, 17L, 20L, parts)
+          .collect()
+      }._2
+    for (iters <- Seq(1, 5)) {
+      val jobs = shape(8, iters).jobs
+      assert(jobs <= iters + 4, s"pageRank(iters = $iters) submitted $jobs jobs")
+    }
+    def perRound(fanout: Int) = {
+      val (a, b) = (shape(fanout, 1), shape(fanout, 5))
+      ((b.shuffleRecords - a.shuffleRecords) / 4, (b.shuffleBytes - a.shuffleBytes) / 4)
+    }
+    val (smallRecords, smallBytes) = perRound(8)
+    val (bigRecords, bigBytes) = perRound(32)
+    assert(smallRecords == parts * 64 && bigRecords == smallRecords,
+      s"records per round: $smallRecords at 512 edges, $bigRecords at 2048")
+    // bytes are compressed, so equal records may differ by a few bytes
+    assert(bigBytes <= smallBytes * 5 / 4,
+      s"shuffle bytes per round: $smallBytes at 512 edges, $bigBytes at 2048")
+  }
 }

@@ -134,7 +134,6 @@ class KMeansSpec extends SparkSpec {
   }
 
   test("fit runs one job per seed pick and per iteration, with no shuffle") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
     val k = 10
     val iters = 4
     // already-quantized points from a local relation: nothing upstream
@@ -143,34 +142,10 @@ class KMeansSpec extends SparkSpec {
       val r = new scala.util.Random(i)
       (i.toLong, Seq.tabulate(8)(j => (if (j == i % k) 1000000L else 0L) + r.nextInt(5000)))
     }.toDF("__id", "__qv")
-    val group = "kmeans-job-shape"
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            js.properties.getProperty("spark.jobGroup.id") == group) {
-          jobs.incrementAndGet()
-          js.stageIds.foreach(stages.add(_))
-        }
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (stages.contains(te.stageId) && te.taskMetrics != null)
-          shuffleBytes.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    val cents = try {
-      spark.sparkContext.setJobGroup(group, "KMeans.fit job shape")
-      try KMeans.fit(qdf, k, iters)
-      finally spark.sparkContext.clearJobGroup()
-    } finally {
-      org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    val (cents, shape) = JobShape.of(spark, "kmeans-job-shape")(KMeans.fit(qdf, k, iters))
     assert(cents.length == k)
-    assert(jobs.get >= 1 && jobs.get <= k + iters + 2, s"fit submitted ${jobs.get} jobs")
-    assert(shuffleBytes.get == 0L, s"fit wrote ${shuffleBytes.get} shuffle bytes")
+    assert(shape.jobs >= 1 && shape.jobs <= k + iters + 2, s"fit submitted ${shape.jobs} jobs")
+    assert(shape.shuffleBytes == 0L, s"fit wrote ${shape.shuffleBytes} shuffle bytes")
   }
 
   test("argument guards") {

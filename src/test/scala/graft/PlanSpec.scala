@@ -449,88 +449,6 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("gif_frames"), p)
   }
 
-  test("pageRank round at scale shape: the cached edge side never re-shuffles; " +
-    "per-round exchanges carry only state-sized frames") {
-    import org.apache.spark.sql.functions._
-    val g = graft.operators.Graph
-    // -1 forces the at-100TB shape: an edge frame that big never
-    // broadcasts, so the round's joins must survive on partitioning
-    // reuse (with stats-driven broadcasts on, the test-sized edges
-    // would broadcast and hide a broken reuse)
-    val prevBcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    // parts=4 stands in for the at-scale regime where the size-derived
-    // edge partitioning has saturated the configured shuffle
-    // parallelism (a 1-partition edge cache is the degenerate tiny-
-    // graph shape, where partitioning reuse is moot anyway)
-    val e = g.prepareEdges(
-      spark.range(0, 2000).selectExpr("id % 97 AS src", "id % 41 + 1 AS dst"),
-      "src", "dst", parts = 4).persist()
-    val nodes = g.nodeOutdeg(e).persist()
-    try {
-      e.count()
-      nodes.count() // production order: both caches built before rounds plan
-      val state = g.initState(e, 1000000000L).localCheckpoint(true)
-      val round = g.round(e, nodes, state, state.count(), 150000000L, 17L, 20L,
-        0L, parts = 1)
-      val top = round.queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a.initialPlan
-        case p => p
-      }
-      val f = top.toString
-      import org.apache.spark.sql.execution.SparkPlan
-      import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-      import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-      import org.apache.spark.sql.execution.joins.BaseJoinExec
-      // BOTH caches read IN PLACE: the edge side's HashPartitioning(src)
-      // was established once at setup and the node side's
-      // HashPartitioning(id) by its setup aggregation, both RECORDED by
-      // their InMemoryRelations — no Exchange may sit between a join
-      // and either cache scan; one means a 100 TB-side frame started
-      // re-shuffling every iteration. Checked on the plan TREE (the
-      // string render inlines each cache's own internal plan, whose
-      // nodes must not be confused with the round's).
-      def region(p: SparkPlan): Seq[SparkPlan] =
-        p +: (if (p.isInstanceOf[BaseJoinExec]) Seq.empty
-              else p.children.flatMap(region))
-      val joins = top.collect { case j: BaseJoinExec => j }
-      assert(joins.size == 2, f)
-      joins.foreach { j =>
-        j.children.foreach { c =>
-          val r = region(c)
-          val cacheHere = r.exists(_.isInstanceOf[InMemoryTableScanExec])
-          val exchangeHere = r.exists(_.isInstanceOf[ShuffleExchangeLike])
-          assert(!(cacheHere && exchangeHere),
-            s"exchange between a join and a cache scan:\n$f")
-        }
-      }
-      // the only inserted shuffles are state/contribution-sized: the
-      // contribution probe (state projected to (src, contrib)) and the
-      // per-dst contribution sum (post partial-agg: one row per task ×
-      // dst). The r17 shape also re-shuffled the checkpointed state for
-      // the rank join (a localCheckpoint forgets its partitioning under
-      // AQE); r18 joins the cached node frame instead, whose recorded
-      // partitioning already matches the aggregation's — a 3rd
-      // exchange means that reuse broke
-      assert(top.collect { case s: ShuffleExchangeLike => s }.size <= 2, f)
-      // contribution sum is partial-aggregated before its shuffle
-      assert(f.contains("partial_sum"), f)
-      // the post-round width reduction must stay NARROW — a shuffle
-      // here would re-move the state per round
-      assert(f.contains("Coalesce"), f)
-      // the dangling total is a LITERAL from the previous round's
-      // Observation (r17): no per-round aggregate/broadcast subtree —
-      // and certainly no cartesian — may reappear for it
-      assert(!f.contains("CartesianProduct"), f)
-      assert(!f.contains("BroadcastNestedLoopJoin"), f)
-    } finally {
-      e.unpersist(blocking = false)
-      nodes.unpersist(blocking = false)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBcast)
-    }
-  }
-
   /** Every Window in `p` must sit directly on the bounded bin/model
     * table (a HashAggregate within a few plan lines below it), never
     * on a corpus-sized input. */
