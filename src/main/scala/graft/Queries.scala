@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
 import graft.operators.{Classifier, Decontaminate, Dedup, Dimensions, FuzzyMatch, LmQuality, Multimodal, Ops, Packing, Ranking, Robots, Similarity}
+import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -25,7 +26,7 @@ object Queries {
                      oracle: Option[String])
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Tables.parquet(s, s"$dir/$name.parquet")
 
   /** Per-process scratch space for queries exercising a filesystem
     * round-trip (blob export, JSONL ingest, persisted index). One stable

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.unsafe.bitset.BitSetMethods
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static kernels behind [[org.apache.spark.sql.ShingleHashes64]] and
@@ -61,22 +62,18 @@ object MinHashKernels {
   /** Exact Jaccard of two sorted-distinct long arrays (the
     * [[shingleHashes]] representation): one linear merge, no per-row
     * hash-set construction (which is what `array_intersect` +
-    * `array_union` cost per candidate pair).
+    * `array_union` cost per candidate pair). A NULL element fails
+    * loudly, naming its index.
     */
   def sortedJaccard(a: ArrayData, b: ArrayData): Double = {
+    requireDense(a); requireDense(b)
+    denseJaccard(a, b)
+  }
+
+  /** [[sortedJaccard]] without the NULL check, for arrays whose type
+    * declares `containsNull = false` (as [[shingleHashes]]'s does). */
+  def denseJaccard(a: ArrayData, b: ArrayData): Double = {
     val n = a.numElements(); val m = b.numElements()
-    var c = 0
-    while (c < n) {
-      if (a.isNullAt(c)) throw new IllegalArgumentException(
-        s"sorted_jaccard: null element at index $c — shingle-hash arrays must be dense")
-      c += 1
-    }
-    c = 0
-    while (c < m) {
-      if (b.isNullAt(c)) throw new IllegalArgumentException(
-        s"sorted_jaccard: null element at index $c — shingle-hash arrays must be dense")
-      c += 1
-    }
     var i = 0; var j = 0; var inter = 0
     while (i < n && j < m) {
       val va = a.getLong(i); val vb = b.getLong(j)
@@ -86,6 +83,25 @@ object MinHashKernels {
     }
     val union = n + m - inter
     if (union == 0) 0.0 else inter.toDouble / union
+  }
+
+  private def requireDense(a: ArrayData): Unit = {
+    val c = firstNull(a)
+    if (c >= 0) throw new IllegalArgumentException(
+      s"sorted_jaccard: null element at index $c — shingle-hash arrays must be dense")
+  }
+
+  /** Index of the first NULL element, or -1. An unsafe array's null
+    * bitmap (after its 8-byte element count) is scanned 64 bits at a
+    * time, instead of one `isNullAt` per element. */
+  private def firstNull(a: ArrayData): Int = {
+    val n = a.numElements()
+    val c = a match {
+      case u: UnsafeArrayData =>
+        BitSetMethods.nextSetBit(u.getBaseObject, u.getBaseOffset + 8, 0, (n + 63) / 64)
+      case _ => (0 until n).indexWhere(a.isNullAt)
+    }
+    if (c < n) c else -1
   }
 
   /** K MinHash family members: member k = min_h xxh64(h, seed=k). */

@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
@@ -14,6 +16,9 @@ import org.apache.spark.sql.types.DataType
   * the optimizer (pushdown, pruning, join strategy, AQE) does the rest.
   */
 object Ops {
+
+  /** Plan-tree search that descends into adaptive query plans. */
+  private object PlanWalk extends AdaptiveSparkPlanHelper
 
   /** SelectValues: keep columns in order, with optional rename + retype.
     * (reference: 24 live `SelectValues` steps, motogp.ktr:5256-6239)
@@ -882,21 +887,23 @@ object Ops {
     * `maxTaskBytes = 1` reproduces the maximal fan-out.
     *
     * ADVICE r17: probing partition count via `df.rdd` finalizes AQE
-    * and eagerly RUNS any upstream shuffle stages as discarded jobs.
-    * Fan-out is only meant for bare scan+project frames, so a plan
-    * that already contains an exchange is returned unchanged — its
-    * parallelism is shuffle-partition-governed, not scan-governed —
-    * and the `.rdd` probe below only ever sees exchange-free plans,
-    * where it plans without running anything.
+    * and eagerly RUNS any upstream shuffle or broadcast stages as
+    * discarded jobs. Fan-out is only meant for bare scan+project
+    * frames, so a plan that contains any exchange is returned
+    * unchanged — its parallelism is shuffle-partition-governed, not
+    * scan-governed — and the `.rdd` probe below only ever sees
+    * exchange-free plans, where it plans without running anything.
+    * The gate reads the prepared plan: join and aggregate exchanges
+    * exist only after `EnsureRequirements` (the planner's `sparkPlan`
+    * has just explicit repartitions), and the adaptive wrapper is
+    * looked through.
     */
   def fanOutForCompute(df: DataFrame, maxTaskBytes: Long,
                        keys: Column*): DataFrame = {
     require(maxTaskBytes >= 1, s"maxTaskBytes must be >= 1, got $maxTaskBytes")
     val cores = df.sparkSession.sparkContext.defaultParallelism
     val qe = df.queryExecution
-    val hasExchange = qe.sparkPlan.find(
-      _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike])
-      .isDefined
+    val hasExchange = PlanWalk.find(qe.executedPlan)(_.isInstanceOf[Exchange]).isDefined
     if (hasExchange) df
     else {
       val estBytes = qe.optimizedPlan.stats.sizeInBytes

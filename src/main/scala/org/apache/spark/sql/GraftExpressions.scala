@@ -107,7 +107,8 @@ case class ShingleHashes64(child: Expression, n: Int)
 }
 
 /** Exact Jaccard similarity of two sorted-distinct long arrays (shingle
-  * hash sets) via a single linear merge.
+  * hash sets) via a single linear merge. When both input types declare
+  * `containsNull = false` the per-row NULL-element check is skipped.
   */
 case class SortedLongJaccard(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
@@ -117,13 +118,21 @@ case class SortedLongJaccard(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "sorted_jaccard"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    graft.functions.MinHashKernels.sortedJaccard(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  @transient private lazy val dense: Boolean = Seq(left, right).forall(_.dataType match {
+    case ArrayType(_, containsNull) => !containsNull
+    case _ => false
+  })
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.MinHashKernels.sortedJaccard($a, $b)")
+  override protected def nullSafeEval(a: Any, b: Any): Any = {
+    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (dense) graft.functions.MinHashKernels.denseJaccard(x, y)
+    else graft.functions.MinHashKernels.sortedJaccard(x, y)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val fn = if (dense) "denseJaccard" else "sortedJaccard"
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.MinHashKernels.$fn($a, $b)")
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedLongJaccard =

@@ -686,4 +686,17 @@ class OpsSpec extends SparkSpec {
     intercept[IllegalArgumentException](
       Ops.fanOutForCompute(src, 0L, col("id")))
   }
+
+  test("fanOutForCompute: a broadcast-join frame passes through without a job") {
+    // an under-split streamed side joined to a broadcast dimension: the
+    // broadcast exchange appears only once the plan is prepared, and a
+    // `.rdd` probe of it would run the broadcast as a discarded job
+    val src = spark.range(0L, 100L, 1L, numPartitions = 1).toDF("id")
+    val dim = spark.range(0L, 10L).toDF("id").withColumn("k", col("id") * 2)
+    val joined = src.join(broadcast(dim), "id")
+    val (out, shape) = JobShape.of(spark, "fanout-broadcast-join")(
+      Ops.fanOutForCompute(joined, col("id")))
+    assert(out eq joined)
+    assert(shape.jobs == 0, s"the gate submitted ${shape.jobs} jobs")
+  }
 }

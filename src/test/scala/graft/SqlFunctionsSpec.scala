@@ -146,4 +146,26 @@ class SqlFunctionsSpec extends SparkSpec {
     assert(e.getMessage.contains("literal integer") ||
       e.getCause != null && e.getCause.getMessage.contains("literal integer"))
   }
+
+  test("sorted_jaccard: a NULL element fails naming its index") {
+    def message(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case x: IllegalArgumentException => x.getMessage }
+        .getOrElse(fail(s"no IllegalArgumentException in $e"))
+    // literal arrays (constant-folded, interpreted eval)
+    val lit = intercept[Exception](
+      spark.sql("SELECT sorted_jaccard(array(1L, NULL), array(1L))").collect())
+    assert(message(lit).contains("null element at index 1"), message(lit))
+    // column arrays through codegen: the null bitmap's second word
+    import spark.implicits._
+    val right = (0 until 80).map(i => if (i == 70) None else Some(i.toLong))
+    val df = Seq((Seq(Option(1L)), right)).toDF("a", "b")
+    val col = intercept[Exception](
+      df.selectExpr("sorted_jaccard(a, b)").collect())
+    assert(message(col).contains("null element at index 70"), message(col))
+    // a nullable-typed array without NULLs still merges
+    val ok = Seq((Seq(Option(1L), Option(2L)), Seq(Option(2L))))
+      .toDF("a", "b").selectExpr("sorted_jaccard(a, b)").head().getDouble(0)
+    assert(ok == 0.5)
+  }
 }
