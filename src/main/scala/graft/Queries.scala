@@ -63,6 +63,56 @@ object Queries {
       substring(h, (bytes - 1 - i) * 2 + 1, 2)): _*))
   }
 
+  // Hex-string counterparts of `leCol` for constructions that assemble
+  // one hex string and `unhex` it once: `h2` is a byte as two hex
+  // digits, `le16h` / `le32h` / `be32h` the low 2 or 4 bytes in that
+  // byte order, `rep` a piece repeated `n` times.
+  private def h2(c: Column): Column = lpad(hex(c), 2, "0")
+  private def le16h(c: Column): Column =
+    concat(h2(c.bitwiseAND(lit(255))), h2(shiftright(c, 8).bitwiseAND(lit(255))))
+  private def le32h(c: Column): Column = concat(
+    h2(c.bitwiseAND(lit(255))),
+    h2(shiftright(c, 8).bitwiseAND(lit(255))),
+    h2(shiftright(c, 16).bitwiseAND(lit(255))),
+    h2(shiftright(c, 24).bitwiseAND(lit(255))))
+  private def be32h(c: Column): Column = concat(
+    h2(shiftright(c, 24).bitwiseAND(lit(255))),
+    h2(shiftright(c, 16).bitwiseAND(lit(255))),
+    h2(shiftright(c, 8).bitwiseAND(lit(255))),
+    h2(c.bitwiseAND(lit(255))))
+  private def rep(px: Column, n: Column): Column = array_join(array_repeat(px, n), "")
+
+  /** The per-doc parameters shared by the in-plan raster fixtures
+    * (BMP/PPM, PNG, GIF, TIFF), projected once over `docs`' `doc_id`:
+    * the size `w` × `hh` (by id%3 and id%4) and its product `wh`, the
+    * first pixel's colour A (`ar`, `ag`, `ab`) and the other pixels'
+    * colour B (`br`, `bg`, `bb`) as ints, and each colour byte as two
+    * hex digits (`ar_h` … `bb_h`). The constructions refer to these
+    * with `col(...)`, so each formula sits in the plan once rather than
+    * at every use (SCALING.md, "In-plan construction size"). */
+  private def rasterParams(docs: DataFrame): DataFrame = {
+    val id = col("doc_id")
+    val colours = Seq("ar" -> id, "ag" -> id * 7, "ab" -> id * 13,
+      "br" -> id * 3, "bg" -> id * 5, "bb" -> id * 11)
+    docs
+      .select(Seq(id,
+        when(pmod(id, lit(3)) === 0, 4)
+          .when(pmod(id, lit(3)) === 1, 8).otherwise(16).cast("int").as("w"),
+        when(pmod(id, lit(4)) === 0, 1)
+          .when(pmod(id, lit(4)) === 1, 2)
+          .when(pmod(id, lit(4)) === 2, 4).otherwise(8).cast("int").as("hh")) ++
+        colours.map { case (n, v) => pmod(v, lit(256)).cast("int").as(n) }: _*)
+      .select(Seq(col("*"), (col("w") * col("hh")).cast("int").as("wh")) ++
+        colours.map { case (n, _) => h2(col(n)).as(s"${n}_h") }: _*)
+  }
+
+  /** Last stage of a hex-built fixture: `doc_id` and the `hex` column as
+    * bytes (`blob`), every 7th doc cut to its first 20 bytes. */
+  private def truncatedBlob(hexed: DataFrame): DataFrame =
+    hexed.select(col("doc_id"),
+      unhex(when(pmod(col("doc_id"), lit(7)) === 0, substring(col("hex"), 1, 40))
+        .otherwise(col("hex"))).as("blob"))
+
   /** RFC 8878 store-mode frame built IN-PLAN: magic + single-segment
     * FHD + 4-byte FCS + raw blocks CHUNKED at Block_Maximum_Size
     * (128 KB), so the frame is spec-valid at ANY payload size. The r15
@@ -1464,10 +1514,6 @@ object Queries {
     * byte-stable. The codec-bound formats (JPEG/MP4) remain the honest
     * [[Multimodal.stub]], exercised in MultimodalSpec.
     */
-  /** Constructed two-color raster blob for `id` (BMP for even ids, PPM
-    * for odd; every 7th truncated to 20 bytes) — the fixture generator
-    * shared by q_multimodal_features and q_binary_ingest, whose oracles
-    * recompute the expected features from this arithmetic. */
   /** In-plan ISO-BMFF (MP4) blob: ftyp + moov(mvhd + video trak + audio
     * trak) with constant box layout and doc-id-derived field values —
     * the video track carries a VARIABLE-size stsz table (8 samples),
@@ -1476,12 +1522,6 @@ object Queries {
     * (NULL row contract). Sizes in bytes: ftyp 16, moov 382 = mvhd 108
     * + trak_v 149 + trak_a 117. */
   private def constructedMp4Blob(id: Column): Column = {
-    def h2(c: Column): Column = lpad(hex(c), 2, "0")
-    def be32h(c: Column): Column = concat(
-      h2(shiftright(c, 24).bitwiseAND(lit(255))),
-      h2(shiftright(c, 16).bitwiseAND(lit(255))),
-      h2(shiftright(c, 8).bitwiseAND(lit(255))),
-      h2(c.bitwiseAND(lit(255))))
     def be32(n: Long): String = f"$n%08X"
     val z = "00000000"
     val vdur = (pmod(id, lit(10)) + 1) * 30000
@@ -1572,27 +1612,13 @@ object Queries {
            |       round(CAST(duration AS DOUBLE) / timescale, 6) AS seconds
            |FROM tracks""".stripMargin))
 
-  private def constructedRasterBlob(id: Column): Column = {
-    def h2(c: Column): Column = lpad(hex(c), 2, "0")
-    def le32h(c: Column): Column = concat(
-      h2(c.bitwiseAND(lit(255))),
-      h2(shiftright(c, 8).bitwiseAND(lit(255))),
-      h2(shiftright(c, 16).bitwiseAND(lit(255))),
-      h2(shiftright(c, 24).bitwiseAND(lit(255))))
-    val w = when(pmod(id, lit(3)) === 0, 4)
-      .when(pmod(id, lit(3)) === 1, 8).otherwise(16).cast("int")
-    val hh = when(pmod(id, lit(4)) === 0, 1)
-      .when(pmod(id, lit(4)) === 1, 2)
-      .when(pmod(id, lit(4)) === 2, 4).otherwise(8).cast("int")
-    val wh = (w * hh).cast("int")
-    def rep(px: Column, n: Column): Column =
-      array_join(array_repeat(px, n), "")
-    val aR = pmod(id, lit(256)).cast("int")
-    val aG = pmod(id * 7, lit(256)).cast("int")
-    val aB = pmod(id * 13, lit(256)).cast("int")
-    val bR = pmod(id * 3, lit(256)).cast("int")
-    val bG = pmod(id * 5, lit(256)).cast("int")
-    val bB = pmod(id * 11, lit(256)).cast("int")
+  /** Constructed two-color raster blobs over `docs`' `doc_id` (BMP for
+    * even ids, PPM for odd; every 7th truncated to 20 bytes), as
+    * `doc_id, blob` — the fixture generator shared by
+    * q_multimodal_features and q_binary_ingest, whose oracles recompute
+    * the expected features from this arithmetic. */
+  private def constructedRasterBlob(docs: DataFrame): DataFrame = {
+    val (w, hh, wh) = (col("w"), col("hh"), col("wh"))
     // widths 4/8/16 make 3·w a multiple of 4: no BMP row padding, so
     // pixel data is exactly 3·w·h bytes (the decoder handles padded
     // strides; MultimodalSpec covers that case)
@@ -1601,16 +1627,17 @@ object Queries {
       le32h(lit(40)), le32h(w), le32h(hh), lit("0100"), lit("1800"),
       le32h(lit(0)), le32h(wh * 3), le32h(lit(0)), le32h(lit(0)),
       le32h(lit(0)), le32h(lit(0)),
-      h2(aB), h2(aG), h2(aR), rep(concat(h2(bB), h2(bG), h2(bR)), wh - 1))
+      col("ab_h"), col("ag_h"), col("ar_h"),
+      rep(concat(col("bb_h"), col("bg_h"), col("br_h")), wh - 1))
     val ppmHex = concat(
       hex(encode(concat(lit("P6\n"), w.cast("string"), lit(" "),
         hh.cast("string"), lit("\n255\n")), "UTF-8")),
-      h2(aR), h2(aG), h2(aB), rep(concat(h2(bR), h2(bG), h2(bB)), wh - 1))
-    val fullHex = when(pmod(id, lit(2)) === 0, bmpHex).otherwise(ppmHex)
+      col("ar_h"), col("ag_h"), col("ab_h"),
+      rep(concat(col("br_h"), col("bg_h"), col("bb_h")), wh - 1))
     // 40 hex chars = 20 bytes: inside the BMP info header, inside the
     // PPM pixel data — both must decode to nothing
-    unhex(when(pmod(id, lit(7)) === 0,
-      substring(fullHex, 1, 40)).otherwise(fullHex))
+    truncatedBlob(rasterParams(docs).select(col("doc_id"),
+      when(pmod(col("doc_id"), lit(2)) === 0, bmpHex).otherwise(ppmHex).as("hex")))
   }
 
   /** Projection of a [[Multimodal.featurize]] raster result to the
@@ -1627,8 +1654,7 @@ object Queries {
 
   private val qMultimodal = Q("q_multimodal_features",
     (s, dir) => {
-      val media = t(s, dir, "documents")
-        .select(col("doc_id"), constructedRasterBlob(col("doc_id")).as("blob"))
+      val media = constructedRasterBlob(t(s, dir, "documents"))
       rasterFeatures(Multimodal.featurize(media, "doc_id", "blob", dim = 5,
         decoder = Multimodal.raster))
     },
@@ -1685,49 +1711,31 @@ object Queries {
     * (family, w, h) combination occurs. Every 7th doc is truncated to
     * 20 bytes (NULL row). Chunk CRCs and the Adler32 are zeros (the
     * decoder documents that storage-layer integrity owns bit-rot). */
-  private def constructedPngBlob(id: Column): Column = {
-    def h2(c: Column): Column = lpad(hex(c), 2, "0")
-    def be32h(c: Column): Column = concat(
-      h2(shiftright(c, 24).bitwiseAND(lit(255))),
-      h2(shiftright(c, 16).bitwiseAND(lit(255))),
-      h2(shiftright(c, 8).bitwiseAND(lit(255))),
-      h2(c.bitwiseAND(lit(255))))
-    def le16h(c: Column): Column =
-      concat(h2(c.bitwiseAND(lit(255))), h2(shiftright(c, 8).bitwiseAND(lit(255))))
-    def rep(px: Column, n: Column): Column = array_join(array_repeat(px, n), "")
-    val w = when(pmod(id, lit(3)) === 0, 4)
-      .when(pmod(id, lit(3)) === 1, 8).otherwise(16).cast("int")
-    val hh = when(pmod(id, lit(4)) === 0, 1)
-      .when(pmod(id, lit(4)) === 1, 2)
-      .when(pmod(id, lit(4)) === 2, 4).otherwise(8).cast("int")
+  private def constructedPngBlob(docs: DataFrame): DataFrame = {
+    val id = col("doc_id")
+    val (w, hh) = (col("w"), col("hh"))
+    val (isRgb, isG16, isPal, isPal1) =
+      (col("is_rgb"), col("is_g16"), col("is_pal"), col("is_pal1"))
+    val (aR, aG, aB) = (col("ar_h"), col("ag_h"), col("ab_h"))
+    val (bR, bG, bB) = (col("br_h"), col("bg_h"), col("bb_h"))
+    val rawLen = col("raw_len")
     val sel = pmod(id, lit(5))
-    val isRgb = sel < 2
-    val isG16 = sel === 3
-    val isPal = sel === 4
     // the palette family splits on the NEXT base-5 digit so the 1-bit
     // variant still co-occurs with every (w, h) combination (a %6
     // selector would lock family 5 to w=16 — 6 and 3 share a factor)
     val palBit = pmod(((id - pmod(id, lit(5))) / 5).cast("long"), lit(2)) === 1
-    val isPal1 = isPal && palBit
-    val aR = pmod(id, lit(256)).cast("int")
-    val aG = pmod(id * 7, lit(256)).cast("int")
-    val aB = pmod(id * 13, lit(256)).cast("int")
-    val bR = pmod(id * 3, lit(256)).cast("int")
-    val bG = pmod(id * 5, lit(256)).cast("int")
-    val bB = pmod(id * 11, lit(256)).cast("int")
+    val families = rasterParams(docs).select(col("*"), (sel < 2).as("is_rgb"),
+      (sel === 3).as("is_g16"), (sel === 4).as("is_pal"),
+      (sel === 4 && palBit).as("is_pal1"))
     // filtered scanlines, every row filter 0: first row leads with
     // pixel A, every other pixel is B (palette: index 0 then 1s)
-    val rgbRow0 = concat(lit("00"), h2(aR), h2(aG), h2(aB),
-      rep(concat(h2(bR), h2(bG), h2(bB)), w - 1))
-    val rgbRest = rep(concat(lit("00"), rep(concat(h2(bR), h2(bG), h2(bB)), w)),
-      hh - 1)
-    val grayRow0 = concat(lit("00"), h2(aR), rep(h2(bR), w - 1))
-    val grayRest = rep(concat(lit("00"), rep(h2(bR), w)), hh - 1)
+    val rgbRow0 = concat(lit("00"), aR, aG, aB, rep(concat(bR, bG, bB), w - 1))
+    val rgbRest = rep(concat(lit("00"), rep(concat(bR, bG, bB), w)), hh - 1)
+    val grayRow0 = concat(lit("00"), aR, rep(bR, w - 1))
+    val grayRest = rep(concat(lit("00"), rep(bR, w)), hh - 1)
     // 16-bit gray: every sample is the 8-bit value twice (v = 257·a)
-    val g16Row0 = concat(lit("00"), h2(aR), h2(aR),
-      rep(concat(h2(bR), h2(bR)), w - 1))
-    val g16Rest = rep(concat(lit("00"), rep(concat(h2(bR), h2(bR)), w)),
-      hh - 1)
+    val g16Row0 = concat(lit("00"), aR, aR, rep(concat(bR, bR), w - 1))
+    val g16Rest = rep(concat(lit("00"), rep(concat(bR, bR), w)), hh - 1)
     val palRow0 = concat(lit("0000"), rep(lit("01"), w - 1))
     val palRest = rep(concat(lit("00"), rep(lit("01"), w)), hh - 1)
     // 1-bit palette: index 0 (A) then 1s (B), packed MSB-first, rows
@@ -1744,13 +1752,13 @@ object Queries {
       .otherwise(concat(grayRow0, grayRest))
     // bytes/pixel: RGB8 3, gray16 2, gray8 and palette8 1; the 1-bit
     // palette rows are ceil(w/8) bytes
-    val rawLen = when(isRgb, (lit(1) + w * 3) * hh)
+    val rawLenOf = when(isRgb, (lit(1) + w * 3) * hh)
       .when(isG16, (lit(1) + w * 2) * hh)
       .when(isPal1, (lit(1) + when(w === 16, lit(2)).otherwise(lit(1))) * hh)
       .otherwise((lit(1) + w) * hh).cast("int")
     // zlib wrapper (78 01) + stored block (01, LEN, ~LEN) + zero Adler
     val zlibHex = concat(lit("780101"), le16h(rawLen),
-      le16h(lit(65535) - rawLen), rawHex, lit("00000000"))
+      le16h(lit(65535) - rawLen), col("raw"), lit("00000000"))
     val ihdrHex = concat(lit("0000000D49484452"), be32h(w), be32h(hh),
       when(isG16, lit("10")).when(isPal1, lit("01")).otherwise(lit("08")),
       when(isRgb, lit("02")).when(isPal, lit("03"))
@@ -1758,14 +1766,14 @@ object Queries {
       lit("00000000"))
     // 2-entry PLTE (18 bytes on the wire): index 0 = color A, 1 = B
     val plteHex = when(isPal, concat(lit("00000006504C5445"),
-      h2(aR), h2(aG), h2(aB), h2(bR), h2(bG), h2(bB),
-      lit("00000000"))).otherwise(lit(""))
+      aR, aG, aB, bR, bG, bB, lit("00000000"))).otherwise(lit(""))
     val idatHex = concat(be32h(rawLen + 11), lit("49444154"), zlibHex,
       lit("00000000"))
     val fullHex = concat(lit("89504E470D0A1A0A"), ihdrHex, plteHex, idatHex,
       lit("0000000049454E4400000000"))
-    unhex(when(pmod(id, lit(7)) === 0, substring(fullHex, 1, 40))
-      .otherwise(fullHex))
+    truncatedBlob(families
+      .select(col("*"), rawHex.as("raw"), rawLenOf.as("raw_len"))
+      .select(id, fullHex.as("hex")))
   }
 
   /** PNG pixel decode under the oracle (round 9 — retires the last
@@ -1779,8 +1787,7 @@ object Queries {
     * to RGB, +18 bytes of PLTE on the wire. */
   private val qPngFeatures = Q("q_png_features",
     (s, dir) => {
-      val media = t(s, dir, "documents")
-        .select(col("doc_id"), constructedPngBlob(col("doc_id")).as("blob"))
+      val media = constructedPngBlob(t(s, dir, "documents"))
       rasterFeatures(Multimodal.featurize(media, "doc_id", "blob", dim = 5,
         decoder = Multimodal.raster))
     },
@@ -1833,25 +1840,10 @@ object Queries {
     * variable-width LZW (dictionary growth, deep chains, KwKwK) is
     * pinned against the JDK's ImageIO encoder in [[graft.GifSpec]].
     * Every 7th doc truncated to 20 bytes (NULL row). */
-  private def constructedGifBlob(id: Column): Column = {
-    def h2(c: Column): Column = lpad(hex(c), 2, "0")
-    def le16h(c: Column): Column =
-      concat(h2(c.bitwiseAND(lit(255))), h2(shiftright(c, 8).bitwiseAND(lit(255))))
-    def rep(px: Column, n: Column): Column = array_join(array_repeat(px, n), "")
-    val w = when(pmod(id, lit(3)) === 0, 4)
-      .when(pmod(id, lit(3)) === 1, 8).otherwise(16).cast("int")
-    val hh = when(pmod(id, lit(4)) === 0, 1)
-      .when(pmod(id, lit(4)) === 1, 2)
-      .when(pmod(id, lit(4)) === 2, 4).otherwise(8).cast("int")
-    val wh = (w * hh).cast("int")
-    val aR = pmod(id, lit(256)).cast("int")
-    val aG = pmod(id * 7, lit(256)).cast("int")
-    val aB = pmod(id * 13, lit(256)).cast("int")
-    val bR = pmod(id * 3, lit(256)).cast("int")
-    val bG = pmod(id * 5, lit(256)).cast("int")
-    val bB = pmod(id * 11, lit(256)).cast("int")
-    val pal = concat(h2(aR), h2(aG), h2(aB), h2(bR), h2(bG), h2(bB),
-      rep(lit("000000"), lit(126)))
+  private def constructedGifBlob(docs: DataFrame): DataFrame = {
+    val (w, hh, wh) = (col("w"), col("hh"), col("wh"))
+    val pal = concat(col("ar_h"), col("ag_h"), col("ab_h"),
+      col("br_h"), col("bg_h"), col("bb_h"), rep(lit("000000"), lit(126)))
     // codes: CLEAR, literal 0, then B-literals with a re-CLEAR after the
     // first 100 codes keeping the dictionary under 256 (8-bit codes)
     val tail = when(wh > 100,
@@ -1864,8 +1856,7 @@ object Queries {
       lit("474946383961"), le16h(w), le16h(hh), lit("860000"), pal,
       lit("2C"), lit("00000000"), le16h(w), le16h(hh), lit("00"),
       lzw, lit("3B"))
-    unhex(when(pmod(id, lit(7)) === 0, substring(fullHex, 1, 40))
-      .otherwise(fullHex))
+    truncatedBlob(rasterParams(docs).select(col("doc_id"), fullHex.as("hex")))
   }
 
   /** GIF pixel decode under the oracle (round 9 — with PNG and JPEG
@@ -1878,8 +1869,7 @@ object Queries {
     * family arithmetic. */
   private val qGifFeatures = Q("q_gif_features",
     (s, dir) => {
-      val media = t(s, dir, "documents")
-        .select(col("doc_id"), constructedGifBlob(col("doc_id")).as("blob"))
+      val media = constructedGifBlob(t(s, dir, "documents"))
       rasterFeatures(Multimodal.featurize(media, "doc_id", "blob", dim = 5,
         decoder = Multimodal.raster))
     },
@@ -1921,24 +1911,12 @@ object Queries {
     * B-then-As — so geometry, GCE fields, transparent-pixel counts and
     * both frames' means are all closed-form for DuckDB. Every 9th doc
     * is garbage (the corrupt channel → one NULL row). */
-  private def constructedAnimatedGifBlob(id: Column): Column = {
-    def h2(c: Column): Column = lpad(hex(c), 2, "0")
-    def le16h(c: Column): Column =
-      concat(h2(c.bitwiseAND(lit(255))), h2(shiftright(c, 8).bitwiseAND(lit(255))))
-    def rep(px: Column, n: Column): Column = array_join(array_repeat(px, n), "")
-    val w = when(pmod(id, lit(3)) === 0, 4)
-      .when(pmod(id, lit(3)) === 1, 8).otherwise(16).cast("int")
-    val hh = when(pmod(id, lit(4)) === 0, 1)
-      .when(pmod(id, lit(4)) === 1, 2)
-      .when(pmod(id, lit(4)) === 2, 4).otherwise(8).cast("int")
-    val aR = pmod(id, lit(256)).cast("int")
-    val aG = pmod(id * 7, lit(256)).cast("int")
-    val aB = pmod(id * 13, lit(256)).cast("int")
-    val bR = pmod(id * 3, lit(256)).cast("int")
-    val bG = pmod(id * 5, lit(256)).cast("int")
-    val bB = pmod(id * 11, lit(256)).cast("int")
-    val pal = concat(h2(aR), h2(aG), h2(aB), h2(bR), h2(bG), h2(bB),
-      rep(lit("000000"), lit(126)))
+  private def constructedAnimatedGifBlob(docs: DataFrame): DataFrame = {
+    val id = col("doc_id")
+    val (w, hh, wh) = (col("w"), col("hh"), col("wh"))
+    val (w2, wh2) = (col("w2"), col("wh2"))
+    val pal = concat(col("ar_h"), col("ag_h"), col("ab_h"),
+      col("br_h"), col("bg_h"), col("bb_h"), rep(lit("000000"), lit(126)))
     // one frame's data: min code 7 (8-bit codes), CLEAR, the first
     // pixel's literal, n−1 rest-literals with a re-CLEAR after the
     // first 100 codes, EOI, block terminator
@@ -1950,9 +1928,6 @@ object Queries {
       concat(lit("07"), h2(nCodes), lit("80"), first, tail,
         lit("81"), lit("00"))
     }
-    val wh = (w * hh).cast("int")
-    val w2 = (w - 1).cast("int")
-    val wh2 = (w2 * hh).cast("int")
     val gce1 = concat(lit("21F904"), lit("04"), le16h(pmod(id, lit(100)).cast("int")),
       lit("00"), lit("00"))
     val gce2 = concat(lit("21F904"), lit("09"), le16h(pmod(id * 3, lit(100)).cast("int")),
@@ -1963,8 +1938,11 @@ object Queries {
       le16h(hh), lit("00"), lzwHex(lit("01"), lit("00"), wh2))
     val fullHex = concat(lit("474946383961"), le16h(w), le16h(hh),
       lit("860000"), pal, gce1, f1, gce2, f2, lit("3B"))
-    unhex(when(pmod(id, lit(9)) === 0, lit("DEADBEEF00112233"))
-      .otherwise(fullHex))
+    rasterParams(docs)
+      .select(col("*"), (w - 1).cast("int").as("w2"),
+        ((w - 1).cast("int") * hh).cast("int").as("wh2"))
+      .select(id, unhex(when(pmod(id, lit(9)) === 0, lit("DEADBEEF00112233"))
+        .otherwise(fullHex)).as("blob"))
   }
 
   /** Animated-GIF frame walk under the oracle (round 11 — retires the
@@ -1979,9 +1957,9 @@ object Queries {
     * blob in place: frames never shuffle. */
   private val qGifFrames = Q("q_gif_frames",
     (s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"), graft.operators.Multimodal.gifFrames(
-          constructedAnimatedGifBlob(col("doc_id"))).as("frames"))
+      constructedAnimatedGifBlob(t(s, dir, "documents"))
+        .select(col("doc_id"),
+          graft.operators.Multimodal.gifFrames(col("blob")).as("frames"))
         .select(col("doc_id").cast("bigint").as("doc_id"),
           posexplode_outer(col("frames")).as(Seq("fi", "f")))
         .select(col("doc_id"),
@@ -2038,35 +2016,17 @@ object Queries {
     * PackBits/LZW/predictor/WhiteIsZero/palette/big-endian are pinned
     * against hand vectors and the JDK's own TIFF plugin in
     * [[graft.TiffSpec]]. Every 7th doc truncated to 20 bytes (NULL). */
-  private def constructedTiffBlob(id: Column): Column = {
-    def h2(c: Column): Column = lpad(hex(c), 2, "0")
-    def le16h(c: Column): Column =
-      concat(h2(c.bitwiseAND(lit(255))), h2(shiftright(c, 8).bitwiseAND(lit(255))))
-    def le32h(c: Column): Column = concat(le16h(c.bitwiseAND(lit(65535))),
-      le16h(shiftright(c, 16).bitwiseAND(lit(65535))))
-    def rep(px: Column, n: Column): Column = array_join(array_repeat(px, n), "")
+  private def constructedTiffBlob(docs: DataFrame): DataFrame = {
+    val (w, hh, wh) = (col("w"), col("hh"), col("wh"))
+    val (isRgb, spp, dataLen, ifdAt) =
+      (col("is_rgb"), col("spp"), col("data_len"), col("ifd_at"))
     def entry(tag: Int, typ: Int, cnt: Int, v: Column): Column =
       concat(lit(f"${tag & 0xff}%02X${tag >> 8}%02X${typ}%02X00"),
         le32h(lit(cnt)), le32h(v))
-    val w = when(pmod(id, lit(3)) === 0, 4)
-      .when(pmod(id, lit(3)) === 1, 8).otherwise(16).cast("int")
-    val hh = when(pmod(id, lit(4)) === 0, 1)
-      .when(pmod(id, lit(4)) === 1, 2)
-      .when(pmod(id, lit(4)) === 2, 4).otherwise(8).cast("int")
-    val wh = (w * hh).cast("int")
-    val isRgb = pmod(id, lit(2)) === 1
-    val spp = when(isRgb, 3).otherwise(1).cast("int")
-    val aR = pmod(id, lit(256)).cast("int")
-    val aG = pmod(id * 7, lit(256)).cast("int")
-    val aB = pmod(id * 13, lit(256)).cast("int")
-    val bR = pmod(id * 3, lit(256)).cast("int")
-    val bG = pmod(id * 5, lit(256)).cast("int")
-    val bB = pmod(id * 11, lit(256)).cast("int")
     val data = when(isRgb,
-      concat(h2(aR), h2(aG), h2(aB), rep(concat(h2(bR), h2(bG), h2(bB)), wh - 1)))
-      .otherwise(concat(h2(aR), rep(h2(bR), wh - 1)))
-    val dataLen = (wh * spp).cast("int")
-    val ifdAt = (lit(8) + dataLen).cast("int")
+      concat(col("ar_h"), col("ag_h"), col("ab_h"),
+        rep(concat(col("br_h"), col("bg_h"), col("bb_h")), wh - 1)))
+      .otherwise(concat(col("ar_h"), rep(col("br_h"), wh - 1)))
     // 10 entries, 12 bytes each; the RGB variant's 3 SHORT bits values
     // live right after the IFD's 4-byte next-IFD terminator
     val bitsAt = (ifdAt + lit(2) + lit(120) + lit(4)).cast("int")
@@ -2084,9 +2044,15 @@ object Queries {
       entry(284, 3, 1, lit(1)),
       lit("00000000"),
       when(isRgb, lit("080008000800")).otherwise(lit("")))
-    val fullHex = concat(lit("49492A00"), le32h(ifdAt), data, ifd)
-    unhex(when(pmod(id, lit(7)) === 0, substring(fullHex, 1, 40))
-      .otherwise(fullHex))
+    val dataLenOf = (wh * spp).cast("int")
+    truncatedBlob(rasterParams(docs)
+      .select(col("*"), (pmod(col("doc_id"), lit(2)) === 1).as("is_rgb"))
+      .select(col("*"), when(isRgb, 3).otherwise(1).cast("int").as("spp"),
+        data.as("data"))
+      .select(col("*"), dataLenOf.as("data_len"),
+        (lit(8) + dataLenOf).cast("int").as("ifd_at"))
+      .select(col("doc_id"),
+        concat(lit("49492A00"), le32h(ifdAt), col("data"), ifd).as("hex")))
   }
 
   /** Baseline TIFF decode under the oracle (round 11 — the document-
@@ -2100,8 +2066,7 @@ object Queries {
     * plugin. */
   private val qTiffFeatures = Q("q_tiff_features",
     (s, dir) => {
-      val media = t(s, dir, "documents")
-        .select(col("doc_id"), constructedTiffBlob(col("doc_id")).as("blob"))
+      val media = constructedTiffBlob(t(s, dir, "documents"))
       rasterFeatures(Multimodal.featurize(media, "doc_id", "blob", dim = 5,
         decoder = Multimodal.raster))
     },
@@ -2287,8 +2252,7 @@ object Queries {
       // 32-way 1.6-2.1 s) — the stage is filesystem-bound on parallel
       // small-file creates into one directory, not CPU-bound, so the
       // export keeps the source's natural partitioning.
-      val media = t(s, dir, "documents")
-        .select(col("doc_id"), constructedRasterBlob(col("doc_id")).as("blob"))
+      val media = constructedRasterBlob(t(s, dir, "documents"))
       graft.sources.Sinks.writeBlobs(media, "doc_id", "blob", tmp, "bin")
       rasterFeatures(Multimodal.featurize(
         graft.sources.Ingest.readBlobs(s, tmp, "*.bin")
@@ -2308,14 +2272,6 @@ object Queries {
     * NULL (the decoder refuses partial data). */
   private val qAudioFeatures = Q("q_audio_features",
     (s, dir) => {
-      def h2(c: Column): Column = lpad(hex(c), 2, "0")
-      def le16h(c: Column): Column =
-        concat(h2(c.bitwiseAND(lit(255))), h2(shiftright(c, 8).bitwiseAND(lit(255))))
-      def le32h(c: Column): Column = concat(
-        h2(c.bitwiseAND(lit(255))),
-        h2(shiftright(c, 8).bitwiseAND(lit(255))),
-        h2(shiftright(c, 16).bitwiseAND(lit(255))),
-        h2(shiftright(c, 24).bitwiseAND(lit(255))))
       val id = col("doc_id")
       val n = when(pmod(id, lit(4)) === 0, 8).when(pmod(id, lit(4)) === 1, 16)
         .when(pmod(id, lit(4)) === 2, 32).otherwise(64).cast("int")
@@ -2386,14 +2342,6 @@ object Queries {
     * Every 7th doc truncated (NULL row). */
   private val qAudioAdpcm = Q("q_audio_adpcm",
     (s, dir) => {
-      def h2(c: Column): Column = lpad(hex(c), 2, "0")
-      def le16h(c: Column): Column =
-        concat(h2(c.bitwiseAND(lit(255))), h2(shiftright(c, 8).bitwiseAND(lit(255))))
-      def le32h(c: Column): Column = concat(
-        h2(c.bitwiseAND(lit(255))),
-        h2(shiftright(c, 8).bitwiseAND(lit(255))),
-        h2(shiftright(c, 16).bitwiseAND(lit(255))),
-        h2(shiftright(c, 24).bitwiseAND(lit(255))))
       val id = col("doc_id")
       val nb = (lit(1) + pmod(id, lit(3))).cast("int") // 1..3 blocks
       // block k's predictor in [-1000, 1000]; le16 of the two's
@@ -2463,13 +2411,6 @@ object Queries {
     * [[graft.AudioContainersSpec]]. Every 7th doc truncated (NULL). */
   private val qAudioContainers = Q("q_audio_containers",
     (s, dir) => {
-      def h2(c: Column): Column = lpad(hex(c), 2, "0")
-      def be32h(c: Column): Column = concat(
-        h2(shiftright(c, 24).bitwiseAND(lit(255))),
-        h2(shiftright(c, 16).bitwiseAND(lit(255))),
-        h2(shiftright(c, 8).bitwiseAND(lit(255))),
-        h2(c.bitwiseAND(lit(255))))
-      def rep(px: Column, n: Column): Column = array_join(array_repeat(px, n), "")
       val id = col("doc_id")
       val n = (lit(16) + pmod(id, lit(3)) * 8).cast("int") // 16/24/32 frames
       val isAu = pmod(id, lit(2)) === 0
@@ -2556,14 +2497,6 @@ object Queries {
     * fail-closed GUID and cbSize shapes byte-by-byte. */
   private val qAudioExtensible = Q("q_audio_extensible",
     (s, dir) => {
-      def h2(c: Column): Column = lpad(hex(c), 2, "0")
-      def le16h(c: Column): Column =
-        concat(h2(c.bitwiseAND(lit(255))), h2(shiftright(c, 8).bitwiseAND(lit(255))))
-      def le32h(c: Column): Column = concat(
-        h2(c.bitwiseAND(lit(255))),
-        h2(shiftright(c, 8).bitwiseAND(lit(255))),
-        h2(shiftright(c, 16).bitwiseAND(lit(255))),
-        h2(shiftright(c, 24).bitwiseAND(lit(255))))
       val id = col("doc_id")
       val m = pmod(id, lit(3))
       val ch = when(m === 0, 1).when(m === 1, 2).otherwise(4).cast("int")
@@ -2648,7 +2581,6 @@ object Queries {
     */
   private val qAudioFlac = Q("q_audio_flac",
     (s, dir) => {
-      def h2(c: Column): Column = lpad(hex(c), 2, "0")
       val id = col("doc_id")
       val a = (pmod(id, lit(127)) + 1).cast("int")
       val bsf = pmod(id, lit(4))
@@ -2699,14 +2631,6 @@ object Queries {
 
   private val qAudioG711 = Q("q_audio_g711",
     (s, dir) => {
-      def h2(c: Column): Column = lpad(hex(c), 2, "0")
-      def le16h(c: Column): Column =
-        concat(h2(c.bitwiseAND(lit(255))), h2(shiftright(c, 8).bitwiseAND(lit(255))))
-      def le32h(c: Column): Column = concat(
-        h2(c.bitwiseAND(lit(255))),
-        h2(shiftright(c, 8).bitwiseAND(lit(255))),
-        h2(shiftright(c, 16).bitwiseAND(lit(255))),
-        h2(shiftright(c, 24).bitwiseAND(lit(255))))
       val id = col("doc_id")
       val n = (lit(16) + pmod(id, lit(3)) * 8).cast("int") // 16/24/32 frames
       val fmt = when(pmod(id, lit(2)) === 0, 7).otherwise(6).cast("int")
@@ -2876,7 +2800,6 @@ object Queries {
     * streams of the same flat block — identical means, different
     * n_bytes; every 7th truncated to 20 bytes — mid-DQT). */
   private def constructedJpegBlob(id: Column): Column = {
-    def h2(c: Column): Column = lpad(hex(c), 2, "0")
     val (grayHead, colorHead, _, _) = jpegFixture
     val (progHead, progTail, _) = jpegProgFixture
     val v = (pmod(id, lit(32)) + 32).cast("int")
@@ -2908,7 +2831,6 @@ object Queries {
   private def constructedMjpegMp4Blob(id: Column, nFrames: Int = 4,
       frameVal: (Column, Column) => Column =
         (id, f) => pmod(id + lit(7) * f, lit(32)) + 32): Column = {
-    def h2(c: Column): Column = lpad(hex(c), 2, "0")
     def be32(n: Long): String = f"$n%08X"
     val z = "00000000"
     val (grayHead, _, grayLen, _) = jpegFixture
@@ -3877,7 +3799,6 @@ object Queries {
     */
   private val qAudioMeta = Q("q_audio_meta",
     (s, dir) => {
-      def h2(c: Column): Column = lpad(hex(c), 2, "0")
       val id = col("doc_id")
       // FLAC: fLaC + last-block STREAMINFO(34) header; constants below
       // are the packed (rate 8000, mono, 16-bit) STREAMINFO prefix and
@@ -5361,7 +5282,6 @@ object Queries {
     */
   private val qContainerMeta = Q("q_container_meta",
     (s, dir) => {
-      def h2(c: Column): Column = lpad(hex(c), 2, "0")
       val id = col("doc_id")
       val m = pmod(id, lit(5))
       // EBML: duration 2^e as a float whose bits are (127+e)<<23
@@ -7635,6 +7555,42 @@ object Queries {
            |       ELSE 'tar doc ' || doc_id || ' says ' || word END AS text
            |FROM c""".stripMargin))
 
+  /** One-member stored ZIP (local header, central directory, end
+    * record, real CRC and offsets) around each row's `__c1` bytes under
+    * the member name `name`, as `doc_id, __zip`; every 7th doc's
+    * archive is cut to its first 40 bytes. Built in LAYERED projections
+    * (SCALING.md, "In-plan construction needs NAMED layers"): the
+    * member's CRC and length, the local header and directory, then the
+    * archive each have their own select, so none is copied into the
+    * plan at every use. */
+  private def storedZipOne(members: DataFrame, name: String): DataFrame = {
+    def le16(v: Column): Column = leCol(v, 2)
+    def le32(v: Column): Column = leCol(v, 4)
+    val (c1, crc, len) = (col("__c1"), col("__crc"), col("__len"))
+    val (l1, cd, zip0) = (col("__l1"), col("__cd"), col("__zip0"))
+    members
+      .select(col("doc_id"), c1, crc32(c1).as("__crc"), length(c1).as("__len"))
+      .select(col("doc_id"),
+        concat(
+          unhex(lit("504b0304")), le16(lit(20)), le16(lit(0)), le16(lit(0)),
+          le16(lit(0)), le16(lit(0)), le32(crc), le32(len), le32(len),
+          le16(lit(name.length)), le16(lit(0)), encode(lit(name), "UTF-8"),
+          c1).as("__l1"),
+        concat(
+          unhex(lit("504b0102")), le16(lit(20)), le16(lit(20)), le16(lit(0)),
+          le16(lit(0)), le16(lit(0)), le16(lit(0)), le32(crc), le32(len),
+          le32(len), le16(lit(name.length)), le16(lit(0)), le16(lit(0)),
+          le16(lit(0)), le16(lit(0)), le32(lit(0)), le32(lit(0)),
+          encode(lit(name), "UTF-8")).as("__cd"))
+      .select(col("doc_id"),
+        concat(l1, cd, unhex(lit("504b0506")), le16(lit(0)), le16(lit(0)),
+          le16(lit(1)), le16(lit(1)), le32(length(cd)), le32(length(l1)),
+          le16(lit(0))).as("__zip0"))
+      .select(col("doc_id"),
+        when(pmod(col("doc_id"), lit(7)) === 0, substring(zip0, 1, 40))
+          .otherwise(zip0).as("__zip"))
+  }
+
   /** Office-document text under the oracle (r14): the docx/epub chain
     * COMPOSED from the r14 pieces — an OOXML-shaped archive (stored
     * ZIP carrying `word/document.xml`, real in-plan CRC/offsets as in
@@ -7647,45 +7603,18 @@ object Queries {
   private val qDocxText = Q("q_docx_text",
     (s, dir) => {
       val id = col("doc_id")
-      val idS = id.cast("string")
       val word = element_at(typedlit(Seq("alpha", "beta", "gamma")),
         (pmod(id, lit(3)) + 1).cast("int"))
-      def le16(v: Column): Column = {
-        val h = lpad(hex(v), 4, "0")
-        unhex(concat(substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def le32(v: Column): Column = {
-        val h = lpad(hex(v), 8, "0")
-        unhex(concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2)))
-      }
       val xml = concat(
-        lit("<w:document><w:body>\n<w:p><w:r><w:t>docx body "), idS,
+        lit("<w:document><w:body>\n<w:p><w:r><w:t>docx body "), id.cast("string"),
         lit("</w:t></w:r></w:p>\n<w:p><w:r><w:t>"), word,
         lit(" &amp; paragraph</w:t></w:r></w:p>\n</w:body></w:document>"))
-      val c1 = encode(xml, "UTF-8")
-      val n1 = lit("word/document.xml")
-      val l1 = concat(
-        unhex(lit("504b0304")), le16(lit(20)), le16(lit(0)), le16(lit(0)),
-        le16(lit(0)), le16(lit(0)), le32(crc32(c1)),
-        le32(length(c1)), le32(length(c1)),
-        le16(length(n1)), le16(lit(0)), encode(n1, "UTF-8"), c1)
-      val cd = concat(
-        unhex(lit("504b0102")), le16(lit(20)), le16(lit(20)), le16(lit(0)),
-        le16(lit(0)), le16(lit(0)), le16(lit(0)), le32(crc32(c1)),
-        le32(length(c1)), le32(length(c1)),
-        le16(length(n1)), le16(lit(0)), le16(lit(0)), le16(lit(0)),
-        le16(lit(0)), le32(lit(0)), le32(lit(0)), encode(n1, "UTF-8"))
-      val eocd = concat(unhex(lit("504b0506")), le16(lit(0)), le16(lit(0)),
-        le16(lit(1)), le16(lit(1)), le32(length(cd)), le32(length(l1)),
-        le16(lit(0)))
-      val zip0 = concat(l1, cd, eocd)
-      val zip = when(pmod(id, lit(7)) === 0, substring(zip0, 1, 40))
-        .otherwise(zip0)
-      t(s, dir, "documents").select(id.cast("bigint").as("doc_id"),
-        TF.htmlExtract(TF.decodeText(
-          Multimodal.zipExtract(zip, lit("word/document.xml")))
-          .getField("text")).as("text"))
+      storedZipOne(t(s, dir, "documents")
+          .select(id, encode(xml, "UTF-8").as("__c1")), "word/document.xml")
+        .select(id.cast("bigint").as("doc_id"),
+          TF.htmlExtract(TF.decodeText(
+            Multimodal.zipExtract(col("__zip"), lit("word/document.xml")))
+            .getField("text")).as("text"))
     },
     Some("""WITH c AS (
            |  SELECT doc_id, doc_id % 7 = 0 AS tr,
@@ -7706,37 +7635,17 @@ object Queries {
   private val qPptxText = Q("q_pptx_text",
     (s, dir) => {
       val id = col("doc_id")
-      val idS = id.cast("string")
       val word = element_at(typedlit(Seq("alpha", "beta", "gamma")),
         (pmod(id, lit(3)) + 1).cast("int"))
-      def le16(v: Column): Column = leCol(v, 2)
-      def le32(v: Column): Column = leCol(v, 4)
-      val n1 = "ppt/slides/slide1.xml"
       val xml = concat(
-        lit("<p:sld><p:cSld><a:p><a:t>deck "), idS,
+        lit("<p:sld><p:cSld><a:p><a:t>deck "), id.cast("string"),
         lit("</a:t><a:r/><a:t/><a:t> &amp; "), word,
         lit("</a:t></a:p><a:p><a:t>closing line</a:t></a:p>" +
           "</p:cSld></p:sld>"))
-      val c1 = encode(xml, "UTF-8")
-      val l1 = concat(
-        unhex(lit("504b0304")), le16(lit(20)), le16(lit(0)), le16(lit(0)),
-        le16(lit(0)), le16(lit(0)), le32(crc32(c1)),
-        le32(length(c1)), le32(length(c1)),
-        le16(lit(n1.length)), le16(lit(0)), encode(lit(n1), "UTF-8"), c1)
-      val cd = concat(
-        unhex(lit("504b0102")), le16(lit(20)), le16(lit(20)), le16(lit(0)),
-        le16(lit(0)), le16(lit(0)), le16(lit(0)), le32(crc32(c1)),
-        le32(length(c1)), le32(length(c1)),
-        le16(lit(n1.length)), le16(lit(0)), le16(lit(0)), le16(lit(0)),
-        le16(lit(0)), le32(lit(0)), le32(lit(0)), encode(lit(n1), "UTF-8"))
-      val eocd = concat(unhex(lit("504b0506")), le16(lit(0)), le16(lit(0)),
-        le16(lit(1)), le16(lit(1)), le32(length(cd)), le32(length(l1)),
-        le16(lit(0)))
-      val zip0 = concat(l1, cd, eocd)
-      val zip = when(pmod(id, lit(7)) === 0, substring(zip0, 1, 40))
-        .otherwise(zip0)
-      t(s, dir, "documents").select(id.cast("bigint").as("doc_id"),
-        Multimodal.pptxText(zip).as("text"))
+      storedZipOne(t(s, dir, "documents")
+          .select(id, encode(xml, "UTF-8").as("__c1")), "ppt/slides/slide1.xml")
+        .select(id.cast("bigint").as("doc_id"),
+          Multimodal.pptxText(col("__zip")).as("text"))
     },
     Some("""WITH c AS (
            |  SELECT doc_id, doc_id % 7 = 0 AS tr,
@@ -8560,10 +8469,10 @@ object Queries {
       val at = pdfRgb.indexOfSlice(marker)
       require(at >= 0 && pdfRgb.indexOfSlice(marker, at + 1) < 0,
         "pixel marker not unique")
-      def h2(c: Column): Column = lpad(hex(c.cast("int")), 2, "0")
       val d0 = concat(unhex(lit(hexOf(pdfRgb.take(at)))),
-        unhex(concat(h2(pmod(id, lit(256))),
-          h2(pmod(id * 7, lit(256))), h2(pmod(id * 13, lit(256))))),
+        unhex(concat(h2(pmod(id, lit(256)).cast("int")),
+          h2(pmod(id * 7, lit(256)).cast("int")),
+          h2(pmod(id * 13, lit(256)).cast("int")))),
         unhex(lit(hexOf(pdfRgb.drop(at + 3)))))
       // lane 1: Flate gray 8x8 + DCT jpeg — both constant fixtures
       val grayZ = {

@@ -449,6 +449,31 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("gif_frames"), p)
   }
 
+  test("in-plan fixture constructions stay within their expression-node " +
+    "budgets: shared pieces are projected once, not re-inlined at every use") {
+    // expression nodes summed over every operator of the optimized plan;
+    // comments give the count with each piece inlined at every use, then
+    // the staged count the budget is set from (q_binary_ingest shares
+    // q_multimodal_features' constructor, but its returned plan reads
+    // the exported blobs back, so the construction is not in it)
+    val budgets = Seq(
+      "q_png_features" -> 750,         // inlined 4763, staged 594
+      "q_tiff_features" -> 750,        // inlined 2755, staged 601
+      "q_multimodal_features" -> 550,  // inlined 1743, staged 427
+      "q_gif_features" -> 400,         // inlined 997, staged 320
+      "q_gif_frames" -> 600,           // inlined 896, staged 466
+      "q_docx_text" -> 500,            // inlined 7143, staged 396
+      "q_pptx_text" -> 500)            // inlined 7139, staged 392
+    for ((q, budget) <- budgets) {
+      val optimized = Queries.all.find(_.name == q).get.run(spark, dir)
+        .queryExecution.optimizedPlan
+      val nodes = optimized.collect { case op =>
+        op.expressions.map(_.collect { case e => e }.size).sum }.sum
+      info(s"$q: $nodes expression nodes (budget $budget)")
+      assert(nodes <= budget, s"$q: $nodes expression nodes > $budget")
+    }
+  }
+
   /** Every Window in `p` must sit directly on the bounded bin/model
     * table (a HashAggregate within a few plan lines below it), never
     * on a corpus-sized input. */
