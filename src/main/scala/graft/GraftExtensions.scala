@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.{GraftSqlFunctions, SparkSessionExtensions}
 
-/** `spark.sql.extensions` entry point: registers every graft custom
-  * expression as a SQL function at session build, e.g.
+/** `spark.sql.extensions` entry point: registers graft's SQL-callable
+  * functions ([[org.apache.spark.sql.GraftSqlFunctions.all]]) at session
+  * build, e.g.
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...

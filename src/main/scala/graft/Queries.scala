@@ -107,10 +107,10 @@ object Queries {
   }
 
   /** Last stage of a hex-built fixture: `doc_id` and the `hex` column as
-    * bytes (`blob`), every 7th doc cut to its first 20 bytes. */
-  private def truncatedBlob(hexed: DataFrame): DataFrame =
+    * bytes (`blob`), every 7th doc cut to its first `cut` hex digits. */
+  private def truncatedBlob(hexed: DataFrame, cut: Int): DataFrame =
     hexed.select(col("doc_id"),
-      unhex(when(pmod(col("doc_id"), lit(7)) === 0, substring(col("hex"), 1, 40))
+      unhex(when(pmod(col("doc_id"), lit(7)) === 0, substring(col("hex"), 1, cut))
         .otherwise(col("hex"))).as("blob"))
 
   /** RFC 8878 store-mode frame built IN-PLAN: magic + single-segment
@@ -1556,7 +1556,7 @@ object Queries {
 
   /** MP4 per-track container stats WITHOUT a codec (VERDICT r8 stretch):
     * per-doc two-track MP4s assembled in-plan, walked by the codegen
-    * [[org.apache.spark.sql.VideoTrackStats]] expression (mdhd + hdlr +
+    * `video_track_stats` kernel (mdhd + hdlr +
     * stsz), per-track seconds and average bitrate derived — the oracle
     * recomputes everything from the construction arithmetic, so the
     * build → parse → derive pipeline is hash-checked end to end.
@@ -1637,7 +1637,7 @@ object Queries {
     // 40 hex chars = 20 bytes: inside the BMP info header, inside the
     // PPM pixel data — both must decode to nothing
     truncatedBlob(rasterParams(docs).select(col("doc_id"),
-      when(pmod(col("doc_id"), lit(2)) === 0, bmpHex).otherwise(ppmHex).as("hex")))
+      when(pmod(col("doc_id"), lit(2)) === 0, bmpHex).otherwise(ppmHex).as("hex")), 40)
   }
 
   /** Projection of a [[Multimodal.featurize]] raster result to the
@@ -1773,7 +1773,7 @@ object Queries {
       lit("0000000049454E4400000000"))
     truncatedBlob(families
       .select(col("*"), rawHex.as("raw"), rawLenOf.as("raw_len"))
-      .select(id, fullHex.as("hex")))
+      .select(id, fullHex.as("hex")), 40)
   }
 
   /** PNG pixel decode under the oracle (round 9 — retires the last
@@ -1856,7 +1856,7 @@ object Queries {
       lit("474946383961"), le16h(w), le16h(hh), lit("860000"), pal,
       lit("2C"), lit("00000000"), le16h(w), le16h(hh), lit("00"),
       lzw, lit("3B"))
-    truncatedBlob(rasterParams(docs).select(col("doc_id"), fullHex.as("hex")))
+    truncatedBlob(rasterParams(docs).select(col("doc_id"), fullHex.as("hex")), 40)
   }
 
   /** GIF pixel decode under the oracle (round 9 — with PNG and JPEG
@@ -2052,7 +2052,7 @@ object Queries {
       .select(col("*"), dataLenOf.as("data_len"),
         (lit(8) + dataLenOf).cast("int").as("ifd_at"))
       .select(col("doc_id"),
-        concat(lit("49492A00"), le32h(ifdAt), col("data"), ifd).as("hex")))
+        concat(lit("49492A00"), le32h(ifdAt), col("data"), ifd).as("hex")), 40)
   }
 
   /** Baseline TIFF decode under the oracle (round 11 — the document-
@@ -2798,8 +2798,10 @@ object Queries {
   /** Constructed single-MCU JPEG blob for `id` (grayscale for even ids,
     * 4:4:4 color for odd; gray ids divisible by 3 are PROGRESSIVE
     * streams of the same flat block — identical means, different
-    * n_bytes; every 7th truncated to 20 bytes — mid-DQT). */
-  private def constructedJpegBlob(id: Column): Column = {
+    * n_bytes; every 7th truncated to 20 bytes — mid-DQT): `doc_id` and
+    * `blob` of each of `docs`. */
+  private def constructedJpegBlob(docs: DataFrame): DataFrame = {
+    val id = col("doc_id")
     val (grayHead, colorHead, _, _) = jpegFixture
     val (progHead, progTail, _) = jpegProgFixture
     val v = (pmod(id, lit(32)) + 32).cast("int")
@@ -2812,8 +2814,7 @@ object Queries {
       h2(v.bitwiseAND(lit(3)) * 64 + lit(40)), lit("A2BF"), lit("FFD9"))
     val fullHex = when(pmod(id, lit(6)) === 0, progHex)
       .when(pmod(id, lit(2)) === 0, grayHex).otherwise(colorHex)
-    unhex(when(pmod(id, lit(7)) === 0, substring(fullHex, 1, 40))
-      .otherwise(fullHex))
+    truncatedBlob(docs.select(id, fullHex.as("hex")), 40)
   }
 
   /** MP4 container with a 4-frame MJPEG video track, assembled in-plan:
@@ -2868,7 +2869,7 @@ object Queries {
     * (quadratic per-frame DC values, every 10th doc a near-twin with
     * two perturbed frames → ≤3 fingerprint bits, every 9th doc junk
     * bytes → NULL, no pairs), fingerprinted by
-    * [[org.apache.spark.sql.VideoDhash64]] (REAL demux + JPEG decode
+    * the `video_dhash64` kernel (REAL demux + JPEG decode
     * per frame, integer mean floor-lumas, 65 sampled envelope
     * positions, gradient bits) and paired by the banded Hamming
     * machinery. The oracle replays frame values → lumas → envelope →
@@ -2910,7 +2911,7 @@ object Queries {
   /** Video PIXEL decode for the MJPEG codec class — the capability that
     * retires the last codec stub for self-contained-frame video:
     * in-plan MP4s carry a 4-frame MJPEG track; the codegen
-    * [[org.apache.spark.sql.MjpegFrames]] expression slices the
+    * `mjpeg_frames` kernel slices the
     * samples out via the stsd/stsz/stsc/stco walk; each frame then
     * rides the EXISTING baseline-JPEG decode
     * ([[Multimodal.raster]] → [[graft.functions.JpegKernels]]) to
@@ -2971,8 +2972,7 @@ object Queries {
     * this query pins the Spark-side plumbing end to end. */
   private val qJpegFeatures = Q("q_jpeg_features",
     (s, dir) => {
-      val media = t(s, dir, "documents")
-        .select(col("doc_id"), constructedJpegBlob(col("doc_id")).as("blob"))
+      val media = constructedJpegBlob(t(s, dir, "documents"))
       rasterFeatures(Multimodal.featurize(media, "doc_id", "blob", dim = 5,
         decoder = Multimodal.raster))
     },
@@ -3830,15 +3830,14 @@ object Queries {
         .when(pmod(id, lit(4)) === 1, wavHex)
         .when(pmod(id, lit(4)) === 2, mp3Hex)
         .otherwise(junkHex)
-      val blobHex = when(pmod(id, lit(7)) === 0,
-        substring(fullHex, 1, 20)).otherwise(fullHex)
-      val m = Multimodal.audioMeta(unhex(blobHex))
-      t(s, dir, "documents").select(id.cast("bigint").as("doc_id"),
-        m.getField("format").as("format"),
-        m.getField("channels").cast("bigint").as("channels"),
-        m.getField("sample_rate").cast("bigint").as("sample_rate"),
-        m.getField("bits_per_sample").cast("bigint").as("bits_per_sample"),
-        m.getField("n_frames").cast("bigint").as("n_frames"))
+      val m = Multimodal.audioMeta(col("blob"))
+      truncatedBlob(t(s, dir, "documents").select(id, fullHex.as("hex")), 20)
+        .select(id.cast("bigint").as("doc_id"),
+          m.getField("format").as("format"),
+          m.getField("channels").cast("bigint").as("channels"),
+          m.getField("sample_rate").cast("bigint").as("sample_rate"),
+          m.getField("bits_per_sample").cast("bigint").as("bits_per_sample"),
+          m.getField("n_frames").cast("bigint").as("n_frames"))
     },
     Some("""WITH p AS (
            |  SELECT doc_id, doc_id % 4 AS c, doc_id % 7 = 0 AS trunc
@@ -4741,7 +4740,7 @@ object Queries {
     Some(OracleSqlGen.bpeTrainCapped(8, 16)))
 
   /** BPE ENCODE at corpus scale: the same 8 trained merges applied per
-    * document by the codegen `BpeTokens` expression (one narrow pass,
+    * document by the codegen `bpe_tokens` kernel (one narrow pass,
     * merges ride the expression — no join, no shuffle); the oracle
     * recomputes token counts via a dictionary join over the replayed
     * training chain. Word and token counts both pinned. */
@@ -5321,20 +5320,18 @@ object Queries {
       val junkHex = lit("6E6F74206120636F6E7461696E65722E2E2E2E2E")
       val fullHex = when(m === 0, webmHex).when(m === 1, mkvHex)
         .when(m === 2, vorbisHex).when(m === 3, opusHex).otherwise(junkHex)
-      val blobHex = when(pmod(id, lit(7)) === 0,
-        substring(fullHex, 1, 20)).otherwise(fullHex)
-      val blob = unhex(blobHex)
-      val v = Multimodal.videoMeta(blob)
-      val a = Multimodal.audioMeta(blob)
-      t(s, dir, "documents").select(id.cast("bigint").as("doc_id"),
-        coalesce(v.getField("format"), a.getField("format")).as("format"),
-        v.getField("timescale").cast("bigint").as("timescale"),
-        v.getField("duration").cast("bigint").as("duration"),
-        v.getField("n_tracks").cast("bigint").as("n_tracks"),
-        a.getField("channels").cast("bigint").as("channels"),
-        a.getField("sample_rate").cast("bigint").as("sample_rate"),
-        a.getField("bits_per_sample").cast("bigint").as("bits_per_sample"),
-        a.getField("n_frames").cast("bigint").as("n_frames"))
+      val v = Multimodal.videoMeta(col("blob"))
+      val a = Multimodal.audioMeta(col("blob"))
+      truncatedBlob(t(s, dir, "documents").select(id, fullHex.as("hex")), 20)
+        .select(id.cast("bigint").as("doc_id"),
+          coalesce(v.getField("format"), a.getField("format")).as("format"),
+          v.getField("timescale").cast("bigint").as("timescale"),
+          v.getField("duration").cast("bigint").as("duration"),
+          v.getField("n_tracks").cast("bigint").as("n_tracks"),
+          a.getField("channels").cast("bigint").as("channels"),
+          a.getField("sample_rate").cast("bigint").as("sample_rate"),
+          a.getField("bits_per_sample").cast("bigint").as("bits_per_sample"),
+          a.getField("n_frames").cast("bigint").as("n_frames"))
     },
     Some("""WITH p AS (
            |  SELECT doc_id, doc_id % 5 AS m, doc_id % 7 = 0 AS tr
@@ -8502,11 +8499,8 @@ object Queries {
         .when(m === 1, unhex(lit(hexOf(pdfTwo))))
         .when(m === 2, unhex(lit(hexOf(pdfIdx))))
         .otherwise(unhex(lit(hexOf(pdfRgb.take(120)))))
-      val decode = org.apache.spark.sql.GraftBridge.column(
-        org.apache.spark.sql.DecodeFeatures(
-          org.apache.spark.sql.GraftBridge.expression(
-            coalesce(col("c.data"), lit(Array.emptyByteArray))),
-          5, Multimodal.raster))
+      val decode = org.apache.spark.sql.Kernels.decodeFeatures(
+        coalesce(col("c.data"), lit(Array.emptyByteArray)), 5, Multimodal.raster)
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"), blob.as("__b"))
         .select(col("doc_id"),
@@ -8518,10 +8512,7 @@ object Queries {
           col("c.height").cast("bigint").as("height"),
           when(col("c.format").isin("ppm", "pgm"), decode).as("__f"),
           when(col("c.format") === "jpeg",
-            org.apache.spark.sql.GraftBridge.column(
-              org.apache.spark.sql.DHash64(
-                org.apache.spark.sql.GraftBridge.expression(
-                  col("c.data"))))).as("dhash"))
+            org.apache.spark.sql.Kernels.dHash64(col("c.data"))).as("dhash"))
         .select(col("doc_id"), col("obj"), col("format"), col("width"),
           col("height"),
           round(get(col("__f"), lit(2)).cast("double"), 6).as("mean_r"),

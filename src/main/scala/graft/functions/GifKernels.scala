@@ -4,7 +4,7 @@ package graft.functions
   * the variable-width LZW scheme of the GIF specification, appendix F
   * (public document, CompuServe 1990). Completes the still-image
   * matrix: with PNG (round 9) and JPEG (round 8) decoded, GIF was the
-  * last format where [[org.apache.spark.sql.ImageMeta]] could read
+  * last format where the `image_meta` kernel could read
   * dimensions but [[RasterKernels]] could not produce pixels.
   *
   * Scope: [[decode]] reports the FIRST image of the stream (the
@@ -366,7 +366,7 @@ object GifKernels {
   }
 
   /** [[frames]] as the Catalyst array-of-struct value for the
-    * [[org.apache.spark.sql.GifFrames]] expression (the
+    * `gif_frames` kernel (the
     * [[MediaKernels.videoTrackStats]] pattern); null = NULL blob-wide. */
   def frameStats(b: Array[Byte]): org.apache.spark.sql.catalyst.util.ArrayData =
     frames(b) match {

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge, JaroWinklerSimilarity}
+import org.apache.spark.sql.{Column, Kernels}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Jaro-Winkler string similarity.
@@ -69,9 +69,7 @@ object JaroWinkler {
   }
 
   /** Column API: `jaro_winkler(a, b): Double` in [0, 1]. */
-  def jaro_winkler(a: Column, b: Column): Column =
-    GraftBridge.column(
-      JaroWinklerSimilarity(GraftBridge.expression(a), GraftBridge.expression(b)))
+  def jaro_winkler(a: Column, b: Column): Column = Kernels.jaroWinkler(a, b)
 
   // ---- thresholded-join pruning kernels (round 12) -------------------
   //
@@ -201,11 +199,7 @@ object JaroWinkler {
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(signature(s, frac))
 
-  def fuzzy_length_band(s: Column, r: Double): Column =
-    GraftBridge.column(
-      org.apache.spark.sql.FuzzyLengthBand(GraftBridge.expression(s), r))
+  def fuzzy_length_band(s: Column, r: Double): Column = Kernels.fuzzyLengthBand(s, r)
 
-  def fuzzy_signature(s: Column, frac: Double): Column =
-    GraftBridge.column(
-      org.apache.spark.sql.FuzzySignature(GraftBridge.expression(s), frac))
+  def fuzzy_signature(s: Column, frac: Double): Column = Kernels.fuzzySignature(s, frac)
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, Kernels}
 
 /** Column API over the layout kernels. */
 object LayoutFunctions {
@@ -10,31 +10,20 @@ object LayoutFunctions {
     * first; blind truncation of a 64-bit id would fold distant values
     * onto each other).
     */
-  def zOrder2(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.{GraftBridge, ZOrder2}
-    GraftBridge.column(ZOrder2(
-      GraftBridge.expression(a.cast("int")),
-      GraftBridge.expression(b.cast("int"))))
-  }
+  def zOrder2(a: Column, b: Column): Column =
+    Kernels.zOrder2(a.cast("int"), b.cast("int"))
 
   /** 2-D Hilbert key over bucket coordinates in [0, 2^bits) —
     * [[zOrder2]]'s better-locality sibling (no Z-jumps: consecutive
     * keys are adjacent cells, so key ranges cover compact regions).
     * Reduce columns to the bucket range first; out-of-range saturates.
     */
-  def hilbert2(a: Column, b: Column, bits: Int = 16): Column = {
-    import org.apache.spark.sql.{GraftBridge, Hilbert2}
-    GraftBridge.column(Hilbert2(
-      GraftBridge.expression(a.cast("int")),
-      GraftBridge.expression(b.cast("int")), bits))
-  }
+  def hilbert2(a: Column, b: Column, bits: Int = 16): Column =
+    Kernels.hilbert2(a.cast("int"), b.cast("int"), bits)
 
   /** Inverse of [[hilbert2]]: key -> array(x, y) bucket cell. */
-  def hilbertDecode2(key: Column, bits: Int = 16): Column = {
-    import org.apache.spark.sql.{GraftBridge, HilbertDecode2}
-    GraftBridge.column(HilbertDecode2(
-      GraftBridge.expression(key.cast("bigint")), bits))
-  }
+  def hilbertDecode2(key: Column, bits: Int = 16): Column =
+    Kernels.hilbertDecode2(key.cast("bigint"), bits)
 
   /** N-column Z-order key over BUCKET coordinates — each column gets
     * 64/k interleaved bits, so reduce each to [0, 2^(64/k)) first
@@ -44,10 +33,7 @@ object LayoutFunctions {
   def zOrderN(cols: Column*): Column = {
     require(cols.size >= 2 && cols.size <= 32,
       s"zOrderN takes 2..32 columns, got ${cols.size}")
-    import org.apache.spark.sql.{GraftBridge, ZOrderN}
     import org.apache.spark.sql.functions.array
-    GraftBridge.column(ZOrderN(
-      GraftBridge.expression(array(cols.map(_.cast("int")): _*)),
-      cols.size))
+    Kernels.zOrderN(array(cols.map(_.cast("int")): _*), cols.size)
   }
 }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.unsafe.bitset.BitSetMethods
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Static kernels behind [[org.apache.spark.sql.ShingleHashes64]] and
-  * [[org.apache.spark.sql.MinHashes]] — called from generated Java, so
+/** Static kernels behind the `shingle_hashes64` and
+  * `minhashes` kernels — called from generated Java, so
   * they must stay public static with primitive-friendly signatures.
   */
 object MinHashKernels {

@@ -9,7 +9,7 @@ import java.util.zip.{DataFormatException, Inflater}
   * reconstruction (the five PNG filters None/Sub/Up/Average/Paeth,
   * §9 of the spec) is implemented directly. Extends the
   * [[RasterKernels]] still-image family: PNG was previously
-  * header-metadata only ([[org.apache.spark.sql.ImageMeta]]).
+  * header-metadata only (the `image_meta` kernel).
   *
   * Scope: EVERY legal (color type, bit depth) pair of §11.2.2 —
   * gray (type 0) at 1/2/4/8/16 bits, RGB (2) and gray+alpha (4) and

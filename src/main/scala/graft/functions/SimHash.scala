@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.{Column, Kernels}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
@@ -91,12 +91,8 @@ object SimHash {
   }
 
   /** Column API: `simhash64(tokens: array<string>): Long`. */
-  def simhash64(tokens: Column): Column =
-    GraftBridge.column(
-      org.apache.spark.sql.SimHash64(GraftBridge.expression(tokens)))
+  def simhash64(tokens: Column): Column = Kernels.simHash64(tokens)
 
   /** Column API: one-pass lowercase+tokenize+sketch over raw text. */
-  def simhashText(text: Column): Column =
-    GraftBridge.column(
-      org.apache.spark.sql.SimHashText(GraftBridge.expression(text)))
+  def simhashText(text: Column): Column = Kernels.simHashText(text)
 }

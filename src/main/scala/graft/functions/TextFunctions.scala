@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, Kernels}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis column combinators for large-scale training-data
@@ -46,15 +46,12 @@ object TextFunctions {
   /** 64-bit hashes of the distinct character n-gram shingles of the
     * lowercased, trimmed text — the MinHash/Jaccard working set. One
     * codegen'd O(bytes) kernel per document (see
-    * [[org.apache.spark.sql.ShingleHashes64]]); hash-set Jaccard equals
+    * `shingle_hashes64` kernel); hash-set Jaccard equals
     * string-set Jaccard up to 64-bit collisions (~1e-13 per pair at 1e3
     * shingles).
     */
-  def shingleHashes(text: Column, n: Int): Column = {
-    import org.apache.spark.sql.{GraftBridge, ShingleHashes64}
-    GraftBridge.column(
-      ShingleHashes64(GraftBridge.expression(lower(trim(text))), n))
-  }
+  def shingleHashes(text: Column, n: Int): Column =
+    Kernels.shingleHashes64(lower(trim(text)), n)
 
   /** Ratio of punctuation characters to total characters (0 for empty). */
   def punctRatio(text: Column): Column = {
@@ -191,10 +188,8 @@ object TextFunctions {
     * composition over the struct stays in column space so oracle SQL
     * arithmetic is unchanged.
     */
-  def textStats(text: Column): Column = {
-    import org.apache.spark.sql.{GraftBridge, TextStats}
-    GraftBridge.column(TextStats(GraftBridge.expression(text)))
-  }
+  def textStats(text: Column): Column =
+    Kernels.textStats(text)
 
   /** Token-window chunks for training pipelines: sliding windows of
     * `maxTokens` whitespace tokens advancing by `maxTokens - overlap`,
@@ -202,10 +197,8 @@ object TextFunctions {
     * chunks. Codegen'd single pass — `posexplode` the result for one
     * row per chunk.
     */
-  def chunkText(text: Column, maxTokens: Int, overlap: Int = 0): Column = {
-    import org.apache.spark.sql.{ChunkText, GraftBridge}
-    GraftBridge.column(ChunkText(GraftBridge.expression(text), maxTokens, overlap))
-  }
+  def chunkText(text: Column, maxTokens: Int, overlap: Int = 0): Column =
+    Kernels.chunkText(text, maxTokens, overlap)
 
   /** Distinct `patterns` occurring anywhere in `text` (substring
     * containment, case-sensitive — lowercase both sides for
@@ -227,8 +220,7 @@ object TextFunctions {
     */
   def wordNgrams(text: Column, n: Int): Column = {
     require(n >= 1, s"n must be >= 1, got $n")
-    import org.apache.spark.sql.{GraftBridge, WordNgrams => WN}
-    GraftBridge.column(WN(GraftBridge.expression(text), n))
+    Kernels.wordNgrams(text, n)
   }
 
   /** ALL word n-grams in order, duplicates kept — the counting variant
@@ -236,8 +228,7 @@ object TextFunctions {
     */
   def allWordNgrams(text: Column, n: Int): Column = {
     require(n >= 1, s"n must be >= 1, got $n")
-    import org.apache.spark.sql.{GraftBridge, WordNgramsAll => WNA}
-    GraftBridge.column(WNA(GraftBridge.expression(text), n))
+    Kernels.wordNgramsAll(text, n)
   }
 
   /** Per-document repetition diagnostics (the Gopher-style quality
@@ -254,20 +245,16 @@ object TextFunctions {
     * [[CdcKernels]] for the contract and [[graft.operators.Dedup.cdcChunks]]
     * for the row-per-chunk operator built on it.
     */
-  def cdcBoundaries(text: Column, maskBits: Int, minLen: Int, maxLen: Int): Column = {
-    import org.apache.spark.sql.{CdcBoundaries => CB, GraftBridge}
-    GraftBridge.column(CB(GraftBridge.expression(text), maskBits, minLen, maxLen))
-  }
+  def cdcBoundaries(text: Column, maskBits: Int, minLen: Int, maxLen: Int): Column =
+    Kernels.cdcBoundaries(text, maskBits, minLen, maxLen)
 
   /** Unicode NFC normalization (UAX #15). Normalize before
     * fingerprinting so canonically equivalent texts (decomposed accents,
     * singleton forms) dedup together; all-ASCII input is returned
     * untouched via the `isNormalized` fast path. NULL stays NULL.
     */
-  def nfcNormalize(text: Column): Column = {
-    import org.apache.spark.sql.{GraftBridge, NfcNormalize => NN}
-    GraftBridge.column(NN(GraftBridge.expression(text)))
-  }
+  def nfcNormalize(text: Column): Column =
+    Kernels.nfcNormalize(text)
 
   /** HTML → plain text (the crawl-corpus boilerplate strip): tags
     * removed with block-level separation preserved as newlines,
@@ -276,20 +263,16 @@ object TextFunctions {
     * replayability) documented on [[HtmlKernels.htmlExtract]].
     * NULL stays NULL.
     */
-  def htmlExtract(html: Column): Column = {
-    import org.apache.spark.sql.{GraftBridge, HtmlExtract => HE}
-    GraftBridge.column(HE(GraftBridge.expression(html)))
-  }
+  def htmlExtract(html: Column): Column =
+    Kernels.htmlExtract(html)
 
   /** `href` values of `<a>`/`<area>` tags in document order — the
     * frontier-discovery companion of [[htmlExtract]] (crawl loop:
     * extract links → canonicalize with [[urlParts]] → gate with
     * Robots → dedup). Entity-decoded, script/style/comment content
     * skipped, relative URLs NOT resolved. NULL stays NULL. */
-  def htmlLinks(html: Column): Column = {
-    import org.apache.spark.sql.{GraftBridge, HtmlLinks => HL}
-    GraftBridge.column(HL(GraftBridge.expression(html)))
-  }
+  def htmlLinks(html: Column): Column =
+    Kernels.htmlLinks(html)
 
   /** Bytes → struct(text, encoding, n_fallback_bytes): BOM-aware
     * encoding sniff (UTF-16 LE/BE), strict UTF-8 validation (RFC 3629
@@ -297,10 +280,8 @@ object TextFunctions {
     * for mislabeled web text. Fail-open: always produces text; the
     * diagnosis rides beside it for quality gates. Contract on
     * [[EncodingKernels.decodeText]]. NULL blob stays NULL. */
-  def decodeText(blob: Column): Column = {
-    import org.apache.spark.sql.{DecodeText => DT, GraftBridge}
-    GraftBridge.column(DT(GraftBridge.expression(blob)))
-  }
+  def decodeText(blob: Column): Column =
+    Kernels.decodeText(blob)
 
   /** RFC 3986 §5.2 reference resolution: absolute URL of `ref` against
     * `base` — the bridge from [[htmlLinks]]'s relative hrefs to
@@ -310,64 +291,48 @@ object TextFunctions {
     * array elements merged under `[*]`, keys beyond identifier chars
     * bracketed — NULL for anything that is not one valid RFC 8259
     * document. The semi-structured ANALYZE primitive. */
-  def jsonPaths(doc: Column): Column = {
-    import org.apache.spark.sql.{GraftBridge, JsonPaths => JP}
-    GraftBridge.column(JP(GraftBridge.expression(doc)))
-  }
+  def jsonPaths(doc: Column): Column =
+    Kernels.jsonPaths(doc)
 
   /** HTML `<table>` cells as flat (table, row, col, text) rows —
     * tables numbered in document order, nested tables separate, cell
     * text entity-decoded and whitespace-collapsed; NULL on a
     * truncated document (unclosed table). */
-  def htmlTables(html: Column): Column = {
-    import org.apache.spark.sql.{GraftBridge, HtmlTables => HT}
-    GraftBridge.column(HT(GraftBridge.expression(html)))
-  }
+  def htmlTables(html: Column): Column =
+    Kernels.htmlTables(html)
 
   /** `Sitemap:` URLs of a robots.txt in file order (group-independent
     * per RFC 9309). */
-  def robotsSitemaps(robotsTxt: Column): Column = {
-    import org.apache.spark.sql.{GraftBridge, RobotsSitemaps => RS}
-    GraftBridge.column(RS(GraftBridge.expression(robotsTxt)))
-  }
+  def robotsSitemaps(robotsTxt: Column): Column =
+    Kernels.robotsSitemaps(robotsTxt)
 
   /** Sitemap/sitemap-index parse: array of (kind, loc, lastmod)
     * frontier entries, NULL on malformed framing (fail-closed). The
     * discovery step between `robots_sitemaps` and [[urlResolve]]. */
-  def sitemapEntries(xml: Column): Column = {
-    import org.apache.spark.sql.{GraftBridge, SitemapEntries => SE}
-    GraftBridge.column(SE(GraftBridge.expression(xml)))
-  }
+  def sitemapEntries(xml: Column): Column =
+    Kernels.sitemapEntries(xml)
 
   /** HTML page metadata (r17): struct(title, description, og_title,
     * og_description, og_image, canonical, lang) — best-effort head
     * scraping, NULL fields when absent. */
-  def htmlMeta(html: Column): Column = {
-    import org.apache.spark.sql.{GraftBridge, HtmlMeta => HM}
-    GraftBridge.column(HM(GraftBridge.expression(html)))
-  }
+  def htmlMeta(html: Column): Column =
+    Kernels.htmlMeta(html)
 
   /** RSS/Atom feed parse (r17): array of (kind, title, link, date,
     * summary) entries, NULL on malformed framing — the fresh-content
     * discovery surface next to [[sitemapEntries]]. */
-  def feedEntries(xml: Column): Column = {
-    import org.apache.spark.sql.{FeedEntries => FE, GraftBridge}
-    GraftBridge.column(FE(GraftBridge.expression(xml)))
-  }
+  def feedEntries(xml: Column): Column =
+    Kernels.feedEntries(xml)
 
-  def urlResolve(base: Column, ref: Column): Column = {
-    import org.apache.spark.sql.{GraftBridge, UrlResolve => UR}
-    GraftBridge.column(UR(GraftBridge.expression(base), GraftBridge.expression(ref)))
-  }
+  def urlResolve(base: Column, ref: Column): Column =
+    Kernels.urlResolve(base, ref)
 
   /** URL canonicalization + parts: struct(normalized, scheme, host,
     * port, path, query, apex), NULL for unparseable input — the key
     * for crawl URL dedup and host-level grouping. Contract on
     * [[UrlKernels.urlParts]]. */
-  def urlParts(url: Column): Column = {
-    import org.apache.spark.sql.{GraftBridge, UrlParts => UP}
-    GraftBridge.column(UP(GraftBridge.expression(url)))
-  }
+  def urlParts(url: Column): Column =
+    Kernels.urlParts(url)
 
   /** Gopher's document-level stop words (Rae et al. 2021, A1.1): a doc
     * must contain at least two DISTINCT members to pass the rule. */
@@ -412,7 +377,6 @@ object TextFunctions {
     */
   def gopherRules(text0: Column,
                   minWords: Int = 50, maxWords: Int = 100000): Column = {
-    import org.apache.spark.sql.{GopherCounts => GC, GraftBridge}
     val text = coalesce(text0, lit(""))
     // ONE single-pass kernel call (see TextKernels.gopherCounts): the
     // builtin higher-order formulation re-tokenized the document once
@@ -420,7 +384,7 @@ object TextFunctions {
     // elimination — measured 5.6 s -> 0.4 s for q_quality_rules at
     // sf0.1. The ratio arithmetic below is unchanged (the oracle
     // replays it identically).
-    val k = GraftBridge.column(GC(GraftBridge.expression(text)))
+    val k = Kernels.gopherCounts(text)
     val nWords = k.getField("n_words")
     val meanLen = when(nWords > 0,
       round(k.getField("sum_word_len").cast("double") / nWords.cast("double"), 6))
@@ -464,10 +428,9 @@ object TextFunctions {
     *  - `keep` = the page-rule conjunction. Never NULL.
     */
   def c4Rules(text0: Column): Column = {
-    import org.apache.spark.sql.{C4Counts => CC, GraftBridge}
     val text = coalesce(text0, lit(""))
     // ONE single-pass kernel call — same motivation as [[gopherRules]]
-    val k = GraftBridge.column(CC(GraftBridge.expression(text)))
+    val k = Kernels.c4Counts(text)
     val keep = k.getField("n_sentences") >= 3 &&
       !k.getField("has_lorem") && !k.getField("has_brace")
     struct(
@@ -481,8 +444,7 @@ object TextFunctions {
   }
 
   def repetitionStats(text: Column): Column = {
-    import org.apache.spark.sql.{GraftBridge, RepetitionCounts => RC}
-    val k = GraftBridge.column(RC(GraftBridge.expression(text)))
+    val k = Kernels.repetitionCounts(text)
     val n = k.getField("n_tokens")
     struct(
       n.as("n_tokens"),

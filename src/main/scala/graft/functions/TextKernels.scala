@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass text statistics kernel behind
-  * [[org.apache.spark.sql.TextStats]]. Replaces ~8 separate regex /
+  * the `text_stats` kernel. Replaces ~8 separate regex /
   * higher-order-function passes per document with one walk over the
   * string, while reproducing the exact counting semantics of the
   * column-composed originals in [[TextFunctions]] (which are what the
@@ -317,7 +317,7 @@ object TextKernels {
   }
 
   /** Unicode NFC normalization (UAX #15) behind
-    * [[org.apache.spark.sql.NfcNormalize]]. `Normalizer.isNormalized`
+    * the `nfc_normalize` kernel. `Normalizer.isNormalized`
     * first: for already-NFC input (all ASCII in particular) the input
     * UTF8String is returned as-is — no String round-trip, no
     * allocation — so the common case costs one quick-check scan.

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{CentroidDot, CentroidResidual, Column, GraftBridge, PqAdc, PqEncode, PqQueryTable, Sq8Decode, Sq8Encode, TopCentroids, VectorCosine, VectorDot, VectorL2Normalize, VectorLshBucket}
+import org.apache.spark.sql.{Column, Kernels}
 import org.apache.spark.sql.functions._
 
 /** Vector math over `array<float>` / `array<double>` embedding columns.
@@ -13,11 +13,10 @@ import org.apache.spark.sql.functions._
 object VectorFunctions {
 
   private def d(c: Column): Column = c.cast("array<double>")
-  private def expr(c: Column) = GraftBridge.expression(c)
 
   /** Dot product of two numeric arrays (computed in double). */
   def dot(a: Column, b: Column): Column =
-    GraftBridge.column(VectorDot(expr(d(a)), expr(d(b))))
+    Kernels.vectorDot(d(a), d(b))
 
   /** Euclidean (L2) norm. */
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
@@ -26,22 +25,22 @@ object VectorFunctions {
     * (min, span) — the 4x-memory middle tier between raw floats and
     * PQ codes. Oracle-exact arithmetic (see VectorKernels.sq8Encode). */
   def sq8Encode(a: Column, mins: Array[Double], spans: Array[Double]): Column =
-    GraftBridge.column(Sq8Encode(expr(d(a)), mins, spans))
+    Kernels.sq8Encode(d(a), mins, spans)
 
   /** SQ8 decode back to array<double> for exact re-ranking. */
   def sq8Decode(codes: Column, mins: Array[Double], spans: Array[Double]): Column =
-    GraftBridge.column(Sq8Decode(expr(codes), mins, spans))
+    Kernels.sq8Decode(codes, mins, spans)
 
   /** Cosine similarity in [-1, 1]; 0 when either vector has zero norm. */
   def cosineSimilarity(a: Column, b: Column): Column =
-    GraftBridge.column(VectorCosine(expr(d(a)), expr(d(b))))
+    Kernels.vectorCosine(d(a), d(b))
 
   /** L2-normalized copy of the vector (unit length); zero vector passes
     * through unchanged. Pre-normalizing once turns per-pair cosine into a
     * plain dot product — at 100 TB that halves the FLOPs of an ANN sweep.
     */
   def l2Normalize(a: Column): Column =
-    GraftBridge.column(VectorL2Normalize(expr(d(a))))
+    Kernels.vectorL2Normalize(d(a))
 
   /** Coarse LSH bucket id for cosine ANN: sign bits of `nBits` fixed
     * pseudo-random hyperplane projections (deterministic seed). Vectors
@@ -51,7 +50,7 @@ object VectorFunctions {
     * inside codegen without shipping a matrix.
     */
   def cosineLshBucket(vec: Column, nBits: Int, seed: Long = 42L): Column =
-    GraftBridge.column(VectorLshBucket(expr(d(vec)), nBits, seed))
+    Kernels.vectorLshBucket(d(vec), nBits, seed)
 
   /** 1-based ids of the `n` centroids nearest to `vec` by dot product
     * (descending; ties to the smaller id). Centroids travel as a codegen
@@ -59,31 +58,31 @@ object VectorFunctions {
     * higher-order functions in the IVF hot path.
     */
   def topCentroids(vec: Column, centroids: Array[Array[Double]], n: Int): Column =
-    GraftBridge.column(TopCentroids(expr(d(vec)), centroids, n))
+    Kernels.topCentroids(d(vec), centroids, n)
 
   // ---- IVF-PQ (round 12) ----
 
   /** vec − centroids(cid−1): the residual a product quantizer codes. */
   def centroidResidual(vec: Column, cid: Column,
                        centroids: Array[Array[Double]]): Column =
-    GraftBridge.column(CentroidResidual(expr(d(vec)), expr(cid.cast("long")), centroids))
+    Kernels.centroidResidual(d(vec), cid.cast("long"), centroids)
 
   /** dot(vec, centroids(cid−1)) — the q·c_list term of the ADC score. */
   def centroidDot(vec: Column, cid: Column,
                   centroids: Array[Array[Double]]): Column =
-    GraftBridge.column(CentroidDot(expr(d(vec)), expr(cid.cast("long")), centroids))
+    Kernels.centroidDot(d(vec), cid.cast("long"), centroids)
 
   /** 1-based nearest-codeword id per subspace (min L2 as argmax
     * dot−½‖w‖², ties to the smaller code). */
   def pqEncode(vec: Column, codebooks: Array[Array[Array[Double]]]): Column =
-    GraftBridge.column(PqEncode(expr(d(vec)), codebooks))
+    Kernels.pqEncode(d(vec), codebooks)
 
   /** Flattened per-query ADC table: tab(m·nCodes + c−1) =
     * dot(q_sub(m), w(m)(c−1)). */
   def pqQueryTable(vec: Column, codebooks: Array[Array[Array[Double]]]): Column =
-    GraftBridge.column(PqQueryTable(expr(d(vec)), codebooks))
+    Kernels.pqQueryTable(d(vec), codebooks)
 
   /** Σ_m tab(m·nCodes + codes(m)−1): O(M) per-candidate ADC lookup. */
   def pqAdc(tab: Column, codes: Column, nCodes: Int): Column =
-    GraftBridge.column(PqAdc(expr(tab), expr(codes), nCodes))
+    Kernels.pqAdc(tab, codes, nCodes)
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding tokenizer: distributed trainer over the word
   * dictionary + corpus-scale encoder ([[graft.functions.BpeKernels]]
-  * via the codegen `BpeTokens` expression).
+  * via the codegen `bpe_tokens` kernel).
   *
   * Scale shape: training never touches the corpus after ONE
   * tokenize+count shuffle — every iteration runs over the DISTINCT
@@ -45,13 +45,12 @@ object Bpe {
     * lowercased whitespace token, with its corpus count and initial
     * symbol string (code points, doubled-separator form). */
   def wordDict(docs: DataFrame, textCol: String): DataFrame = {
-    import org.apache.spark.sql.{BpeInitRepr, GraftBridge}
     docs
       .select(explode(split(lower(trim(col(textCol))), WsClass)).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .withColumn("r",
-        GraftBridge.column(BpeInitRepr(GraftBridge.expression(col("w")))))
+        org.apache.spark.sql.Kernels.bpeInitRepr(col("w")))
   }
 
   /** Adjacent symbol pairs of `r`, exploded one row per occurrence
@@ -288,9 +287,8 @@ object Bpe {
   /** Encoded token array of `text` under ranked `merges` — the
     * corpus-scale apply (one codegen pass per document). */
   def tokens(text: Column, merges: Seq[(String, String)]): Column = {
-    import org.apache.spark.sql.{BpeTokens, GraftBridge}
-    GraftBridge.column(BpeTokens(GraftBridge.expression(text),
-      merges.map(_._1), merges.map(_._2)))
+    org.apache.spark.sql.Kernels.bpeTokens(text,
+      merges.map(_._1).toArray, merges.map(_._2).toArray)
   }
 
   /** The normalized whitespace tokens of `text` as a column — the same

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SumIndexedLongs}
+import org.apache.spark.sql.{Column, DataFrame, Kernels}
 import org.apache.spark.sql.functions._
 
 /** Distributed linear quality classifier over hashed token features —
@@ -94,7 +94,7 @@ object Classifier {
     *
     * `qwArr` is the PRE-QUANTIZED weight array ([[quantize]] applied
     * per slot, once per iteration, driver-side), and the per-row sum
-    * is the codegen [[org.apache.spark.sql.SumIndexedLongs]] kernel —
+    * is the codegen `sum_indexed` kernel —
     * an interpreted `aggregate` lambda here cost ~6× the bare job
     * floor per training iteration (measured at sf0.1: round + multiply
     * + element_at re-evaluated interpretively per word-bucket per row).
@@ -113,9 +113,7 @@ object Classifier {
         "fixed-point dot product (needs buckets*max|w|*1e12 << 2^63)")
 
   private def zCol(qwArr: Column, bs: Column): Column =
-    GraftBridge.column(SumIndexedLongs(
-      GraftBridge.expression(bs), GraftBridge.expression(qwArr)))
-      .cast("double") / lit(Scale)
+    Kernels.sumIndexedLongs(bs, qwArr).cast("double") / lit(Scale)
 
   /** round(w·1e12) exactly as Spark's `round(_, 0)` computes it for
     * doubles (BigDecimal.valueOf → setScale HALF_UP → toDouble, then

@@ -32,12 +32,10 @@ object Dedup {
 
   /** MinHash signature as K independent min-hashes of a 64-bit shingle
     * hash set — deterministic, one codegen'd kernel pass, no UDF (see
-    * [[org.apache.spark.sql.MinHashes]]).
+    * the `minhashes` kernel).
     */
-  def minhashSignature(shingleHashes: Column, k: Int): Column = {
-    import org.apache.spark.sql.{GraftBridge, MinHashes}
-    GraftBridge.column(MinHashes(GraftBridge.expression(shingleHashes), k))
-  }
+  def minhashSignature(shingleHashes: Column, k: Int): Column =
+    org.apache.spark.sql.Kernels.minHashes(shingleHashes, k)
 
   /** Per-band LSH keys of a minhash signature: element `b` is xxhash64
     * over the band's `r` consecutive signature members — the banding
@@ -202,8 +200,7 @@ object Dedup {
     require(bands > maxHamming, // this operator's contract is EXACT recall
       s"imageNearDupPairs pigeonhole needs bands > maxHamming, " +
         s"got $bands <= $maxHamming")
-    import org.apache.spark.sql.{DHash64, GraftBridge}
-    val h = GraftBridge.column(DHash64(GraftBridge.expression(col(bytesCol))))
+    val h = org.apache.spark.sql.Kernels.dHash64(col(bytesCol))
     // null sketches are absorbed inside bandedHammingPairs (r17 opt:
     // a filter here was predicate-pushed below the sketch Project and
     // re-evaluated the whole decode kernel — guide §4.4)
@@ -213,7 +210,7 @@ object Dedup {
   }
 
   /** Audio perceptual near-dup pairs (round 16): the image banding
-    * pattern applied to decoded PCM — [[org.apache.spark.sql.AudioDhash64]]
+    * pattern applied to decoded PCM — the `audio_dhash64` kernel
     * (temporal energy-envelope fingerprint over WAV/G.711/ADPCM/AU/
     * AIFF/FLAC samples, integer-exact) sketches each blob to 64 bits,
     * then the SAME banded Hamming machinery as [[imageNearDupPairs]]:
@@ -228,8 +225,7 @@ object Dedup {
     require(bands > maxHamming, // EXACT recall is this operator's contract
       s"audioNearDupPairs pigeonhole needs bands > maxHamming, " +
         s"got $bands <= $maxHamming")
-    import org.apache.spark.sql.{AudioDhash64, GraftBridge}
-    val h = GraftBridge.column(AudioDhash64(GraftBridge.expression(col(bytesCol))))
+    val h = org.apache.spark.sql.Kernels.audioDhash64(col(bytesCol))
     // null sketches are absorbed inside bandedHammingPairs (r17 opt:
     // a filter here was predicate-pushed below the sketch Project and
     // re-evaluated the whole decode kernel — guide §4.4)
@@ -239,7 +235,7 @@ object Dedup {
   }
 
   /** Video near-dup pairs (round 16): [[audioNearDupPairs]]'s frame
-    * twin — [[org.apache.spark.sql.VideoDhash64]] (temporal
+    * twin — the `video_dhash64` kernel (temporal
     * luma-envelope over decoded MJPEG-MP4 / animated-GIF frames,
     * integer-exact) sketches each blob, then the shared banded
     * Hamming machinery. Frames never enter an exchange — the
@@ -253,8 +249,7 @@ object Dedup {
     require(bands > maxHamming, // EXACT recall is this operator's contract
       s"videoNearDupPairs pigeonhole needs bands > maxHamming, " +
         s"got $bands <= $maxHamming")
-    import org.apache.spark.sql.{GraftBridge, VideoDhash64}
-    val h = GraftBridge.column(VideoDhash64(GraftBridge.expression(col(bytesCol))))
+    val h = org.apache.spark.sql.Kernels.videoDhash64(col(bytesCol))
     // null sketches are absorbed inside bandedHammingPairs (r17 opt:
     // a filter here was predicate-pushed below the sketch Project and
     // re-evaluated the whole decode kernel — guide §4.4)
@@ -1142,14 +1137,13 @@ object Dedup {
     val meta = new MetadataBuilder()
       .putLong(MetaPhashBands, bands.toLong)
       .putLong(MetaPhashKeyBands, keyBands.toLong).build()
-    import org.apache.spark.sql.{DHash64, GraftBridge}
-    val h = GraftBridge.column(DHash64(GraftBridge.expression(col(bytesCol))))
+    val h = org.apache.spark.sql.Kernels.dHash64(col(bytesCol))
     sigIndexCore(docs, h, idCol, bands, keyBands, meta)
   }
 
   /** [[phashIndex]]'s audio twin (round 16): the persisted
     * band-partitioned fingerprint index over
-    * [[org.apache.spark.sql.AudioDhash64]] energy envelopes — same
+    * the `audio_dhash64` kernel energy envelopes — same
     * banding, same metadata stamp, same probe contract. */
   def audioFingerprintIndex(docs: DataFrame, bytesCol: String,
                             idCol: String, bands: Int = 8,
@@ -1164,8 +1158,7 @@ object Dedup {
     val meta = new MetadataBuilder()
       .putLong(MetaPhashBands, bands.toLong)
       .putLong(MetaPhashKeyBands, keyBands.toLong).build()
-    import org.apache.spark.sql.{AudioDhash64, GraftBridge}
-    val h = GraftBridge.column(AudioDhash64(GraftBridge.expression(col(bytesCol))))
+    val h = org.apache.spark.sql.Kernels.audioDhash64(col(bytesCol))
     sigIndexCore(docs, h, idCol, bands, keyBands, meta)
   }
 
@@ -1212,14 +1205,13 @@ object Dedup {
                        maxBucket: Int = 4096,
                        capObs: Option[Observation] = None,
                        keyBands: Int = 1): DataFrame = {
-    import org.apache.spark.sql.{DHash64, GraftBridge}
     incrementalSig("incrementalPhash", newDocs, indexDir,
-      GraftBridge.column(DHash64(GraftBridge.expression(col(bytesCol)))),
+      org.apache.spark.sql.Kernels.dHash64(col(bytesCol)),
       idCol, maxHamming, bands, maxBucket, capObs, keyBands)
   }
 
   /** [[incrementalPhash]]'s audio twin (round 16): new-batch audio
-    * blobs are fingerprinted ([[org.apache.spark.sql.AudioDhash64]])
+    * blobs are fingerprinted (the `audio_dhash64` kernel)
     * and screened against a persisted [[audioFingerprintIndex]] with
     * the same partial-probe pigeonhole, partition pruning and bounded
     * buckets — blobs never enter an exchange, per-ingest shuffle is
@@ -1230,9 +1222,8 @@ object Dedup {
                        maxBucket: Int = 4096,
                        capObs: Option[Observation] = None,
                        keyBands: Int = 1): DataFrame = {
-    import org.apache.spark.sql.{AudioDhash64, GraftBridge}
     incrementalSig("incrementalAudio", newDocs, indexDir,
-      GraftBridge.column(AudioDhash64(GraftBridge.expression(col(bytesCol)))),
+      org.apache.spark.sql.Kernels.audioDhash64(col(bytesCol)),
       idCol, maxHamming, bands, maxBucket, capObs, keyBands)
   }
 

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *
   * Spark plan: broadcast the (small, dimension-sized) lookup side,
   * cross-join, score with the codegen'd
-  * [[org.apache.spark.sql.JaroWinklerSimilarity]] expression, then pick
+  * `jaro_winkler` kernel, then pick
   * the winner per main row with a `max_by` AGGREGATION keyed on
   * `struct(score, -lookupOrder)` — max score wins, ties fall to the
   * lowest load order, exactly Kettle's first-wins rule. The aggregation

@@ -3,7 +3,7 @@ package graft.operators
 import graft.functions.VectorKernels
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{ArgminSqDist, Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.{Column, DataFrame, Kernels}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
@@ -61,8 +61,7 @@ object KMeans {
       x => round(x.cast("double") * lit(Micro), 0).cast("long"))
 
   private[operators] def assignCol(qv: Column, qc: Column): Column =
-    GraftBridge.column(ArgminSqDist(
-      GraftBridge.expression(qv), GraftBridge.expression(qc)))
+    Kernels.argminSqDist(qv, qc)
 
   /** Centroids as a broadcast ONE-ROW frame (`__qc`:
     * array<array<long>>, index = centroid id) — data, not plan

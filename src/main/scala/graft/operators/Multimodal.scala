@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Kernels}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video travel as opaque
@@ -42,10 +42,8 @@ object Multimodal {
     * blobs BEFORE any decode budget is spent. Codegen expression; the
     * blob never shuffles.
     */
-  def imageMeta(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, ImageMeta => IM}
-    GraftBridge.column(IM(GraftBridge.expression(blob)))
-  }
+  def imageMeta(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.imageMeta(blob)
 
   /** REAL WAV/RIFF metadata: struct(format, channels, sample_rate,
     * bits_per_sample, n_frames) — duration = n_frames / sample_rate
@@ -56,148 +54,109 @@ object Multimodal {
     * zip-bomb guard; NULL for malformed/truncated archives (the
     * fail-closed triage contract). Explode, then [[httpParts]] the
     * response payloads and hand the bodies to the crawl front-end. */
-  def warcRecords(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, WarcRecords => WR}
-    GraftBridge.column(WR(GraftBridge.expression(blob)))
-  }
+  def warcRecords(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.warcRecords(blob)
 
   /** Avro object-container triage (r14): (schema_json, codec,
     * n_blocks, n_records) from frame arithmetic alone — records never
     * decoded. NULL on malformed framing. */
-  def avroMeta(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{AvroMeta => AVM, GraftBridge}
-    GraftBridge.column(AVM(GraftBridge.expression(blob)))
-  }
+  def avroMeta(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.avroMeta(blob)
 
   /** TAR (ustar) member listing (r14): (name, typeflag, size) rows,
     * checksums verified; NULL on malformed framing. Compose with
     * [[gunzip]] for .tar.gz. */
-  def tarEntries(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, TarEntries => TE}
-    GraftBridge.column(TE(GraftBridge.expression(blob)))
-  }
+  def tarEntries(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.tarEntries(blob)
 
   /** One TAR regular member's bytes by name (r14). */
   def tarExtract(blob: org.apache.spark.sql.Column,
-                 name: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, TarExtract => TX}
-    GraftBridge.column(TX(GraftBridge.expression(blob), GraftBridge.expression(name)))
-  }
+                 name: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.tarExtract(blob, name)
 
   /** ZIP central-directory listing (r14): (name, method,
     * compressed_size, size) rows; NULL on malformed/zip64/encrypted
     * archives. */
-  def zipEntries(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, ZipEntries => ZE}
-    GraftBridge.column(ZE(GraftBridge.expression(blob)))
-  }
+  def zipEntries(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.zipEntries(blob)
 
   /** One ZIP entry's bytes by name, CRC32 + size verified (r14). */
   def zipExtract(blob: org.apache.spark.sql.Column,
-                 name: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, ZipExtract => ZX}
-    GraftBridge.column(ZX(GraftBridge.expression(blob), GraftBridge.expression(name)))
-  }
+                 name: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.zipExtract(blob, name)
 
   /** XLSX sheet1 cells as flat (row, col, value) rows —
     * sharedStrings-resolved, ref-addressed; NULL on malformed
     * archives (r15). */
   def xlsxCells(blob: org.apache.spark.sql.Column,
-                sheet: Int = 1): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, XlsxCells => XC}
-    GraftBridge.column(XC(GraftBridge.expression(blob), sheet))
-  }
+                sheet: Int = 1): org.apache.spark.sql.Column =
+    Kernels.xlsxCells(blob, sheet)
 
   /** PDF triage: struct(version, n_pages, encrypted); NULL on
     * malformed/unsupported framing (r14). */
-  def pdfMeta(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, PdfMeta => PM}
-    GraftBridge.column(PM(GraftBridge.expression(blob)))
-  }
+  def pdfMeta(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.pdfMeta(blob)
 
   /** PDF text extraction across the page tree; NULL for encrypted or
     * unsupported documents (r14). */
-  def pdfText(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, PdfText => PT}
-    GraftBridge.column(PT(GraftBridge.expression(blob)))
-  }
+  def pdfText(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.pdfText(blob)
 
   /** Concatenated-member gzip inflate, member-exact + CRC/ISIZE
     * verified + zip-bomb-guarded; NULL on any corruption (r14). The
     * in-plan decompressor for `.xml.gz` sitemaps, `.jsonl.gz` shards,
     * and any gzip payload. */
-  def gunzip(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, Gunzip => GZ}
-    GraftBridge.column(GZ(GraftBridge.expression(blob)))
-  }
+  def gunzip(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.gunzip(blob)
 
   /** Zstandard decompression (r15, RFC 8878 pure-JVM decoder):
     * multi-frame, checksum-verified, dictionaries refused; NULL on any
     * corruption. */
-  def zstdDecompress(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, ZstdDecompress => ZD}
-    GraftBridge.column(ZD(GraftBridge.expression(blob)))
-  }
+  def zstdDecompress(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.zstdDecompress(blob)
 
   /** Dictionary-frame zstd decode (r17, RFC 8878 §5): `dict` is a
     * structured or raw-content dictionary blob; frames declaring a
     * Dictionary_ID are checked against its embedded ID. */
   def zstdDecompress(blob: org.apache.spark.sql.Column,
-                     dict: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, ZstdDecompressDict => ZDD}
-    GraftBridge.column(ZDD(
-      GraftBridge.expression(blob), GraftBridge.expression(dict)))
-  }
+                     dict: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.zstdDecompressDict(blob, dict)
 
   /** Brotli decompression (r16, RFC 7932 pure-JVM decoder): full
     * format incl. static dictionary + transforms; NULL on any
     * corruption. */
-  def brotliDecompress(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{BrotliDecompress => BD, GraftBridge}
-    GraftBridge.column(BD(GraftBridge.expression(blob)))
-  }
+  def brotliDecompress(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.brotliDecompress(blob)
 
   /** LZW `.Z` (Unix compress) decompression (r17): block + non-block
     * modes, maxbits 9..16; NULL on any corruption. */
-  def lzwDecompress(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{LzwDecompress => LD, GraftBridge}
-    GraftBridge.column(LD(GraftBridge.expression(blob)))
-  }
+  def lzwDecompress(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.lzwDecompress(blob)
 
   /** LZW `.Z` block-mode compression (r17) — in-plan encoder twin for
     * fixtures and roundtrip pipelines. */
-  def lzwCompress(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{LzwCompress => LC, GraftBridge}
-    GraftBridge.column(LC(GraftBridge.expression(blob)))
-  }
+  def lzwCompress(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.lzwCompress(blob)
 
   /** LZ4 frame decompression (r17): standard + legacy frames, linked
     * blocks, XXH32 verified; NULL on any corruption. */
-  def lz4Decompress(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{Lz4Decompress => L4, GraftBridge}
-    GraftBridge.column(L4(GraftBridge.expression(blob)))
-  }
+  def lz4Decompress(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.lz4Decompress(blob)
 
   /** LZ4 store-mode frame (r17) — in-plan encoder twin for fixtures
     * and roundtrip pipelines. */
-  def lz4CompressStore(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{Lz4CompressStore => L4C, GraftBridge}
-    GraftBridge.column(L4C(GraftBridge.expression(blob)))
-  }
+  def lz4CompressStore(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.lz4CompressStore(blob)
 
   /** OLE2/CFB directory listing (r16): array of struct(name,
     * entry_type, size); NULL on malformed input. */
-  def cfbEntries(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{CfbEntries => CE, GraftBridge}
-    GraftBridge.column(CE(GraftBridge.expression(blob)))
-  }
+  def cfbEntries(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.cfbEntries(blob)
 
   /** Legacy .doc text (r16): non-complex unencrypted WordDocument
     * stream; NULL otherwise. */
-  def docText(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{DocText => DT, GraftBridge}
-    GraftBridge.column(DT(GraftBridge.expression(blob)))
-  }
+  def docText(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.docText(blob)
 
   /** The "text of whatever this blob is" ingest front door (r17):
     * magic-dispatched composition of the format extractors —
@@ -238,129 +197,95 @@ object Multimodal {
 
   /** PPTX slide text (r17): a:t runs per slide part, paragraphs as
     * lines; NULL for damaged archives / non-presentations. */
-  def pptxText(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, PptxText => PX}
-    GraftBridge.column(PX(GraftBridge.expression(blob)))
-  }
+  def pptxText(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.pptxText(blob)
 
   /** ID3 tags (r17): struct(title, artist, album, year) from
     * ID3v2/v1; NULL when no tag or damaged framing. */
-  def id3Tags(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, Id3Tags => IT}
-    GraftBridge.column(IT(GraftBridge.expression(blob)))
-  }
+  def id3Tags(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.id3Tags(blob)
 
   /** EML/MIME extraction (r17): struct(from, to, subject, date,
     * n_parts, text); NULL for non-mail/undecodable input. */
-  def emlParts(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{EmlParts => EP, GraftBridge}
-    GraftBridge.column(EP(GraftBridge.expression(blob)))
-  }
+  def emlParts(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.emlParts(blob)
 
   /** EXIF metadata (r17): struct(orientation, datetime, make, model,
     * gps_lat, gps_lon); NULL when no EXIF block or damaged. */
-  def exifMeta(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{ExifMeta => EM, GraftBridge}
-    GraftBridge.column(EM(GraftBridge.expression(blob)))
-  }
+  def exifMeta(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.exifMeta(blob)
 
   /** Web-font triage (r17): struct(format, family, n_glyphs,
     * n_tables); NULL on malformed framing. */
-  def fontMeta(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{FontMeta => FM, GraftBridge}
-    GraftBridge.column(FM(GraftBridge.expression(blob)))
-  }
+  def fontMeta(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.fontMeta(blob)
 
   /** mbox splitting (r17): per-message binaries, envelope lines
     * dropped, mboxrd unescaped; feeds [[emlParts]]. */
-  def mboxMessages(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, MboxMessages => MM}
-    GraftBridge.column(MM(GraftBridge.expression(blob)))
-  }
+  def mboxMessages(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.mboxMessages(blob)
 
   /** RTF text (r17): destination-skipping control-word walk, cp1252 +
     * unicode escapes; NULL for non-RTF/damaged input. */
-  def rtfText(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, RtfText => RT}
-    GraftBridge.column(RT(GraftBridge.expression(blob)))
-  }
+  def rtfText(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.rtfText(blob)
 
   /** 7z triage (r17): CRC-verified signature-header arithmetic —
     * struct(version, next_header_size, encoded, pack_bytes); NULL on
     * malformed framing. */
-  def sevenZipMeta(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, SevenZipMeta => SZ}
-    GraftBridge.column(SZ(GraftBridge.expression(blob)))
-  }
+  def sevenZipMeta(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.sevenZipMeta(blob)
 
   /** RAR4/RAR5 triage (r17): CRC-verified block walk — struct(version,
     * n_blocks, n_files, encrypted); NULL on malformed framing. */
-  def rarMeta(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, RarMeta => RM}
-    GraftBridge.column(RM(GraftBridge.expression(blob)))
-  }
+  def rarMeta(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.rarMeta(blob)
 
   /** Embedded PDF image XObjects (r17): struct(obj, format, width,
     * height, data) rows — jpeg verbatim, rasters as P6/P5 for the
     * dhash tier; NULL blob-wide on malformed documents. */
-  def pdfImages(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, PdfImages => PI}
-    GraftBridge.column(PI(GraftBridge.expression(blob)))
-  }
+  def pdfImages(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.pdfImages(blob)
 
   /** Legacy .ppt slide text (r17): TextCharsAtom/TextBytesAtom walk
     * of the PowerPoint Document stream, newline-joined; NULL for
     * encrypted or malformed decks. */
-  def pptText(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, PptText => PT}
-    GraftBridge.column(PT(GraftBridge.expression(blob)))
-  }
+  def pptText(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.pptText(blob)
 
   /** Legacy .xls BIFF8 worksheet cells (r17): flat (row, col, value),
     * the XLSX contract over the CFB Workbook stream; NULL on damaged/
     * encrypted/BIFF5 input or an absent sheet. */
-  def xlsCells(blob: org.apache.spark.sql.Column, sheet: Int = 1): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, XlsCells => XC}
-    GraftBridge.column(XC(GraftBridge.expression(blob), sheet))
-  }
+  def xlsCells(blob: org.apache.spark.sql.Column, sheet: Int = 1): org.apache.spark.sql.Column =
+    Kernels.xlsCells(blob, sheet)
 
   /** Parquet blob triage (r16): footer-only struct(version, num_rows,
     * n_row_groups, n_schema_elements); NULL on malformed framing. */
-  def parquetMeta(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, ParquetMeta => PQ}
-    GraftBridge.column(PQ(GraftBridge.expression(blob)))
-  }
+  def parquetMeta(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.parquetMeta(blob)
 
   /** HTTP payload -> struct(status, content_type, body); NULL when the
     * payload is not an HTTP message. */
-  def httpParts(payload: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, HttpParts => HP}
-    GraftBridge.column(HP(GraftBridge.expression(payload)))
-  }
+  def httpParts(payload: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.httpParts(payload)
 
-  def audioMeta(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{AudioMeta => AM, GraftBridge}
-    GraftBridge.column(AM(GraftBridge.expression(blob)))
-  }
+  def audioMeta(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.audioMeta(blob)
 
   /** REAL ISO-BMFF (MP4/MOV) metadata: struct(format = major brand,
     * timescale, duration, n_tracks) — seconds = duration / timescale,
     * codec untouched. NULL for non-BMFF/corrupt blobs.
     */
-  def videoMeta(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, VideoMeta => VM}
-    GraftBridge.column(VM(GraftBridge.expression(blob)))
-  }
+  def videoMeta(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.videoMeta(blob)
 
   /** REAL per-track ISO-BMFF stats: array of struct(handler, timescale,
     * duration, n_samples, total_bytes) — per-track seconds and average
     * bitrate without any codec (mdhd + hdlr + stsz walk). NULL for
     * non-BMFF/corrupt blobs; NULL fields for tracks missing the boxes.
     */
-  def videoTrackStats(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, VideoTrackStats => VTS}
-    GraftBridge.column(VTS(GraftBridge.expression(blob)))
-  }
+  def videoTrackStats(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.videoTrackStats(blob)
 
   /** REAL video PIXEL path for the MJPEG codec class: array of
     * per-sample byte slices cut by the stsd/stsz/stsc/stco walk — each
@@ -370,10 +295,8 @@ object Multimodal {
     * structurally inconsistent sample tables (honest refusal, same
     * contract as the JPEG decoder's progressive-scan NULL).
     */
-  def mjpegFrames(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GraftBridge, MjpegFrames => MJF}
-    GraftBridge.column(MJF(GraftBridge.expression(blob)))
-  }
+  def mjpegFrames(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.mjpegFrames(blob)
 
   /** REAL animated-GIF per-frame stats: array of struct(x, y, width,
     * height, delay_cs, disposal, transparent_px, mean_r, mean_g,
@@ -383,10 +306,8 @@ object Multimodal {
     * list would read as a shorter animation). Codegen expression over
     * the blob in place — frames never shuffle.
     */
-  def gifFrames(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{GifFrames => GF, GraftBridge}
-    GraftBridge.column(GF(GraftBridge.expression(blob)))
-  }
+  def gifFrames(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    Kernels.gifFrames(blob)
 
   /** Decoder contract: one BATCH of blobs in, one feature vector per
     * blob out — the shape a vectorized codec / GPU embedder actually
@@ -480,7 +401,7 @@ object Multimodal {
   }
 
   /** Feature extraction over a binary column as ONE codegen projection:
-    * the decoder rides the [[org.apache.spark.sql.DecodeFeatures]]
+    * the decoder rides the `decode_features`
     * expression as a plan reference, so decode stays inside whole-stage
     * codegen with no RDD round-trip (through round 12 this was a
     * `df.rdd.mapPartitions` barrier that deserialized every blob out of
@@ -499,21 +420,18 @@ object Multimodal {
                 dim: Int = 8, batchSize: Int = 32,
                 decoder: Decoder = stub): DataFrame = {
     require(batchSize >= 1)
-    import org.apache.spark.sql.{DecodeFeatures, GraftBridge}
     val safeBlob = coalesce(col(blobCol), lit(Array.emptyByteArray))
     df.select(
       col(idCol).cast("bigint").as("media_id"),
       length(safeBlob).cast("bigint").as("n_bytes"),
-      GraftBridge.column(
-        DecodeFeatures(GraftBridge.expression(safeBlob), dim, decoder))
-        .as("feature"))
+      Kernels.decodeFeatures(safeBlob, dim, decoder).as("feature"))
   }
 
   /** Frame sampling: split a (stub) video blob into fixed-size chunks and
     * keep every `stride`-th chunk — the plumbing of frame extraction
     * (real impl: container demux + keyframe select, e.g. [[mjpegFrames]]).
     * One output row per sampled frame: the
-    * [[org.apache.spark.sql.FrameChunks]] codegen expression cuts the
+    * `frame_chunks` codegen kernel cuts the
     * chunks in place and a Spark-side explode fans them out, so
     * downstream per-frame ops parallelize with no RDD barrier. Null ids
     * pass through with a null `media_id`; null blobs yield zero rows
@@ -522,11 +440,9 @@ object Multimodal {
   def sampleFrames(df: DataFrame, idCol: String, blobCol: String,
                    frameBytes: Int = 64, stride: Int = 4): DataFrame = {
     require(frameBytes > 0 && stride > 0)
-    import org.apache.spark.sql.{FrameChunks, GraftBridge}
     df.select(
         col(idCol).cast("bigint").as("media_id"),
-        explode(GraftBridge.column(FrameChunks(
-          GraftBridge.expression(col(blobCol)), frameBytes, stride))).as("f"))
+        explode(Kernels.frameChunks(col(blobCol), frameBytes, stride)).as("f"))
       .select(col("media_id"), col("f.frame_no").as("frame_no"),
         col("f.frame").as("frame"))
   }

@@ -935,11 +935,8 @@ object Ops {
     * `exact <= estimate <= exact + eps*N` at the sketch's confidence,
     * which is exactly the two-sided gate the calibration query asserts.
     */
-  def cmsEstimate(sketch: Column, item: Column): Column = {
-    import org.apache.spark.sql.{CmsEstimate, GraftBridge}
-    GraftBridge.column(CmsEstimate(
-      GraftBridge.expression(sketch), GraftBridge.expression(item)))
-  }
+  def cmsEstimate(sketch: Column, item: Column): Column =
+    org.apache.spark.sql.Kernels.cmsEstimate(sketch, item)
 
   /** Modulus for [[integrityChecksum]]: 2^61 − 1 (Mersenne prime) — big
     * enough that collisions across runs are ~2^-61 per row pair, small

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Kernels}
 import org.apache.spark.sql.functions._
 
 /** Robots Exclusion Protocol (RFC 9309) evaluation at corpus scale —
@@ -11,13 +11,13 @@ import org.apache.spark.sql.functions._
   * host) while the URL side is the corpus. [[filter]] therefore:
   *
   *  1. parses the robots side into rule rows (codegen
-  *     [[org.apache.spark.sql.RobotsParse]]), selects the agent's rule
+  *     the `robots_parse` kernel), selects the agent's rule
   *     group per host (the named group when one exists, else the `*`
   *     group — RFC 9309 §2.2.1), and packs each host's rules into ONE
   *     array row — a dimension-only aggregation;
   *  2. broadcast-joins that one-row-per-host table to the URLs and
   *     decides each URL in a PURE PROJECTION: match the rules with the
-  *     codegen glob ([[org.apache.spark.sql.RobotsMatch]]), pick the
+  *     codegen glob (the `robots_match` kernel), pick the
   *     most specific match (longest pattern; allow wins ties — the
   *     published Google semantics) with one `array_max` over structs.
   *
@@ -31,19 +31,14 @@ object Robots {
   /** Parsed rule rows: (host, agent, allow, pattern) — one per rule
     * per agent token, RFC 9309 grouping. */
   def rules(robots: DataFrame, hostCol: String, textCol: String): DataFrame = {
-    import org.apache.spark.sql.{GraftBridge, RobotsParse}
-    val parsed = GraftBridge.column(RobotsParse(GraftBridge.expression(
-      coalesce(col(textCol), lit("")))))
+    val parsed = Kernels.robotsParse(coalesce(col(textCol), lit("")))
     robots.select(col(hostCol).as("host"), explode(parsed).as("r"))
       .select(col("host"), col("r.agent").as("agent"),
         col("r.allow").as("allow"), col("r.pattern").as("pattern"))
   }
 
-  private def robotsMatch(path: Column, pattern: Column): Column = {
-    import org.apache.spark.sql.{GraftBridge, RobotsMatch}
-    GraftBridge.column(RobotsMatch(
-      GraftBridge.expression(path), GraftBridge.expression(pattern)))
-  }
+  private def robotsMatch(path: Column, pattern: Column): Column =
+    Kernels.robotsMatch(path, pattern)
 
   /** URLs + `allowed` (+ `robots_rule`, the winning pattern or NULL)
     * for `agent`, honoring each host's robots.txt. `urls` keeps all
@@ -87,10 +82,8 @@ object Robots {
     * one. Dimension-sized, like [[rules]]. */
   def crawlDelays(robots: DataFrame, hostCol: String, textCol: String,
                   agent: String): DataFrame = {
-    import org.apache.spark.sql.{GraftBridge, RobotsCrawlDelays}
     val agentL = agent.toLowerCase(java.util.Locale.ROOT)
-    val parsed = GraftBridge.column(RobotsCrawlDelays(GraftBridge.expression(
-      coalesce(col(textCol), lit("")))))
+    val parsed = Kernels.robotsCrawlDelays(coalesce(col(textCol), lit("")))
     robots.select(col(hostCol).as("host"),
         posexplode(parsed).as(Seq("__i", "d")))
       .select(col("host"), col("d.agent").as("agent"),

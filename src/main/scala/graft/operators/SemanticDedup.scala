@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, DotLongs, GraftBridge}
+import org.apache.spark.sql.{DataFrame, Kernels}
 import org.apache.spark.sql.functions._
 
 /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -42,8 +42,7 @@ object SemanticDedup {
 
   private def dotCol(a: org.apache.spark.sql.Column,
                      b: org.apache.spark.sql.Column) =
-    GraftBridge.column(DotLongs(
-      GraftBridge.expression(a), GraftBridge.expression(b)))
+    Kernels.dotLongs(a, b)
 
   /** [[dedup]] with `k` DERIVED from the corpus instead of hand-picked:
     * k = ⌈n / targetBlockSize⌉, the scaling rule from the scaladoc made

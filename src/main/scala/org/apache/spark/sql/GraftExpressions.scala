@@ -1,110 +1,600 @@
 package org.apache.spark.sql
 
+import org.apache.commons.lang3.ClassUtils
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, BinaryType, BooleanType, DataType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions backing graft's custom functions. They live
+/* Native Catalyst expressions backing graft's custom functions. They live
   * in this package because `AbstractDataType` (the `ExpectsInputTypes`
   * contract) is `private[sql]` in Spark 4; the algorithm bodies stay in
   * `graft.functions` as public static methods the generated Java calls.
   * Codegen'd — these stay inside whole-stage codegen, unlike a Scala UDF
   * which forces a serialization boundary per row.
+  *
+  * Almost every kernel is one static call, so it is one [[Kernel]] entry
+  * in the [[Kernels]] registry, run by the one generic [[KernelCall]]
+  * expression; SQL registration ([[GraftSqlFunctions]]) and the Column
+  * API (`Kernels.x(cols, consts)`) derive from the entries. Hand-written
+  * below the registry: the aggregate [[CollectSmallest]],
+  * [[SortedLongJaccard]] (its method depends on the input types) and
+  * [[MultiMatch]] (its DFA builds lazily, once per plan reference).
   */
-case class JaroWinklerSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
 
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, StringType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "jaro_winkler"
+/** A constant argument of a kernel, fixed at plan time.
+  *
+  * @param cls      its JVM type: `Int`, `Long`, `Double` and `Boolean`
+  *                 inline into the generated Java as literals, anything
+  *                 else (arrays, functions) rides as a reference object
+  * @param default  value when a Column-API or SQL caller omits it
+  * @param sql      whether SQL may pass it (as a literal integer);
+  *                 otherwise SQL always uses `default`
+  * @param leading  passed before the column arguments in the call
+  */
+final case class KernelConst(name: String, cls: Class[_], default: Option[Any] = None,
+                       sql: Boolean = true, leading: Boolean = false) {
+  def accepts(v: Any): Boolean = ClassUtils.primitiveToWrapper(cls).isInstance(v)
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    graft.functions.JaroWinkler.similarity(
-      a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
+  /** Java source for the value `v` in generated code. */
+  def javaArg(ctx: CodegenContext, v: Any): String = v match {
+    case l: Long => s"${l}L"
+    case x @ (_: Int | _: Double | _: Boolean) => x.toString
+    case ref => ctx.addReferenceObj(name, ref, cls.getCanonicalName)
+  }
+}
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.JaroWinkler.similarity($a, $b)")
+/** One registry entry: a public static method `graft.functions.<call>`
+  * taking the column values (as their Catalyst internal types) and the
+  * constants, in [[callArgs]] order.
+  *
+  * @param mayReturnNull the kernel can return NULL for non-NULL input
+  *                      (unrecognized or malformed data): the result is
+  *                      always nullable; otherwise it is nullable exactly
+  *                      when an input is. NULL input always gives NULL.
+  * @param usage         SQL usage text; `null` when not SQL-callable
+  * @param check         argument checks on the constants
+  */
+final class Kernel private[sql] (
+    val name: String, val inputs: Seq[DataType], val result: DataType, call: String,
+    val mayReturnNull: Boolean, val consts: Seq[KernelConst], val usage: String,
+    check: Seq[Any] => Unit) extends Serializable {
+  val owner: String = "graft.functions." + call.substring(0, call.lastIndexOf('.'))
+  val method: String = call.substring(call.lastIndexOf('.') + 1)
+  val key: String = s"$name/${inputs.length}"
+  require(usage == null || consts.forall(c =>
+      if (c.sql) c.cls == classOf[Int] else c.default.isDefined),
+    s"$name: SQL passes only integer constants; the others need a default")
+
+  /** SQL argument counts. */
+  def sqlMin: Int = inputs.length + consts.count(c => c.sql && c.default.isEmpty)
+  def sqlMax: Int = inputs.length + consts.count(_.sql)
+
+  /** The kernel over `args`: its first `inputs.length` are the input
+    * Columns, the rest constants; omitted trailing constants take their
+    * defaults. */
+  def apply(args: Any*): Column = {
+    val (cols, vals) = args.splitAt(inputs.length)
+    GraftBridge.column(expr(cols.map {
+      case c: Column => GraftBridge.expression(c)
+      case other => throw new IllegalArgumentException(s"$name: input $other is not a Column")
+    }, vals))
+  }
+
+  def expr(children: Seq[Expression], vals: Seq[Any]): KernelCall =
+    KernelCall(this, children, vals ++ consts.drop(vals.length).map(c =>
+      c.default.getOrElse(throw new IllegalArgumentException(s"$name: missing ${c.name}"))))
+
+  private[sql] def validate(children: Seq[Expression], vals: Seq[Any]): Unit = {
+    require(children.length == inputs.length,
+      s"$name takes ${inputs.length} inputs, got ${children.length}")
+    require(vals.length == consts.length && consts.zip(vals).forall { case (c, v) => c.accepts(v) },
+      s"$name takes constants ${consts.map(c => s"${c.name}: ${c.cls.getSimpleName}")
+        .mkString("(", ", ", ")")}, got ${vals.mkString("(", ", ", ")")}")
+    check(vals)
+  }
+
+  /** The call's argument list: leading constants, inputs, other constants. */
+  def callArgs[A](children: Seq[A], vals: Seq[A]): Seq[A] = {
+    val (lead, rest) = consts.zip(vals).partition(_._1.leading)
+    lead.map(_._2) ++ children ++ rest.map(_._2)
+  }
+
+  /** The static method, for interpreted evaluation. */
+  @transient lazy val staticMethod: java.lang.reflect.Method =
+    Class.forName(owner).getMethod(method,
+      callArgs(inputs.map(CodeGenerator.javaClass), consts.map(_.cls)): _*)
+
+  override def toString: String = s"$owner.$method"
+
+  // one instance per entry, also after deserialization
+  private def readResolve(): AnyRef = Kernels.byKey(key)
+}
+
+/** One kernel call. Codegen emits `owner.method(args)` with scalar
+  * constants inlined; `eval` (constant folding, interpreted mode) invokes
+  * the same method reflectively. Constants compare by value, arrays
+  * included, so equal kernels canonicalize and share subexpressions. */
+case class KernelCall(kernel: Kernel, children: Seq[Expression], consts: Seq[Any])
+    extends Expression with ExpectsInputTypes {
+  kernel.validate(children, consts)
+
+  override def inputTypes: Seq[AbstractDataType] = kernel.inputs
+  override def dataType: DataType = kernel.result
+  override def nullable: Boolean = kernel.mayReturnNull || children.exists(_.nullable)
+  override def foldable: Boolean = children.forall(_.foldable)
+  override def prettyName: String = kernel.name
+  override protected def stringArgs: Iterator[Any] = children.iterator ++ consts.iterator
+
+  @transient private lazy val constArray: Array[AnyRef] = consts.map(_.asInstanceOf[AnyRef]).toArray
+  override def equals(other: Any): Boolean = other match {
+    case k: KernelCall => (k eq this) || kernel == k.kernel && children == k.children &&
+      java.util.Arrays.deepEquals(constArray, k.constArray)
+    case _ => false
+  }
+  @transient private lazy val hash =
+    java.util.Objects.hash(kernel.key, children, Int.box(java.util.Arrays.deepHashCode(constArray)))
+  override def hashCode(): Int = hash
+
+  override def eval(input: InternalRow): Any = {
+    val args = new Array[AnyRef](children.length)
+    var i = 0
+    while (i < args.length) {
+      val v = children(i).eval(input)
+      if (v == null) return null
+      args(i) = v.asInstanceOf[AnyRef]
+      i += 1
+    }
+    try kernel.staticMethod.invoke(null, kernel.callArgs(args.toSeq, constArray.toSeq): _*)
+    catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val gens = children.map(_.genCode(ctx))
+    val args = kernel.callArgs(gens.map(_.value.toString),
+      kernel.consts.zip(consts).map { case (c, v) => c.javaArg(ctx, v) })
+    val call = s"${kernel.owner}.${kernel.method}(${args.mkString(", ")})"
+    val javaType = CodeGenerator.javaType(dataType)
+    val assign =
+      if (!kernel.mayReturnNull) s"${ev.value} = $call;"
+      else if (CodeGenerator.isPrimitiveType(dataType)) {
+        // a primitive result that can be NULL comes back boxed; a fresh
+        // name, so two such calls in one projection cannot collide
+        val boxed = ctx.freshName("boxed")
+        s"""${CodeGenerator.boxedType(dataType)} $boxed = $call;
+           |if ($boxed == null) { ${ev.isNull} = true; }
+           |else { ${ev.value} = $boxed.${javaType}Value(); }""".stripMargin
+      } else s"${ev.value} = $call;\n${ev.isNull} = ${ev.value} == null;"
+    if (!nullable) {
+      ev.copy(code = code"""
+        ${gens.map(_.code).mkString("\n")}
+        $javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+        $assign""", isNull = FalseLiteral)
+    } else {
+      // each input is evaluated only once the ones before it are non-NULL
+      val body = children.zip(gens).foldRight(s"${ev.isNull} = false;\n$assign") {
+        case ((c, g), inner) => s"${g.code}\n" + ctx.nullSafeExec(c.nullable, g.isNull)(inner)
+      }
+      ev.copy(code = code"""
+        boolean ${ev.isNull} = true;
+        $javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+        $body""")
+    }
+  }
 
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): JaroWinklerSimilarity =
-    copy(left = newLeft, right = newRight)
+      newChildren: IndexedSeq[Expression]): KernelCall = copy(children = newChildren)
 }
 
-/** Length band with integer boundaries for the thresholded fuzzy join's
-  * ratio filter (round 12) — see JaroWinkler.lengthBand for the
-  * soundness argument. */
-case class FuzzyLengthBand(child: Expression, r: Double)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(r > 0.0 && r < 1.0, s"ratio bound must be in (0, 1), got $r")
+/** The kernel registry: one entry per kernel. Applying an entry builds
+  * its Column (`Kernels.minHashes(hashes, 128)`); SQL-callable entries
+  * (non-null `usage`) register under their name. */
+object Kernels {
+  private val entries = Seq.newBuilder[Kernel]
+  private def kernel(name: String, inputs: Seq[DataType], result: DataType, call: String,
+                     mayReturnNull: Boolean = false, consts: Seq[KernelConst] = Nil,
+                     usage: String = null, check: Seq[Any] => Unit = _ => ()): Kernel = {
+    val k = new Kernel(name, inputs, result, call, mayReturnNull, consts, usage, check)
+    entries += k
+    k
+  }
 
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "fuzzy_length_band"
+  private val S = StringType
+  private val B = BinaryType
+  private val I = IntegerType
+  private val L = LongType
+  private val D = DoubleType
+  private def arr(t: DataType) = ArrayType(t, containsNull = false)
+  private def int(name: String) = KernelConst(name, classOf[Int])
+  private def double(name: String) = KernelConst(name, classOf[Double])
+  private def ref(name: String, cls: Class[_]) = KernelConst(name, cls)
+  private val matrix = classOf[Array[Array[Double]]]
+  private val codebooks = classOf[Array[Array[Array[Double]]]]
+  private val vector = classOf[Array[Double]]
+  private def nonEmptyCentroids: Seq[Any] => Unit = { case Seq(c: Array[_]) =>
+    require(c.nonEmpty, "centroids must be non-empty") }
+  private def nonEmptyCodebooks: Seq[Any] => Unit = { case Seq(c: Array[Array[Array[Double]]]) =>
+    require(c.nonEmpty && c.forall(_.nonEmpty), "codebooks must be non-empty per subspace") }
+  private def sq8Ranges(fn: String): Seq[Any] => Unit = {
+    case Seq(mins: Array[Double], spans: Array[Double]) =>
+      require(mins.nonEmpty && mins.length == spans.length,
+        s"$fn: mins/spans must be non-empty and same length") }
+  private def atLeastOne(what: String): Seq[Any] => Unit = { case Seq(n: Int) =>
+    require(n >= 1, s"$what must be >= 1, got $n") }
+  private def bitsCheck: Seq[Any] => Unit = { case Seq(bits: Int) =>
+    require(bits >= 1 && bits <= 31, s"bits must be in [1, 31], got $bits") }
 
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.JaroWinkler.lengthBandOf(v.asInstanceOf[UTF8String], r)
+  // ---- strings, similarity, dedup --------------------------------------
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.JaroWinkler.lengthBandOf($c, $r)")
+  val jaroWinkler = kernel("jaro_winkler", Seq(S, S), D, "JaroWinkler.similarity",
+    usage = "jaro_winkler(a, b) - Jaro-Winkler similarity in [0,1]")
+  /** Length band with integer boundaries for the thresholded fuzzy join's
+    * ratio filter (see JaroWinkler.lengthBand). */
+  val fuzzyLengthBand = kernel("fuzzy_length_band", Seq(S), I, "JaroWinkler.lengthBandOf",
+    consts = Seq(double("r")), check = { case Seq(r: Double) =>
+      require(r > 0.0 && r < 1.0, s"ratio bound must be in (0, 1), got $r") })
+  /** Occurrence-tagged sorted-prefix signature for the thresholded fuzzy
+    * join: two strings that can reach the JW bound share an entry. */
+  val fuzzySignature = kernel("fuzzy_signature", Seq(S), arr(L), "JaroWinkler.signatureData",
+    consts = Seq(double("frac")), check = { case Seq(frac: Double) =>
+      require(frac > 0.0 && frac <= 1.0, s"overlap fraction must be in (0, 1], got $frac") })
+  val shingleHashes64 = kernel("shingle_hashes64", Seq(S), arr(L),
+    "MinHashKernels.shingleHashes", consts = Seq(int("n")),
+    usage = "shingle_hashes64(text, n) - sorted distinct n-gram shingle hashes",
+    check = { case Seq(n: Int) => require(n >= 1, s"shingle size must be >= 1, got $n") })
+  val minHashes = kernel("minhashes", Seq(ArrayType(L)), arr(L), "MinHashKernels.minHashes",
+    consts = Seq(int("k")), usage = "minhashes(hashes, k) - K-member MinHash signature",
+    check = { case Seq(k: Int) =>
+      require(k >= 1 && k <= 4096, s"signature size must be in [1, 4096], got $k") })
+  val simHash64 = kernel("simhash64", Seq(ArrayType(S)), L, "SimHash.simhash64",
+    usage = "simhash64(tokens) - 64-bit SimHash of a string array")
+  val simHashText = kernel("simhash_text", Seq(S), L, "SimHash.simhashText64",
+    usage = "simhash_text(text) - one-pass lowercase+tokenize+SimHash")
+  val nfcNormalize = kernel("nfc_normalize", Seq(S), S, "TextKernels.nfcNormalize",
+    usage = "nfc_normalize(text) - Unicode NFC normalization (UAX #15)")
+  val cdcBoundaries = kernel("cdc_boundaries", Seq(S), arr(I), "CdcKernels.boundaries",
+    consts = Seq(int("maskBits"), int("minLen"), int("maxLen")),
+    usage = "cdc_boundaries(text, maskBits, minLen, maxLen) - content-defined " +
+      "chunk end offsets (1-based code points; windowed-gear CDC)",
+    check = { case Seq(maskBits: Int, minLen: Int, maxLen: Int) =>
+      require(maskBits >= 1 && maskBits <= 16,
+        s"maskBits must be in [1, 16], got $maskBits")
+      require(minLen >= maskBits,
+        s"minLen ($minLen) must be >= maskBits ($maskBits): the hash window " +
+          "must fit inside the shortest admissible chunk for boundaries to be " +
+          "reset-free (CdcKernels scaladoc)")
+      require(maxLen > minLen, s"maxLen ($maxLen) must be > minLen ($minLen)") })
+  val cmsEstimate = kernel("cms_estimate", Seq(B, S), L, "SketchKernels.cmsEstimate",
+    usage = "cms_estimate(sketch, item) - point estimate from a " +
+      "count_min_sketch binary for a string item")
 
-  override protected def withNewChildInternal(newChild: Expression): FuzzyLengthBand =
-    copy(child = newChild)
+  // ---- text statistics and tokenization ---------------------------------
+
+  val textStats = kernel("text_stats", Seq(S), TextStats.schema, "TextKernels.stats",
+    usage = "text_stats(text) - struct of per-document counts")
+  val repetitionCounts = kernel("repetition_counts", Seq(S), RepetitionCounts.schema,
+    "TextKernels.repetitionCounts",
+    usage = "repetition_counts(text) - struct(n_tokens, n_distinct, top_count)")
+  val gopherCounts = kernel("gopher_counts", Seq(S), GopherCounts.schema,
+    "TextKernels.gopherCounts")
+  val c4Counts = kernel("c4_counts", Seq(S), C4Counts.schema, "TextKernels.c4Counts")
+  val wordNgrams = kernel("word_ngrams", Seq(S), arr(S), "TextKernels.wordNgrams",
+    consts = Seq(int("n")), check = atLeastOne("n"),
+    usage = "word_ngrams(text, n) - distinct space-joined word n-grams, first-occurrence order")
+  val wordNgramsAll = kernel("word_ngrams_all", Seq(S), arr(S), "TextKernels.allWordNgrams",
+    consts = Seq(int("n")), check = atLeastOne("n"),
+    usage = "word_ngrams_all(text, n) - ALL word n-grams in order, duplicates kept")
+  val chunkText = kernel("chunk_text", Seq(S), arr(S), "TextKernels.chunkTokens",
+    consts = Seq(int("maxTokens"), int("overlap")),
+    usage = "chunk_text(text, maxTokens, overlap) - sliding token-window chunks",
+    check = { case Seq(maxTokens: Int, overlap: Int) =>
+      require(maxTokens >= 1, s"maxTokens must be >= 1, got $maxTokens")
+      require(overlap >= 0 && overlap < maxTokens,
+        s"overlap must be in [0, maxTokens), got $overlap") })
+  /** Initial BPE symbol string of a word (see [[graft.operators.Bpe]]). */
+  val bpeInitRepr = kernel("bpe_init_repr", Seq(S), S, "BpeKernels.initRepr")
+  /** Corpus-scale BPE encode; the ranked merges ride as references. */
+  val bpeTokens = kernel("bpe_tokens", Seq(S), arr(S), "BpeKernels.tokens",
+    consts = Seq(ref("mergesA", classOf[Array[String]]), ref("mergesB", classOf[Array[String]])),
+    check = { case Seq(a: Array[String], b: Array[String]) =>
+      require(a.length == b.length, s"merge sides differ: ${a.length} vs ${b.length}") })
+
+  // ---- layout keys ------------------------------------------------------
+
+  val zOrder2 = kernel("zorder2", Seq(I, I), L, "LayoutKernels.morton2",
+    usage = "zorder2(a, b) - 2-D Z-order (Morton) key, signed-order preserving")
+  val zOrderN = kernel("zorder_n", Seq(ArrayType(I)), L, "LayoutKernels.mortonN",
+    consts = Seq(int("k")),
+    usage = "zorder_n(array(b1, ..., bk), k) - N-dim Morton key over bucket coords, 64/k bits each",
+    check = { case Seq(k: Int) => require(k >= 2 && k <= 32, s"k must be in [2, 32], got $k") })
+  val hilbert2 = kernel("hilbert2", Seq(I, I), L, "LayoutKernels.hilbert2",
+    consts = Seq(int("bits")), check = bitsCheck,
+    usage = "hilbert2(x, y, bits) - 2-D Hilbert curve key over [0, 2^bits) bucket coords")
+  val hilbertDecode2 = kernel("unhilbert2", Seq(L), arr(I), "LayoutKernels.unhilbert2Array",
+    consts = Seq(int("bits")), check = bitsCheck,
+    usage = "unhilbert2(key, bits) - inverse Hilbert decode to array(x, y)")
+
+  // ---- vectors, IVF-PQ, SQ8 ---------------------------------------------
+
+  val vectorDot = kernel("vector_dot", Seq(ArrayType(D), ArrayType(D)), D, "VectorKernels.dot",
+    usage = "vector_dot(a, b) - dot product of numeric arrays")
+  val vectorCosine = kernel("vector_cosine", Seq(ArrayType(D), ArrayType(D)), D,
+    "VectorKernels.cosine", usage = "vector_cosine(a, b) - cosine similarity (0 on zero norm)")
+  val vectorL2Normalize = kernel("vector_l2_normalize", Seq(ArrayType(D)), arr(D),
+    "VectorKernels.l2Normalize", usage = "vector_l2_normalize(a) - unit-length copy")
+  val vectorLshBucket = kernel("vector_lsh_bucket", Seq(ArrayType(D)), L, "VectorKernels.lshBucket",
+    consts = Seq(int("nBits"), KernelConst("seed", classOf[Long], Some(42L), sql = false)),
+    usage = "vector_lsh_bucket(a, nBits) - hyperplane-sign LSH bucket",
+    check = { case Seq(nBits: Int, _) =>
+      require(nBits >= 1 && nBits <= 63, s"nBits must be in [1, 63], got $nBits") })
+  val sumIndexedLongs = kernel("sum_indexed", Seq(ArrayType(L), ArrayType(L)), L,
+    "VectorKernels.sumIndexed")
+  val dotLongs = kernel("dot_longs", Seq(ArrayType(L), ArrayType(L)), L, "VectorKernels.dotLongs")
+  val argminSqDist = kernel("argmin_sq_dist", Seq(ArrayType(L), ArrayType(ArrayType(L))), L,
+    "VectorKernels.argminSqDist")
+  /** Top-n nearest centroids by dot product (descending, ties to the
+    * smaller 1-based id): the IVF assignment/probing kernel. */
+  val topCentroids = kernel("top_centroids", Seq(ArrayType(D)), arr(L),
+    "VectorKernels.topCentroids", consts = Seq(ref("centroids", matrix), int("n")),
+    check = { case Seq(c: Array[_], n: Int) =>
+      require(n >= 1, s"n must be >= 1, got $n")
+      require(c.nonEmpty, "centroids must be non-empty") })
+  val centroidResidual = kernel("centroid_residual", Seq(ArrayType(D), L), arr(D),
+    "VectorKernels.centroidResidual", consts = Seq(ref("centroids", matrix)),
+    check = nonEmptyCentroids)
+  val centroidDot = kernel("centroid_dot", Seq(ArrayType(D), L), D, "VectorKernels.centroidDot",
+    consts = Seq(ref("centroids", matrix)), check = nonEmptyCentroids)
+  val pqEncode = kernel("pq_encode", Seq(ArrayType(D)), arr(L), "VectorKernels.pqEncode",
+    consts = Seq(ref("codebooks", codebooks)), check = nonEmptyCodebooks)
+  val pqQueryTable = kernel("pq_query_table", Seq(ArrayType(D)), arr(D),
+    "VectorKernels.pqQueryTable", consts = Seq(ref("codebooks", codebooks)),
+    check = nonEmptyCodebooks)
+  val pqAdc = kernel("pq_adc", Seq(ArrayType(D), ArrayType(L)), D, "VectorKernels.pqAdc",
+    consts = Seq(int("nCodes")), check = atLeastOne("nCodes"))
+  val sq8Encode = kernel("sq8_encode", Seq(ArrayType(D)), B, "VectorKernels.sq8Encode",
+    consts = Seq(ref("mins", vector), ref("spans", vector)), check = sq8Ranges("sq8_encode"))
+  val sq8Decode = kernel("sq8_decode", Seq(B), arr(D), "VectorKernels.sq8Decode",
+    consts = Seq(ref("mins", vector), ref("spans", vector)), check = sq8Ranges("sq8_decode"))
+
+  // ---- media ------------------------------------------------------------
+
+  val imageMeta = kernel("image_meta", Seq(B), ImageMeta.schema, "MediaKernels.imageMeta",
+    mayReturnNull = true,
+    usage = "image_meta(blob) - struct(format, width, height) from the container header")
+  val audioMeta = kernel("audio_meta", Seq(B), AudioMeta.schema, "MediaKernels.audioMeta",
+    mayReturnNull = true, usage = "audio_meta(blob) - struct(format, channels, " +
+      "sample_rate, bits_per_sample, n_frames) from a WAV header")
+  val videoMeta = kernel("video_meta", Seq(B), VideoMeta.schema, "MediaKernels.videoMeta",
+    mayReturnNull = true, usage = "video_meta(blob) - struct(format, timescale, " +
+      "duration, n_tracks) from an MP4/MOV container")
+  val videoTrackStats = kernel("video_track_stats", Seq(B), arr(VideoTrackStats.elementSchema),
+    "MediaKernels.videoTrackStats", mayReturnNull = true)
+  val mjpegFrames = kernel("mjpeg_frames", Seq(B), arr(B), "MediaKernels.mjpegFrames",
+    mayReturnNull = true)
+  val gifFrames = kernel("gif_frames", Seq(B), arr(GifFrames.elementSchema),
+    "GifKernels.frameStats", mayReturnNull = true)
+  /** Per-blob feature decode: the decoder function rides as a reference
+    * and runs inside whole-stage codegen (see MediaKernels.decodeFeatures).
+    * Decoders compare by reference: a structurally identical lambda is a
+    * missed CSE, never a wrong result. */
+  val decodeFeatures = kernel("decode_features", Seq(B), arr(FloatType),
+    "MediaKernels.decodeFeatures", consts = Seq(int("dim"),
+      KernelConst("decoder", classOf[scala.Function2[_, _, _]], leading = true)),
+    check = { case Seq(dim: Int, _) => require(dim >= 1, s"feature dim must be >= 1, got $dim") })
+  val frameChunks = kernel("frame_chunks", Seq(B), arr(FrameChunks.elementSchema),
+    "MediaKernels.frameChunks", consts = Seq(int("frameBytes"), int("stride")),
+    check = { case Seq(frameBytes: Int, stride: Int) =>
+      require(frameBytes >= 1, s"frameBytes must be >= 1, got $frameBytes")
+      require(stride >= 1, s"stride must be >= 1, got $stride") })
+  val dHash64 = kernel("dhash64", Seq(B), L, "PHashKernels.dhash64", mayReturnNull = true,
+    usage = "dhash64(binary) - 64-bit perceptual difference hash of a " +
+      "raster or codec image (P6/P5/BMP; PNG/JPEG/GIF/TIFF since r15, " +
+      "VP8L webp since r16); NULL on undecodable or sub-9x8 input")
+  val audioDhash64 = kernel("audio_dhash64", Seq(B), L, "AudioKernels.energyDhash64",
+    mayReturnNull = true, usage = "audio_dhash64(binary) - 64-bit temporal energy-envelope " +
+      "fingerprint of an audio blob (WAV PCM/G.711/ADPCM, AU, " +
+      "AIFF, FLAC); NULL on undecodable or sub-65-sample input")
+  val videoDhash64 = kernel("video_dhash64", Seq(B), L, "MediaKernels.videoDhash64",
+    mayReturnNull = true, usage = "video_dhash64(binary) - 64-bit temporal luma-envelope " +
+      "fingerprint of a video blob (MJPEG MP4, animated GIF); " +
+      "NULL on undecodable input or < 2 frames")
+  val id3Tags = kernel("id3_tags", Seq(B), graft.functions.Id3Kernels.schema,
+    "Id3Kernels.id3Tags", mayReturnNull = true,
+    usage = "id3_tags(binary) - ID3v2.2/2.3/2.4 + ID3v1 tag extraction as " +
+      "struct(title, artist, album, year); NULL when no tag or damaged v2 framing")
+  val exifMeta = kernel("exif_meta", Seq(B), graft.functions.ExifKernels.schema,
+    "ExifKernels.exifMeta", mayReturnNull = true,
+    usage = "exif_meta(binary) - EXIF metadata from a JPEG APP1 segment or " +
+      "bare TIFF: struct(orientation, datetime, make, model, " +
+      "gps_lat, gps_lon); NULL when no EXIF block or damaged")
+  val fontMeta = kernel("font_meta", Seq(B), graft.functions.FontKernels.schema,
+    "FontKernels.fontMeta", mayReturnNull = true,
+    usage = "font_meta(binary) - web-font triage as struct(format, family, " +
+      "n_glyphs, n_tables) for TTF/OTF/TTC/WOFF (WOFF2 header-only); " +
+      "NULL on malformed framing")
+
+  // ---- crawl: WARC, HTTP, robots, sitemaps, feeds, URLs, HTML -----------
+
+  val warcRecords = kernel("warc_records", Seq(B), WarcRecords.schema, "WarcKernels.records",
+    mayReturnNull = true, usage = "warc_records(blob) - WARC (ISO 28500) records as " +
+      "array<struct(warc_type, target_uri, content_type, payload)>; " +
+      "gzip inflated; NULL for malformed archives")
+  val httpParts = kernel("http_parts", Seq(B), HttpParts.schema, "WarcKernels.httpParts",
+    mayReturnNull = true, usage = "http_parts(payload) - struct(status, content_type, " +
+      "body) of an HTTP message payload; NULL when not HTTP")
+  val decodeText = kernel("decode_text", Seq(B), DecodeText.schema, "EncodingKernels.decodeText",
+    usage = "decode_text(binary) - struct(text, encoding, n_fallback_bytes): " +
+      "BOM-aware encoding sniff, strict UTF-8 validation, windows-1252 fallback; fail-open")
+  val robotsParse = kernel("robots_parse", Seq(S), RobotsParse.schema, "RobotsKernels.parse",
+    usage = "robots_parse(text) - robots.txt rule rows " +
+      "array<struct(agent, allow, pattern)> per RFC 9309 grouping")
+  val robotsSitemaps = kernel("robots_sitemaps", Seq(S), arr(S), "RobotsKernels.sitemaps",
+    usage = "robots_sitemaps(text) - Sitemap: URLs of a robots.txt in file " +
+      "order (group-independent per RFC 9309)")
+  val robotsCrawlDelays = kernel("robots_crawl_delays", Seq(S), arr(StructType(Seq(
+      StructField("agent", S, nullable = false), StructField("delay", D, nullable = false)))),
+    "RobotsKernels.crawlDelays", usage = "robots_crawl_delays(text) - Crawl-delay " +
+      "directives with group attribution: array<struct(agent, delay)>")
+  val robotsMatch = kernel("robots_match", Seq(S, S), BooleanType, "RobotsKernels.matches",
+    usage = "robots_match(path, pattern) - RFC 9309 robots path match " +
+      "(prefix with * wildcards, trailing $ anchor)")
+  val sitemapEntries = kernel("sitemap_entries", Seq(S), arr(graft.functions.SitemapKernels.schema),
+    "SitemapKernels.entries", mayReturnNull = true,
+    usage = "sitemap_entries(xml) - sitemap/sitemap-index frontier entries " +
+      "array<struct(kind, loc, lastmod)>; NULL on malformed framing")
+  val feedEntries = kernel("feed_entries", Seq(S), arr(graft.functions.FeedKernels.schema),
+    "FeedKernels.feedEntries", mayReturnNull = true,
+    usage = "feed_entries(xml) - RSS/Atom feed entries as array<struct(" +
+      "kind, title, link, date, summary)>; NULL on malformed framing")
+  val urlResolve = kernel("url_resolve", Seq(S, S), S, "UrlKernels.resolve", mayReturnNull = true,
+    usage = "url_resolve(base, ref) - RFC 3986 reference resolution to an " +
+      "absolute URL; NULL for an unparseable base")
+  val urlParts = kernel("url_parts", Seq(S), UrlParts.schema, "UrlKernels.urlParts",
+    mayReturnNull = true, usage = "url_parts(url) - canonicalized URL and parts " +
+      "struct(normalized, scheme, host, port, path, query, apex); NULL when unparseable")
+  val htmlMeta = kernel("html_meta", Seq(S), graft.functions.HtmlKernels.metaSchema,
+    "HtmlKernels.htmlMeta", mayReturnNull = true,
+    usage = "html_meta(html) - page-head metadata as struct(title, " +
+      "description, og_title, og_description, og_image, canonical, " +
+      "lang); best-effort, NULL fields when absent")
+  val htmlLinks = kernel("html_links", Seq(S), arr(S), "HtmlKernels.htmlLinks",
+    usage = "html_links(html) - href values of <a>/<area> tags in document " +
+      "order, entity-decoded; script/style/comment content skipped")
+  val htmlExtract = kernel("html_extract", Seq(S), S, "HtmlKernels.htmlExtract",
+    usage = "html_extract(html) - plain text from HTML: tags stripped with " +
+      "block separation, script/style/comments dropped, character " +
+      "references decoded, whitespace collapsed")
+  val htmlTables = kernel("html_tables", Seq(S), arr(graft.functions.TableKernels.cellSchema),
+    "TableKernels.tables", mayReturnNull = true,
+    usage = "html_tables(html) - <table> cells as flat (table, row, col, " +
+      "text) rows; NULL on an unclosed (truncated) table")
+  val jsonPaths = kernel("json_paths", Seq(S), arr(graft.functions.JsonShapeKernels.rowSchema),
+    "JsonShapeKernels.paths", mayReturnNull = true,
+    usage = "json_paths(doc) - every JSON node as (path, jtype) rows, array " +
+      "elements merged under [*]; NULL on malformed documents")
+
+  // ---- archives, documents, mail ----------------------------------------
+
+  val avroMeta = kernel("avro_meta", Seq(B), graft.functions.AvroKernels.schema,
+    "AvroKernels.meta", mayReturnNull = true,
+    usage = "avro_meta(binary) - Avro container struct(schema_json, codec, " +
+      "n_blocks, n_records) from frame arithmetic; NULL on malformed framing")
+  val tarEntries = kernel("tar_entries", Seq(B), arr(graft.functions.TarKernels.entrySchema),
+    "TarKernels.entries", mayReturnNull = true,
+    usage = "tar_entries(binary) - TAR (ustar) member listing " +
+      "array<struct(name, typeflag, size)>, header checksums verified; NULL on malformed framing")
+  val tarExtract = kernel("tar_extract", Seq(B, S), B, "TarKernels.extract", mayReturnNull = true,
+    usage = "tar_extract(binary, name) - one regular member's bytes; NULL " +
+      "on missing name or malformed archive")
+  val zipEntries = kernel("zip_entries", Seq(B), arr(graft.functions.ZipKernels.entrySchema),
+    "ZipKernels.entries", mayReturnNull = true,
+    usage = "zip_entries(binary) - ZIP central-directory listing " +
+      "array<struct(name, method, compressed_size, size)>; NULL on " +
+      "malformed/zip64/encrypted archives")
+  val zipExtract = kernel("zip_extract", Seq(B, S), B, "ZipKernels.extract", mayReturnNull = true,
+    usage = "zip_extract(binary, name) - one entry's bytes, CRC32+size " +
+      "verified; NULL on missing name or any mismatch")
+  val xlsxCells = kernel("xlsx_cells", Seq(B), arr(graft.functions.XlsxKernels.cellSchema),
+    "XlsxKernels.cells", mayReturnNull = true, consts = Seq(int("sheet").copy(default = Some(1))),
+    usage = "xlsx_cells(binary[, sheet]) - XLSX worksheet cells as flat " +
+      "(row, col, value) rows via sharedStrings (sheet 1-based, " +
+      "default 1); NULL on malformed archives or an absent sheet")
+  val xlsCells = kernel("xls_cells", Seq(B), arr(graft.functions.XlsxKernels.cellSchema),
+    "XlsKernels.cells", mayReturnNull = true, consts = Seq(int("sheet").copy(default = Some(1))),
+    usage = "xls_cells(binary[, sheet]) - legacy .xls (BIFF8) worksheet " +
+      "cells as flat (row, col, value) rows (sheet 1-based, " +
+      "default 1); NULL on damaged/encrypted/BIFF5 input or an absent sheet")
+  val cfbEntries = kernel("cfb_entries", Seq(B), arr(CfbEntries.elementSchema),
+    "CfbKernels.entries", mayReturnNull = true,
+    usage = "cfb_entries(binary) - OLE2/Compound File directory listing as " +
+      "array of struct(name, entry_type, size); NULL on malformed input")
+  val docText = kernel("doc_text", Seq(B), S, "CfbKernels.docText", mayReturnNull = true,
+    usage = "doc_text(binary) - legacy Word .doc text (non-complex, " +
+      "unencrypted WordDocument stream); NULL otherwise")
+  val pptText = kernel("ppt_text", Seq(B), S, "PptKernels.pptText", mayReturnNull = true,
+    usage = "ppt_text(binary) - legacy PowerPoint .ppt slide text " +
+      "(TextCharsAtom/TextBytesAtom walk, newline-joined); NULL " +
+      "for encrypted or malformed decks")
+  val pptxText = kernel("pptx_text", Seq(B), S, "PptxKernels.pptxText", mayReturnNull = true,
+    usage = "pptx_text(binary) - PPTX slide text (a:t runs per slide part, " +
+      "paragraphs as lines); NULL for damaged archives or non-presentations")
+  val emlParts = kernel("eml_parts", Seq(B), graft.functions.EmlKernels.schema,
+    "EmlKernels.emlParts", mayReturnNull = true,
+    usage = "eml_parts(binary) - EML/MIME message extraction: struct(from, " +
+      "to, subject, date, n_parts, text) with RFC 2047 header words, " +
+      "quoted-printable/base64 bodies, multipart walk; NULL for " +
+      "non-mail or undecodable input")
+  val mboxMessages = kernel("mbox_messages", Seq(B), arr(B), "EmlKernels.mboxMessages",
+    mayReturnNull = true, usage = "mbox_messages(binary) - mbox archive split into " +
+      "per-message binaries ('From ' envelopes dropped, mboxrd '>From ' " +
+      "unescaped); NULL for non-mbox input")
+  val rtfText = kernel("rtf_text", Seq(B), S, "RtfKernels.rtfText", mayReturnNull = true,
+    usage = "rtf_text(binary) - RTF text extraction (destination skipping, " +
+      "cp1252 + \\uN unicode, symbol words); NULL for non-RTF or damaged input")
+  val sevenZipMeta = kernel("sevenzip_meta", Seq(B), SevenZipMeta.schema,
+    "ArchiveKernels.sevenZipMeta", mayReturnNull = true,
+    usage = "sevenzip_meta(binary) - 7z triage: CRC-verified struct(" +
+      "version, next_header_size, encoded, pack_bytes); NULL on malformed framing")
+  val rarMeta = kernel("rar_meta", Seq(B), RarMeta.schema, "ArchiveKernels.rarMeta",
+    mayReturnNull = true, usage = "rar_meta(binary) - RAR4/RAR5 triage: CRC-verified " +
+      "block walk as struct(version, n_blocks, n_files, encrypted); NULL on malformed framing")
+  val pdfImages = kernel("pdf_images", Seq(B), arr(graft.functions.PdfKernels.imageSchema),
+    "PdfKernels.images", mayReturnNull = true,
+    usage = "pdf_images(binary) - embedded PDF image XObjects as array of " +
+      "struct(obj, format, width, height, data): jpeg payloads " +
+      "verbatim, RGB/gray rasters as P6/P5, others surfaced as " +
+      "'unsupported'; NULL on malformed/undecryptable documents")
+  val parquetMeta = kernel("parquet_meta", Seq(B), ParquetMeta.schema, "ParquetKernels.meta",
+    mayReturnNull = true, usage = "parquet_meta(binary) - footer-only parquet triage: " +
+      "struct(version, num_rows, n_row_groups, n_schema_elements); NULL on malformed framing")
+  val pdfMeta = kernel("pdf_meta", Seq(B), PdfMeta.schema, "PdfKernels.meta",
+    mayReturnNull = true, usage = "pdf_meta(binary) - PDF triage struct(version, " +
+      "n_pages, encrypted); NULL on malformed/unsupported framing")
+  val pdfText = kernel("pdf_text", Seq(B), S, "PdfKernels.text", mayReturnNull = true,
+    usage = "pdf_text(binary) - text-showing-operator extraction across the " +
+      "page tree; NULL for encrypted/unsupported documents")
+
+  // ---- compression ------------------------------------------------------
+
+  val gunzip = kernel("gunzip", Seq(B), B, "WarcKernels.gunzipAll", mayReturnNull = true,
+    usage = "gunzip(binary) - concatenated-member gzip inflate, CRC/ISIZE " +
+      "verified, zip-bomb-guarded; NULL on any corruption")
+  val zstdDecompress = kernel("zstd_decompress", Seq(B), B, "ZstdKernels.decompress",
+    mayReturnNull = true, usage = "zstd_decompress(binary[, dict]) - Zstandard decompression " +
+      "(RFC 8878: multi-frame, checksum-verified; structured or " +
+      "raw dictionaries via the 2-arg form, declared-but-missing " +
+      "dictionaries refused); NULL on any corruption")
+  val zstdDecompressDict = kernel("zstd_decompress", Seq(B, B), B, "ZstdKernels.decompress",
+    mayReturnNull = true, usage = zstdDecompress.usage)
+  val brotliDecompress = kernel("brotli_decompress", Seq(B), B, "BrotliKernels.decompress",
+    mayReturnNull = true, usage = "brotli_decompress(binary) - Brotli decompression " +
+      "(RFC 7932: full format incl. static dictionary + transforms); NULL on any corruption")
+  val lzwDecompress = kernel("lzw_decompress", Seq(B), B, "LzwKernels.decompress",
+    mayReturnNull = true, usage = "lzw_decompress(binary) - Unix compress .Z (LZW) " +
+      "decompression (block + non-block modes, maxbits 9..16); NULL on any corruption")
+  val lzwCompress = kernel("lzw_compress", Seq(B), B, "LzwKernels.compress",
+    consts = Seq(KernelConst("maxbits", classOf[Int], Some(16), sql = false),
+      KernelConst("clearEvery", classOf[Int], Some(0), sql = false)),
+    usage = "lzw_compress(binary) - Unix compress .Z (LZW) block-mode " +
+      "compression, maxbits 16 (reference-decoder-validated)")
+  val lz4Decompress = kernel("lz4_decompress", Seq(B), B, "Lz4Kernels.decompress",
+    mayReturnNull = true, usage = "lz4_decompress(binary) - LZ4 frame decompression " +
+      "(standard + legacy frames, linked blocks, XXH32 verified); NULL on any corruption")
+  val lz4CompressStore = kernel("lz4_compress_store", Seq(B), B, "Lz4Kernels.compressStore",
+    usage = "lz4_compress_store(binary) - LZ4 store-mode frame (64 KB raw " +
+      "blocks + XXH32 content checksum, reference-decoder-validated)")
+
+  val all: Seq[Kernel] = entries.result()
+  private lazy val byKeyMap = all.map(k => k.key -> k).toMap
+  def byKey(key: String): Kernel = byKeyMap(key)
 }
 
-/** Occurrence-tagged sorted-prefix signature for the thresholded fuzzy
-  * join (round 12) — two strings whose char-bag overlap can reach the
-  * JW >= tau bound must share a signature entry (PPJoin prefix lemma);
-  * see JaroWinkler.signature. */
-case class FuzzySignature(child: Expression, frac: Double)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(frac > 0.0 && frac <= 1.0, s"overlap fraction must be in (0, 1], got $frac")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "fuzzy_signature"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.JaroWinkler.signatureData(v.asInstanceOf[UTF8String], frac)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.JaroWinkler.signatureData($c, $frac)")
-
-  override protected def withNewChildInternal(newChild: Expression): FuzzySignature =
-    copy(child = newChild)
-}
-
-/** Distinct 64-bit hashes of the character n-gram shingles of a string.
-  * One O(bytes) pass computing byte-window hashes at char boundaries —
-  * versus the naive `transform(sequence(...), i => xxhash64(substr(t,i,n)))`
-  * formulation, whose per-position `substr` re-seeks from the string start
-  * (O(len²) per document) and whose higher-order transform runs
-  * interpreted per element.
-  */
-case class ShingleHashes64(child: Expression, n: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(n >= 1, s"shingle size must be >= 1, got $n")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "shingle_hashes64"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.MinHashKernels.shingleHashes(v.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.MinHashKernels.shingleHashes($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashes64 =
-    copy(child = newChild)
-}
+// ---- hand-written expressions -------------------------------------------
 
 /** Exact Jaccard similarity of two sorted-distinct long arrays (shingle
   * hash sets) via a single linear merge. When both input types declare
@@ -136,492 +626,6 @@ case class SortedLongJaccard(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedLongJaccard =
-    copy(left = newLeft, right = newRight)
-}
-
-/** K-member MinHash signature over an array of 64-bit shingle hashes:
-  * member k = min over elements of xxh64(element, seed = k). Tight
-  * two-level loop, no boxing, no per-member array pass.
-  */
-case class MinHashes(child: Expression, k: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(k >= 1 && k <= 4096, s"signature size must be in [1, 4096], got $k")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhashes"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.MinHashKernels.minHashes(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashKernels.minHashes($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashes =
-    copy(child = newChild)
-}
-
-case class SimHash64(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.SimHash.simhash64(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SimHash.simhash64($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
-/** One-pass lowercase + whitespace-tokenize + SimHash sketch of text. */
-case class SimHashText(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash_text"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.SimHash.simhashText64(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SimHash.simhashText64($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashText =
-    copy(child = newChild)
-}
-
-/** Single-pass per-document text statistics (see
-  * [[graft.functions.TextKernels]] for the exact counting semantics).
-  */
-case class TextStats(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = TextStats.schema
-  override def prettyName: String = "text_stats"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.TextKernels.stats(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.stats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TextStats =
-    copy(child = newChild)
-}
-
-object ImageMeta {
-  val schema: StructType = StructType(Seq(
-    StructField("format", StringType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false)))
-}
-
-/** Container-header image metadata — (format, width, height) parsed
-  * from the blob's fixed header fields, NULL for unrecognized or
-  * truncated blobs. See [[graft.functions.MediaKernels.imageMeta]].
-  */
-case class ImageMeta(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ImageMeta.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "image_meta"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.MediaKernels.imageMeta(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the kernel can return null for a NON-null input (unknown magic),
-    // so defineCodeGen (which assumes non-null results) doesn't apply
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.MediaKernels.imageMeta($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ImageMeta =
-    copy(child = newChild)
-}
-
-object AudioMeta {
-  val schema: StructType = StructType(Seq(
-    StructField("format", StringType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("sample_rate", IntegerType, nullable = false),
-    StructField("bits_per_sample", IntegerType, nullable = false),
-    StructField("n_frames", LongType, nullable = false)))
-}
-
-/** WAV/RIFF + FLAC audio metadata (codec-free triage tier) — NULL for
-  * unrecognized or truncated blobs. See
-  * [[graft.functions.MediaKernels.audioMeta]].
-  */
-case class AudioMeta(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = AudioMeta.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "audio_meta"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.MediaKernels.audioMeta(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.MediaKernels.audioMeta($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): AudioMeta =
-    copy(child = newChild)
-}
-
-object VideoMeta {
-  val schema: StructType = StructType(Seq(
-    StructField("format", StringType, nullable = false),
-    StructField("timescale", LongType, nullable = false),
-    StructField("duration", LongType, nullable = false),
-    StructField("n_tracks", IntegerType, nullable = false)))
-}
-
-/** ISO-BMFF (MP4/MOV) container metadata — NULL for non-BMFF or corrupt
-  * blobs. See [[graft.functions.MediaKernels.videoMeta]].
-  */
-case class VideoMeta(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = VideoMeta.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "video_meta"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.MediaKernels.videoMeta(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.MediaKernels.videoMeta($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): VideoMeta =
-    copy(child = newChild)
-}
-
-object VideoTrackStats {
-  val elementSchema: StructType = StructType(Seq(
-    StructField("handler", StringType, nullable = true),
-    StructField("timescale", LongType, nullable = true),
-    StructField("duration", LongType, nullable = true),
-    StructField("n_samples", LongType, nullable = true),
-    StructField("total_bytes", LongType, nullable = true)))
-}
-
-/** Per-track ISO-BMFF container stats (keyframe-free video features) —
-  * NULL for non-BMFF blobs, one row per trak otherwise. See
-  * [[graft.functions.MediaKernels.videoTrackStats]].
-  */
-case class VideoTrackStats(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType =
-    ArrayType(VideoTrackStats.elementSchema, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "video_track_stats"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.MediaKernels.videoTrackStats(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.MediaKernels.videoTrackStats($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): VideoTrackStats =
-    copy(child = newChild)
-}
-
-/** MJPEG frame extraction: the ISO-BMFF sample tables (stsd gate, stsz,
-  * stsc, stco/co64) sliced into per-sample byte arrays — each one an
-  * independent baseline JPEG for the existing decode path. See
-  * [[graft.functions.MediaKernels.mjpegFrames]] for the scope contract
-  * (jpeg/mjpa tracks only; structural inconsistency ⇒ NULL blob-wide).
-  */
-case class MjpegFrames(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "mjpeg_frames"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.MediaKernels.mjpegFrames(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.MediaKernels.mjpegFrames($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): MjpegFrames =
-    copy(child = newChild)
-}
-
-object GifFrames {
-  val elementSchema: StructType = StructType(Seq(
-    StructField("x", LongType, nullable = false),
-    StructField("y", LongType, nullable = false),
-    StructField("width", LongType, nullable = false),
-    StructField("height", LongType, nullable = false),
-    StructField("delay_cs", LongType, nullable = false),
-    StructField("disposal", LongType, nullable = false),
-    StructField("transparent_px", LongType, nullable = false),
-    StructField("mean_r", DoubleType, nullable = false),
-    StructField("mean_g", DoubleType, nullable = false),
-    StructField("mean_b", DoubleType, nullable = false)))
-}
-
-/** Animated-GIF per-frame stats: geometry, Graphic Control Extension
-  * delay/disposal/transparency, palette-resolved channel means — one
-  * struct per frame, NULL blob-wide on any structural failure. See
-  * [[graft.functions.GifKernels.frames]] for the scope contract.
-  */
-case class GifFrames(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType =
-    ArrayType(GifFrames.elementSchema, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "gif_frames"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.GifKernels.frameStats(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.GifKernels.frameStats($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): GifFrames =
-    copy(child = newChild)
-}
-
-/** Per-blob media feature decode (round 13): the decoder function —
-  * [[graft.operators.Multimodal.raster]], [[graft.operators.Multimodal.pcm]],
-  * the stub, or a user codec — rides along as an expression reference and
-  * runs INSIDE whole-stage codegen, replacing the `df.rdd.mapPartitions`
-  * barrier the featurize spine used through round 12 (every blob was
-  * deserialized from Tungsten into a GenericRow, copied, and re-encoded
-  * through an ExistingRDD that forfeited codegen and AQE). The decoder
-  * keeps its batch-shaped signature (a real vectorized codec's API); the
-  * engine invokes it with singleton batches — per-blob decode dominates
-  * any batching overhead, and amortized state (codec tables, a model)
-  * belongs in the decoder object itself, which is instantiated once per
-  * plan reference, not per row.
-  *
-  * Equality is reference equality on the decoder (case-class default):
-  * two plans sharing the same decoder `val` canonicalize together; a
-  * structurally-identical lambda does not — the cost is a missed CSE,
-  * never wrong results.
-  */
-case class DecodeFeatures(child: Expression, dim: Int,
-                          decoder: (Seq[Array[Byte]], Int) => Seq[Array[Float]])
-    extends UnaryExpression with ExpectsInputTypes {
-  require(dim >= 1, s"feature dim must be >= 1, got $dim")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def prettyName: String = "decode_features"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.MediaKernels.decodeFeatures(
-      decoder, v.asInstanceOf[Array[Byte]], dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftDecoder", decoder, "scala.Function2")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.MediaKernels.decodeFeatures($ref, $c, $dim)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): DecodeFeatures =
-    copy(child = newChild)
-}
-
-object FrameChunks {
-  val elementSchema: StructType = StructType(Seq(
-    StructField("frame_no", IntegerType, nullable = false),
-    StructField("frame", BinaryType, nullable = false)))
-}
-
-/** Strided fixed-size frame chunks of a blob (round 13): array of
-  * (frame_no, frame) structs cut in place by a codegen kernel, exploded
-  * Spark-side — the Dataset-native replacement for sampleFrames'
-  * `df.rdd.flatMap` barrier. NULL blob → NULL array (explode drops the
-  * row, the old Iterator.empty contract).
-  */
-case class FrameChunks(child: Expression, frameBytes: Int, stride: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(frameBytes >= 1, s"frameBytes must be >= 1, got $frameBytes")
-  require(stride >= 1, s"stride must be >= 1, got $stride")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType =
-    ArrayType(FrameChunks.elementSchema, containsNull = false)
-  override def prettyName: String = "frame_chunks"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.MediaKernels.frameChunks(
-      v.asInstanceOf[Array[Byte]], frameBytes, stride)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.MediaKernels.frameChunks($c, $frameBytes, $stride)")
-
-  override protected def withNewChildInternal(newChild: Expression): FrameChunks =
-    copy(child = newChild)
-}
-
-object RepetitionCounts {
-  val schema: StructType = StructType(Seq(
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("n_distinct", LongType, nullable = false),
-    StructField("top_count", LongType, nullable = false)))
-}
-
-/** One-pass repetition counts (token total, distinct tokens, most
-  * repeated token's count) — see
-  * [[graft.functions.TextKernels.repetitionCounts]]. Ratio composition
-  * stays in column space so the oracle arithmetic is unchanged.
-  */
-case class RepetitionCounts(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = RepetitionCounts.schema
-  override def prettyName: String = "repetition_counts"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.TextKernels.repetitionCounts(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.repetitionCounts($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): RepetitionCounts =
-    copy(child = newChild)
-}
-
-/** Distinct word n-grams (space-joined, first-occurrence order) as a
-  * single-pass codegen kernel — the corpus-scan primitive behind
-  * decontamination and n-gram statistics. NULL text → NULL; fewer than
-  * `n` tokens → empty array. Tokenization is the family-standard
-  * `split(trim(text), "\\s+")` with boundary empties kept.
-  */
-case class WordNgrams(child: Expression, n: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(n >= 1, s"n must be >= 1, got $n")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "word_ngrams"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.TextKernels.wordNgrams(v.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextKernels.wordNgrams($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordNgrams =
-    copy(child = newChild)
-}
-
-/** ALL word n-grams in document order, duplicates kept — the counting
-  * variant of [[WordNgrams]] for language-model frequency estimation.
-  * Same tokenization and empty/short-text contract.
-  */
-case class WordNgramsAll(child: Expression, n: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(n >= 1, s"n must be >= 1, got $n")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "word_ngrams_all"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.TextKernels.allWordNgrams(v.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextKernels.allWordNgrams($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordNgramsAll =
-    copy(child = newChild)
-}
-
-/** Token-window chunking (sliding windows of `maxTokens` whitespace
-  * tokens advancing by `maxTokens - overlap`, re-joined with single
-  * spaces; empty trimmed text -> zero chunks). See
-  * [[graft.functions.TextKernels.chunkTokens]] for the exact
-  * tokenization contract.
-  */
-case class ChunkText(child: Expression, maxTokens: Int, overlap: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(maxTokens >= 1, s"maxTokens must be >= 1, got $maxTokens")
-  require(overlap >= 0 && overlap < maxTokens,
-    s"overlap must be in [0, maxTokens), got $overlap")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "chunk_text"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.TextKernels.chunkTokens(v.asInstanceOf[UTF8String], maxTokens, overlap)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextKernels.chunkTokens($c, $maxTokens, $overlap)")
-
-  override protected def withNewChildInternal(newChild: Expression): ChunkText =
-    copy(child = newChild)
-}
-
-/** Point estimate from a `count_min_sketch` aggregate's binary payload
-  * for a string item — the probe half of the CMS heavy-hitter
-  * calibration ([[graft.functions.SketchKernels.cmsEstimate]] caches
-  * the deserialized sketch per thread, so probing k candidates costs k
-  * hashes + one deserialization).
-  */
-case class CmsEstimate(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, StringType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "cms_estimate"
-
-  override protected def nullSafeEval(sk: Any, item: Any): Any =
-    graft.functions.SketchKernels.cmsEstimate(
-      sk.asInstanceOf[Array[Byte]], item.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (s, i) => s"graft.functions.SketchKernels.cmsEstimate($s, $i)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CmsEstimate =
     copy(left = newLeft, right = newRight)
 }
 
@@ -662,296 +666,6 @@ case class MultiMatch(child: Expression, patterns: Seq[String])
   }
 
   override protected def withNewChildInternal(newChild: Expression): MultiMatch =
-    copy(child = newChild)
-}
-
-object TextStats {
-  val schema: StructType = StructType(Seq(
-    StructField("n_chars", LongType, nullable = false),
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("n_subtokens", LongType, nullable = false),
-    StructField("n_punct", LongType, nullable = false),
-    StructField("hits_en", LongType, nullable = false),
-    StructField("hits_fr", LongType, nullable = false),
-    StructField("hits_es", LongType, nullable = false),
-    StructField("hits_de", LongType, nullable = false)))
-}
-
-/** 2-D Z-order (Morton) key — the data-layout primitive behind
-  * multi-dimensional file skipping: rows sorted by this key cluster
-  * close (x, y) pairs into the same parquet files, so min/max footer
-  * stats prune point/range queries on EITHER column. Signed-order
-  * preserving (see [[graft.functions.LayoutKernels.morton2]]).
-  */
-case class ZOrder2(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(IntegerType, IntegerType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "zorder2"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    graft.functions.LayoutKernels.morton2(
-      a.asInstanceOf[Int], b.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.LayoutKernels.morton2($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ZOrder2 =
-    copy(left = newLeft, right = newRight)
-}
-
-/** N-dimensional Morton key over an array of bucket coordinates — the
-  * multi-column `ZORDER BY` primitive (each dim gets 64/k interleaved
-  * bits; inputs saturate to their bucket range — see
-  * [[graft.functions.LayoutKernels.mortonN]]). `k` is fixed at plan
-  * time by the column builder, so every row interleaves identically.
-  */
-case class ZOrderN(child: Expression, k: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(k >= 2 && k <= 32, s"k must be in [2, 32], got $k")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(IntegerType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "zorder_n"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.LayoutKernels.mortonN(v.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.LayoutKernels.mortonN($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): ZOrderN =
-    copy(child = newChild)
-}
-
-/** 2-D Hilbert curve key of two bucket coordinates — see
-  * [[graft.functions.LayoutKernels.hilbert2]] for the locality
-  * contract. `bits` is fixed at plan time by the column builder.
-  */
-case class Hilbert2(left: Expression, right: Expression, bits: Int)
-    extends BinaryExpression with ExpectsInputTypes {
-  require(bits >= 1 && bits <= 31, s"bits must be in [1, 31], got $bits")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(IntegerType, IntegerType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hilbert2"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    graft.functions.LayoutKernels.hilbert2(
-      a.asInstanceOf[Int], b.asInstanceOf[Int], bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.LayoutKernels.hilbert2($a, $b, $bits)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Hilbert2 =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Inverse Hilbert decode: curve position -> array(x, y) bucket cell
-  * (see [[graft.functions.LayoutKernels.unhilbert2]]).
-  */
-case class HilbertDecode2(child: Expression, bits: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(bits >= 1 && bits <= 31, s"bits must be in [1, 31], got $bits")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "unhilbert2"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.LayoutKernels.unhilbert2Array(v.asInstanceOf[Long], bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.LayoutKernels.unhilbert2Array($c, $bits)")
-
-  override protected def withNewChildInternal(newChild: Expression): HilbertDecode2 =
-    copy(child = newChild)
-}
-
-/** Initial BPE symbol string of a word: code points joined in the
-  * doubled-separator form `\n\n s1 \n\n s2 \n\n` the trainer's
-  * replace-based merge pass operates on (see [[graft.operators.Bpe]]).
-  */
-case class BpeInitRepr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def prettyName: String = "bpe_init_repr"
-
-  override protected def nullSafeEval(v: Any): Any = {
-    val syms = graft.functions.BpeKernels.codepointSymbols(
-      v.asInstanceOf[UTF8String].toString)
-    UTF8String.fromString(syms.mkString("\n\n", "\n\n", "\n\n"))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"""scala.Predef.wrapRefArray(graft.functions.BpeKernels.codepointSymbols($c.toString())).mkString("\\n\\n", "\\n\\n", "\\n\\n"))""")
-
-  override protected def withNewChildInternal(newChild: Expression): BpeInitRepr =
-    copy(child = newChild)
-}
-
-/** Corpus-scale BPE encode: tokenize + apply the ranked merges, one
-  * codegen pass per document ([[graft.functions.BpeKernels.tokens]]).
-  * The merge arrays are driver-built and ride to executors as
-  * expression references.
-  */
-case class BpeTokens(child: Expression, mergesA: Seq[String], mergesB: Seq[String])
-    extends UnaryExpression with ExpectsInputTypes {
-  require(mergesA.length == mergesB.length,
-    s"merge sides differ: ${mergesA.length} vs ${mergesB.length}")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "bpe_tokens"
-
-  @transient private lazy val arrA = mergesA.toArray
-  @transient private lazy val arrB = mergesB.toArray
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.BpeKernels.tokens(v.asInstanceOf[UTF8String], arrA, arrB)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ra = ctx.addReferenceObj("bpeMergesA", arrA, "java.lang.String[]")
-    val rb = ctx.addReferenceObj("bpeMergesB", arrB, "java.lang.String[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.BpeKernels.tokens($c, $ra, $rb)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpeTokens =
-    copy(child = newChild)
-}
-
-case class VectorDot(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "vector_dot"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    graft.functions.VectorKernels.dot(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorKernels.dot($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): VectorDot =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Σ vals(idx(i)) for long arrays — see
-  * [[graft.functions.VectorKernels.sumIndexed]]. */
-case class SumIndexedLongs(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "sum_indexed"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    graft.functions.VectorKernels.sumIndexed(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorKernels.sumIndexed($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SumIndexedLongs =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Exact dot product of quantized long vectors — see
-  * [[graft.functions.VectorKernels.dotLongs]]. */
-case class DotLongs(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "dot_longs"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    graft.functions.VectorKernels.dotLongs(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorKernels.dotLongs($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotLongs =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Deterministic centroid assignment — see
-  * [[graft.functions.VectorKernels.argminSqDist]]. */
-case class ArgminSqDist(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), ArrayType(ArrayType(LongType)))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "argmin_sq_dist"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    graft.functions.VectorKernels.argminSqDist(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorKernels.argminSqDist($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ArgminSqDist =
-    copy(left = newLeft, right = newRight)
-}
-
-case class VectorCosine(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "vector_cosine"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    graft.functions.VectorKernels.cosine(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorKernels.cosine($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): VectorCosine =
-    copy(left = newLeft, right = newRight)
-}
-
-case class VectorL2Normalize(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "vector_l2_normalize"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.VectorKernels.l2Normalize(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VectorKernels.l2Normalize($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): VectorL2Normalize =
     copy(child = newChild)
 }
 
@@ -1051,366 +765,78 @@ case class CollectSmallest(
     copy(child = newChild)
 }
 
-/** Top-n nearest centroids by dot product (descending, ties to the
-  * smaller 1-based centroid id) — the IVF assignment/probing kernel.
-  * The centroid matrix rides along as a codegen reference object, so the
-  * per-row work is one tight primitive loop inside whole-stage codegen
-  * instead of an interpreted `transform` over an array-of-structs
-  * literal.
-  */
-case class TopCentroids(child: Expression, centroids: Array[Array[Double]], n: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(n >= 1, s"n must be >= 1, got $n")
-  require(centroids.nonEmpty, "centroids must be non-empty")
+// ---- schemas of the kernels' struct results -----------------------------
 
-  // the case-class equals/hashCode on Array fields would be reference
-  // identity, making two semantically identical kernels never compare
-  // equal — defeating Catalyst canonicalization / semanticEquals /
-  // common-subexpression elimination. Compare the matrix by value.
-  override def equals(other: Any): Boolean = other match {
-    case t: TopCentroids =>
-      child == t.child && n == t.n &&
-        java.util.Arrays.deepEquals(
-          centroids.asInstanceOf[Array[AnyRef]], t.centroids.asInstanceOf[Array[AnyRef]])
-    case _ => false
-  }
-  override def hashCode(): Int =
-    java.util.Objects.hash(child, Int.box(n),
-      Int.box(java.util.Arrays.deepHashCode(centroids.asInstanceOf[Array[AnyRef]])))
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "top_centroids"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.VectorKernels.topCentroids(v.asInstanceOf[ArrayData], centroids, n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.VectorKernels.topCentroids($c, $ref, $n)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): TopCentroids =
-    copy(child = newChild)
+object ImageMeta {
+  val schema: StructType = StructType(Seq(
+    StructField("format", StringType, nullable = false),
+    StructField("width", IntegerType, nullable = false),
+    StructField("height", IntegerType, nullable = false)))
 }
 
-/** vec − centroids(cid−1): the IVF residual the product quantizer
-  * codes (round 12). Centroid matrix rides as a codegen reference like
-  * [[TopCentroids]]; array-field equality is by value for
-  * canonicalization. */
-case class CentroidResidual(left: Expression, right: Expression,
-                            centroids: Array[Array[Double]])
-    extends BinaryExpression with ExpectsInputTypes {
-  require(centroids.nonEmpty, "centroids must be non-empty")
-
-  override def equals(other: Any): Boolean = other match {
-    case t: CentroidResidual =>
-      left == t.left && right == t.right &&
-        java.util.Arrays.deepEquals(
-          centroids.asInstanceOf[Array[AnyRef]], t.centroids.asInstanceOf[Array[AnyRef]])
-    case _ => false
-  }
-  override def hashCode(): Int = java.util.Objects.hash(left, right,
-    Int.box(java.util.Arrays.deepHashCode(centroids.asInstanceOf[Array[AnyRef]])))
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType), LongType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "centroid_residual"
-
-  override protected def nullSafeEval(v: Any, cid: Any): Any =
-    graft.functions.VectorKernels.centroidResidual(
-      v.asInstanceOf[ArrayData], cid.asInstanceOf[Long], centroids)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    defineCodeGen(ctx, ev,
-      (v, cid) => s"graft.functions.VectorKernels.centroidResidual($v, $cid, $ref)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CentroidResidual =
-    copy(left = newLeft, right = newRight)
+object AudioMeta {
+  val schema: StructType = StructType(Seq(
+    StructField("format", StringType, nullable = false),
+    StructField("channels", IntegerType, nullable = false),
+    StructField("sample_rate", IntegerType, nullable = false),
+    StructField("bits_per_sample", IntegerType, nullable = false),
+    StructField("n_frames", LongType, nullable = false)))
 }
 
-/** dot(vec, centroids(cid−1)) — the q·c_list term of the IVF-PQ
-  * asymmetric score (round 12). */
-case class CentroidDot(left: Expression, right: Expression,
-                       centroids: Array[Array[Double]])
-    extends BinaryExpression with ExpectsInputTypes {
-  require(centroids.nonEmpty, "centroids must be non-empty")
-
-  override def equals(other: Any): Boolean = other match {
-    case t: CentroidDot =>
-      left == t.left && right == t.right &&
-        java.util.Arrays.deepEquals(
-          centroids.asInstanceOf[Array[AnyRef]], t.centroids.asInstanceOf[Array[AnyRef]])
-    case _ => false
-  }
-  override def hashCode(): Int = java.util.Objects.hash(left, right,
-    Int.box(java.util.Arrays.deepHashCode(centroids.asInstanceOf[Array[AnyRef]])))
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType), LongType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "centroid_dot"
-
-  override protected def nullSafeEval(v: Any, cid: Any): Any =
-    graft.functions.VectorKernels.centroidDot(
-      v.asInstanceOf[ArrayData], cid.asInstanceOf[Long], centroids)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    defineCodeGen(ctx, ev,
-      (v, cid) => s"graft.functions.VectorKernels.centroidDot($v, $cid, $ref)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CentroidDot =
-    copy(left = newLeft, right = newRight)
+object VideoMeta {
+  val schema: StructType = StructType(Seq(
+    StructField("format", StringType, nullable = false),
+    StructField("timescale", LongType, nullable = false),
+    StructField("duration", LongType, nullable = false),
+    StructField("n_tracks", IntegerType, nullable = false)))
 }
 
-/** PQ encode: 1-based nearest-codeword id per subspace (min L2 as
-  * argmax dot−½‖w‖², ties to the smaller code — the exact expression
-  * the oracle replays). Round 12. */
-case class PqEncode(child: Expression, codebooks: Array[Array[Array[Double]]])
-    extends UnaryExpression with ExpectsInputTypes {
-  require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
-    "codebooks must be non-empty per subspace")
-
-  override def equals(other: Any): Boolean = other match {
-    case t: PqEncode =>
-      child == t.child && java.util.Arrays.deepEquals(
-        codebooks.asInstanceOf[Array[AnyRef]], t.codebooks.asInstanceOf[Array[AnyRef]])
-    case _ => false
-  }
-  override def hashCode(): Int = java.util.Objects.hash(child,
-    Int.box(java.util.Arrays.deepHashCode(codebooks.asInstanceOf[Array[AnyRef]])))
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "pq_encode"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.VectorKernels.pqEncode(v.asInstanceOf[ArrayData], codebooks)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("codebooks", codebooks, "double[][][]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.VectorKernels.pqEncode($c, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PqEncode =
-    copy(child = newChild)
+object VideoTrackStats {
+  val elementSchema: StructType = StructType(Seq(
+    StructField("handler", StringType, nullable = true),
+    StructField("timescale", LongType, nullable = true),
+    StructField("duration", LongType, nullable = true),
+    StructField("n_samples", LongType, nullable = true),
+    StructField("total_bytes", LongType, nullable = true)))
 }
 
-/** Per-query ADC lookup table over flattened uniform codebooks
-  * (round 12): tab(m·nCodes + c−1) = dot(q_sub(m), w(m)(c−1)). */
-case class PqQueryTable(child: Expression, codebooks: Array[Array[Array[Double]]])
-    extends UnaryExpression with ExpectsInputTypes {
-  require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
-    "codebooks must be non-empty per subspace")
-
-  override def equals(other: Any): Boolean = other match {
-    case t: PqQueryTable =>
-      child == t.child && java.util.Arrays.deepEquals(
-        codebooks.asInstanceOf[Array[AnyRef]], t.codebooks.asInstanceOf[Array[AnyRef]])
-    case _ => false
-  }
-  override def hashCode(): Int = java.util.Objects.hash(child,
-    Int.box(java.util.Arrays.deepHashCode(codebooks.asInstanceOf[Array[AnyRef]])))
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "pq_query_table"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.VectorKernels.pqQueryTable(v.asInstanceOf[ArrayData], codebooks)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("codebooks", codebooks, "double[][][]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.VectorKernels.pqQueryTable($c, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PqQueryTable =
-    copy(child = newChild)
+object GifFrames {
+  val elementSchema: StructType = StructType(Seq(
+    StructField("x", LongType, nullable = false),
+    StructField("y", LongType, nullable = false),
+    StructField("width", LongType, nullable = false),
+    StructField("height", LongType, nullable = false),
+    StructField("delay_cs", LongType, nullable = false),
+    StructField("disposal", LongType, nullable = false),
+    StructField("transparent_px", LongType, nullable = false),
+    StructField("mean_r", DoubleType, nullable = false),
+    StructField("mean_g", DoubleType, nullable = false),
+    StructField("mean_b", DoubleType, nullable = false)))
 }
 
-/** O(M) asymmetric-distance lookup: Σ_m tab(m·nCodes + codes(m)−1)
-  * (round 12) — the per-candidate cost drop from O(dim) to O(M) that
-  * makes PQ the memory/compute tier under IVF. */
-case class PqAdc(left: Expression, right: Expression, nCodes: Int)
-    extends BinaryExpression with ExpectsInputTypes {
-  require(nCodes >= 1, s"nCodes must be >= 1, got $nCodes")
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(DoubleType), ArrayType(LongType))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "pq_adc"
-
-  override protected def nullSafeEval(tab: Any, codes: Any): Any =
-    graft.functions.VectorKernels.pqAdc(
-      tab.asInstanceOf[ArrayData], codes.asInstanceOf[ArrayData], nCodes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (t, c) => s"graft.functions.VectorKernels.pqAdc($t, $c, $nCodes)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqAdc =
-    copy(left = newLeft, right = newRight)
+object FrameChunks {
+  val elementSchema: StructType = StructType(Seq(
+    StructField("frame_no", IntegerType, nullable = false),
+    StructField("frame", BinaryType, nullable = false)))
 }
 
-/** SQ8 scalar-quantization encode: array<double> → one byte per
-  * dimension with the trained per-dimension (min, span). See
-  * [[graft.functions.VectorKernels.sq8Encode]].
-  */
-case class Sq8Encode(child: Expression, mins: Array[Double],
-                     spans: Array[Double])
-    extends UnaryExpression with ExpectsInputTypes {
-  require(mins.nonEmpty && mins.length == spans.length,
-    "sq8_encode: mins/spans must be non-empty and same length")
-
-  override def equals(other: Any): Boolean = other match {
-    case t: Sq8Encode =>
-      child == t.child && java.util.Arrays.equals(mins, t.mins) &&
-        java.util.Arrays.equals(spans, t.spans)
-    case _ => false
-  }
-  override def hashCode(): Int = java.util.Objects.hash(child,
-    Int.box(java.util.Arrays.hashCode(mins)),
-    Int.box(java.util.Arrays.hashCode(spans)))
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "sq8_encode"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.VectorKernels.sq8Encode(v.asInstanceOf[ArrayData], mins, spans)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mr = ctx.addReferenceObj("mins", mins, "double[]")
-    val sr = ctx.addReferenceObj("spans", spans, "double[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.VectorKernels.sq8Encode($c, $mr, $sr)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Sq8Encode =
-    copy(child = newChild)
+object RepetitionCounts {
+  val schema: StructType = StructType(Seq(
+    StructField("n_tokens", LongType, nullable = false),
+    StructField("n_distinct", LongType, nullable = false),
+    StructField("top_count", LongType, nullable = false)))
 }
 
-/** SQ8 decode: codes → reconstructed array<double>. See
-  * [[graft.functions.VectorKernels.sq8Decode]].
-  */
-case class Sq8Decode(child: Expression, mins: Array[Double],
-                     spans: Array[Double])
-    extends UnaryExpression with ExpectsInputTypes {
-  require(mins.nonEmpty && mins.length == spans.length,
-    "sq8_decode: mins/spans must be non-empty and same length")
-
-  override def equals(other: Any): Boolean = other match {
-    case t: Sq8Decode =>
-      child == t.child && java.util.Arrays.equals(mins, t.mins) &&
-        java.util.Arrays.equals(spans, t.spans)
-    case _ => false
-  }
-  override def hashCode(): Int = java.util.Objects.hash(child,
-    Int.box(java.util.Arrays.hashCode(mins)),
-    Int.box(java.util.Arrays.hashCode(spans)))
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "sq8_decode"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.VectorKernels.sq8Decode(v.asInstanceOf[Array[Byte]], mins, spans)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mr = ctx.addReferenceObj("mins", mins, "double[]")
-    val sr = ctx.addReferenceObj("spans", spans, "double[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.VectorKernels.sq8Decode($c, $mr, $sr)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Sq8Decode =
-    copy(child = newChild)
-}
-
-case class VectorLshBucket(child: Expression, nBits: Int, seed: Long)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(nBits >= 1 && nBits <= 63, s"nBits must be in [1, 63], got $nBits")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "vector_lsh_bucket"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.VectorKernels.lshBucket(v.asInstanceOf[ArrayData], nBits, seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.VectorKernels.lshBucket($c, $nBits, ${seed}L)")
-
-  override protected def withNewChildInternal(newChild: Expression): VectorLshBucket =
-    copy(child = newChild)
-}
-
-/** Content-defined chunk boundaries — 1-based code-point END offsets of
-  * the windowed-gear CDC walk. See [[graft.functions.CdcKernels]] for
-  * the algorithm contract (reset-free candidates, greedy min/max walk)
-  * and why `minLen >= maskBits` is load-bearing.
-  */
-case class CdcBoundaries(child: Expression, maskBits: Int, minLen: Int, maxLen: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(maskBits >= 1 && maskBits <= 16,
-    s"maskBits must be in [1, 16], got $maskBits")
-  require(minLen >= maskBits,
-    s"minLen ($minLen) must be >= maskBits ($maskBits): the hash window " +
-      "must fit inside the shortest admissible chunk for boundaries to be " +
-      "reset-free (CdcKernels scaladoc)")
-  require(maxLen > minLen, s"maxLen ($maxLen) must be > minLen ($minLen)")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "cdc_boundaries"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.CdcKernels.boundaries(
-      v.asInstanceOf[UTF8String], maskBits, minLen, maxLen)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.CdcKernels.boundaries($c, $maskBits, $minLen, $maxLen)")
-
-  override protected def withNewChildInternal(newChild: Expression): CdcBoundaries =
-    copy(child = newChild)
-}
-
-/** Unicode NFC normalization (UAX #15 canonical composition) via the
-  * JDK's `java.text.Normalizer` — no Spark built-in exists for this.
-  * Canonically equivalent texts (decomposed `e`+U+0301 vs composed
-  * U+00E9, singleton U+212B vs U+00C5) otherwise hash to DIFFERENT
-  * dedup fingerprints; normalizing first makes fingerprint equality
-  * mean textual equality as a reader sees it. The kernel fast-paths
-  * `Normalizer.isNormalized` (true for all-ASCII, i.e. most corpus
-  * text) to return the input UTF8String unchanged with no allocation.
-  */
-case class NfcNormalize(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def prettyName: String = "nfc_normalize"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.TextKernels.nfcNormalize(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextKernels.nfcNormalize($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
-    copy(child = newChild)
+object TextStats {
+  val schema: StructType = StructType(Seq(
+    StructField("n_chars", LongType, nullable = false),
+    StructField("n_tokens", LongType, nullable = false),
+    StructField("n_subtokens", LongType, nullable = false),
+    StructField("n_punct", LongType, nullable = false),
+    StructField("hits_en", LongType, nullable = false),
+    StructField("hits_fr", LongType, nullable = false),
+    StructField("hits_es", LongType, nullable = false),
+    StructField("hits_de", LongType, nullable = false)))
 }
 
 object WarcRecords {
@@ -1419,31 +845,6 @@ object WarcRecords {
     StructField("target_uri", StringType, nullable = true),
     StructField("content_type", StringType, nullable = true),
     StructField("payload", BinaryType, nullable = false))), containsNull = false)
-}
-
-/** WARC (ISO 28500) blob → record rows; gzip members inflated
-  * (zip-bomb-guarded), NULL for malformed/truncated archives. See
-  * [[graft.functions.WarcKernels.records]].
-  */
-case class WarcRecords(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = WarcRecords.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "warc_records"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.WarcKernels.records(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.WarcKernels.records($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): WarcRecords =
-    copy(child = newChild)
 }
 
 object HttpParts {
@@ -1459,31 +860,6 @@ object HttpParts {
     StructField("encoding_undecoded", StringType, nullable = true)))
 }
 
-/** HTTP message payload → (status, content_type, body,
-  * encoding_undecoded); NULL for non-HTTP payloads. See
-  * [[graft.functions.WarcKernels.httpParts]].
-  */
-case class HttpParts(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = HttpParts.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "http_parts"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.WarcKernels.httpParts(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.WarcKernels.httpParts($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): HttpParts =
-    copy(child = newChild)
-}
-
 object GopherCounts {
   val schema: StructType = StructType(Seq(
     StructField("n_words", LongType, nullable = false),
@@ -1496,26 +872,6 @@ object GopherCounts {
     StructField("stop_hits", LongType, nullable = false)))
 }
 
-/** One-pass Gopher rule counts — see
-  * [[graft.functions.TextKernels.gopherCounts]]. */
-case class GopherCounts(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = GopherCounts.schema
-  override def prettyName: String = "gopher_counts"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.TextKernels.gopherCounts(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextKernels.gopherCounts($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): GopherCounts =
-    copy(child = newChild)
-}
-
 object C4Counts {
   val schema: StructType = StructType(Seq(
     StructField("n_lines", LongType, nullable = false),
@@ -1526,26 +882,6 @@ object C4Counts {
     StructField("clean", StringType, nullable = false)))
 }
 
-/** One-pass C4 rule counts + cleaned text — see
-  * [[graft.functions.TextKernels.c4Counts]]. */
-case class C4Counts(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = C4Counts.schema
-  override def prettyName: String = "c4_counts"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.TextKernels.c4Counts(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextKernels.c4Counts($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): C4Counts =
-    copy(child = newChild)
-}
-
 object DecodeText {
   val schema: StructType = StructType(Seq(
     StructField("text", StringType, nullable = false),
@@ -1553,581 +889,11 @@ object DecodeText {
     StructField("n_fallback_bytes", LongType, nullable = false)))
 }
 
-/** Bytes → (text, encoding, n_fallback_bytes): BOM-aware encoding
-  * sniff with strict-UTF-8 validation and a windows-1252 fallback —
-  * fail-open (ingest never drops a page over encoding). See
-  * [[graft.functions.EncodingKernels.decodeText]].
-  */
-case class DecodeText(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = DecodeText.schema
-  override def prettyName: String = "decode_text"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.EncodingKernels.decodeText(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.EncodingKernels.decodeText($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): DecodeText =
-    copy(child = newChild)
-}
-
-/** Avro object-container triage: (schema_json, codec, n_blocks,
-  * n_records) from frame arithmetic alone — no record decode; NULL on
-  * malformed framing. See [[graft.functions.AvroKernels.meta]].
-  */
-case class AvroMeta(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = graft.functions.AvroKernels.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "avro_meta"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.AvroKernels.meta(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.AvroKernels.meta($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): AvroMeta =
-    copy(child = newChild)
-}
-
-/** JSON structure profile: every node as a (path, jtype) row, array
-  * elements merged under `[*]`; NULL for anything that is not one
-  * valid RFC 8259 document. See
-  * [[graft.functions.JsonShapeKernels.paths]].
-  */
-case class JsonPaths(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType =
-    ArrayType(graft.functions.JsonShapeKernels.rowSchema, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "json_paths"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.JsonShapeKernels.paths(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.JsonShapeKernels.paths($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): JsonPaths =
-    copy(child = newChild)
-}
-
-/** TAR (ustar) member listing: (name, typeflag, size) rows, checksum
-  * verified per header; NULL on any malformed framing. See
-  * [[graft.functions.TarKernels.entries]].
-  */
-case class TarEntries(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType =
-    ArrayType(graft.functions.TarKernels.entrySchema, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "tar_entries"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.TarKernels.entries(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.TarKernels.entries($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): TarEntries =
-    copy(child = newChild)
-}
-
-/** One TAR regular member's bytes by name; NULL on a missing name or
-  * malformed archive. See [[graft.functions.TarKernels.extract]].
-  */
-case class TarExtract(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, StringType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "tar_extract"
-
-  override protected def nullSafeEval(blob: Any, name: Any): Any =
-    graft.functions.TarKernels.extract(
-      blob.asInstanceOf[Array[Byte]], name.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, n) => s"""
-      ${ev.value} = graft.functions.TarKernels.extract($b, $n);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): TarExtract = copy(left = newLeft, right = newRight)
-}
-
-/** ZIP central-directory listing: (name, method, compressed_size,
-  * size) rows in directory order; NULL on malformed/zip64/encrypted
-  * archives. See [[graft.functions.ZipKernels.entries]].
-  */
-case class ZipEntries(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType =
-    ArrayType(graft.functions.ZipKernels.entrySchema, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "zip_entries"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.ZipKernels.entries(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ZipKernels.entries($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): ZipEntries =
-    copy(child = newChild)
-}
-
-/** One ZIP entry's bytes by name — stored/deflate, CRC32 + size
-  * verified, inflate-capped; NULL on a missing name or any mismatch.
-  * See [[graft.functions.ZipKernels.extract]].
-  */
-case class ZipExtract(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, StringType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "zip_extract"
-
-  override protected def nullSafeEval(blob: Any, name: Any): Any =
-    graft.functions.ZipKernels.extract(
-      blob.asInstanceOf[Array[Byte]], name.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, n) => s"""
-      ${ev.value} = graft.functions.ZipKernels.extract($b, $n);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): ZipExtract = copy(left = newLeft, right = newRight)
-}
-
-/** HTML `<table>` cells as flat (table, row, col, text) rows; NULL on
-  * a truncated document (unclosed table). See
-  * [[graft.functions.TableKernels.tables]].
-  */
-case class HtmlTables(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType =
-    ArrayType(graft.functions.TableKernels.cellSchema, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "html_tables"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.TableKernels.tables(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.TableKernels.tables($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): HtmlTables =
-    copy(child = newChild)
-}
-
-/** XLSX (SpreadsheetML) cells as flat (row, col, value) rows from
-  * the `sheet`-th worksheet (1-based, default 1) + sharedStrings;
-  * NULL on truncated/malformed archives or an absent sheet. See
-  * [[graft.functions.XlsxKernels.cells]].
-  */
-case class XlsxCells(child: Expression, sheet: Int = 1)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType =
-    ArrayType(graft.functions.XlsxKernels.cellSchema, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "xlsx_cells"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.XlsxKernels.cells(v.asInstanceOf[Array[Byte]], sheet)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.XlsxKernels.cells($c, $sheet);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): XlsxCells =
-    copy(child = newChild)
-}
-
-/** Legacy `.xls` (BIFF8) worksheet cells (round 17): the same flat
-  * (row, col, value) contract as [[XlsxCells]], decoded from the CFB
-  * `Workbook` stream; NULL for damaged/encrypted/BIFF5 blobs or a
-  * missing sheet. See [[graft.functions.XlsKernels.cells]].
-  */
-case class XlsCells(child: Expression, sheet: Int = 1)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType =
-    ArrayType(graft.functions.XlsxKernels.cellSchema, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "xls_cells"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.XlsKernels.cells(v.asInstanceOf[Array[Byte]], sheet)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.XlsKernels.cells($c, $sheet);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): XlsCells =
-    copy(child = newChild)
-}
-
-/** 64-bit perceptual dHash of an image blob — uncompressed rasters
-  * (P6/P5/BMP) and, since round 15, the codec formats (PNG/JPEG/GIF/
-  * TIFF) through the decoders' pixel-sink mode; NULL for undecodable,
-  * sub-9×8, or malformed input. See
-  * [[graft.functions.PHashKernels.dhash64]].
-  */
-case class DHash64(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "dhash64"
-
-  override protected def nullSafeEval(v: Any): Any = {
-    val h = graft.functions.PHashKernels.dhash64(v.asInstanceOf[Array[Byte]])
-    if (h == null) null else h.longValue()
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      // ctx.freshName, not a fixed identifier: with a non-nullable child
-      // nullSafeCodeGen emits this block unbraced, so two dhash64 calls in
-      // one projection would otherwise declare duplicate locals and kick
-      // the whole stage back to interpreted mode (ADVICE r14).
-      val dh = ctx.freshName("dhash")
-      s"""
-      java.lang.Long $dh = graft.functions.PHashKernels.dhash64($c);
-      if ($dh == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $dh.longValue(); }
-    """
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): DHash64 =
-    copy(child = newChild)
-}
-
-/** 64-bit temporal energy-envelope fingerprint of an audio blob
-  * (WAV PCM/G.711/IMA-ADPCM, AU, AIFF, FLAC) — the dHash trick on the
-  * time axis; NULL for undecodable blobs or streams shorter than 65
-  * samples. See [[graft.functions.AudioKernels.energyDhash64]].
-  */
-case class AudioDhash64(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "audio_dhash64"
-
-  override protected def nullSafeEval(v: Any): Any = {
-    val h = graft.functions.AudioKernels.energyDhash64(v.asInstanceOf[Array[Byte]])
-    if (h == null) null else h.longValue()
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val dh = ctx.freshName("adhash")
-      s"""
-      java.lang.Long $dh = graft.functions.AudioKernels.energyDhash64($c);
-      if ($dh == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $dh.longValue(); }
-    """
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): AudioDhash64 =
-    copy(child = newChild)
-}
-
-/** 64-bit temporal luma-envelope fingerprint of a video blob (MJPEG
-  * MP4 / animated GIF); NULL for undecodable containers, any
-  * undecodable frame, or fewer than 2 frames. See
-  * [[graft.functions.MediaKernels.videoDhash64]].
-  */
-case class VideoDhash64(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "video_dhash64"
-
-  override protected def nullSafeEval(v: Any): Any = {
-    val h = graft.functions.MediaKernels.videoDhash64(v.asInstanceOf[Array[Byte]])
-    if (h == null) null else h.longValue()
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val dh = ctx.freshName("vdhash")
-      s"""
-      java.lang.Long $dh = graft.functions.MediaKernels.videoDhash64($c);
-      if ($dh == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $dh.longValue(); }
-    """
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): VideoDhash64 =
-    copy(child = newChild)
-}
-
 object CfbEntries {
   val elementSchema: StructType = StructType(Seq(
     StructField("name", StringType, nullable = false),
     StructField("entry_type", IntegerType, nullable = false),
     StructField("size", LongType, nullable = false)))
-}
-
-/** OLE2 / Compound File Binary member listing (round 16): flat
-  * directory entries as struct(name, entry_type, size) — entry_type
-  * 1 = storage, 2 = stream, 5 = root; NULL blob-wide on any
-  * structural failure. See [[graft.functions.CfbKernels.entries]].
-  */
-case class CfbEntries(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType =
-    ArrayType(CfbEntries.elementSchema, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "cfb_entries"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.CfbKernels.entries(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.CfbKernels.entries($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): CfbEntries =
-    copy(child = newChild)
-}
-
-/** Legacy `.doc` text (round 16): the WordDocument stream's
-  * contiguous [fcMin, fcMax) range of a NON-COMPLEX, unencrypted
-  * Word file; NULL otherwise. See
-  * [[graft.functions.CfbKernels.docText]].
-  */
-case class DocText(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "doc_text"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.CfbKernels.docText(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.CfbKernels.docText($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): DocText =
-    copy(child = newChild)
-}
-
-/** Legacy `.ppt` text (round 17): TextCharsAtom/TextBytesAtom
-  * contents of the PowerPoint Document record tree, newline-joined;
-  * NULL for encrypted (CryptSession10Container) or malformed decks.
-  * See [[graft.functions.PptKernels.pptText]].
-  */
-case class PptText(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "ppt_text"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.PptKernels.pptText(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.PptKernels.pptText($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): PptText =
-    copy(child = newChild)
-}
-
-/** PPTX slide text (round 17): `<a:t>` runs of `ppt/slides/slideN.xml`
-  * in part order, paragraphs as lines, slides blank-line-separated;
-  * NULL for damaged archives or non-presentations.
-  * See [[graft.functions.PptxKernels.pptxText]].
-  */
-case class PptxText(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "pptx_text"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.PptxKernels.pptxText(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.PptxKernels.pptxText($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): PptxText =
-    copy(child = newChild)
-}
-
-/** ID3 tag extraction (round 17): struct(title, artist, album, year)
-  * from ID3v2.2/2.3/2.4 text frames (unsynchronization reversed,
-  * encodings 0-3) with ID3v1 per-field fallback; NULL when no tag is
-  * present or the v2 framing is damaged.
-  * See [[graft.functions.Id3Kernels.id3Tags]].
-  */
-case class Id3Tags(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = graft.functions.Id3Kernels.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "id3_tags"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.Id3Kernels.id3Tags(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Id3Kernels.id3Tags($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): Id3Tags =
-    copy(child = newChild)
-}
-
-/** EML/MIME message extraction (round 17): struct(from, to, subject,
-  * date, n_parts, text) — RFC 2047 header words, RFC 2045 transfer
-  * encodings, RFC 2046 multipart walk with text/html parts routed
-  * through the crawl tier's HTML extractor; NULL for non-mail or
-  * undecodable input. See [[graft.functions.EmlKernels.emlParts]].
-  */
-case class EmlParts(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = graft.functions.EmlKernels.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "eml_parts"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.EmlKernels.emlParts(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.EmlKernels.emlParts($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): EmlParts =
-    copy(child = newChild)
-}
-
-/** mbox splitting (round 17): `From ` envelope-separated messages as
-  * array<binary> (envelope lines dropped, mboxrd `>From ` unescaped);
-  * each element feeds [[EmlParts]]. NULL for non-mbox input.
-  * See [[graft.functions.EmlKernels.mboxMessages]].
-  */
-case class MboxMessages(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "mbox_messages"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.EmlKernels.mboxMessages(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.EmlKernels.mboxMessages($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): MboxMessages =
-    copy(child = newChild)
-}
-
-/** RTF text (round 17): group-structured control-word walk with
-  * destination skipping, cp1252 + `\uN` decoding, and the symbol
-  * words; NULL for non-RTF or structurally damaged input.
-  * See [[graft.functions.RtfKernels.rtfText]].
-  */
-case class RtfText(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "rtf_text"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.RtfKernels.rtfText(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.RtfKernels.rtfText($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): RtfText =
-    copy(child = newChild)
 }
 
 object SevenZipMeta {
@@ -2138,94 +904,12 @@ object SevenZipMeta {
     StructField("pack_bytes", LongType, nullable = false)))
 }
 
-/** 7z triage (round 17): CRC-verified signature-header arithmetic —
-  * struct(version, next_header_size, encoded, pack_bytes); no payload
-  * decode; NULL on malformed framing.
-  * See [[graft.functions.ArchiveKernels.sevenZipMeta]].
-  */
-case class SevenZipMeta(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = SevenZipMeta.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "sevenzip_meta"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.ArchiveKernels.sevenZipMeta(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ArchiveKernels.sevenZipMeta($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): SevenZipMeta =
-    copy(child = newChild)
-}
-
 object RarMeta {
   val schema: StructType = StructType(Seq(
     StructField("version", IntegerType, nullable = false),
     StructField("n_blocks", LongType, nullable = false),
     StructField("n_files", LongType, nullable = false),
     StructField("encrypted", BooleanType, nullable = false)))
-}
-
-/** RAR4/RAR5 triage (round 17): CRC-verified block-header walk —
-  * struct(version, n_blocks, n_files, encrypted); encrypted headers
-  * stop the walk honestly; NULL on malformed framing.
-  * See [[graft.functions.ArchiveKernels.rarMeta]].
-  */
-case class RarMeta(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = RarMeta.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "rar_meta"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.ArchiveKernels.rarMeta(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ArchiveKernels.rarMeta($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): RarMeta =
-    copy(child = newChild)
-}
-
-/** Embedded PDF image XObjects (round 17): array of struct(obj,
-  * format, width, height, data) — DCTDecode payloads verbatim as
-  * `jpeg`, decoded DeviceRGB/DeviceGray rasters re-framed as binary
-  * P6/P5 (`ppm`/`pgm`) ready for the dhash tier, recognized-but-
-  * undecoded spaces as `unsupported` with NULL data. NULL blob-wide
-  * on malformed/undecryptable documents.
-  * See [[graft.functions.PdfKernels.images]].
-  */
-case class PdfImages(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType =
-    ArrayType(graft.functions.PdfKernels.imageSchema, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "pdf_images"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.PdfKernels.images(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.PdfKernels.images($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): PdfImages =
-    copy(child = newChild)
 }
 
 object ParquetMeta {
@@ -2236,32 +920,6 @@ object ParquetMeta {
     StructField("n_schema_elements", LongType, nullable = false)))
 }
 
-/** Parquet blob triage (round 16): footer-only metadata —
-  * struct(version, num_rows, n_row_groups, n_schema_elements); no
-  * column chunk read; NULL on malformed framing. See
-  * [[graft.functions.ParquetKernels.meta]].
-  */
-case class ParquetMeta(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ParquetMeta.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "parquet_meta"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.ParquetKernels.meta(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ParquetKernels.meta($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): ParquetMeta =
-    copy(child = newChild)
-}
-
 object PdfMeta {
   val schema: DataType = StructType(Seq(
     StructField("version", StringType, nullable = false),
@@ -2269,522 +927,11 @@ object PdfMeta {
     StructField("encrypted", BooleanType, nullable = false)))
 }
 
-/** PDF triage (r14): (version, n_pages, encrypted) via the xref walk
-  * (classic tables + xref streams + /Prev chains); NULL for anything
-  * the fail-closed parser can't vouch for. See
-  * [[graft.functions.PdfKernels.meta]].
-  */
-case class PdfMeta(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = PdfMeta.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "pdf_meta"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.PdfKernels.meta(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.PdfKernels.meta($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): PdfMeta =
-    copy(child = newChild)
-}
-
-/** PDF text extraction (r14): page-tree walk + content-stream
-  * text-showing operators (Tj ' " TJ, newlines on Td/TD/T*); NULL for
-  * encrypted documents, unsupported filters, or any framing the
-  * parser can't vouch for. See [[graft.functions.PdfKernels.text]].
-  */
-case class PdfText(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "pdf_text"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.PdfKernels.text(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.PdfKernels.text($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): PdfText =
-    copy(child = newChild)
-}
-
-/** Concatenated-member gzip inflate (r14): member-exact, CRC32+ISIZE
-  * verified, zip-bomb-guarded; NULL on any corruption, truncation, or
-  * trailing garbage. The column form of the WARC ingest's inflater —
-  * gzipped sitemaps (`sitemap.xml.gz`), `.jsonl.gz` shards, and any
-  * other gzip payload decode in-plan through the same fail-closed
-  * kernel. See [[graft.functions.WarcKernels.gunzipAll]].
-  */
-case class Gunzip(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true // NULL on any corruption
-  override def prettyName: String = "gunzip"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.WarcKernels.gunzipAll(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.WarcKernels.gunzipAll($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): Gunzip =
-    copy(child = newChild)
-}
-
-/** Zstandard decompression (round 15, RFC 8878 — pure-JVM decoder):
-  * multi-frame, skippable frames skipped, XXH64 checksum verified,
-  * dictionaries refused, inflation-capped; NULL on any corruption.
-  * The `.warc.zst` / `Content-Encoding: zstd` column form. See
-  * [[graft.functions.ZstdKernels.decompress]].
-  */
-case class ZstdDecompress(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true // NULL on any corruption
-  override def prettyName: String = "zstd_decompress"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.ZstdKernels.decompress(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ZstdKernels.decompress($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): ZstdDecompress =
-    copy(child = newChild)
-}
-
-/** Dictionary-frame Zstandard decompression (round 17, RFC 8878 §5):
-  * `right` is the dictionary blob — structured (magic 0xEC30A437,
-  * entropy tables + recent offsets + content, embedded ID checked
-  * against the frame's Dictionary_ID) or raw content. NULL on any
-  * corruption, ID mismatch, or a NULL dictionary.
-  * See [[graft.functions.ZstdKernels.decompress]].
-  */
-case class ZstdDecompressDict(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "zstd_decompress"
-
-  override protected def nullSafeEval(v: Any, d: Any): Any =
-    graft.functions.ZstdKernels.decompress(
-      v.asInstanceOf[Array[Byte]], d.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, d) => s"""
-      ${ev.value} = graft.functions.ZstdKernels.decompress($c, $d);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ZstdDecompressDict =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Brotli decompression (round 16, RFC 7932 — pure-JVM decoder): the
-  * full format incl. the static dictionary with all 121 transforms,
-  * context modeling and block switching; inflation-capped; NULL on
-  * any corruption. The `Content-Encoding: br` / `.br` asset column
-  * form. See [[graft.functions.BrotliKernels.decompress]].
-  */
-case class BrotliDecompress(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true // NULL on any corruption
-  override def prettyName: String = "brotli_decompress"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.BrotliKernels.decompress(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.BrotliKernels.decompress($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): BrotliDecompress =
-    copy(child = newChild)
-}
-
-/** LZW `.Z` (Unix compress) decompression (round 17): the RFC
-  * 9110-registered `compress` content coding and the 0x1F9D magic in
-  * old crawls; block and non-block modes, maxbits 9..16;
-  * inflation-capped; NULL on any corruption.
-  * See [[graft.functions.LzwKernels.decompress]].
-  */
-case class LzwDecompress(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true // NULL on any corruption
-  override def prettyName: String = "lzw_decompress"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.LzwKernels.decompress(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.LzwKernels.decompress($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): LzwDecompress =
-    copy(child = newChild)
-}
-
-/** LZW `.Z` COMPRESSION (round 17) — the in-plan encoder twin of
-  * [[LzwDecompress]], so fixtures and roundtrip pipelines can make
-  * real block-mode streams per row (LzwSpec pins the encoder's output
-  * as decodable by gzip and libarchive). Greedy table build, maxbits
-  * 16. See [[graft.functions.LzwKernels.compress]].
-  */
-case class LzwCompress(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "lzw_compress"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.LzwKernels.compress(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.LzwKernels.compress($c, 16, 0)")
-
-  override protected def withNewChildInternal(newChild: Expression): LzwCompress =
-    copy(child = newChild)
-}
-
-/** LZ4 frame decompression (round 17): standard + legacy frames,
-  * linked/independent blocks, XXH32 checksums verified, skippable
-  * frames, multi-frame input; dictionary frames refused;
-  * inflation-capped; NULL on any corruption.
-  * See [[graft.functions.Lz4Kernels.decompress]].
-  */
-case class Lz4Decompress(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true // NULL on any corruption
-  override def prettyName: String = "lz4_decompress"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.Lz4Kernels.decompress(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Lz4Kernels.decompress($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): Lz4Decompress =
-    copy(child = newChild)
-}
-
-/** LZ4 store-mode frame COMPRESSION (round 17) — the in-plan encoder
-  * twin of [[Lz4Decompress]] (uncompressed 64 KB blocks + XXH32
-  * content checksum; Lz4Spec pins the frames as decodable by the
-  * reference binary). See [[graft.functions.Lz4Kernels.compressStore]].
-  */
-case class Lz4CompressStore(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "lz4_compress_store"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.Lz4Kernels.compressStore(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Lz4Kernels.compressStore($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Lz4CompressStore =
-    copy(child = newChild)
-}
-
 object RobotsParse {
   val schema: DataType = ArrayType(StructType(Seq(
     StructField("agent", StringType, nullable = false),
     StructField("allow", BooleanType, nullable = false),
     StructField("pattern", StringType, nullable = false))), containsNull = false)
-}
-
-/** robots.txt → (agent, allow, pattern) rule rows (RFC 9309 grouping).
-  * See [[graft.functions.RobotsKernels.parse]].
-  */
-case class RobotsParse(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = RobotsParse.schema
-  override def prettyName: String = "robots_parse"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.RobotsKernels.parse(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.RobotsKernels.parse($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): RobotsParse =
-    copy(child = newChild)
-}
-
-/** `Sitemap:` URLs of a robots.txt, file order, group-independent.
-  * See [[graft.functions.RobotsKernels.sitemaps]].
-  */
-case class RobotsSitemaps(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "robots_sitemaps"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.RobotsKernels.sitemaps(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.RobotsKernels.sitemaps($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): RobotsSitemaps =
-    copy(child = newChild)
-}
-
-/** Sitemap / sitemap-index entries: array of (kind, loc, lastmod)
-  * structs in document order; NULL on any malformed framing. See
-  * [[graft.functions.SitemapKernels.entries]].
-  */
-case class SitemapEntries(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType =
-    ArrayType(graft.functions.SitemapKernels.schema, containsNull = false)
-  override def nullable: Boolean = true // NULL on malformed framing
-  override def prettyName: String = "sitemap_entries"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.SitemapKernels.entries(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.SitemapKernels.entries($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): SitemapEntries =
-    copy(child = newChild)
-}
-
-/** EXIF metadata (round 17): struct(orientation, datetime, make,
-  * model, gps_lat, gps_lon) from a JPEG APP1 Exif segment or bare
-  * TIFF; NULL when no EXIF block exists or its structure is damaged.
-  * See [[graft.functions.ExifKernels.exifMeta]].
-  */
-case class ExifMeta(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = graft.functions.ExifKernels.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "exif_meta"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.ExifKernels.exifMeta(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ExifKernels.exifMeta($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): ExifMeta =
-    copy(child = newChild)
-}
-
-/** Web-font triage (round 17): struct(format, family, n_glyphs,
-  * n_tables) for TTF/OTF/TTC/WOFF (WOFF2 header-only); NULL on
-  * malformed framing. See [[graft.functions.FontKernels.fontMeta]].
-  */
-case class FontMeta(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = graft.functions.FontKernels.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "font_meta"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.FontKernels.fontMeta(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.FontKernels.fontMeta($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): FontMeta =
-    copy(child = newChild)
-}
-
-/** HTML page metadata (round 17): struct(title, description,
-  * og_title, og_description, og_image, canonical, lang) — best-effort
-  * head scraping (HTML is soup: fields are NULL when absent, the
-  * struct is NULL only for NULL input).
-  * See [[graft.functions.HtmlKernels.htmlMeta]].
-  */
-case class HtmlMeta(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = graft.functions.HtmlKernels.metaSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "html_meta"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.HtmlKernels.htmlMeta(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.HtmlKernels.htmlMeta($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): HtmlMeta =
-    copy(child = newChild)
-}
-
-/** RSS/Atom feed entries (round 17): array of (kind, title, link,
-  * date, summary) structs in document order; NULL on any malformed
-  * framing. See [[graft.functions.FeedKernels.feedEntries]].
-  */
-case class FeedEntries(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType =
-    ArrayType(graft.functions.FeedKernels.schema, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "feed_entries"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.FeedKernels.feedEntries(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.FeedKernels.feedEntries($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): FeedEntries =
-    copy(child = newChild)
-}
-
-/** `Crawl-delay:` directives of a robots.txt with group attribution:
-  * array of (agent, delay-seconds) rows. See
-  * [[graft.functions.RobotsKernels.crawlDelays]].
-  */
-case class RobotsCrawlDelays(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("agent", StringType, nullable = false),
-    StructField("delay", DoubleType, nullable = false))), containsNull = false)
-  override def prettyName: String = "robots_crawl_delays"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.RobotsKernels.crawlDelays(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.RobotsKernels.crawlDelays($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): RobotsCrawlDelays = copy(child = newChild)
-}
-
-/** RFC 9309 robots path match: `*` wildcards, trailing `$` anchor,
-  * prefix semantics. See [[graft.functions.RobotsKernels.matches]].
-  */
-case class RobotsMatch(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, StringType)
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "robots_match"
-
-  override protected def nullSafeEval(path: Any, pattern: Any): Any =
-    graft.functions.RobotsKernels.matches(
-      path.asInstanceOf[UTF8String], pattern.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (p, q) => s"graft.functions.RobotsKernels.matches($p, $q)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): RobotsMatch =
-    copy(left = newLeft, right = newRight)
-}
-
-/** RFC 3986 §5.2 reference resolution (base, ref) → absolute URL;
-  * NULL for an unparseable base. See
-  * [[graft.functions.UrlKernels.resolve]].
-  */
-case class UrlResolve(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, StringType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "url_resolve"
-
-  override protected def nullSafeEval(base: Any, ref: Any): Any =
-    graft.functions.UrlKernels.resolve(
-      base.asInstanceOf[UTF8String], ref.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, r) => s"""
-      ${ev.value} = graft.functions.UrlKernels.resolve($b, $r);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): UrlResolve =
-    copy(left = newLeft, right = newRight)
 }
 
 object UrlParts {
@@ -2796,77 +943,4 @@ object UrlParts {
     StructField("path", StringType, nullable = false),
     StructField("query", StringType, nullable = true),
     StructField("apex", StringType, nullable = false)))
-}
-
-/** URL canonicalization + parts — NULL for unparseable input
-  * (fail-closed). See [[graft.functions.UrlKernels.urlParts]] for the
-  * normalization contract.
-  */
-case class UrlParts(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = UrlParts.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "url_parts"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.UrlKernels.urlParts(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the kernel returns null for NON-null unparseable input
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.UrlKernels.urlParts($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): UrlParts =
-    copy(child = newChild)
-}
-
-/** `href` values of `<a>`/`<area>` tags in document order — the
-  * frontier-discovery pass. See
-  * [[graft.functions.HtmlKernels.htmlLinks]].
-  */
-case class HtmlLinks(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "html_links"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.HtmlKernels.htmlLinks(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HtmlKernels.htmlLinks($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): HtmlLinks =
-    copy(child = newChild)
-}
-
-/** HTML → plain text (WET-style boilerplate strip): tags dropped with
-  * block separation preserved, script/style/comment contents removed,
-  * character references decoded, whitespace collapsed. One O(bytes)
-  * codegen kernel — see [[graft.functions.HtmlKernels.htmlExtract]]
-  * for the exact (oracle-replayable) semantics.
-  */
-case class HtmlExtract(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def prettyName: String = "html_extract"
-
-  override protected def nullSafeEval(v: Any): Any =
-    graft.functions.HtmlKernels.htmlExtract(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HtmlKernels.htmlExtract($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): HtmlExtract =
-    copy(child = newChild)
 }

@@ -2,10 +2,13 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.types.{ArrayType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** SQL registration of graft's custom expressions, so `spark.sql` users
-  * can call them directly (`SELECT jaro_winkler(a, b) ...`). Used by
+  * can call them directly (`SELECT jaro_winkler(a, b) ...`). Every
+  * [[Kernels]] entry with a usage text registers under its name; the
+  * three hand-written expressions register below. Used by
   * [[graft.GraftExtensions]] (the `spark.sql.extensions` hook) and
   * registrable on an existing session via [[register]].
   */
@@ -14,9 +17,11 @@ object GraftSqlFunctions {
   private def info(name: String, usage: String) =
     new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")
 
+  /** A literal integer argument; a bigint literal only when it fits an
+    * `Int` (narrowing it would silently run with a different value). */
   private def intArg(e: Expression, fn: String): Int = e match {
     case Literal(v: Int, _) => v
-    case Literal(v: Long, _) => v.toInt
+    case Literal(v: Long, _) if v.isValidInt => v.toInt
     case other => throw new IllegalArgumentException(
       s"$fn expects a literal integer argument, got $other")
   }
@@ -27,17 +32,11 @@ object GraftSqlFunctions {
       s"$fn expects a literal boolean argument, got $other")
   }
 
-  private def asDoubleArray(e: Expression): Expression =
-    Cast(e, ArrayType(DoubleType))
-
   private def stringArrayArg(e: Expression, fn: String): Seq[String] = e match {
-    case a if a.foldable && a.dataType == ArrayType(
-        org.apache.spark.sql.types.StringType, false) ||
-        a.foldable && a.dataType == ArrayType(
-          org.apache.spark.sql.types.StringType, true) =>
+    case a if a.foldable && (a.dataType == ArrayType(StringType, false) ||
+        a.dataType == ArrayType(StringType, true)) =>
       a.eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        .toArray[org.apache.spark.unsafe.types.UTF8String](
-          org.apache.spark.sql.types.StringType)
+        .toArray[UTF8String](StringType)
         .map(u => if (u == null) null else u.toString).toSeq
     case other => throw new IllegalArgumentException(
       s"$fn expects a literal string array argument like array('a','b'), got $other")
@@ -58,462 +57,40 @@ object GraftSqlFunctions {
       build(c)
     }
 
-  val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("jaro_winkler"),
-      info("jaro_winkler", "jaro_winkler(a, b) - Jaro-Winkler similarity in [0,1]"),
-      arity("jaro_winkler", "jaro_winkler(a, b)", 2, 2)(
-        c => JaroWinklerSimilarity(c(0), c(1)))),
-    (FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(tokens) - 64-bit SimHash of a string array"),
-      arity("simhash64", "simhash64(tokens)", 1, 1)(c => SimHash64(c(0)))),
-    (FunctionIdentifier("simhash_text"),
-      info("simhash_text", "simhash_text(text) - one-pass lowercase+tokenize+SimHash"),
-      arity("simhash_text", "simhash_text(text)", 1, 1)(c => SimHashText(c(0)))),
-    (FunctionIdentifier("shingle_hashes64"),
-      info("shingle_hashes64", "shingle_hashes64(text, n) - sorted distinct n-gram shingle hashes"),
-      arity("shingle_hashes64", "shingle_hashes64(text, n)", 2, 2)(
-        c => ShingleHashes64(c(0), intArg(c(1), "shingle_hashes64")))),
-    (FunctionIdentifier("minhashes"),
-      info("minhashes", "minhashes(hashes, k) - K-member MinHash signature"),
-      arity("minhashes", "minhashes(hashes, k)", 2, 2)(
-        c => MinHashes(c(0), intArg(c(1), "minhashes")))),
-    (FunctionIdentifier("sorted_jaccard"),
-      info("sorted_jaccard", "sorted_jaccard(a, b) - Jaccard of sorted long arrays"),
-      arity("sorted_jaccard", "sorted_jaccard(a, b)", 2, 2)(
-        c => SortedLongJaccard(c(0), c(1)))),
-    (FunctionIdentifier("text_stats"),
-      info("text_stats", "text_stats(text) - struct of per-document counts"),
-      arity("text_stats", "text_stats(text)", 1, 1)(c => TextStats(c(0)))),
-    (FunctionIdentifier("vector_dot"),
-      info("vector_dot", "vector_dot(a, b) - dot product of numeric arrays"),
-      arity("vector_dot", "vector_dot(a, b)", 2, 2)(
-        c => VectorDot(asDoubleArray(c(0)), asDoubleArray(c(1))))),
-    (FunctionIdentifier("vector_cosine"),
-      info("vector_cosine", "vector_cosine(a, b) - cosine similarity (0 on zero norm)"),
-      arity("vector_cosine", "vector_cosine(a, b)", 2, 2)(
-        c => VectorCosine(asDoubleArray(c(0)), asDoubleArray(c(1))))),
-    (FunctionIdentifier("vector_l2_normalize"),
-      info("vector_l2_normalize", "vector_l2_normalize(a) - unit-length copy"),
-      arity("vector_l2_normalize", "vector_l2_normalize(a)", 1, 1)(
-        c => VectorL2Normalize(asDoubleArray(c(0))))),
-    (FunctionIdentifier("vector_lsh_bucket"),
-      info("vector_lsh_bucket", "vector_lsh_bucket(a, nBits) - hyperplane-sign LSH bucket"),
-      arity("vector_lsh_bucket", "vector_lsh_bucket(a, nBits)", 2, 2)(
-        c => VectorLshBucket(asDoubleArray(c(0)),
-          intArg(c(1), "vector_lsh_bucket"), 42L))),
-    (FunctionIdentifier("audio_meta"),
-      info("audio_meta",
-        "audio_meta(blob) - struct(format, channels, sample_rate, bits_per_sample, n_frames) from a WAV header"),
-      arity("audio_meta", "audio_meta(blob)", 1, 1)(c => AudioMeta(c(0)))),
-    (FunctionIdentifier("video_meta"),
-      info("video_meta",
-        "video_meta(blob) - struct(format, timescale, duration, n_tracks) from an MP4/MOV container"),
-      arity("video_meta", "video_meta(blob)", 1, 1)(c => VideoMeta(c(0)))),
-    (FunctionIdentifier("image_meta"),
-      info("image_meta",
-        "image_meta(blob) - struct(format, width, height) from the container header"),
-      arity("image_meta", "image_meta(blob)", 1, 1)(c => ImageMeta(c(0)))),
-    (FunctionIdentifier("repetition_counts"),
-      info("repetition_counts",
-        "repetition_counts(text) - struct(n_tokens, n_distinct, top_count)"),
-      arity("repetition_counts", "repetition_counts(text)", 1, 1)(
-        c => RepetitionCounts(c(0)))),
-    (FunctionIdentifier("word_ngrams"),
-      info("word_ngrams",
-        "word_ngrams(text, n) - distinct space-joined word n-grams, first-occurrence order"),
-      arity("word_ngrams", "word_ngrams(text, n)", 2, 2)(
-        c => WordNgrams(c(0), intArg(c(1), "word_ngrams")))),
-    (FunctionIdentifier("zorder2"),
-      info("zorder2",
-        "zorder2(a, b) - 2-D Z-order (Morton) key, signed-order preserving"),
-      arity("zorder2", "zorder2(a, b)", 2, 2)(c => ZOrder2(c(0), c(1)))),
-    (FunctionIdentifier("zorder_n"),
-      info("zorder_n",
-        "zorder_n(array(b1, ..., bk), k) - N-dim Morton key over bucket coords, 64/k bits each"),
-      arity("zorder_n", "zorder_n(arr, k)", 2, 2)(
-        c => ZOrderN(c(0), intArg(c(1), "zorder_n")))),
-    (FunctionIdentifier("hilbert2"),
-      info("hilbert2",
-        "hilbert2(x, y, bits) - 2-D Hilbert curve key over [0, 2^bits) bucket coords"),
-      arity("hilbert2", "hilbert2(x, y, bits)", 3, 3)(
-        c => Hilbert2(c(0), c(1), intArg(c(2), "hilbert2")))),
-    (FunctionIdentifier("unhilbert2"),
-      info("unhilbert2",
-        "unhilbert2(key, bits) - inverse Hilbert decode to array(x, y)"),
-      arity("unhilbert2", "unhilbert2(key, bits)", 2, 2)(
-        c => HilbertDecode2(c(0), intArg(c(1), "unhilbert2")))),
-    (FunctionIdentifier("word_ngrams_all"),
-      info("word_ngrams_all",
-        "word_ngrams_all(text, n) - ALL word n-grams in order, duplicates kept"),
-      arity("word_ngrams_all", "word_ngrams_all(text, n)", 2, 2)(
-        c => WordNgramsAll(c(0), intArg(c(1), "word_ngrams_all")))),
-    (FunctionIdentifier("chunk_text"),
-      info("chunk_text",
-        "chunk_text(text, maxTokens, overlap) - sliding token-window chunks"),
-      arity("chunk_text", "chunk_text(text, maxTokens, overlap)", 3, 3)(
-        c => ChunkText(c(0), intArg(c(1), "chunk_text"),
-          intArg(c(2), "chunk_text")))),
-    (FunctionIdentifier("cms_estimate"),
-      info("cms_estimate",
-        "cms_estimate(sketch, item) - point estimate from a " +
-          "count_min_sketch binary for a string item"),
-      arity("cms_estimate", "cms_estimate(sketch, item)", 2, 2)(
-        c => CmsEstimate(c(0), c(1)))),
-    (FunctionIdentifier("multi_match"),
-      info("multi_match",
-        "multi_match(text, array('t1','t2',...)) - distinct listed terms " +
-          "contained in text, in declaration order (one Aho-Corasick pass)"),
-      arity("multi_match", "multi_match(text, array('t1','t2',...))", 2, 2)(
-        c => MultiMatch(c(0), stringArrayArg(c(1), "multi_match")))),
-    (FunctionIdentifier("collect_smallest"),
-      info("collect_smallest",
-        "collect_smallest(x, limit[, distinct]) - the limit smallest values per group, " +
-          "sorted; bounded aggregation buffer (safe on pathologically hot groups)"),
-      arity("collect_smallest", "collect_smallest(x, limit[, distinct])", 2, 3)(
-        c => CollectSmallest(c(0), intArg(c(1), "collect_smallest"),
-          if (c.length >= 3) boolArg(c(2), "collect_smallest") else false))),
-    (FunctionIdentifier("cdc_boundaries"),
-      info("cdc_boundaries",
-        "cdc_boundaries(text, maskBits, minLen, maxLen) - content-defined " +
-          "chunk end offsets (1-based code points; windowed-gear CDC)"),
-      arity("cdc_boundaries", "cdc_boundaries(text, maskBits, minLen, maxLen)", 4, 4)(
-        c => CdcBoundaries(c(0), intArg(c(1), "cdc_boundaries"),
-          intArg(c(2), "cdc_boundaries"), intArg(c(3), "cdc_boundaries")))),
-    (FunctionIdentifier("nfc_normalize"),
-      info("nfc_normalize",
-        "nfc_normalize(text) - Unicode NFC normalization (UAX #15)"),
-      arity("nfc_normalize", "nfc_normalize(text)", 1, 1)(
-        c => NfcNormalize(c(0)))),
-    (FunctionIdentifier("warc_records"),
-      info("warc_records",
-        "warc_records(blob) - WARC (ISO 28500) records as " +
-          "array<struct(warc_type, target_uri, content_type, payload)>; " +
-          "gzip inflated; NULL for malformed archives"),
-      arity("warc_records", "warc_records(blob)", 1, 1)(
-        c => WarcRecords(c(0)))),
-    (FunctionIdentifier("http_parts"),
-      info("http_parts",
-        "http_parts(payload) - struct(status, content_type, body) of an " +
-          "HTTP message payload; NULL when not HTTP"),
-      arity("http_parts", "http_parts(payload)", 1, 1)(
-        c => HttpParts(c(0)))),
-    (FunctionIdentifier("decode_text"),
-      info("decode_text",
-        "decode_text(binary) - struct(text, encoding, n_fallback_bytes): " +
-          "BOM-aware encoding sniff, strict UTF-8 validation, " +
-          "windows-1252 fallback; fail-open"),
-      arity("decode_text", "decode_text(binary)", 1, 1)(
-        c => DecodeText(c(0)))),
-    (FunctionIdentifier("robots_parse"),
-      info("robots_parse",
-        "robots_parse(text) - robots.txt rule rows " +
-          "array<struct(agent, allow, pattern)> per RFC 9309 grouping"),
-      arity("robots_parse", "robots_parse(text)", 1, 1)(
-        c => RobotsParse(c(0)))),
-    (FunctionIdentifier("robots_sitemaps"),
-      info("robots_sitemaps",
-        "robots_sitemaps(text) - Sitemap: URLs of a robots.txt in file " +
-          "order (group-independent per RFC 9309)"),
-      arity("robots_sitemaps", "robots_sitemaps(text)", 1, 1)(
-        c => RobotsSitemaps(c(0)))),
-    (FunctionIdentifier("avro_meta"),
-      info("avro_meta",
-        "avro_meta(binary) - Avro container struct(schema_json, codec, " +
-          "n_blocks, n_records) from frame arithmetic; NULL on " +
-          "malformed framing"),
-      arity("avro_meta", "avro_meta(binary)", 1, 1)(
-        c => AvroMeta(c(0)))),
-    (FunctionIdentifier("json_paths"),
-      info("json_paths",
-        "json_paths(doc) - every JSON node as (path, jtype) rows, array " +
-          "elements merged under [*]; NULL on malformed documents"),
-      arity("json_paths", "json_paths(doc)", 1, 1)(
-        c => JsonPaths(c(0)))),
-    (FunctionIdentifier("tar_entries"),
-      info("tar_entries",
-        "tar_entries(binary) - TAR (ustar) member listing " +
-          "array<struct(name, typeflag, size)>, header checksums " +
-          "verified; NULL on malformed framing"),
-      arity("tar_entries", "tar_entries(binary)", 1, 1)(
-        c => TarEntries(c(0)))),
-    (FunctionIdentifier("tar_extract"),
-      info("tar_extract",
-        "tar_extract(binary, name) - one regular member's bytes; NULL " +
-          "on missing name or malformed archive"),
-      arity("tar_extract", "tar_extract(binary, name)", 2, 2)(
-        c => TarExtract(c(0), c(1)))),
-    (FunctionIdentifier("zip_entries"),
-      info("zip_entries",
-        "zip_entries(binary) - ZIP central-directory listing " +
-          "array<struct(name, method, compressed_size, size)>; NULL on " +
-          "malformed/zip64/encrypted archives"),
-      arity("zip_entries", "zip_entries(binary)", 1, 1)(
-        c => ZipEntries(c(0)))),
-    (FunctionIdentifier("zip_extract"),
-      info("zip_extract",
-        "zip_extract(binary, name) - one entry's bytes, CRC32+size " +
-          "verified; NULL on missing name or any mismatch"),
-      arity("zip_extract", "zip_extract(binary, name)", 2, 2)(
-        c => ZipExtract(c(0), c(1)))),
-    (FunctionIdentifier("html_tables"),
-      info("html_tables",
-        "html_tables(html) - <table> cells as flat (table, row, col, " +
-          "text) rows; NULL on an unclosed (truncated) table"),
-      arity("html_tables", "html_tables(html)", 1, 1)(
-        c => HtmlTables(c(0)))),
-    (FunctionIdentifier("xlsx_cells"),
-      info("xlsx_cells",
-        "xlsx_cells(binary[, sheet]) - XLSX worksheet cells as flat " +
-          "(row, col, value) rows via sharedStrings (sheet 1-based, " +
-          "default 1); NULL on malformed archives or an absent sheet"),
-      arity("xlsx_cells", "xlsx_cells(binary[, sheet])", 1, 2)(
-        c => if (c.length == 1) XlsxCells(c(0))
-             else XlsxCells(c(0), intArg(c(1), "xlsx_cells")))),
-    (FunctionIdentifier("xls_cells"),
-      info("xls_cells",
-        "xls_cells(binary[, sheet]) - legacy .xls (BIFF8) worksheet " +
-          "cells as flat (row, col, value) rows (sheet 1-based, " +
-          "default 1); NULL on damaged/encrypted/BIFF5 input or an " +
-          "absent sheet"),
-      arity("xls_cells", "xls_cells(binary[, sheet])", 1, 2)(
-        c => if (c.length == 1) XlsCells(c(0))
-             else XlsCells(c(0), intArg(c(1), "xls_cells")))),
-    (FunctionIdentifier("dhash64"),
-      info("dhash64",
-        "dhash64(binary) - 64-bit perceptual difference hash of a " +
-          "raster or codec image (P6/P5/BMP; PNG/JPEG/GIF/TIFF since r15, " +
-          "VP8L webp since r16); NULL on undecodable or sub-9x8 input"),
-      arity("dhash64", "dhash64(binary)", 1, 1)(
-        c => DHash64(c(0)))),
-    (FunctionIdentifier("audio_dhash64"),
-      info("audio_dhash64",
-        "audio_dhash64(binary) - 64-bit temporal energy-envelope " +
-          "fingerprint of an audio blob (WAV PCM/G.711/ADPCM, AU, " +
-          "AIFF, FLAC); NULL on undecodable or sub-65-sample input"),
-      arity("audio_dhash64", "audio_dhash64(binary)", 1, 1)(
-        c => AudioDhash64(c(0)))),
-    (FunctionIdentifier("video_dhash64"),
-      info("video_dhash64",
-        "video_dhash64(binary) - 64-bit temporal luma-envelope " +
-          "fingerprint of a video blob (MJPEG MP4, animated GIF); " +
-          "NULL on undecodable input or < 2 frames"),
-      arity("video_dhash64", "video_dhash64(binary)", 1, 1)(
-        c => VideoDhash64(c(0)))),
-    (FunctionIdentifier("cfb_entries"),
-      info("cfb_entries",
-        "cfb_entries(binary) - OLE2/Compound File directory listing as " +
-          "array of struct(name, entry_type, size); NULL on malformed " +
-          "input"),
-      arity("cfb_entries", "cfb_entries(binary)", 1, 1)(
-        c => CfbEntries(c(0)))),
-    (FunctionIdentifier("doc_text"),
-      info("doc_text",
-        "doc_text(binary) - legacy Word .doc text (non-complex, " +
-          "unencrypted WordDocument stream); NULL otherwise"),
-      arity("doc_text", "doc_text(binary)", 1, 1)(
-        c => DocText(c(0)))),
-    (FunctionIdentifier("pptx_text"),
-      info("pptx_text",
-        "pptx_text(binary) - PPTX slide text (a:t runs per slide part, " +
-          "paragraphs as lines); NULL for damaged archives or " +
-          "non-presentations"),
-      arity("pptx_text", "pptx_text(binary)", 1, 1)(
-        c => PptxText(c(0)))),
-    (FunctionIdentifier("id3_tags"),
-      info("id3_tags",
-        "id3_tags(binary) - ID3v2.2/2.3/2.4 + ID3v1 tag extraction as " +
-          "struct(title, artist, album, year); NULL when no tag or " +
-          "damaged v2 framing"),
-      arity("id3_tags", "id3_tags(binary)", 1, 1)(
-        c => Id3Tags(c(0)))),
-    (FunctionIdentifier("eml_parts"),
-      info("eml_parts",
-        "eml_parts(binary) - EML/MIME message extraction: struct(from, " +
-          "to, subject, date, n_parts, text) with RFC 2047 header words, " +
-          "quoted-printable/base64 bodies, multipart walk; NULL for " +
-          "non-mail or undecodable input"),
-      arity("eml_parts", "eml_parts(binary)", 1, 1)(
-        c => EmlParts(c(0)))),
-    (FunctionIdentifier("mbox_messages"),
-      info("mbox_messages",
-        "mbox_messages(binary) - mbox archive split into per-message " +
-          "binaries ('From ' envelopes dropped, mboxrd '>From ' " +
-          "unescaped); NULL for non-mbox input"),
-      arity("mbox_messages", "mbox_messages(binary)", 1, 1)(
-        c => MboxMessages(c(0)))),
-    (FunctionIdentifier("rtf_text"),
-      info("rtf_text",
-        "rtf_text(binary) - RTF text extraction (destination skipping, " +
-          "cp1252 + \\uN unicode, symbol words); NULL for non-RTF or " +
-          "damaged input"),
-      arity("rtf_text", "rtf_text(binary)", 1, 1)(
-        c => RtfText(c(0)))),
-    (FunctionIdentifier("sevenzip_meta"),
-      info("sevenzip_meta",
-        "sevenzip_meta(binary) - 7z triage: CRC-verified struct(" +
-          "version, next_header_size, encoded, pack_bytes); NULL on " +
-          "malformed framing"),
-      arity("sevenzip_meta", "sevenzip_meta(binary)", 1, 1)(
-        c => SevenZipMeta(c(0)))),
-    (FunctionIdentifier("rar_meta"),
-      info("rar_meta",
-        "rar_meta(binary) - RAR4/RAR5 triage: CRC-verified block walk " +
-          "as struct(version, n_blocks, n_files, encrypted); NULL on " +
-          "malformed framing"),
-      arity("rar_meta", "rar_meta(binary)", 1, 1)(
-        c => RarMeta(c(0)))),
-    (FunctionIdentifier("pdf_images"),
-      info("pdf_images",
-        "pdf_images(binary) - embedded PDF image XObjects as array of " +
-          "struct(obj, format, width, height, data): jpeg payloads " +
-          "verbatim, RGB/gray rasters as P6/P5, others surfaced as " +
-          "'unsupported'; NULL on malformed/undecryptable documents"),
-      arity("pdf_images", "pdf_images(binary)", 1, 1)(
-        c => PdfImages(c(0)))),
-    (FunctionIdentifier("ppt_text"),
-      info("ppt_text",
-        "ppt_text(binary) - legacy PowerPoint .ppt slide text " +
-          "(TextCharsAtom/TextBytesAtom walk, newline-joined); NULL " +
-          "for encrypted or malformed decks"),
-      arity("ppt_text", "ppt_text(binary)", 1, 1)(
-        c => PptText(c(0)))),
-    (FunctionIdentifier("parquet_meta"),
-      info("parquet_meta",
-        "parquet_meta(binary) - footer-only parquet triage: " +
-          "struct(version, num_rows, n_row_groups, n_schema_elements); " +
-          "NULL on malformed framing"),
-      arity("parquet_meta", "parquet_meta(binary)", 1, 1)(
-        c => ParquetMeta(c(0)))),
-    (FunctionIdentifier("pdf_meta"),
-      info("pdf_meta",
-        "pdf_meta(binary) - PDF triage struct(version, n_pages, " +
-          "encrypted); NULL on malformed/unsupported framing"),
-      arity("pdf_meta", "pdf_meta(binary)", 1, 1)(
-        c => PdfMeta(c(0)))),
-    (FunctionIdentifier("pdf_text"),
-      info("pdf_text",
-        "pdf_text(binary) - text-showing-operator extraction across the " +
-          "page tree; NULL for encrypted/unsupported documents"),
-      arity("pdf_text", "pdf_text(binary)", 1, 1)(
-        c => PdfText(c(0)))),
-    (FunctionIdentifier("gunzip"),
-      info("gunzip",
-        "gunzip(binary) - concatenated-member gzip inflate, CRC/ISIZE " +
-          "verified, zip-bomb-guarded; NULL on any corruption"),
-      arity("gunzip", "gunzip(binary)", 1, 1)(
-        c => Gunzip(c(0)))),
-    (FunctionIdentifier("zstd_decompress"),
-      info("zstd_decompress",
-        "zstd_decompress(binary[, dict]) - Zstandard decompression " +
-          "(RFC 8878: multi-frame, checksum-verified; structured or " +
-          "raw dictionaries via the 2-arg form, declared-but-missing " +
-          "dictionaries refused); NULL on any corruption"),
-      arity("zstd_decompress", "zstd_decompress(binary[, dict])", 1, 2)(
-        c => if (c.length == 1) ZstdDecompress(c(0))
-             else ZstdDecompressDict(c(0), c(1)))),
-    (FunctionIdentifier("brotli_decompress"),
-      info("brotli_decompress",
-        "brotli_decompress(binary) - Brotli decompression (RFC 7932: " +
-          "full format incl. static dictionary + transforms); NULL on " +
-          "any corruption"),
-      arity("brotli_decompress", "brotli_decompress(binary)", 1, 1)(
-        c => BrotliDecompress(c(0)))),
-    (FunctionIdentifier("lzw_decompress"),
-      info("lzw_decompress",
-        "lzw_decompress(binary) - Unix compress .Z (LZW) decompression " +
-          "(block + non-block modes, maxbits 9..16); NULL on any " +
-          "corruption"),
-      arity("lzw_decompress", "lzw_decompress(binary)", 1, 1)(
-        c => LzwDecompress(c(0)))),
-    (FunctionIdentifier("lzw_compress"),
-      info("lzw_compress",
-        "lzw_compress(binary) - Unix compress .Z (LZW) block-mode " +
-          "compression, maxbits 16 (reference-decoder-validated)"),
-      arity("lzw_compress", "lzw_compress(binary)", 1, 1)(
-        c => LzwCompress(c(0)))),
-    (FunctionIdentifier("lz4_decompress"),
-      info("lz4_decompress",
-        "lz4_decompress(binary) - LZ4 frame decompression (standard + " +
-          "legacy frames, linked blocks, XXH32 verified); NULL on any " +
-          "corruption"),
-      arity("lz4_decompress", "lz4_decompress(binary)", 1, 1)(
-        c => Lz4Decompress(c(0)))),
-    (FunctionIdentifier("lz4_compress_store"),
-      info("lz4_compress_store",
-        "lz4_compress_store(binary) - LZ4 store-mode frame (64 KB raw " +
-          "blocks + XXH32 content checksum, reference-decoder-validated)"),
-      arity("lz4_compress_store", "lz4_compress_store(binary)", 1, 1)(
-        c => Lz4CompressStore(c(0)))),
-    (FunctionIdentifier("sitemap_entries"),
-      info("sitemap_entries",
-        "sitemap_entries(xml) - sitemap/sitemap-index frontier entries " +
-          "array<struct(kind, loc, lastmod)>; NULL on malformed framing"),
-      arity("sitemap_entries", "sitemap_entries(xml)", 1, 1)(
-        c => SitemapEntries(c(0)))),
-    (FunctionIdentifier("exif_meta"),
-      info("exif_meta",
-        "exif_meta(binary) - EXIF metadata from a JPEG APP1 segment or " +
-          "bare TIFF: struct(orientation, datetime, make, model, " +
-          "gps_lat, gps_lon); NULL when no EXIF block or damaged"),
-      arity("exif_meta", "exif_meta(binary)", 1, 1)(
-        c => ExifMeta(c(0)))),
-    (FunctionIdentifier("font_meta"),
-      info("font_meta",
-        "font_meta(binary) - web-font triage as struct(format, family, " +
-          "n_glyphs, n_tables) for TTF/OTF/TTC/WOFF (WOFF2 header-only); " +
-          "NULL on malformed framing"),
-      arity("font_meta", "font_meta(binary)", 1, 1)(
-        c => FontMeta(c(0)))),
-    (FunctionIdentifier("html_meta"),
-      info("html_meta",
-        "html_meta(html) - page-head metadata as struct(title, " +
-          "description, og_title, og_description, og_image, canonical, " +
-          "lang); best-effort, NULL fields when absent"),
-      arity("html_meta", "html_meta(html)", 1, 1)(
-        c => HtmlMeta(c(0)))),
-    (FunctionIdentifier("feed_entries"),
-      info("feed_entries",
-        "feed_entries(xml) - RSS/Atom feed entries as array<struct(" +
-          "kind, title, link, date, summary)>; NULL on malformed framing"),
-      arity("feed_entries", "feed_entries(xml)", 1, 1)(
-        c => FeedEntries(c(0)))),
-    (FunctionIdentifier("robots_crawl_delays"),
-      info("robots_crawl_delays",
-        "robots_crawl_delays(text) - Crawl-delay directives with group " +
-          "attribution: array<struct(agent, delay)>"),
-      arity("robots_crawl_delays", "robots_crawl_delays(text)", 1, 1)(
-        c => RobotsCrawlDelays(c(0)))),
-    (FunctionIdentifier("robots_match"),
-      info("robots_match",
-        "robots_match(path, pattern) - RFC 9309 robots path match " +
-          "(prefix with * wildcards, trailing $ anchor)"),
-      arity("robots_match", "robots_match(path, pattern)", 2, 2)(
-        c => RobotsMatch(c(0), c(1)))),
-    (FunctionIdentifier("url_resolve"),
-      info("url_resolve",
-        "url_resolve(base, ref) - RFC 3986 reference resolution to an " +
-          "absolute URL; NULL for an unparseable base"),
-      arity("url_resolve", "url_resolve(base, ref)", 2, 2)(
-        c => UrlResolve(c(0), c(1)))),
-    (FunctionIdentifier("url_parts"),
-      info("url_parts",
-        "url_parts(url) - canonicalized URL and parts struct(normalized, " +
-          "scheme, host, port, path, query, apex); NULL when unparseable"),
-      arity("url_parts", "url_parts(url)", 1, 1)(
-        c => UrlParts(c(0)))),
-    (FunctionIdentifier("html_links"),
-      info("html_links",
-        "html_links(html) - href values of <a>/<area> tags in document " +
-          "order, entity-decoded; script/style/comment content skipped"),
-      arity("html_links", "html_links(html)", 1, 1)(
-        c => HtmlLinks(c(0)))),
-    (FunctionIdentifier("html_extract"),
-      info("html_extract",
-        "html_extract(html) - plain text from HTML: tags stripped with " +
-          "block separation, script/style/comments dropped, character " +
-          "references decoded, whitespace collapsed"),
-      arity("html_extract", "html_extract(html)", 1, 1)(
-        c => HtmlExtract(c(0)))))
+  private def function(name: String, usage: String, min: Int, max: Int)(
+      build: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), info(name, usage),
+      arity(name, usage.split(" - ", 2)(0), min, max)(build))
+
+  /** The SQL builder of the kernels sharing `name` (one per input count):
+    * the inputs, then the kernel's SQL constants as literal integers.
+    * `array<double>` inputs accept any numeric array through a cast. */
+  private def fromKernels(name: String, ks: Seq[Kernel]) =
+    function(name, ks.head.usage, ks.map(_.sqlMin).min, ks.map(_.sqlMax).max) { c =>
+      val k = ks.find(k => c.length >= k.sqlMin && c.length <= k.sqlMax).get
+      val (in, lits) = c.splitAt(k.inputs.length)
+      k.expr(in.zip(k.inputs).map {
+        case (e, ArrayType(DoubleType, _)) => Cast(e, ArrayType(DoubleType))
+        case (e, _) => e
+      }, k.consts.zipWithIndex.map { case (const, i) =>
+        if (const.sql && i < lits.length) intArg(lits(i), name) else const.default.get
+      })
+    }
+
+  val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Kernels.all.filter(_.usage != null).groupBy(_.name).toSeq.sortBy(_._1)
+      .map { case (name, ks) => fromKernels(name, ks.sortBy(_.inputs.length)) } ++ Seq(
+    function("sorted_jaccard", "sorted_jaccard(a, b) - Jaccard of sorted long arrays", 2, 2)(
+      c => SortedLongJaccard(c(0), c(1))),
+    function("multi_match",
+      "multi_match(text, array('t1','t2',...)) - distinct listed terms " +
+        "contained in text, in declaration order (one Aho-Corasick pass)", 2, 2)(
+      c => MultiMatch(c(0), stringArrayArg(c(1), "multi_match"))),
+    function("collect_smallest",
+      "collect_smallest(x, limit[, distinct]) - the limit smallest values per group, " +
+        "sorted; bounded aggregation buffer (safe on pathologically hot groups)", 2, 3)(
+      c => CollectSmallest(c(0), intArg(c(1), "collect_smallest"),
+        if (c.length >= 3) boolArg(c(2), "collect_smallest") else false)))
 
   /** Register on an already-built session. */
   def register(spark: SparkSession): Unit = {

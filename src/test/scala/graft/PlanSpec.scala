@@ -463,7 +463,10 @@ class PlanSpec extends SparkSpec {
       "q_gif_features" -> 400,         // inlined 997, staged 320
       "q_gif_frames" -> 600,           // inlined 896, staged 466
       "q_docx_text" -> 500,            // inlined 7143, staged 396
-      "q_pptx_text" -> 500)            // inlined 7139, staged 392
+      "q_pptx_text" -> 500,            // inlined 7139, staged 392
+      "q_audio_meta" -> 250,           // inlined 1064, staged 144
+      "q_container_meta" -> 500,       // inlined 5257, staged 347
+      "q_jpeg_features" -> 250)        // inlined 297, staged 184
     for ((q, budget) <- budgets) {
       val optimized = Queries.all.find(_.name == q).get.run(spark, dir)
         .queryExecution.optimizedPlan

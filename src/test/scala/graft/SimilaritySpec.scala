@@ -427,8 +427,8 @@ class SimilaritySpec extends SparkSpec {
     // Catalyst canonicalization / subexpression elimination — the
     // expression must compare the matrix by value
     def kernel(m: Array[Array[Double]]): Object =
-      org.apache.spark.sql.TopCentroids(
-        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("embedding"), m, 1)
+      org.apache.spark.sql.Kernels.topCentroids.expr(Seq(
+        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("embedding")), Seq(m, 1))
     val e1 = kernel(Array(Array(1.0, 0.0), Array(0.0, 1.0)))
     val e2 = kernel(Array(Array(1.0, 0.0), Array(0.0, 1.0)))
     assert(e1 == e2 && e1.hashCode == e2.hashCode)

@@ -147,6 +147,20 @@ class SqlFunctionsSpec extends SparkSpec {
       e.getCause != null && e.getCause.getMessage.contains("literal integer"))
   }
 
+  test("an integer argument outside the Int range is rejected, not narrowed") {
+    // narrowed, 2^32 + 1 would run as k = 1 and 2^32 + 2 as k = 2
+    for (bad <- Seq(
+        "SELECT minhashes(shingle_hashes64('hello world', 4), 4294967297)",
+        "SELECT zorder_n(array(1, 2), 4294967298)")) {
+      val e = intercept[Exception] { spark.sql(bad).collect() }
+      def chain(t: Throwable): Seq[String] =
+        Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+          .map(x => String.valueOf(x.getMessage)).toSeq
+      assert(chain(e).exists(_.contains("expects a literal integer argument")),
+        s"$bad -> ${chain(e)}")
+    }
+  }
+
   test("sorted_jaccard: a NULL element fails naming its index") {
     def message(e: Throwable): String =
       Iterator.iterate(e)(_.getCause).takeWhile(_ != null)

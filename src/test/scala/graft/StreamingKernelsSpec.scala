@@ -161,8 +161,7 @@ class StreamingKernelsSpec extends SparkSpec {
         .getField("loc").as("loc"),
       graft.operators.Multimodal.pdfText(col("pdf")).as("ptext"),
       graft.operators.Multimodal.pdfMeta(col("pdf")).getField("n_pages").as("np"),
-      org.apache.spark.sql.GraftBridge.column(org.apache.spark.sql.DHash64(
-        org.apache.spark.sql.GraftBridge.expression(col("img")))).as("dh"))
+      org.apache.spark.sql.Kernels.dHash64(col("img")).as("dh"))
     val batch = pipeline(rows.toDF("id", "smgz", "pdf", "img"))
       .collect().map(_.toSeq).toSet
     val input = MemoryStream[(Long, Array[Byte], Array[Byte], Array[Byte])](
@@ -362,8 +361,7 @@ class StreamingKernelsSpec extends SparkSpec {
         .as("ztext"),
       element_at(graft.operators.Multimodal.xlsxCells(col("xl")), 1)
         .getField("value").as("cell"),
-      org.apache.spark.sql.GraftBridge.column(org.apache.spark.sql.DHash64(
-        org.apache.spark.sql.GraftBridge.expression(col("img")))).as("dh"))
+      org.apache.spark.sql.Kernels.dHash64(col("img")).as("dh"))
     val batch = pipeline(rows.toDF("id", "zst", "xl", "img"))
       .collect().map(_.toSeq).toSet
     val input = MemoryStream[(Long, Array[Byte], Array[Byte], Array[Byte])](
