@@ -94,16 +94,9 @@ import org.apache.spark.sql.SparkSession
   * compare pins median-to-median, and call a move drift only when the
   * new median falls OUTSIDE the old run's [min, max] spread. Round 13:
   * the spreads cover SUCCESSFUL samples only (a fast failure is not a
-  * noise floor), and when even the WARMUP sweep cannot finish inside
-  * its budget share, the bench narrows the QUERY SET to a priority
-  * subset at full protocol and names the dropped queries in
-  * `queries_skipped_budget` — see [[narrowSurface]] and BASELINE.md's
-  * round-13 reading rule. (Round 18 re-scoped the narrowing trigger to
-  * warmup aborts only: the old projection compared JIT-inflated warmup
-  * estimates against the budget and skipped 89 of 182 queries on a
-  * machine that then timed the kept half in a third of its budget —
-  * with warmup complete, pass 1 is guaranteed full-surface steady-state
-  * coverage and the mid-pass budget stops already degrade passes 2+.)
+  * noise floor). The bench always times the full surface: pass 1
+  * completes even when the warmup sweep aborted on budget, and the
+  * mid-pass budget stops degrade passes 2+ to fewer samples.
   */
 object Bench {
   /** Idle-machine pinned canary medians (this sandbox, local[32]).
@@ -146,96 +139,6 @@ object Bench {
     "q_filter" -> 0.33)
   val ControlHeadroom = 1.5
 
-  /** Budget-degradation priority (round 13, VERDICT r12 #4). Round 12's
-    * driver spent 1,565 s producing `evidence: false` — warmup 0, one
-    * pass of all 131 queries: a complete measurement of nothing. When
-    * the wall budget cannot afford warmup + `runs` passes of the FULL
-    * surface, the bench now keeps a priority subset at the full
-    * protocol and NAMES the dropped queries
-    * (`queries_skipped_budget`) — a valid reading of 40 queries beats
-    * an invalid reading of 131. Priority: the controls first (the
-    * `evidence` verdict is computed from them), then the loop queries
-    * whose pinned bands need a fresh reading every round, then the
-    * queries newest in the surface (no cross-round history to fall
-    * back on), then everything else alphabetically as budget allows.
-    */
-  val LoopQueries: Seq[String] = Seq(
-    "q_pagerank", "q_dup_clusters_dist", "q_dup_clusters",
-    "q_bpe_train_capped", "q_kmeans", "q_quality_classifier",
-    "q_ann_ivfpq", "q_binary_ingest")
-
-  /** Queries new this round, DERIVED (round 15, VERDICT r14 #2): a
-    * hand-maintained list went stale the one round it mattered —
-    * BENCH_r14 narrowed under budget and four r14-new queries got no
-    * driver reading. "New" now means "present in the registry but
-    * absent from the committed pinning sweep's per-query map"
-    * (`bench_last.json` at HEAD — exactly the set with no pin to fall
-    * back on). `SPARK_GRAFT_NEW_QUERIES` overrides for spec/driver
-    * seams. With no history file, nothing is distinguishable as new.
-    */
-  def newQueries(all: Seq[String], prevPinned: Set[String]): Seq[String] =
-    if (prevPinned.isEmpty) Seq.empty
-    else all.filterNot(prevPinned).sorted
-
-  /** The previous graded sweep's (pinned-query set, budget-skipped
-    * list) from `historyPath`; empty on any parse/read failure — the
-    * bench must never die on its own history. */
-  def priorSurface(historyPath: String): (Set[String], Seq[String]) = {
-    import scala.jdk.CollectionConverters._
-    try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(historyPath)), "UTF-8")
-      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
-      val pinned = Option(root.get("queries"))
-        .map(_.fieldNames.asScala.toSet).getOrElse(Set.empty[String])
-      val skipped = Option(root.get("queries_skipped_budget"))
-        .map(_.elements.asScala.map(_.asText).toSeq)
-        .getOrElse(Seq.empty[String])
-      (pinned, skipped)
-    } catch { case _: Exception => (Set.empty, Seq.empty) }
-  }
-
-  /** Priority-ordered, cost-greedy surface selection: walk the priority
-    * order, keep a query while its projected cost (`est × runs`,
-    * unknown estimates assumed as bad as the worst observed) fits in
-    * 90% of the remaining budget; controls are kept unconditionally
-    * (they are the evidence verdict), and a query that doesn't fit
-    * doesn't block cheaper lower-priority ones. Returns (kept,
-    * skipped) in the surface's original order. Pure — BenchBudgetSpec
-    * pins the degradation order on synthetic estimates.
-    *
-    * Residual ROTATION (round 15, VERDICT r14 #2): after the priority
-    * tiers, `skippedFirst` (last sweep's budget-skipped queries) runs
-    * before the alphabetical rest — under sustained pressure the same
-    * alphabetical tail used to starve every round; now any query
-    * skipped in round N is first in line in round N+1, so the full
-    * surface gets driver coverage within two pressured rounds.
-    */
-  def narrowSurface(all: Seq[String], est: Map[String, Double],
-                    remainingSec: Double, runs: Int,
-                    newQs: Seq[String] = Seq.empty,
-                    skippedFirst: Seq[String] = Seq.empty)
-      : (Seq[String], Seq[String]) = {
-    val prio = (ControlBands.keys.toSeq.sorted ++ LoopQueries ++ newQs)
-      .distinct.filter(all.contains)
-    val rest = all.toSet -- prio
-    val ordered = prio ++
-      skippedFirst.distinct.filter(rest.contains).sorted ++
-      (rest -- skippedFirst).toSeq.sorted
-    val worst = if (est.nonEmpty) est.values.max else 0.0
-    def cost(n: String): Double = est.getOrElse(n, worst) * runs
-    val budget = remainingSec * 0.9
-    var cum = 0.0
-    val keep = scala.collection.mutable.LinkedHashSet.empty[String]
-    ordered.foreach { n =>
-      if (ControlBands.contains(n) || cum + cost(n) <= budget) {
-        keep += n; cum += cost(n)
-      }
-    }
-    if (keep.isEmpty) keep += ordered.head // never an empty surface
-    (all.filter(keep), all.filterNot(keep))
-  }
-
   /** Everything the pipeline needs, env-free so specs can drive it. */
   final case class BenchConfig(
       sfDir: String,
@@ -248,9 +151,6 @@ object Bench {
       ledgerPath: String,
       metricsPath: String,
       warmup: Int = 1,
-      // committed previous pinning sweep, for new-query derivation and
-      // skip rotation (round 15); specs point it at temp files
-      historyPath: String = "bench_last.json",
       // test seam (r14): extra queries merged into the surface so
       // BenchBudgetSpec can plant a deterministically-failing query
       // and pin the failure-handling contract (errors named, spread
@@ -429,88 +329,29 @@ object Bench {
     // pressure it aborts (said in the ledger) and the timed passes, whose
     // pass 1 always completes, still produce a full-surface artifact.
     var warmupCompleted = 0
-    var warmupAborted = false
-    // per-query warmup durations feed the budget projection below (JIT-
-    // inflated vs steady state, i.e. conservative — under pressure the
-    // bench narrows a little more, never less)
-    val warmEst = scala.collection.mutable.HashMap.empty[String, Double]
     locally {
       var w = 0
       while (w < cfg.warmup && elapsedSec <= budgetSec * 0.35) {
         w += 1
         val t0 = System.nanoTime()
         var aborted = false
-        names.foreach { case (name, fn) =>
+        names.foreach { case (_, fn) =>
           if (!aborted && elapsedSec > budgetSec * 0.35) {
-            aborted = true; warmupAborted = true
+            aborted = true
             ledger(s"""{"event":"warmup_stop_budget","pass":$w,"elapsed_sec":${r3(elapsedSec)}}""")
           }
-          if (!aborted) {
-            val q0 = System.nanoTime()
-            try force(fn(spark, sfDir)) catch { case _: Throwable => () }
-            warmEst(name) = (System.nanoTime() - q0) / 1e9
-          }
+          if (!aborted) try force(fn(spark, sfDir)) catch { case _: Throwable => () }
         }
         if (!aborted) warmupCompleted = w
         ledger(s"""{"event":"warmup_pass","n":$w,"sec":${r3((System.nanoTime() - t0) / 1e9)},"complete":${!aborted}}""")
       }
     }
 
-    // ---- budget-aware surface narrowing (round 13, VERDICT r12 #4;
-    // re-scoped round 18, VERDICT r17 #2): narrowing now engages ONLY
-    // when the warmup sweep itself ABORTED on budget. Round 17's driver
-    // budget-skipped 89 of 182 queries because the projection below
-    // compared `runs` full passes against the remaining budget using
-    // JIT-INFLATED warmup estimates (warmup readings run up to 11× the
-    // steady state — the round-11 measurement that motivated the warmup
-    // sweep in the first place), so a machine that could comfortably
-    // time everything narrowed anyway. When warmup COMPLETED, the full
-    // surface is timed: pass 1 always completes (every query gets one
-    // steady-state sample) and the existing mid-pass budget stops
-    // degrade passes 2+ to fewer samples — full-surface coverage with
-    // graceful precision loss, instead of precise coverage of half the
-    // surface. A warmup abort still means the machine cannot even
-    // sweep the surface once in 35% of the budget, and there the
-    // round-13 contract stands: a valid reading of the priority subset
-    // at full protocol beats an invalid reading of everything.
-    val (timedNames, skippedBudget) = {
-      val remaining = budgetSec * 0.70 - elapsedSec
-      if (warmEst.isEmpty) (names, Seq.empty[String])
-      else {
-        if (!warmupAborted)
-          (names, Seq.empty[String])
-        else {
-          val (prevPinned, prevSkipped) = priorSurface(cfg.historyPath)
-          val newQs = sys.env.get("SPARK_GRAFT_NEW_QUERIES") match {
-            case Some(s) => s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-            case None => newQueries(names.map(_._1), prevPinned)
-          }
-          val (keep, skip) = narrowSurface(names.map(_._1), warmEst.toMap,
-            remaining, runs, newQs, prevSkipped)
-          val keepSet = keep.toSet
-          ledger(s"""{"event":"surface_narrowed_budget","kept":${keep.size},"skipped":${skip.size},"remaining_sec":${r3(remaining)},"new_queries":${newQs.map("\"" + _ + "\"").mkString("[", ",", "]")},"rotated_first":${prevSkipped.size}}""")
-          (names.filter { case (n, _) => keepSet(n) }, skip)
-        }
-      }
-    }
-    // a narrowed surface whose warmup sweep was cut short still gets its
-    // steady-state window: one untimed subset sweep (bounded at half the
-    // total budget) before the timed passes begin
-    if (skippedBudget.nonEmpty && warmupAborted && warmupCompleted == 0) {
-      var aborted = false
-      timedNames.foreach { case (_, fn) =>
-        if (elapsedSec > budgetSec * 0.5) aborted = true
-        if (!aborted) try force(fn(spark, sfDir)) catch { case _: Throwable => () }
-      }
-      if (!aborted) warmupCompleted = 1
-      ledger(s"""{"event":"warmup_pass_subset","complete":${!aborted},"elapsed_sec":${r3(elapsedSec)}}""")
-    }
-
     val canaries = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
     // per-query samples accumulate across passes; pass 2+ may stop early
     // on budget, so sample counts can differ per query (≥1 always)
     val acc = scala.collection.mutable.LinkedHashMap(
-      timedNames.map { case (n, _) => n -> scala.collection.mutable.ArrayBuffer.empty[(Double, Boolean)] }: _*)
+      names.map { case (n, _) => n -> scala.collection.mutable.ArrayBuffer.empty[(Double, Boolean)] }: _*)
     var passesCompleted = 0
     var budgetStopped = false
 
@@ -520,7 +361,7 @@ object Bench {
     var metricRowsOut: Seq[(String, BenchMetrics.Snap)] = Nil
     var metricsSkippedBudget = false
     def summaryLine(): String = {
-      val results = timedNames.map { case (name, _) =>
+      val results = names.map { case (name, _) =>
         val mine = acc(name)
         val ts = mine.map(_._1).toSeq
         // the jitter spread covers SUCCESSFUL samples only (ADVICE r12):
@@ -582,9 +423,8 @@ object Bench {
         (if (controlFields.nonEmpty) controlFields + "," else "") +
         s""""controls_in_band":${jb(controlsInBand)},"evidence":${jb(evidence)},""" +
         s""""metrics_skipped_budget":$metricsSkippedBudget,""" +
-        s""""queries_skipped_budget":${skippedBudget.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
         s""""schema_drift":${schemaDrift.size},"sf":"$sfDir"""" +
-        metricAggFields(metricRowsOut, timedNames.size) + "}"
+        metricAggFields(metricRowsOut, names.size) + "}"
     }
 
     // ---- timed passes. Pass 1 always completes (every query needs ≥1
@@ -599,7 +439,7 @@ object Bench {
       canaries += ((cc, cs))
       ledger(s"""{"event":"canary","pass":$pass,"compute_sec":${r3(cc)},"sched_sec":${r3(cs)}}""")
       var stopped = false
-      timedNames.foreach { case (name, fn) =>
+      names.foreach { case (name, fn) =>
         if (!stopped && pass > 1 && elapsedSec > timedBudget) {
           stopped = true; budgetStopped = true
           ledger(s"""{"event":"budget_stop","pass":$pass,"elapsed_sec":${r3(elapsedSec)}}""")
@@ -649,7 +489,7 @@ object Bench {
       if (!metricsOn || metricsSkippedBudget) Nil else {
         val ml = BenchMetrics.attach(spark)
         val rows = scala.collection.mutable.ArrayBuffer.empty[(String, BenchMetrics.Snap)]
-        val it = timedNames.iterator
+        val it = names.iterator
         var stopped = false
         while (it.hasNext && !stopped) {
           val (name, fn) = it.next()

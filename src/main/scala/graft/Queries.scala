@@ -2286,10 +2286,8 @@ object Queries {
         lit("64617461"), le32h(dataLen),
         le16h(a * 256),
         array_join(array_repeat(le16h(lit(65536) - b * 256), n - 1), ""))
-      val blobHex = when(pmod(id, lit(7)) === 0,
-        substring(wavHex, 1, 50)).otherwise(wavHex)
-      val media = t(s, dir, "documents")
-        .select(col("doc_id"), unhex(blobHex).as("blob"))
+      val media = truncatedBlob(
+        t(s, dir, "documents").select(id, wavHex.as("hex")), 50)
       Multimodal.featurize(media, "doc_id", "blob", dim = 5,
           decoder = Multimodal.pcm)
         .select(col("media_id").cast("bigint").as("media_id"),
@@ -2357,10 +2355,8 @@ object Queries {
         le32h(lit(8000)), le32h(lit(7111)), le16h(lit(8)), le16h(lit(4)),
         le16h(lit(2)), le16h(lit(9)),
         lit("64617461"), le32h(nb * 8), blocksHex)
-      val blobHex = when(pmod(id, lit(7)) === 0,
-        substring(wavHex, 1, 50)).otherwise(wavHex)
-      val media = t(s, dir, "documents")
-        .select(col("doc_id"), unhex(blobHex).as("blob"))
+      val media = truncatedBlob(
+        t(s, dir, "documents").select(id, wavHex.as("hex")), 50)
       Multimodal.featurize(media, "doc_id", "blob", dim = 5,
           decoder = Multimodal.pcm)
         .select(col("media_id").cast("bigint").as("media_id"),
@@ -2430,10 +2426,8 @@ object Queries {
         lit("53534E44"), be32h(lit(8) + n * 2), be32h(lit(0)), be32h(lit(0)),
         aiffData)
       val wavHex = when(isAu, auHex).otherwise(aiffHex)
-      val blobHex = when(pmod(id, lit(7)) === 0,
-        substring(wavHex, 1, 50)).otherwise(wavHex)
-      val media = t(s, dir, "documents")
-        .select(col("doc_id"), unhex(blobHex).as("blob"))
+      val media = truncatedBlob(
+        t(s, dir, "documents").select(id, wavHex.as("hex")), 50)
       Multimodal.featurize(media, "doc_id", "blob", dim = 5,
           decoder = Multimodal.pcm)
         .select(col("media_id").cast("bigint").as("media_id"),
@@ -2528,10 +2522,8 @@ object Queries {
         lit("52494646"), le32h(lit(60) + dataLen), lit("57415645"),
         lit("666D7420"), le32h(lit(40)), fmtHex,
         lit("64617461"), le32h(dataLen), dataHex)
-      val blobHex = when(pmod(id, lit(7)) === 0,
-        substring(wavHex, 1, 50)).otherwise(wavHex)
-      val media = t(s, dir, "documents")
-        .select(col("doc_id"), unhex(blobHex).as("blob"))
+      val media = truncatedBlob(
+        t(s, dir, "documents").select(id, wavHex.as("hex")), 50)
       Multimodal.featurize(media, "doc_id", "blob", dim = 5,
           decoder = Multimodal.pcm)
         .select(col("media_id").cast("bigint").as("media_id"),
@@ -2598,9 +2590,8 @@ object Queries {
         .foldLeft(lit(null).cast("string")) { case (acc, (b, f)) =>
           when(bsf === b && sff === f, tpl(b, f)).otherwise(acc)
         }
-      val blobHex = when(pmod(id, lit(7)) === 0,
-        substring(fullHex, 1, 40)).otherwise(fullHex)
-      val media = t(s, dir, "documents").select(id, unhex(blobHex).as("blob"))
+      val media = truncatedBlob(
+        t(s, dir, "documents").select(id, fullHex.as("hex")), 40)
       Multimodal.featurize(media, "doc_id", "blob", dim = 5,
           decoder = Multimodal.pcm)
         .select(col("media_id").cast("bigint").as("media_id"),
@@ -2642,10 +2633,8 @@ object Queries {
         lit("666D7420"), le32h(lit(16)), le16h(fmt), le16h(lit(1)),
         le32h(lit(8000)), le32h(lit(8000)), le16h(lit(1)), le16h(lit(8)),
         lit("64617461"), le32h(n), dataHex)
-      val blobHex = when(pmod(id, lit(7)) === 0,
-        substring(wavHex, 1, 50)).otherwise(wavHex)
-      val media = t(s, dir, "documents")
-        .select(col("doc_id"), unhex(blobHex).as("blob"))
+      val media = truncatedBlob(
+        t(s, dir, "documents").select(id, wavHex.as("hex")), 50)
       Multimodal.featurize(media, "doc_id", "blob", dim = 5,
           decoder = Multimodal.pcm)
         .select(col("media_id").cast("bigint").as("media_id"),

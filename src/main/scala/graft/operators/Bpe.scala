@@ -81,10 +81,9 @@ object Bpe {
     * words, it is collected and merge iteration runs in plain
     * collections ([[trainLocal]]) — the declared-budget pattern
     * `Dedup.dupClusters` established. 0 forces the distributed
-    * incremental path (what `q_bpe_train_capped` and `BpeScale` do,
-    * keeping it oracle-checked and measured). Both paths select
-    * identical merge sequences; BpeSpec pins each against the same
-    * independent reference.
+    * incremental path (what `q_bpe_train_capped` does, keeping it
+    * oracle-checked). Both paths select identical merge sequences;
+    * BpeSpec pins each against the same independent reference.
     *
     * Pair counts are maintained INCREMENTALLY: the full explode+count
     * census runs once, and each merge then updates only the words that
@@ -111,7 +110,6 @@ object Bpe {
     */
   def train(docs: DataFrame, textCol: String, numMerges: Int,
             maxDictWords: Int = Int.MaxValue,
-            onMerge: (Int, Long) => Unit = (_, _) => (),
             localDictLimit: Int = 1 << 16): Seq[(String, String)] = {
     require(numMerges >= 1 && numMerges <= 65536,
       s"numMerges must be in [1, 65536], got $numMerges")
@@ -140,7 +138,7 @@ object Bpe {
         .limit(localDictLimit + 1).collect()
       if (probe.length <= localDictLimit) {
         val d = probe.map(r => (r.getString(0), r.getLong(1)))
-        return trainLocal(d, numMerges, onMerge)
+        return trainLocal(d, numMerges)
       }
     }
     var dict = capped.localCheckpoint()
@@ -162,7 +160,6 @@ object Bpe {
     var exhausted = false
     var sinceCkpt = 0
     while (merges.size < numMerges && !exhausted) {
-      val iterT0 = System.nanoTime()
       val best = pc.orderBy(desc("c"), asc("a"), asc("b")).limit(1).collect()
       if (best.isEmpty) exhausted = true
       else {
@@ -214,9 +211,6 @@ object Bpe {
           pending = Nil
           sinceCkpt = 0
         }
-        // instrumentation hook (BpeScale / SCALING.md): rank + wall ms
-        // of this merge, checkpoint cadence included
-        onMerge(merges.size, (System.nanoTime() - iterT0) / 1000000L)
       }
     }
     (retired ++ pending).foreach(unpersistCheckpoint)
@@ -233,8 +227,8 @@ object Bpe {
     * binary order — definitionally Spark's string ordering, so both
     * paths select identical merge sequences (BpeSpec pins both
     * against the independent reference). */
-  private def trainLocal(dict: Array[(String, Long)], numMerges: Int,
-                         onMerge: (Int, Long) => Unit): Seq[(String, String)] = {
+  private def trainLocal(dict: Array[(String, Long)],
+                         numMerges: Int): Seq[(String, String)] = {
     import graft.functions.BpeKernels
     import org.apache.spark.unsafe.types.UTF8String
     def u8lt(a: String, b: String): Boolean =
@@ -254,7 +248,6 @@ object Bpe {
     syms.indices.foreach(i => addPairs(syms(i), cnts(i)))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     while (merges.size < numMerges && pc.nonEmpty) {
-      val t0 = System.nanoTime()
       var bk: (String, String) = null
       var bc = 0L
       pc.foreach { case (k, c) =>
@@ -279,7 +272,6 @@ object Bpe {
         }
         i += 1
       }
-      onMerge(merges.size, (System.nanoTime() - t0) / 1000000L)
     }
     merges.toSeq
   }

@@ -274,7 +274,7 @@ object Dedup {
     * ~C(bands,keyBands)·n²/2^(k·64/b). With 8 bands / maxHamming 6,
     * keyBands=2 gives 28 tables of 16-bit keys: 73× fewer accidental
     * candidates, the difference between a ~10M-image regime and a
-    * ~1B-image one (PhashScale measures both). */
+    * ~1B-image one (SCALING.md records both). */
   /** All keyBands-subsets of band indices, in lexicographic order —
     * shared by the pair ops and the persisted index so keys align. */
   private[operators] def bandSubsets(bands: Int, keyBands: Int): Seq[Seq[Int]] =

@@ -256,10 +256,9 @@ object FuzzyMatch {
   /** Distinct candidate VALUE pairs (`__ft_mf`, `__ft_lf`) generated by
     * the (band, signature) equi-join, BEFORE exact verification —
     * [[thresholdJoin]] scores and filters exactly these. Exposed
-    * package-private so the skew/pruning measurement (FuzzySkewScale →
-    * SCALING.md) can count candidates against the brute-force
-    * |distinct main| × |distinct lookup| without re-implementing the
-    * construction it measures.
+    * package-private so FuzzyMatchSpec can count candidates against the
+    * brute-force |distinct main| × |distinct lookup| without
+    * re-implementing the construction it checks.
     */
   private[graft] def thresholdCandidates(main: DataFrame, mainField: String,
                                          lookup: DataFrame, lookupField: String,

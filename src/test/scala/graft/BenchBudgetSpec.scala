@@ -26,93 +26,9 @@ class BenchBudgetSpec extends SparkSpec {
     ledgerPath = s"$dir/ledger.jsonl",
     metricsPath = s"$dir/metrics.json")
 
-  test("budget narrowing (r13): controls, then loop queries, then new, then " +
-    "alphabetical — cost-greedy, controls unconditional, skipped returned") {
-    val all = Seq("q_agg", "q_alpha", "q_dup_clusters_dist", "q_filter",
-      "q_kmeans", "q_pagerank", "q_zeta")
-    val est = Map("q_agg" -> 1.0, "q_filter" -> 1.0, "q_pagerank" -> 10.0,
-      "q_dup_clusters_dist" -> 10.0, "q_kmeans" -> 10.0,
-      "q_alpha" -> 1.0, "q_zeta" -> 1.0)
-    // budget 90 (= 100 × 0.9), runs 3: controls cost 3+3, pagerank 30
-    // (cum 36), dup_clusters_dist 30 (66), kmeans 30 would hit 96 > 90
-    // → SKIPPED; the cheaper alphabetical tail still fits (69, 72)
-    val (keep, skip) = Bench.narrowSurface(all, est, remainingSec = 100.0, runs = 3)
-    assert(skip === Seq("q_kmeans"))
-    assert(keep.toSet === all.toSet - "q_kmeans")
-    // surface order is preserved for a stable artifact layout
-    assert(keep === all.filterNot(_ == "q_kmeans"))
-
-    // zero remaining budget: the controls are kept UNCONDITIONALLY (the
-    // evidence verdict is computed from them), everything else drops
-    val (keepMin, skipMin) = Bench.narrowSurface(all, est, remainingSec = 0.0, runs = 3)
-    assert(keepMin === Seq("q_agg", "q_filter"))
-    assert(skipMin.toSet === all.toSet -- keepMin)
-
-    // a query the warmup never reached is costed as bad as the WORST
-    // observed estimate (here q_big's 10 s) — optimism must not
-    // re-inflate the surface: q_unseen projects at 30 s and drops,
-    // while the cheap measured query still fits
-    val (keepW, skipW) = Bench.narrowSurface(
-      Seq("q_agg", "q_big", "q_cheap", "q_unseen"),
-      Map("q_agg" -> 1.0, "q_big" -> 10.0, "q_cheap" -> 1.0),
-      remainingSec = 10.0, runs = 3)
-    assert(!keepW.contains("q_unseen") && keepW.contains("q_cheap"))
-    assert(skipW.toSet === Set("q_big", "q_unseen"))
-
-    // a surface without controls never narrows to nothing
-    val (keepNc, _) = Bench.narrowSurface(
-      Seq("q_x", "q_y"), Map("q_x" -> 5.0, "q_y" -> 5.0),
-      remainingSec = 0.0, runs = 3)
-    assert(keepNc.nonEmpty)
-  }
-
-  test("new queries derive from the committed pin surface, not a " +
-    "hand-maintained list (r15, VERDICT r14 #2)") {
-    val all = Seq("q_agg", "q_filter", "q_new_a", "q_new_b", "q_old")
-    // everything pinned last round except the two r-new queries
-    val prevPinned = Set("q_agg", "q_filter", "q_old")
-    assert(Bench.newQueries(all, prevPinned) === Seq("q_new_a", "q_new_b"))
-    // no history → nothing distinguishable as new (never guess)
-    assert(Bench.newQueries(all, Set.empty) === Seq.empty)
-    // and the derived set rides the priority tier: under a budget that
-    // fits only controls + 2 more, the NEW queries survive while the
-    // alphabetically-earlier old query drops
-    val est = all.map(_ -> 1.0).toMap
-    val (keep, _) = Bench.narrowSurface(all, est, remainingSec = 14.0,
-      runs = 3, newQs = Seq("q_new_a", "q_new_b"))
-    assert(keep.toSet === Set("q_agg", "q_filter", "q_new_a", "q_new_b"))
-  }
-
-  test("skip rotation: queries skipped last sweep run first in the " +
-    "residual, so the full surface is covered within 2 pressured rounds") {
-    val all = (1 to 8).map(i => f"q_t$i%02d") ++ Seq("q_agg", "q_filter")
-    val est = all.map(_ -> 1.0).toMap
-    // budget fits controls + 4 residuals per round (remaining 20 ×
-    // 0.9 = 18; 6 queries × 3 runs = 18)
-    val (keep1, skip1) = Bench.narrowSurface(all, est, 20.0, 3)
-    assert(keep1.count(_.startsWith("q_t")) === 4)
-    // round 2: last round's skips go first
-    val (keep2, skip2) = Bench.narrowSurface(all, est, 20.0, 3,
-      skippedFirst = skip1)
-    assert(skip1.toSet.subsetOf(keep2.toSet),
-      s"rotation must run all previously-skipped first: $skip1 vs $keep2")
-    // two pressured rounds cover every query
-    assert((keep1 ++ keep2).toSet === all.toSet)
-    assert(skip2.toSet.subsetOf(keep1.toSet))
-  }
-
-  test("priorSurface reads the committed sweep (pinned set + skipped " +
-    "list) and never dies on absent/garbage history") {
-    val dir = Files.createTempDirectory("graft_hist").toString
-    val p = s"$dir/hist.json"
-    Files.write(Paths.get(p),
-      """{"queries":{"q_a":1.0,"q_b":2.0},"queries_skipped_budget":["q_c","q_d"]}"""
-        .getBytes("UTF-8"))
-    assert(Bench.priorSurface(p) === ((Set("q_a", "q_b"), Seq("q_c", "q_d"))))
-    assert(Bench.priorSurface(s"$dir/absent.json") === ((Set.empty, Seq.empty)))
-    Files.write(Paths.get(p), "not json{".getBytes("UTF-8"))
-    assert(Bench.priorSurface(p) === ((Set.empty, Seq.empty)))
-  }
+  private def ledgerEvents(dir: String): Seq[String] =
+    Files.readAllLines(Paths.get(s"$dir/ledger.jsonl")).asScala.toSeq
+      .filter(_.nonEmpty).map(l => mapper.readTree(l).get("event").asText())
 
   test("exhausted budget degrades to a full-surface 1-pass artifact") {
     val dir = Files.createTempDirectory("graft_benchbudget").toString
@@ -136,10 +52,6 @@ class BenchBudgetSpec extends SparkSpec {
     // an exhausted budget also means no warmup sweep completed — the
     // artifact must not claim a steady-state window it never had
     assert(root.get("warmup_passes").asInt() === 0)
-    // with no warmup sweep there are no per-query estimates, so the
-    // r13 narrowing CANNOT engage — the surface stays full and the
-    // skip list is affirmatively empty (not absent)
-    assert(root.get("queries_skipped_budget").size() === 0)
     // skipped metrics ⇒ no aggregate totals that could masquerade as a
     // full-surface measurement
     assert(root.get("shuffle_write_mb_total") == null)
@@ -147,11 +59,12 @@ class BenchBudgetSpec extends SparkSpec {
     // the persisted summary equals the returned line, and the ledger is
     // line-parseable with the stop events on record
     assert(Files.readString(Paths.get(s"$dir/summary.json")).trim === line)
-    val events = Files.readAllLines(Paths.get(s"$dir/ledger.jsonl")).asScala
-      .filter(_.nonEmpty).map(l => mapper.readTree(l).get("event").asText())
+    val events = ledgerEvents(dir)
     assert(events.count(_ == "query") === surface.size)
     assert(events.contains("budget_stop_between_passes"))
     assert(events.contains("metrics_skipped_budget"))
+    // an aborted warmup never narrows the timed surface
+    assert(!events.contains("surface_narrowed_budget"))
   }
 
   test("planted mid-run failure (r14): errors name the query, the jitter " +
@@ -196,6 +109,7 @@ class BenchBudgetSpec extends SparkSpec {
     // errors), never a min/max synthesized from failure times
     assert(root.get("queries_min").get("q_dead_planted").isNull)
     assert(root.get("queries_max").get("q_dead_planted").isNull)
+    assert(!ledgerEvents(dir).contains("surface_narrowed_budget"))
     // untouched queries keep a full non-null spread
     surface.foreach { q =>
       assert(!root.get("queries_min").get(q).isNull)
@@ -213,8 +127,7 @@ class BenchBudgetSpec extends SparkSpec {
     assert(root.get("warmup_passes").asInt() === 1)
     assert(!root.get("budget_stopped").asBoolean())
     assert(!root.get("metrics_skipped_budget").asBoolean())
-    // ample budget: warmup projection fits, nothing narrowed
-    assert(root.get("queries_skipped_budget").size() === 0)
+    assert(!ledgerEvents(dir).contains("surface_narrowed_budget"))
     // full coverage is structurally visible (ADVICE r10): covered==total
     assert(root.get("metrics_queries_covered").asInt() === surface.size)
     assert(root.get("metrics_queries_total").asInt() === surface.size)

@@ -48,7 +48,7 @@ class DedupSpec extends SparkSpec {
 
   test("spanDuplication: saltBuckets > 1 is result-identical to the plain join") {
     // boilerplate-skewed corpus in miniature: every even doc shares one
-    // hot gram (the shape SkewStress measures at 8M docs)
+    // hot gram (the shape SCALING.md's skew measurement used at 8M docs)
     val skewed = (1L to 40L).map(i =>
       (i, if (i % 2 == 0) s"u${i}a u${i}b u${i}c hot bp gram"
           else s"u${i}a u${i}b u${i}c u${i}d u${i}e u${i}f")).toDF("doc_id", "text")

@@ -220,7 +220,7 @@ class FuzzyMatchSpec extends SparkSpec {
       assert(got == want,
         s"tau=$tau: missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
     }
-    // the candidate set the probe measures is the one the join verifies:
+    // the candidate set thresholdCandidates counts is the one the join verifies:
     // bounded above by brute force, bounded below by the qualifying pairs
     val cands = FuzzyMatch.thresholdCandidates(
       mains, "name", lookups, "cname", 0.93).count()

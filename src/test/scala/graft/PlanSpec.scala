@@ -466,7 +466,13 @@ class PlanSpec extends SparkSpec {
       "q_pptx_text" -> 500,            // inlined 7139, staged 392
       "q_audio_meta" -> 250,           // inlined 1064, staged 144
       "q_container_meta" -> 500,       // inlined 5257, staged 347
-      "q_jpeg_features" -> 250)        // inlined 297, staged 184
+      "q_jpeg_features" -> 250,        // inlined 297, staged 184
+      "q_audio_features" -> 700,       // inlined 993, staged 531
+      "q_audio_adpcm" -> 400,          // inlined 497, staged 283
+      "q_audio_containers" -> 600,     // inlined 845, staged 457
+      "q_audio_extensible" -> 1000,    // inlined 1485, staged 777
+      "q_audio_flac" -> 650,           // inlined 917, staged 493
+      "q_audio_g711" -> 350)           // inlined 481, staged 275
     for ((q, budget) <- budgets) {
       val optimized = Queries.all.find(_.name == q).get.run(spark, dir)
         .queryExecution.optimizedPlan

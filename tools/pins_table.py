@@ -45,11 +45,6 @@ def main(bench_path, baseline_path):
     for q in sorted(qs):
         lines.append(
             f"| {q} | {qs[q]:.3f} | [{fmt(qmin.get(q))}–{fmt(qmax.get(q))}] |")
-    skipped = d.get("queries_skipped_budget", [])
-    if skipped:
-        lines += ["", f"Skipped under budget narrowing ({len(skipped)}): "
-                  + ", ".join(skipped) + " — these keep their previous "
-                  "round's pins."]
     lines += ["", END]
     block = "\n".join(lines)
 
