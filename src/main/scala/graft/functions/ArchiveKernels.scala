@@ -33,25 +33,10 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
   */
 object ArchiveKernels {
 
-  private object Bad extends RuntimeException("archive: malformed") {
-    override def fillInStackTrace(): Throwable = this
-  }
+  import Decode.{Bad, Cursor, Refused, leU16, leU32, leU64}
 
   private val MaxBlocks = 1 << 20
 
-  private def leU16(b: Array[Byte], i: Int): Int = {
-    if (i + 2 > b.length) throw Bad
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  }
-  private def leU32(b: Array[Byte], i: Int): Long = {
-    if (i + 4 > b.length) throw Bad
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-  }
-  private def leU64(b: Array[Byte], i: Int): Long = {
-    if (i + 8 > b.length) throw Bad
-    leU32(b, i) | (leU32(b, i + 4) << 32)
-  }
   private def crc32(b: Array[Byte], off: Int, len: Int): Long = {
     if (off < 0 || len < 0 || off + len > b.length) throw Bad
     val c = new java.util.zip.CRC32
@@ -86,29 +71,13 @@ object ArchiveKernels {
       new GenericInternalRow(Array[Any](
         org.apache.spark.unsafe.types.UTF8String.fromString(s"$major.$minor"),
         size, encoded, off))
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 
   val Rar5Magic: Array[Byte] =
     Array(0x52, 0x61, 0x72, 0x21, 0x1A, 0x07, 0x01, 0x00).map(_.toByte)
   val Rar4Magic: Array[Byte] =
     Array(0x52, 0x61, 0x72, 0x21, 0x1A, 0x07, 0x00).map(_.toByte)
-
-  /** RAR5 vint at `pos`: (value, next pos). */
-  private def vint(b: Array[Byte], pos: Int): (Long, Int) = {
-    var v = 0L
-    var p = pos
-    var shift = 0
-    while (shift < 70) {
-      if (p >= b.length) throw Bad
-      val by = b(p) & 0xff
-      v |= (by & 0x7fL) << shift
-      p += 1
-      if ((by & 0x80) == 0) return (v, p)
-      shift += 7
-    }
-    throw Bad
-  }
 
   /** struct(version, n_blocks, n_files, encrypted), or null. */
   def rarMeta(b: Array[Byte]): GenericInternalRow = {
@@ -119,7 +88,7 @@ object ArchiveKernels {
       else if (b.length >= 7 && (0 until 7).forall(i => b(i) == Rar4Magic(i)))
         rar4Walk(b)
       else null
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 
   private def row(v: Int, blocks: Long, files: Long,
@@ -135,21 +104,18 @@ object ArchiveKernels {
     while (!done && pos < b.length) {
       if (blocks > MaxBlocks) throw Bad
       val crc = leU32(b, pos)
-      val (hsize, afterSize) = vint(b, pos + 4)
+      val r = new Cursor(b, pos + 4, b.length) // RAR5 vints are LEB128
+      val hsize = r.varint()
+      val afterSize = r.pos
       if (hsize <= 0 || hsize > Int.MaxValue ||
           afterSize + hsize > b.length) throw Bad
       // CRC32 covers the size field through the header end
       if (crc32(b, pos + 4, afterSize - (pos + 4) + hsize.toInt) != crc)
         throw Bad
-      val (tpe, afterType) = vint(b, afterSize)
-      val (flags, afterFlags) = vint(b, afterType)
-      var p = afterFlags
-      if ((flags & 1L) != 0) p = vint(b, p)._2 // extra area size
-      var dataSize = 0L
-      if ((flags & 2L) != 0) {
-        val (ds, p2) = vint(b, p)
-        dataSize = ds; p = p2
-      }
+      val tpe = r.varint()
+      val flags = r.varint()
+      if ((flags & 1L) != 0) r.varint() // extra area size
+      val dataSize = if ((flags & 2L) != 0) r.varint() else 0L
       if (dataSize < 0 || dataSize > Int.MaxValue) throw Bad
       blocks += 1
       tpe match {

@@ -25,6 +25,8 @@ package graft.functions
   */
 object AudioKernels {
 
+  import Decode.{beI32, beU16, leI32, leU16}
+
   /** Decoded summary over all interleaved samples, amplitudes
     * normalized to [-1, 1]: 16-bit as v/32768, 8-bit as (v-128)/128.
     * `meanAbs`/`meanSq`/`peak` are exact IEEE-double statistics;
@@ -96,12 +98,6 @@ object AudioKernels {
   private val KsGuidSuffix: Array[Int] = Array(
     0x00, 0x00, 0x00, 0x00, 0x10, 0x00,
     0x80, 0x00, 0x00, 0xAA, 0x00, 0x38, 0x9B, 0x71)
-
-  private def leU16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def leI32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-      ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
 
   /** ITU-T G.711 µ-law byte → linear 16-bit sample (range ±32124).
     * Complement, then mantissa·8 + bias 0x84 shifted by the segment;
@@ -178,12 +174,6 @@ object AudioKernels {
       return FlacKernels.decode(b, sink) // round 13: lossless tier
     decodeWav(b, sink)
   }
-
-  private def beI32(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) |
-      ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-  private def beU16(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
 
   /** Sun AU (.snd): 24-byte big-endian header (magic, data offset,
     * data size — 0xFFFFFFFF = until EOF — encoding, rate, channels).

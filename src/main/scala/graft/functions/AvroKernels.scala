@@ -22,6 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object AvroKernels {
 
+  import Decode.{Bad, Cursor, Refused}
+
   import org.apache.spark.sql.types._
   val schema: StructType = StructType(Seq(
     StructField("schema_json", StringType, nullable = false),
@@ -29,55 +31,26 @@ object AvroKernels {
     StructField("n_blocks", LongType, nullable = false),
     StructField("n_records", LongType, nullable = false)))
 
-  private object Bad extends RuntimeException("avro: malformed") {
-    override def fillInStackTrace(): Throwable = this
-  }
-
-  private final class R(val b: Array[Byte]) {
-    var i = 0
-    def varLong(): Long = { // zigzag varint
-      var shift = 0
-      var acc = 0L
-      var going = true
-      while (going) {
-        if (i >= b.length || shift > 63) throw Bad
-        val byte = b(i) & 0xff
-        i += 1
-        acc |= (byte & 0x7fL) << shift
-        shift += 7
-        going = (byte & 0x80) != 0
-      }
-      (acc >>> 1) ^ -(acc & 1)
-    }
-    def bytes(n: Long): Array[Byte] = {
-      if (n < 0 || i + n > b.length) throw Bad
-      val out = java.util.Arrays.copyOfRange(b, i, (i + n).toInt)
-      i += n.toInt
-      out
-    }
-  }
-
   def meta(b: Array[Byte]): InternalRow = {
     if (b == null || b.length < 4 ||
         b(0) != 'O' || b(1) != 'b' || b(2) != 'j' || b(3) != 1) return null
     try {
-      val r = new R(b)
-      r.i = 4
+      val r = new Cursor(b, 4, b.length)
       var schemaJson: String = null
       var codec = "null"
       // metadata map: blocks of (count [, byteSize if count<0]) pairs
       var going = true
       while (going) {
-        var n = r.varLong()
+        var n = r.zigzag()
         if (n == 0) going = false
         else {
-          if (n < 0) { n = -n; r.varLong() } // block byte size: skip
+          if (n < 0) { n = -n; r.zigzag() } // block byte size: skip
           if (n > 1000) throw Bad
           var k = 0L
           while (k < n) {
-            val key = new String(r.bytes(r.varLong()),
+            val key = new String(r.bytes(r.zigzag()),
               java.nio.charset.StandardCharsets.UTF_8)
-            val value = r.bytes(r.varLong())
+            val value = r.bytes(r.zigzag())
             if (key == "avro.schema")
               schemaJson = new String(value, java.nio.charset.StandardCharsets.UTF_8)
             else if (key == "avro.codec")
@@ -90,9 +63,9 @@ object AvroKernels {
       val sync = r.bytes(16)
       var nBlocks = 0L
       var nRecords = 0L
-      while (r.i < b.length) {
-        val count = r.varLong()
-        val size = r.varLong()
+      while (r.pos < r.end) {
+        val count = r.zigzag()
+        val size = r.zigzag()
         if (count < 0 || size < 0) throw Bad
         r.bytes(size) // the block data: framed, not decoded
         val s2 = r.bytes(16)
@@ -104,6 +77,6 @@ object AvroKernels {
       new GenericInternalRow(Array[Any](
         UTF8String.fromString(schemaJson), UTF8String.fromString(codec),
         nBlocks, nRecords))
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 }

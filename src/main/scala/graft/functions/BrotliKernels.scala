@@ -41,11 +41,7 @@ package graft.functions
   */
 object BrotliKernels {
 
-  private val MaxOut = 1 << 28 // 256 MB inflation cap
-
-  private object Bad extends RuntimeException("brotli: malformed") {
-    override def fillInStackTrace(): Throwable = this
-  }
+  import Decode.{Bad, Br, Huff, MaxOut, Refused}
 
   // -----------------------------------------------------------------
   // Static data (RFC 7932 appendices)
@@ -110,153 +106,6 @@ object BrotliKernels {
   /** Command code -> (insert range, copy range) (RFC 5.3). */
   private val InsertRangeLut: Array[Int] = Array(0, 0, 8, 8, 0, 16, 8, 16, 16)
   private val CopyRangeLut: Array[Int] = Array(0, 8, 0, 8, 16, 0, 16, 8, 16)
-
-  // -----------------------------------------------------------------
-  // Bit reader: LSB-first within each byte (RFC 1.5)
-  // -----------------------------------------------------------------
-  private final class Br(val b: Array[Byte]) {
-    private val nbits: Long = b.length.toLong << 3
-    var pos: Long = 0L
-
-    /** n in [0,24]. */
-    def readBits(n: Int): Int = {
-      if (n == 0) return 0
-      if (pos + n > nbits) throw Bad
-      var i = (pos >>> 3).toInt
-      val sh = (pos & 7L).toInt
-      var acc = 0L
-      var k = 0
-      val need = sh + n
-      while (k < need) { acc |= (b(i) & 0xffL) << k; k += 8; i += 1 }
-      pos += n
-      ((acc >>> sh) & ((1L << n) - 1)).toInt
-    }
-
-    /** 8 bits of lookahead WITHOUT consuming, zero-padded past the end
-      * of the stream (r17, the one-level decode table's input): a
-      * padding-fabricated code is caught by [[consume]]'s bound check
-      * before any symbol is acted on. */
-    def peek8(): Int = {
-      val i = (pos >>> 3).toInt
-      val sh = (pos & 7L).toInt
-      var acc = 0L
-      var k = 0
-      var j = i
-      while (k < sh + 8) {
-        acc |= (if (j < b.length) b(j) & 0xffL else 0L) << k
-        k += 8; j += 1
-      }
-      ((acc >>> sh) & 0xffL).toInt
-    }
-
-    def consume(n: Int): Unit = {
-      if (pos + n > nbits) throw Bad
-      pos += n
-    }
-
-    /** Align to the next byte boundary; the discarded padding bits
-      * must be zero (RFC: JumpToByteBoundary contract). */
-    def alignZero(): Unit = {
-      val rem = ((8 - (pos & 7L)) & 7L).toInt
-      if (rem > 0 && readBits(rem) != 0) throw Bad
-    }
-
-    def byteIndex: Int = { require((pos & 7L) == 0L); (pos >>> 3).toInt }
-
-    def skipBytes(n: Int): Unit = {
-      if (pos + n.toLong * 8 > nbits) throw Bad
-      pos += n.toLong * 8
-    }
-
-    def atEnd: Boolean = pos == nbits
-  }
-
-  // -----------------------------------------------------------------
-  // Canonical prefix-code decoder (MSB-first codes in an LSB-first
-  // stream, as in DEFLATE); symbols with equal length ordered by
-  // increasing symbol value. Completeness (Kraft sum == 1) enforced,
-  // except the degenerate single-symbol code which reads zero bits.
-  // -----------------------------------------------------------------
-  private val MaxBits = 15
-  private final class Huff(lens: Array[Int]) {
-    private var single = -1
-    private val count = new Array[Int](MaxBits + 1)
-    private val first = new Array[Int](MaxBits + 1)
-    private val offs = new Array[Int](MaxBits + 1)
-    private var symbols: Array[Int] = null
-    locally {
-      var nz = 0; var lastSym = -1
-      var i = 0
-      while (i < lens.length) {
-        val l = lens(i)
-        if (l < 0 || l > MaxBits) throw Bad
-        if (l > 0) { nz += 1; lastSym = i; count(l) += 1 }
-        i += 1
-      }
-      if (nz == 0) throw Bad
-      if (nz == 1) single = lastSym
-      else {
-        var space = 0L
-        var l = 1
-        while (l <= MaxBits) { space += count(l).toLong << (MaxBits - l); l += 1 }
-        if (space != (1L << MaxBits)) throw Bad // incomplete/oversubscribed
-        symbols = new Array[Int](nz)
-        val idx = new Array[Int](MaxBits + 1)
-        var code = 0; var off = 0
-        l = 1
-        while (l <= MaxBits) {
-          first(l) = code; offs(l) = off; idx(l) = off
-          off += count(l); code = (code + count(l)) << 1; l += 1
-        }
-        i = 0
-        while (i < lens.length) {
-          if (lens(i) > 0) { symbols(idx(lens(i))) = i; idx(lens(i)) += 1 }
-          i += 1
-        }
-      }
-    }
-    /** One-level fast table (r17, VERDICT r16 #8 — the zlib-style
-      * 8-bit peek/consume acceleration SCALING.md named): for every
-      * 8-bit lookahead whose leading code is ≤ 8 bits, the (symbol,
-      * length) pair; longer codes fall back to the bit walk. Built
-      * once per table (256 × ≤8 steps), it turns the literal path's
-      * per-bit loop into one peek + one consume. */
-    private var fastSym: Array[Short] = null
-    private var fastLen: Array[Byte] = null
-    locally {
-      if (single < 0) {
-        val fs = new Array[Short](256)
-        val fb = new Array[Byte](256)
-        var v = 0
-        while (v < 256) {
-          var code = 0; var l = 0; var sym = -1
-          while (sym < 0 && l < 8) {
-            code = (code << 1) | ((v >>> l) & 1)
-            l += 1
-            if (code - first(l) < count(l)) sym = symbols(offs(l) + code - first(l))
-          }
-          fs(v) = sym.toShort // -1 = fall back to the bit walk
-          fb(v) = l.toByte
-          v += 1
-        }
-        fastSym = fs
-        fastLen = fb
-      }
-    }
-
-    def decode(br: Br): Int = {
-      if (single >= 0) return single
-      val look = br.peek8()
-      val s = fastSym(look)
-      if (s >= 0) { br.consume(fastLen(look)); return s }
-      var code = 0; var l = 0
-      while (l < MaxBits) {
-        code = (code << 1) | br.readBits(1); l += 1
-        if (code - first(l) < count(l)) return symbols(offs(l) + code - first(l))
-      }
-      throw Bad
-    }
-  }
 
   /** Fixed prefix code for code-length-code lengths (RFC 3.5):
     * symbols 0..5 with lengths {2,4,3,2,2,4}. */
@@ -448,7 +297,7 @@ object BrotliKernels {
   def decompress(b: Array[Byte]): Array[Byte] = {
     if (b == null || b.length == 0) return null
     try decode(b)
-    catch { case _: Throwable => null }
+    catch { case Refused() => null }
   }
 
   private def decode(b: Array[Byte]): Array[Byte] = {

@@ -33,22 +33,14 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object CfbKernels {
 
+  import Decode.{Bad, Refused, leU16, leU32}
+
   private val MaxSectors = 1 << 16
   private val MaxDirEntries = 4096
   private val ENDOFCHAIN = 0xFFFFFFFEL
   private val FREESECT = 0xFFFFFFFFL
   private val FATSECT = 0xFFFFFFFDL
   private val DIFSECT = 0xFFFFFFFCL
-
-  private object Bad extends RuntimeException("cfb: malformed") {
-    override def fillInStackTrace(): Throwable = this
-  }
-
-  private def leU16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def leU32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
 
   final case class Entry(name: String, entryType: Int, start: Long,
                          size: Long)
@@ -219,7 +211,7 @@ object CfbKernels {
         new GenericInternalRow(Array[Any](
           UTF8String.fromString(e.name), e.entryType, e.size))
       }.toArray[Any])
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 
   /** One named stream's bytes from a CFB container, or null when the
@@ -231,7 +223,7 @@ object CfbKernels {
       val doc = new Doc(b)
       doc.dirEntries.find(e => e.entryType == 2 && e.name == name)
         .map(doc.streamBytes).orNull
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 
   /** Text of a non-complex, unencrypted legacy `.doc`, or null. */
@@ -266,7 +258,7 @@ object CfbKernels {
           new String(s, fcMin.toInt, len,
             java.nio.charset.Charset.forName("windows-1252"))
       UTF8String.fromString(text.replace('\r', '\n'))
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 
   // -----------------------------------------------------------------

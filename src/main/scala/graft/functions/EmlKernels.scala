@@ -30,13 +30,10 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object EmlKernels {
 
-  private object Bad extends RuntimeException("eml: malformed") {
-    override def fillInStackTrace(): Throwable = this
-  }
+  import Decode.{Bad, MaxText, Refused}
 
   private val MaxDepth = 16
   private val MaxParts = 1 << 12
-  private val MaxText = 1 << 26
 
   import org.apache.spark.sql.types._
   val schema: StructType = StructType(Seq(
@@ -305,7 +302,7 @@ object EmlKernels {
         i = if (next < 0) -1 else next + 1
       }
       new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 
   /** Parsed message: struct(from, to, subject, date, n_parts, text),
@@ -333,6 +330,6 @@ object EmlKernels {
         }
       new GenericInternalRow(Array[Any](
         h("from"), h("to"), h("subject"), h("date"), counter(0), textU))
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 }

@@ -23,9 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object ExifKernels {
 
-  private object Bad extends RuntimeException("exif: malformed") {
-    override def fillInStackTrace(): Throwable = this
-  }
+  import Decode.{Bad, Refused, beU16, beU32, leU16, leU32}
 
   import org.apache.spark.sql.types._
   val schema: StructType = StructType(Seq(
@@ -46,19 +44,13 @@ object ExifKernels {
       else throw Bad
     def u16(i: Int): Int = {
       val p = base + i
-      if (p < base || p + 2 > end) throw Bad
-      if (little) (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
-      else ((b(p) & 0xff) << 8) | (b(p + 1) & 0xff)
+      if (p < base || p > end - 2) throw Bad
+      if (little) leU16(b, p) else beU16(b, p)
     }
     def u32(i: Int): Long = {
       val p = base + i
-      if (p < base || p + 4 > end) throw Bad
-      if (little)
-        (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-          ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
-      else
-        ((b(p) & 0xffL) << 24) | ((b(p + 1) & 0xffL) << 16) |
-          ((b(p + 2) & 0xffL) << 8) | (b(p + 3) & 0xffL)
+      if (p < base || p > end - 4) throw Bad
+      if (little) leU32(b, p) else beU32(b, p)
     }
     if (u16(2) != 42) throw Bad
 
@@ -145,7 +137,7 @@ object ExifKernels {
           if (m == 0xff) i += 1
           else if (m == 0x01 || (m >= 0xd0 && m <= 0xd9)) i += 2
           else {
-            val len = ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
+            val len = beU16(b, i + 2)
             if (len < 2 || i + 2 + len > b.length) throw Bad
             if (m == 0xe1 && len >= 8 &&
                 b(i + 4) == 'E' && b(i + 5) == 'x' && b(i + 6) == 'i' &&
@@ -205,7 +197,7 @@ object ExifKernels {
         u(dt), u(make), u(model),
         if (lat.isNaN) null else round6(lat),
         if (lon.isNaN) null else round6(lon)))
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 
   // -----------------------------------------------------------------

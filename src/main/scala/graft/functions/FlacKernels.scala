@@ -21,9 +21,7 @@ package graft.functions
   */
 object FlacKernels {
 
-  /** Internal fail-closed signal — caught by [[decode]], never escapes. */
-  private final class Bad extends RuntimeException(null, null, false, false)
-  private def bad(): Nothing = throw new Bad
+  import Decode.{Bad, Refused, beU16}
 
   /** MSB-first bit reader over the blob. */
   private final class BitReader(b: Array[Byte]) {
@@ -34,7 +32,7 @@ object FlacKernels {
     def align(): Unit = if (bitPos != 0) { bitPos = 0; bytePos += 1 }
 
     def readBit(): Int = {
-      if (bytePos >= b.length) bad()
+      if (bytePos >= b.length) throw Bad
       val v = (b(bytePos) >> (7 - bitPos)) & 1
       bitPos += 1
       if (bitPos == 8) { bitPos = 0; bytePos += 1 }
@@ -61,7 +59,7 @@ object FlacKernels {
       var q = 0
       while (readBit() == 0) {
         q += 1
-        if (q > (1 << 24)) bad() // a >16M quotient is corrupt, not data
+        if (q > (1 << 24)) throw Bad // a >16M quotient is corrupt, not data
       }
       q
     }
@@ -118,10 +116,7 @@ object FlacKernels {
              sink: AudioKernels.SampleSink): Option[AudioKernels.Pcm] = {
     if (b == null || b.length < 42) return None
     if (!(b(0) == 'f' && b(1) == 'L' && b(2) == 'a' && b(3) == 'C')) return None
-    try Some(decodeStream(b, sink)) catch {
-      case _: Bad => None
-      case _: ArrayIndexOutOfBoundsException => None
-    }
+    try Some(decodeStream(b, sink)) catch { case Refused() => None }
   }
 
   /** Header-only STREAMINFO read for the codec-free triage tier
@@ -139,10 +134,7 @@ object FlacKernels {
     try {
       val (_, rate, channels, bits, total) = metaWalk(b)
       Some((channels, rate, bits, total))
-    } catch {
-      case _: Bad => None
-      case _: ArrayIndexOutOfBoundsException => None
-    }
+    } catch { case Refused() => None }
   }
 
   /** The metadata-block walk both tiers share: validates STREAMINFO
@@ -155,17 +147,17 @@ object FlacKernels {
     var siTotal = -1L
     var first = true
     while (!last) {
-      if (p + 4 > b.length) bad()
+      if (p + 4 > b.length) throw Bad
       val h = b(p.toInt) & 0xff
       last = (h & 0x80) != 0
       val btype = h & 0x7f
       val len = ((b(p.toInt + 1) & 0xff) << 16) | ((b(p.toInt + 2) & 0xff) << 8) |
         (b(p.toInt + 3) & 0xff)
-      if (btype == 127) bad() // invalid block type
+      if (btype == 127) throw Bad // invalid block type
       if (first) {
-        if (btype != 0 || len != 34) bad() // STREAMINFO first, length 34
+        if (btype != 0 || len != 34) throw Bad // STREAMINFO first, length 34
         val s = p.toInt + 4
-        if (s + 34 > b.length) bad()
+        if (s + 34 > b.length) throw Bad
         // packed 8 bytes at s+10: 20-bit rate, 3-bit ch-1, 5-bit bps-1,
         // 36-bit total samples
         val hi = ((b(s + 10) & 0xffL) << 12) | ((b(s + 11) & 0xffL) << 4) |
@@ -176,13 +168,13 @@ object FlacKernels {
         siTotal = ((b(s + 13) & 0xfL) << 32) | ((b(s + 14) & 0xffL) << 24) |
           ((b(s + 15) & 0xffL) << 16) | ((b(s + 16) & 0xffL) << 8) |
           (b(s + 17) & 0xffL)
-        if (siRate <= 0 || siBits < 4 || siBits > 32) bad()
+        if (siRate <= 0 || siBits < 4 || siBits > 32) throw Bad
         first = false
       }
       p += 4L + len
-      if (p > b.length) bad()
+      if (p > b.length) throw Bad
     }
-    if (first) bad() // no metadata block at all
+    if (first) throw Bad // no metadata block at all
     (p, siRate, siChannels, siBits, siTotal)
   }
 
@@ -190,8 +182,8 @@ object FlacKernels {
       sink: AudioKernels.SampleSink = null): AudioKernels.Pcm = {
     val (p0, siRate, siChannels, siBits, siTotal) = metaWalk(b)
     if (sink != null) {
-      if (siTotal == 0) bad() // unknown total: no sinked decode
-      if (!sink.begin(siChannels, siRate, siTotal * siChannels)) bad()
+      if (siTotal == 0) throw Bad // unknown total: no sinked decode
+      if (!sink.begin(siChannels, siRate, siTotal * siChannels)) throw Bad
     }
     var p = p0
 
@@ -206,18 +198,18 @@ object FlacKernels {
       val r = new BitReader(b)
       r.bytePos = frameStart
       // 15-bit sync 0b111111111111100 + 1-bit blocking strategy
-      if (r.readBits(14) != 0x3ffe) bad()
-      if (r.readBit() != 0) bad() // reserved
+      if (r.readBits(14) != 0x3ffe) throw Bad
+      if (r.readBit() != 0) throw Bad // reserved
       val variableBlocking = r.readBit() == 1
       val bsCode = r.readBits(4).toInt
       val srCode = r.readBits(4).toInt
       val chAssign = r.readBits(4).toInt
       val ssCode = r.readBits(3).toInt
-      if (r.readBit() != 0) bad() // reserved
+      if (r.readBit() != 0) throw Bad // reserved
       // UTF-8-coded frame (or sample) number — validate shape
       readUtf8Number(r, if (variableBlocking) 7 else 6)
       val blockSize = bsCode match {
-        case 0 => bad()
+        case 0 => throw Bad
         case 6 => r.readBits(8).toInt + 1
         case 7 => r.readBits(16).toInt + 1
         case c => FixedBlockSizes(c)
@@ -227,28 +219,28 @@ object FlacKernels {
         case 12 => r.readBits(8).toInt * 1000
         case 13 => r.readBits(16).toInt
         case 14 => r.readBits(16).toInt * 10
-        case 15 => bad()
+        case 15 => throw Bad
         case c => FixedRates(c)
       }
-      if (rate != siRate) bad() // a rate change mid-stream is corrupt here
+      if (rate != siRate) throw Bad // a rate change mid-stream is corrupt here
       val bps = ssCode match {
         case 0 => siBits
         case 1 => 8
         case 2 => 12
-        case 3 => bad()
+        case 3 => throw Bad
         case 4 => 16
         case 5 => 20
         case 6 => 24
         case 7 => 32
       }
-      if (bps != siBits) bad()
+      if (bps != siBits) throw Bad
       val channels = if (chAssign < 8) chAssign + 1 else 2
-      if (chAssign > 10) bad()
-      if (channels != siChannels) bad()
+      if (chAssign > 10) throw Bad
+      if (channels != siChannels) throw Bad
       // header CRC-8 covers everything up to (excluding) the crc byte
-      if (!r.aligned) bad() // header fields are byte-aligned by spec
+      if (!r.aligned) throw Bad // header fields are byte-aligned by spec
       val crcPos = r.bytePos
-      if (crc8(b, frameStart, crcPos) != (b(crcPos) & 0xff)) bad()
+      if (crc8(b, frameStart, crcPos) != (b(crcPos) & 0xff)) throw Bad
       r.bytePos = crcPos + 1
 
       // ---- subframes
@@ -290,9 +282,8 @@ object FlacKernels {
       // footer: align + CRC-16 over the whole frame
       r.align()
       val footPos = r.bytePos
-      if (footPos + 2 > b.length) bad()
-      val want = ((b(footPos) & 0xff) << 8) | (b(footPos + 1) & 0xff)
-      if (crc16(b, frameStart, footPos) != want) bad()
+      val want = beU16(b, footPos)
+      if (crc16(b, frameStart, footPos) != want) throw Bad
       p = footPos + 2L
 
       // accumulate stats
@@ -329,8 +320,8 @@ object FlacKernels {
       }
       totalFrames += blockSize
     }
-    if (totalFrames == 0) bad()
-    if (siTotal != 0 && siTotal != totalFrames) bad()
+    if (totalFrames == 0) throw Bad
+    if (siTotal != 0 && siTotal != totalFrames) throw Bad
     val nSamples = totalFrames * siChannels
     AudioKernels.Pcm(siChannels, siRate, siBits, totalFrames,
       sumAbs / nSamples, sumSq / nSamples, peak)
@@ -345,12 +336,12 @@ object FlacKernels {
     if ((b0 & 0x80) == 0) return b0.toLong
     var mask = 0x40
     while ((b0 & mask) != 0) { extra += 1; mask >>= 1 }
-    if (extra < 1 || extra > maxExtra) bad()
+    if (extra < 1 || extra > maxExtra) throw Bad
     v = (b0 & (mask - 1)).toLong
     var i = 0
     while (i < extra) {
       val c = r.readBits(8).toInt
-      if ((c & 0xc0) != 0x80) bad()
+      if ((c & 0xc0) != 0x80) throw Bad
       v = (v << 6) | (c & 0x3f)
       i += 1
     }
@@ -359,13 +350,13 @@ object FlacKernels {
 
   private def decodeSubframe(r: BitReader, out: Array[Long],
                              blockSize: Int, bps: Int): Unit = {
-    if (bps < 1 || bps > 33) bad()
-    if (r.readBit() != 0) bad() // zero padding bit
+    if (bps < 1 || bps > 33) throw Bad
+    if (r.readBit() != 0) throw Bad // zero padding bit
     val t = r.readBits(6).toInt
     var wasted = 0
     if (r.readBit() == 1) { wasted = 1 + r.readUnary() }
     val ebps = bps - wasted
-    if (ebps < 1) bad()
+    if (ebps < 1) throw Bad
     t match {
       case 0 => // CONSTANT
         val v = r.readSigned(ebps)
@@ -376,21 +367,21 @@ object FlacKernels {
         while (i < blockSize) { out(i) = r.readSigned(ebps); i += 1 }
       case o if o >= 8 && o <= 12 => // FIXED order 0-4
         val order = o - 8
-        if (order > blockSize) bad()
+        if (order > blockSize) throw Bad
         var i = 0
         while (i < order) { out(i) = r.readSigned(ebps); i += 1 }
         decodeResiduals(r, out, blockSize, order)
         applyFixed(out, blockSize, order)
       case o if o >= 32 => // LPC order 1-32
         val order = (o & 31) + 1
-        if (order > blockSize) bad()
+        if (order > blockSize) throw Bad
         var i = 0
         while (i < order) { out(i) = r.readSigned(ebps); i += 1 }
         val precRaw = r.readBits(4).toInt
-        if (precRaw == 15) bad() // 0b1111 is invalid per spec
+        if (precRaw == 15) throw Bad // 0b1111 is invalid per spec
         val precision = precRaw + 1
         val shift = r.readSigned(5).toInt
-        if (shift < 0) bad() // negative shift is reserved in practice
+        if (shift < 0) throw Bad // negative shift is reserved in practice
         val coefs = new Array[Long](order)
         i = 0
         while (i < order) { coefs(i) = r.readSigned(precision); i += 1 }
@@ -403,7 +394,7 @@ object FlacKernels {
           out(i) = out(i) + (acc >> shift)
           i += 1
         }
-      case _ => bad() // reserved subframe types
+      case _ => throw Bad // reserved subframe types
     }
     if (wasted > 0) {
       var i = 0
@@ -415,19 +406,19 @@ object FlacKernels {
   private def decodeResiduals(r: BitReader, out: Array[Long],
                               blockSize: Int, order: Int): Unit = {
     val method = r.readBits(2).toInt // 0: 4-bit params, 1: 5-bit params
-    if (method > 1) bad()
+    if (method > 1) throw Bad
     val pBits = if (method == 0) 4 else 5
     val escape = (1 << pBits) - 1
     val pOrder = r.readBits(4).toInt
     val nPart = 1 << pOrder
-    if (blockSize % nPart != 0) bad()
+    if (blockSize % nPart != 0) throw Bad
     val perPart = blockSize >> pOrder
-    if (perPart < order) bad() // partition 0 holds perPart - order residuals
+    if (perPart < order) throw Bad // partition 0 holds perPart - order residuals
     var idx = order
     var part = 0
     while (part < nPart) {
       val n = if (part == 0) perPart - order else perPart
-      if (n < 0) bad()
+      if (n < 0) throw Bad
       val param = r.readBits(pBits).toInt
       if (param == escape) {
         val raw = r.readBits(5).toInt
@@ -457,7 +448,7 @@ object FlacKernels {
         out(i) += 3 * out(i - 1) - 3 * out(i - 2) + out(i - 3); i += 1 }
       case 4 => while (i < blockSize) {
         out(i) += 4 * out(i - 1) - 6 * out(i - 2) + 4 * out(i - 3) - out(i - 4); i += 1 }
-      case _ => bad()
+      case _ => throw Bad
     }
   }
 }

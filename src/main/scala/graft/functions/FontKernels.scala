@@ -23,9 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object FontKernels {
 
-  private object Bad extends RuntimeException("font: malformed") {
-    override def fillInStackTrace(): Throwable = this
-  }
+  import Decode.{Bad, MaxInflate, MaxOut, Refused, beU16, beU32}
 
   import org.apache.spark.sql.types._
   val schema: StructType = StructType(Seq(
@@ -36,15 +34,6 @@ object FontKernels {
 
   private val MaxTables = 512
 
-  private def beU16(b: Array[Byte], i: Int): Int = {
-    if (i < 0 || i + 2 > b.length) throw Bad
-    ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-  }
-  private def beU32(b: Array[Byte], i: Int): Long = {
-    if (i < 0 || i + 4 > b.length) throw Bad
-    ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-      ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-  }
   private def tag(b: Array[Byte], i: Int): String = {
     if (i + 4 > b.length) throw Bad
     new String(b, i, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
@@ -118,7 +107,7 @@ object FontKernels {
   }
 
   private def inflate(data: Array[Byte], origLen: Int): Array[Byte] = {
-    if (origLen < 0 || origLen > (64 << 20)) throw Bad
+    if (origLen < 0 || origLen > MaxInflate) throw Bad
     val inf = new java.util.zip.Inflater()
     inf.setInput(data)
     val out = new Array[Byte](origLen)
@@ -175,11 +164,11 @@ object FontKernels {
           // TRANSFORMED tables — reconstruction is out of triage scope
           val n = beU16(b, 12)
           if (n < 1 || n > MaxTables) throw Bad
-          if (beU32(b, 8) > (256 << 20)) throw Bad // declared total size
+          if (beU32(b, 8) > MaxOut) throw Bad // declared total size
           row("woff2", null, -1, n)
         case _ => sfnt(b, 0)
       }
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 
   // -----------------------------------------------------------------

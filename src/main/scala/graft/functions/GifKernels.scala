@@ -27,12 +27,7 @@ package graft.functions
   */
 object GifKernels {
 
-  private def leU16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-
-  /** Max pixels (256 MB at 1 byte/px) — the descriptor declares the
-    * size before any LZW output, so a crafted stream cannot balloon. */
-  private val MaxPixels = 1L << 28
+  import Decode.{MaxOut, leU16}
 
   def decode(b: Array[Byte]): Option[RasterKernels.Raster] = decode(b, null)
 
@@ -85,7 +80,8 @@ object GifKernels {
             pos += 3 * tableSize
           }
           if (w <= 0 || h <= 0 || table < 0 || pos > b.length) return None
-          if (w.toLong * h > MaxPixels) return None
+          // 1 byte/px, declared before any LZW output: no balloon
+          if (w.toLong * h > MaxOut) return None
           return decodeImage(b, pos, w, h, interlaced, table, tableSize,
             sink)
         case _ => return None // not a valid block introducer
@@ -347,7 +343,7 @@ object GifKernels {
             pos += 3 * tableSize
           }
           if (w <= 0 || h <= 0 || table < 0 || pos > b.length) return None
-          if (w.toLong * h > MaxPixels) return None
+          if (w.toLong * h > MaxOut) return None
           decodeFrameCore(b, pos, w, h, interlaced, table, tableSize,
               transparent,
               if (frameSink != null) frameSink(nFrames, w, h) else null) match {

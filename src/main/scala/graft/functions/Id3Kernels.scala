@@ -25,9 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object Id3Kernels {
 
-  private object Bad extends RuntimeException("id3: malformed") {
-    override def fillInStackTrace(): Throwable = this
-  }
+  import Decode.{Bad, Refused, beI32}
 
   import org.apache.spark.sql.types._
   val schema: StructType = StructType(Seq(
@@ -41,9 +39,6 @@ object Id3Kernels {
     ((b(i) & 0x7f) << 21) | ((b(i + 1) & 0x7f) << 14) |
       ((b(i + 2) & 0x7f) << 7) | (b(i + 3) & 0x7f)
   }
-  private def be32(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) |
-      ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
 
   private def unsync(b: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(b.length)
@@ -102,7 +97,7 @@ object Id3Kernels {
         var p = 0
         if ((flags & 0x40) != 0) { // extended header: skip by its size
           if (major == 4) p = syncsafe(tag, 0)
-          else p = be32(tag, 0) + 4
+          else p = beI32(tag, 0) + 4
           if (p < 4 || p > tag.length) throw Bad
         }
         val idLen = if (major == 2) 3 else 4
@@ -117,7 +112,7 @@ object Id3Kernels {
                 ((tag(p + 3) & 0xff) << 16) | ((tag(p + 4) & 0xff) << 8) |
                   (tag(p + 5) & 0xff)
               else if (major == 4) syncsafe(tag, p + idLen)
-              else be32(tag, p + idLen)
+              else beI32(tag, p + idLen)
             val fflags = if (major == 2) 0 else tag(p + 9) & 0xff
             if (fsize < 0 || p + hdrLen + fsize > tag.length) throw Bad
             var data = java.util.Arrays.copyOfRange(
@@ -152,7 +147,7 @@ object Id3Kernels {
       def u(s: String): UTF8String =
         if (s == null || s.isEmpty) null else UTF8String.fromString(s)
       new GenericInternalRow(Array[Any](u(title), u(artist), u(album), u(year)))
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 
   // -----------------------------------------------------------------

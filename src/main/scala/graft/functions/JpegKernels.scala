@@ -38,6 +38,7 @@ package graft.functions
   */
 object JpegKernels {
 
+  import Decode.{Refused, beU16}
   import RasterKernels.Raster
 
   /** Zigzag index -> natural (row*8+col) position, T.81 figure A.6. */
@@ -263,12 +264,9 @@ object JpegKernels {
   def decode(b: Array[Byte], sink: RasterKernels.PixelSink): Option[Raster] = {
     if (b == null || b.length < 4 ||
         (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
-    try decodeInner(b, sink) catch {
-      // defensive: any slip in the bounds discipline below must degrade
-      // to a NULL feature, never kill the executor task
-      case _: ArrayIndexOutOfBoundsException | _: NegativeArraySizeException |
-           _: ArithmeticException => None
-    }
+    // any slip in the bounds discipline below degrades to a NULL
+    // feature, never a killed executor task
+    try decodeInner(b, sink) catch { case Refused() => None }
   }
 
   // scalastyle:off method.length cyclomatic.complexity
@@ -295,8 +293,6 @@ object JpegKernels {
     var sawScan = false
     var nScans = 0
 
-    def u16(i: Int): Int = ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-
     var p = 2
     while (p + 2 <= b.length) {
       if ((b(p) & 0xff) != 0xff) return None
@@ -311,7 +307,7 @@ object JpegKernels {
         else None
       }
       if (p + 4 > b.length) return None
-      val len = u16(p + 2)
+      val len = beU16(b, p + 2)
       if (len < 2 || p + 2 + len > b.length) return None
       val seg = p + 4
       val segEnd = p + 2 + len
@@ -359,8 +355,8 @@ object JpegKernels {
           if (comps != null) return None // one frame per stream
           progressive = marker == 0xc2
           if (b(seg) != 8) return None // 8-bit precision only
-          height = u16(seg + 1)
-          width = u16(seg + 3)
+          height = beU16(b, seg + 1)
+          width = beU16(b, seg + 3)
           val nf = b(seg + 5) & 0xff
           if (width <= 0 || height <= 0 || (nf != 1 && nf != 3)) return None
           if (seg + 6 + 3 * nf > segEnd) return None
@@ -375,7 +371,7 @@ object JpegKernels {
              0xc9 | 0xca | 0xcb | 0xcd | 0xce | 0xcf =>
           return None // non-baseline/-progressive SOF: out of scope
         case 0xdd => // DRI
-          restartInterval = u16(seg)
+          restartInterval = beU16(b, seg)
         case 0xda => // SOS: entropy-coded data follows
           if (comps == null) return None
           val ns = b(seg) & 0xff

@@ -26,6 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object JsonShapeKernels {
 
+  import Decode.{Bad, Refused}
+
   private val MaxDepth = 64
   private val MaxPaths = 10000
 
@@ -33,10 +35,6 @@ object JsonShapeKernels {
   val rowSchema: StructType = StructType(Seq(
     StructField("path", StringType, nullable = false),
     StructField("jtype", StringType, nullable = false)))
-
-  private object Bad extends RuntimeException("json: malformed") {
-    override def fillInStackTrace(): Throwable = this
-  }
 
   private final class P(val s: String) {
     var i = 0
@@ -170,6 +168,6 @@ object JsonShapeKernels {
         new GenericInternalRow(Array[Any](
           UTF8String.fromString(path), UTF8String.fromString(t)))
       }.asInstanceOf[Array[Any]])
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 }

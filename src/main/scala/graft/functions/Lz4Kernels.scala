@@ -35,11 +35,7 @@ package graft.functions
   */
 object Lz4Kernels {
 
-  private val MaxOut = 1 << 28 // 256 MB inflation cap, like ZstdKernels
-
-  private object Bad extends RuntimeException("lz4: malformed") {
-    override def fillInStackTrace(): Throwable = this
-  }
+  import Decode.{Bad, MaxOut, Refused, leI32, leU16}
 
   // -----------------------------------------------------------------
   // XXH32 (public algorithm; the frame format's checksum)
@@ -49,10 +45,6 @@ object Lz4Kernels {
   private val P3 = 0xC2B2AE3D
   private val P4 = 0x27D4EB2F
   private val P5 = 0x165667B1
-
-  private def le32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-      ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
 
   def xxh32(b: Array[Byte], off: Int, len: Int, seed: Int): Int = {
     var h = 0
@@ -65,10 +57,10 @@ object Lz4Kernels {
       var v4 = seed - P1
       val limit = end - 16
       while (i <= limit) {
-        v1 = Integer.rotateLeft(v1 + le32(b, i) * P2, 13) * P1
-        v2 = Integer.rotateLeft(v2 + le32(b, i + 4) * P2, 13) * P1
-        v3 = Integer.rotateLeft(v3 + le32(b, i + 8) * P2, 13) * P1
-        v4 = Integer.rotateLeft(v4 + le32(b, i + 12) * P2, 13) * P1
+        v1 = Integer.rotateLeft(v1 + leI32(b, i) * P2, 13) * P1
+        v2 = Integer.rotateLeft(v2 + leI32(b, i + 4) * P2, 13) * P1
+        v3 = Integer.rotateLeft(v3 + leI32(b, i + 8) * P2, 13) * P1
+        v4 = Integer.rotateLeft(v4 + leI32(b, i + 12) * P2, 13) * P1
         i += 16
       }
       h = Integer.rotateLeft(v1, 1) + Integer.rotateLeft(v2, 7) +
@@ -76,7 +68,7 @@ object Lz4Kernels {
     } else h = seed + P5
     h += len
     while (i + 4 <= end) {
-      h = Integer.rotateLeft(h + le32(b, i) * P3, 17) * P4
+      h = Integer.rotateLeft(h + leI32(b, i) * P3, 17) * P4
       i += 4
     }
     while (i < end) {
@@ -95,7 +87,7 @@ object Lz4Kernels {
     */
   def decompress(b: Array[Byte]): Array[Byte] =
     try decode(b)
-    catch { case _: RuntimeException | _: ArrayIndexOutOfBoundsException => null }
+    catch { case Refused() => null }
 
   private def decode(b: Array[Byte]): Array[Byte] = {
     if (b == null || b.length < 4) throw Bad
@@ -104,11 +96,11 @@ object Lz4Kernels {
     var sawContent = false
     while (pos < b.length) {
       if (pos + 4 > b.length) throw Bad
-      val magic = le32(b, pos)
+      val magic = leI32(b, pos)
       if (magic == 0x184D2204) { pos = frame(b, pos + 4, out); sawContent = true }
       else if ((magic & 0xFFFFFFF0) == 0x184D2A50) {
         if (pos + 8 > b.length) throw Bad
-        val n = le32(b, pos + 4)
+        val n = leI32(b, pos + 4)
         if (n < 0 || pos + 8 + n > b.length) throw Bad
         pos += 8 + n
       } else if (magic == 0x184C2102) { pos = legacy(b, pos + 4, out); sawContent = true }
@@ -157,7 +149,7 @@ object Lz4Kernels {
     var going = true
     while (going) {
       if (pos + 4 > b.length) throw Bad
-      val sz = le32(b, pos); pos += 4
+      val sz = leI32(b, pos); pos += 4
       if (sz == 0) going = false
       else {
         val raw = (sz & 0x80000000) != 0
@@ -165,7 +157,7 @@ object Lz4Kernels {
         if (n <= 0 || n > blockMax || pos + n > b.length) throw Bad
         if (blockCheck) {
           if (pos + n + 4 > b.length) throw Bad
-          if (le32(b, pos + n) != xxh32(b, pos, n, 0)) throw Bad
+          if (leI32(b, pos + n) != xxh32(b, pos, n, 0)) throw Bad
         }
         if (raw) {
           if (out.size() + n > MaxOut) throw Bad
@@ -180,7 +172,7 @@ object Lz4Kernels {
     if (contentCheck) {
       if (pos + 4 > b.length) throw Bad
       val whole = out.toByteArray // frames are few; blocks dominate cost
-      if (le32(b, pos) != xxh32(whole, frameBase, whole.length - frameBase, 0))
+      if (leI32(b, pos) != xxh32(whole, frameBase, whole.length - frameBase, 0))
         throw Bad
       pos += 4
     }
@@ -197,7 +189,7 @@ object Lz4Kernels {
     var going = true
     while (going && pos < b.length) {
       if (pos + 4 > b.length) throw Bad
-      val n = le32(b, pos)
+      val n = leI32(b, pos)
       // a magic number here means the next frame begins
       if (n == 0x184C2102 || n == 0x184D2204 ||
         (n & 0xFFFFFFF0) == 0x184D2A50) going = false
@@ -255,7 +247,7 @@ object Lz4Kernels {
       ip += litLen; op += litLen
       if (ip < end) { // last sequence is literals-only
         if (ip + 2 > end) throw Bad
-        val offset = (b(ip) & 0xff) | ((b(ip + 1) & 0xff) << 8)
+        val offset = leU16(b, ip)
         ip += 2
         if (offset == 0 || offset > op) throw Bad
         var matchLen = (token & 0xf) + 4

@@ -38,18 +38,14 @@ package graft.functions
   */
 object LzwKernels {
 
-  private val MaxOut = 1 << 28 // 256 MB inflation cap, like ZstdKernels
-
-  private object Bad extends RuntimeException("lzw: malformed") {
-    override def fillInStackTrace(): Throwable = this
-  }
+  import Decode.{Bad, MaxOut, Refused}
 
   /** Decode a complete `.Z` stream; null when malformed. An empty
     * payload (header only) decodes to an empty array.
     */
   def decompress(b: Array[Byte]): Array[Byte] =
     try decode(b)
-    catch { case _: RuntimeException | _: ArrayIndexOutOfBoundsException => null }
+    catch { case Refused() => null }
 
   private def decode(b: Array[Byte]): Array[Byte] = {
     if (b == null || b.length < 3) throw Bad

@@ -15,16 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object MediaKernels {
 
-  private def beU16(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-  private def leU16(b: Array[Byte], i: Int): Int =
-    ((b(i + 1) & 0xff) << 8) | (b(i) & 0xff)
-  private def beI32(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) |
-      ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-  private def leI32(b: Array[Byte], i: Int): Int =
-    ((b(i + 3) & 0xff) << 24) | ((b(i + 2) & 0xff) << 16) |
-      ((b(i + 1) & 0xff) << 8) | (b(i) & 0xff)
+  import Decode.{beI32, beI64, beU16, beU32, leI32, leI64, leU16, leU32}
 
   private def row(fmt: String, w: Int, h: Int): InternalRow =
     new GenericInternalRow(Array[Any](UTF8String.fromString(fmt), w, h))
@@ -181,12 +172,6 @@ object MediaKernels {
     new GenericInternalRow(Array[Any](
       UTF8String.fromString("wav"), channels, rate, bits, dataLen / bytesPerFrame))
   }
-
-  private def beI64(b: Array[Byte], i: Int): Long =
-    ((beI32(b, i).toLong & 0xffffffffL) << 32) | (beI32(b, i + 4).toLong & 0xffffffffL)
-
-  private def leI64(b: Array[Byte], i: Int): Long =
-    (leI32(b, i).toLong & 0xffffffffL) | ((leI32(b, i + 4).toLong & 0xffffffffL) << 32)
 
   // ---- Matroska / WebM (EBML) triage -------------------------------
 
@@ -744,17 +729,11 @@ object MediaKernels {
         (b(0) == 'M' && b(1) == 'M'))) {
       val little = b(0) == 'I'
       def tu16(i: Int): Int =
-        if (i < 0 || i + 2 > b.length) -1
-        else if (little) (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-        else ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
+        if (i < 0 || i > b.length - 2) -1
+        else if (little) leU16(b, i) else beU16(b, i)
       def tu32(i: Int): Long =
-        if (i < 0 || i + 4 > b.length) -1L
-        else if (little)
-          (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-            ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-        else
-          ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-            ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
+        if (i < 0 || i > b.length - 4) -1L
+        else if (little) leU32(b, i) else beU32(b, i)
       if (tu16(2) != 42) return null
       val ifd = tu32(4)
       if (ifd < 8 || ifd + 2 > b.length) return null

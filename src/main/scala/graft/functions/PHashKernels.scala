@@ -34,6 +34,8 @@ package graft.functions
   */
 object PHashKernels {
 
+  import Decode.{leI32, leU16}
+
   /** 64-bit dHash of a supported raster blob, or null. */
   def dhash64(b: Array[Byte]): java.lang.Long = {
     if (b == null || b.length < 2) return null
@@ -148,11 +150,6 @@ object PHashKernels {
     }
     grid.means()
   }
-
-  private def leU16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def leI32(b: Array[Byte], i: Int): Int =
-    leU16(b, i) | (leU16(b, i + 2) << 16)
 
   private def bmpCells(b: Array[Byte]): Array[Long] = {
     if (b.length < 54) return null

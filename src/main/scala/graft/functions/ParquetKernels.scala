@@ -22,53 +22,26 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
   */
 object ParquetKernels {
 
-  private object Bad extends RuntimeException("parquet: malformed") {
-    override def fillInStackTrace(): Throwable = this
-  }
-
-  private final class R(val b: Array[Byte], var pos: Int, val end: Int) {
-    def u8(): Int = {
-      if (pos >= end) throw Bad
-      val v = b(pos) & 0xff
-      pos += 1
-      v
-    }
-    def varint(): Long = {
-      var v = 0L
-      var sh = 0
-      while (sh <= 63) {
-        val c = u8()
-        v |= (c & 0x7fL) << sh
-        if ((c & 0x80) == 0) return v
-        sh += 7
-      }
-      throw Bad
-    }
-    def zigzag(): Long = { val v = varint(); (v >>> 1) ^ -(v & 1) }
-    def skipBytes(n: Long): Unit = {
-      if (n < 0 || pos + n > end) throw Bad
-      pos += n.toInt
-    }
-  }
+  import Decode.{Bad, Cursor, Refused, leU32}
 
   private val MaxDepth = 64
 
   /** Skip one value of compact-protocol `tpe`. */
-  private def skip(r: R, tpe: Int, depth: Int): Unit = {
+  private def skip(r: Cursor, tpe: Int, depth: Int): Unit = {
     if (depth > MaxDepth) throw Bad
     tpe match {
       case 1 | 2 => () // bool true/false ride the type nibble
       case 3 => r.u8()
       case 4 | 5 | 6 => r.varint()
-      case 7 => r.skipBytes(8)
-      case 8 => r.skipBytes(r.varint())
+      case 7 => r.skip(8)
+      case 8 => r.skip(r.varint())
       case 9 | 10 => // list / set
         val h = r.u8()
         val n = if ((h >>> 4) == 15) r.varint() else (h >>> 4).toLong
         val et = h & 0x0f
         // bool CONTAINER elements serialize as one byte each (the
         // value-in-type-nibble trick only applies to struct fields)
-        if (et == 1 || et == 2) r.skipBytes(n)
+        if (et == 1 || et == 2) r.skip(n)
         else {
           var i = 0L
           while (i < n) { skip(r, et, depth + 1); i += 1 }
@@ -78,7 +51,7 @@ object ParquetKernels {
         if (n > 0) {
           val kv = r.u8()
           def skipElem(t: Int): Unit =
-            if (t == 1 || t == 2) r.skipBytes(1) else skip(r, t, depth + 1)
+            if (t == 1 || t == 2) r.skip(1) else skip(r, t, depth + 1)
           var i = 0L
           while (i < n) {
             skipElem(kv >>> 4)
@@ -91,7 +64,7 @@ object ParquetKernels {
     }
   }
 
-  private def skipStruct(r: R, depth: Int): Unit = {
+  private def skipStruct(r: Cursor, depth: Int): Unit = {
     if (depth > MaxDepth) throw Bad
     var lastId = 0L
     while (true) {
@@ -112,11 +85,10 @@ object ParquetKernels {
       val n = b.length
       if (!(b(n - 4) == 'P' && b(n - 3) == 'A' && b(n - 2) == 'R' &&
             b(n - 1) == '1')) return null
-      val footerLen = (b(n - 8) & 0xffL) | ((b(n - 7) & 0xffL) << 8) |
-        ((b(n - 6) & 0xffL) << 16) | ((b(n - 5) & 0xffL) << 24)
+      val footerLen = leU32(b, n - 8)
       val metaStart = n - 8 - footerLen
       if (footerLen <= 0 || metaStart < 4) return null
-      val r = new R(b, metaStart.toInt, n - 8)
+      val r = new Cursor(b, metaStart.toInt, n - 8)
       var version = -1L
       var numRows = -1L
       var nRowGroups = -1L
@@ -148,6 +120,6 @@ object ParquetKernels {
         return null // a FileMetaData missing required fields
       new GenericInternalRow(Array[Any](version.toInt, numRows,
         nRowGroups, nSchema))
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 }

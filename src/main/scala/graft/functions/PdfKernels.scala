@@ -43,8 +43,9 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object PdfKernels {
 
+  import Decode.{Bad, MaxInflate, Refused, inflateCapped}
+
   val MaxPages = 10000
-  private val MaxInflate = 64 << 20
   private val MaxResolveDepth = 64
 
   // ---------------------------------------------------------------
@@ -251,10 +252,6 @@ object PdfKernels {
     }
   }
 
-  private object Bad extends RuntimeException("pdf: malformed") {
-    override def fillInStackTrace(): Throwable = this
-  }
-
   // ---------------------------------------------------------------
   // filters
   // ---------------------------------------------------------------
@@ -262,16 +259,9 @@ object PdfKernels {
     val inf = new java.util.zip.Inflater(false)
     try {
       inf.setInput(data)
-      val out = new java.io.ByteArrayOutputStream(math.min(data.length * 4, 1 << 20))
-      val buf = new Array[Byte](1 << 16)
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n > 0) {
-          out.write(buf, 0, n)
-          if (out.size() > MaxInflate) throw Bad
-        } else if (inf.needsInput() || inf.needsDictionary()) throw Bad
-      }
-      out.toByteArray
+      val out = inflateCapped(inf, MaxInflate, math.min(data.length * 4, 1 << 20))
+      if (out == null) throw Bad
+      out
     } finally inf.end()
   }
 
@@ -1181,7 +1171,7 @@ object PdfKernels {
       if (count < 0) throw Bad
       new GenericInternalRow(Array[Any](
         UTF8String.fromString(v), count, doc.trailer.contains("Encrypt")))
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 
   /** PDFDocEncoding ≈ Latin-1 literal strings; BOM-tagged UTF-16BE hex. */
@@ -1566,7 +1556,7 @@ object PdfKernels {
         }
       }
       new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 
   /** Extracted text of the whole document, or null (fail-closed —
@@ -1652,6 +1642,6 @@ object PdfKernels {
       }
       walk(pagesRoot(doc), 0, PNull)
       UTF8String.fromString(out.toString)
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 }

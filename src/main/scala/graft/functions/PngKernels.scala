@@ -37,17 +37,10 @@ import java.util.zip.{DataFormatException, Inflater}
   */
 object PngKernels {
 
+  import Decode.{MaxOut, beI32}
+
   private val Magic = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
     .map(_.toByte)
-
-  /** Decompressed image payload cap (256 MB) — the IHDR declares the
-    * raw size before any inflate happens, so a zip-bomb IDAT can never
-    * allocate more than this. */
-  private val MaxRawBytes = 1L << 28
-
-  private def beI32(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) |
-      ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
 
   def decode(b: Array[Byte]): Option[RasterKernels.Raster] = decode(b, null)
 
@@ -106,14 +99,14 @@ object PngKernels {
         }.filter { case (pw, ph, _, _, _, _) => pw > 0 && ph > 0 }
       }
     // raw size is declared by the IHDR before any inflate happens, so a
-    // zip-bomb IDAT can never allocate more than MaxRawBytes; Long math
+    // zip-bomb IDAT can never allocate more than MaxOut; Long math
     // so crafted dimensions can't overflow the check
     var rawLenL = 0L
     passes.foreach { case (pw, ph, _, _, _, _) =>
       val rb = rowBytesOf(pw)
-      if (rb > MaxRawBytes - 1 || ph > MaxRawBytes / (rb + 1)) return None
+      if (rb > MaxOut - 1 || ph > MaxOut / (rb + 1)) return None
       rawLenL += ph * (rb + 1)
-      if (rawLenL > MaxRawBytes) return None
+      if (rawLenL > MaxOut) return None
     }
     val rawLen = rawLenL.toInt
 

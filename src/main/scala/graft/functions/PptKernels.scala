@@ -23,22 +23,13 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object PptKernels {
 
-  private object Bad extends RuntimeException("ppt: malformed") {
-    override def fillInStackTrace(): Throwable = this
-  }
+  import Decode.{Bad, MaxText, Refused, leU16, leU32}
 
   private val TextCharsAtom = 0x0FA0
   private val TextBytesAtom = 0x0FA8
   private val CryptSession10 = 0x2F14
   private val MaxDepth = 64
   private val MaxRecords = 1 << 20
-  private val MaxText = 1 << 26
-
-  private def leU16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def leU32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
 
   private final class Walk(s: Array[Byte]) {
     val out = new java.lang.StringBuilder()
@@ -95,7 +86,7 @@ object PptKernels {
       val w = new Walk(s)
       w.walk(0, s.length, 0)
       UTF8String.fromString(w.out.toString)
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 
   // -----------------------------------------------------------------

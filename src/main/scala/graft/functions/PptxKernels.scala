@@ -24,6 +24,8 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object PptxKernels {
 
+  import Decode.Refused
+
   private val MaxSlides = 10000
 
   /** Text runs of one slide's XML: paragraphs → lines. Returns null
@@ -97,6 +99,6 @@ object PptxKernels {
         n += 1
       }
       UTF8String.fromString(out.toString)
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 }

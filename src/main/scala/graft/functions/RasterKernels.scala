@@ -21,6 +21,8 @@ package graft.functions
   */
 object RasterKernels {
 
+  import Decode.{leI32, leU16}
+
   /** Decoded summary: dimensions + per-channel pixel means (exact
     * IEEE-double sums over every pixel / pixel count). */
   final case class Raster(width: Int, height: Int,
@@ -91,12 +93,6 @@ object RasterKernels {
     else if (bytes(0) == 'R' && bytes(1) == 'I')
       WebpKernels.decode(bytes) // VP8L lossless WebP (round 16)
     else None
-
-  private def leU16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def leI32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-      ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
 
   /** BMP: 14-byte file header + BITMAPINFOHEADER(>=40), 24 bpp, BI_RGB
     * (no compression) only. Rows are 4-byte padded, bottom-up when the

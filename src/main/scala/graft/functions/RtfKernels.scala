@@ -25,11 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object RtfKernels {
 
-  private object Bad extends RuntimeException("rtf: malformed") {
-    override def fillInStackTrace(): Throwable = this
-  }
+  import Decode.{Bad, MaxText, Refused}
 
-  private val MaxOut = 1 << 26
   private val MaxDepth = 256
 
   private val SkipDestinations: Set[String] = Set(
@@ -57,7 +54,7 @@ object RtfKernels {
       def emit(c: Char): Unit = {
         if (pendingSkip > 0) { pendingSkip -= 1; return }
         if (!skipping) {
-          if (out.length() >= MaxOut) throw Bad
+          if (out.length() >= MaxText) throw Bad
           out.append(c)
         }
       }
@@ -165,6 +162,6 @@ object RtfKernels {
       }
       if (depth != 0) throw Bad
       UTF8String.fromString(out.toString)
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 }

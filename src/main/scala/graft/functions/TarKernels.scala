@@ -24,6 +24,8 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object TarKernels {
 
+  import Decode.Refused
+
   import org.apache.spark.sql.types._
   val entrySchema: StructType = StructType(Seq(
     StructField("name", StringType, nullable = false),
@@ -121,7 +123,7 @@ object TarKernels {
   }
 
   def entries(b: Array[Byte]): ArrayData = {
-    val w = try walk(b) catch { case _: Exception => null }
+    val w = try walk(b) catch { case Refused() => null }
     if (w == null) return null
     new GenericArrayData(w.map { case (name, tf, size, _) =>
       new GenericInternalRow(Array[Any](
@@ -140,6 +142,6 @@ object TarKernels {
           java.util.Arrays.copyOfRange(b, dataStart, dataStart + size.toInt)
         case None => null
       }
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 }

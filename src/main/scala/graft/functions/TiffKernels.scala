@@ -27,9 +27,7 @@ package graft.functions
   */
 object TiffKernels {
 
-  /** Decompressed raster cap (256 MB) — declared by the IFD before any
-    * strip is touched, so forged dimensions can't balloon. */
-  private val MaxRawBytes = 1L << 28
+  import Decode.{MaxOut, Refused, beU16, beU32, leU16, leU32}
 
   def decode(b: Array[Byte]): Option[RasterKernels.Raster] = decode(b, null)
 
@@ -39,13 +37,9 @@ object TiffKernels {
   def decode(b: Array[Byte],
              sink: RasterKernels.PixelSink): Option[RasterKernels.Raster] = {
     if (b == null || b.length < 8) return None
-    try decodeInner(b, sink) catch {
-      // defensive: any slip in the bounds discipline below must degrade
-      // to a NULL feature, never kill the executor task (the
-      // JpegKernels stance — and the fuzz spec hunts for these)
-      case _: ArrayIndexOutOfBoundsException | _: NegativeArraySizeException |
-           _: ArithmeticException => None
-    }
+    // any slip in the bounds discipline below degrades to a NULL
+    // feature, never a killed executor task (the fuzz spec hunts these)
+    try decodeInner(b, sink) catch { case Refused() => None }
   }
 
   private def decodeInner(b: Array[Byte], sink: RasterKernels.PixelSink)
@@ -54,18 +48,13 @@ object TiffKernels {
       if (b(0) == 'I' && b(1) == 'I') true
       else if (b(0) == 'M' && b(1) == 'M') false
       else return None
+    // -1 past the end, a sentinel every caller range-checks
     def u16(i: Int): Int =
-      if (i < 0 || i + 2 > b.length) -1
-      else if (little) (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-      else ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
+      if (i < 0 || i > b.length - 2) -1
+      else if (little) leU16(b, i) else beU16(b, i)
     def u32(i: Int): Long =
-      if (i < 0 || i + 4 > b.length) -1L
-      else if (little)
-        (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-          ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-      else
-        ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-          ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
+      if (i < 0 || i > b.length - 4) -1L
+      else if (little) leU32(b, i) else beU32(b, i)
     if (u16(2) != 42) return None
     val ifd = u32(4)
     if (ifd < 8 || ifd + 2 > b.length) return None
@@ -165,7 +154,7 @@ object TiffKernels {
     val nStrips = ((height + rps - 1) / rps).toInt
     if (stripOffsets.length != nStrips) return None
     val rowBytes = width * nSamples
-    if (rowBytes <= 0 || height > MaxRawBytes / rowBytes) return None
+    if (rowBytes <= 0 || height > MaxOut / rowBytes) return None
 
     val w = width.toInt
     val h = height.toInt

@@ -41,12 +41,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object WarcKernels {
 
-  private val MaxInflate = 64 << 20
-
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], i: Int): Long =
-    (le16(b, i).toLong) | (le16(b, i + 2).toLong << 16)
+  import Decode.{MaxInflate, Refused, inflateCapped, leU16, leU32}
 
   /** Index past the gzip member header starting at `pos` (RFC 1952:
     * magic, CM=8, FLG with FEXTRA/FNAME/FCOMMENT/FHCRC), or -1 on
@@ -60,7 +55,7 @@ object WarcKernels {
     var i = pos + 10
     if ((flg & 4) != 0) { // FEXTRA
       if (i + 2 > b.length) return -1
-      i += 2 + le16(b, i)
+      i += 2 + leU16(b, i)
       if (i > b.length) return -1
     }
     if ((flg & 8) != 0) { // FNAME: zero-terminated
@@ -119,13 +114,13 @@ object WarcKernels {
           }
           val trailer = dataStart + inf.getBytesRead.toInt
           if (trailer + 8 > b.length) return null // truncated trailer
-          if (le32(b, trailer) != (crc.getValue & 0xffffffffL)) return null
-          if (le32(b, trailer + 4) != (isize & 0xffffffffL)) return null
+          if (leU32(b, trailer) != (crc.getValue & 0xffffffffL)) return null
+          if (leU32(b, trailer + 4) != (isize & 0xffffffffL)) return null
           pos = trailer + 8
         } finally inf.end()
       }
       out.toByteArray
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 
   /** Single zlib/raw-deflate stream inflate (HTTP `deflate` bodies:
@@ -136,19 +131,11 @@ object WarcKernels {
       val inf = new java.util.zip.Inflater(raw)
       try {
         inf.setInput(b)
-        val out = new java.io.ByteArrayOutputStream(math.min(b.length * 4, 1 << 20))
-        val buf = new Array[Byte](1 << 16)
-        while (!inf.finished()) {
-          val n = inf.inflate(buf)
-          if (n > 0) {
-            out.write(buf, 0, n)
-            if (out.size() > cap) return null
-          } else if (inf.needsInput() || inf.needsDictionary()) return null
-        }
-        if (inf.getRemaining != 0) return null // trailing garbage
-        out.toByteArray
+        val out = inflateCapped(inf, cap, math.min(b.length * 4, 1 << 20))
+        if (inf.getRemaining != 0) null // trailing garbage
+        else out
       } finally inf.end()
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 
   private def isCrlf(b: Array[Byte], i: Int): Boolean =

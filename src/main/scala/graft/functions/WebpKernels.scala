@@ -44,84 +44,9 @@ package graft.functions
   */
 object WebpKernels {
 
-  private val MaxPixels = 1 << 26 // 64M px (256 MB ARGB) inflation cap
+  import Decode.{Bad, Br, Huff, MaxCodeBits, MaxOut, Refused, leU32}
 
-  private object Bad extends RuntimeException("vp8l: malformed") {
-    override def fillInStackTrace(): Throwable = this
-  }
-
-  // -----------------------------------------------------------------
-  // LSB-first bit reader (the VP8L convention)
-  // -----------------------------------------------------------------
-  private final class Br(b: Array[Byte], from: Int, until: Int) {
-    private val nbits: Long = (until - from).toLong << 3
-    var pos: Long = 0L
-    def readBits(n: Int): Int = {
-      if (n == 0) return 0
-      if (pos + n > nbits) throw Bad
-      var i = from + (pos >>> 3).toInt
-      val sh = (pos & 7L).toInt
-      var acc = 0L
-      var k = 0
-      val need = sh + n
-      while (k < need) { acc |= (b(i) & 0xffL) << k; k += 8; i += 1 }
-      pos += n
-      ((acc >>> sh) & ((1L << n) - 1)).toInt
-    }
-  }
-
-  // -----------------------------------------------------------------
-  // Canonical prefix decoder (DEFLATE convention: MSB-first codes in
-  // the LSB-first stream; equal lengths ordered by symbol value)
-  // -----------------------------------------------------------------
-  private val MaxBits = 15
-  private final class Huff(lens: Array[Int]) {
-    private var single = -1
-    private val count = new Array[Int](MaxBits + 1)
-    private val first = new Array[Int](MaxBits + 1)
-    private val offs = new Array[Int](MaxBits + 1)
-    private var symbols: Array[Int] = null
-    locally {
-      var nz = 0; var lastSym = -1
-      var i = 0
-      while (i < lens.length) {
-        val l = lens(i)
-        if (l < 0 || l > MaxBits) throw Bad
-        if (l > 0) { nz += 1; lastSym = i; count(l) += 1 }
-        i += 1
-      }
-      if (nz == 0) throw Bad
-      if (nz == 1) single = lastSym
-      else {
-        var space = 0L
-        var l = 1
-        while (l <= MaxBits) { space += count(l).toLong << (MaxBits - l); l += 1 }
-        if (space != (1L << MaxBits)) throw Bad
-        symbols = new Array[Int](nz)
-        val idx = new Array[Int](MaxBits + 1)
-        var code = 0; var off = 0
-        l = 1
-        while (l <= MaxBits) {
-          first(l) = code; offs(l) = off; idx(l) = off
-          off += count(l); code = (code + count(l)) << 1; l += 1
-        }
-        i = 0
-        while (i < lens.length) {
-          if (lens(i) > 0) { symbols(idx(lens(i))) = i; idx(lens(i)) += 1 }
-          i += 1
-        }
-      }
-    }
-    def decode(br: Br): Int = {
-      if (single >= 0) return single
-      var code = 0; var l = 0
-      while (l < MaxBits) {
-        code = (code << 1) | br.readBits(1); l += 1
-        if (code - first(l) < count(l)) return symbols(offs(l) + code - first(l))
-      }
-      throw Bad
-    }
-  }
+  private val MaxPixels = MaxOut / 4 // ARGB, 4 bytes a pixel
 
   /** Code-length-code symbol order (spec section "Normal Code
     * Length Code"). */
@@ -549,10 +474,6 @@ object WebpKernels {
   // -----------------------------------------------------------------
   // container + public decode
   // -----------------------------------------------------------------
-  private def leU32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-
   /** Locate the VP8L chunk payload; None for non-WebP and lossy WebP. */
   private def findVp8l(b: Array[Byte]): Option[(Int, Int)] = {
     if (b.length < 20 || b(0) != 'R' || b(1) != 'I' || b(2) != 'F' ||
@@ -606,7 +527,7 @@ object WebpKernels {
       }
       val n = w.toDouble * h
       Some(RasterKernels.Raster(w, h, sr / n, sg / n, sb / n))
-    } catch { case _: Exception => None }
+    } catch { case Refused() => None }
   }
 
   // -----------------------------------------------------------------
@@ -658,7 +579,7 @@ object WebpKernels {
       heap += ((na.w + nb2.w, n + nid, nid))
       nid += 1
     }
-    if (lens.max > MaxBits)
+    if (lens.max > MaxCodeBits)
       throw new IllegalArgumentException("fixture image too entropic")
     lens
   }
@@ -666,11 +587,11 @@ object WebpKernels {
   /** Canonical codes for `lens` (DEFLATE convention). */
   private def canonCodes(lens: Array[Int]): Array[Int] = {
     val codes = new Array[Int](lens.length)
-    val count = new Array[Int](MaxBits + 1)
+    val count = new Array[Int](MaxCodeBits + 1)
     lens.foreach(l => if (l > 0) count(l) += 1)
-    val next = new Array[Int](MaxBits + 2)
+    val next = new Array[Int](MaxCodeBits + 2)
     var code = 0
-    for (l <- 1 to MaxBits) { next(l) = code; code = (code + count(l)) << 1 }
+    for (l <- 1 to MaxCodeBits) { next(l) = code; code = (code + count(l)) << 1 }
     for (s <- lens.indices if lens(s) > 0) {
       codes(s) = next(lens(s)); next(lens(s)) += 1
     }

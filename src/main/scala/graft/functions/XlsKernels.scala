@@ -38,9 +38,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object XlsKernels {
 
-  private object Bad extends RuntimeException("xls: malformed") {
-    override def fillInStackTrace(): Throwable = this
-  }
+  import Decode.{Bad, Refused, leF64, leU16, leU32}
 
   private val MaxCells = 1 << 22
   private val MaxSstStrings = 1 << 22
@@ -64,23 +62,6 @@ object XlsKernels {
   private val RArray = 0x0221
   private val RShrFmla = 0x04BC
   private val RTable = 0x0236
-
-  private def leU16(b: Array[Byte], i: Int): Int = {
-    if (i + 2 > b.length) throw Bad
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  }
-  private def leU32(b: Array[Byte], i: Int): Long = {
-    if (i + 4 > b.length) throw Bad
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-  }
-  private def leF64(b: Array[Byte], i: Int): Double = {
-    if (i + 8 > b.length) throw Bad
-    var bits = 0L
-    var k = 7
-    while (k >= 0) { bits = (bits << 8) | (b(i + k) & 0xffL); k -= 1 }
-    java.lang.Double.longBitsToDouble(bits)
-  }
 
   /** Record-stream cursor: (type, payload) pairs with framing checks. */
   private final class Recs(s: Array[Byte]) {
@@ -387,7 +368,7 @@ object XlsKernels {
         }
       }
       new GenericArrayData(out.toArray)
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 
   // -----------------------------------------------------------------

@@ -35,6 +35,8 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object XlsxKernels {
 
+  import Decode.Refused
+
   import org.apache.spark.sql.types._
   val cellSchema: StructType = StructType(Seq(
     StructField("row", IntegerType, nullable = false),
@@ -143,7 +145,7 @@ object XlsxKernels {
       if (sharedRaw != null && shared == null) return null // damaged table
       sheetCells(new String(sheetRaw, java.nio.charset.StandardCharsets.UTF_8),
         shared)
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 
   private def isXmlWs(c: Char): Boolean =

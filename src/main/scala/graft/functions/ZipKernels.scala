@@ -27,7 +27,8 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object ZipKernels {
 
-  private val MaxInflate = 64 << 20
+  import Decode.{MaxInflate, Refused, inflateCapped, leU16, leU32}
+
   private val MaxEntries = 65535
 
   import org.apache.spark.sql.types._
@@ -36,11 +37,6 @@ object ZipKernels {
     StructField("method", IntegerType, nullable = false),
     StructField("compressed_size", LongType, nullable = false),
     StructField("size", LongType, nullable = false)))
-
-  private def u16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def u32(b: Array[Byte], i: Int): Long =
-    (u16(b, i).toLong) | (u16(b, i + 2).toLong << 16)
 
   private def sig(b: Array[Byte], i: Int, c3: Int, c4: Int): Boolean =
     i + 4 <= b.length && b(i) == 'P' && b(i + 1) == 'K' &&
@@ -58,16 +54,16 @@ object ZipKernels {
     var i = b.length - 22
     val stop = math.max(0, b.length - 22 - 65535)
     while (i >= stop && eocd < 0) {
-      if (sig(b, i, 5, 6) && i + 22 + u16(b, i + 20) == b.length) eocd = i
+      if (sig(b, i, 5, 6) && i + 22 + leU16(b, i + 20) == b.length) eocd = i
       i -= 1
     }
     if (eocd < 0) return null
-    if (u16(b, eocd + 4) != 0 || u16(b, eocd + 6) != 0) return null // multi-disk
-    val n = u16(b, eocd + 8)
-    if (n != u16(b, eocd + 10)) return null
+    if (leU16(b, eocd + 4) != 0 || leU16(b, eocd + 6) != 0) return null // multi-disk
+    val n = leU16(b, eocd + 8)
+    if (n != leU16(b, eocd + 10)) return null
     if (n > MaxEntries) return null
-    val cdSize = u32(b, eocd + 12)
-    val cdOff = u32(b, eocd + 16)
+    val cdSize = leU32(b, eocd + 12)
+    val cdOff = leU32(b, eocd + 16)
     if (cdOff == 0xffffffffL || n == 0xffff) return null // zip64: refuse
     if (cdOff + cdSize > eocd) return null
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Long, Long, Long, Long)]
@@ -76,15 +72,15 @@ object ZipKernels {
     while (k < n) {
       if (!sig(b, p, 1, 2)) return null
       if (p + 46 > b.length) return null
-      val flags = u16(b, p + 8)
-      val method = u16(b, p + 10)
-      val crc = u32(b, p + 16)
-      val csize = u32(b, p + 20)
-      val usize = u32(b, p + 24)
-      val nameLen = u16(b, p + 28)
-      val extraLen = u16(b, p + 30)
-      val commentLen = u16(b, p + 32)
-      val lfh = u32(b, p + 42)
+      val flags = leU16(b, p + 8)
+      val method = leU16(b, p + 10)
+      val crc = leU32(b, p + 16)
+      val csize = leU32(b, p + 20)
+      val usize = leU32(b, p + 24)
+      val nameLen = leU16(b, p + 28)
+      val extraLen = leU16(b, p + 30)
+      val commentLen = leU16(b, p + 32)
+      val lfh = leU32(b, p + 42)
       if ((flags & 0x1) != 0) return null // encrypted: refuse the archive
       if (csize == 0xffffffffL || usize == 0xffffffffL) return null // zip64
       if (p + 46 + nameLen > b.length) return null
@@ -92,7 +88,7 @@ object ZipKernels {
         java.nio.charset.StandardCharsets.UTF_8)
       // local header cross-check: signature + same name
       if (!sig(b, lfh.toInt, 3, 4)) return null
-      val lNameLen = u16(b, lfh.toInt + 26)
+      val lNameLen = leU16(b, lfh.toInt + 26)
       if (lNameLen != nameLen) return null
       val lName = new String(b, lfh.toInt + 30, lNameLen,
         java.nio.charset.StandardCharsets.UTF_8)
@@ -106,7 +102,7 @@ object ZipKernels {
   }
 
   def entries(b: Array[Byte]): ArrayData = {
-    val cd = try centralDirectory(b) catch { case _: Exception => null }
+    val cd = try centralDirectory(b) catch { case Refused() => null }
     if (cd == null) return null
     new GenericArrayData(cd.map { case (name, method, csize, usize, _, _) =>
       new GenericInternalRow(Array[Any](
@@ -124,7 +120,7 @@ object ZipKernels {
         case None => null
         case Some(e) => payloadOf(b, e)
       }
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 
   /** All members whose names satisfy `pred`, ONE directory scan (r17:
@@ -145,7 +141,7 @@ object ZipKernels {
         }
       }
       out.toSeq
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 
   private def payloadOf(b: Array[Byte],
@@ -156,8 +152,8 @@ object ZipKernels {
           val p = lfh.toInt
           // data starts after the local header's own name+extra (which
           // may differ in extra length from the central copy)
-          val nameLen = u16(b, p + 26)
-          val extraLen = u16(b, p + 28)
+          val nameLen = leU16(b, p + 26)
+          val extraLen = leU16(b, p + 28)
           val dataStart = p + 30 + nameLen + extraLen
           if (dataStart + csize > b.length) return null
           if (usize > MaxInflate) return null
@@ -169,28 +165,18 @@ object ZipKernels {
               val inf = new java.util.zip.Inflater(true)
               try {
                 inf.setInput(b, dataStart, csize.toInt)
-                val out = new java.io.ByteArrayOutputStream(
-                  math.min(usize, 1L << 20).toInt.max(64))
-                val buf = new Array[Byte](1 << 16)
-                while (!inf.finished()) {
-                  val k = inf.inflate(buf)
-                  if (k > 0) {
-                    out.write(buf, 0, k)
-                    if (out.size() > usize) return null // declared-size lie
-                  } else if (inf.needsInput() || inf.needsDictionary())
-                    return null
-                }
-                out.toByteArray
+                // capped at the declared size: a longer stream is a lie
+                inflateCapped(inf, usize, math.min(usize, 1L << 20).toInt.max(64))
               } finally inf.end()
             case _ => return null // unsupported method
           }
-          if (data.length != usize) return null
+          if (data == null || data.length != usize) return null
           val crc = new java.util.zip.CRC32
           crc.update(data)
           if ((crc.getValue & 0xffffffffL) != crcExpected) return null
           data
       }
-    } catch { case _: Exception => null }
+    } catch { case Refused() => null }
   }
 
 }

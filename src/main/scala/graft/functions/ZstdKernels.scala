@@ -39,11 +39,7 @@ package graft.functions
   */
 object ZstdKernels {
 
-  private val MaxOut = 1 << 28 // 256 MB inflation cap
-
-  private object Bad extends RuntimeException("zstd: malformed") {
-    override def fillInStackTrace(): Throwable = this
-  }
+  import Decode.{Bad, MaxOut, Refused, leI64, leU16, leU32}
 
   // -----------------------------------------------------------------
   // XXH64 (public algorithm)
@@ -53,15 +49,6 @@ object ZstdKernels {
   private val P3 = 0x165667B19E3779F9L
   private val P4 = 0x85EBCA77C2B2AE63L
   private val P5 = 0x27D4EB2F165667C5L
-
-  private def leL(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) |
-      ((b(i + 3) & 0xffL) << 24) | ((b(i + 4) & 0xffL) << 32) |
-      ((b(i + 5) & 0xffL) << 40) | ((b(i + 6) & 0xffL) << 48) |
-      ((b(i + 7) & 0xffL) << 56)
-  private def leI(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) |
-      ((b(i + 3) & 0xffL) << 24)
 
   /** XXH64 of b[off, off+len) with seed 0 — zstd's content checksum. */
   def xxh64(b: Array[Byte], off: Int, len: Int): Long = {
@@ -73,8 +60,8 @@ object ZstdKernels {
     if (len >= 32) {
       var v1 = P1 + P2; var v2 = P2; var v3 = 0L; var v4 = -P1
       while (i + 32 <= end) {
-        v1 = round(v1, leL(b, i)); v2 = round(v2, leL(b, i + 8))
-        v3 = round(v3, leL(b, i + 16)); v4 = round(v4, leL(b, i + 24))
+        v1 = round(v1, leI64(b, i)); v2 = round(v2, leI64(b, i + 8))
+        v3 = round(v3, leI64(b, i + 16)); v4 = round(v4, leI64(b, i + 24))
         i += 32
       }
       h = java.lang.Long.rotateLeft(v1, 1) + java.lang.Long.rotateLeft(v2, 7) +
@@ -84,11 +71,11 @@ object ZstdKernels {
     } else h = P5
     h += len
     while (i + 8 <= end) {
-      h = java.lang.Long.rotateLeft(h ^ round(0L, leL(b, i)), 27) * P1 + P4
+      h = java.lang.Long.rotateLeft(h ^ round(0L, leI64(b, i)), 27) * P1 + P4
       i += 8
     }
     if (i + 4 <= end) {
-      h = java.lang.Long.rotateLeft(h ^ (leI(b, i) * P1), 23) * P2 + P3
+      h = java.lang.Long.rotateLeft(h ^ (leU32(b, i) * P1), 23) * P2 + P3
       i += 4
     }
     while (i < end) {
@@ -485,17 +472,17 @@ object ZstdKernels {
 
   private def parseDict(d: Array[Byte]): Dict = {
     if (d == null || d.length == 0) throw Bad
-    if (d.length < 8 || leI(d, 0) != 0xEC30A437L)
+    if (d.length < 8 || leU32(d, 0) != 0xEC30A437L)
       return new Dict(0L, d, null, null, null, null, 1L, 4L, 8L,
         structured = false)
-    val dictId = leI(d, 4)
+    val dictId = leU32(d, 4)
     var pos = 8
     val (huffT, p1) = huffRead(d, pos, d.length); pos = p1
     val (ofT, p2) = fseRead(d, pos, d.length, 8, 31); pos = p2
     val (mlT, p3) = fseRead(d, pos, d.length, 9, 52); pos = p3
     val (llT, p4) = fseRead(d, pos, d.length, 9, 35); pos = p4
     if (pos + 12 > d.length) throw Bad
-    val r1 = leI(d, pos); val r2 = leI(d, pos + 4); val r3 = leI(d, pos + 8)
+    val r1 = leU32(d, pos); val r2 = leU32(d, pos + 4); val r3 = leU32(d, pos + 8)
     if (r1 <= 0 || r2 <= 0 || r3 <= 0) throw Bad
     pos += 12
     val content = java.util.Arrays.copyOfRange(d, pos, d.length)
@@ -568,8 +555,7 @@ object ZstdKernels {
           else huffStream(tab, b, p, dataEnd, out, 0, regen)
         } else {
           if (p + 6 > dataEnd) throw Bad
-          def u16(i: Int) = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-          val s1 = u16(p); val s2 = u16(p + 2); val s3 = u16(p + 4)
+          val s1 = leU16(b, p); val s2 = leU16(b, p + 2); val s3 = leU16(b, p + 4)
           val start1 = p + 6
           val start2 = start1 + s1
           val start3 = start2 + s2
@@ -721,10 +707,10 @@ object ZstdKernels {
       var frames = 0
       while (pos < b.length) {
         if (pos + 4 > b.length) throw Bad
-        val magic = leI(b, pos)
+        val magic = leU32(b, pos)
         if ((magic & 0xfffffff0L) == 0x184d2a50L) { // skippable
           if (pos + 8 > b.length) throw Bad
-          val sz = leI(b, pos + 4)
+          val sz = leU32(b, pos + 4)
           if (pos + 8 + sz > b.length) throw Bad
           pos += 8 + sz.toInt
         } else if (magic == 0xfd2fb528L) {
@@ -734,7 +720,7 @@ object ZstdKernels {
       }
       if (frames == 0) throw Bad
       out.toByteArray
-    } catch { case _: Exception | _: StackOverflowError => null }
+    } catch { case Refused() => null }
   }
 
   private def frame(b: Array[Byte], start: Int,
@@ -823,7 +809,7 @@ object ZstdKernels {
     if (fcs >= 0 && buf.size != fcs) throw Bad
     if (checksum) {
       if (pos + 4 > b.length) throw Bad
-      val want = leI(b, pos)
+      val want = leU32(b, pos)
       pos += 4
       if ((xxh64(buf.buf, 0, buf.size) & 0xffffffffL) != want) throw Bad
     }
