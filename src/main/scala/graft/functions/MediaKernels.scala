@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object MediaKernels {
 
-  import Decode.{beI32, beI64, beU16, beU32, leI32, leI64, leU16, leU32}
+  import Decode.{beI32, beI64, beU16, leI32, leI64, leU16}
 
   private def row(fmt: String, w: Int, h: Int): InternalRow =
     new GenericInternalRow(Array[Any](UTF8String.fromString(fmt), w, h))
@@ -727,34 +727,25 @@ object MediaKernels {
     // entries (SHORT or LONG, count 1 — inline in the value field)
     if (b.length >= 8 && ((b(0) == 'I' && b(1) == 'I') ||
         (b(0) == 'M' && b(1) == 'M'))) {
-      val little = b(0) == 'I'
-      def tu16(i: Int): Int =
-        if (i < 0 || i > b.length - 2) -1
-        else if (little) leU16(b, i) else beU16(b, i)
-      def tu32(i: Int): Long =
-        if (i < 0 || i > b.length - 4) -1L
-        else if (little) leU32(b, i) else beU32(b, i)
-      if (tu16(2) != 42) return null
-      val ifd = tu32(4)
-      if (ifd < 8 || ifd + 2 > b.length) return null
-      val n = tu16(ifd.toInt)
-      if (n <= 0 || ifd + 2 + 12L * n > b.length) return null
+      val header = TiffKernels.Header.read(b)
+      if (header == null) return null
+      import header.{u16, u32}
       var w = -1L; var h = -1L
       var e = 0
-      while (e < n) {
-        val at = ifd.toInt + 2 + 12 * e
-        val tag = tu16(at)
+      while (e < header.entries) {
+        val at = header.entry(e)
+        val tag = u16(at)
         if (tag == 256 || tag == 257) {
-          val typ = tu16(at + 2)
+          val typ = u16(at + 2)
           // count must be 1: a LONG with count>1 (or SHORT with count>2)
           // stores an OFFSET in the value field, not the dimension —
           // trusting it reports garbage dims for a blob TiffKernels
           // itself refuses (its values() caps these tags at count 1)
-          val cnt = tu32(at + 4)
+          val cnt = u32(at + 4)
           val v =
             if (cnt != 1L) -1L
-            else if (typ == 3) tu16(at + 8).toLong
-            else if (typ == 4) tu32(at + 8)
+            else if (typ == 3) u16(at + 8).toLong
+            else if (typ == 4) u32(at + 8)
             else -1L
           if (tag == 256) w = v else h = v
         }

@@ -65,25 +65,51 @@ object MinHashKernels {
     * `array_union` cost per candidate pair). A NULL element fails
     * loudly, naming its index.
     */
-  def sortedJaccard(a: ArrayData, b: ArrayData): Double = {
+  def sortedJaccard(a: ArrayData, b: ArrayData): Double =
+    sortedJaccardAtLeast(a, b, 0.0)
+
+  /** [[denseJaccardAtLeast]] with [[sortedJaccard]]'s NULL check. */
+  def sortedJaccardAtLeast(a: ArrayData, b: ArrayData, atLeast: Double): Double = {
     requireDense(a); requireDense(b)
-    denseJaccard(a, b)
+    denseJaccardAtLeast(a, b, atLeast)
   }
 
   /** [[sortedJaccard]] without the NULL check, for arrays whose type
-    * declares `containsNull = false` (as [[shingleHashes]]'s does). */
-  def denseJaccard(a: ArrayData, b: ArrayData): Double = {
+    * declares `containsNull = false` (as [[shingleHashes]]'s does), and
+    * for a caller that keeps only scores of at least `atLeast`: the
+    * exact score when it reaches `atLeast`, otherwise a value below
+    * `atLeast` (an upper bound of the score).
+    *
+    * The merge stops once the largest intersection it can still reach,
+    * `inter + min(n - i, m - j)`, scores below `atLeast`; before the
+    * first step that is the length bound `min(n, m) / max(n, m)`. The
+    * bound is computed with the same double division as the score, and
+    * a correctly rounded division of exact ints is monotone in the
+    * intersection, so a pair whose score reaches `atLeast` is never cut
+    * short, and every pair merged to the end gets the exact score.
+    * `atLeast <= 0` never stops early.
+    */
+  def denseJaccardAtLeast(a: ArrayData, b: ArrayData, atLeast: Double): Double = {
     val n = a.numElements(); val m = b.numElements()
+    if (n + m == 0) return 0.0
+    val top = score(math.min(n, m), n + m)
+    if (top < atLeast) return top
     var i = 0; var j = 0; var inter = 0
     while (i < n && j < m) {
       val va = a.getLong(i); val vb = b.getLong(j)
       if (va == vb) { inter += 1; i += 1; j += 1 }
-      else if (va < vb) i += 1
-      else j += 1
+      else {
+        if (va < vb) i += 1 else j += 1
+        val reach = score(inter + math.min(n - i, m - j), n + m)
+        if (reach < atLeast) return reach
+      }
     }
-    val union = n + m - inter
-    if (union == 0) 0.0 else inter.toDouble / union
+    score(inter, n + m)
   }
+
+  /** Jaccard of sets of total size `total` sharing `inter` elements. */
+  private def score(inter: Int, total: Int): Double =
+    inter.toDouble / (total - inter)
 
   private def requireDense(a: ArrayData): Unit = {
     val c = firstNull(a)

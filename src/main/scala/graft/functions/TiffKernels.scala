@@ -42,24 +42,50 @@ object TiffKernels {
     try decodeInner(b, sink) catch { case Refused() => None }
   }
 
-  private def decodeInner(b: Array[Byte], sink: RasterKernels.PixelSink)
-      : Option[RasterKernels.Raster] = {
-    val little =
-      if (b(0) == 'I' && b(1) == 'I') true
-      else if (b(0) == 'M' && b(1) == 'M') false
-      else return None
-    // -1 past the end, a sentinel every caller range-checks
-    def u16(i: Int): Int =
+  /** A classic TIFF header (byte order `II`/`MM`, magic 42) and its
+    * first IFD, as both this decoder and `MediaKernels.imageMeta` read
+    * them: `ifd` is the IFD's offset and `entries` its entry count, and
+    * all of its entries lie inside the blob. `u16`/`u32` read in the
+    * blob's byte order and return -1 past the end, a sentinel every
+    * caller range-checks. */
+  private[functions] final class Header private (
+      b: Array[Byte], little: Boolean, val ifd: Int, val entries: Int) {
+    def u16(i: Int): Int = Header.u16(b, little, i)
+    def u32(i: Int): Long = Header.u32(b, little, i)
+    /** Offset of the first IFD's entry `e`. */
+    def entry(e: Int): Int = ifd + 2 + 12 * e
+  }
+
+  private[functions] object Header {
+    private def u16(b: Array[Byte], little: Boolean, i: Int): Int =
       if (i < 0 || i > b.length - 2) -1
       else if (little) leU16(b, i) else beU16(b, i)
-    def u32(i: Int): Long =
+    private def u32(b: Array[Byte], little: Boolean, i: Int): Long =
       if (i < 0 || i > b.length - 4) -1L
       else if (little) leU32(b, i) else beU32(b, i)
-    if (u16(2) != 42) return None
-    val ifd = u32(4)
-    if (ifd < 8 || ifd + 2 > b.length) return None
-    val n = u16(ifd.toInt)
-    if (n <= 0 || ifd + 2 + 12L * n > b.length) return None
+
+    /** `b`'s header, or null when `b` is not classic TIFF or its first
+      * IFD does not fit in it. */
+    def read(b: Array[Byte]): Header = {
+      if (b.length < 8) return null
+      val little =
+        if (b(0) == 'I' && b(1) == 'I') true
+        else if (b(0) == 'M' && b(1) == 'M') false
+        else return null
+      if (u16(b, little, 2) != 42) return null
+      val ifd = u32(b, little, 4)
+      if (ifd < 8 || ifd + 2 > b.length) return null
+      val n = u16(b, little, ifd.toInt)
+      if (n <= 0 || ifd + 2 + 12L * n > b.length) null
+      else new Header(b, little, ifd.toInt, n)
+    }
+  }
+
+  private def decodeInner(b: Array[Byte], sink: RasterKernels.PixelSink)
+      : Option[RasterKernels.Raster] = {
+    val header = Header.read(b)
+    if (header == null) return None
+    import header.{u16, u32}
 
     // one IFD entry's integer values (BYTE/SHORT/LONG), inline when the
     // payload fits in the 4-byte value field, via offset otherwise;
@@ -110,8 +136,8 @@ object TiffKernels {
     var predictor = 1L
     var tiled = false
     var e = 0
-    while (e < n) {
-      val at = ifd.toInt + 2 + 12 * e
+    while (e < header.entries) {
+      val at = header.entry(e)
       val tag = u16(at)
       tag match {
         case 256 => val v = values(at, 1); if (v == null) return None; width = v(0)

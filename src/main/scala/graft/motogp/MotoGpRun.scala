@@ -51,7 +51,6 @@ object MotoGpRun {
     require(args.nonEmpty, "usage: MotoGpRun <outDir> [--freeze]")
     val outDir = args(0)
     val freeze = args.contains("--freeze")
-    val refBase = sys.env.getOrElse("SPARK_GRAFT_REFERENCE", "/root/reference")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
     val spark = SparkSession.builder()
@@ -62,7 +61,7 @@ object MotoGpRun {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val pipelines = new MotoGpPipelines(spark, MotoGpPaths(base = refBase,
+    val pipelines = new MotoGpPipelines(spark, MotoGpPaths(base = MotoGpPaths.referenceBase,
       raceResults = "fixtures/motogp/race_results.csv"))
 
     val signatures = pipelines.tables.toSeq.sortBy(_._1).map { case (name, df) =>

@@ -44,6 +44,12 @@ final case class MotoGpPaths(
   def weatherPath: String = or(weather, "scraping/race_weather_data_final.json")
 }
 
+object MotoGpPaths {
+  /** The reference repository's checkout, whose source data the build
+    * reads: `SPARK_GRAFT_REFERENCE`, else the default below. */
+  def referenceBase: String = sys.env.getOrElse("SPARK_GRAFT_REFERENCE", "/root/reference")
+}
+
 object MotoGpSchemas {
   private def st(fields: (String, DataType)*): StructType =
     StructType(fields.map { case (n, t) => StructField(n, t) })

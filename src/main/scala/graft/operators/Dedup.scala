@@ -77,7 +77,9 @@ object Dedup {
     * @param numHashes total minhashes (bands * rowsPerBand)
     * @param bands     LSH bands; a pair collides if any band matches.
     *                  P(collide) = 1 - (1 - j^r)^b, r = numHashes/bands
-    * @param threshold exact Jaccard cutoff applied to candidates
+    * @param threshold exact Jaccard cutoff applied to candidates; the
+    *                  verify merge of a candidate stops once it cannot
+    *                  reach it (see [[sortedJaccard]]'s `atLeast`)
     * @return (id_a, id_b, jaccard) with id_a < id_b
     *
     * Scale shape: shingle strings are hashed ONCE ([[TextFunctions
@@ -145,19 +147,32 @@ object Dedup {
     candidates
       .join(base.select(col("__id").as("id_a"), col("__hs").as("__hs_a")), "id_a")
       .join(base.select(col("__id").as("id_b"), col("__hs").as("__hs_b")), "id_b")
-      .withColumn("jaccard",
-        round(sortedJaccard(col("__hs_a"), col("__hs_b")), 6))
+      .withColumn("jaccard", round(sortedJaccard(col("__hs_a"), col("__hs_b"),
+        atLeast = roundingSlack(threshold)), 6))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
 
   /** Exact Jaccard over sorted shingle-hash arrays — linear merge kernel
-    * (see [[org.apache.spark.sql.SortedLongJaccard]]). */
-  def sortedJaccard(a: Column, b: Column): Column = {
+    * (see [[org.apache.spark.sql.SortedLongJaccard]]).
+    *
+    * `atLeast` is for a caller that keeps only pairs scoring at least
+    * that much: such a pair still gets its exact score, while the merge
+    * of any other pair stops as soon as the intersection it can still
+    * reach scores below `atLeast`, and returns a value below it. The
+    * bound uses the score's own double division, which is monotone, so
+    * the cut is lossless. The default 0.0 scores every pair exactly. */
+  def sortedJaccard(a: Column, b: Column, atLeast: Double = 0.0): Column = {
     import org.apache.spark.sql.{GraftBridge, SortedLongJaccard}
     GraftBridge.column(SortedLongJaccard(
-      GraftBridge.expression(a), GraftBridge.expression(b)))
+      GraftBridge.expression(a), GraftBridge.expression(b), atLeast))
   }
+
+  /** The bound under which no score can pass `round(score, 6) >= t`:
+    * the rounding moves a score up by at most 5e-7, so one below
+    * `t - 1e-6` never reaches `t`, and every bound or early exit taken
+    * below this value is lossless. */
+  private def roundingSlack(t: Double): Double = math.max(0.0, t - 1e-6)
 
   /** SimHash near-dup pairs: 64-bit sketch, banded into `bands` chunks
     * (pigeonhole: pairs within Hamming distance bands-1 share >= 1 exact
@@ -423,13 +438,21 @@ object Dedup {
     * hash arrays and each pair is scored by one linear merge (equal to
     * string-set Jaccard up to 64-bit collisions).
     *
-    * `minJaccard` enables the set-similarity LENGTH FILTER (the PPJoin
-    * family's cheapest bound): J(A,B) ≤ min(|A|,|B|) / max(|A|,|B|),
-    * so a pair whose set sizes differ by more than the threshold ratio
-    * is discarded by two int compares BEFORE the O(|A|+|B|) merge, and
-    * only surviving pairs are scored and post-filtered. The returned
-    * pair set is exactly the ≥ minJaccard pairs — the bound is implied,
-    * never lossy.
+    * The join condition tests, in this order, `id_a < id_b`, then with
+    * `minJaccard > 0` two bounds, then the merge, so each unordered pair
+    * is merged at most once and self-pairs never are:
+    *  - the set-similarity LENGTH FILTER (the PPJoin family's cheapest
+    *    bound): J(A,B) ≤ min(|A|,|B|) / max(|A|,|B|), so a pair whose
+    *    set sizes differ by more than the threshold ratio is discarded
+    *    by two compares BEFORE the O(|A|+|B|) merge;
+    *  - the thresholded merge ([[sortedJaccard]] with `atLeast`), which
+    *    stops once the intersection it can still reach scores below the
+    *    threshold (the same bound, tightened at every mismatch).
+    * Both bounds use `minJaccard - 1e-6`, below which no score can round
+    * up to `minJaccard`, and the merge's bound is the score's own double
+    * division, so the returned pair set and every score are exactly
+    * those of merging every pair and filtering `round(j, 6) >=
+    * minJaccard` — the bounds are implied, never lossy.
     */
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
                         blockCol: String, n: Int = 3,
@@ -446,22 +469,26 @@ object Dedup {
     // cost-gated at 16 KB/task — the per-row work is a whole block's
     // worth of linear merges, far above the per-byte sketch kernels.
     val a = g(Ops.fanOutForCompute(src, 16 * 1024L, col("__id")))
-      .select(col("__blk"), col("__id").as("id_a"), col("__sh").as("__sh_a"))
+      .select(col("__blk").as("__blk_a"), col("__id").as("id_a"), col("__sh").as("__sh_a"))
     val b = g(src)
-      .select(col("__blk"), col("__id").as("id_b"), col("__sh").as("__sh_b"))
-    val joined = a.join(b, Seq("__blk")).filter(col("id_a") < col("id_b"))
-    // 1e-6 slack: the post-filter compares the ROUNDED (6-decimal)
-    // score, so a pair rounding up across the threshold must not be
-    // length-filtered on its unrounded bound
-    val bound = math.max(0.0, minJaccard - 1e-6)
-    val prefiltered =
-      if (minJaccard <= 0.0) joined
-      else joined.filter(
-        size(col("__sh_a")).cast("double") >= lit(bound) * size(col("__sh_b")) &&
-          size(col("__sh_b")).cast("double") >= lit(bound) * size(col("__sh_a")))
-    val scored = prefiltered.select(col("id_a"), col("id_b"),
+      .select(col("__blk").as("__blk_b"), col("__id").as("id_b"), col("__sh").as("__sh_b"))
+    // the condition is written in full, cheapest test first: `And`
+    // short-circuits, so the order id, then size, then merge skips the
+    // merge for the self-pairs, the mirrored half of each block and the
+    // pairs the length bound rules out. Filters over the join would be
+    // pushed into it in the reverse order.
+    val ordered = col("__blk_a") === col("__blk_b") && col("id_a") < col("id_b")
+    val cond =
+      if (minJaccard <= 0.0) ordered
+      else {
+        val bound = roundingSlack(minJaccard)
+        ordered &&
+          size(col("__sh_a")).cast("double") >= lit(bound) * size(col("__sh_b")) &&
+          size(col("__sh_b")).cast("double") >= lit(bound) * size(col("__sh_a")) &&
+          round(sortedJaccard(col("__sh_a"), col("__sh_b"), bound), 6) >= minJaccard
+      }
+    a.join(b, cond).select(col("id_a"), col("id_b"),
       round(sortedJaccard(col("__sh_a"), col("__sh_b")), 6).as("jaccard"))
-    if (minJaccard <= 0.0) scored else scored.filter(col("jaccard") >= minJaccard)
   }
 
   /** Connected components over a near-dup pair graph: every node gets

@@ -599,9 +599,17 @@ object Kernels {
 /** Exact Jaccard similarity of two sorted-distinct long arrays (shingle
   * hash sets) via a single linear merge. When both input types declare
   * `containsNull = false` the per-row NULL-element check is skipped.
+  *
+  * `atLeast` is a plan-time constant for a caller that keeps only
+  * scores of at least that value: a pair that reaches it gets its exact
+  * score, and the merge of any other pair may stop early with a value
+  * below it (see [[graft.functions.MinHashKernels.denseJaccardAtLeast]]).
+  * The default 0.0 never stops early; SQL's `sorted_jaccard(a, b)` uses
+  * it.
   */
-case class SortedLongJaccard(left: Expression, right: Expression)
+case class SortedLongJaccard(left: Expression, right: Expression, atLeast: Double = 0.0)
     extends BinaryExpression with ExpectsInputTypes {
+  require(!atLeast.isNaN && !atLeast.isInfinite, s"sorted_jaccard: bad atLeast $atLeast")
 
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(LongType), ArrayType(LongType))
@@ -615,13 +623,13 @@ case class SortedLongJaccard(left: Expression, right: Expression)
 
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    if (dense) graft.functions.MinHashKernels.denseJaccard(x, y)
-    else graft.functions.MinHashKernels.sortedJaccard(x, y)
+    if (dense) graft.functions.MinHashKernels.denseJaccardAtLeast(x, y, atLeast)
+    else graft.functions.MinHashKernels.sortedJaccardAtLeast(x, y, atLeast)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (dense) "denseJaccard" else "sortedJaccard"
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.MinHashKernels.$fn($a, $b)")
+    val fn = if (dense) "denseJaccardAtLeast" else "sortedJaccardAtLeast"
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.MinHashKernels.$fn($a, $b, ${atLeast}D)")
   }
 
   override protected def withNewChildrenInternal(

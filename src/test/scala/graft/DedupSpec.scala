@@ -400,6 +400,18 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("q_dedup_minhash on the benchmark tables: the build submits no job, the action 9") {
+    val s = spark.newSession()
+    val dir = new java.io.File("perfbench/data/sf0.1").getAbsolutePath
+    val run = SparkEntry.queries("q_dedup_minhash")
+    run(s, dir) // infers the table's schema once
+    val (df, build) = JobShape.of(s, "dedup-minhash-build")(run(s, dir))
+    val (_, action) = JobShape.of(s, "dedup-minhash-action")(
+      df.write.format("noop").mode("overwrite").save())
+    assert(build.jobs == 0, build)
+    assert(action.jobs == 9, action)
+  }
+
   test("lineDedup: first corpus occurrence survives, short lines exempt, text rebuilt in order") {
     val docs = Seq(
       (1L, "alpha beta\nshared line\n--\ntail one"),

@@ -118,18 +118,6 @@ class KernelRegistrySpec extends SparkSpec {
 
   test("interpreted evaluation equals generated code on a sample of every input type") {
     val df = frame(samples.map(_._2))
-    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
-    def interpreted[T](body: => T): T = {
-      val saved = keys.map(k => spark.conf.getOption(k))
-      try {
-        spark.conf.set(keys(0), "NO_CODEGEN")
-        spark.conf.set(keys(1), "false")
-        body
-      } finally keys.zip(saved).foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
     var nonNull = 0
     // small groups, so each projection stays inside whole-stage codegen
     for (group <- Kernels.all.grouped(8)) {

@@ -16,7 +16,7 @@ class MotoGpSpec extends SparkSpec {
   // Nello Pagani (riders.csv); bike Honda (bikes.csv id 2); team ids 2/3
   // (teams.csv); one pre-2005 row that must be filtered out everywhere
   private lazy val pipelines = new MotoGpPipelines(spark,
-    MotoGpPaths(base = "/root/reference",
+    MotoGpPaths(base = MotoGpPaths.referenceBase,
       raceResults = "fixtures/motogp/race_results.csv"))
 
   test("race table: one row per scraped race, contiguous id_race, fuzzy circuit_id") {
@@ -121,7 +121,7 @@ class MotoGpSpec extends SparkSpec {
     assert(missing.count() == 0 && missing.schema == MotoGpSchemas.weather)
     // glob that matches → actually read, not treated as missing
     val glob = MotoGpSources.json(spark,
-      "/root/reference/scraping/race_weather_*.json", MotoGpSchemas.weather)
+      s"${MotoGpPaths.referenceBase}/scraping/race_weather_*.json", MotoGpSchemas.weather)
     assert(glob.count() == 313)
   }
 

@@ -231,6 +231,36 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("q_dedup_minhash truth side: the id order and length bounds precede the merge") {
+    // `And` short-circuits left to right: the pair merge must come after
+    // `id_a < id_b` and both size bounds, so it runs once per unordered
+    // pair the length bound leaves, never for a self or mirrored pair
+    import org.apache.spark.sql.SortedLongJaccard
+    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Expression, LessThan, Size}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case x => Seq(x)
+    }
+    def has(e: Expression, p: Expression => Boolean) = e.find(p).isDefined
+    val df = Queries.all.find(_.name == "q_dedup_minhash").get.run(spark, dir)
+    val truth = df.queryExecution.optimizedPlan.collect {
+      case j: Join if j.condition.exists(c => has(c, _.isInstanceOf[LessThan])) =>
+        conjuncts(j.condition.get)
+    }
+    assert(truth.size == 1, truth)
+    val cond = truth.head
+    val ids = cond.indexWhere {
+      case LessThan(a: AttributeReference, b: AttributeReference) =>
+        a.name == "id_a" && b.name == "id_b"
+      case _ => false
+    }
+    val sizes = cond.zipWithIndex.collect { case (c, i) if has(c, _.isInstanceOf[Size]) => i }
+    val merge = cond.indexWhere(has(_, _.isInstanceOf[SortedLongJaccard]))
+    assert(ids >= 0 && sizes.size == 2 && merge >= 0, cond.mkString("\n"))
+    assert(ids < sizes.min && sizes.max < merge, cond.mkString("\n"))
+  }
+
   test("q_dedup_simhash truth side: hamming bound evaluated inside the join, not after") {
     // the exact reference must filter candidate pairs as they stream out
     // of the nested loop — a post-join Filter on the full n² cross

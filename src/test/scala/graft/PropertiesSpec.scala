@@ -46,6 +46,29 @@ class PropertiesSpec extends SparkSpec {
     }
   }
 
+  test("thresholded Jaccard is exact at or above its bound, an upper bound below it") {
+    // thresholds on and next to each pair's own score hit the boundary
+    // where a lossy early exit would show
+    var stopped = 0
+    for (_ <- 1 to 2000) {
+      val range = 2 + rnd.nextInt(60)
+      def set() = Seq.fill(rnd.nextInt(40))(rnd.nextInt(range).toLong).distinct.sorted.toArray
+      val (a, b) = (UnsafeArrayData.fromPrimitiveArray(set()),
+        UnsafeArrayData.fromPrimitiveArray(set()))
+      val exact = MinHashKernels.sortedJaccard(a, b)
+      for (t <- Seq(exact, Math.nextUp(exact), Math.nextDown(exact), rnd.nextDouble(),
+          0.5, 0.0, -0.5, 1.0, 1.5)) {
+        val got = MinHashKernels.denseJaccardAtLeast(a, b, t)
+        if (exact >= t) assert(got == exact, s"t=$t a=$a b=$b")
+        else {
+          assert(got < t && got >= exact, s"t=$t got=$got exact=$exact a=$a b=$b")
+          if (got != exact) stopped += 1
+        }
+      }
+    }
+    assert(stopped > 1000, stopped) // the early exit ran, not only full merges
+  }
+
   test("minhash collision rate estimates Jaccard (statistical bound)") {
     // two docs with known shingle overlap: signature agreement ≈ jaccard
     val base = "the quick brown fox jumps over the lazy dog and keeps running"

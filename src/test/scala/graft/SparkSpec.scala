@@ -9,6 +9,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = () // session shared across suites
+
+  /** `body` with expressions evaluated interpreted, not by generated code. */
+  def interpreted[T](body: => T): T = {
+    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+    val saved = keys.map(k => spark.conf.getOption(k))
+    try {
+      spark.conf.set(keys(0), "NO_CODEGEN")
+      spark.conf.set(keys(1), "false")
+      body
+    } finally keys.zip(saved).foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {

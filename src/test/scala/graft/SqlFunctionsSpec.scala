@@ -161,6 +161,46 @@ class SqlFunctionsSpec extends SparkSpec {
     }
   }
 
+  test("thresholded sorted_jaccard keeps a pair on the threshold and one in the rounding slack") {
+    import graft.functions.MinHashKernels.denseJaccardAtLeast
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray
+    // |A| = |B| = 3 sharing 2: J = 2/4, exactly on the threshold
+    val (a, b) = (fromPrimitiveArray(Array(1L, 2L, 3L)), fromPrimitiveArray(Array(1L, 2L, 4L)))
+    assert(denseJaccardAtLeast(a, b, 0.5) == 0.5)
+    assert(denseJaccardAtLeast(a, b, Math.nextUp(0.5)) < Math.nextUp(0.5))
+    // J = 2/3 rounds to 0.666667: a caller keeping round(j, 6) >= 0.666667
+    // bounds the merge at 0.666666 and gets the exact score back
+    val c = fromPrimitiveArray(Array(1L, 2L))
+    assert(denseJaccardAtLeast(a, c, 0.666666) == 2.0 / 3)
+    assert(denseJaccardAtLeast(a, c, 0.666667) < 0.666667)
+    // through the blocked join: "abcd" and "abcde" share 2 of 3 trigrams
+    import spark.implicits._
+    val docs = Seq((1L, "abcd", "b"), (2L, "abcde", "b")).toDF("id", "t", "blk")
+    val pairs = graft.operators.Dedup.ngramJaccardPairs(docs, "t", "id", "blk", n = 3,
+      minJaccard = 0.666667).as[(Long, Long, Double)].collect()
+    assert(pairs.toSeq == Seq((1L, 2L, 0.666667)))
+    assert(graft.operators.Dedup.ngramJaccardPairs(docs, "t", "id", "blk", n = 3,
+      minJaccard = 0.666668).count() == 0L)
+  }
+
+  test("thresholded sorted_jaccard: interpreted evaluation equals generated code") {
+    import graft.operators.Dedup.sortedJaccard
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    def set() = Seq.fill(rnd.nextInt(30))(rnd.nextInt(40).toLong).distinct.sorted
+    // `n` has a nullable element type, so (a, n) takes the NULL-checking
+    // entry point and (a, b) the dense one
+    val df = spark.sparkContext.parallelize(
+      Seq.fill(300)((set(), set(), set().map(Option(_)))), 2).toDF("a", "b", "n")
+    val cols = for (t <- Seq(0.0, 0.3, 0.5, 0.8); y <- Seq("b", "n"))
+      yield sortedJaccard(col("a"), col(y), t)
+    val codegen = df.select(cols: _*)
+    assert(codegen.queryExecution.executedPlan.toString.contains("*(1)"))
+    val compiled = codegen.collect().toSeq
+    assert(compiled == interpreted(df.select(cols: _*).collect().toSeq))
+  }
+
   test("sorted_jaccard: a NULL element fails naming its index") {
     def message(e: Throwable): String =
       Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
