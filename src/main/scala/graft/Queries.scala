@@ -913,13 +913,13 @@ object Queries {
            |GROUP BY n.id""".stripMargin))
 
   /** Same pair graph, same recursive-closure oracle — but
-    * `localEdgeLimit = 0` FORCES the distributed pointer-jump loop, so
-    * the code path a 100 TB corpus would take (per-round key-partitioned
-    * joins + path halving, never a driver materialization) is itself
-    * hash-checked against DuckDB's exact transitive closure every round.
-    * Without this entry the driver gates only ever exercised the
-    * bounded driver-side union-find fast path (the sf0.1 edge graph
-    * fits it), leaving the scale path as dead code under the gates.
+    * `localEdgeLimit = 0` FORCES the distributed large-star / small-star
+    * loop, so the code path a 100 TB corpus would take (one RDD job per
+    * round over a hash-partitioned edge set, never a driver
+    * materialization) is itself hash-checked against DuckDB's exact
+    * transitive closure. Without this entry the oracle checks would
+    * only exercise the bounded driver-side union-find fast path (the
+    * sf0.1 edge graph fits it), leaving the scale path unchecked.
     */
   private val qDupClustersDist = Q("q_dup_clusters_dist",
     (s, dir) => Dedup.dupClusters(dupPairGraph(s, dir), localEdgeLimit = 0L)

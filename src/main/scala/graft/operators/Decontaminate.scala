@@ -73,9 +73,9 @@ object Decontaminate {
     // the Bloom-build action, once by the lazy verification join — and
     // without materialization the explode+distinct shuffle would run
     // again from source for the join (at the 10⁹-gram scale that
-    // motivates this function, a second full pass). Same lineage-
-    // truncation pattern as Dedup.dupClusters; blocks are reclaimed by
-    // the ContextCleaner once the result frame is unreachable.
+    // motivates this function, a second full pass). Blocks are
+    // reclaimed by the ContextCleaner once the result frame is
+    // unreachable.
     val benchGrams = bench
       .select(explode(TF.wordNgrams(col(textCol), n)).as("__gram"))
       .distinct()

@@ -495,165 +495,170 @@ object Dedup {
     * the minimum id reachable from it as its `cluster` label — the step
     * that turns pairwise candidates into dedup groups. Only ids that
     * appear in `pairs` are returned (unpaired docs are their own
-    * implicit cluster — see [[dedupByPairs]] for the apply side).
-    *
-    * Algorithm: iterative min-label propagation with pointer jumping —
-    * each round every node takes the smallest label among itself and
-    * its neighbors (one join + partial-min aggregate), then follows its
-    * label's label (path halving). The jump halves chains whose ids
-    * rise along the chain (a sorted path of n nodes takes log2(n) + 1
-    * rounds), but where ids lie in random order along a path the
-    * minimum still crawls about one hop per round: measured with
-    * `localEdgeLimit = 0` on shuffled-id paths, 45 rounds at 64 nodes,
-    * 149 at 512, 829 at 2048 (SCALING.md "Dup-cluster resolution").
-    * Near-dup clusters are near-cliques, so real corpora converge in
-    * 2-3 rounds. Each round is a fixed number of key-partitioned joins
-    * — no driver materialization of the graph. Refuses (throws) rather
-    * than return a partially-converged labeling if `maxIters` rounds
-    * are exhausted; the default leaves 2× headroom over the slowest
-    * path measured.
+    * implicit cluster — see [[dedupByPairs]] for the apply side). NULL
+    * ids are dropped; an id whose only partner is NULL, or itself, is
+    * its own cluster. Output: `id`, `cluster`, both in the id type.
     *
     * Small-graph fast path: the distinct pair graph is usually TINY
     * relative to the corpus (it is the post-threshold near-dup edge
-    * set, not the documents), but every distributed round still costs
-    * several scheduled shuffles. When the edge count is at most
+    * set, not the documents). When the edge count is at most
     * `localEdgeLimit` and the ids are integral, the components are
     * solved in one driver-side union-find over the collected edges —
     * the same bounded-materialization bet a broadcast join makes
     * (default 4M edges ≈ 128 MB of specialized long-pair tuples on the
     * driver, transiently), with identical min-label output.
     * `localEdgeLimit = 0` forces the distributed loop.
+    *
+    * Distributed loop: alternating large-star / small-star (Kiveris et
+    * al., "Connected Components in MapReduce and Beyond", SoCC 2014) as
+    * plain RDD jobs, one job per round — see [[starComponents]]. The
+    * paper proves O(log² n) rounds; shuffled-id paths converge in about
+    * log2 n (SCALING.md "Dup-cluster resolution"). The loop refuses
+    * (throws) rather than return a partial labeling once it has run
+    * `2 + ⌈log2(e + 1)⌉²` rounds, `e` being the symmetric edge count
+    * the setup already measures (an upper bound on the node count n):
+    * the paper's bound with constant 1, plus the first round, which
+    * has no earlier edge set to compare against, and the round that
+    * confirms the fixpoint.
     */
   def dupClusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-                  maxIters: Int = 2500, localEdgeLimit: Long = 4_000_000L): DataFrame = {
+                  localEdgeLimit: Long = 4_000_000L): DataFrame = {
+    import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
     import org.apache.spark.storage.StorageLevel
-    // ONE setup shuffle on b (r18): the distinct's Aggregate(a, b)
-    // needs only co-location on a SUBSET of its keys, so the explicit
-    // HashPartitioning(b) satisfies it with no second exchange — and
-    // every ROUND's neighbor join (keyed on b) then reuses the cache's
-    // recorded partitioning instead of re-shuffling the edge frame once
-    // per round, which is what the r17 shape paid (the biggest frame in
-    // the loop moving every iteration; guide §2.4 "two operations keyed
-    // the same way can share one exchange").
     val sym = pairs.select(col(idA).as("a"), col(idB).as("b"))
       .unionByName(pairs.select(col(idB).as("a"), col(idA).as("b")))
       .repartition(col("b"))
       .distinct()
     sym.persist(StorageLevel.MEMORY_AND_DISK)
-    val integralIds = Set[org.apache.spark.sql.types.DataType](
-      org.apache.spark.sql.types.ByteType, org.apache.spark.sql.types.ShortType,
-      org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType)
-      .contains(sym.schema("a").dataType)
-    // sym carries BOTH orientations of every undirected edge (self-loops
-    // once), so the budget comparison is against 2× the documented limit
-    if (integralIds && localEdgeLimit > 0 && sym.count() <= 2 * localEdgeLimit)
-      try localComponents(sym) finally sym.unpersist(blocking = false)
-    else try {
-      // localCheckpoint (eager) after every round: the pointer-jump
-      // self-join puts TWO copies of the previous round's plan under the
-      // new one, so without lineage truncation the logical plan — and
-      // Catalyst's re-analysis of it — grows EXPONENTIALLY with rounds
-      // (measured: round 4 spent 27 s planning a 4-round lineage at
-      // sf0.1). Checkpointing caps every round at a constant-size plan.
-      // Superseded rounds are released explicitly once the next round
-      // materializes (GraftBridge.unpersistCheckpoint — round 9; before
-      // that they waited on the nondeterministic ContextCleaner); on a
-      // real cluster prefer reliable `checkpoint()` — localCheckpoint
-      // state also dies with an executor.
-      // post-round label-state width, derived from the MEASURED edge
-      // count (the count also pre-materializes the sym cache, so round
-      // 1 no longer pays the pair-graph compute inside its own timing):
-      // the label frame is one row per node (≤ |sym|), ~16 B each —
-      // coalescing the tiny state to few partitions stops every round
-      // paying full 32-task waves over near-empty partitions, while a
-      // real graph keeps every shuffle partition (scale-adaptive;
-      // narrow, never a shuffle).
-      val parts = math.min(
-        sym.sparkSession.conf.get("spark.sql.shuffle.partitions").toLong,
-        math.max(1L, sym.count() / 524288L + 1L)).toInt
-      // FUSED init + first neighbor-min round (r18): with identity
-      // initial labels, round 1's neighbor-min is just
-      // least(a, min(b)) — one aggregation over the edge frame, no
-      // label join — and the pointer jump over an identity label table
-      // is the identity, so the whole first round (distinct + two
-      // joins + jump) collapses into the init aggregation. The state
-      // entering round 2 is bit-identical to the unfused loop's.
-      // NULL ids drop here explicitly (the unfused shape dropped them
-      // via the jump's inner join); a node whose only partner is NULL
-      // still registers as its own cluster (min over no non-null
-      // neighbors is NULL, coalesced back to the id below)
-      val round1 = sym.filter(col("a").isNotNull)
-        .groupBy(col("a"))
-        .agg(min(col("b")).as("__nbr"))
-        .select(col("a").as("id"),
-          least(col("a"), coalesce(col("__nbr"), col("a"))).as("label"),
-          col("a").as("__prev"))
-        .coalesce(parts)
-        .localCheckpoint(false)
-      val changed1 = round1.filter(col("label") =!= col("__prev")).count()
-      // labels keeps round1's (id, label, __prev) checkpoint frame
-      // directly so unpersistCheckpoint sees the LogicalRDD; __prev is
-      // simply never read again
-      var labels = round1
-      var iter = 1
-      var done = changed1 == 0
-      while (!done) {
-        if (iter >= maxIters) throw new IllegalStateException(
-          s"dupClusters did not converge in $maxIters rounds — " +
-            "pathological graph diameter; raise maxIters")
-        // 1) neighbor-min: smallest label among self + neighbors. The
-        // round's ORIGINAL label rides along as __prev so convergence is
-        // a column compare at the end — not another labels⋈jumped join
-        // (which would shuffle both sides on id again)
-        val viaNbr = sym
-          .join(labels.select(col("id").as("b"), col("label").as("__nl")), Seq("b"))
-          .groupBy(col("a").as("id")).agg(min(col("__nl")).as("__nbr"))
-        val pulled = labels.join(viaNbr, Seq("id"), "left")
-          .select(col("id"),
-            least(col("label"), coalesce(col("__nbr"), col("label"))).as("label"),
-            col("label").as("__prev"))
-        // 2) pointer jump (path halving): label := label's label. The
-        // lookup side is the ROUND-START label table (the materialized
-        // checkpoint), not `pulled` — r18: a self-join on `pulled`
-        // duplicated its whole subtree (the sym join + neighbor-min
-        // aggregate ran TWICE per round; StageProbe-measured as the
-        // two dominant 32-task stages), because the two differently-
-        // projected references defeat exchange reuse. Stale-table
-        // jumping is the classic Shiloach–Vishkin shape: every label
-        // VALUE is a graph id (induction from label=id at init), so
-        // the inner join target still always exists, labels still only
-        // ever decrease, and the fixpoint — neighbor-min stable under
-        // a symmetric edge set ⇒ labels constant per component ⇒ equal
-        // to the component min — is unchanged; only the round count at
-        // which it is reached can differ, never the converged output.
-        val next = pulled
-          .join(labels.select(col("id").as("__jid"), col("label").as("__jl")),
-            col("label") === col("__jid"))
-          .select(col("id"), col("__jl").as("label"), col("__prev"))
-          .coalesce(parts)
-        // lazy: the changed-count below materializes the checkpoint in
-        // the same job instead of spending a separate eager action. Every
-        // round holds round 1's rows, so it carries round 1's size
-        // estimate (the inherited one squares per round)
-        val jumped = org.apache.spark.sql.GraftBridge.withSizeOf(
-          next.localCheckpoint(false), round1)
-        val changed = jumped.filter(col("label") =!= col("__prev")).count()
-        // jumped is materialized by the count above — the previous
-        // round's checkpoint is now unreferenced and safe to release
-        org.apache.spark.sql.GraftBridge.unpersistCheckpoint(labels)
-        labels = jumped
-        done = changed == 0
-        iter += 1
+    try {
+      val edges = sym.count()
+      val integralIds = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+        .contains(sym.schema("a").dataType)
+      // sym carries BOTH orientations of every undirected edge (self-loops
+      // once), so the budget comparison is against 2× the documented limit
+      if (integralIds && localEdgeLimit > 0 && edges <= 2 * localEdgeLimit)
+        localComponents(sym)
+      else {
+        val lg = 64 - java.lang.Long.numberOfLeadingZeros(edges)
+        starComponents(sym.filter(col("b").isNull || col("a") >= col("b")), 2 + lg * lg)
       }
-      labels.select(col("id"), col("label").as("cluster"))
     } finally sym.unpersist(blocking = false)
+  }
+
+  /** The distributed loop of [[dupClusters]] over `pairs`' first two
+    * columns (any orientation; duplicates, self-pairs and NULLs
+    * allowed), refusing after `cap` rounds.
+    *
+    * The state is an edge set in which every edge (child, parent) has
+    * parent ≤ child, hash-partitioned on the child, with each child's
+    * distinct parents sorted ascending. Each round is ONE job:
+    *  - small-star, narrow: each child u links itself and its parents
+    *    to the smallest of them;
+    *  - large-star, after one shuffle of both orientations of those
+    *    edges: each node u links its larger neighbours to the smallest
+    *    id it sees, m(u), and keeps a self-loop when m(u) = u so that a
+    *    node with no other edge survives (self-loops change neither
+    *    step's choice of minimum);
+    *  - one shuffle on the child builds the new state, which is
+    *    persisted and zipped with the previous round's (same
+    *    partitioner) to count the children whose parents changed; the
+    *    previous state is then released.
+    * Round 1 runs large-star straight on the input and has nothing to
+    * compare against. The edge set stops changing once each component
+    * is a star around its minimum id, whose single parent per child is
+    * the label. That last state stays persisted and the returned frame
+    * reads it, so reading the labels runs no round again. Ids are
+    * ordered by Spark's own order for the column type
+    * (`TypeUtils.getInterpretedOrdering`: UTF-8 byte order for
+    * strings), not Scala's. The id type must be one whose values are
+    * equal exactly when that order ties them: integral, decimal,
+    * boolean, date, timestamp, or a string without a collation. Binary
+    * and floating-point ids are refused.
+    */
+  private[graft] def starComponents(pairs: DataFrame, cap: Int): DataFrame = {
+    import org.apache.spark.HashPartitioner
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.util.TypeUtils
+    import org.apache.spark.sql.types._
+    import org.apache.spark.storage.StorageLevel
+    val dt = pairs.schema.head.dataType
+    require(dt match {
+      case ByteType | ShortType | IntegerType | LongType | _: DecimalType | BooleanType |
+           DateType | TimestampType | TimestampNTZType => true
+      case s: StringType => s == StringType
+      case _ => false
+    }, s"dupClusters cannot order ids of type ${dt.simpleString}")
+    val part = new HashPartitioner(Graph.edgePartitions(pairs))
+    // large-star over `edges`, both orientations of each undirected
+    // edge: the new state, keyed and sorted as described above
+    def largeStar(edges: RDD[(Any, Any)]): RDD[(Any, Array[Any])] =
+      edges.partitionBy(part).mapPartitions { it =>
+        val ord = TypeUtils.getInterpretedOrdering(dt)
+        grouped(it).iterator.flatMap { case (u, nbrs) =>
+          val m = nbrs.foldLeft(u)(ord.min)
+          val larger = nbrs.iterator.filter(ord.gt(_, u)).map(v => (v, m))
+          if (ord.equiv(m, u)) larger ++ Iterator((u, u)) else larger
+        }
+      }.partitionBy(part).mapPartitions({ it =>
+        val ord = TypeUtils.getInterpretedOrdering(dt)
+        grouped(it).iterator.map { case (c, ps) => (c, ps.toArray.sorted(ord)) }
+      }, preservesPartitioning = true).persist(StorageLevel.MEMORY_AND_DISK)
+    def both(x: Any, y: Any) = if (x == y) Iterator((x, y)) else Iterator((x, y), (y, x))
+    val input = pairs.queryExecution.toRdd.flatMap { r =>
+      val a = if (r.isNullAt(0)) null else InternalRow.copyValue(r.get(0, dt))
+      val b = if (r.isNullAt(1)) null else InternalRow.copyValue(r.get(1, dt))
+      if (a == null && b == null) Iterator.empty
+      else if (a == null) both(b, b)
+      else if (b == null) both(a, a)
+      else both(a, b)
+    }
+    var state = largeStar(input)
+    var rounds = 1
+    var changed = state.count() > 0
+    while (changed) {
+      if (rounds >= cap) throw new IllegalStateException(
+        s"dupClusters did not converge in $cap rounds")
+      val next = largeStar(state.mapPartitions { it =>
+        val out = scala.collection.mutable.HashSet.empty[(Any, Any)]
+        for ((u, ps) <- it; v <- ps.iterator ++ Iterator(u)) out ++= both(v, ps.head)
+        out.iterator
+      })
+      // the (child, parents) entries in one state and not the other
+      changed = next.zipPartitions(state) { (ns, ps) =>
+        val prev = ps.toMap
+        var total, kept = 0L
+        ns.foreach { case (c, now) =>
+          total += 1
+          if (prev.get(c).exists(_.sameElements(now))) kept += 1
+        }
+        Iterator(total - kept + prev.size - kept)
+      }.sum() > 0
+      state.unpersist(blocking = false)
+      state = next
+      rounds += 1
+    }
+    val rows = state.mapPartitions { it =>
+      val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+      it.map { case (c, ps) => Row(toScala(c), toScala(ps.head)) }
+    }
+    pairs.sparkSession.createDataFrame(rows, StructType(Seq(
+      StructField("id", dt, nullable = false), StructField("cluster", dt, nullable = false))))
+  }
+
+  /** `(key, value)` pairs grouped into each key's distinct values. */
+  private def grouped(it: Iterator[(Any, Any)]) = {
+    val g = scala.collection.mutable.HashMap.empty[Any, scala.collection.mutable.HashSet[Any]]
+    it.foreach { case (k, v) => g.getOrElseUpdate(k, scala.collection.mutable.HashSet.empty) += v }
+    g
   }
 
   /** Driver-side union-find over a bounded, collected edge set — the
     * [[dupClusters]] fast path. Semantics mirror the distributed loop
     * exactly: cluster = min id in the component; ids only ever paired
     * with NULL still appear (as their own cluster); NULL ids themselves
-    * are dropped (equi-joins never match them). Union-by-min keeps each
+    * are dropped. Union-by-min keeps each
     * tree's root at the component minimum, so the final `find` IS the
     * label.
     */

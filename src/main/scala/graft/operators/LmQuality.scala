@@ -49,8 +49,7 @@ object LmQuality {
     * i.e. one extra corpus pass for a one-shot train-and-score. Leave
     * it false when the model frames will be persisted/written anyway.
     * (localCheckpoint is executor-local — on a real cluster a reliable
-    * `checkpoint()`/write is the durable variant, as in Dedup's CC
-    * loop note.)
+    * `checkpoint()`/write is the durable variant.)
     */
   def train(corpus: DataFrame, textCol: String,
             alpha: Double = 0.5, minCount: Int = 1,

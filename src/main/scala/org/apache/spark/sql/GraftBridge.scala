@@ -21,38 +21,15 @@ object GraftBridge {
     *
     * `Dataset.localCheckpoint` persists an internal RDD and wraps it in
     * a [[execution.LogicalRDD]]; Spark exposes no public API to release
-    * that storage, so iterative algorithms that checkpoint per round
-    * (BPE training, pointer-jump connected components) would otherwise
-    * accumulate every superseded generation in executor memory for the
-    * life of the JVM. No-op on Datasets that are not checkpoints.
+    * that storage, so an iterative algorithm that checkpoints per round
+    * (BPE training) would otherwise accumulate every superseded
+    * generation in executor memory for the life of the JVM. No-op on
+    * Datasets that are not checkpoints.
     */
   def unpersistCheckpoint(df: Dataset[_]): Unit =
     df.queryExecution.analyzed match {
       case l: execution.LogicalRDD => l.rdd.unpersist(blocking = false)
       case _                       => ()
-    }
-
-  /** `ck`, a `localCheckpoint`ed frame, carrying the optimizer's size
-    * estimate of `like` instead of the one it inherited. A checkpoint
-    * keeps the size estimate of the plan it replaced, and a join's
-    * estimate is the product of its sides', so a loop that joins each
-    * round's checkpoint into the next squares its estimate every
-    * round: the estimate's digit count doubles per round. Measured on
-    * `Dedup.dupClusters`: a 64-node path that needs 45 rounds had not
-    * finished after 4 minutes, its driver busy multiplying BigInts in
-    * the size estimate; with each round re-stamped it takes 13 s. A
-    * loop whose rounds all hold the same rows passes a round that
-    * holds them as `like`, which keeps the estimate flat.
-    * No-op on Datasets that are not checkpoints.
-    */
-  def withSizeOf(ck: Dataset[_], like: Dataset[_]): DataFrame =
-    ck.queryExecution.analyzed match {
-      case l: execution.LogicalRDD =>
-        val s = ck.sparkSession.asInstanceOf[classic.SparkSession]
-        classic.Dataset.ofRows(s, execution.LogicalRDD(l.output, l.rdd,
-          l.outputPartitioning, l.outputOrdering, l.isStreaming, l.stream)(
-          s, Some(like.queryExecution.optimizedPlan.stats)))
-      case _ => ck.toDF()
     }
 
   /** Block until every queued listener event has been delivered.

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{Dedup, Ops}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -374,7 +375,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("dupClusters: transitive chains collapse to min-id components") {
-    // chain 1-2-3-4 (diameter 3 — exercises the pointer jump), pair 5-6,
+    // chain 1-2-3-4 (diameter 3), pair 5-6,
     // isolated pair graph members only
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (3L, 4L), (8L, 9L))
       .toDF("id_a", "id_b")
@@ -434,6 +435,22 @@ class DedupSpec extends SparkSpec {
     assert(out.getLong(2) == 2L && out.getLong(3) == 1L)
   }
 
+  /** Min-label components of `pairs` by a plain union-find, under
+    * `lt`: NULL ids are dropped and an id paired only with NULL or
+    * itself is its own cluster. */
+  private def unionFind[T <: AnyRef](pairs: Seq[(T, T)], lt: (T, T) => Boolean): Map[T, T] = {
+    val parent = scala.collection.mutable.Map.empty[T, T]
+    def find(x: T): T = if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
+    for ((a, b) <- pairs) {
+      Seq(a, b).filter(_ != null).foreach(x => parent.getOrElseUpdate(x, x))
+      if (a != null && b != null) {
+        val (ra, rb) = (find(a), find(b))
+        if (lt(ra, rb)) parent(rb) = ra else if (lt(rb, ra)) parent(ra) = rb
+      }
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
+
   test("dupClusters: local union-find and distributed loop agree on a random graph") {
     val rnd = new scala.util.Random(7)
     val pairs = (0 until 300)
@@ -443,6 +460,48 @@ class DedupSpec extends SparkSpec {
     val dist = Dedup.dupClusters(pairs, localEdgeLimit = 0)
       .as[(Long, Long)].collect().toMap
     assert(local == dist)
+
+    // the distributed loop against a union-find written here, on messy
+    // graphs: self-pairs, duplicate and reversed pairs, NULL partners
+    val longLt = (x: java.lang.Long, y: java.lang.Long) => x.longValue < y.longValue
+    def distLongs(ps: Seq[(java.lang.Long, java.lang.Long)]) =
+      Dedup.dupClusters(ps.toDF("id_a", "id_b"), localEdgeLimit = 0)
+        .as[(Long, Long)].collect().map { case (i, c) => (Long.box(i), Long.box(c)) }.toMap
+    for (seed <- 0 until 20) {
+      val r = new scala.util.Random(seed)
+      val n = 10 + r.nextInt(60)
+      val base = Seq.fill(r.nextInt(2 * n) + 1)(
+        (Long.box(r.nextInt(n).toLong), Long.box(r.nextInt(n).toLong)))
+      val ps = base ++ base.take(base.size / 4).map(_.swap) ++ base.take(base.size / 8) ++
+        Seq[(java.lang.Long, java.lang.Long)]((n + 1L, null), (null, n + 2L), (null, null))
+      assert(distLongs(ps) == unionFind(ps, longLt), s"seed $seed")
+    }
+    val extremes = Seq[(java.lang.Long, java.lang.Long)](
+      (Long.MaxValue, 5L), (5L, Long.MinValue), (Long.MaxValue, Long.MaxValue),
+      (Long.MaxValue - 1, null), (7L, 8L))
+    assert(distLongs(extremes) == unionFind(extremes, longLt))
+    assert(distLongs(extremes)(Long.box(Long.MaxValue)) == Long.MinValue)
+
+    val ints = (0 until 120).map(_ =>
+      (Int.box(rnd.nextInt(90) - 45), Int.box(rnd.nextInt(90) - 45)))
+    val distInts = Dedup.dupClusters(ints.toDF("id_a", "id_b"), localEdgeLimit = 0)
+    assert(distInts.schema.map(_.dataType) == Seq(IntegerType, IntegerType))
+    assert(distInts.as[(Int, Int)].collect().map { case (i, c) => (Int.box(i), Int.box(c)) }
+      .toMap == unionFind(ints, (x: Integer, y: Integer) => x.intValue < y.intValue))
+
+    // Spark orders strings by their UTF-8 bytes: U+FFFF (EF BF BF) sorts
+    // before U+1F600 (F0 9F 98 80), whose UTF-16 surrogates sort first
+    // in Java's String order
+    val (bmpMax, emoji) = ("\uFFFF", "\uD83D\uDE00")
+    assert(emoji < bmpMax)
+    val utf8Lt = (x: String, y: String) => java.util.Arrays.compareUnsigned(
+      x.getBytes("UTF-8"), y.getBytes("UTF-8")) < 0
+    val strs = Seq((emoji, bmpMax), ("\uD83D\uDE01", emoji), ("a", "b"), ("b", "b"),
+      ("c", null), (null, "d"))
+    val distStrs = Dedup.dupClusters(strs.toDF("id_a", "id_b"), localEdgeLimit = 0)
+      .as[(String, String)].collect().toMap
+    assert(distStrs == unionFind(strs, utf8Lt))
+    assert(distStrs(emoji) == bmpMax && distStrs("\uD83D\uDE01") == bmpMax)
   }
 
   test("dupClusters: non-integral ids take the distributed loop; min is lexicographic") {
@@ -470,18 +529,45 @@ class DedupSpec extends SparkSpec {
     assert(dist == local)
   }
 
-  test("dupClusters: a path with shuffled ids converges far past 25 rounds") {
-    // the distributed loop's slowest measured shape: along a path whose
-    // ids are in random order the minimum crawls about one hop per
-    // round, so rounds grow with the path length (sorted ids halve it:
-    // log2(n) + 1). This 64-node one takes 45 rounds; 25 was the old cap
-    val ids = new scala.util.Random(6).shuffle((0L until 64L).toVector)
-    val pairs = ids.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("id_a", "id_b")
-    val out = Dedup.dupClusters(pairs, localEdgeLimit = 0).as[(Long, Long)].collect().toMap
+  test("dupClusters: a 2048-node shuffled-id path takes at most 44 rounds") {
+    // 44 = 4·log2 n. Where ids lie in random order along a path,
+    // min-label propagation crawls about one hop per round (829 rounds
+    // here); large-star / small-star does not. Each round is one job:
+    // the jobs past the setup's are the rounds,
+    // and one pair of ids needs exactly 2 (the first round has nothing
+    // to compare against, the second finds no change)
+    def buildJobs(pairs: Seq[(Long, Long)]) = {
+      val (out, shape) = JobShape.of(spark, "dup-clusters-rounds")(
+        Dedup.dupClusters(pairs.toDF("id_a", "id_b"), localEdgeLimit = 0))
+      (out.as[(Long, Long)].collect().toMap, shape.jobs)
+    }
+    val (one, oneJobs) = buildJobs(Seq((1L, 0L)))
+    assert(one == Map(0L -> 0L, 1L -> 0L))
+    val setupJobs = oneJobs - 2
+    val ids = new scala.util.Random(6).shuffle((0L until 2048L).toVector)
+    val path = ids.sliding(2).map(p => (p(0), p(1))).toSeq
+    val (out, jobs) = buildJobs(path)
     assert(out == ids.map(_ -> 0L).toMap)
+    assert(jobs - setupJobs <= 44, s"${jobs - setupJobs} rounds")
     val e = intercept[IllegalStateException](
-      Dedup.dupClusters(pairs, maxIters = 25, localEdgeLimit = 0))
-    assert(e.getMessage.contains("did not converge in 25 rounds"), e.getMessage)
+      Dedup.starComponents(path.toDF("a", "b"), cap = 3))
+    assert(e.getMessage.contains("did not converge in 3 rounds"), e.getMessage)
+  }
+
+  test("q_dup_clusters_dist on the benchmark tables: one job per round, none on read") {
+    val s = spark.newSession()
+    val dir = new java.io.File("perfbench/data/sf0.1").getAbsolutePath
+    val run = SparkEntry.queries("q_dup_clusters_dist")
+    run(s, dir) // infers the table's schema once
+    val (df, build) = JobShape.of(s, "dup-clusters-dist-build")(run(s, dir))
+    val (_, action) = JobShape.of(s, "dup-clusters-dist-action")(
+      df.write.format("noop").mode("overwrite").save())
+    // 6 jobs compute the pair graph and count its edges, as in
+    // q_dup_clusters (7 jobs: those and the union-find's collect);
+    // then 3 rounds of one job each
+    assert(build.jobs == 9, build)
+    // the labels are read from the last round's cached edge set
+    assert(action.jobs == 1, action)
   }
 
   test("dedupByPairs keeps one representative per cluster plus unpaired rows") {
