@@ -115,10 +115,17 @@ object Ops {
     * never a single reducer, and row_number over a running frame
     * buffers one row at a time. Cost shape: the counts pass re-executes
     * the range exchange's lineage (same second pass rdd.zipWithIndex
-    * ran), plus one hash exchange on the partition id. Both passes see
-    * identical partition ids because the range partitioner's boundary
-    * sampling is seeded deterministically from the partition index —
-    * the same determinism contract zipWithIndex itself relied on.
+    * ran), plus one hash exchange on the partition id.
+    *
+    * Contract: the ids are 1..n in `orderBy` order only when both
+    * passes put every row in the same partition. Spark's range
+    * partitioner seeds its boundary sample with the id of the RDD it
+    * samples, which is new on every execution, so two passes over more
+    * than one range partition can draw different bounds (ids then
+    * repeat or come out NULL). Today that holds where adaptive
+    * execution coalesces the range exchange to a single partition
+    * (small inputs under the default settings), so every row sits in
+    * partition 0 in both passes.
     */
   def zipWithIndexOrdered(df: DataFrame, orderBy: Seq[Column], as: String): DataFrame = {
     val ranged = df.repartitionByRange(orderBy: _*)

@@ -137,16 +137,20 @@ class GraphSpec extends SparkSpec {
     r.shuffle(random ++ random.take(40) ++ loops ++ fans ++ Seq((hub, node)) ++ sinks ++ nulls)
   }
 
-  test("pageRank: bit-identical to an exact driver-side replay at 1 and 5 partitions") {
+  test("pageRank: bit-identical to an exact driver-side replay at 1, 5 and 16 partitions") {
+    // at 16 partitions some hold no src and some receive no block; an
+    // edge block of 1 pair ships every pair as its own block
+    val layouts = Seq(1, 5, 16).map((_, Graph.EdgeBlockPairs)) :+ ((5, 1))
     for (iters <- 0 to 8) {
       val edges = messyGraph(iters)
       val (dampNum, dampDen) = if (iters % 2 == 0) (17L, 20L) else (5L, 7L)
       val want = reference(edges, iters, 1000000000L, dampNum, dampDen)
-      for (parts <- Seq(1, 5)) {
+      for ((parts, blockPairs) <- layouts) {
         val got = Graph.pageRank(edges.toDF("src", "dst"), "src", "dst", iters,
-          1000000000L, dampNum, dampDen, parts).as[(Long, Long)].collect()
-        assert(got.length == want.size, s"iters $iters parts $parts")
-        assert(got.toMap == want, s"iters $iters parts $parts")
+          1000000000L, dampNum, dampDen, parts, blockPairs).as[(Long, Long)].collect()
+        val at = s"iters $iters parts $parts blockPairs $blockPairs"
+        assert(got.length == want.size, at)
+        assert(got.toMap == want, at)
       }
     }
   }
@@ -163,28 +167,32 @@ class GraphSpec extends SparkSpec {
 
   test("pageRank: one job per round; rounds shuffle per-node sums, never edges") {
     // 64 nodes, each a src; within every hash partition the srcs' dst
-    // windows cover all 64 nodes at either fanout, so a round's sums are
-    // one record per (partition, node) whether there are 512 edges or 4x
+    // windows cover all 64 nodes at either fanout, so every partition
+    // sends a block of sums to every partition whether there are 512
+    // edges or 4x
     val parts = 4
     val byPart = (0L until 64L).groupBy(new org.apache.spark.HashPartitioner(parts).getPartition)
     def edges(fanout: Int) = byPart.values.toSeq.flatMap(_.zipWithIndex.flatMap {
       case (s, q) => (0 until fanout).map(j => (s, (q * fanout + j) % 64L)) }).toDF("src", "dst")
     def shape(fanout: Int, iters: Int) =
       JobShape.of(spark, s"pagerank-$fanout-$iters") {
-        Graph.pageRank(edges(fanout), "src", "dst", iters, 1000000000L, 17L, 20L, parts)
-          .collect()
+        Graph.pageRank(edges(fanout), "src", "dst", iters, 1000000000L, 17L, 20L, parts,
+          Graph.EdgeBlockPairs).collect()
       }._2
     for (iters <- Seq(1, 5)) {
       val jobs = shape(8, iters).jobs
       assert(jobs <= iters + 4, s"pageRank(iters = $iters) submitted $jobs jobs")
     }
+    // setup ships edges and dst ids in blocks, not one record per edge
+    val setupRecords = shape(32, 0).shuffleRecords
+    assert(setupRecords < 2048 / 10, s"setup shuffle records at 2048 edges: $setupRecords")
     def perRound(fanout: Int) = {
       val (a, b) = (shape(fanout, 1), shape(fanout, 5))
       ((b.shuffleRecords - a.shuffleRecords) / 4, (b.shuffleBytes - a.shuffleBytes) / 4)
     }
     val (smallRecords, smallBytes) = perRound(8)
     val (bigRecords, bigBytes) = perRound(32)
-    assert(smallRecords == parts * 64 && bigRecords == smallRecords,
+    assert(smallRecords <= parts * parts && bigRecords == smallRecords,
       s"records per round: $smallRecords at 512 edges, $bigRecords at 2048")
     // bytes are compressed, so equal records may differ by a few bytes
     assert(bigBytes <= smallBytes * 5 / 4,
