@@ -165,7 +165,7 @@ class GraphSpec extends SparkSpec {
     assert(causes.exists(_.isInstanceOf[ArithmeticException]), e)
   }
 
-  test("pageRank: one job per round; rounds shuffle per-node sums, never edges") {
+  test("pageRank: one job per 32 rounds; rounds shuffle per-node sums, never edges") {
     // 64 nodes, each a src; within every hash partition the srcs' dst
     // windows cover all 64 nodes at either fanout, so every partition
     // sends a block of sums to every partition whether there are 512
@@ -179,10 +179,12 @@ class GraphSpec extends SparkSpec {
         Graph.pageRank(edges(fanout), "src", "dst", iters, 1000000000L, 17L, 20L, parts,
           Graph.EdgeBlockPairs).collect()
       }._2
-    for (iters <- Seq(1, 5)) {
-      val jobs = shape(8, iters).jobs
-      assert(jobs <= iters + 4, s"pageRank(iters = $iters) submitted $jobs jobs")
-    }
+    // the setup and up to RoundsPerJob rounds are one job: no round
+    // runs an action of its own
+    val per = Graph.RoundsPerJob
+    val jobs = Seq(1, 5, per, per + 1, 2 * per + 1).map(i => i -> shape(8, i).jobs).toMap
+    assert(jobs(1) <= 3 && jobs(5) == jobs(1) && jobs(per) == jobs(1) &&
+      jobs(per + 1) == jobs(1) + 1 && jobs(2 * per + 1) == jobs(1) + 2, s"jobs by rounds: $jobs")
     // setup ships edges and dst ids in blocks, not one record per edge
     val setupRecords = shape(32, 0).shuffleRecords
     assert(setupRecords < 2048 / 10, s"setup shuffle records at 2048 edges: $setupRecords")
@@ -197,5 +199,22 @@ class GraphSpec extends SparkSpec {
     // bytes are compressed, so equal records may differ by a few bytes
     assert(bigBytes <= smallBytes * 5 / 4,
       s"shuffle bytes per round: $smallBytes at 512 edges, $bigBytes at 2048")
+  }
+
+  test("pageRank: 300 rounds chain without overflowing the planning stack") {
+    // one chained shuffle per round: planning an unbounded chain
+    // recurses once per shuffle
+    val r = new scala.util.Random(11)
+    val edges: Seq[Edge] = Seq.fill(3000)((java.lang.Long.valueOf(r.nextInt(1000).toLong),
+      java.lang.Long.valueOf(r.nextInt(1000).toLong)))
+    val got = Graph.pageRank(edges.toDF("src", "dst"), "src", "dst", 300, 1000000000L,
+      17L, 20L, 4, Graph.EdgeBlockPairs).as[(Long, Long)].collect()
+    assert(got.toMap == reference(edges, 300, 1000000000L, 17L, 20L))
+  }
+
+  test("pageRank: a node's home partition is HashPartitioner's, without boxing") {
+    for (parts <- Seq(1, 4, 7, 16); id <- Seq(Long.MinValue, Long.MaxValue, -1L, 0L, 1L << 40))
+      assert(Graph.home(id, parts) == new org.apache.spark.HashPartitioner(parts).getPartition(id),
+        s"id $id parts $parts")
   }
 }
