@@ -599,8 +599,7 @@ object Queries {
            |WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey)""".stripMargin))
 
   // ---------------------------------------------------------------------
-  // time-window aggregation over the events stream table (batch mirror of
-  // the streaming path in graft.streaming)
+  // time-window aggregation over the events stream table
   // ---------------------------------------------------------------------
   private val qEventsHourly = Q("q_events_hourly",
     (s, dir) => events(s, dir)
@@ -2697,10 +2696,7 @@ object Queries {
     * [1110|v5..v0|EOB|pad]. v in [32, 63] keeps every byte below the
     * 0xFF stuffing threshold and every pixel in [160, 191] (no clamp).
     */
-  /** Test seam for the video-fingerprint spec builders. */
-  private[graft] def jpegFixtureForTests: (String, String, Int, Int) = jpegFixture
-
-  private lazy val jpegFixture: (String, String, Int, Int) = {
+  private[graft] lazy val jpegFixture: (String, String, Int, Int) = {
     def seg(marker: Int, payload: Array[Int]): Array[Int] =
       Array(0xff, marker, (payload.length + 2) >> 8, (payload.length + 2) & 0xff) ++
         payload
@@ -3081,8 +3077,7 @@ object Queries {
            |FROM orders GROUP BY 1""".stripMargin))
 
   /** Batch sessionization (gap > 30 min splits): lag + running sum of
-    * session starts — the batch twin of graft.streaming's stateful
-    * sessionizer. */
+    * session starts. */
   private val qSessionizeBatch = Q("q_sessionize_batch",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window

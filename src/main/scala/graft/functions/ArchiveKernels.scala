@@ -225,40 +225,4 @@ object ArchiveKernels {
     }
     out.toByteArray
   }
-
-  private[graft] def buildRar4(nFiles: Int,
-                               encrypted: Boolean = false): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(Rar4Magic)
-    def block(tpe: Int, flags: Int, extra: Array[Byte],
-              data: Array[Byte]): Unit = {
-      val withAdd = (flags & 0x8000) != 0
-      val hsize = 7 + (if (withAdd) 4 else 0) + extra.length
-      val hdr = new Array[Byte](hsize)
-      hdr(2) = tpe.toByte
-      hdr(3) = (flags & 0xff).toByte; hdr(4) = ((flags >> 8) & 0xff).toByte
-      hdr(5) = (hsize & 0xff).toByte; hdr(6) = ((hsize >> 8) & 0xff).toByte
-      if (withAdd)
-        (0 until 4).foreach(k =>
-          hdr(7 + k) = ((data.length >> (8 * k)) & 0xff).toByte)
-      System.arraycopy(extra, 0, hdr, 7 + (if (withAdd) 4 else 0),
-        extra.length)
-      val c = new java.util.zip.CRC32
-      c.update(hdr, 2, hsize - 2)
-      hdr(0) = (c.getValue & 0xff).toByte
-      hdr(1) = ((c.getValue >> 8) & 0xff).toByte
-      out.write(hdr)
-      out.write(data)
-    }
-    block(0x73, if (encrypted) 0x0080 else 0, new Array[Byte](6),
-      Array.emptyByteArray)
-    if (!encrypted) {
-      (0 until nFiles).foreach { i =>
-        block(0x74, 0x8000, new Array[Byte](18),
-          Array.tabulate[Byte](16 + i)(k => (k * 5).toByte))
-      }
-      block(0x7B, 0, Array.emptyByteArray, Array.emptyByteArray)
-    }
-    out.toByteArray
-  }
 }

@@ -121,18 +121,6 @@ object JaroWinkler {
     k
   }
 
-  /** Reference walk (the original per-row loop, integer boundaries
-    * c₀=1, c_{k+1} = ⌊c_k/r⌋ + 2) — kept as the fixture the closed
-    * form is spec-pinned against for guarantee + closeness. */
-  private[graft] def lengthBandWalk(len: Int, r: Double): Int = {
-    if (len <= 0) return -1
-    var c = 1L
-    var k = 0
-    var next = math.floor(c / r).toLong + 2
-    while (len >= next) { c = next; k += 1; next = math.floor(c / r).toLong + 2 }
-    k
-  }
-
   /** Prefix-filter signature: the lowered string's chars with
     * occurrence tags ((char << 16) | occ — multiset-as-set, the PPJoin
     * device), truncated to the first L − o + 1 entries where

@@ -28,30 +28,6 @@ object LayoutKernels {
     (spread(ua) | (spread(ub) << 1)) ^ Long.MinValue
   }
 
-  /** Compact the even bit positions of `x` back into 32 contiguous
-    * bits — [[spread]]'s inverse ladder.
-    */
-  private def compact(x0: Long): Long = {
-    var x = x0 & 0x5555555555555555L
-    x = (x | (x >>> 1)) & 0x3333333333333333L
-    x = (x | (x >>> 2)) & 0x0F0F0F0F0F0F0F0FL
-    x = (x | (x >>> 4)) & 0x00FF00FF00FF00FFL
-    x = (x | (x >>> 8)) & 0x0000FFFF0000FFFFL
-    x = (x | (x >>> 16)) & 0x00000000FFFFFFFFL
-    x
-  }
-
-  /** Inverse of [[morton2]]: the (a, b) coordinates a key encodes —
-    * what a skipping analyzer uses to turn a file's [minKey, maxKey]
-    * back into the rectangle it covers.
-    */
-  def unmorton2(z: Long): (Int, Int) = {
-    val u = z ^ Long.MinValue
-    val a = compact(u).toInt ^ Int.MinValue
-    val b = compact(u >>> 1).toInt ^ Int.MinValue
-    (a, b)
-  }
-
   /** 2-D HILBERT curve index of bucket coordinates in [0, 2^bits) —
     * the strictly-better-locality sibling of [[morton2]]: consecutive
     * curve positions are always ADJACENT cells (unit Manhattan step),

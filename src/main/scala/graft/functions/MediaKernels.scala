@@ -941,9 +941,9 @@ object MediaKernels {
 
   /** Fixed-size frame chunks of a blob, keeping every `stride`-th chunk:
     * array of (frame_no, bytes) structs for the `frame_chunks` codegen
-    * expression behind [[graft.operators.Multimodal.sampleFrames]]. An
-    * empty blob yields an empty array (zero rows after explode); the
-    * last chunk may be shorter than `frameBytes`.
+    * expression (explode it for one row per sampled frame). An empty
+    * blob yields an empty array (zero rows after explode); the last
+    * chunk may be shorter than `frameBytes`.
     */
   def frameChunks(blob: Array[Byte], frameBytes: Int, stride: Int)
       : org.apache.spark.sql.catalyst.util.ArrayData = {

@@ -1,9 +1,9 @@
 package graft.functions
 
 /** Deterministic ENCODERS for the PDF stream filters (round 15) —
-  * fixture / test-vector tooling for [[PdfKernels]]'s LZWDecode /
-  * ASCII85Decode / ASCIIHexDecode, so oracle-replayable fixtures can
-  * carry filter chains older crawled PDFs actually use.
+  * fixture / test-vector tooling for [[PdfKernels]]'s LZWDecode and
+  * ASCII85Decode, so oracle-replayable fixtures can carry filter
+  * chains older crawled PDFs actually use.
   *
   * LZW width-bump timing (the one subtle spot, ISO 32000-1 §7.4.4 /
   * TIFF6 "early change"): the DECODER adds the entry for code k while
@@ -80,8 +80,4 @@ object PdfStreamEncoders {
     sb.append("~>")
     sb.toString.getBytes("US-ASCII")
   }
-
-  /** ASCIIHex with the `>` terminator. */
-  def asciiHex(data: Array[Byte]): Array[Byte] =
-    (data.map("%02x".format(_)).mkString + ">").getBytes("US-ASCII")
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Text-analysis column combinators for large-scale training-data
   * pipelines: tokenization, character shingles, language-ID heuristic,
-  * quality scoring, token counting, document fingerprinting.
+  * quality rules, token counting, document fingerprinting.
   *
   * Everything here composes built-in (codegen'd) `functions._` — no UDFs —
   * so the expressions stay inside whole-stage codegen and are expressible
@@ -22,14 +22,6 @@ object TextFunctions {
 
   /** Whitespace token count. */
   def tokenCount(text: Column): Column = size(tokens(text)).cast("bigint")
-
-  /** BPE-ish token count: counts maximal runs of letters, digits, or
-    * other-non-space (a cheap proxy for subword tokenizers when sizing
-    * training corpora). RE2/Java-compatible pattern.
-    */
-  def regexTokenCount(text: Column): Column =
-    size(regexp_extract_all(text, lit("[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"), lit(0)))
-      .cast("bigint")
 
   /** Character n-gram shingles (distinct), lowercase. Text shorter than n
     * yields the whole (lowercased, trimmed) text as a single shingle, so
@@ -52,22 +44,6 @@ object TextFunctions {
     */
   def shingleHashes(text: Column, n: Int): Column =
     Kernels.shingleHashes64(lower(trim(text)), n)
-
-  /** Ratio of punctuation characters to total characters (0 for empty). */
-  def punctRatio(text: Column): Column = {
-    val len = length(text)
-    val stripped = length(regexp_replace(text, "[\\p{L}\\p{N}\\s]", ""))
-    when(len === 0, lit(0.0)).otherwise(stripped.cast("double") / len.cast("double"))
-  }
-
-  /** Fraction of tokens that are common-English stopwords. */
-  def stopwordRatio(text: Column): Column = {
-    val toks = tokens(text)
-    val stops = array(StopwordsEn.map(lit): _*)
-    val hits = size(filter(toks, t => array_contains(stops, lower(t))))
-    when(size(toks) === 0, lit(0.0))
-      .otherwise(hits.cast("double") / size(toks).cast("double"))
-  }
 
   val StopwordsEn: Seq[String] =
     Seq("the", "a", "an", "and", "of", "to", "in", "is", "it", "that")
@@ -120,19 +96,6 @@ object TextFunctions {
     val lines = split(text, "\n")
     array_join(filter(lines, (x, i) =>
       trim(x) === "" || array_position(lines, x) === i + 1), "\n")
-  }
-
-  /** Composite quality score in [0,1]:
-    * 0.5 * min(tokens,200)/200  (length signal)
-    * + 0.3 * (1 - min(punctRatio*4, 1))  (not mostly punctuation)
-    * + 0.2 * min(stopwordRatio*5, 1)  (natural-language signal).
-    * Deterministic arithmetic — oracle-expressible.
-    */
-  def qualityScore(text: Column): Column = {
-    val lenSig = least(tokenCount(text).cast("double"), lit(200.0)) / 200.0
-    val punctSig = lit(1.0) - least(punctRatio(text) * 4.0, lit(1.0))
-    val stopSig = least(stopwordRatio(text) * 5.0, lit(1.0))
-    round(lenSig * 0.5 + punctSig * 0.3 + stopSig * 0.2, 6)
   }
 
   /** 64-bit content fingerprint of normalized text (lowercased, runs of
@@ -341,16 +304,6 @@ object TextFunctions {
 
   /** Leading characters that mark a bulleted line. */
   val BulletChars: Seq[String] = Seq("•", "‣", "-", "*")
-
-  /** Non-empty lines of `text` (split on `\n`, whitespace-only lines
-    * dropped) — the shared denominator of the line-level quality rules. */
-  private def nonEmptyLines(text: Column): Column =
-    filter(split(text, "\n"), l => length(trim(l)) > 0)
-
-  /** Words of one LINE under the family tokenization contract (trim,
-    * split on whitespace runs); 0 for a whitespace-only line. */
-  private def lineWordCount(l: Column): Column =
-    when(length(trim(l)) === 0, lit(0)).otherwise(size(split(trim(l), "\\s+")))
 
   /** Gopher-style document quality rules (Rae et al. 2021, Appendix
     * A1.1), composed entirely from codegen'd builtins so the whole

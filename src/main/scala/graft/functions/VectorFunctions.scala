@@ -18,9 +18,6 @@ object VectorFunctions {
   def dot(a: Column, b: Column): Column =
     Kernels.vectorDot(d(a), d(b))
 
-  /** Euclidean (L2) norm. */
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
-
   /** SQ8 encode: one byte per dimension with trained per-dimension
     * (min, span) — the 4x-memory middle tier between raw floats and
     * PQ codes. Oracle-exact arithmetic (see VectorKernels.sq8Encode). */

@@ -356,21 +356,6 @@ object Classifier {
       .agg(gradExprs.head, gradExprs.tail: _*)
   }
 
-  /** The pre-r15 sequential one-vs-rest chain — kept as the reference
-    * [[trainLangId]] is pinned bit-identical against (ClassifierSpec);
-    * also the shape to prefer when K is huge but only a few classes
-    * are being re-trained. */
-  private[graft] def trainLangIdSequential(charFrame: DataFrame,
-      labels: Seq[String], buckets: Int, iters: Int,
-      lr: Double): Seq[Array[Double]] = {
-    val n = charFrame.count()
-    labels.map { k =>
-      train(charFrame.select(col("__id"), col("n_words"),
-        (col("__lang") === k).cast("double").as("y"), col("bs")),
-        buckets, iters, lr, n)
-    }
-  }
-
   /** Predicted label as a PURE PROJECTION over a bucket-set column —
     * argmax of the per-class exact fixed-point scores (σ̃ is monotone,
     * so the raw z ranks identically), ties to the first label. No

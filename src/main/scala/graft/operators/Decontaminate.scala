@@ -147,18 +147,4 @@ object Decontaminate {
       .agg(max(col("__s")).as("max_cosine"))
       .withColumn("contaminated", col("max_cosine") >= threshold)
   }
-
-  /** The apply side of [[byEmbedding]]: corpus rows semantically too
-    * close to the benchmark removed; rows with NULL embeddings pass
-    * through (no evidence of contamination — flag them upstream if the
-    * pipeline wants them quarantined instead).
-    */
-  def cleanByEmbedding(corpus: DataFrame, bench: DataFrame,
-                       vecCol: String, idCol: String,
-                       threshold: Double = 0.95): DataFrame = {
-    val bad = byEmbedding(corpus, bench, vecCol, idCol, threshold)
-      .filter(col("contaminated"))
-      .select(col("id").as("__bad_id"))
-    corpus.join(bad, corpus(idCol) === col("__bad_id"), "left_anti")
-  }
 }

@@ -527,7 +527,6 @@ object Dedup {
     import org.apache.spark.storage.StorageLevel
     val sym = pairs.select(col(idA).as("a"), col(idB).as("b"))
       .unionByName(pairs.select(col(idB).as("a"), col(idA).as("b")))
-      .repartition(col("b"))
       .distinct()
     sym.persist(StorageLevel.MEMORY_AND_DISK)
     try {

@@ -230,12 +230,6 @@ object KMeans {
     } finally pts.unpersist(blocking = false)
   }
 
-  /** Quantize + fit over a raw embedding frame; returns the centroid
-    * matrix (micro-units) for export, [[assignRows]], or inspection. */
-  def fitCentroids(embs: DataFrame, vecCol: String, idCol: String, k: Int,
-                   iters: Int, loopPartitions: Int = 8): Array[Array[Long]] =
-    fitLoop(quantized(embs, vecCol, idCol), k, iters, loopPartitions)
-
   /** The fit's input frame (__id, __qv). Long ids are the operator
     * contract: the init ordering (and the oracle's row_number replay)
     * needs a total order the driver can reproduce — cast upstream if
@@ -243,17 +237,6 @@ object KMeans {
   private[operators] def quantized(embs: DataFrame, vecCol: String,
                                    idCol: String): DataFrame =
     embs.select(col(idCol).cast("long").as("__id"), qVec(col(vecCol)).as("__qv"))
-
-  /** Assign rows against already-fitted centroids as a PURE
-    * PROJECTION — no aggregation, no state, so it runs unchanged in
-    * append-mode Structured Streaming: fit offline, cluster the 24/7
-    * ingest. Assignments match [[fitAssign]]'s bit-for-bit (same
-    * kernel, same quantization). */
-  def assignRows(embs: DataFrame, vecCol: String, idCol: String,
-                 cents: Array[Array[Long]]): DataFrame =
-    embs.select(col(idCol).cast("long").as(idCol),
-      assignCol(qVec(col(vecCol)),
-        typedlit(cents.map(_.toSeq).toSeq)).as("cluster"))
 
   /** End-to-end: quantize, fit, assign every vector. Output: (id,
     * cluster) — assignment against the FINAL centroids, exactly the

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * on the score. Documents whose word sequences the reference model
   * finds improbable (gibberish, boilerplate soup, wrong language) score
   * low; fluent text scores high. This is the classic crawl-quality
-  * signal next to the rule-based `TF.qualityScore` heuristics.
+  * signal next to the rule-based Gopher and C4 suites
+  * (`TF.gopherRules`, `TF.c4Rules`).
   *
   * Model: add-α smoothed conditional bigram probabilities,
   * P(w₂|w₁) = (c(w₁w₂) + α) / (c(w₁·) + α·V), with c(w₁·) the count of

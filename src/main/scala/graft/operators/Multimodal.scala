@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video travel as opaque
   * `binary` columns with typed metadata; decode / feature-extract /
-  * resize / frame-sample run batched per partition.
+  * resize run batched per partition.
   *
   * Decode is REAL for every still-image and audio family the engine
   * featurizes — uncompressed 24-bit BMP, binary PPM/PGM, baseline AND
@@ -28,9 +28,9 @@ import org.apache.spark.sql.functions._
   * decoder changes no plan shape.
   *
   * Scale notes: every decode path — metadata triage, frame demux,
-  * featurize, frame sampling — is a codegen Catalyst expression in a
-  * narrow projection (round 13 removed the last `df.rdd` barriers from
-  * featurize/sampleFrames), so the blobs never shuffle and never leave
+  * featurize — is a codegen Catalyst expression in a narrow projection
+  * (round 13 removed the last `df.rdd` barrier from featurize), so the
+  * blobs never shuffle and never leave
   * Tungsten: only the (tiny) feature output ever moves, and the whole
   * spine stays inside whole-stage codegen under AQE.
   */
@@ -425,25 +425,5 @@ object Multimodal {
       col(idCol).cast("bigint").as("media_id"),
       length(safeBlob).cast("bigint").as("n_bytes"),
       Kernels.decodeFeatures(safeBlob, dim, decoder).as("feature"))
-  }
-
-  /** Frame sampling: split a (stub) video blob into fixed-size chunks and
-    * keep every `stride`-th chunk — the plumbing of frame extraction
-    * (real impl: container demux + keyframe select, e.g. [[mjpegFrames]]).
-    * One output row per sampled frame: the
-    * `frame_chunks` codegen kernel cuts the
-    * chunks in place and a Spark-side explode fans them out, so
-    * downstream per-frame ops parallelize with no RDD barrier. Null ids
-    * pass through with a null `media_id`; null blobs yield zero rows
-    * (explode drops the NULL array) — both contracts unchanged.
-    */
-  def sampleFrames(df: DataFrame, idCol: String, blobCol: String,
-                   frameBytes: Int = 64, stride: Int = 4): DataFrame = {
-    require(frameBytes > 0 && stride > 0)
-    df.select(
-        col(idCol).cast("bigint").as("media_id"),
-        explode(Kernels.frameChunks(col(blobCol), frameBytes, stride)).as("f"))
-      .select(col("media_id"), col("f.frame_no").as("frame_no"),
-        col("f.frame").as("frame"))
   }
 }

@@ -29,9 +29,6 @@ object Ops {
       t.fold(c)(c.cast).as(to)
     }: _*)
 
-  def renameAll(df: DataFrame, renames: (String, String)*): DataFrame =
-    df.withColumnsRenamed(renames.toMap)
-
   /** FilterRows true/false routing (reference motogp.ktr:2695-3020):
     * a 2-way router, not just a WHERE. Both branches share one scan via
     * Catalyst plan reuse; call-site decides whether to cache.

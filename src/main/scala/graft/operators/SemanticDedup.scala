@@ -34,39 +34,13 @@ import org.apache.spark.sql.functions._
   * each block's pair count inside one executor's task budget). A
   * constant k at 100× the data turns every block into an n²/k
   * hotspot — the sf-pinned k=10 in q_semantic_dedup is correct for
-  * the test corpus ONLY because its n is ~10³. [[dedupAuto]] applies
-  * this rule mechanically from a `targetBlockSize`; prefer it whenever
-  * the corpus size isn't known at call-site-authoring time.
+  * the test corpus ONLY because its n is ~10³.
   */
 object SemanticDedup {
 
   private def dotCol(a: org.apache.spark.sql.Column,
                      b: org.apache.spark.sql.Column) =
     Kernels.dotLongs(a, b)
-
-  /** [[dedup]] with `k` DERIVED from the corpus instead of hand-picked:
-    * k = ⌈n / targetBlockSize⌉, the scaling rule from the scaladoc made
-    * executable so a 100× caller cannot silently keep a constant k and
-    * turn every cluster into an n²/k hotspot. Costs one extra `count()`
-    * over the ids — a metadata-cheap pass next to the quadratic block
-    * join it right-sizes. Example, 10⁹ vectors with 5·10⁴-vector
-    * blocks (each block ≲ 2.5·10⁹ candidate pairs, one executor task's
-    * budget):
-    * {{{
-    * SemanticDedup.dedupAuto(embs, "emb", "doc_id",
-    *   targetBlockSize = 50000, iters = 4, cosNum = 9, cosDen = 10)
-    * // k resolves to 20_000 — grows linearly with the corpus
-    * }}}
-    */
-  def dedupAuto(embs: DataFrame, vecCol: String, idCol: String,
-                targetBlockSize: Int, iters: Int, cosNum: Int, cosDen: Int,
-                loopPartitions: Int = 8): DataFrame = {
-    require(targetBlockSize > 0, s"targetBlockSize must be positive, got $targetBlockSize")
-    val n = embs.select(col(idCol)).count()
-    val k = math.max(1L, (n + targetBlockSize - 1) / targetBlockSize)
-    require(k <= Int.MaxValue, s"derived k=$k exceeds Int range")
-    dedup(embs, vecCol, idCol, k.toInt, iters, cosNum, cosDen, loopPartitions)
-  }
 
   /** Output: (id, cluster, kept 1/0) for every vector. `cosNum/cosDen`
     * is the cosine threshold as an exact rational (e.g. 9/10 = 0.9) —

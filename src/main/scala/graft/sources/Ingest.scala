@@ -34,29 +34,6 @@ object Ingest {
                       corruptCol: String = "_corrupt_record"): DataFrame =
     tagLines(spark.read.text(path), schema, corruptCol)
 
-  /** Convenience two-frame form: (good, bad) where `good` carries the
-    * schema columns of rows that parsed and `bad` one `corruptCol`
-    * string per malformed line. NOTE these are two independent plans
-    * over the same files — forcing both scans the input twice. For one
-    * pass, use [[readJsonlTagged]] and split at the sink, or persist
-    * the tagged frame first.
-    */
-  def readJsonl(spark: SparkSession, path: String, schema: StructType,
-                corruptCol: String = "_corrupt_record")
-      : (DataFrame, DataFrame) =
-    split(readJsonlTagged(spark, path, schema, corruptCol), schema, corruptCol)
-
-  /** Streaming twin for continuous corpus ingest: new shards landing
-    * under `path` are parsed incrementally with the same
-    * good/quarantine split (each side is its own `writeStream`; the
-    * text source tracks processed files per that sink's checkpoint).
-    */
-  def readJsonlStream(spark: SparkSession, path: String, schema: StructType,
-                      corruptCol: String = "_corrupt_record")
-      : (DataFrame, DataFrame) =
-    split(tagLines(spark.readStream.text(path), schema, corruptCol),
-      schema, corruptCol)
-
   /** Media ingestion through Spark's `binaryFile` source — the read
     * half of [[Sinks.writeBlobs]]: every object matching `glob` under
     * `dir` becomes a row of (`idCol` parsed from the file name,
@@ -100,13 +77,5 @@ object Ingest {
         (schema.fieldNames.map(n => col(s"__j.`$n`").as(n)) :+
           when(col("__j").isNull || col(s"__j.`$corruptCol`").isNotNull,
             col("value")).as(corruptCol)): _*)
-  }
-
-  private def split(tagged: DataFrame, schema: StructType,
-                    corruptCol: String): (DataFrame, DataFrame) = {
-    val good = tagged.filter(col(corruptCol).isNull)
-      .select(schema.fieldNames.map(col): _*)
-    val bad = tagged.filter(col(corruptCol).isNotNull).select(col(corruptCol))
-    (good, bad)
   }
 }

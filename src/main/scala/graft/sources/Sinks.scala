@@ -95,17 +95,6 @@ object Sinks {
       .json(path)
   }
 
-  /** Columnar ORC output — same role as [[writeParquet]] for stacks
-    * standardized on ORC; predicate pushdown and column pruning reach
-    * the ORC reader exactly like parquet (asserted in SinksSpec).
-    */
-  def writeOrc(df: DataFrame, path: String,
-               partitionBy: Seq[String] = Nil,
-               mode: String = "overwrite"): Unit = {
-    val w = df.write.mode(mode)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).orc(path)
-  }
-
   /** Z-ORDERED parquet layout: rows range-partitioned and sorted along
     * the 2-D Morton curve of (c1, c2), so every output file covers a
     * tight rectangle in BOTH dimensions and parquet min/max footer
@@ -126,86 +115,6 @@ object Sinks {
       .sortWithinPartitions("__z")
       .drop("__z")
       .write.mode(mode).parquet(path)
-  }
-
-  /** HILBERT-ordered parquet layout — [[writeZOrdered]] with the
-    * better-locality curve: rows range-partitioned and sorted along the
-    * 2-D Hilbert index of BUCKET coordinates (caller reduces c1/c2 to
-    * [0, 2^bits) first — rank, hash-bucket, epoch-day). Consecutive
-    * curve positions are adjacent cells, so each file's min/max
-    * rectangle is tighter than the Morton equivalent at the same file
-    * count — fewer files survive pruning for the same predicate, which
-    * is the whole game at 100 TB.
-    */
-  def writeHilbertOrdered(df: DataFrame, c1: String, c2: String, path: String,
-                          numFiles: Int, bits: Int = 16,
-                          mode: String = "overwrite"): Unit = {
-    require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
-    import graft.functions.LayoutFunctions
-    import org.apache.spark.sql.functions.col
-    df.withColumn("__h", LayoutFunctions.hilbert2(col(c1), col(c2), bits))
-      .repartitionByRange(numFiles, col("__h"))
-      .sortWithinPartitions("__h")
-      .drop("__h")
-      .write.mode(mode).parquet(path)
-  }
-
-  /** Small-file compaction for a FLAT parquet directory — the
-    * maintenance pass every long-lived 100 TB table needs: streaming
-    * micro-batches and over-parallel writers leave thousands of tiny
-    * part files, and each one costs a task, a footer read, and an
-    * object-store request on every downstream scan.
-    *
-    * File sizes come from the directory LISTING (metadata only — no
-    * data read to decide), the rewrite uses `coalesce`, not
-    * `repartition`: merging existing files needs no shuffle, each
-    * output task just reads several inputs back to back. Skew between
-    * merged outputs is bounded by `targetFileBytes` and irrelevant for
-    * a sink. A no-op (already at-or-under the target count) touches
-    * nothing and reports the unchanged count.
-    *
-    * The swap (write staging → move originals to a backup dir → move
-    * compacted files in → drop backup) is NOT atomic — a reader racing
-    * the swap can see a partial listing, and a crash mid-swap leaves
-    * the backup dir to recover from manually. That is the honest limit
-    * of directory-as-table; atomic compaction is what table formats
-    * (Delta/Iceberg snapshot commits) exist for, and this operator is
-    * the offline-maintenance-window version.
-    *
-    * Partitioned layouts (subdirectories) are rejected: compact each
-    * leaf partition directory individually.
-    *
-    * @return (file count before, file count after)
-    */
-  def compactParquet(spark: org.apache.spark.sql.SparkSession, path: String,
-                     targetFileBytes: Long = 128L << 20): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    require(targetFileBytes > 0, s"bad targetFileBytes $targetFileBytes")
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val entries = fs.listStatus(dir)
-    require(!entries.exists(e => e.isDirectory && !e.getPath.getName.startsWith(".")),
-      s"$path has partition subdirectories — compact each leaf directory")
-    val parts = entries.filter(e => e.isFile && e.getPath.getName.endsWith(".parquet"))
-    val before = parts.length
-    val total = parts.map(_.getLen).sum
-    val nOut = math.max(1L, (total + targetFileBytes - 1) / targetFileBytes).toInt
-    if (nOut >= before) return (before, before)
-    val staging = new Path(dir.getParent, s".${dir.getName}.compacting")
-    val backup = new Path(dir.getParent, s".${dir.getName}.precompact")
-    fs.delete(staging, true); fs.delete(backup, true) // stale crash debris
-    spark.read.parquet(path).coalesce(nOut)
-      .write.mode("overwrite").parquet(staging.toString)
-    fs.mkdirs(backup)
-    parts.foreach(p => fs.rename(p.getPath, new Path(backup, p.getPath.getName)))
-    fs.listStatus(staging)
-      .filter(e => e.isFile && e.getPath.getName.endsWith(".parquet"))
-      .foreach(p => fs.rename(p.getPath, new Path(dir, p.getPath.getName)))
-    fs.delete(staging, true)
-    fs.delete(backup, true)
-    val after = fs.listStatus(dir)
-      .count(e => e.isFile && e.getPath.getName.endsWith(".parquet"))
-    (before, after)
   }
 
   /** Media-export sink: one object per blob, named `<id>.<ext>` — the
@@ -255,100 +164,4 @@ object Sinks {
       .option("password", password)
       .options(extraOptions)
       .save()
-
-  // ---- versioned atomic publish (r13) --------------------------------
-
-  /** Atomic corpus publication: writers produce `root/v=N` directories
-    * and flip ONE small pointer file (`root/_CURRENT`) when — and only
-    * when — the version is completely written. Readers resolve the
-    * pointer first, so they see either the previous complete corpus or
-    * the new complete corpus, never a partially-written directory —
-    * the exactly-once publication contract a 24/7 training pipeline
-    * needs from its upstream, on any filesystem whose single-file
-    * rename is atomic (POSIX, HDFS; object stores get the same
-    * guarantee because the pointer is one PUT, not a directory
-    * rename — the versioned layout exists precisely to avoid
-    * renaming data directories).
-    *
-    * A crashed publish leaves an orphaned `v=N` directory and an
-    * untouched pointer: invisible to readers, reclaimed by the next
-    * successful [[publishVersion]] (which garbage-collects every
-    * version newer than keepVersions behind the new current).
-    * Returns the published version number.
-    */
-  def publishVersion(df: DataFrame, root: String,
-                     keepVersions: Int = 2,
-                     writer: (DataFrame, String) => Unit =
-                       (d, p) => d.write.mode("overwrite").parquet(p)): Long = {
-    require(keepVersions >= 1, s"keepVersions must be >= 1, got $keepVersions")
-    val dir = new java.io.File(root)
-    dir.mkdirs()
-    val existing = listVersions(root)
-    val next = (existing.headOption.getOrElse(0L)) + 1L
-    writer(df, s"$root/v=$next")
-    // the publish point: write the pointer to a temp name, fsync the
-    // FILE CONTENT, atomic-rename, fsync the DIRECTORY so the rename
-    // itself is durable (r14, ADVICE r13: ATOMIC_MOVE guarantees reader
-    // atomicity, not durability — an un-synced pointer could roll back
-    // after a crash to a version this publish's GC already deleted)
-    val tmp = java.nio.file.Paths.get(root, s"_CURRENT.tmp")
-    val cur = java.nio.file.Paths.get(root, "_CURRENT")
-    val ch = java.nio.channels.FileChannel.open(tmp,
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.WRITE,
-      java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
-    try {
-      ch.write(java.nio.ByteBuffer.wrap(
-        next.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-      ch.force(true)
-    } finally ch.close()
-    java.nio.file.Files.move(tmp, cur,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // POSIX: rename durability requires an fsync of the containing
-    // directory; not every filesystem exposes a directory channel
-    // (Windows refuses READ on dirs) — best-effort by design there
-    try {
-      val dch = java.nio.channels.FileChannel.open(
-        java.nio.file.Paths.get(root), java.nio.file.StandardOpenOption.READ)
-      try dch.force(true) finally dch.close()
-    } catch { case _: Exception => () }
-    // GC: keep the newest keepVersions COMMITTED versions (<= next);
-    // orphans from crashed publishes newer than `next` cannot exist
-    // (version numbers only grow through this method), stale ones from
-    // older crashes are <= next and age out like committed versions
-    listVersions(root).filter(_ <= next).drop(keepVersions).foreach { v =>
-      deleteRecursively(new java.io.File(s"$root/v=$v"))
-    }
-    next
-  }
-
-  /** The committed current version of `root`, or None before the first
-    * publish. */
-  def currentVersion(root: String): Option[Long] = {
-    val cur = java.nio.file.Paths.get(root, "_CURRENT")
-    if (!java.nio.file.Files.exists(cur)) None
-    else Some(java.nio.file.Files.readString(cur).trim.toLong)
-  }
-
-  /** Read the corpus the pointer commits to — never a partial write. */
-  def readCurrent(spark: org.apache.spark.sql.SparkSession,
-                  root: String): DataFrame = {
-    val v = currentVersion(root).getOrElse(throw new IllegalStateException(
-      s"no published version under $root (missing _CURRENT)"))
-    spark.read.parquet(s"$root/v=$v")
-  }
-
-  private def listVersions(root: String): Seq[Long] = {
-    val fs = new java.io.File(root).listFiles()
-    if (fs == null) Nil
-    else fs.toSeq.filter(_.isDirectory).map(_.getName)
-      .filter(_.startsWith("v=")).flatMap(n => n.drop(2).toLongOption)
-      .sorted(Ordering[Long].reverse)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val cs = f.listFiles(); if (cs != null) cs.foreach(deleteRecursively)
-    f.delete(); ()
-  }
 }

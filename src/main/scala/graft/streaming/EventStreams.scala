@@ -1,74 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.DataFrame
 
-/** Structured Streaming surface over the `events` stream table.
-  *
-  * The reference is purely batch (SURVEY.md §2.10), so this module is the
-  * engine's forward-looking streaming tier: the same transformations the
-  * batch queries run (hourly windowed aggregation) expressed over
-  * `readStream`, plus a stateful sessionizer — the two shapes a
-  * large-scale event pipeline needs. Batch/stream parity is pinned by
-  * test: the windowed aggregate over a bounded stream equals the batch
-  * `q_events_hourly` result.
-  *
-  * Scale notes: the windowed aggregate is a streaming hash aggregate with
-  * watermark-bounded state; sessionization keys state by user_id —
-  * state size is O(active users), and the event-time timeout evicts
-  * sessions `gap` past the watermark.
+/** Event-time operators that run unchanged on batch frames and on
+  * watermarked streams. The reference is purely batch (SURVEY.md
+  * §2.10); the batch twin `q_event_attribution` runs [[attribution]]
+  * against the DuckDB oracle, and EventStreamsSpec runs the same code
+  * as a stream-stream join.
   */
 object EventStreams {
-
-  /** events.parquet layout with `tsType` left open: the driver has
-    * regenerated the table with different `ts` encodings across rounds
-    * (TIMESTAMP(NANOS)-as-ns-long, then timestamp[us]/TIMESTAMP_NTZ), so
-    * the stream schema is parameterized by the type actually on disk. */
-  def eventsSchema(tsType: DataType): StructType = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", tsType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType), StructField("props", StringType)))
-
-  /** File-stream source over an events directory. `readStream` needs a
-    * declared schema, so learn the on-disk `ts` type with a footer-only
-    * batch peek (driver-side, no data scan), then normalize exactly like
-    * the batch reader ([[graft.EventTime.normalizeTs]]).
-    *
-    * Peek target: `dir` may be the whole sf directory (the harness
-    * convention — the other tables' files null-fill the declared columns
-    * and their null `ts` rows fall out of every event-time operator), so
-    * prefer the `events.parquet` entry when it exists; otherwise
-    * merge-peek the directory, which unions footers and still recovers
-    * `ts`'s type as long as no other table claims the name. Existence is
-    * resolved through Hadoop's FileSystem (not java.io.File), so the
-    * precise peek also fires on remote storage (hdfs://, s3a://) — a
-    * local-only check silently degraded those to the directory peek. */
-  def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    val eventsPath = new org.apache.hadoop.fs.Path(dir, "events.parquet")
-    val exists =
-      try eventsPath
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(eventsPath)
-      catch { case _: java.io.IOException => false }
-    val peekPath = if (exists) eventsPath.toString else dir
-    val tsType = spark.read.option("mergeSchema", "true")
-      .parquet(peekPath).schema("ts").dataType
-    graft.EventTime.normalizeTs(
-      spark.readStream.schema(eventsSchema(tsType)).parquet(dir))
-  }
-
-  /** Tumbling 1-hour windowed aggregation with a watermark — the
-    * streaming twin of the batch `q_events_hourly` query. */
-  def hourlyCounts(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).cast("bigint").as("n"),
-        round(sum("value"), 4).as("sum_value"))
-      .select(col("window.start").as("hour"), col("event_type"),
-        col("n"), col("sum_value"))
 
   /** Attribution (interval) join: every action event paired with the
     * same user's cause events inside the lookback window,
@@ -128,105 +68,5 @@ object EventStreams {
         causes(causeTsCol) <= actions(actionTsCol) &&
         causes(causeTsCol) >= actions(actionTsCol) - interval)
       .drop(causes(userCol))
-  }
-
-  /** Streaming exact dedup for training-data ingest: drop any document
-    * whose normalized-content fingerprint (same kernel as the batch
-    * `Dedup.exact`) was already seen within the watermark horizon —
-    * duplicates usually arrive close together (re-crawls, retry storms),
-    * so a bounded horizon catches them without unbounded state.
-    * `dropDuplicatesWithinWatermark` keys state by the 64-bit
-    * fingerprint, not the document text, and evicts entries older than
-    * the watermark: state is O(distinct docs per horizon) × 8 bytes —
-    * a plain streaming `dropDuplicates` would grow forever.
-    */
-  def dedupDocStream(docs: DataFrame, textCol: String, tsCol: String,
-                     watermark: String = "1 hour"): DataFrame =
-    docs
-      .withColumn("__fp",
-        graft.functions.TextFunctions.contentFingerprint(col(textCol)))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("__fp")
-      .drop("__fp")
-
-  /** The 24/7 ingest admission screen AS A STREAM: every micro-batch of
-    * arriving vectors probes the persisted IVF-PQ history index
-    * ([[graft.operators.Similarity.buildIvfPqIndex]]) through the same
-    * [[graft.operators.Dedup.incrementalEmbeddingPq]] the batch path
-    * runs — `foreachBatch` is the idiomatic bridge because the probe is
-    * a multi-stage batch plan (probe join + ADC window + refine) that
-    * streaming transformations cannot express, and it KEEPS the batch
-    * operator's guarantees per trigger: exact output cosines, candidate
-    * scan reading codes-only columns of the probed partitions, O(batch)
-    * per-ingest shuffle independent of corpus size. Each row is
-    * screened independently against the static index, so streamed
-    * output across any micro-batch split is EXACTLY the batch operator
-    * over the union (spec-pinned) — no watermark or state needed; the
-    * index itself evolves by the offline build/merge cadence, not per
-    * trigger. `sink` receives (admission pairs, epoch) and owns the
-    * write + checkpoint semantics of its landing.
-    */
-  def screenEmbeddingStream(batches: DataFrame, indexDir: String,
-                            vecCol: String, idCol: String,
-                            threshold: Double = 0.9, nProbes: Int = 2,
-                            rerank: Int = 20)
-                           (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    batches.writeStream.foreachBatch { (b: Dataset[Row], epoch: Long) =>
-      sink(graft.operators.Dedup.incrementalEmbeddingPq(
-        b.toDF(), indexDir, vecCol, idCol, threshold, nProbes, rerank), epoch)
-    }
-
-  final case class SessionEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
-  final case class SessionState(start: Long, end: Long, n: Long, total: Double)
-  final case class SessionsState(open: List[SessionState])
-  final case class Session(user_id: Long, session_start: java.sql.Timestamp,
-                           session_end: java.sql.Timestamp, n_events: Long,
-                           total_value: Double)
-
-  /** Gap-based sessionization via flatMapGroupsWithState (event-time
-    * timeout). ALL sessions stay in state until the watermark passes
-    * their end + gap: an in-watermark out-of-order event arriving in a
-    * later batch still merges into (or bridges) earlier sessions —
-    * emitting on gap-close alone would lock in a session the stream can
-    * still legally extend. State per key is O(open sessions within the
-    * watermark horizon).
-    */
-  def sessionize(events: Dataset[SessionEvent], gapMs: Long,
-                 watermark: String = "10 minutes"): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionsState, Session](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, it: Iterator[SessionEvent], state: GroupState[SessionsState]) =>
-          def toSession(s: SessionState): Session = Session(userId,
-            new java.sql.Timestamp(s.start), new java.sql.Timestamp(s.end),
-            s.n, s.total)
-          // merge one event into the disjoint session list (may bridge
-          // two sessions the event falls between)
-          def add(sessions: List[SessionState], t: Long, v: Double): List[SessionState] = {
-            val (touching, rest) = sessions.partition(s =>
-              t >= s.start - gapMs && t <= s.end + gapMs)
-            val merged = touching.foldLeft(SessionState(t, t, 1, v)) { (acc, s) =>
-              SessionState(math.min(acc.start, s.start), math.max(acc.end, s.end),
-                acc.n + s.n, acc.total + s.total)
-            }
-            merged :: rest
-          }
-          val withNew = it.toSeq.sortBy(_.ts.getTime)
-            .foldLeft(state.getOption.map(_.open).getOrElse(Nil)) { (acc, e) =>
-              add(acc, e.ts.getTime, e.value)
-            }
-          val wm = state.getCurrentWatermarkMs()
-          // a session is final once no in-watermark event can extend it
-          val (done, stillOpen) = withNew.partition(_.end + gapMs <= wm)
-          if (stillOpen.isEmpty) state.remove()
-          else {
-            state.update(SessionsState(stillOpen))
-            state.setTimeoutTimestamp(stillOpen.map(_.end + gapMs).min)
-          }
-          done.sortBy(_.start).map(toSession).iterator
-      }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.ArchiveKernels
+import graft.functions.{ArchiveKernels, KernelReferences}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[ArchiveKernels]] — 7z / RAR4 / RAR5 triage over spec-faithful
@@ -70,11 +70,11 @@ class ArchiveTriageSpec extends AnyFunSuite {
 
   test("rar4: legacy block walk, ADD_SIZE data areas, encrypted-headers " +
     "flag, CRC16 verified") {
-    assert(rar(ArchiveKernels.buildRar4(2)) == Some((4, 4L, 2L, false)))
-    assert(rar(ArchiveKernels.buildRar4(0)) == Some((4, 2L, 0L, false)))
-    assert(rar(ArchiveKernels.buildRar4(1, encrypted = true)) ==
+    assert(rar(KernelReferences.buildRar4(2)) == Some((4, 4L, 2L, false)))
+    assert(rar(KernelReferences.buildRar4(0)) == Some((4, 2L, 0L, false)))
+    assert(rar(KernelReferences.buildRar4(1, encrypted = true)) ==
       Some((4, 1L, 0L, true)))
-    val good = ArchiveKernels.buildRar4(1)
+    val good = KernelReferences.buildRar4(1)
     val mut = good.clone()
     mut(9) = (mut(9) ^ 1).toByte
     assert(rar(mut).isEmpty)

@@ -128,7 +128,7 @@ class ClassifierSpec extends SparkSpec {
     val frame = Classifier.perDocCharFeatures(
       docs, "text", "doc_id", col("lang"), buckets = 128, n = 3)
     val joint = Classifier.trainLangId(frame, langs, 128, iters = 4, lr = 2.0)
-    val seqW = Classifier.trainLangIdSequential(frame, langs, 128, 4, 2.0)
+    val seqW = graft.operators.ClassifierReference.trainLangIdSequential(frame, langs, 128, 4, 2.0)
     langs.indices.foreach { ki =>
       assert(java.util.Arrays.equals(joint(ki), seqW(ki)),
         s"class ${langs(ki)} diverged from the sequential chain")

@@ -250,7 +250,7 @@ class DecoderFuzzSpec extends AnyFunSuite {
       ("7z", ArchiveKernels.build7z(Array[Byte](1, 2, 3), Array[Byte](0x01)),
         ArchiveKernels.sevenZipMeta(_)),
       ("rar5", ArchiveKernels.buildRar5(Seq(4, 4)), ArchiveKernels.rarMeta(_)),
-      ("rar4", ArchiveKernels.buildRar4(1), ArchiveKernels.rarMeta(_)),
+      ("rar4", KernelReferences.buildRar4(1), ArchiveKernels.rarMeta(_)),
       ("eml", ascii(eml), EmlKernels.emlParts(_)),
       ("mbox", ascii("From ada@example.org Mon Jan  1 10:00:00 2024\n" + eml),
         EmlKernels.mboxMessages(_)),

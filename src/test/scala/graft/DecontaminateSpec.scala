@@ -97,8 +97,10 @@ class DecontaminateSpec extends SparkSpec {
     assert(!out(11L)._2 && out(11L)._1 == 0.0)
     assert(!out.contains(12L)) // null embedding: scored nowhere
     // apply side: contaminated row dropped, null-embedding row KEPT
-    val kept = Decontaminate.cleanByEmbedding(corpus, bench, "embedding",
-        "vec_id", threshold = 0.95)
+    val bad = Decontaminate.byEmbedding(corpus, bench, "embedding", "vec_id",
+        threshold = 0.95)
+      .filter(col("contaminated")).select(col("id").as("vec_id"))
+    val kept = corpus.join(bad, Seq("vec_id"), "left_anti")
       .select("vec_id").as[Long].collect().toSet
     assert(kept == Set(11L, 12L))
     // benchmark side broadcasts (the corpus must stream, never shuffle)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.JaroWinkler
+import graft.functions.{JaroWinkler, KernelReferences}
 import org.scalatest.funsuite.AnyFunSuite
 
 class JaroWinklerSpec extends AnyFunSuite {
@@ -53,7 +53,7 @@ class JaroWinklerSpec extends AnyFunSuite {
             s"pair ($l1, $len) splits by 2+ bands at r=$r")
       }
       val (closed, walk) =
-        (JaroWinkler.lengthBand(10000, r), JaroWinkler.lengthBandWalk(10000, r))
+        (JaroWinkler.lengthBand(10000, r), KernelReferences.lengthBandWalk(10000, r))
       // s = 1.5 matches the walk's mean step: within ±1 band on the
       // tau grid, ~2% relative at r = 0.999 where floor losses
       // compound through the ~1.5r/(1-r) linear regime. Either

@@ -110,7 +110,7 @@ class KMeansSpec extends SparkSpec {
     val seeded = Seq((0L, Seq[java.lang.Double](0.5, null)),
       (1L, Seq[java.lang.Double](0.0, 1.0))).toDF("id", "vec")
     val e = intercept[IllegalArgumentException](
-      KMeans.fitCentroids(seeded, "vec", "id", k = 1, iters = 0))
+      KMeans.fitAssign(seeded, "vec", "id", k = 1, iters = 0))
     assert(e.getMessage.contains("null element at index 1"), e.getMessage)
   }
 
@@ -119,7 +119,7 @@ class KMeansSpec extends SparkSpec {
     // 2^53 ≈ 9.007e15 exact-double bound in a single row
     val big = Seq((0L, Seq(1.0e10, 0.0)), (1L, Seq(1.0e10, 0.0))).toDF("id", "vec")
     val e = intercept[IllegalArgumentException](
-      KMeans.fitCentroids(big, "vec", "id", k = 1, iters = 1))
+      KMeans.fitAssign(big, "vec", "id", k = 1, iters = 1))
     assert(e.getMessage.contains("cluster 0 dim-sum 20000000000000000 exceeds " +
       "the exact-double bound"), e.getMessage)
     // 5e12 quantizes to 5e18 — two of them overflow a long; the exact
@@ -127,7 +127,7 @@ class KMeansSpec extends SparkSpec {
     val huge = Seq((0L, Seq(5.0e12)), (1L, Seq(5.0e12)), (2L, Seq(5.0e12))).toDF("id", "vec")
     for (parts <- Seq(1, 3)) {
       val e = intercept[Exception](
-        KMeans.fitCentroids(huge, "vec", "id", k = 1, iters = 1, loopPartitions = parts))
+        KMeans.fitAssign(huge, "vec", "id", k = 1, iters = 1, loopPartitions = parts))
       assert(messages(e).contains("cluster 0 dim-sum 10000000000000000000 exceeds " +
         "the exact-double bound"), messages(e))
     }

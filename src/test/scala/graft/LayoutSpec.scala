@@ -106,28 +106,6 @@ class LayoutSpec extends SparkSpec {
     assert(r.getSeq[Int](1) == Seq(300, 77))
   }
 
-  test("hilbert-ordered files bound both dimensions at least as tightly as z-order") {
-    val rnd = new scala.util.Random(23)
-    val grid = rnd.shuffle((for (x <- 0 until 100; y <- 0 until 100)
-      yield (x, y)).toVector).toDF("x", "y")
-    val hDir = Files.createTempDirectory("hilbert").toString + "/t"
-    val zDir = Files.createTempDirectory("zorder_cmp").toString + "/t"
-    Sinks.writeHilbertOrdered(grid, "x", "y", hDir, numFiles = 64, bits = 7)
-    Sinks.writeZOrdered(grid, "x", "y", zDir, numFiles = 64)
-    def spanSum(dir: String): Long =
-      new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
-        .toSeq.map { f =>
-          val r = spark.read.parquet(f.toString)
-            .agg(max("x") - min("x"), max("y") - min("y")).head()
-          r.getInt(0).toLong + r.getInt(1).toLong
-        }.sum
-    // total min/max span across files — smaller = tighter pruning
-    // rectangles; Hilbert's unit-step curve must not lose to Morton
-    val h = spanSum(hDir)
-    val z = spanSum(zDir)
-    assert(h <= z, s"hilbert total span $h vs morton $z")
-  }
-
   test("z-ordered files bound BOTH dimensions; x-sorted files do not") {
     // 100x100 grid, shuffled arrival order
     val rnd = new scala.util.Random(7)

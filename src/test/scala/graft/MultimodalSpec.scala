@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Multimodal
+import org.apache.spark.sql.Kernels
 import org.apache.spark.sql.functions._
 
 class MultimodalSpec extends SparkSpec {
@@ -31,11 +32,11 @@ class MultimodalSpec extends SparkSpec {
     assert(out(1L) != out(2L))
   }
 
-  test("sampleFrames keeps every stride-th fixed-size chunk") {
+  test("frame_chunks keeps every stride-th fixed-size chunk") {
     val blob = Array.tabulate[Byte](300)(i => (i % 127).toByte)
     val df = Seq((7L, blob)).toDF("id", "blob")
-    val frames = Multimodal.sampleFrames(df, "id", "blob", frameBytes = 64, stride = 2)
-      .select("frame_no").as[Int].collect().toSeq.sorted
+    val frames = df.select(explode(Kernels.frameChunks(col("blob"), 64, 2)).as("f"))
+      .select("f.frame_no").as[Int].collect().toSeq.sorted
     // 300 bytes -> chunks 0..4, strided -> 0, 2, 4
     assert(frames == Seq(0, 2, 4))
   }
@@ -537,14 +538,6 @@ class MultimodalSpec extends SparkSpec {
     assert(out(1L) == ((true, true)))  // crafted size: NULL, not a crash
     assert(out(2L) == ((true, true)))  // empty ftyp: no garbage brand
     assert(out(3L) == ((true, true)))  // unknown-duration sentinel: NULL
-  }
-
-  test("sampleFrames: a null media id passes through instead of killing the task") {
-    val media = Seq((Some(1L), "abcdefgh"), (None, "ijklmnop")).toDF("id", "txt")
-      .withColumn("blob", encode(col("txt"), "UTF-8"))
-    val out = Multimodal.sampleFrames(media, "id", "blob", frameBytes = 4, stride = 1)
-    assert(out.count() == 4) // two 4-byte frames per blob
-    assert(out.filter(col("media_id").isNull).count() == 2)
   }
 
   // ---- real raster decode (RasterKernels via Multimodal.raster) ----

@@ -238,7 +238,7 @@ class PdfSpec extends SparkSpec {
   test("ASCII85 / ASCIIHex (r15): z-shorthand, partial groups, " +
     "whitespace, odd-digit padding; an ASCII85+Flate CHAIN page " +
     "extracts; malformed streams fail closed") {
-    import graft.functions.{PdfKernels, PdfStreamEncoders}
+    import graft.functions.{KernelReferences, PdfKernels, PdfStreamEncoders}
     def a85(s: String): Array[Byte] =
       PdfKernels.ascii85Decode(s.getBytes("US-ASCII"))
     // z = four zeros; partial final group; whitespace transparent
@@ -249,7 +249,7 @@ class PdfSpec extends SparkSpec {
       val d = Array.fill(len)(rnd.nextInt(256).toByte)
       assert(PdfKernels.ascii85Decode(PdfStreamEncoders.ascii85(d)).toSeq
         == d.toSeq, s"len=$len")
-      assert(PdfKernels.asciiHexDecode(PdfStreamEncoders.asciiHex(d)).toSeq
+      assert(PdfKernels.asciiHexDecode(KernelReferences.asciiHex(d)).toSeq
         == d.toSeq, s"len=$len")
     }
     // odd trailing hex digit pads with 0; '>' required
@@ -267,7 +267,7 @@ class PdfSpec extends SparkSpec {
     // and LZW behind ASCIIHex
     val pdf2 = classicPdf(Seq("BT (hex lzw chain) Tj ET"),
       filter = Some(("[/ASCIIHexDecode /LZWDecode]",
-        d => PdfStreamEncoders.asciiHex(PdfStreamEncoders.lzw(d)))))
+        d => KernelReferences.asciiHex(PdfStreamEncoders.lzw(d)))))
     assert(textOf(pdf2) == "hex lzw chain")
     // RunLengthDecode: literal runs + repeats + the 128 EOD
     def rle(d: Array[Byte]): Array[Byte] = {

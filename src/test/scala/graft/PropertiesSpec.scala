@@ -15,7 +15,8 @@ class PropertiesSpec extends SparkSpec {
   private val rnd = new scala.util.Random(2026)
 
   test("morton2/unmorton2 round-trip and curve-order laws on random ints") {
-    import graft.functions.LayoutKernels.{morton2, unmorton2}
+    import graft.functions.LayoutKernels.morton2
+    import graft.functions.KernelReferences.unmorton2
     for (_ <- 1 to 500) {
       val a = rnd.nextInt(); val b = rnd.nextInt()
       assert(unmorton2(morton2(a, b)) == ((a, b)), s"a=$a b=$b")
@@ -248,9 +249,10 @@ class PropertiesSpec extends SparkSpec {
     val df = rows.toDF("doc_id", "text", "lang")
     graft.sources.Sinks.writeJsonl(df, dir.getAbsolutePath, maxRecordsPerFile = 20)
     val schema = df.schema
-    val (good, bad) = graft.sources.Ingest.readJsonl(spark, dir.getAbsolutePath, schema)
-    assert(bad.count() == 0)
-    val back = good.as[(Long, String, String)].collect().toSet
+    val tagged = graft.sources.Ingest.readJsonlTagged(spark, dir.getAbsolutePath, schema)
+    assert(tagged.filter(col("_corrupt_record").isNotNull).count() == 0)
+    val back = tagged.select("doc_id", "text", "lang")
+      .as[(Long, String, String)].collect().toSet
     assert(back == rows.toSet)
   }
 

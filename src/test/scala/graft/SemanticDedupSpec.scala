@@ -49,24 +49,6 @@ class SemanticDedupSpec extends SparkSpec {
     assert(run(corpus.repartition(1)) == run(corpus.repartition(7)))
   }
 
-  test("dedupAuto derives k from the block budget and matches explicit k") {
-    // 6 vectors / targetBlockSize 3 → k = ⌈6/3⌉ = 2: identical output
-    // to the hand-picked k=2 runs above (same deterministic k-means)
-    def flags(df: org.apache.spark.sql.DataFrame) =
-      df.select("id", "kept").as[(Long, Long)].collect().toMap
-    val auto = flags(SemanticDedup.dedupAuto(corpus, "vec", "id",
-      targetBlockSize = 3, iters = 3, cosNum = 95, cosDen = 100))
-    val explicit = flags(SemanticDedup.dedup(corpus, "vec", "id", k = 2,
-      iters = 3, cosNum = 95, cosDen = 100))
-    assert(auto == explicit)
-    // budget ≥ n degenerates to a single block (k = 1), never k = 0
-    val one = SemanticDedup.dedupAuto(corpus, "vec", "id",
-      targetBlockSize = 100, iters = 1, cosNum = 95, cosDen = 100)
-    assert(one.select(max("cluster")).as[Long].head() == 0L)
-    intercept[IllegalArgumentException](SemanticDedup.dedupAuto(
-      corpus, "vec", "id", targetBlockSize = 0, iters = 1, cosNum = 1, cosDen = 2))
-  }
-
   test("argument guards") {
     intercept[IllegalArgumentException](SemanticDedup.dedup(
       corpus, "vec", "id", k = 2, iters = 1, cosNum = 0, cosDen = 1))

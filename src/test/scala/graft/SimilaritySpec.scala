@@ -439,7 +439,7 @@ class SimilaritySpec extends SparkSpec {
     val df = Seq((Array(3.0f, 4.0f), Array(3.0f, 4.0f))).toDF("a", "b")
     val row = df.select(
       VectorFunctions.dot(col("a"), col("b")).as("d"),
-      VectorFunctions.l2Norm(col("a")).as("n"),
+      sqrt(VectorFunctions.dot(col("a"), col("a"))).as("n"),
       VectorFunctions.cosineSimilarity(col("a"), col("b")).as("c"),
       element_at(VectorFunctions.l2Normalize(col("a")), 1).as("u0"))
       .as[(Double, Double, Double, Double)].collect().head

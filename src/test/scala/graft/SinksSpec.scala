@@ -50,20 +50,19 @@ class SinksSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))
-    val (good, bad) = graft.sources.Ingest.readJsonl(spark, dir.getAbsolutePath, schema)
-    assert(good.columns.toSeq == Seq("doc_id", "text"))
-    assert(good.select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
+    // every line is a row; corrupt ones keep the verbatim line in the
+    // tag column and null data columns
+    val tagged = graft.sources.Ingest.readJsonlTagged(spark, dir.getAbsolutePath, schema)
+    assert(tagged.columns.toSeq == Seq("doc_id", "text", "_corrupt_record"))
+    assert(tagged.count() == 4)
+    assert(tagged.filter(col("_corrupt_record").isNull)
+      .select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
+    val bad = tagged.filter(col("_corrupt_record").isNotNull)
+    assert(bad.filter(col("doc_id").isNull).count() == 2)
     val quarantined = bad.select("_corrupt_record").as[String].collect()
     assert(quarantined.length == 2)
     assert(quarantined.exists(_.contains("missing comma")))
     assert(quarantined.exists(_.contains("not json")))
-    // the one-scan tagged form: every line is a row, corrupt ones keep
-    // the verbatim line in the tag column and null data columns
-    val tagged = graft.sources.Ingest.readJsonlTagged(spark, dir.getAbsolutePath, schema)
-    assert(tagged.columns.toSeq == Seq("doc_id", "text", "_corrupt_record"))
-    assert(tagged.count() == 4)
-    assert(tagged.filter(col("_corrupt_record").isNotNull)
-      .filter(col("doc_id").isNull).count() == 2)
   }
 
   test("jsonl ingest: whitespace-only lines (incl. CRLF remnants) are ignored, not quarantined") {
@@ -73,38 +72,10 @@ class SinksSpec extends SparkSpec {
       "{\"doc_id\": 1}\n\r\n\t\n   \n{\"doc_id\": 2}\n")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType)))
-    val (good, bad) = graft.sources.Ingest.readJsonl(spark, dir.getAbsolutePath, schema)
-    assert(good.count() == 2)
-    assert(bad.count() == 0) // "\r", "\t", "   " are blanks, not errors
-  }
-
-  test("compactParquet: merges small files losslessly, idempotent, rejects partitioned dirs") {
-    val root = Files.createTempDirectory("graft-compact").toFile
-    root.deleteOnExit()
-    val dir = new java.io.File(root, "tbl").getAbsolutePath
-    val df = (1 to 5000).map(i => (i.toLong, s"row-$i" * 10)).toDF("id", "v")
-    df.repartition(32).write.parquet(dir)
-    def partCount = new java.io.File(dir).listFiles()
-      .count(f => f.isFile && f.getName.endsWith(".parquet"))
-    val nBefore = partCount
-    assert(nBefore == 32)
-    // ~hundreds of KB total: a 1 MB target forces a single output file
-    val (b, a) = graft.sources.Sinks.compactParquet(spark, dir, 1L << 20)
-    assert(b == 32 && a < 32 && a == partCount, s"($b, $a)")
-    // lossless: same rows, no swap debris left behind
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 5000)
-    assert(back.agg(sum(col("id"))).as[Long].head() == 5000L * 5001 / 2)
-    assert(!root.listFiles().exists(_.getName.contains("compact")))
-    // already compact: a second pass is a no-op
-    assert(graft.sources.Sinks.compactParquet(spark, dir, 1L << 20) == ((a, a)))
-    // partitioned layout refused
-    val pdir = new java.io.File(root, "ptbl").getAbsolutePath
-    df.withColumn("p", col("id") % 2).write.partitionBy("p").parquet(pdir)
-    val e = intercept[IllegalArgumentException] {
-      graft.sources.Sinks.compactParquet(spark, pdir, 1L << 20)
-    }
-    assert(e.getMessage.contains("partition subdirectories"))
+    val tagged = graft.sources.Ingest.readJsonlTagged(spark, dir.getAbsolutePath, schema)
+    assert(tagged.count() == 2)
+    // "\r", "\t", "   " are blanks, not errors
+    assert(tagged.filter(col("_corrupt_record").isNotNull).count() == 0)
   }
 
   test("blob export + binaryFile ingest: byte-exact round trip, nulls skipped, bad names get null ids") {
@@ -135,26 +106,6 @@ class SinksSpec extends SparkSpec {
     assert(back.filter(col("media_id").isNull).count() == 1)
   }
 
-  test("jsonl STREAM ingest: incremental shards split good/quarantine identically") {
-    val dir = Files.createTempDirectory("graft-ingest-stream").toFile
-    dir.deleteOnExit()
-    java.nio.file.Files.writeString(new java.io.File(dir, "s0.json").toPath,
-      "{\"doc_id\": 1, \"text\": \"ok\"}\nbroken line\n")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))
-    val (good, bad) = graft.sources.Ingest.readJsonlStream(spark, dir.getAbsolutePath, schema)
-    assert(good.isStreaming && bad.isStreaming)
-    val qg = good.writeStream.format("memory").queryName("ing_good")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    val qb = bad.writeStream.format("memory").queryName("ing_bad")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    qg.awaitTermination(60000); qb.awaitTermination(60000)
-    assert(spark.sql("SELECT doc_id FROM ing_good").as[Long].collect().toSeq == Seq(1L))
-    assert(spark.sql("SELECT * FROM ing_bad").collect().map(_.getString(0)).toSeq
-      == Seq("broken line"))
-  }
-
   test("custom kernels compose inside a streaming plan: ingest -> redact -> quality gate") {
     val dir = Files.createTempDirectory("graft-stream-pipe").toFile
     dir.deleteOnExit()
@@ -165,8 +116,7 @@ class SinksSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))
-    val (good, _) = graft.sources.Ingest.readJsonlStream(spark, dir.getAbsolutePath, schema)
-    val gated = good
+    val gated = spark.readStream.schema(schema).json(dir.getAbsolutePath)
       .withColumn("text", graft.functions.TextFunctions.redact(col("text"),
         Seq(graft.functions.TextFunctions.EmailPattern -> "<EMAIL>")))
       .withColumn("rep", graft.functions.TextFunctions.repetitionStats(col("text")))
@@ -179,19 +129,6 @@ class SinksSpec extends SparkSpec {
       .as[(Long, String)].collect().toMap
     assert(out.keySet == Set(1L)) // the repetitive doc is gated out
     assert(out(1L).contains("<EMAIL>") && !out(1L).contains("a@b.io"))
-  }
-
-  test("orc sink round-trips; filters and pruning reach the ORC scan") {
-    val dir = Files.createTempDirectory("graft-orc").toFile
-    dir.deleteOnExit()
-    val df = (0 until 1000).map(i => (i.toLong, s"v$i", i % 10)).toDF("id", "v", "bucket")
-    graft.sources.Sinks.writeOrc(df, dir.getAbsolutePath)
-    val back = spark.read.orc(dir.getAbsolutePath)
-    assert(back.count() == 1000)
-    val plan = back.filter(col("id") > 990).select("id")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(id), GreaterThan(id,990)"), plan)
-    assert(plan.contains("ReadSchema: struct<id:bigint>"), plan)
   }
 
   test("jdbcTemplate round-trips a MotoGP-shaped table through embedded Derby") {
@@ -287,42 +224,5 @@ class SinksSpec extends SparkSpec {
       Sinks.writeParquetBloom(df, dir.toString, Nil))
     intercept[IllegalArgumentException](
       Sinks.writeParquetBloom(df, dir.toString, Seq("nope")))
-  }
-
-  test("publishVersion: readers see committed versions only; GC keeps the window") {
-    val root = Files.createTempDirectory("graft-publish").toString
-    // before any publish: explicit failure, not an empty frame
-    intercept[IllegalStateException](Sinks.readCurrent(spark, root))
-    val v1 = Sinks.publishVersion(Seq((1L, "a")).toDF("id", "x"), root)
-    assert(v1 == 1L && Sinks.currentVersion(root).contains(1L))
-    assert(Sinks.readCurrent(spark, root).as[(Long, String)].collect().toSet ==
-      Set((1L, "a")))
-    val v2 = Sinks.publishVersion(Seq((2L, "b"), (3L, "c")).toDF("id", "x"), root)
-    assert(v2 == 2L)
-    assert(Sinks.readCurrent(spark, root).as[(Long, String)].collect().toSet ==
-      Set((2L, "b"), (3L, "c")))
-    // a crashed publish = data directory written, pointer untouched:
-    // readers stay on the committed version
-    Seq((9L, "junk")).toDF("id", "x").write.parquet(s"$root/v=3")
-    assert(Sinks.currentVersion(root).contains(2L))
-    assert(Sinks.readCurrent(spark, root).as[(Long, String)].collect().toSet ==
-      Set((2L, "b"), (3L, "c")))
-    // the next successful publish supersedes the orphan (version
-    // numbers grow monotonically past it) and GC enforces the window
-    val v4 = Sinks.publishVersion(Seq((4L, "d")).toDF("id", "x"), root,
-      keepVersions = 2)
-    assert(v4 == 4L)
-    assert(Sinks.readCurrent(spark, root).as[(Long, String)].collect().toSet ==
-      Set((4L, "d")))
-    val dirs = new java.io.File(root).listFiles().map(_.getName)
-      .filter(_.startsWith("v=")).toSet
-    assert(dirs == Set("v=4", "v=3")) // newest keepVersions committed-or-superseded
-    // the PREVIOUS committed version window: re-publishing keeps rolling
-    Sinks.publishVersion(Seq((5L, "e")).toDF("id", "x"), root, keepVersions = 1)
-    val dirs2 = new java.io.File(root).listFiles().map(_.getName)
-      .filter(_.startsWith("v=")).toSet
-    assert(dirs2 == Set("v=5"))
-    assert(Sinks.readCurrent(spark, root).as[(Long, String)].collect().toSet ==
-      Set((5L, "e")))
   }
 }

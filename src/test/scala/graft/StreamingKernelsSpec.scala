@@ -268,34 +268,6 @@ class StreamingKernelsSpec extends SparkSpec {
     assert(docs.forall { case (id, _, lang) => streamed(id) == lang })
   }
 
-  test("k-means assignment: stateless stream projection equals batch fitAssign") {
-    import graft.operators.KMeans
-    val vecs = (0 until 60).map { i =>
-      val c = i % 3
-      val base = Array.fill(4)(0.0f); base(c) = 1.0f
-      (i.toLong, base.map(v => v + (i % 7) * 0.001f).toSeq)
-    }
-    val df = vecs.toDF("vec_id", "vec")
-    // offline fit, then the centroid matrix rides into the streaming
-    // query as a literal — assignRows is a pure projection
-    val cents = KMeans.fitCentroids(df, "vec", "vec_id", k = 3, iters = 3)
-    val batch = KMeans.fitAssign(df, "vec", "vec_id", k = 3, iters = 3)
-      .as[(Long, Long)].collect().toMap
-
-    val input = MemoryStream[(Long, Seq[Float])](spark, numPartitions = 1)
-    val q = KMeans.assignRows(input.toDS().toDF("vec_id", "vec"),
-        "vec", "vec_id", cents)
-      .writeStream.format("memory").queryName("km_stream")
-      .outputMode("append").start()
-    input.addData(vecs: _*)
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("km_stream").as[(Long, Long)].collect().toMap
-    assert(streamed == batch)
-    // the clustering did real work: 3 distinct clusters in play
-    assert(streamed.values.toSet.size == 3)
-  }
-
   test("crawl cleaning front-end: html_extract + quality rules + url_parts, stream equals batch") {
     // the r13 crawl kernels are stateless codegen projections — the
     // exact shape a 24/7 ingest query runs per micro-batch page

@@ -1,0 +1,102 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+/** Keeps test-only code out of the main jar. A `private[graft]`
+  * definition that no other main code references exists only for the
+  * specs: a reference implementation, a fixture builder or an accessor.
+  * Such a helper belongs in `src/test`. The check is a name scan over
+  * the sources with comments removed, so a helper that shares its name
+  * with live code slips through; it never flags live code.
+  */
+class TestSeamSpec extends AnyFunSuite {
+  /** Needs the private `EncState` of `PdfKernels`, so it cannot move. */
+  private val allowed = Set("fixtureEncryptor")
+
+  /** `src` with every comment blanked (newlines kept); string and
+    * character literals stay, since an interpolated string can
+    * reference a definition. */
+  private def stripComments(src: String): String = {
+    val out = new StringBuilder(src.length)
+    var i = 0
+    def blank(from: Int, until: Int): Unit =
+      (from until until).foreach(k => out += (if (src(k) == '\n') '\n' else ' '))
+    while (i < src.length) {
+      if (src.startsWith("//", i)) {
+        val end = src.indexOf('\n', i) match { case -1 => src.length; case e => e }
+        blank(i, end); i = end
+      } else if (src.startsWith("/*", i)) {
+        // Scala block comments nest
+        var depth = 0
+        var j = i
+        while (j < src.length && (depth > 0 || j == i)) {
+          if (src.startsWith("/*", j)) { depth += 1; j += 2 }
+          else if (src.startsWith("*/", j)) { depth -= 1; j += 2 }
+          else j += 1
+        }
+        blank(i, j); i = j
+      } else if (src.startsWith("\"\"\"", i)) {
+        var j = src.indexOf("\"\"\"", i + 3) match { case -1 => src.length; case e => e + 3 }
+        while (j < src.length && src(j) == '"') j += 1 // """a"""" ends at the last quote
+        out ++= src.substring(i, j); i = j
+      } else if (src(i) == '"') {
+        var j = i + 1
+        while (j < src.length && src(j) != '"' && src(j) != '\n')
+          j += (if (src(j) == '\\') 2 else 1)
+        j = math.min(j + 1, src.length)
+        out ++= src.substring(i, j); i = j
+      } else if (src(i) == '\'' && i + 2 < src.length &&
+          (src(i + 2) == '\'' || src(i + 1) == '\\')) {
+        // a character literal: 'x', '\n', '\''
+        val from = if (src(i + 1) == '\\') i + 3 else i + 2
+        val end = src.indexOf('\'', from) match { case -1 => src.length; case e => e + 1 }
+        out ++= src.substring(i, end); i = end
+      } else { out += src(i); i += 1 }
+    }
+    out.toString
+  }
+
+  private val decl =
+    """private\[graft\]\s+(?:(?:final|lazy|override|implicit)\s+)*(?:def|val|var)\s+([A-Za-z_]\w*)""".r
+
+  test("every private[graft] def or val in src/main is referenced by other src/main code") {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val sources =
+      try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+        .map(p => p.toString -> stripComments(java.nio.file.Files.readString(p)))
+      finally files.close()
+    val unreferenced = for {
+      (path, src) <- sources
+      m <- decl.findAllMatchIn(src).toSeq
+      name = m.group(1)
+      if !allowed(name)
+      body = declarationSpan(src, m.start)
+      ref = ("\\b" + java.util.regex.Pattern.quote(name) + "\\b").r
+      if !sources.exists { case (p, s) =>
+        ref.findAllMatchIn(s).exists(r => p != path || r.start < body._1 || r.start >= body._2)
+      }
+    } yield s"$path: $name"
+    if (unreferenced.nonEmpty)
+      fail("private[graft] definitions that only specs reach; move them to src/test:" +
+        unreferenced.mkString("\n  ", "\n  ", ""))
+  }
+
+  /** [start, end) of the declaration beginning at `at`: its first line
+    * through the line before the next non-blank line indented no
+    * deeper, a closing bracket at its own indentation included. */
+  private def declarationSpan(src: String, at: Int): (Int, Int) = {
+    val lineStart = src.lastIndexOf('\n', at) + 1
+    def indent(from: Int): Int = { var k = from; while (k < src.length && src(k) == ' ') k += 1; k - from }
+    val own = indent(lineStart)
+    var next = src.indexOf('\n', at)
+    while (next >= 0) {
+      val ls = next + 1
+      val ind = indent(ls)
+      val c = if (ls + ind < src.length) src(ls + ind) else '\n'
+      if (c != '\n' && (ind < own || (ind == own && c != '}' && c != ')'))) return (lineStart, ls)
+      next = src.indexOf('\n', ls)
+    }
+    (lineStart, src.length)
+  }
+}

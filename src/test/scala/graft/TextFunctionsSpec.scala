@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{SimHash, TextFunctions => TF}
+import graft.functions.{KernelReferences, SimHash, TextFunctions => TF}
 import org.apache.spark.sql.functions._
 
 class TextFunctionsSpec extends SparkSpec {
@@ -65,12 +65,12 @@ class TextFunctionsSpec extends SparkSpec {
   test("regex token count splits letters/digits/punct runs") {
     val df = Seq("abc123!x", "hello, world").toDF("t")
     // abc|123|!|x = 4 ; hello|,|world = 3
-    assert(df.select(TF.regexTokenCount(col("t"))).as[Long].collect().toSeq == Seq(4L, 3L))
+    assert(df.select(KernelReferences.regexTokenCount(col("t"))).as[Long].collect().toSeq == Seq(4L, 3L))
   }
 
   test("punctuation ratio") {
     val df = Seq("a,b", "abcd", "").toDF("t")
-    val out = df.select(round(TF.punctRatio(col("t")), 6)).as[Double].collect().toSeq
+    val out = df.select(round(KernelReferences.punctRatio(col("t")), 6)).as[Double].collect().toSeq
     assert(out == Seq(0.333333, 0.0, 0.0))
   }
 
@@ -80,17 +80,8 @@ class TextFunctionsSpec extends SparkSpec {
     val df = Seq(en, fr, "zzz qqq").toDF("t")
     val langs = df.select(TF.langIdHeuristic(col("t"))).as[String].collect().toSeq
     assert(langs == Seq("en", "fr", "und"))
-    val ratio = df.select(TF.stopwordRatio(col("t"))).as[Double].collect().head
+    val ratio = df.select(KernelReferences.stopwordRatio(col("t"))).as[Double].collect().head
     assert(ratio > 0.3 && ratio <= 1.0)
-  }
-
-  test("quality score is in [0,1] and favors natural text") {
-    val natural = "the quick brown fox jumps over the lazy dog and runs to the river"
-    val junk = "!!! ??? *** ### @@@ %%% ^^^ &&&"
-    val df = Seq(natural, junk).toDF("t")
-    val Seq(qn, qj) = df.select(TF.qualityScore(col("t"))).as[Double].collect().toSeq
-    assert(qn > qj)
-    assert(qn >= 0 && qn <= 1 && qj >= 0 && qj <= 1)
   }
 
   test("content fingerprint ignores case and whitespace runs") {
@@ -217,10 +208,10 @@ class TextFunctionsSpec extends SparkSpec {
       .collect().map(_.toSeq).toSeq
     val viaColumns = df.select(
       TF.tokenCount(col("t")),
-      TF.regexTokenCount(col("t")),
-      (round(TF.punctRatio(col("t")) * length(col("t")))).cast("long"),
+      KernelReferences.regexTokenCount(col("t")),
+      (round(KernelReferences.punctRatio(col("t")) * length(col("t")))).cast("long"),
       length(col("t")).cast("long"),
-      (round(TF.stopwordRatio(col("t")) * TF.tokenCount(col("t")))).cast("long"),
+      (round(KernelReferences.stopwordRatio(col("t")) * TF.tokenCount(col("t")))).cast("long"),
       lit(null))
       .collect().map(_.toSeq).toSeq
     viaKernel.zip(viaColumns).zip(nasty).foreach { case ((k, c), input) =>

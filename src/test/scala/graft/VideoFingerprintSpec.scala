@@ -23,7 +23,7 @@ class VideoFingerprintSpec extends AnyFunSuite {
   /** One flat-gray single-MCU JPEG: decoded pixel value = 128 + v. */
   private def grayJpeg(v: Int): Array[Byte] = {
     require(v >= 0 && v <= 127)
-    val (head, _, _, _) = QueriesTestSeam.jpegFixtureHead
+    val (head, _, _, _) = Queries.jpegFixture
     unhex(head) ++ Array((((v >> 2) + 224) & 0xff).toByte,
       (((v & 3) * 64 + 43) & 0xff).toByte, 0xff.toByte, 0xd9.toByte)
   }
@@ -135,10 +135,4 @@ class VideoFingerprintSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 2L)))
   }
-}
-
-/** Test seam: the jpeg fixture head lives in Queries (private); expose
-  * the constant for the video fingerprint builders. */
-object QueriesTestSeam {
-  def jpegFixtureHead: (String, String, Int, Int) = Queries.jpegFixtureForTests
 }
