@@ -1229,7 +1229,7 @@ object Queries {
       val emb = t(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 16)
       val out = Similarity.lshTopK(emb, q,
-        "embedding", "vec_id", k = 5, nBits = 4, multiProbe = true)
+        "embedding", "vec_id", k = 5, nBits = 4)
       val truth = Similarity.bruteForceTopK(emb, q, "embedding", "vec_id", k = 5)
       Ops.recallGate(out, truth, Seq("query_id", "corpus_id"), floor = 0.4)
         .select(col("query_id").cast("bigint").as("query_id"),
@@ -2173,8 +2173,7 @@ object Queries {
     * over documents (null/distinct/min/max per column), unpivoted from
     * the single aggregated row. The `lang` column carries real NULLs at
     * every SF, so the null accounting is load-bearing, and exact
-    * distinct counts keep it hash-checkable (the 100 TB variant flips
-    * `exactDistinct = false` — see the operator doc). */
+    * distinct counts keep it hash-checkable. */
   private val qProfile = Q("q_profile",
     (s, dir) => Ops.profileColumns(t(s, dir, "documents"),
       Seq("doc_id", "lang", "source", "n_chars")),
@@ -4209,7 +4208,7 @@ object Queries {
         docs.filter(pmod(col("doc_id"), lit(97)) =!= 0),
         docs.filter(pmod(col("doc_id"), lit(97)) === 0),
         "text", "doc_id", n = 3, minShared = 2,
-        expectedGrams = 1L << 16, fpp = 0.01, broadcastVerify = false)
+        expectedGrams = 1L << 16, fpp = 0.01)
         .select(col("doc_id").cast("bigint").as("doc_id"), col("n_shared"))
     },
     qDecontaminate.oracle)
@@ -4222,7 +4221,7 @@ object Queries {
     */
   private val qLmScore = Q("q_lm_score",
     (s, dir) => LmQuality.selfScore(t(s, dir, "documents"), "text", "doc_id",
-        alpha = 0.5, minCount = 2, persistModel = true)
+        alpha = 0.5, minCount = 2)
       .select(col("id").cast("bigint").as("doc_id"),
         col("n_bigrams"), col("avg_logprob")),
     Some("""WITH tk AS (
@@ -4549,7 +4548,7 @@ object Queries {
       val changes = chA.unionByName(chB).unionByName(chC).unionByName(chNew)
       Dimensions.scd2ApplyOrdered(closedHist.unionByName(open), changes,
           Seq("c_custkey"), Seq("segment"), "valid_from", "valid_to",
-          "eff", orderCol = Some("ord"))
+          "eff", "ord")
         .select(col("c_custkey").cast("bigint").as("c_custkey"),
           col("segment"), col("valid_from"),
           coalesce(col("valid_to"), to_date(lit("9999-12-31"))).as("valid_to"))
@@ -4756,7 +4755,7 @@ object Queries {
       val ratios = Importance.fitLogRatios(
         docs.filter(col("lang") === "en"),
         docs.filter(col("lang") =!= "en" || col("lang").isNull),
-        "text", buckets = 256, persistModel = true)
+        "text", buckets = 256)
       Importance.selectTopK(
         Importance.score(docs, "text", "doc_id", ratios, buckets = 256)
           .select(col("doc_id").cast("bigint").as("doc_id"),
@@ -4956,7 +4955,7 @@ object Queries {
     val ratios = Importance.fitLogRatios(
       docs.filter(col("lang") === "en"),
       docs.filter(col("lang") =!= "en" || col("lang").isNull),
-      "text", buckets = 256, persistModel = true)
+      "text", buckets = 256)
     Importance.score(docs, "text", "doc_id", ratios, buckets = 256)
       .join(docs.select(col("doc_id"),
         when(col("lang") === "en", 1L).otherwise(0L).as("y")), Seq("doc_id"))

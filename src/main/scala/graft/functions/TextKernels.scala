@@ -35,7 +35,6 @@ object TextKernels {
       t == Character.OTHER_NUMBER
   }
 
-  // stopword lists (must stay in sync with TextFunctions.Stopwords*)
   private val En = TextFunctions.StopwordsEn.toSet
   private val Fr = TextFunctions.StopwordsFr.toSet
   private val Es = TextFunctions.StopwordsEs.toSet
@@ -179,10 +178,8 @@ object TextKernels {
     tokens
   }
 
-  // gopher stopwords (must stay in sync with TextFunctions.GopherStopwords)
-  private val GopherStops: Array[String] =
-    Array("the", "be", "to", "of", "and", "that", "have", "with")
-  private val Bullets: Set[Int] = Set('•'.toInt, '‣'.toInt, '-'.toInt, '*'.toInt)
+  private val GopherStops: Array[String] = TextFunctions.GopherStopwords.toArray
+  private val Bullets: Set[Int] = TextFunctions.BulletChars.map(_.codePointAt(0)).toSet
 
   /** SPACE-trim bounds of [from, until) — SQL `trim` semantics (0x20
     * only), shared by the line-level rules. */

@@ -212,17 +212,16 @@ object Classifier {
     * documents with no words keep NULL score/predicted — never a
     * silent 0.5 that would rank as "uncertain".
     *
-    * `loopPartitions` sizes the TRAINING LOOP, not the corpus scan:
-    * the loop runs over the per-doc incidence frame (≤ `buckets`+3
-    * values per doc — orders of magnitude smaller than the text it
-    * came from), so partitioning it like the corpus would pay 16
-    * iterations of task-launch overhead for near-empty tasks. Default
-    * 8 fits up to ~10^8 docs; raise it for more — it caps nothing,
-    * it only sets the loop's parallelism. */
+    * The training loop runs over the per-doc incidence frame split
+    * [[KMeans.LoopPartitions]] ways, not partitioned like the corpus:
+    * the frame holds ≤ `buckets`+3 values per doc — orders of
+    * magnitude smaller than the text it came from — so corpus-wide
+    * partitioning would pay 16 iterations of task-launch overhead for
+    * near-empty tasks. The width caps nothing; it only sets the loop's
+    * parallelism. */
   def trainScore(docs: DataFrame, textCol: String, idCol: String,
                  labelCol: Column, buckets: Int = 256, iters: Int = 8,
-                 lr: Double = 2.0, loopPartitions: Int = 8): DataFrame = {
-    require(loopPartitions >= 1, s"loopPartitions must be >= 1, got $loopPartitions")
+                 lr: Double = 2.0): DataFrame = {
     // zCol's long accumulator needs buckets·(lr·iters)·1e12 « 2^63;
     // lr·iters bounds max|w| a priori (delta-rule step ≤ lr per iter)
     requireFixedPointHeadroom(lr * iters.max(1), buckets,
@@ -231,7 +230,7 @@ object Classifier {
     // ONE corpus pass builds the cached per-doc frame every iteration
     // and the scoring pass read back
     val perDoc = perDocFeatures(docs, textCol, idCol, labelCol, buckets)
-      .repartition(loopPartitions, col("__id"))
+      .repartition(KMeans.LoopPartitions, col("__id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val w = train(perDoc, buckets, iters, lr)

@@ -20,25 +20,20 @@ object Decontaminate {
 
   /** Training documents sharing at least `minShared` distinct word
     * `n`-grams with any benchmark document. Returns
-    * (doc_id, n_shared) — join it back or anti-join to drop.
-    *
-    * Set `broadcastBench = false` when the benchmark n-gram set is too
-    * large for one executor (rare; it then runs as a shuffle join —
-    * same answer, bigger exchange).
+    * (doc_id, n_shared) — join it back or anti-join to drop. A
+    * benchmark n-gram set too large to broadcast takes [[overlapBloom]].
     */
   def overlap(train: DataFrame, bench: DataFrame,
               textCol: String, idCol: String,
-              n: Int = 5, minShared: Int = 1,
-              broadcastBench: Boolean = true): DataFrame = {
+              n: Int = 5, minShared: Int = 1): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     val benchGrams = bench
       .select(explode(TF.wordNgrams(col(textCol), n)).as("__gram"))
       .distinct()
-    val benchSide = if (broadcastBench) broadcast(benchGrams) else benchGrams
     train
       .select(col(idCol).as("doc_id"),
         explode(TF.wordNgrams(col(textCol), n)).as("__gram"))
-      .join(benchSide, Seq("__gram"))
+      .join(broadcast(benchGrams), Seq("__gram"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).cast("long").as("n_shared"))
       .filter(col("n_shared") >= minShared)
@@ -62,8 +57,7 @@ object Decontaminate {
                    textCol: String, idCol: String,
                    n: Int = 5, minShared: Int = 1,
                    expectedGrams: Long = 1L << 20,
-                   fpp: Double = 0.01,
-                   broadcastVerify: Boolean = true): DataFrame = {
+                   fpp: Double = 0.01): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     require(fpp > 0.0 && fpp < 1.0, s"fpp must be in (0, 1), got $fpp")
     import org.apache.spark.sql.GraftBridge
@@ -93,15 +87,14 @@ object Decontaminate {
       Literal(bytes, BinaryType),
       GraftBridge.expression(xxhash64(col("__gram")))))
     // at the scale that MOTIVATES the Bloom prune the gram set cannot
-    // broadcast for verification either — broadcastVerify = false keeps
-    // it a shuffle join, where only the Bloom SURVIVORS (true hits +
-    // fpp of the stream) ever exchange
-    val verifySide = if (broadcastVerify) broadcast(benchGrams) else benchGrams
+    // broadcast for verification either — no broadcast hint, so past the
+    // optimizer's threshold it is a shuffle join, where only the Bloom
+    // SURVIVORS (true hits + fpp of the stream) ever exchange
     train
       .select(col(idCol).as("doc_id"),
         explode(TF.wordNgrams(col(textCol), n)).as("__gram"))
       .filter(mightContain)
-      .join(verifySide, Seq("__gram"))
+      .join(benchGrams, Seq("__gram"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).cast("long").as("n_shared"))
       .filter(col("n_shared") >= minShared)

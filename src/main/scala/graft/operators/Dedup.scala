@@ -61,15 +61,6 @@ object Dedup {
       CollectSmallest(GraftBridge.expression(c), limit).toAggregateExpression())
   }
 
-  /** [[collectSmallest]] with set semantics: duplicate values occupy one
-    * slot (the `limit` smallest DISTINCT values). Small limits only —
-    * the dedup check is linear in the buffer. */
-  def collectSmallestDistinct(c: Column, limit: Int): Column = {
-    import org.apache.spark.sql.{CollectSmallest, GraftBridge}
-    GraftBridge.column(CollectSmallest(GraftBridge.expression(c), limit,
-      distinct = true).toAggregateExpression())
-  }
-
   /** MinHash + LSH candidate pairs with exact-Jaccard verification (over
     * 64-bit shingle hashes — equal to string-set Jaccard up to hash
     * collisions).
@@ -804,7 +795,7 @@ object Dedup {
       .select(col("__gh"), lit(1).as("__dup"))
     val flagged =
       if (saltBuckets > 1)
-        Ops.saltedJoin(grams, dupGrams, Seq("__gh"), saltBuckets, "left")
+        Ops.saltedJoin(grams, dupGrams, Seq("__gh"), saltBuckets)
       else grams.join(dupGrams, Seq("__gh"), "left")
     flagged
       .groupBy(col("doc_id"))

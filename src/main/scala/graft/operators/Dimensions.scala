@@ -12,12 +12,10 @@ import org.apache.spark.sql.functions._
   * without a table format; the caller rewrites the dimension path —
   * at dimension scale that rewrite is the cheap part of the job).
   *
-  * Validation: every operator checks its input invariants eagerly by
-  * default (each check is a real Spark job over the small input —
-  * the right default for a dimension tool, where a silently broken
-  * invariant corrupts history forever). Pre-validated CDC pipelines
-  * opt out with `validate = false`, which makes plan construction
-  * job-free (DimensionsSpec asserts this with a job-count listener).
+  * Validation: every operator checks its input invariants eagerly
+  * (each check is a real Spark job over the small input — the right
+  * rule for a dimension tool, where a silently broken invariant
+  * corrupts history forever).
   */
 object Dimensions {
 
@@ -43,10 +41,8 @@ object Dimensions {
     *
     * One full-outer join on the keys — with both snapshots bucketed on
     * them, zero exchanges. `identical` rows (the overwhelming bulk of
-    * any recrawl) are DROPPED by default: emitting them would
-    * materialize the whole corpus to say "nothing happened";
-    * `includeIdentical = true` restores Kettle's full flagged output
-    * for callers that feed a flag-dispatching router.
+    * any recrawl) are DROPPED: emitting them would materialize the
+    * whole corpus to say "nothing happened".
     *
     * Comparison is null-safe per column (`<=>`): a value appearing or
     * disappearing is a change, two NULLs are not. Rows flagged `new` /
@@ -54,44 +50,34 @@ object Dimensions {
     * exactly the payload the downstream apply needs.
     *
     * @param compareCols columns whose difference makes a row `changed`
-    *                    (defaults to every non-key column of `newDf`)
     * @return keys ++ compareCols ++ `change` ∈ new|deleted|changed
-    *         (|identical)
     */
   def snapshotDiff(oldDf: DataFrame, newDf: DataFrame, keys: Seq[String],
-                   compareCols: Seq[String] = Nil,
-                   includeIdentical: Boolean = false,
-                   validate: Boolean = true): DataFrame = {
+                   compareCols: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "snapshotDiff needs at least one key column")
-    val cmp = if (compareCols.nonEmpty) compareCols
-              else newDf.columns.toSeq.diff(keys)
-    require(cmp.nonEmpty, "snapshotDiff needs at least one compare column")
+    require(compareCols.nonEmpty, "snapshotDiff needs at least one compare column")
     // a duplicated key on either side fans out through the full-outer
-    // join and emits phantom change rows — same eager default (and same
-    // opt-out for pre-validated feeds) as upsert/scd2Apply
-    if (validate) {
-      requireUnique(oldDf, keys, "snapshotDiff: duplicate key in old snapshot")
-      requireUnique(newDf, keys, "snapshotDiff: duplicate key in new snapshot")
-    }
-    val o = oldDf.select((keys ++ cmp).map(col): _*)
+    // join and emits phantom change rows — the same eager check as
+    // upsert/scd2Apply
+    requireUnique(oldDf, keys, "snapshotDiff: duplicate key in old snapshot")
+    requireUnique(newDf, keys, "snapshotDiff: duplicate key in new snapshot")
+    val o = oldDf.select((keys ++ compareCols).map(col): _*)
       .withColumn("__in_old", lit(1))
-      .withColumnsRenamed(cmp.map(c => c -> s"__old_$c").toMap)
-    val n = newDf.select((keys ++ cmp).map(col): _*)
+      .withColumnsRenamed(compareCols.map(c => c -> s"__old_$c").toMap)
+    val n = newDf.select((keys ++ compareCols).map(col): _*)
       .withColumn("__in_new", lit(1))
-    val differs = cmp.map(c => !(col(c) <=> col(s"__old_$c")))
+    val differs = compareCols.map(c => !(col(c) <=> col(s"__old_$c")))
       .reduce(_ || _)
-    val flagged = n.join(o, keys, "full_outer")
+    n.join(o, keys, "full_outer")
       .withColumn("change",
         when(col("__in_old").isNull, lit("new"))
           .when(col("__in_new").isNull, lit("deleted"))
           .when(differs, lit("changed"))
           .otherwise(lit("identical")))
-    val filtered =
-      if (includeIdentical) flagged
-      else flagged.filter(col("change") =!= "identical")
-    filtered.select(keys.map(col) ++
-      cmp.map(c => when(col("change") === "deleted", col(s"__old_$c"))
-        .otherwise(col(c)).as(c)) :+ col("change"): _*)
+      .filter(col("change") =!= "identical")
+      .select(keys.map(col) ++
+        compareCols.map(c => when(col("change") === "deleted", col(s"__old_$c"))
+          .otherwise(col(c)).as(c)) :+ col("change"): _*)
   }
 
   /** Keyed upsert: `updates` rows win on key collision, `existing`
@@ -101,13 +87,12 @@ object Dimensions {
     * Schemas must agree by name ([[DataFrame.unionByName]] enforces).
     */
   def upsert(existing: DataFrame, updates: DataFrame,
-             keys: Seq[String], validate: Boolean = true): DataFrame = {
+             keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "upsert needs at least one key column")
     // duplicate update keys would BOTH survive the union, breaking the
     // keyed-dimension invariant this operator exists to maintain —
     // enforced like scd2Apply's change batch (dedupe the CDC feed first)
-    if (validate)
-      requireUnique(updates, keys, "upsert: multiple update rows for one key")
+    requireUnique(updates, keys, "upsert: multiple update rows for one key")
     val keyset = updates.select(keys.map(col): _*).distinct()
     updates.unionByName(existing.join(keyset, keys, "left_anti"))
   }
@@ -138,7 +123,7 @@ object Dimensions {
     */
   def scd2Apply(dim: DataFrame, changes: DataFrame, keys: Seq[String],
                 attrCols: Seq[String], fromCol: String, toCol: String,
-                effectiveCol: String, validate: Boolean = true): DataFrame = {
+                effectiveCol: String): DataFrame = {
     require(keys.nonEmpty, "scd2Apply needs at least one key column")
     require(attrCols.nonEmpty, "scd2Apply needs at least one tracked attribute")
 
@@ -155,21 +140,19 @@ object Dimensions {
       (keys.map(col) ++ attrCols.map(c => col(c).as(s"__new_$c")) :+
         col(effectiveCol).as("__eff")): _*)
       .withColumn("__has_change", lit(true))
-    if (validate) {
-      // one change per key per batch, or "which version wins" is undefined
-      requireUnique(ch, keys,
-        "scd2Apply: multiple changes for one key in a single batch " +
-          "(use scd2ApplyOrdered for ordered multi-change batches)")
-      // a NULL effective date has no defined close/open point — reject it
-      // loudly rather than silently treating the change as a no-op
-      require(ch.filter(col("__eff").isNull).isEmpty,
-        "scd2Apply: changes with a NULL effective value: " +
-          ch.filter(col("__eff").isNull).select(keys.map(col): _*)
-            .limit(5).collect().mkString(", "))
-      // two OPEN rows for one key is a corrupt dimension — the full-outer
-      // join would silently fan the change out into duplicate versions
-      requireUnique(open, keys, "scd2Apply: dimension has multiple OPEN rows for one key")
-    }
+    // one change per key per batch, or "which version wins" is undefined
+    requireUnique(ch, keys,
+      "scd2Apply: multiple changes for one key in a single batch " +
+        "(use scd2ApplyOrdered for ordered multi-change batches)")
+    // a NULL effective date has no defined close/open point — reject it
+    // loudly rather than silently treating the change as a no-op
+    require(ch.filter(col("__eff").isNull).isEmpty,
+      "scd2Apply: changes with a NULL effective value: " +
+        ch.filter(col("__eff").isNull).select(keys.map(col): _*)
+          .limit(5).collect().mkString(", "))
+    // two OPEN rows for one key is a corrupt dimension — the full-outer
+    // join would silently fan the change out into duplicate versions
+    requireUnique(open, keys, "scd2Apply: dimension has multiple OPEN rows for one key")
 
     val joined = open.join(ch, keys, "full_outer")
     val changed = attrCols
@@ -204,15 +187,16 @@ object Dimensions {
     *
     * Semantics per key: the version stream is the key's OPEN dim row
     * (if any) followed by its changes ordered by (`effectiveCol`,
-    * `orderCol` if given). Consecutive stream entries with null-safely
+    * `orderCol`). Consecutive stream entries with null-safely
     * equal tracked attributes collapse (a change that repeats the
     * current version is a no-op); each surviving entry becomes a
     * version valid from its effective value until the next surviving
     * entry's, the last staying open (NULL `toCol`). Two changes with
     * the same effective value produce a zero-width `[eff, eff)` version
-    * for the earlier one — the standard intra-batch-correction shape —
-    * and REQUIRE `orderCol` to adjudicate which is earlier (without
-    * one, validation rejects same-key-same-eff ties as ambiguous).
+    * for the earlier one — the standard intra-batch-correction shape;
+    * `orderCol` adjudicates which is earlier, and validation rejects
+    * changes tied on all three (key, effective value, order) as
+    * ambiguous.
     * CLOSED history passes through verbatim, exactly as [[scd2Apply]].
     *
     * Scale shape: the change stream unions with the open slice and
@@ -223,33 +207,27 @@ object Dimensions {
     */
   def scd2ApplyOrdered(dim: DataFrame, changes: DataFrame, keys: Seq[String],
                        attrCols: Seq[String], fromCol: String, toCol: String,
-                       effectiveCol: String, orderCol: Option[String] = None,
-                       validate: Boolean = true): DataFrame = {
+                       effectiveCol: String, orderCol: String): DataFrame = {
     require(keys.nonEmpty, "scd2ApplyOrdered needs at least one key column")
     require(attrCols.nonEmpty, "scd2ApplyOrdered needs at least one tracked attribute")
 
     val closed = dim.filter(col(toCol).isNotNull)
     val open = dim.filter(col(toCol).isNull)
 
-    val ordCol = orderCol.map(col).getOrElse(lit(0L)).cast("long")
     val ch = changes.select(
       (keys.map(col) ++ attrCols.map(col) :+
-        col(effectiveCol).as("__eff") :+ ordCol.as("__ord")): _*)
+        col(effectiveCol).as("__eff") :+ col(orderCol).cast("long").as("__ord")): _*)
       .withColumn("__is_change", lit(1))
-    if (validate) {
-      require(ch.filter(col("__eff").isNull).isEmpty,
-        "scd2ApplyOrdered: changes with a NULL effective value: " +
-          ch.filter(col("__eff").isNull).select(keys.map(col): _*)
-            .limit(5).collect().mkString(", "))
-      // exact order ties are unresolvable — "which change is current"
-      // would depend on partition layout
-      requireUnique(ch, keys :+ "__eff" :+ "__ord",
-        "scd2ApplyOrdered: tied changes (same key, effective value" +
-          orderCol.fold(" — pass orderCol to break same-day ties")(o =>
-            s", $o") + ")")
-      requireUnique(open, keys,
-        "scd2ApplyOrdered: dimension has multiple OPEN rows for one key")
-    }
+    require(ch.filter(col("__eff").isNull).isEmpty,
+      "scd2ApplyOrdered: changes with a NULL effective value: " +
+        ch.filter(col("__eff").isNull).select(keys.map(col): _*)
+          .limit(5).collect().mkString(", "))
+    // exact order ties are unresolvable — "which change is current"
+    // would depend on partition layout
+    requireUnique(ch, keys :+ "__eff" :+ "__ord",
+      s"scd2ApplyOrdered: tied changes (same key, effective value, $orderCol)")
+    requireUnique(open, keys,
+      "scd2ApplyOrdered: dimension has multiple OPEN rows for one key")
 
     // seed entry 0 = the key's open row; __is_change=0 sorts it before
     // every change regardless of effective values, and __from carries
@@ -303,9 +281,8 @@ object Dimensions {
     * fact matches AT MOST one dim row — the plan is a plain equi-join
     * on the keys with the interval test as a residual filter (no
     * window, no dedup, dim side broadcasts at dimension scale). That
-    * disjointness is the dimension invariant `validate = true` enforces
-    * on the write path; a corrupt dim with overlapping versions would
-    * fan facts out here.
+    * disjointness is the dimension invariant the write path validates;
+    * a corrupt dim with overlapping versions would fan facts out here.
     *
     * `factKeys`/`dimKeys` pair positionally (fact `o_custkey` ⋈ dim
     * `c_custkey`). The dim's key and validity columns are dropped from

@@ -39,29 +39,18 @@ object Importance {
     * ln(p_source(b)) with add-one smoothing — `buckets` rows, the
     * whole model.
     *
-    * `persistModel = true` (r17 opt, same contract as
-    * [[LmQuality.train]]) eagerly localCheckpoints the ratio frame:
-    * the model is ≤ `buckets` rows but its PLAN contains two
-    * corpus-wide fit aggregations, and every downstream reference
-    * (the score join, a calibration min/max, a gate threshold)
-    * re-expands that plan — q_score_gate's un-persisted plan carried
-    * the fit subtree 4× (126 Exchange nodes at sf0.001; guide §3.3
-    * "materialising an intermediate truncates the plan"). On a real
-    * cluster prefer writing the model or `checkpoint()` —
-    * localCheckpoint state dies with an executor.
-    *
-    * Storage-release contract (ADVICE r17): nothing here eagerly
-    * unpersists the checkpointed model — an eager release would be
-    * unsafe the moment two queries share a session (truncated lineage
-    * cannot recompute). The leak is BOUNDED, not JVM-lifetime: the
-    * cached RDD is reachable only through the returned frame, and
-    * Spark's ContextCleaner unpersists checkpoint RDDs once the frame
-    * is garbage-collected; each model is ≤ `buckets` rows (~4 KB at
-    * the default 256) in the interim. Callers that want deterministic
-    * release can still call GraftBridge.unpersistCheckpoint after
-    * their terminal action. */
+    * The ratio frame is eagerly localCheckpointed: the model is
+    * ≤ `buckets` rows but its PLAN contains two corpus-wide fit
+    * aggregations, and every downstream reference (the score join, a
+    * calibration min/max, a gate threshold) would re-expand that plan
+    * — q_score_gate's un-materialized plan carried the fit subtree 4×
+    * (126 Exchange nodes at sf0.001). On a real cluster prefer writing
+    * the model or `checkpoint()` — localCheckpoint state dies with an
+    * executor. The cached RDD is reachable only through the returned
+    * frame, and Spark's ContextCleaner unpersists it once the frame is
+    * garbage-collected. */
   def fitLogRatios(target: DataFrame, source: DataFrame, textCol: String,
-                   buckets: Int, persistModel: Boolean = false): DataFrame = {
+                   buckets: Int): DataFrame = {
     require(buckets >= 2 && buckets <= (1 << 24),
       s"buckets must be in [2, 2^24], got $buckets")
     val spark = target.sparkSession
@@ -74,7 +63,7 @@ object Importance {
       .select(coalesce(col("tt"), lit(0L)).as("tt"),
         coalesce(col("ts"), lit(0L)).as("ts"))
     // dense bucket axis: empty cells still get their smoothed mass
-    val model = spark.range(buckets.toLong).select(col("id").as("b"))
+    spark.range(buckets.toLong).select(col("id").as("b"))
       .join(tc, Seq("b"), "left").join(sc, Seq("b"), "left")
       .crossJoin(broadcast(totals))
       .select(col("b"),
@@ -83,7 +72,7 @@ object Importance {
           log((coalesce(col("cs"), lit(0L)) + lit(1.0)) /
             (col("ts") + lit(buckets.toDouble))))
           .as("lambda"))
-    if (persistModel) model.localCheckpoint(true) else model
+      .localCheckpoint(true)
   }
 
   /** Per-document importance: mean λ over word occurrences, rounded

@@ -36,7 +36,7 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale shape: the quantized (id, vector) points are cached once per
   * fit as one persisted RDD, filled by the seed job (whose first stage
-  * splits the points by id, `loopPartitions` ways). The seed, each
+  * splits the points by id, [[LoopPartitions]] ways). The seed, each
   * farthest-first pick and each Lloyd iteration is ONE narrow
   * `mapPartitions` job over that cache: the k·d-long centroid matrix
   * (the model) rides in the task closure, each partition returns one
@@ -194,34 +194,24 @@ object KMeans {
     next
   }
 
+  /** Partitions of the fit loop's cached points — the loop's
+    * parallelism, not a cap. Size-derived widths were measured and
+    * reverted (OPTIMIZATION_r18.md): one partition at the benched SF
+    * serialized the per-iteration work. */
+  private[operators] val LoopPartitions = 8
+
   /** Fit `iters` Lloyd iterations from farthest-first seeds over the
-    * quantized frame (__id, __qv) in its own partitioning; returns the
-    * centroid matrix (row = centroid id, micro-units). The frame's
-    * points are cached here, once, for the duration of the fit —
-    * callers need not persist it. */
-  def fit(qdf: DataFrame, k: Int, iters: Int): Array[Array[Long]] = {
-    requireFitArgs(k, iters)
-    fitPoints(points(qdf), k, iters)
-  }
-
-  /** [[fit]] over the points of `qdf` hash-split by id
-    * `loopPartitions` ways. The split is an RDD shuffle, so it runs as
-    * the first stage of the seed job; a DataFrame repartition would run
-    * under adaptive execution as a job of its own. */
-  private[operators] def fitLoop(qdf: DataFrame, k: Int, iters: Int,
-                                 loopPartitions: Int): Array[Array[Long]] = {
-    requireFitArgs(k, iters)
-    require(loopPartitions >= 1, s"loopPartitions must be >= 1, got $loopPartitions")
-    fitPoints(points(qdf).keyBy(_.id).partitionBy(new HashPartitioner(loopPartitions)).values,
-      k, iters)
-  }
-
-  private def requireFitArgs(k: Int, iters: Int): Unit = {
+    * quantized frame (__id, __qv), its points hash-split by id
+    * [[LoopPartitions]] ways; returns the centroid matrix (row =
+    * centroid id, micro-units). The points are cached here, once, for
+    * the duration of the fit — callers need not persist them. The
+    * split is an RDD shuffle, so it runs as the first stage of the seed
+    * job; a DataFrame repartition would run under adaptive execution as
+    * a job of its own. */
+  private[operators] def fitLoop(qdf: DataFrame, k: Int, iters: Int): Array[Array[Long]] = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(iters >= 0, s"iters must be >= 0, got $iters")
-  }
-
-  private def fitPoints(pts: RDD[Point], k: Int, iters: Int): Array[Array[Long]] = {
+    val pts = points(qdf).keyBy(_.id).partitionBy(new HashPartitioner(LoopPartitions)).values
     pts.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       var cents = farthestFirst(pts, k)
@@ -242,9 +232,9 @@ object KMeans {
     * cluster) — assignment against the FINAL centroids, exactly the
     * oracle's last CTE. */
   def fitAssign(embs: DataFrame, vecCol: String, idCol: String, k: Int,
-                iters: Int, loopPartitions: Int = 8): DataFrame = {
+                iters: Int): DataFrame = {
     val qdf = quantized(embs, vecCol, idCol)
-    val cents = fitLoop(qdf, k, iters, loopPartitions)
+    val cents = fitLoop(qdf, k, iters)
     qdf.crossJoin(broadcast(cFrame(qdf.sparkSession, cents)))
       .select(col("__id").as(idCol),
         assignCol(col("__qv"), col("__qc")).as("cluster"))

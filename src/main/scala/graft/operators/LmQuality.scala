@@ -23,17 +23,16 @@ import org.apache.spark.sql.functions._
   * Scale shape: training is two hash aggregates over the exploded
   * bigram stream (map-side partial, gram strings collapse to counts
   * before the exchange); scoring joins each document's bigram stream
-  * against the model — broadcast when the pruned model fits (the
-  * normal case: reference LMs are a fixed artifact, pruned to
-  * O(10⁷) rows), shuffle otherwise (`broadcastModel = false`). The
-  * scored stream re-aggregates to one row per document.
+  * against the broadcast model (reference LMs are a fixed artifact,
+  * pruned to O(10⁷) rows). The scored stream re-aggregates to one row
+  * per document.
   */
 object LmQuality {
 
   /** A trained bigram model: pruned bigram counts, head counts, and the
     * scalar vocabulary size / smoothing weight baked into the scoring
-    * formula. The two count frames are unresolved plans — persist or
-    * write them out when scoring many corpora against one model.
+    * formula. Both count frames read the checkpointed count table
+    * [[train]] materializes.
     */
   final case class LmModel(bigrams: DataFrame, heads: DataFrame,
                            vocabSize: Long, alpha: Double)
@@ -41,28 +40,25 @@ object LmQuality {
   /** Train on `corpus`. One pass to count bigrams and heads, one tiny
     * distinct-count for V (the only driver-side scalar).
     *
-    * `persistModel = true` eagerly localCheckpoints the distinct-bigram
-    * count table (the pattern `Decontaminate.overlapBloom` uses): the
-    * corpus-scale bigram aggregate then runs ONCE, and both the pruned
-    * bigram frame and the head derivation read the materialized counts
-    * — without it the c2all subplan re-evaluates once per consuming
-    * branch (no exchange reuse across the two — verified empirically),
-    * i.e. one extra corpus pass for a one-shot train-and-score. Leave
-    * it false when the model frames will be persisted/written anyway.
-    * (localCheckpoint is executor-local — on a real cluster a reliable
-    * `checkpoint()`/write is the durable variant.)
+    * The distinct-bigram count table is eagerly localCheckpointed (the
+    * pattern `Decontaminate.overlapBloom` uses): the corpus-scale
+    * bigram aggregate runs ONCE, and both the pruned bigram frame and
+    * the head derivation read the materialized counts — unmaterialized,
+    * the subplan re-evaluates once per consuming branch (no exchange
+    * reuse across the two), one extra corpus pass. (localCheckpoint is
+    * executor-local — on a real cluster a reliable `checkpoint()`/write
+    * is the durable variant.)
     */
   def train(corpus: DataFrame, textCol: String,
-            alpha: Double = 0.5, minCount: Int = 1,
-            persistModel: Boolean = false): LmModel = {
+            alpha: Double = 0.5, minCount: Int = 1): LmModel = {
     require(alpha > 0.0, s"alpha must be > 0, got $alpha")
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     val bg = corpus.select(explode(TF.allWordNgrams(col(textCol), 2)).as("__b"))
     // heads derive from the DISTINCT-bigram count table (tiny next to
     // the raw stream) — the head aggregation's input shrinks from every
     // bigram occurrence to every distinct bigram
-    val c2allPlan = bg.groupBy(col("__b")).agg(count(lit(1)).as("__n2all"))
-    val c2all = if (persistModel) c2allPlan.localCheckpoint(true) else c2allPlan
+    val c2all = bg.groupBy(col("__b")).agg(count(lit(1)).as("__n2all"))
+      .localCheckpoint(true)
     val bigrams = c2all.filter(col("__n2all") >= minCount)
       .select(col("__b"), col("__n2all").as("__n2"))
     // head counts stay UNPRUNED: pruning removes rare continuations
@@ -82,16 +78,14 @@ object LmQuality {
     * smoothing formula (never NULL, never -∞ — α > 0 guarantees it).
     */
   def score(docs: DataFrame, textCol: String, idCol: String,
-            model: LmModel, broadcastModel: Boolean = true): DataFrame = {
-    val b2 = if (broadcastModel) broadcast(model.bigrams) else model.bigrams
-    val b1 = if (broadcastModel) broadcast(model.heads) else model.heads
+            model: LmModel): DataFrame = {
     val av = lit(model.alpha * model.vocabSize)
     docs
       .select(col(idCol).as("id"),
         explode(TF.allWordNgrams(col(textCol), 2)).as("__b"))
-      .join(b2, Seq("__b"), "left")
+      .join(broadcast(model.bigrams), Seq("__b"), "left")
       .withColumn("__w1", substring_index(col("__b"), " ", 1))
-      .join(b1, Seq("__w1"), "left")
+      .join(broadcast(model.heads), Seq("__w1"), "left")
       .withColumn("__lp", log(
         (coalesce(col("__n2"), lit(0L)) + lit(model.alpha)) /
           (coalesce(col("__n1"), lit(0L)) + av)))
@@ -105,9 +99,6 @@ object LmQuality {
     * model exists).
     */
   def selfScore(docs: DataFrame, textCol: String, idCol: String,
-                alpha: Double = 0.5, minCount: Int = 1,
-                broadcastModel: Boolean = true,
-                persistModel: Boolean = false): DataFrame =
-    score(docs, textCol, idCol,
-      train(docs, textCol, alpha, minCount, persistModel), broadcastModel)
+                alpha: Double = 0.5, minCount: Int = 1): DataFrame =
+    score(docs, textCol, idCol, train(docs, textCol, alpha, minCount))
 }

@@ -366,21 +366,6 @@ object Multimodal {
       }
     }
 
-  /** Raster/PCM decode where the format allows it, [[stub]]
-    * pseudo-features for the codec-bound rest — the mixed-corpus
-    * default.
-    */
-  val rasterOrStub: Decoder = (blobs: Seq[Array[Byte]], dim: Int) =>
-    blobs.map { b =>
-      graft.functions.RasterKernels.decode(b) match {
-        case Some(r) => rasterFeatures(r, dim)
-        case None => graft.functions.AudioKernels.decode(b) match {
-          case Some(p) => pcmFeatures(p, dim)
-          case None => stubOne(b, dim)
-        }
-      }
-    }
-
   private def stubOne(bytes: Array[Byte], dim: Int): Array[Float] = {
     val out = new Array[Float](dim)
     var h = 1125899906842597L // deterministic FNV-ish rolling hash
@@ -411,15 +396,13 @@ object Multimodal {
     * null blobs decode as empty payloads (n_bytes = 0) — both contracts
     * unchanged.
     *
-    * `batchSize` is retained for source compatibility: the engine now
-    * invokes the decoder with singleton batches (decode dominates any
-    * batching overhead; amortized codec/model state belongs in the
-    * decoder object, instantiated once per plan reference, not per row).
+    * The engine invokes the decoder with singleton batches (decode
+    * dominates any batching overhead; amortized codec/model state
+    * belongs in the decoder object, instantiated once per plan
+    * reference, not per row).
     */
   def featurize(df: DataFrame, idCol: String, blobCol: String,
-                dim: Int = 8, batchSize: Int = 32,
-                decoder: Decoder = stub): DataFrame = {
-    require(batchSize >= 1)
+                dim: Int = 8, decoder: Decoder = stub): DataFrame = {
     val safeBlob = coalesce(col(blobCol), lit(Array.emptyByteArray))
     df.select(
       col(idCol).cast("bigint").as("media_id"),

@@ -202,24 +202,19 @@ object Ops {
       .drop("__to_key")
   }
 
-  /** Skew-resistant equi-join: left rows get a deterministic salt in
-    * [0, buckets), the (small-enough-to-replicate) right side is
+  /** Skew-resistant left equi-join: left rows get a deterministic salt
+    * in [0, buckets), the (small-enough-to-replicate) right side is
     * exploded across every salt value, and the join runs on
     * keys :+ salt — a hot key's rows spread over `buckets` reducers
     * instead of one. Use when AQE's skew split isn't available (e.g.
     * pre-AQE clusters) or the skew is in a broadcast-ineligible dim.
-    * Result is identical to the plain join (salt is derived, not
-    * random — resilient to task retries).
+    * Result is identical to the plain left join (salt is derived, not
+    * random — resilient to task retries; the replicated right side
+    * never survives unmatched, so no replica duplicates a row).
     */
   def saltedJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
-                 buckets: Int = 16, joinType: String = "inner"): DataFrame = {
+                 buckets: Int): DataFrame = {
     require(buckets > 0)
-    // right/full outer would emit one null-padded (or duplicate) row per
-    // salt replica of an unmatched right key — only join types where the
-    // replicated side never survives unmatched are equivalent
-    require(Set("inner", "cross", "left", "leftouter", "leftsemi", "leftanti")
-        .contains(joinType.toLowerCase.replace("_", "")),
-      s"saltedJoin supports inner/left-side join types, not $joinType")
     // the salt column must not clobber (or ambiguously resolve against) a
     // pre-existing column on either side — resolution is case-insensitive
     val taken = (left.columns ++ right.columns).map(_.toLowerCase).toSet
@@ -229,7 +224,7 @@ object Ops {
       pmod(xxhash64(struct(left.columns.map(col): _*)), lit(buckets)).cast("int"))
     val exploded = right.withColumn(saltCol,
       explode(array((0 until buckets).map(lit): _*)))
-    salted.join(exploded, keys :+ saltCol, joinType).drop(saltCol)
+    salted.join(exploded, keys :+ saltCol, "left").drop(saltCol)
   }
 
   /** As-of (point-in-time) join — for every left row, the single most
@@ -407,14 +402,9 @@ object Ops {
       .select(cols.map(c => col("__m").getField("__row").getField(c).as(c)): _*)
   }
 
-  /** Append streams = UNION ALL by name (reference motogp.ktr:1379).
-    * `evolved = true` tolerates schema drift: columns present on only
-    * one side come through as nulls on the other (the ingestion shape
-    * when upstream adds a field mid-corpus).
-    */
-  def unionAppend(head: DataFrame, tail: DataFrame,
-                  evolved: Boolean = false): DataFrame =
-    head.unionByName(tail, allowMissingColumns = evolved)
+  /** Append streams = UNION ALL by name (reference motogp.ktr:1379). */
+  def unionAppend(head: DataFrame, tail: DataFrame): DataFrame =
+    head.unionByName(tail)
 
   /** Range (interval) join without the cartesian trap: every left row
     * whose `pointCol` falls in `[loCol, hiCol]` (BETWEEN semantics,
@@ -429,13 +419,12 @@ object Ops {
     * `binWidth` trades replication for selectivity: ranges are
     * replicated `width/binWidth + 1` times, and each bin's candidates
     * are ranges genuinely near the point. Pick it near the typical
-    * range width. Extra equality keys (`keys`) ride along in the join.
-    * NULL points or bounds never match, exactly like SQL BETWEEN.
+    * range width. NULL points or bounds never match, exactly like SQL
+    * BETWEEN.
     */
   def binnedRangeJoin(points: DataFrame, ranges: DataFrame,
                       pointCol: String, loCol: String, hiCol: String,
-                      binWidth: Double, keys: Seq[String] = Nil,
-                      joinType: String = "inner"): DataFrame = {
+                      binWidth: Double, joinType: String = "inner"): DataFrame = {
     require(binWidth > 0, s"binWidth must be > 0, got $binWidth")
     require(Set("inner", "leftsemi").contains(joinType.toLowerCase.replace("_", "")),
       s"binnedRangeJoin supports inner/left_semi, not $joinType " +
@@ -460,7 +449,7 @@ object Ops {
       val rb = ranges.withColumn(bin,
         explode(sequence(floor(col(loCol) / binWidth).cast("long"),
           floor(col(hiCol) / binWidth).cast("long"))))
-      val matched = pb.join(rb, keys :+ bin, "inner")
+      val matched = pb.join(rb, Seq(bin), "inner")
         .filter(col(pointCol) >= col(loCol) && col(pointCol) <= col(hiCol))
         .select(points.columns.map(n => pb(n)): _*)
         .distinct().alias("__m")
@@ -475,7 +464,7 @@ object Ops {
       val r = ranges.withColumn(bin,
         explode(sequence(floor(col(loCol) / binWidth).cast("long"),
           floor(col(hiCol) / binWidth).cast("long"))))
-      p.join(r, keys :+ bin, joinType)
+      p.join(r, Seq(bin), joinType)
         .filter(col(pointCol) >= col(loCol) && col(pointCol) <= col(hiCol))
         .drop(bin)
     }
@@ -729,15 +718,11 @@ object Ops {
     * timestamps out (cast to date first): their string form is
     * engine-dependent, dates and integers are not.
     *
-    * `exactDistinct = true` uses exact per-column distinct counts —
-    * Spark plans multiple distinct aggregates with an Expand that
-    * replicates every row once per profiled column, fine at audit scale
-    * and for the oracle. At 100 TB pass `false`:
-    * `approx_count_distinct` (HLL, ~2% rsd) keeps the plan a plain
-    * single-pass aggregate with no Expand.
+    * Distinct counts are exact: Spark plans multiple distinct aggregates
+    * with an Expand that replicates every row once per profiled column,
+    * fine at audit scale and what the oracle checks.
     */
-  def profileColumns(df: DataFrame, cols: Seq[String],
-                     exactDistinct: Boolean = true): DataFrame = {
+  def profileColumns(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "profileColumns needs at least one column")
     val missing = cols.filterNot(df.columns.contains)
     require(missing.isEmpty, s"no such columns: ${missing.mkString(", ")}")
@@ -745,8 +730,7 @@ object Ops {
     val aggs = count(lit(1)).as("__n") +: cols.zipWithIndex.flatMap {
       case (c, i) => Seq(
         count(col(c)).as(s"__p${i}_cnt"),
-        (if (exactDistinct) count_distinct(col(c))
-         else approx_count_distinct(col(c))).as(s"__p${i}_nd"),
+        count_distinct(col(c)).as(s"__p${i}_nd"),
         min(col(c)).as(s"__p${i}_min"),
         max(col(c)).as(s"__p${i}_max"))
     }
@@ -826,32 +810,6 @@ object Ops {
       .drop("__recall_raw")
   }
 
-  /** Scale-adaptive compute fan-out (optimization guide §2.5 "input
-    * skew" / §1.2 "the distributed algorithm"): when a stage's cost is
-    * CPU per row — blob decode, quadratic pair verification, shingle
-    * hashing — an under-split source starves every core. This corpus's
-    * tables are single-row-group parquet files, so every scan is ONE
-    * task at every SF and a per-row-expensive projection runs serially
-    * on a 32-core machine; the same happens in production whenever one
-    * unsplittable file (gzip, a single huge row group) feeds an
-    * expensive kernel.
-    *
-    * The fix is the guide's own: "repartition immediately after the
-    * read" — but ONLY when the source is actually under-split. The
-    * exchange, when it fires, is hash-partitioned on the caller's key
-    * (deterministic under retries — guide §2.5 warns off rand-derived
-    * keys; a unique id hash spreads evenly) and carries whatever the
-    * caller projected — callers fan out the NARROW pre-kernel
-    * projection (ids, text), never decoded payloads, so the
-    * blobs-never-shuffle contract of the media operators is preserved
-    * by construction.
-    *
-    * `keys` empty falls back to round-robin (pays Spark's
-    * sort-before-repartition of the input rows — prefer a key).
-    */
-  def fanOutForCompute(df: DataFrame, keys: Column*): DataFrame =
-    fanOutForCompute(df, 1L, keys: _*)
-
   /** Size-derived partition count (r18, guide §2 "make partitioning
     * scale-adaptive — derive from input size, not a constant tuned for
     * either local mode or the cluster"): one partition per
@@ -872,7 +830,27 @@ object Ops {
     sized.min(cap).max(BigInt(1)).toInt
   }
 
-  /** Cost-aware fan-out (r18, VERDICT r17 #1): the r17 gate fanned any
+  /** Scale-adaptive compute fan-out (optimization guide §2.5 "input
+    * skew" / §1.2 "the distributed algorithm"): when a stage's cost is
+    * CPU per row — blob decode, quadratic pair verification, shingle
+    * hashing — an under-split source starves every core. This corpus's
+    * tables are single-row-group parquet files, so every scan is ONE
+    * task at every SF and a per-row-expensive projection runs serially
+    * on a 32-core machine; the same happens in production whenever one
+    * unsplittable file (gzip, a single huge row group) feeds an
+    * expensive kernel.
+    *
+    * The fix is the guide's own: "repartition immediately after the
+    * read" — but ONLY when the source is actually under-split. The
+    * exchange, when it fires, is hash-partitioned on the caller's key
+    * (deterministic under retries — guide §2.5 warns off rand-derived
+    * keys; a unique id hash spreads evenly) and carries whatever the
+    * caller projected — callers fan out the NARROW pre-kernel
+    * projection (ids, text), never decoded payloads, so the
+    * blobs-never-shuffle contract of the media operators is preserved
+    * by construction.
+    *
+    * Cost-aware (r18, VERDICT r17 #1): the r17 gate fanned any
     * under-split source out to `defaultParallelism`, which regressed
     * cheap-kernel queries 2× at the benched SF — the exchange plus 32
     * near-empty tasks cost more than the kernel they parallelized
@@ -903,7 +881,7 @@ object Ops {
     * looked through.
     */
   def fanOutForCompute(df: DataFrame, maxTaskBytes: Long,
-                       keys: Column*): DataFrame = {
+                       key: Column): DataFrame = {
     require(maxTaskBytes >= 1, s"maxTaskBytes must be >= 1, got $maxTaskBytes")
     val cores = df.sparkSession.sparkContext.defaultParallelism
     val qe = df.queryExecution
@@ -914,8 +892,7 @@ object Ops {
       val target = (estBytes / maxTaskBytes)
         .min(BigInt(cores)).max(BigInt(1)).toInt
       if (target <= 1 || df.rdd.getNumPartitions >= target) df
-      else if (keys.nonEmpty) df.repartition(target, keys: _*)
-      else df.repartition(target)
+      else df.repartition(target, key)
     }
   }
 

@@ -30,11 +30,11 @@ object Ranking {
   /** Okapi BM25 score of every document against a literal bag of query
     * terms. Returns (doc_id, dl, tf_<term>..., bm25) for documents that
     * contain at least one query term. IDF uses the standard
-    * `ln((N - df + 0.5) / (df + 0.5) + 1)` (always positive) variant.
+    * `ln((N - df + 0.5) / (df + 0.5) + 1)` (always positive) variant;
+    * the score is rounded to 6 decimals.
     */
   def bm25(docs: DataFrame, textCol: String, idCol: String,
-           queryTerms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
-           round6: Boolean = true): DataFrame = {
+           queryTerms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
     require(queryTerms.distinct.size == queryTerms.size,
       s"duplicate query terms: $queryTerms")
@@ -68,7 +68,7 @@ object Ranking {
       .filter(queryTerms.map(t => col(tfCol(t))).reduce(_ + _) > 0)
       .select(Seq(col("doc_id"), col("dl")) ++
         queryTerms.map(t => col(tfCol(t))) :+
-        (if (round6) round(score, 6) else score).as("bm25"): _*)
+        round(score, 6).as("bm25"): _*)
   }
 
   /** Bounded top-k of a (id, score) list as explicit 1-based ranks —

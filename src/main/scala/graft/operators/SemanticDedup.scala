@@ -47,8 +47,7 @@ object SemanticDedup {
     * a double threshold would reintroduce the float boundary the
     * integer pipeline exists to avoid. */
   def dedup(embs: DataFrame, vecCol: String, idCol: String, k: Int,
-            iters: Int, cosNum: Int, cosDen: Int,
-            loopPartitions: Int = 8): DataFrame = {
+            iters: Int, cosNum: Int, cosDen: Int): DataFrame = {
     require(cosDen > 0 && cosNum > 0 && cosNum <= cosDen,
       s"cosine threshold must satisfy 0 < num/den <= 1, got $cosNum/$cosDen")
     // dot²·den² is formed in decimal(38,0): dot ≤ ~10¹⁴ for 64-dim
@@ -60,8 +59,8 @@ object SemanticDedup {
       s"cosDen must be <= 10^4 (decimal(38,0) headroom for dot²·den²), got $cosDen — " +
         "express the threshold with a smaller denominator")
     val quantized = KMeans.quantized(embs, vecCol, idCol)
-    val cents = KMeans.fitLoop(quantized, k, iters, loopPartitions)
-    val qdf = quantized.repartition(loopPartitions, col("__id"))
+    val cents = KMeans.fitLoop(quantized, k, iters)
+    val qdf = quantized.repartition(KMeans.LoopPartitions, col("__id"))
     val qc = typedlit(cents.map(_.toSeq).toSeq)
     val assigned = qdf.select(col("__id"),
       KMeans.assignCol(col("__qv"), qc).as("cluster"),

@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   *    Correctness baseline; right answer when |queries| is small (the
   *    corpus side streams, queries broadcast).
   *  - [[lshTopK]]: random-hyperplane LSH bucketing: corpus hashed once
-  *    into sign-pattern buckets, each query probes its own bucket (and,
-  *    with `multiProbe`, every bucket at Hamming distance 1 — recall
-  *    recovery at nBits× candidate cost), exact cosine re-ranks within
+  *    into sign-pattern buckets, each query probes its own bucket and
+  *    every bucket at Hamming distance 1 (multi-probe: recall recovery
+  *    at nBits× candidate cost), exact cosine re-ranks within
   *    candidates.
   *  - [[ivfTopK]]: IVF-style coarse quantizer — k-means centroids
   *    (Lloyd iterations as DataFrame jobs; only the tiny centroid table
@@ -48,17 +48,13 @@ object Similarity {
     * struct ordering and fill every top-k — so every caller is null-safe
     * regardless of its own filtering.
     */
-  private def topKPerQuery(scored: DataFrame, k: Int,
-                           distinct: Boolean = false): DataFrame = {
+  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
     val item = struct((lit(0d) - col("cosine")).as("negc"),
       col("corpus_id").as("cid"), col("cosine").as("c"))
-    val top =
-      if (distinct) Dedup.collectSmallestDistinct(item, k)
-      else Dedup.collectSmallest(item, k)
     scored
       .filter(col("cosine").isNotNull)
       .groupBy(col("query_id"))
-      .agg(top.as("__top"))
+      .agg(Dedup.collectSmallest(item, k).as("__top"))
       .select(col("query_id"), posexplode(col("__top")).as(Seq("__r", "__m")))
       .select(col("query_id"), col("__m").getField("cid").as("corpus_id"),
         col("__m").getField("c").as("cosine"),
@@ -137,48 +133,26 @@ object Similarity {
   }
 
   /** LSH-bucketed ANN: candidates = corpus vectors sharing the query's
-    * hyperplane-sign bucket; exact cosine re-rank inside the bucket.
-    * Three independent recall levers:
-    *  - `nBits`: fewer bits = bigger buckets = higher recall, more compute
-    *  - `multiProbe`: also probe the nBits buckets one sign-flip away
-    *  - `nTables`: independent hash tables (E2LSH OR-amplification) — a
-    *    candidate surfaces if it collides in ANY table, at nTables× the
-    *    bucketing/join cost. A pair can then arrive once per table, so
-    *    the top-k aggregation switches to distinct mode (one slot per
-    *    candidate).
+    * hyperplane-sign bucket or one of the nBits buckets one sign-flip
+    * away (multi-probe); exact cosine re-rank inside the candidates.
+    * `nBits` is the recall lever: fewer bits = bigger buckets = higher
+    * recall, more compute.
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame,
               vecCol: String, idCol: String, k: Int,
-              nBits: Int = 8, multiProbe: Boolean = false,
-              nTables: Int = 1): DataFrame = {
-    require(nTables >= 1, s"nTables must be >= 1, got $nTables")
-    // single-table keeps the plain projection path — no Generate node
-    // over a 1-element array, no always-zero __tbl join key overhead
-    def bucketed(df: DataFrame, vc: String, bktCol: String): DataFrame =
-      if (nTables == 1)
-        df.withColumn("__tbl", lit(0))
-          .withColumn(bktCol, VectorFunctions.cosineLshBucket(col(vc), nBits))
-      else
-        df.select(df.columns.map(col) :+
-          posexplode(array((0 until nTables).map(t =>
-            VectorFunctions.cosineLshBucket(col(vc), nBits, seed = 42L + t)): _*))
-            .as(Seq("__tbl", bktCol)): _*)
-    val c = bucketed(
-      corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("__cv")),
-      "__cv", "__bkt")
-    val q0 = bucketed(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv")),
-      "__qv", "__qbkt")
-    val q =
-      if (!multiProbe) q0.withColumn("__bkt", col("__qbkt"))
-      else q0.withColumn("__bkt", explode(array(
+              nBits: Int = 8): DataFrame = {
+    val c = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("__cv"))
+      .withColumn("__bkt", VectorFunctions.cosineLshBucket(col("__cv"), nBits))
+    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
+      .withColumn("__qbkt", VectorFunctions.cosineLshBucket(col("__qv"), nBits))
+      .withColumn("__bkt", explode(array(
         col("__qbkt") +: (0 until nBits).map(b =>
           col("__qbkt").bitwiseXOR(lit(1L << b))): _*)))
-    val scored = c.join(q.drop("__qbkt"), Seq("__tbl", "__bkt"))
+    val scored = c.join(q.drop("__qbkt"), Seq("__bkt"))
       .filter(col("query_id") =!= col("corpus_id"))
       .withColumn("cosine",
         round(VectorFunctions.cosineSimilarity(col("__qv"), col("__cv")), 6))
-    topKPerQuery(scored, k, distinct = nTables > 1)
+    topKPerQuery(scored, k)
   }
 
   /** Deterministic Lloyd k-means over unit vectors (cosine/spherical:
@@ -245,7 +219,7 @@ object Similarity {
     for (_ <- 1 to iters) {
       // one corpus scan, one nCentroids·dim-cell shuffle, a bounded
       // nCentroids·dim-row collect — the per-iteration SQL template
-      // Classifier.train also uses (KMeans.fit runs as plain RDD jobs)
+      // Classifier.train also uses (KMeans.fitLoop runs as plain RDD jobs)
       val cells = kmeansIterSums(unit, centroids).collect()
       val sums = new java.util.HashMap[Long, (Array[Double], Long)]()
       cells.foreach { r =>

@@ -679,9 +679,8 @@ case class MultiMatch(child: Expression, patterns: Seq[String])
 
 /** Bounded collect: the `limit` SMALLEST non-null child values per group
   * (by the type's natural ordering), emitted as a sorted-ascending array —
-  * exactly `slice(array_sort(collect_list(x)), 1, limit)` (or of
-  * `collect_set` with `distinct = true`), but with the bound enforced
-  * INSIDE the aggregation buffer. `collect_list` holds every member of a
+  * exactly `slice(array_sort(collect_list(x)), 1, limit)`, but with the
+  * bound enforced INSIDE the aggregation buffer. `collect_list` holds every member of a
   * group in memory before any cap can apply, so one pathologically hot
   * group (mass-duplicated content in an LSH bucket) can OOM an executor;
   * this buffer never exceeds `limit` elements, in the partial (map-side)
@@ -689,16 +688,11 @@ case class MultiMatch(child: Expression, patterns: Seq[String])
   *
   * The buffer is a size-capped max-heap: the largest kept value is O(1)
   * to inspect, so each update is O(log limit) and merge is
-  * O(m log limit). `distinct` makes duplicate values occupy one slot —
-  * the mode the multi-table LSH top-k needs, where the same candidate
-  * can arrive once per hash table. The dedup check is a LINEAR scan of
-  * the kept buffer (O(limit) per insert), so use distinct only with
-  * top-k-sized limits, not the 4096-member bucket caps.
+  * O(m log limit).
   */
 case class CollectSmallest(
     child: Expression,
     limit: Int,
-    distinct: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[scala.collection.mutable.PriorityQueue[Any]]
@@ -718,15 +712,8 @@ case class CollectSmallest(
   override def createAggregationBuffer(): scala.collection.mutable.PriorityQueue[Any] =
     scala.collection.mutable.PriorityQueue.empty[Any](ord)
 
-  // distinct mode: a value already kept occupies no new slot. The linear
-  // membership scan is O(limit) per insert — use distinct only with
-  // small limits (top-k), not the 4096-member bucket caps. Correctness
-  // of the bound: a duplicate of an EVICTED value is necessarily larger
-  // than everything kept, so the full-buffer rejection path already
-  // handles it.
   private def offer(buf: scala.collection.mutable.PriorityQueue[Any], v: Any): Unit =
-    if (distinct && buf.exists(ord.equiv(_, v))) ()
-    else if (buf.size < limit) buf += v
+    if (buf.size < limit) buf += v
     else if (ord.lt(v, buf.head)) { buf.dequeue(); buf += v }
 
   override def update(buf: scala.collection.mutable.PriorityQueue[Any],

@@ -26,12 +26,6 @@ object GraftSqlFunctions {
       s"$fn expects a literal integer argument, got $other")
   }
 
-  private def boolArg(e: Expression, fn: String): Boolean = e match {
-    case Literal(v: Boolean, _) => v
-    case other => throw new IllegalArgumentException(
-      s"$fn expects a literal boolean argument, got $other")
-  }
-
   private def stringArrayArg(e: Expression, fn: String): Seq[String] = e match {
     case a if a.foldable && (a.dataType == ArrayType(StringType, false) ||
         a.dataType == ArrayType(StringType, true)) =>
@@ -87,10 +81,9 @@ object GraftSqlFunctions {
         "contained in text, in declaration order (one Aho-Corasick pass)", 2, 2)(
       c => MultiMatch(c(0), stringArrayArg(c(1), "multi_match"))),
     function("collect_smallest",
-      "collect_smallest(x, limit[, distinct]) - the limit smallest values per group, " +
-        "sorted; bounded aggregation buffer (safe on pathologically hot groups)", 2, 3)(
-      c => CollectSmallest(c(0), intArg(c(1), "collect_smallest"),
-        if (c.length >= 3) boolArg(c(2), "collect_smallest") else false)))
+      "collect_smallest(x, limit) - the limit smallest values per group, " +
+        "sorted; bounded aggregation buffer (safe on pathologically hot groups)", 2, 2)(
+      c => CollectSmallest(c(0), intArg(c(1), "collect_smallest"))))
 
   /** Register on an already-built session. */
   def register(spark: SparkSession): Unit = {

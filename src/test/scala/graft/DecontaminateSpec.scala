@@ -39,11 +39,6 @@ class DecontaminateSpec extends SparkSpec {
         .as[(Long, Long)].collect().toMap
       assert(bloomed == exact, s"fpp=$fpp")
     }
-    // shuffle-verify variant is the same answer too
-    val shuffled = Decontaminate.overlapBloom(train, bench, "text", "doc_id",
-        n = 5, broadcastVerify = false)
-      .as[(Long, Long)].collect().toMap
-    assert(shuffled == exact)
   }
 
   test("overlapBloom plan probes a bloom filter before the verification join") {

@@ -140,9 +140,9 @@ class DimensionsSpec extends SparkSpec {
       (1L, "scarlet", d("2021-01-01")),
       (4L, "black", d("2020-06-01")),   // unseen key, single change
       (4L, "grey", d("2021-01-01"))
-    ).toDF("k", "color", "eff")
+    ).toDF("k", "color", "eff").withColumn("seq", lit(0L))
     val out = Dimensions.scd2ApplyOrdered(dim, changes, Seq("k"), Seq("color"),
-        "valid_from", "valid_to", "eff")
+        "valid_from", "valid_to", "eff", "seq")
       .filter(col("k").isin(1L, 4L))
       .collect().map(r => (r.getLong(0), r.getString(1),
         Option(r.getDate(2)).map(_.toString),
@@ -163,9 +163,9 @@ class DimensionsSpec extends SparkSpec {
       (2L, "navy", d("2020-06-01")),   // change
       (2L, "navy", d("2020-09-01")),   // equals previous version -> no-op
       (2L, "blue", d("2021-01-01"))    // back to blue: a REAL new version
-    ).toDF("k", "color", "eff")
+    ).toDF("k", "color", "eff").withColumn("seq", lit(0L))
     val out = Dimensions.scd2ApplyOrdered(dim, changes, Seq("k"), Seq("color"),
-        "valid_from", "valid_to", "eff")
+        "valid_from", "valid_to", "eff", "seq")
       .filter(col("k") === 2L)
       .collect().map(r => (r.getString(1),
         Option(r.getDate(2)).map(_.toString),
@@ -182,7 +182,7 @@ class DimensionsSpec extends SparkSpec {
       (3L, "olive", d("2020-06-01"), 2L)
     ).toDF("k", "color", "eff", "seq")
     val out = Dimensions.scd2ApplyOrdered(dim, changes, Seq("k"), Seq("color"),
-        "valid_from", "valid_to", "eff", orderCol = Some("seq"))
+        "valid_from", "valid_to", "eff", "seq")
       .filter(col("k") === 3L)
       .collect().map(r => (r.getString(1),
         Option(r.getDate(2)).map(_.toString),
@@ -193,16 +193,16 @@ class DimensionsSpec extends SparkSpec {
       ("olive", Some("2020-06-01"), None)))             // tie-winner stays open
   }
 
-  test("scd2ApplyOrdered rejects same-day ties without an orderCol") {
+  test("scd2ApplyOrdered rejects changes tied on key, effective value and order") {
     val changes = Seq(
-      (3L, "lime", d("2020-06-01")),
-      (3L, "olive", d("2020-06-01"))
-    ).toDF("k", "color", "eff")
+      (3L, "lime", d("2020-06-01"), 1L),
+      (3L, "olive", d("2020-06-01"), 1L)
+    ).toDF("k", "color", "eff", "seq")
     val e = intercept[IllegalArgumentException] {
       Dimensions.scd2ApplyOrdered(dim, changes, Seq("k"), Seq("color"),
-        "valid_from", "valid_to", "eff")
+        "valid_from", "valid_to", "eff", "seq")
     }
-    assert(e.getMessage.contains("tied changes"))
+    assert(e.getMessage.contains("tied changes (same key, effective value, seq)"))
   }
 
   test("scd2ApplyOrdered with a one-change-per-key batch matches scd2Apply") {
@@ -210,7 +210,7 @@ class DimensionsSpec extends SparkSpec {
       (1L, "crimson", d("2020-06-01")),
       (2L, "blue", d("2020-06-01")),
       (4L, "black", d("2020-06-01"))
-    ).toDF("k", "color", "eff")
+    ).toDF("k", "color", "eff").withColumn("seq", lit(0L))
     def norm(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), Option(r.getString(1)),
         Option(r.getDate(2)).map(_.toString),
@@ -218,7 +218,7 @@ class DimensionsSpec extends SparkSpec {
     val a = norm(Dimensions.scd2Apply(dim, changes, Seq("k"), Seq("color"),
       "valid_from", "valid_to", "eff"))
     val b = norm(Dimensions.scd2ApplyOrdered(dim, changes, Seq("k"), Seq("color"),
-      "valid_from", "valid_to", "eff"))
+      "valid_from", "valid_to", "eff", "seq"))
     assert(a == b)
   }
 
@@ -230,14 +230,10 @@ class DimensionsSpec extends SparkSpec {
                   (4L, "d", 41),          // changed (w)
                   (5L, "e", 50))          // new; 3 deleted
       .toDF("k", "v", "w")
-    val out = Dimensions.snapshotDiff(old, neu, Seq("k"))
+    val out = Dimensions.snapshotDiff(old, neu, Seq("k"), Seq("v", "w"))
       .as[(Long, String, Int, String)].collect().toSet
     assert(out == Set((2L, "B2", 20, "changed"), (4L, "d", 41, "changed"),
       (3L, "c", 30, "deleted"), (5L, "e", 50, "new")))
-    val full = Dimensions.snapshotDiff(old, neu, Seq("k"),
-      includeIdentical = true)
-    assert(full.filter(col("change") === "identical")
-      .as[(Long, String, Int, String)].collect().toSeq == Seq((1L, "a", 10, "identical")))
   }
 
   test("snapshotDiff: duplicate key on either side is rejected eagerly") {
@@ -248,14 +244,10 @@ class DimensionsSpec extends SparkSpec {
     // unchanged key — the exact hazard upsert/scd2Apply already reject
     for ((o, n) <- Seq((dup, clean), (clean, dup))) {
       val e = intercept[IllegalArgumentException] {
-        Dimensions.snapshotDiff(o, n, Seq("k"))
+        Dimensions.snapshotDiff(o, n, Seq("k"), Seq("v"))
       }
       assert(e.getMessage.contains("duplicate key"))
     }
-    // pre-validated feeds can opt out; the phantom row documents why
-    // the default is on
-    val out = Dimensions.snapshotDiff(dup, clean, Seq("k"), validate = false)
-    assert(out.filter(col("change") === "changed").count() == 1)
   }
 
   test("snapshotDiff: bucketed snapshots diff with ZERO exchanges") {
@@ -268,7 +260,7 @@ class DimensionsSpec extends SparkSpec {
         .toDF("k", "v")
         .write.bucketBy(4, "k").saveAsTable("graft_snap_new")
       val out = Dimensions.snapshotDiff(spark.table("graft_snap_old"),
-        spark.table("graft_snap_new"), Seq("k"), validate = false)
+        spark.table("graft_snap_new"), Seq("k"), Seq("v"))
       assert(!out.queryExecution.executedPlan.toString.contains("Exchange"),
         out.queryExecution.executedPlan.toString)
       assert(out.count() == 10)
@@ -283,7 +275,7 @@ class DimensionsSpec extends SparkSpec {
       (3L, null.asInstanceOf[String])).toDF("k", "v")
     val neu = Seq((1L, "now set"), (2L, null.asInstanceOf[String]),
       (3L, null.asInstanceOf[String])).toDF("k", "v")
-    val changes = Dimensions.snapshotDiff(old, neu, Seq("k"))
+    val changes = Dimensions.snapshotDiff(old, neu, Seq("k"), Seq("v"))
       .select("k", "change").as[(Long, String)].collect().toMap
     assert(changes == Map(1L -> "changed", 2L -> "changed"))
   }
@@ -294,7 +286,7 @@ class DimensionsSpec extends SparkSpec {
       .map(i => (i, if (i % 5 == 0) s"v$i+" else s"v$i"))
       .toDF("k", "v")
       .unionByName(Seq((99L, "v99")).toDF("k", "v"))
-    val diff = Dimensions.snapshotDiff(old, neu, Seq("k"))
+    val diff = Dimensions.snapshotDiff(old, neu, Seq("k"), Seq("v"))
     val updates = diff.filter(col("change").isin("new", "changed")).drop("change")
     val deletedKeys = diff.filter(col("change") === "deleted").select("k")
     val applied = Dimensions.upsert(old, updates, Seq("k"))
@@ -332,30 +324,5 @@ class DimensionsSpec extends SparkSpec {
     assert(Dimensions.asOfLookup(facts, dim, Seq("fk"), Seq("k"),
       "ts", "valid_from", "valid_to").columns.toSeq ==
       Seq("fid", "fk", "ts", "attr"))
-  }
-
-  test("validate=false builds the plan without running any Spark job") {
-    val existing = Seq((1L, "a", 10.0)).toDF("k", "name", "bal")
-    val updates = Seq((2L, "x", 1.0)).toDF("k", "name", "bal")
-    val changes = Seq((1L, "crimson", d("2020-06-01"))).toDF("k", "color", "eff")
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    // drain in-flight events from earlier tests so they don't land on
-    // the new listener, then count jobs during plan construction only
-    org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Dimensions.upsert(existing, updates, Seq("k"), validate = false)
-      Dimensions.scd2Apply(dim, changes, Seq("k"), Seq("color"),
-        "valid_from", "valid_to", "eff", validate = false)
-      Dimensions.scd2ApplyOrdered(dim, changes, Seq("k"), Seq("color"),
-        "valid_from", "valid_to", "eff", validate = false)
-      // listener events are async — drain the bus before asserting
-      org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
-      assert(jobs == 0, s"plan construction ran $jobs eager validation jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

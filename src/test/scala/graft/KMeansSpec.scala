@@ -123,29 +123,37 @@ class KMeansSpec extends SparkSpec {
     assert(e.getMessage.contains("cluster 0 dim-sum 20000000000000000 exceeds " +
       "the exact-double bound"), e.getMessage)
     // 5e12 quantizes to 5e18 — two of them overflow a long; the exact
-    // partials must report the bound, not a wrapped negative sum
-    val huge = Seq((0L, Seq(5.0e12)), (1L, Seq(5.0e12)), (2L, Seq(5.0e12))).toDF("id", "vec")
-    for (parts <- Seq(1, 3)) {
+    // partials must report the bound, not a wrapped negative sum. The
+    // fit hash-splits points by id 8 ways: ids 0, 8, 16 share one
+    // partition (the in-partition sum overflows), ids 0, 1, 2 land in
+    // three (the driver's merge of the partials overflows).
+    for (ids <- Seq(Seq(0L, 8L, 16L), Seq(0L, 1L, 2L))) {
+      val huge = ids.map(i => (i, Seq(5.0e12))).toDF("id", "vec")
       val e = intercept[Exception](
-        KMeans.fitAssign(huge, "vec", "id", k = 1, iters = 1, loopPartitions = parts))
+        KMeans.fitAssign(huge, "vec", "id", k = 1, iters = 1))
       assert(messages(e).contains("cluster 0 dim-sum 10000000000000000000 exceeds " +
         "the exact-double bound"), messages(e))
     }
   }
 
-  test("fit runs one job per seed pick and per iteration, with no shuffle") {
+  test("fitAssign: one job per seed pick and per iteration; only the id split shuffles") {
     val k = 10
     val iters = 4
-    // already-quantized points from a local relation: nothing upstream
-    // of the fit shuffles, so every byte counted below is the fit's own
-    val qdf = (0 until 400).map { i =>
+    // points from a local relation: nothing upstream of the fit
+    // shuffles, so every record counted below is the fit's own
+    val embs = (0 until 400).map { i =>
       val r = new scala.util.Random(i)
-      (i.toLong, Seq.tabulate(8)(j => (if (j == i % k) 1000000L else 0L) + r.nextInt(5000)))
-    }.toDF("__id", "__qv")
-    val (cents, shape) = JobShape.of(spark, "kmeans-job-shape")(KMeans.fit(qdf, k, iters))
-    assert(cents.length == k)
+      (i.toLong, Seq.tabulate(8)(j =>
+        ((if (j == i % k) 1000000L else 0L) + r.nextInt(5000)) / KMeans.Micro))
+    }.toDF("id", "vec")
+    // the fit runs eagerly inside fitAssign; the assignment stays lazy
+    val (out, shape) = JobShape.of(spark, "kmeans-job-shape")(
+      KMeans.fitAssign(embs, "vec", "id", k, iters))
     assert(shape.jobs >= 1 && shape.jobs <= k + iters + 2, s"fit submitted ${shape.jobs} jobs")
-    assert(shape.shuffleBytes == 0L, s"fit wrote ${shape.shuffleBytes} shuffle bytes")
+    // the seed job's id split moves each point once; picks and Lloyd
+    // iterations read the cached split and shuffle nothing
+    assert(shape.shuffleRecords == 400L, s"fit wrote ${shape.shuffleRecords} shuffle records")
+    assert(out.count() == 400L)
   }
 
   test("argument guards") {

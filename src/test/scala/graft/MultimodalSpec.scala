@@ -705,9 +705,14 @@ class MultimodalSpec extends SparkSpec {
     assert(out(1L) == Seq(2f, 1f, 20f, 30f, 40f))
     assert(out(2L) == Seq(1f, 1f, 5f, 6f, 7f))
     assert(out(3L).isEmpty)
-    // rasterOrStub: same rasters, stub pseudo-features for the rest
+    // raster decode where the format allows it, stub pseudo-features
+    // for the rest: same rasters, a full-width vector for the text blob
+    val rasterOrStub: Multimodal.Decoder = (bs, dim) => bs.map { b =>
+      val r = Multimodal.raster(Seq(b), dim).head
+      if (r.nonEmpty) r else Multimodal.stub(Seq(b), dim).head
+    }
     val mixed = Multimodal.featurize(df, "id", "blob", dim = 5,
-        decoder = Multimodal.rasterOrStub)
+        decoder = rasterOrStub)
       .collect().map(r => r.getLong(0) -> r.getSeq[Float](2)).toMap
     assert(mixed(1L) == out(1L) && mixed(2L) == out(2L))
     assert(mixed(3L).length == 5 && mixed(3L) != out(3L))

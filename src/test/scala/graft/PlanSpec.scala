@@ -300,8 +300,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_decontaminate_bloom: bloom probe precedes the verification join") {
-    // broadcastVerify = false only withholds the HINT — at this toy SF
-    // the optimizer still auto-broadcasts the under-threshold gram set
+    // overlapBloom gives the verification join no broadcast HINT — at
+    // this toy SF the optimizer still auto-broadcasts the under-threshold gram set
     // (correctly; past the threshold the same plan degrades to a
     // shuffle join), so the assertable invariant is the probe itself
     val p = plan("q_decontaminate_bloom")

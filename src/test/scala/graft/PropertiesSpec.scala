@@ -140,20 +140,6 @@ class PropertiesSpec extends SparkSpec {
     }
   }
 
-  test("collectSmallestDistinct equals slice(sorted distinct, limit) on random groups") {
-    for (limit <- Seq(1, 4, 20)) {
-      val data = Seq.fill(300)((rnd.nextInt(5), rnd.nextInt(25).toLong)) // heavy dupes
-      val df = data.toDF("g", "v").repartition(5)
-      val got = df.groupBy("g")
-        .agg(Dedup.collectSmallestDistinct(col("v"), limit).as("s"))
-        .collect().map(r => r.getInt(0) -> r.getSeq[Long](1)).toMap
-      val want = data.groupBy(_._1).map { case (g, vs) =>
-        g -> vs.map(_._2).distinct.sorted.take(limit)
-      }
-      assert(got == want, s"limit=$limit")
-    }
-  }
-
   test("rank-vs-sort consistency: rankInGroup follows the declared order") {
     val data = Seq.fill(300)((s"g${rnd.nextInt(5)}", rnd.nextInt(50)))
     val df = data.toDF("g", "v")

@@ -55,7 +55,6 @@ class StreamingKernelsSpec extends SparkSpec {
     val target = Seq("good tokens flow here", "more good tokens").toDF("text")
     val source = Seq("noise noise junk", "filler words everywhere").toDF("text")
     val ratios = Importance.fitLogRatios(target, source, "text", buckets)
-      .localCheckpoint()
 
     val docs = Seq(
       (1L, "good tokens"),

@@ -4,15 +4,31 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Keeps test-only code out of the main jar. A `private[graft]`
-  * definition that no other main code references exists only for the
-  * specs: a reference implementation, a fixture builder or an accessor.
-  * Such a helper belongs in `src/test`. The check is a name scan over
-  * the sources with comments removed, so a helper that shares its name
-  * with live code slips through; it never flags live code.
+  * definition, or a public member of a top-level object or class, that
+  * no other main code references exists only for the specs: a reference
+  * implementation, a fixture builder or an accessor. Such a helper
+  * belongs in `src/test`. The check is a name scan over the sources
+  * with comments removed, so a helper that shares its name with live
+  * code slips through; it never flags live code.
   */
 class TestSeamSpec extends AnyFunSuite {
   /** Needs the private `EncState` of `PdfKernels`, so it cannot move. */
   private val allowed = Set("fixtureEncryptor")
+
+  /** Public members no other main code references, kept on purpose. */
+  private val keptPublic = Map(
+    "fetchJsonPages" -> "Acquire: the paper's acquisition layer",
+    "jdbcTemplate" -> "Sinks: the load layer, motogp.ktr:481-489",
+    "suffixJoin" -> "Ops: the KTR's `_N` name-collision semantics, SURVEY §1",
+    "writeJsonl" -> "Sinks: called in a README example",
+    "writeZOrdered" -> "Sinks: called in a README example",
+    "ivfTopKIndexed" -> "Similarity: called in a README example",
+    "writeBucketed" -> "Sinks: the at-scale path of a queried operator",
+    "ivfPqTopKIndexed" -> "Similarity: the at-scale path of a queried operator",
+    "hashSplit" -> "Ops: the at-scale path of a queried operator",
+    "thresholdJoinChecked" -> "FuzzyMatch: SCALING.md's refusal guard for thresholdJoin",
+    "riderNamesUnioned" -> "MotoGpPipelines: the KTR's disabled union branch",
+    "scoreRows" -> "Classifier: README's streaming scorer, pinned to trainScore by StreamingKernelsSpec")
 
   /** `src` with every comment blanked (newlines kept); string and
     * character literals stay, since an interpolated string can
@@ -57,29 +73,51 @@ class TestSeamSpec extends AnyFunSuite {
     out.toString
   }
 
+  private lazy val sources: Seq[(String, String)] = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+      .map(p => p.toString -> stripComments(java.nio.file.Files.readString(p)))
+    finally files.close()
+  }
+
+  /** "path: name" of each `decl` match (group 1 = the name) that
+    * `checked(path, name)` accepts and that no main source mentions
+    * outside the declaration itself. */
+  private def unreferenced(decl: scala.util.matching.Regex)(
+      checked: (String, String) => Boolean): Seq[String] = for {
+    (path, src) <- sources
+    m <- decl.findAllMatchIn(src).toSeq
+    name = m.group(1)
+    if checked(path, name)
+    body = declarationSpan(src, m.start)
+    ref = ("\\b" + java.util.regex.Pattern.quote(name) + "\\b").r
+    if !sources.exists { case (p, s) =>
+      ref.findAllMatchIn(s).exists(r => p != path || r.start < body._1 || r.start >= body._2)
+    }
+  } yield s"$path: $name"
+
   private val decl =
     """private\[graft\]\s+(?:(?:final|lazy|override|implicit)\s+)*(?:def|val|var)\s+([A-Za-z_]\w*)""".r
 
   test("every private[graft] def or val in src/main is referenced by other src/main code") {
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-    val sources =
-      try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
-        .map(p => p.toString -> stripComments(java.nio.file.Files.readString(p)))
-      finally files.close()
-    val unreferenced = for {
-      (path, src) <- sources
-      m <- decl.findAllMatchIn(src).toSeq
-      name = m.group(1)
-      if !allowed(name)
-      body = declarationSpan(src, m.start)
-      ref = ("\\b" + java.util.regex.Pattern.quote(name) + "\\b").r
-      if !sources.exists { case (p, s) =>
-        ref.findAllMatchIn(s).exists(r => p != path || r.start < body._1 || r.start >= body._2)
-      }
-    } yield s"$path: $name"
-    if (unreferenced.nonEmpty)
+    val found = unreferenced(decl)((_, name) => !allowed(name))
+    if (found.nonEmpty)
       fail("private[graft] definitions that only specs reach; move them to src/test:" +
-        unreferenced.mkString("\n  ", "\n  ", ""))
+        found.mkString("\n  ", "\n  ", ""))
+  }
+
+  /** A public member of a top-level object, class or trait: two spaces
+    * in (Scala 2 has no top-level definitions, so only members sit
+    * there), and no access or `override` modifier before `def`/`val`. */
+  private val publicMember =
+    """(?m)^  (?:(?:final|lazy|implicit)\s+)*(?:def|val|var)\s+([A-Za-z_]\w*)""".r
+
+  test("public object and class members in graft are referenced by other main code") {
+    val found = unreferenced(publicMember)((path, name) =>
+      path.startsWith("src/main/scala/graft/") && name != "main" && !keptPublic.contains(name))
+    if (found.nonEmpty)
+      fail("public members that only specs reach; move them to src/test:" +
+        found.mkString("\n  ", "\n  ", ""))
   }
 
   /** [start, end) of the declaration beginning at `at`: its first line
