@@ -1,9 +1,9 @@
 package graft
 
-import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
+import graft.functions.{TextFunctions => TF}
 import graft.operators.{Classifier, Decontaminate, Dedup, Dimensions, FuzzyMatch, LmQuality, Multimodal, Ops, Packing, Ranking, Robots, Similarity}
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Kernels, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -756,7 +756,7 @@ object Queries {
           32 * 1024L, col("new_id"))
         .crossJoin(broadcast(hist
           .select(col("vec_id").as("hist_id"), col("embedding").as("__b"))))
-        .filter(round(VF.cosineSimilarity(col("__a").cast("array<double>"), col("__b").cast("array<double>")), 6) >= 0.4)
+        .filter(round(Kernels.vectorCosine(col("__a"), col("__b")), 6) >= 0.4)
         .select("new_id", "hist_id")
       Ops.recallGate(out, truth, Seq("new_id", "hist_id"), floor = 0.7)
         .select(col("new_id").cast("bigint").as("new_id"),
@@ -1037,7 +1037,7 @@ object Queries {
       Dedup.dedupByPairs(docs, "doc_id", pairs)
         .groupBy(col("lang"))
         .agg(count(lit(1)).cast("bigint").as("n_docs"),
-          sum(size(TF.chunkText(col("text"), maxTokens = 50, overlap = 5)))
+          sum(size(Kernels.chunkText(col("text"), 50, 5)))
             .cast("bigint").as("n_chunks"))
     },
     Some("""WITH RECURSIVE t AS (
@@ -1108,8 +1108,8 @@ object Queries {
     Some(OracleSqlGen.embeddingNearDup))
 
   /** Array / higher-order-function surface over the embedding column
-    * (the hot ANN paths use codegen kernels instead — see
-    * VectorFunctions — but general array manipulation is part of the
+    * (the hot ANN paths use codegen kernels instead — the `vector_*`
+    * Kernels entries — but general array manipulation is part of the
     * user-facing engine). Outputs are comparison-exact (min/max/counts/
     * element access), so no float-summation-order hazards. */
   private val qArrayFuncs = Q("q_array_funcs",
@@ -1248,7 +1248,7 @@ object Queries {
       // one TextStats kernel pass per document; ratios/argmax composed in
       // column space with the same arithmetic as the oracle SQL
       val withStats = t(s, dir, "documents")
-        .withColumn("__st", TF.textStats(col("text")))
+        .withColumn("__st", Kernels.textStats(col("text")))
       val st = col("__st")
       val nChars = st.getField("n_chars")
       val nTokens = st.getField("n_tokens")
@@ -1322,7 +1322,7 @@ object Queries {
     * training run reports before and after filtering. */
   private val qCorpusStats = Q("q_corpus_stats",
     (s, dir) => t(s, dir, "documents")
-      .withColumn("__nt", TF.textStats(col("text")).getField("n_tokens"))
+      .withColumn("__nt", Kernels.textStats(col("text")).getField("n_tokens"))
       .groupBy(col("lang"))
       .agg(count(lit(1)).cast("bigint").as("n_docs"),
         round(avg(col("__nt")), 4).as("avg_tokens"),
@@ -1348,7 +1348,7 @@ object Queries {
   private val qChunkText = Q("q_chunk_text",
     (s, dir) => t(s, dir, "documents")
       .select(col("doc_id").cast("bigint").as("doc_id"),
-        posexplode(TF.chunkText(col("text"), maxTokens = 50, overlap = 5)))
+        posexplode(Kernels.chunkText(col("text"), 50, 5)))
       .select(col("doc_id"), col("pos").cast("bigint").as("chunk_no"),
         col("col").as("chunk")),
     Some("""WITH t AS (
@@ -1456,7 +1456,7 @@ object Queries {
            |WHERE o_orderstatus = 'F' AND o_totalprice > 50000.0
            |GROUP BY 1""".stripMargin))
 
-  /** Unicode NFC normalization under the oracle ([[TF.nfcNormalize]] —
+  /** Unicode NFC normalization under the oracle ([[Kernels.nfcNormalize]] —
     * Spark has no built-in; the JDK normalizer vs DuckDB's utf8proc
     * `nfc_normalize`, two independent UAX #15 implementations checked
     * against each other). Corpus text is ASCII today, so each doc gets
@@ -1476,7 +1476,7 @@ object Queries {
       t(s, dir, "documents").select(
           col("doc_id").cast("bigint").as("doc_id"),
           concat(col("text"), lit(suffix)).as("__raw"))
-        .withColumn("__nfc", TF.nfcNormalize(col("__raw")))
+        .withColumn("__nfc", Kernels.nfcNormalize(col("__raw")))
         .select(
           col("doc_id"),
           length(col("__raw")).cast("bigint").as("raw_len"),
@@ -1510,8 +1510,8 @@ object Queries {
     * for PPM) and must come back with NULL features. Dimensions are
     * powers of two, so every channel mean is a dyadic rational — exact
     * in float32 AND float64, which is what makes the hash compare
-    * byte-stable. The codec-bound formats (JPEG/MP4) remain the honest
-    * [[Multimodal.stub]], exercised in MultimodalSpec.
+    * byte-stable. Compressed-codec video pixels remain a deterministic
+    * stub decoder, exercised in MultimodalSpec.
     */
   /** In-plan ISO-BMFF (MP4) blob: ftyp + moov(mvhd + video trak + audio
     * trak) with constant box layout and doc-id-derived field values —
@@ -1564,7 +1564,7 @@ object Queries {
     (s, dir) => {
       val t0 = t(s, dir, "documents")
         .select(col("doc_id"),
-          graft.operators.Multimodal.videoTrackStats(
+          Kernels.videoTrackStats(
             constructedMp4Blob(col("doc_id"))).as("tr"))
         .select(col("doc_id"), posexplode_outer(col("tr")).as(Seq("ti", "t")))
       val tb = col("t").getField("total_bytes")
@@ -1946,7 +1946,7 @@ object Queries {
 
   /** Animated-GIF frame walk under the oracle (round 11 — retires the
     * "frame 1 only" GIF scope edge the same way [[qVideoFrames]] retired
-    * the video-pixel stub for MJPEG): [[Multimodal.gifFrames]] decodes
+    * the video-pixel stub for MJPEG): [[Kernels.gifFrames]] decodes
     * EVERY frame of the in-plan two-frame animations — per-frame
     * geometry (frame 2 is a sub-rectangle at x=1), Graphic Control
     * Extension delay/disposal, transparent-pixel counts, and
@@ -1958,7 +1958,7 @@ object Queries {
     (s, dir) => {
       constructedAnimatedGifBlob(t(s, dir, "documents"))
         .select(col("doc_id"),
-          graft.operators.Multimodal.gifFrames(col("blob")).as("frames"))
+          Kernels.gifFrames(col("blob")).as("frames"))
         .select(col("doc_id").cast("bigint").as("doc_id"),
           posexplode_outer(col("frames")).as(Seq("fi", "f")))
         .select(col("doc_id"),
@@ -2884,7 +2884,7 @@ object Queries {
           t(s, dir, "documents").select(id.cast("bigint").as("doc_id")),
           2 * 1024L, col("doc_id"))
         .select(col("doc_id"), blob.as("video"))
-      Dedup.videoNearDupPairs(vids, "video", "doc_id",
+      Dedup.sketchPairs(vids, Kernels.videoDhash64(col("video")), "doc_id",
           maxHamming = 6, bands = 8, keyBands = 2)
         .select(col("id_a").cast("bigint").as("id_a"),
           col("id_b").cast("bigint").as("id_b"),
@@ -2910,7 +2910,7 @@ object Queries {
     (s, dir) => {
       val fr = t(s, dir, "documents")
         .select(col("doc_id"),
-          graft.operators.Multimodal.mjpegFrames(
+          Kernels.mjpegFrames(
             constructedMjpegMp4Blob(col("doc_id"))).as("frames"))
         .select(col("doc_id"), posexplode_outer(col("frames")).as(Seq("fi", "frame")))
       // featurize carries ONE id column — pack (doc, frame) into it
@@ -3282,7 +3282,7 @@ object Queries {
   private val qTopNgrams = Q("q_top_ngrams",
     (s, dir) => {
       val counts = t(s, dir, "documents")
-        .select(col("lang"), explode(TF.wordNgrams(col("text"), 3)).as("gram"))
+        .select(col("lang"), explode(Kernels.wordNgrams(col("text"), 3)).as("gram"))
         .groupBy(col("lang"), col("gram"))
         .agg(count(lit(1)).cast("long").as("n_docs"))
       val item = struct((lit(0L) - col("n_docs")).as("negn"),
@@ -3374,7 +3374,7 @@ object Queries {
     (s, dir) => {
       val chunks = t(s, dir, "documents")
         .select(col("lang"), col("doc_id"),
-          posexplode(TF.chunkText(col("text"), maxTokens = 50, overlap = 5))
+          posexplode(Kernels.chunkText(col("text"), 50, 5))
             .as(Seq("chunk_no", "chunk")))
         .withColumn("n_tok", TF.tokenCount(col("chunk")))
       val packed = Packing.packChunks(chunks, Seq("lang"),
@@ -3521,7 +3521,7 @@ object Queries {
       t(s, dir, "documents")
         .filter(length(trim(col("text"))) > 0)
         .select(col("doc_id"),
-          concat_ws("\n", TF.chunkText(col("text"), maxTokens = 4)).as("text")),
+          concat_ws("\n", Kernels.chunkText(col("text"), 4, 0)).as("text")),
       // minChars = 0: NOTHING is exempt, matching the oracle's
       // unconditional row_number dedup — with the default (1), an empty
       // derived line (token count ≡ 1 mod 4 ending in a tab) would be
@@ -3729,7 +3729,7 @@ object Queries {
 
   /** Media triage under the oracle gate: PNG blobs are CONSTRUCTED
     * in-plan (magic + IHDR with dimensions derived from doc_id), parsed
-    * back by the [[Multimodal.imageMeta]] kernel, and the oracle
+    * back by the [[Kernels.imageMeta]] kernel, and the oracle
     * recomputes the planted dimensions arithmetically — so the binary
     * round-trip (build → parse) is hash-verified, not just spec'd.
     * Every 7th blob is truncated mid-header and must come back NULL.
@@ -3752,7 +3752,7 @@ object Queries {
         substring(blobFull, 1, 12))
         .when(pmod(col("doc_id"), lit(5)) === 0, svgBlob)
         .otherwise(blobFull)
-      val m = Multimodal.imageMeta(blob)
+      val m = Kernels.imageMeta(blob)
       t(s, dir, "documents").select(col("doc_id").cast("bigint").as("doc_id"),
         m.getField("format").as("format"),
         m.getField("width").cast("bigint").as("width"),
@@ -3768,7 +3768,7 @@ object Queries {
            |            ELSE CAST(50 + doc_id % 500 AS BIGINT) END AS height
            |FROM documents""".stripMargin))
 
-  /** Audio triage under the oracle (r13): [[Multimodal.audioMeta]] over
+  /** Audio triage under the oracle (r13): [[Kernels.audioMeta]] over
     * in-plan WAV and FLAC streams — the codec-free pre-decode pass that
     * routes/filters blobs BEFORE any decode is scheduled. doc_id%4
     * picks the container (0 = FLAC with a varying declared
@@ -3813,7 +3813,7 @@ object Queries {
         .when(pmod(id, lit(4)) === 1, wavHex)
         .when(pmod(id, lit(4)) === 2, mp3Hex)
         .otherwise(junkHex)
-      val m = Multimodal.audioMeta(col("blob"))
+      val m = Kernels.audioMeta(col("blob"))
       truncatedBlob(t(s, dir, "documents").select(id, fullHex.as("hex")), 20)
         .select(id.cast("bigint").as("doc_id"),
           m.getField("format").as("format"),
@@ -4004,7 +4004,7 @@ object Queries {
       val sem = emb.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(qv))
         .select(col("vec_id").as("doc_id"),
-          round(VF.cosineSimilarity(col("__qv"), col("embedding")), 6).as("cos"))
+          round(Kernels.vectorCosine(col("__qv"), col("embedding")), 6).as("cos"))
       Ranking.rrfFuse(lex, sem, "doc_id", "bm25", "cos",
           k = 50, kRrf = 60, topN = 20)
         .select(col("doc_id").cast("bigint").as("doc_id"),
@@ -4095,7 +4095,7 @@ object Queries {
       toks.groupBy("token").agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("token").asc).limit(10)
         .crossJoin(broadcast(sketch))
-        .withColumn("__est", Ops.cmsEstimate(col("__sk"), col("token")))
+        .withColumn("__est", Kernels.cmsEstimate(col("__sk"), col("token")))
         .filter(col("__est") >= col("cnt") &&
           col("__est") <= col("cnt") + ceil(lit(eps) * col("__n")))
         .select(col("token"), col("cnt").cast("bigint").as("cnt"))
@@ -5002,7 +5002,7 @@ object Queries {
     * quoted `>` attribute), a style block, a comment hiding markup,
     * block tags, named + numeric character references, an `&nbsp;`,
     * and a literal `2 < 3` — then stripped back by the
-    * [[TF.htmlExtract]] codegen kernel. The oracle recomputes the
+    * [[Kernels.htmlExtract]] codegen kernel. The oracle recomputes the
     * expected extraction from the same construction, replaying the
     * whitespace-collapse contract with explicit RE2 classes — so tag
     * stripping, rawtext skipping, entity decoding, block separation,
@@ -5029,7 +5029,7 @@ object Queries {
         lit("<ul><li>first</li><li>a&nbsp;&lt;3</li></ul>"),
         lit("<table><tr><td>c1</td><td>2 < 3</td></tr></table>"),
         lit("</body></html>"))
-      val ext = TF.htmlExtract(html)
+      val ext = Kernels.htmlExtract(html)
       t(s, dir, "documents").select(
         col("doc_id").cast("bigint").as("doc_id"),
         ext.as("extracted"),
@@ -5184,7 +5184,7 @@ object Queries {
     * a non-default port; a bare host (empty path); percent-escapes
     * (unreserved decode, uppercase, malformed-verbatim); an ftp URL
     * with its default port; and plain junk that must come back NULL —
-    * normalized by the [[TF.urlParts]] codegen kernel, with the oracle
+    * normalized by the [[Kernels.urlParts]] codegen kernel, with the oracle
     * recomputing every field from the same construction arithmetic.
     * One projection over the scan; at crawl scale `normalized` is the
     * dedup key and `host`/`apex` the politeness/group keys.
@@ -5204,7 +5204,7 @@ object Queries {
         .when(m === 4, concat(lit("ftp://files.example"), k,
           lit(".com:21/pub/data"), id.cast("string"), lit(".txt")))
         .otherwise(concat(lit("not a url "), id.cast("string")))
-      val p = TF.urlParts(url)
+      val p = Kernels.urlParts(url)
       t(s, dir, "documents").select(
         id.cast("bigint").as("doc_id"),
         p.getField("normalized").as("normalized"),
@@ -5251,7 +5251,7 @@ object Queries {
     * OGG arms of the codec-free routing tier, hash-verified the same
     * way the BMFF/WAV/FLAC/MP3 arms are — containers CONSTRUCTED
     * in-plan from doc_id arithmetic, parsed back by
-    * [[Multimodal.videoMeta]] / [[Multimodal.audioMeta]], the oracle
+    * [[Kernels.videoMeta]] / [[Kernels.audioMeta]], the oracle
     * recomputing every planted field. doc_id%5 picks the container:
     * 0 = WebM (power-of-two float Duration so the IEEE bits are hex
     * arithmetic, varying TrackEntry count), 1 = Matroska with an
@@ -5303,8 +5303,8 @@ object Queries {
       val junkHex = lit("6E6F74206120636F6E7461696E65722E2E2E2E2E")
       val fullHex = when(m === 0, webmHex).when(m === 1, mkvHex)
         .when(m === 2, vorbisHex).when(m === 3, opusHex).otherwise(junkHex)
-      val v = Multimodal.videoMeta(col("blob"))
-      val a = Multimodal.audioMeta(col("blob"))
+      val v = Kernels.videoMeta(col("blob"))
+      val a = Kernels.audioMeta(col("blob"))
       truncatedBlob(t(s, dir, "documents").select(id, fullHex.as("hex")), 20)
         .select(id.cast("bigint").as("doc_id"),
           coalesce(v.getField("format"), a.getField("format")).as("format"),
@@ -5429,7 +5429,7 @@ object Queries {
         when(pmod(id, lit(17)) === 0, lit("<p>lorem ipsum</p>"))
           .otherwise(lit("")),
         lit("</body></html>"))
-      val text2 = TF.htmlExtract(html)
+      val text2 = Kernels.htmlExtract(html)
       val qualityOk = TF.c4Rules(text2).getField("keep")
       val host = concat(lit("host"), pmod(id, lit(25)).cast("string"),
         lit(".com"))
@@ -5441,7 +5441,7 @@ object Queries {
         id.cast("bigint").as("doc_id"),
         qualityOk.as("quality_ok"),
         host.as("host"), path.as("path"),
-        TF.urlParts(rawUrl).getField("normalized").as("url"))
+        Kernels.urlParts(rawUrl).getField("normalized").as("url"))
       val robots = t(s, dir, "nation").select(
         concat(lit("host"), col("n_nationkey").cast("string"), lit(".com"))
           .as("rhost"),
@@ -5500,7 +5500,7 @@ object Queries {
     * doc_id — plain UTF-8, BOM'd UTF-8, UTF-8 with a planted invalid
     * 0xE9 byte (the classic mislabeled-latin-1 page → windows-1252
     * fallback), and BOM'd UTF-16LE — sniffed back by
-    * [[TF.decodeText]]; the oracle recomputes text, encoding, and the
+    * [[Kernels.decodeText]]; the oracle recomputes text, encoding, and the
     * fallback byte count arithmetically (document text is stripped to
     * printable ASCII on both sides so the planted bytes are the only
     * non-ASCII). One codegen projection; fail-open by contract.
@@ -5536,7 +5536,7 @@ object Queries {
         .when(m === 7, unhex(lit(big5Hex)))
         .when(m === 8, unhex(lit(falseHex)))
         .otherwise(concat(unhex(lit("FFFE")), encode(clean, "UTF-16LE")))
-      val d = TF.decodeText(blob)
+      val d = Kernels.decodeText(blob)
       t(s, dir, "documents").select(id.cast("bigint").as("doc_id"),
         d.getField("text").as("text_out"),
         d.getField("encoding").as("encoding"),
@@ -5761,7 +5761,7 @@ object Queries {
            |       round(psi, 6) AS psi_total
            |FROM sc2, tot""".stripMargin))
 
-  /** Hyperlink extraction under the oracle (r13): [[TF.htmlLinks]]
+  /** Hyperlink extraction under the oracle (r13): [[Kernels.htmlLinks]]
     * over in-plan pages carrying five link shapes per document —
     * double-quoted absolute (with `&amp;` entity in the query string),
     * unquoted relative, single-quoted with an uppercase HREF, an
@@ -5791,7 +5791,7 @@ object Queries {
         lit("\">t</a></p></body></html>"))
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"),
-          posexplode(TF.htmlLinks(html)).as(Seq("pos", "link")))
+          posexplode(Kernels.htmlLinks(html)).as(Seq("pos", "link")))
         .select(col("doc_id"), col("pos").cast("bigint").as("pos"),
           col("link"))
     },
@@ -5807,8 +5807,8 @@ object Queries {
            |FROM p CROSS JOIN (SELECT unnest(range(0, 5)) AS j) u""".stripMargin))
 
   /** The frontier micro-pipeline composed end-to-end (r13):
-    * [[TF.htmlLinks]] → [[TF.urlResolve]] (RFC 3986 §5.2) →
-    * [[TF.urlParts]] canonicalization, over the same five-link pages
+    * [[Kernels.htmlLinks]] → [[Kernels.urlResolve]] (RFC 3986 §5.2) →
+    * [[Kernels.urlParts]] canonicalization, over the same five-link pages
     * as q_link_extract with a MIXED-CASE base URL — so relative hrefs
     * resolve against the page URL and come out canonical (lowercased
     * host), the absolute link passes through, and the same-document
@@ -5836,9 +5836,9 @@ object Queries {
         lit(".example.com/dir/page.html"))
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"), pageUrl.as("__base"),
-          posexplode(TF.htmlLinks(html)).as(Seq("pos", "__href")))
+          posexplode(Kernels.htmlLinks(html)).as(Seq("pos", "__href")))
         .select(col("doc_id"), col("pos").cast("bigint").as("pos"),
-          TF.urlParts(TF.urlResolve(col("__base"), col("__href")))
+          Kernels.urlParts(Kernels.urlResolve(col("__base"), col("__href")))
             .getField("normalized").as("url"))
     },
     Some("""WITH p AS (
@@ -5858,8 +5858,8 @@ object Queries {
     * from the document text) is CONSTRUCTED in-plan per doc — with
     * Content-Length computed from the actual payload bytes — then
     * pulled back through the FULL ingest chain:
-    * [[Multimodal.warcRecords]] → [[Multimodal.httpParts]] →
-    * [[TF.decodeText]] → [[TF.htmlExtract]]. The oracle recomputes
+    * [[Kernels.warcRecords]] → [[Kernels.httpParts]] →
+    * [[Kernels.decodeText]] → [[Kernels.htmlExtract]]. The oracle recomputes
     * record count, target URI, HTTP status, and the extracted text
     * arithmetically; every 7th doc truncates the archive and must come
     * back NULL (the fail-closed whole-blob contract). Round 14: the
@@ -5971,10 +5971,10 @@ object Queries {
         .select(col("doc_id"),
           when(col("__zw"), zstdStoreFrameCol(col("__blob")))
             .otherwise(col("__blob")).as("__b"))
-      val recs2 = Multimodal.warcRecords(col("__b"))
+      val recs2 = Kernels.warcRecords(col("__b"))
       val resp2 = element_at(recs2, 2)
-      val hp2 = Multimodal.httpParts(resp2.getField("payload"))
-      val ext2 = TF.htmlExtract(TF.decodeText(hp2.getField("body"))
+      val hp2 = Kernels.httpParts(resp2.getField("payload"))
+      val ext2 = Kernels.htmlExtract(Kernels.decodeText(hp2.getField("body"))
         .getField("text"))
       base.select(col("doc_id"),
         size(recs2).cast("bigint").as("n_records"),
@@ -6083,8 +6083,8 @@ object Queries {
     * archive — local headers, central directory, EOCD, with real CRC32
     * fields (Spark's own `crc32` over the per-doc content) and real
     * little-endian offsets computed in-plan — is constructed per doc
-    * and pulled back through [[Multimodal.zipEntries]] +
-    * [[Multimodal.zipExtract]] (listing, extraction, CRC+size verify,
+    * and pulled back through [[Kernels.zipEntries]] +
+    * [[Kernels.zipExtract]] (listing, extraction, CRC+size verify,
     * missing-name NULL). Every 5th doc instead carries a DEFLATED
     * archive built by the JDK's ZipOutputStream at plan build (data
     * descriptors, real deflate — the wild shape); every 9th truncates
@@ -6161,15 +6161,15 @@ object Queries {
           when(col("__tr"), substring(col("__b0"), 1, 40))
             .otherwise(col("__b0")).as("__zip"))
         .select(col("doc_id"), col("__m5"), col("__zip"),
-          Multimodal.zipEntries(col("__zip")).as("__es"))
+          Kernels.zipEntries(col("__zip")).as("__es"))
         .select(col("doc_id"),
           size(col("__es")).cast("bigint").as("n_entries"),
           element_at(col("__es"), 1).getField("name").as("name0"),
           element_at(col("__es"), 1).getField("size").cast("bigint").as("size0"),
-          decode(Multimodal.zipExtract(col("__zip"),
+          decode(Kernels.zipExtract(col("__zip"),
             when(col("__m5") === 2, lit("d.txt")).otherwise(lit("doc.txt"))),
             "UTF-8").as("text"),
-          Multimodal.zipExtract(col("__zip"), lit("no/such/entry")).isNull
+          Kernels.zipExtract(col("__zip"), lit("no/such/entry")).isNull
             .as("missing_is_null"))
     },
     Some("""WITH c AS (
@@ -6245,8 +6245,8 @@ object Queries {
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"), blob.as("__b"))
         .select(col("doc_id"),
-          size(Multimodal.cfbEntries(col("__b"))).cast("bigint").as("n_entries"),
-          Multimodal.docText(col("__b")).as("text"))
+          size(Kernels.cfbEntries(col("__b"))).cast("bigint").as("n_entries"),
+          Kernels.docText(col("__b")).as("text"))
     },
     Some("""SELECT CAST(doc_id AS BIGINT) AS doc_id,
            |  CAST(CASE doc_id % 6
@@ -6313,8 +6313,8 @@ object Queries {
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"), blob.as("__b"))
         .select(col("doc_id"),
-          size(Multimodal.cfbEntries(col("__b"))).cast("bigint").as("n_entries"),
-          Multimodal.pptText(col("__b")).as("text"))
+          size(Kernels.cfbEntries(col("__b"))).cast("bigint").as("n_entries"),
+          Kernels.pptText(col("__b")).as("text"))
     },
     Some("""SELECT CAST(doc_id AS BIGINT) AS doc_id,
            |  CAST(CASE doc_id % 6
@@ -6356,11 +6356,11 @@ object Queries {
         .when(m === 1, unhex(lit(ZstdDictFixture.frame1Hex)))
         .when(m === 2, unhex(lit(ZstdDictFixture.frame2Hex)))
         .otherwise(unhex(lit(ZstdDictFixture.rawFrameHex)))
-      val dec = when(m === 4, Multimodal.zstdDecompress(col("__b")))
-        .when(m === 5, Multimodal.zstdDecompress(col("__b"), wrongDict))
-        .when(m === 3, Multimodal.zstdDecompress(col("__b"),
+      val dec = when(m === 4, Kernels.zstdDecompress(col("__b")))
+        .when(m === 5, Kernels.zstdDecompressDict(col("__b"), wrongDict))
+        .when(m === 3, Kernels.zstdDecompressDict(col("__b"),
           unhex(lit(ZstdDictFixture.rawDictHex))))
-        .otherwise(Multimodal.zstdDecompress(col("__b"), dict))
+        .otherwise(Kernels.zstdDecompressDict(col("__b"), dict))
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"), m.as("__m"), blob.as("__b"))
         .select(col("doc_id"), dec.cast("string").as("text"),
@@ -6383,9 +6383,9 @@ object Queries {
 
   /** LZW `.Z` (Unix compress) under the oracle (round 17): the
     * RFC 9110 `compress` coding decoded for real — a DYNAMIC per-row
-    * roundtrip (doc text + id → in-plan [[Multimodal.lzwCompress]],
+    * roundtrip (doc text + id → in-plan [[Kernels.lzwCompress]],
     * whose output format LzwSpec pins as decodable by gzip AND
-    * libarchive → [[Multimodal.lzwDecompress]]), a pinned
+    * libarchive → [[Kernels.lzwDecompress]]), a pinned
     * gzip-validated block-mode fixture, a corrupt stream (NULL), and
     * a pinned NON-BLOCK-mode stream (the pre-1985 format libarchive
     * doesn't even implement). */
@@ -6402,11 +6402,11 @@ object Queries {
       // (.Z has no checksum, so only a future-code reference is a
       // GUARANTEED refusal rather than a garbage decode)
       val corruptHex = "1f9d90415802"
-      val blob = when(m === 0, Multimodal.lzwCompress(encode(dynText, "UTF-8")))
+      val blob = when(m === 0, Kernels.lzwCompress(encode(dynText, "UTF-8")))
         .when(m === 1, unhex(lit(blockHex)))
         .when(m === 2, unhex(lit(corruptHex)))
         .otherwise(unhex(lit(oldHex)))
-      val dec = Multimodal.lzwDecompress(col("__b"))
+      val dec = Kernels.lzwDecompress(col("__b"))
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"), blob.as("__b"))
         .select(col("doc_id"), dec.cast("string").as("text_out"),
@@ -6426,9 +6426,9 @@ object Queries {
            |FROM c""".stripMargin))
 
   /** LZ4 frames under the oracle (round 17): a DYNAMIC per-row
-    * roundtrip (doc text + id -> in-plan [[Multimodal.lz4CompressStore]],
+    * roundtrip (doc text + id -> in-plan [[Kernels.lz4CompressStore]],
     * whose frames Lz4Spec pins as decodable by the reference binary ->
-    * [[Multimodal.lz4Decompress]]), a pinned reference-CLI fixture
+    * [[Kernels.lz4Decompress]]), a pinned reference-CLI fixture
     * (lz4 -9 -BD --content-size: linked blocks + declared size +
     * content checksum), and a corrupt-checksum stream (NULL). */
   private val qLz4Roundtrip = Q("q_lz4_roundtrip",
@@ -6451,10 +6451,10 @@ object Queries {
       // flip the last content-checksum byte: guaranteed refusal
       val badHex = fixHex.dropRight(2) + "8c"
       val blob = when(m === 0,
-        Multimodal.lz4CompressStore(encode(dynText, "UTF-8")))
+        Kernels.lz4CompressStore(encode(dynText, "UTF-8")))
         .when(m === 1, unhex(lit(fixHex)))
         .otherwise(unhex(lit(badHex)))
-      val dec = Multimodal.lz4Decompress(col("__b"))
+      val dec = Kernels.lz4Decompress(col("__b"))
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"), blob.as("__b"))
         .select(col("doc_id"), dec.cast("string").as("text_out"),
@@ -6508,7 +6508,7 @@ object Queries {
         .otherwise(encode(lit("""{\rtf1 trunca"""), "UTF-8"))
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"), blob.as("__b"))
-        .select(col("doc_id"), Multimodal.rtfText(col("__b")).as("text"))
+        .select(col("doc_id"), Kernels.rtfText(col("__b")).as("text"))
     },
     Some("""SELECT CAST(doc_id AS BIGINT) AS doc_id,
            |  CASE doc_id % 6
@@ -6573,7 +6573,7 @@ object Queries {
         .when(m === 3, encode(concat(lit("no mail "), idS), "UTF-8"))
         .when(m === 4, encode(lit(badCs), "ISO-8859-1"))
         .otherwise(encode(lit(unterm), "ISO-8859-1"))
-      val p = Multimodal.emlParts(col("__b"))
+      val p = Kernels.emlParts(col("__b"))
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"), blob.as("__b"))
         .select(col("doc_id"),
@@ -6646,8 +6646,8 @@ object Queries {
         .when(m === 2, unhex(lit(hexOf(lane2))))
         .when(m === 3, encode(concat(lit("no mp3 "), idS), "UTF-8"))
         .otherwise(unhex(lit(hexOf(lane4))))
-      val tg = Multimodal.id3Tags(col("__b"))
-      val am = Multimodal.audioMeta(col("__b"))
+      val tg = Kernels.id3Tags(col("__b"))
+      val am = Kernels.audioMeta(col("__b"))
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"), blob.as("__b"))
         .select(col("doc_id"),
@@ -6725,7 +6725,7 @@ object Queries {
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"), xml.as("__x"))
         .select(col("doc_id"),
-          posexplode_outer(TF.feedEntries(col("__x"))).as(Seq("pos", "e")))
+          posexplode_outer(Kernels.feedEntries(col("__x"))).as(Seq("pos", "e")))
         .select(col("doc_id"), col("pos").cast("bigint").as("pos"),
           col("e.kind").as("kind"), col("e.title").as("title"),
           col("e.link").as("link"), col("e.date").as("date"),
@@ -6867,11 +6867,11 @@ object Queries {
       val blob = when(m === 0, encode(mbox, "ISO-8859-1"))
         .when(m === 1, encode(concat(lit("no mbox "), idS), "UTF-8"))
         .otherwise(encode(lit("From "), "UTF-8"))
-      val p = Multimodal.emlParts(col("m"))
+      val p = Kernels.emlParts(col("m"))
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"), blob.as("__b"))
         .select(col("doc_id"),
-          posexplode_outer(Multimodal.mboxMessages(col("__b")))
+          posexplode_outer(Kernels.mboxMessages(col("__b")))
             .as(Seq("pos", "m")))
         .select(col("doc_id"), col("pos").cast("bigint").as("pos"),
           p.getField("from").as("from"),
@@ -6897,7 +6897,7 @@ object Queries {
            |FROM rows_""".stripMargin))
 
   /** HTML page-head metadata under the oracle (round 17):
-    * [[TF.htmlMeta]] over per-doc constructed pages — a full head
+    * [[Kernels.htmlMeta]] over per-doc constructed pages — a full head
     * (title with entities + fold whitespace, og:* triple, name
     * description, canonical after a stylesheet link, lang, a script
     * carrying a decoy title), a bare-body page (all NULL fields), and
@@ -6921,7 +6921,7 @@ object Queries {
       val html = when(m === 0, page)
         .when(m === 1, concat(lit("<p>just a body "), idS, lit("</p>")))
         .otherwise(concat(lit("plain text "), idS))
-      val mt = TF.htmlMeta(col("__h"))
+      val mt = Kernels.htmlMeta(col("__h"))
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"), html.as("__h"))
         .select(col("doc_id"),
@@ -6985,7 +6985,7 @@ object Queries {
         .when(m === 2, unhex(lit(hexOf(woff2))))
         .when(m === 3, encode(concat(lit("no font "), idS), "UTF-8"))
         .otherwise(unhex(lit(hexOf(ttf.take(30)))))
-      val fm = Multimodal.fontMeta(col("__b"))
+      val fm = Kernels.fontMeta(col("__b"))
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"), blob.as("__b"))
         .select(col("doc_id"),
@@ -7038,7 +7038,7 @@ object Queries {
         .when(m === 1, unhex(lit(hexOf(bare))))
         .when(m === 2, unhex(lit(hexOf(jpeg))))
         .otherwise(encode(concat(lit("no exif "), idS), "UTF-8"))
-      val em = Multimodal.exifMeta(col("__b"))
+      val em = Kernels.exifMeta(col("__b"))
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"), blob.as("__b"))
         .select(col("doc_id"),
@@ -7239,10 +7239,10 @@ object Queries {
         .when(m9 === 13, unhex(lit(szHex)))
         .when(m9 === 14, unhex(lit(rarHex)))
         .when(m9 === 15,
-          Multimodal.lzwCompress(encode(concat(lit("lzw doc "),
+          Kernels.lzwCompress(encode(concat(lit("lzw doc "),
             id.cast("string")), "UTF-8")))
         .when(m9 === 16,
-          Multimodal.lz4CompressStore(encode(concat(lit("lz4 doc "),
+          Kernels.lz4CompressStore(encode(concat(lit("lz4 doc "),
             id.cast("string")), "UTF-8")))
         .otherwise(encode(concat(lit("junk "), id.cast("string")), "UTF-8"))
       // MAGIC dispatch FIRST, then exactly ONE kernel per row inside a
@@ -7278,13 +7278,13 @@ object Queries {
               // elimination — one walk per row.
               coalesce(
                 when(array_contains(transform(
-                  Multimodal.cfbEntries(col("__b")),
+                  Kernels.cfbEntries(col("__b")),
                   e => e.getField("name")), "Workbook"), lit("xls"))
                   .when(array_contains(transform(
-                    Multimodal.cfbEntries(col("__b")),
+                    Kernels.cfbEntries(col("__b")),
                     e => e.getField("name")), "WordDocument"), lit("doc"))
                   .when(array_contains(transform(
-                    Multimodal.cfbEntries(col("__b")),
+                    Kernels.cfbEntries(col("__b")),
                     e => e.getField("name")), "PowerPoint Document"),
                     lit("ppt")),
                 lit("cfb")))
@@ -7297,41 +7297,41 @@ object Queries {
             .otherwise(lit("unknown")).as("__mk"))
         .select(col("doc_id"), col("__mk"),
           when(col("__mk") === "pdf",
-            Multimodal.pdfMeta(col("__b")).getField("n_pages").cast("bigint"))
+            Kernels.pdfMeta(col("__b")).getField("n_pages").cast("bigint"))
             .when(col("__mk") === "zip",
-              size(Multimodal.zipEntries(col("__b"))).cast("bigint"))
+              size(Kernels.zipEntries(col("__b"))).cast("bigint"))
             .when(col("__mk") === "gzip",
-              length(Multimodal.gunzip(col("__b"))).cast("bigint"))
+              length(Kernels.gunzip(col("__b"))).cast("bigint"))
             .when(col("__mk") === "lzw",
-              length(Multimodal.lzwDecompress(col("__b"))).cast("bigint"))
+              length(Kernels.lzwDecompress(col("__b"))).cast("bigint"))
             .when(col("__mk") === "lz4",
-              length(Multimodal.lz4Decompress(col("__b"))).cast("bigint"))
+              length(Kernels.lz4Decompress(col("__b"))).cast("bigint"))
             .when(col("__mk") === "image",
-              Multimodal.imageMeta(col("__b")).getField("width").cast("bigint"))
+              Kernels.imageMeta(col("__b")).getField("width").cast("bigint"))
             .when(col("__mk") === "audio",
-              Multimodal.audioMeta(col("__b")).getField("sample_rate").cast("bigint"))
+              Kernels.audioMeta(col("__b")).getField("sample_rate").cast("bigint"))
             .when(col("__mk") === "avro",
-              Multimodal.avroMeta(col("__b")).getField("n_records").cast("bigint"))
+              Kernels.avroMeta(col("__b")).getField("n_records").cast("bigint"))
             .when(col("__mk") === "tar",
-              size(Multimodal.tarEntries(col("__b"))).cast("bigint"))
+              size(Kernels.tarEntries(col("__b"))).cast("bigint"))
             .when(col("__mk") === "zstd",
-              length(Multimodal.zstdDecompress(col("__b"))).cast("bigint"))
+              length(Kernels.zstdDecompress(col("__b"))).cast("bigint"))
             .when(col("__mk") === "doc",
-              length(Multimodal.docText(col("__b"))).cast("bigint"))
+              length(Kernels.docText(col("__b"))).cast("bigint"))
             .when(col("__mk") === "xls",
-              size(Multimodal.xlsCells(col("__b"))).cast("bigint"))
+              size(Kernels.xlsCells(col("__b"))).cast("bigint"))
             .when(col("__mk") === "ppt",
-              length(Multimodal.pptText(col("__b"))).cast("bigint"))
+              length(Kernels.pptText(col("__b"))).cast("bigint"))
             .when(col("__mk") === "cfb",
-              size(Multimodal.cfbEntries(col("__b"))).cast("bigint"))
+              size(Kernels.cfbEntries(col("__b"))).cast("bigint"))
             .when(col("__mk") === "parquet",
-              Multimodal.parquetMeta(col("__b")).getField("num_rows")
+              Kernels.parquetMeta(col("__b")).getField("num_rows")
                 .cast("bigint"))
             .when(col("__mk") === "7z",
-              Multimodal.sevenZipMeta(col("__b")).getField("pack_bytes")
+              Kernels.sevenZipMeta(col("__b")).getField("pack_bytes")
                 .cast("bigint"))
             .when(col("__mk") === "rar",
-              Multimodal.rarMeta(col("__b")).getField("n_files")
+              Kernels.rarMeta(col("__b")).getField("n_files")
                 .cast("bigint"))
             .as("detail"))
         .select(col("doc_id"),
@@ -7362,7 +7362,7 @@ object Queries {
            |FROM documents""".stripMargin))
 
   /** IDN canonicalization under the oracle (r14): unicode hosts fold
-    * to their RFC 3492 punycode ACE form inside [[TF.urlParts]], so a
+    * to their RFC 3492 punycode ACE form inside [[Kernels.urlParts]], so a
     * crawl that sees `bücher.example` and `xn--bcher-kva.example`
     * dedups them to ONE key — asserted in-plan by `ace_equal`
     * (normalized(unicode form) == normalized(ACE form), per row). The
@@ -7381,10 +7381,10 @@ object Queries {
       val aceUrl = concat(lit("https://"), element_at(typedlit(aces), hi),
         lit("/p/"), id.cast("string"))
       t(s, dir, "documents").select(id.cast("bigint").as("doc_id"),
-        TF.urlParts(url).getField("normalized").as("url"),
-        TF.urlParts(url).getField("host").as("host"),
-        (TF.urlParts(url).getField("normalized") ===
-          TF.urlParts(aceUrl).getField("normalized")).as("ace_equal"))
+        Kernels.urlParts(url).getField("normalized").as("url"),
+        Kernels.urlParts(url).getField("host").as("host"),
+        (Kernels.urlParts(url).getField("normalized") ===
+          Kernels.urlParts(aceUrl).getField("normalized")).as("ace_equal"))
     },
     Some("""WITH c AS (
            |  SELECT doc_id,
@@ -7399,7 +7399,7 @@ object Queries {
            |FROM c""".stripMargin))
 
   /** JSON structure profiling under the oracle (r14):
-    * [[TF.jsonPaths]] — the semi-structured ANALYZE run before
+    * [[Kernels.jsonPaths]] — the semi-structured ANALYZE run before
     * committing a parquet schema to scraped JSON. Per-doc documents
     * carry nested objects, an array whose SECOND element alternates
     * string/number across docs (the mixed-type case the profile
@@ -7427,7 +7427,7 @@ object Queries {
       val page = when(pmod(id, lit(11)) === 0, substring(doc, 1, 20))
         .otherwise(doc)
       t(s, dir, "documents")
-        .select(explode_outer(TF.jsonPaths(page)).as("p"))
+        .select(explode_outer(Kernels.jsonPaths(page)).as("p"))
         .groupBy(col("p.path").as("path"), col("p.jtype").as("jtype"))
         .agg(count(lit(1)).cast("bigint").as("n"))
     },
@@ -7455,9 +7455,9 @@ object Queries {
     * fixed 64 bytes, so every header byte except the payload is a
     * plan-time constant and the checksum is exact), per-doc member
     * text, end-of-archive zero blocks — pulled back through
-    * [[Multimodal.tarEntries]] + [[Multimodal.tarExtract]]. Every 4th
+    * [[Kernels.tarEntries]] + [[Kernels.tarExtract]]. Every 4th
     * doc instead carries a `.tar.gz` (fixed archive, decoded in-plan
-    * through [[Multimodal.gunzip]] — the chain crawled datasets
+    * through [[Kernels.gunzip]] — the chain crawled datasets
     * actually arrive as); every 7th truncates mid-member → all-NULL.
     */
   private val qTarExtract = Q("q_tar_extract",
@@ -7508,18 +7508,18 @@ object Queries {
         bos.toByteArray.map("%02x".format(_)).mkString
       }
       val blob0 = when(pmod(id, lit(4)) === 1,
-          Multimodal.gunzip(unhex(lit(tgzHex))))
+          Kernels.gunzip(unhex(lit(tgzHex))))
         .otherwise(tarBin)
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"), pmod(id, lit(4)).as("__m4"),
           when(pmod(id, lit(7)) === 0, substring(blob0, 1, 600))
             .otherwise(blob0).as("__tar"))
         .select(col("doc_id"), col("__m4"), col("__tar"),
-          Multimodal.tarEntries(col("__tar")).as("__es"))
+          Kernels.tarEntries(col("__tar")).as("__es"))
         .select(col("doc_id"),
           size(col("__es")).cast("bigint").as("n_members"),
           element_at(col("__es"), 1).getField("name").as("name0"),
-          rtrim(decode(Multimodal.tarExtract(col("__tar"),
+          rtrim(decode(Kernels.tarExtract(col("__tar"),
             when(col("__m4") === 1, lit("gz/member.txt"))
               .otherwise(lit("data/doc.txt"))), "UTF-8")).as("text"))
     },
@@ -7574,8 +7574,8 @@ object Queries {
   /** Office-document text under the oracle (r14): the docx/epub chain
     * COMPOSED from the r14 pieces — an OOXML-shaped archive (stored
     * ZIP carrying `word/document.xml`, real in-plan CRC/offsets as in
-    * q_zip_extract) → [[Multimodal.zipExtract]] → [[TF.decodeText]] →
-    * [[TF.htmlExtract]] (tag strip + entity decode + whitespace
+    * q_zip_extract) → [[Kernels.zipExtract]] → [[Kernels.decodeText]] →
+    * [[Kernels.htmlExtract]] (tag strip + entity decode + whitespace
     * collapse works on XML exactly as on HTML). Every 7th doc
     * truncates the archive → NULL text. Zero new kernels: the point
     * is that the container, decode, and text layers compose.
@@ -7592,8 +7592,8 @@ object Queries {
       storedZipOne(t(s, dir, "documents")
           .select(id, encode(xml, "UTF-8").as("__c1")), "word/document.xml")
         .select(id.cast("bigint").as("doc_id"),
-          TF.htmlExtract(TF.decodeText(
-            Multimodal.zipExtract(col("__zip"), lit("word/document.xml")))
+          Kernels.htmlExtract(Kernels.decodeText(
+            Kernels.zipExtract(col("__zip"), lit("word/document.xml")))
             .getField("text")).as("text"))
     },
     Some("""WITH c AS (
@@ -7625,7 +7625,7 @@ object Queries {
       storedZipOne(t(s, dir, "documents")
           .select(id, encode(xml, "UTF-8").as("__c1")), "ppt/slides/slide1.xml")
         .select(id.cast("bigint").as("doc_id"),
-          Multimodal.pptxText(col("__zip")).as("text"))
+          Kernels.pptxText(col("__zip")).as("text"))
     },
     Some("""WITH c AS (
            |  SELECT doc_id, doc_id % 7 = 0 AS tr,
@@ -7717,7 +7717,7 @@ object Queries {
             le32(length(col("__l2")) + lit(l1Bytes.length)), le16(lit(0)))
             .as("__zip0"))
         .select(col("doc_id"),
-          explode_outer(Multimodal.xlsxCells(
+          explode_outer(Kernels.xlsxCells(
             when(col("__tr"), substring(col("__zip0"), 1, 60))
               .otherwise(col("__zip0")))).as("c"))
         .select(col("doc_id"),
@@ -7806,8 +7806,8 @@ object Queries {
         .select(id.cast("bigint").as("doc_id"), m.as("__m"), blob.as("__b"))
         .select(col("doc_id"),
           explode_outer(when(col("__m") === 5,
-            Multimodal.xlsCells(col("__b"), 2))
-            .otherwise(Multimodal.xlsCells(col("__b")))).as("c"))
+            Kernels.xlsCells(col("__b"), 2))
+            .otherwise(Kernels.xlsCells(col("__b")))).as("c"))
         .select(col("doc_id"),
           col("c.row").cast("bigint").as("row"),
           col("c.col").cast("bigint").as("col"),
@@ -7842,7 +7842,7 @@ object Queries {
            |       CAST(cl AS BIGINT) AS col, v AS value
            |FROM cells""".stripMargin))
 
-  /** HTML table extraction under the oracle (r14): [[TF.htmlTables]]
+  /** HTML table extraction under the oracle (r14): [[Kernels.htmlTables]]
     * over in-plan pages carrying a 3-row table with OMITTED closing
     * tags (the HTML-legal form), an `&amp;` entity in a header cell,
     * markup inside cells that must contribute only its text — plus a
@@ -7872,7 +7872,7 @@ object Queries {
         .otherwise(html)
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"),
-          explode_outer(TF.htmlTables(page)).as("c"))
+          explode_outer(Kernels.htmlTables(page)).as("c"))
         .select(col("doc_id"),
           col("c.table").cast("bigint").as("tbl"),
           col("c.row").cast("bigint").as("row"),
@@ -7905,7 +7905,7 @@ object Queries {
     * structural near-collisions join them, all verified bit-exact),
     * every 13th doc is undecodable
     * junk (NULL hash, no pairs, never a guess) —
-    * [[Dedup.imageNearDupPairs]] finds the planted pairs via the
+    * [[Dedup.sketchPairs]] finds the planted pairs via the
     * banded Hamming join (8 bands × 8 bits, pigeonhole-lossless at
     * maxHamming 6). The oracle recomputes every pixel, every luma
     * cell, all 64 gradient bits, the signed 64-bit pack, and the
@@ -7984,7 +7984,7 @@ object Queries {
           8 * 1024L, col("doc_id"))
         .select(col("doc_id"), img.as("img"))
         .unionAll(fxDf)
-      Dedup.imageNearDupPairs(imgs, "img", "doc_id",
+      Dedup.sketchPairs(imgs, Kernels.dHash64(col("img")), "doc_id",
           maxHamming = 6, bands = 8, keyBands = 2)
         .select(col("id_a").cast("bigint").as("id_a"),
           col("id_b").cast("bigint").as("id_b"),
@@ -7995,9 +7995,9 @@ object Queries {
   /** Ingestion-time perceptual near-dup screen under the oracle
     * (round 15, VERDICT r14 #7): history images (doc_id%4==0, the
     * same in-plan PGM family as q_image_phash) are indexed ONCE via
-    * [[Dedup.phashIndex]] and persisted `partitionBy("band")`; the
+    * [[Dedup.sketchIndex]] and persisted `partitionBy("band")`; the
     * batch (the other 3/4) is screened through
-    * [[Dedup.incrementalPhash]], which probes only maxHamming+1 of
+    * [[Dedup.incrementalSketch]], which probes only maxHamming+1 of
     * the 8 band partitions — partial-probe pigeonhole keeps recall
     * EXACT while the scan prunes to 7/8 of the index (plan contract
     * pinned in PlanSpec). The oracle replays pixels, hashes, and the
@@ -8031,9 +8031,9 @@ object Queries {
       val batch = imgs.filter(pmod(col("doc_id"), lit(4)) =!= 0)
         .unionAll(s.createDataFrame(incFx).toDF("doc_id", "img"))
       val idxDir = scratch("phash_inc")
-      Dedup.phashIndex(hist, "img", "doc_id")
+      Dedup.sketchIndex(hist, Kernels.dHash64(col("img")), "doc_id")
         .write.mode("overwrite").partitionBy("band").parquet(idxDir)
-      Dedup.incrementalPhash(batch, idxDir, "img", "doc_id",
+      Dedup.incrementalSketch(batch, idxDir, Kernels.dHash64(col("img")), "doc_id",
           maxHamming = 6, bands = 8)
         .select(col("new_id").cast("bigint").as("new_id"),
           col("hist_id").cast("bigint").as("hist_id"),
@@ -8075,7 +8075,7 @@ object Queries {
 
   /** Audio perceptual near-dup under the oracle (round 16): the
     * [[qImagePhash]] recipe on decoded PCM —
-    * [[Dedup.audioNearDupPairs]] fingerprints each in-plan WAV with
+    * [[Dedup.sketchPairs]] fingerprints each in-plan WAV with
     * the temporal energy-envelope dHash (65 integer frame energies
     * over the 16-bit-normalized samples, gradient bits), then the
     * banded Hamming machinery with Manku keyBands=2 subsets. The
@@ -8094,7 +8094,7 @@ object Queries {
           t(s, dir, "documents").select(id.cast("bigint").as("doc_id")),
           8 * 1024L, col("doc_id"))
         .select(col("doc_id"), audioDocWav(col("doc_id")).as("clip"))
-      Dedup.audioNearDupPairs(clips, "clip", "doc_id",
+      Dedup.sketchPairs(clips, Kernels.audioDhash64(col("clip")), "doc_id",
           maxHamming = 6, bands = 8, keyBands = 2)
         .select(col("id_a").cast("bigint").as("id_a"),
           col("id_b").cast("bigint").as("id_b"),
@@ -8104,8 +8104,8 @@ object Queries {
 
   /** Incremental audio screen under the oracle (round 16): history
     * clips (doc_id%4=0) build a persisted band-partitioned
-    * [[Dedup.audioFingerprintIndex]]; the batch probes it through
-    * [[Dedup.incrementalAudio]]'s partial-probe pigeonhole (bands
+    * [[Dedup.sketchIndex]]; the batch probes it through
+    * [[Dedup.incrementalSketch]]'s partial-probe pigeonhole (bands
     * 0..maxHamming only — the partition-pruned scan). The oracle is
     * the brute-force cross-split join. */
   private val qIncrementalAudio = Q("q_incremental_audio",
@@ -8122,9 +8122,9 @@ object Queries {
       val hist = clips.filter(pmod(col("doc_id"), lit(4)) === 0)
       val batch = clips.filter(pmod(col("doc_id"), lit(4)) =!= 0)
       val idxDir = scratch("audio_inc")
-      Dedup.audioFingerprintIndex(hist, "clip", "doc_id")
+      Dedup.sketchIndex(hist, Kernels.audioDhash64(col("clip")), "doc_id")
         .write.mode("overwrite").partitionBy("band").parquet(idxDir)
-      Dedup.incrementalAudio(batch, idxDir, "clip", "doc_id",
+      Dedup.incrementalSketch(batch, idxDir, Kernels.audioDhash64(col("clip")), "doc_id",
           maxHamming = 6, bands = 8)
         .select(col("new_id").cast("bigint").as("new_id"),
           col("hist_id").cast("bigint").as("hist_id"),
@@ -8195,8 +8195,8 @@ object Queries {
     * header, catalog/pages/page objects, content stream, CLASSIC XREF
     * TABLE with real 10-digit byte offsets computed in-plan from the
     * variable-length pieces, trailer, startxref — is constructed per
-    * doc and pulled back through [[Multimodal.pdfMeta]] +
-    * [[Multimodal.pdfText]]. Three body shapes rotate by doc_id%3:
+    * doc and pulled back through [[Kernels.pdfMeta]] +
+    * [[Kernels.pdfText]]. Three body shapes rotate by doc_id%3:
     * per-doc literal strings with Td/T* line breaks, a CONSTANT
     * FlateDecode content stream (deflated at plan build — the decoded
     * text is what the oracle checks), and per-doc TJ kerning arrays.
@@ -8351,12 +8351,12 @@ object Queries {
         .otherwise(encode(pdfStr, "UTF-8"))
       val blobTr = when(pmod(id, lit(6)) === 0, substring(blob, 1, 50))
         .otherwise(blob)
-      val m = Multimodal.pdfMeta(blobTr)
+      val m = Kernels.pdfMeta(blobTr)
       t(s, dir, "documents").select(id.cast("bigint").as("doc_id"),
         m.getField("version").as("version"),
         m.getField("n_pages").cast("bigint").as("n_pages"),
         m.getField("encrypted").as("encrypted"),
-        Multimodal.pdfText(blobTr).as("text"))
+        Kernels.pdfText(blobTr).as("text"))
     },
     Some("""WITH c AS (
            |  SELECT doc_id, doc_id % 5 AS m5, doc_id % 6 = 0 AS tr,
@@ -8487,7 +8487,7 @@ object Queries {
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"), blob.as("__b"))
         .select(col("doc_id"),
-          explode_outer(Multimodal.pdfImages(col("__b"))).as("c"))
+          explode_outer(Kernels.pdfImages(col("__b"))).as("c"))
         .select(col("doc_id"),
           col("c.obj").cast("bigint").as("obj"),
           col("c.format").as("format"),
@@ -8529,9 +8529,9 @@ object Queries {
             |FROM rows_""".stripMargin))
 
   /** Sitemap discovery under the oracle (r14): the frontier loop's
-    * missing step — `robots.txt` → [[TF.robotsSitemaps]] (the sitemap
-    * URL) → [[TF.sitemapEntries]] (urlset vs sitemapindex split) →
-    * [[TF.urlResolve]] → [[TF.urlParts]] canonicalization. Four
+    * missing step — `robots.txt` → [[Kernels.robotsSitemaps]] (the sitemap
+    * URL) → [[Kernels.sitemapEntries]] (urlset vs sitemapindex split) →
+    * [[Kernels.urlResolve]] → [[Kernels.urlParts]] canonicalization. Four
     * sitemap shapes rotate by doc_id%4: a two-entry urlset with an
     * `&amp;` entity and a RELATIVE loc (resolved against the sitemap's
     * own URL), a GZIPPED sitemapindex (sitemap.xml.gz — decoded
@@ -8608,21 +8608,21 @@ object Queries {
       val brBytes = unhex(lit(brSmHex))
       val m8 = pmod(id, lit(8))
       val xml = when(m8 === 1,
-          TF.decodeText(Multimodal.gunzip(
+          Kernels.decodeText(Kernels.gunzip(
             when(tr, substring(gzBytes, 1, 20)).otherwise(gzBytes)))
             .getField("text"))
         .when(m8 === 5,
-          TF.decodeText(Multimodal.brotliDecompress(
+          Kernels.decodeText(Kernels.brotliDecompress(
             when(tr, substring(brBytes, 1, 20)).otherwise(brBytes)))
             .getField("text"))
         .otherwise(when(tr, substring(xmlFull, 1, 30)).otherwise(xmlFull))
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"),
-          element_at(TF.robotsSitemaps(robots), 1).as("__sm"),
-          posexplode_outer(TF.sitemapEntries(xml)).as(Seq("pos", "e")))
+          element_at(Kernels.robotsSitemaps(robots), 1).as("__sm"),
+          posexplode_outer(Kernels.sitemapEntries(xml)).as(Seq("pos", "e")))
         .select(col("doc_id"), col("pos").cast("bigint").as("pos"),
           col("e").getField("kind").as("kind"),
-          TF.urlParts(TF.urlResolve(col("__sm"), col("e").getField("loc")))
+          Kernels.urlParts(Kernels.urlResolve(col("__sm"), col("e").getField("loc")))
             .getField("normalized").as("url"),
           col("e").getField("lastmod").as("lastmod"))
     },

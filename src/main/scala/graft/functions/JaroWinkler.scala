@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Kernels}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Jaro-Winkler string similarity.
@@ -67,9 +66,6 @@ object JaroWinkler {
     while (prefix < maxPrefix && s1.charAt(prefix) == s2.charAt(prefix)) prefix += 1
     jaro + 0.1 * prefix * (1.0 - jaro)
   }
-
-  /** Column API: `jaro_winkler(a, b): Double` in [0, 1]. */
-  def jaro_winkler(a: Column, b: Column): Column = Kernels.jaroWinkler(a, b)
 
   // ---- thresholded-join pruning kernels (round 12) -------------------
   //
@@ -187,7 +183,4 @@ object JaroWinkler {
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(signature(s, frac))
 
-  def fuzzy_length_band(s: Column, r: Double): Column = Kernels.fuzzyLengthBand(s, r)
-
-  def fuzzy_signature(s: Column, frac: Double): Column = Kernels.fuzzySignature(s, frac)
 }

@@ -6,7 +6,7 @@ package graft.functions
   * per horizontal neighbor pair (left < right), pack row-major into a
   * 64-bit signature. Near-duplicate images (recompressions, small
   * edits, overlays) land within a few bits; the banded Hamming join
-  * ([[graft.operators.Dedup.imageNearDupPairs]]) finds them without
+  * ([[graft.operators.Dedup.sketchPairs]]) finds them without
   * an all-pairs product — the SimHash machinery pointed at pixels.
   *
   * DETERMINISM: everything is integer arithmetic — ITU-R 601 luma as

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Kernels}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
@@ -89,10 +88,4 @@ object SimHash {
     while (b < 64) { if (counts(b) > 0) out |= (1L << b); b += 1 }
     out
   }
-
-  /** Column API: `simhash64(tokens: array<string>): Long`. */
-  def simhash64(tokens: Column): Column = Kernels.simHash64(tokens)
-
-  /** Column API: one-pass lowercase+tokenize+sketch over raw text. */
-  def simhashText(text: Column): Column = Kernels.simHashText(text)
 }

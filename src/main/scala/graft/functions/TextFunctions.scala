@@ -144,25 +144,6 @@ object TextFunctions {
     }
   }
 
-  /** All per-document counts in ONE pass (struct of n_chars, n_tokens,
-    * n_subtokens, n_punct, hits_en/fr/es/de) — the bulk-scoring path.
-    * Semantics identical to the individual functions above; see
-    * [[TextKernels]] for the exact reproduction notes. Ratio/argmax
-    * composition over the struct stays in column space so oracle SQL
-    * arithmetic is unchanged.
-    */
-  def textStats(text: Column): Column =
-    Kernels.textStats(text)
-
-  /** Token-window chunks for training pipelines: sliding windows of
-    * `maxTokens` whitespace tokens advancing by `maxTokens - overlap`,
-    * each re-joined with single spaces; empty trimmed text yields zero
-    * chunks. Codegen'd single pass — `posexplode` the result for one
-    * row per chunk.
-    */
-  def chunkText(text: Column, maxTokens: Int, overlap: Int = 0): Column =
-    Kernels.chunkText(text, maxTokens, overlap)
-
   /** Distinct `patterns` occurring anywhere in `text` (substring
     * containment, case-sensitive — lowercase both sides for
     * case-insensitive screening), in declaration order. One
@@ -174,128 +155,6 @@ object TextFunctions {
     import org.apache.spark.sql.{GraftBridge, MultiMatch}
     GraftBridge.column(MultiMatch(GraftBridge.expression(text), patterns))
   }
-
-  /** Distinct word n-grams as space-joined strings — the decontamination
-    * / overlap-detection working set (string form so an ANSI-SQL oracle
-    * can reproduce it, unlike the hashed shingles). Documents with fewer
-    * than n tokens yield an empty array; null text yields null (callers
-    * explode, which drops both).
-    */
-  def wordNgrams(text: Column, n: Int): Column = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    Kernels.wordNgrams(text, n)
-  }
-
-  /** ALL word n-grams in order, duplicates kept — the counting variant
-    * of [[wordNgrams]] for frequency estimation (LM training/scoring).
-    */
-  def allWordNgrams(text: Column, n: Int): Column = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    Kernels.wordNgramsAll(text, n)
-  }
-
-  /** Per-document repetition diagnostics (the Gopher-style quality
-    * signals): token count, distinct-token ratio, and the frequency
-    * share of the single most repeated token. One codegen kernel pass
-    * per document (hash-map counting — the earlier higher-order-
-    * function form re-scanned the token array per distinct token);
-    * ratio arithmetic stays in column space so oracle SQL is unchanged.
-    * Zero shuffle. Empty text yields null ratios; NULL text yields a
-    * NULL struct.
-    */
-  /** Content-defined chunk boundaries (1-based code-point end offsets)
-    * — the shift-resilient chunking key for chunk-level dedup; see
-    * [[CdcKernels]] for the contract and [[graft.operators.Dedup.cdcChunks]]
-    * for the row-per-chunk operator built on it.
-    */
-  def cdcBoundaries(text: Column, maskBits: Int, minLen: Int, maxLen: Int): Column =
-    Kernels.cdcBoundaries(text, maskBits, minLen, maxLen)
-
-  /** Unicode NFC normalization (UAX #15). Normalize before
-    * fingerprinting so canonically equivalent texts (decomposed accents,
-    * singleton forms) dedup together; all-ASCII input is returned
-    * untouched via the `isNormalized` fast path. NULL stays NULL.
-    */
-  def nfcNormalize(text: Column): Column =
-    Kernels.nfcNormalize(text)
-
-  /** HTML → plain text (the crawl-corpus boilerplate strip): tags
-    * removed with block-level separation preserved as newlines,
-    * script/style/comment content dropped, character references
-    * decoded, whitespace collapsed. Exact semantics (and their SQL
-    * replayability) documented on [[HtmlKernels.htmlExtract]].
-    * NULL stays NULL.
-    */
-  def htmlExtract(html: Column): Column =
-    Kernels.htmlExtract(html)
-
-  /** `href` values of `<a>`/`<area>` tags in document order — the
-    * frontier-discovery companion of [[htmlExtract]] (crawl loop:
-    * extract links → canonicalize with [[urlParts]] → gate with
-    * Robots → dedup). Entity-decoded, script/style/comment content
-    * skipped, relative URLs NOT resolved. NULL stays NULL. */
-  def htmlLinks(html: Column): Column =
-    Kernels.htmlLinks(html)
-
-  /** Bytes → struct(text, encoding, n_fallback_bytes): BOM-aware
-    * encoding sniff (UTF-16 LE/BE), strict UTF-8 validation (RFC 3629
-    * — valid input passes through zero-copy), windows-1252 fallback
-    * for mislabeled web text. Fail-open: always produces text; the
-    * diagnosis rides beside it for quality gates. Contract on
-    * [[EncodingKernels.decodeText]]. NULL blob stays NULL. */
-  def decodeText(blob: Column): Column =
-    Kernels.decodeText(blob)
-
-  /** RFC 3986 §5.2 reference resolution: absolute URL of `ref` against
-    * `base` — the bridge from [[htmlLinks]]'s relative hrefs to
-    * [[urlParts]]. NULL for an unparseable base; resolution does NOT
-    * normalize (feed the result to [[urlParts]]). */
-  /** JSON structure profile: every node as a (path, jtype) row —
-    * array elements merged under `[*]`, keys beyond identifier chars
-    * bracketed — NULL for anything that is not one valid RFC 8259
-    * document. The semi-structured ANALYZE primitive. */
-  def jsonPaths(doc: Column): Column =
-    Kernels.jsonPaths(doc)
-
-  /** HTML `<table>` cells as flat (table, row, col, text) rows —
-    * tables numbered in document order, nested tables separate, cell
-    * text entity-decoded and whitespace-collapsed; NULL on a
-    * truncated document (unclosed table). */
-  def htmlTables(html: Column): Column =
-    Kernels.htmlTables(html)
-
-  /** `Sitemap:` URLs of a robots.txt in file order (group-independent
-    * per RFC 9309). */
-  def robotsSitemaps(robotsTxt: Column): Column =
-    Kernels.robotsSitemaps(robotsTxt)
-
-  /** Sitemap/sitemap-index parse: array of (kind, loc, lastmod)
-    * frontier entries, NULL on malformed framing (fail-closed). The
-    * discovery step between `robots_sitemaps` and [[urlResolve]]. */
-  def sitemapEntries(xml: Column): Column =
-    Kernels.sitemapEntries(xml)
-
-  /** HTML page metadata (r17): struct(title, description, og_title,
-    * og_description, og_image, canonical, lang) — best-effort head
-    * scraping, NULL fields when absent. */
-  def htmlMeta(html: Column): Column =
-    Kernels.htmlMeta(html)
-
-  /** RSS/Atom feed parse (r17): array of (kind, title, link, date,
-    * summary) entries, NULL on malformed framing — the fresh-content
-    * discovery surface next to [[sitemapEntries]]. */
-  def feedEntries(xml: Column): Column =
-    Kernels.feedEntries(xml)
-
-  def urlResolve(base: Column, ref: Column): Column =
-    Kernels.urlResolve(base, ref)
-
-  /** URL canonicalization + parts: struct(normalized, scheme, host,
-    * port, path, query, apex), NULL for unparseable input — the key
-    * for crawl URL dedup and host-level grouping. Contract on
-    * [[UrlKernels.urlParts]]. */
-  def urlParts(url: Column): Column =
-    Kernels.urlParts(url)
 
   /** Gopher's document-level stop words (Rae et al. 2021, A1.1): a doc
     * must contain at least two DISTINCT members to pass the rule. */
@@ -396,6 +255,15 @@ object TextFunctions {
       k.getField("clean").as("clean"))
   }
 
+  /** Per-document repetition diagnostics (the Gopher-style quality
+    * signals): token count, distinct-token ratio, and the frequency
+    * share of the single most repeated token. One codegen kernel pass
+    * per document (hash-map counting — the earlier higher-order-
+    * function form re-scanned the token array per distinct token);
+    * ratio arithmetic stays in column space so oracle SQL is unchanged.
+    * Zero shuffle. Empty text yields null ratios; NULL text yields a
+    * NULL struct.
+    */
   def repetitionStats(text: Column): Column = {
     val k = Kernels.repetitionCounts(text)
     val n = k.getField("n_tokens")

@@ -351,7 +351,7 @@ object TextKernels {
   }
 
   /** Distinct word n-grams, space-joined, first-occurrence order — the
-    * single-pass kernel behind [[graft.functions.TextFunctions.wordNgrams]].
+    * single-pass kernel behind [[Kernels.wordNgrams]].
     * The higher-order-function formulation (transform + slice +
     * array_join + array_distinct) walks every token n times and builds
     * a temp array per gram; this walks the tokens once with one

@@ -226,7 +226,7 @@ object UrlKernels {
   }
 
   /** RFC 3986 §5.2 reference resolution: the absolute form of `ref`
-    * against `base` — the step between [[graft.functions.TextFunctions.htmlLinks]]
+    * against `base` — the step between [[Kernels.htmlLinks]]
     * (which yields relative hrefs verbatim) and [[urlParts]] (which
     * needs absolute URLs). Strict-mode RFC semantics, validated
     * against the RFC's own §5.4 normal AND abnormal examples:

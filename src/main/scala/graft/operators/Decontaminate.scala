@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{TextFunctions => TF}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Kernels}
 import org.apache.spark.sql.functions._
 
 /** Benchmark decontamination — flag training documents that share word
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * broadcast to the training scan, so the big side never shuffles — the
   * whole job is one corpus pass plus a per-document hash-map probe. The
   * per-document n-gram sets are deduplicated array-side
-  * ([[TF.wordNgrams]] is distinct by construction), so `n_shared`
+  * ([[Kernels.wordNgrams]] is distinct by construction), so `n_shared`
   * counts DISTINCT contaminated n-grams per training document.
   */
 object Decontaminate {
@@ -28,11 +28,11 @@ object Decontaminate {
               n: Int = 5, minShared: Int = 1): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     val benchGrams = bench
-      .select(explode(TF.wordNgrams(col(textCol), n)).as("__gram"))
+      .select(explode(Kernels.wordNgrams(col(textCol), n)).as("__gram"))
       .distinct()
     train
       .select(col(idCol).as("doc_id"),
-        explode(TF.wordNgrams(col(textCol), n)).as("__gram"))
+        explode(Kernels.wordNgrams(col(textCol), n)).as("__gram"))
       .join(broadcast(benchGrams), Seq("__gram"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).cast("long").as("n_shared"))
@@ -71,7 +71,7 @@ object Decontaminate {
     // reclaimed by the ContextCleaner once the result frame is
     // unreachable.
     val benchGrams = bench
-      .select(explode(TF.wordNgrams(col(textCol), n)).as("__gram"))
+      .select(explode(Kernels.wordNgrams(col(textCol), n)).as("__gram"))
       .distinct()
       .localCheckpoint(true)
     // distributed build (treeAggregate under stat.bloomFilter); only the
@@ -92,7 +92,7 @@ object Decontaminate {
     // SURVIVORS (true hits + fpp of the stream) ever exchange
     train
       .select(col(idCol).as("doc_id"),
-        explode(TF.wordNgrams(col(textCol), n)).as("__gram"))
+        explode(Kernels.wordNgrams(col(textCol), n)).as("__gram"))
       .filter(mightContain)
       .join(benchGrams, Seq("__gram"))
       .groupBy(col("doc_id"))
@@ -129,13 +129,12 @@ object Decontaminate {
                   threshold: Double = 0.95): DataFrame = {
     require(threshold >= -1.0 && threshold <= 1.0,
       s"cosine threshold must be in [-1, 1], got $threshold")
-    import graft.functions.VectorFunctions
     val c = corpus.filter(col(vecCol).isNotNull)
-      .select(col(idCol).as("id"), VectorFunctions.l2Normalize(col(vecCol)).as("__cv"))
+      .select(col(idCol).as("id"), Kernels.vectorL2Normalize(col(vecCol)).as("__cv"))
     val b = bench.filter(col(vecCol).isNotNull)
-      .select(VectorFunctions.l2Normalize(col(vecCol)).as("__bv"))
+      .select(Kernels.vectorL2Normalize(col(vecCol)).as("__bv"))
     c.crossJoin(broadcast(b))
-      .withColumn("__s", round(VectorFunctions.dot(col("__cv"), col("__bv")), 6))
+      .withColumn("__s", round(Kernels.vectorDot(col("__cv"), col("__bv")), 6))
       .groupBy(col("id"))
       .agg(max(col("__s")).as("max_cosine"))
       .withColumn("contaminated", col("max_cosine") >= threshold)

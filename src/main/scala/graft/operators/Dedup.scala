@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.functions.{SimHash, TextFunctions, VectorFunctions}
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import graft.functions.TextFunctions
+import org.apache.spark.sql.{Column, DataFrame, Kernels, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MetadataBuilder
 
@@ -29,13 +29,6 @@ object Dedup {
       .groupBy(col("__fp"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("dup_count"))
       .drop("__fp")
-
-  /** MinHash signature as K independent min-hashes of a 64-bit shingle
-    * hash set — deterministic, one codegen'd kernel pass, no UDF (see
-    * the `minhashes` kernel).
-    */
-  def minhashSignature(shingleHashes: Column, k: Int): Column =
-    org.apache.spark.sql.Kernels.minHashes(shingleHashes, k)
 
   /** Per-band LSH keys of a minhash signature: element `b` is xxhash64
     * over the band's `r` consecutive signature members — the banding
@@ -103,7 +96,7 @@ object Dedup {
         TextFunctions.shingleHashes(col("__t"), shingleSize).as("__hs"))
 
     // signature: per family member k, min over re-mixed shingle hashes
-    val withSig = base.withColumn("__sig", minhashSignature(col("__hs"), numHashes))
+    val withSig = base.withColumn("__sig", Kernels.minHashes(col("__hs"), numHashes))
 
     // (id, band, bandHash) only — no arrays in the wide stage
     val banded = withSig.select(
@@ -187,80 +180,36 @@ object Dedup {
       Ops.fanOutForCompute(
           df.select(col(idCol).as("__id"), col(textCol).as("__t")),
           1024 * 1024L, col("__id"))
-        .select(col("__id"), SimHash.simhashText(col("__t")).as("__sh")),
+        .select(col("__id"), Kernels.simHashText(col("__t")).as("__sh")),
       maxHamming, bands, maxBucket, capObs, keyBands)
 
-  /** Perceptual-hash image near-dup pairs (round 14): dHash64 over the
-    * raster blobs ([[graft.functions.PHashKernels]] — recompressions
-    * and small edits land within a few bits), then the SAME banded
+  /** Perceptual near-dup pairs over a 64-bit media sketch: `sketch` is
+    * one of the fingerprint kernels over the blob column — `dhash64`
+    * for images ([[graft.functions.PHashKernels]]: recompressions and
+    * small edits land within a few bits), `audio_dhash64` (temporal
+    * energy envelope over WAV/G.711/ADPCM/AU/AIFF/FLAC samples) or
+    * `video_dhash64` (temporal luma envelope over MJPEG-MP4 /
+    * animated-GIF frames), all integer-exact. Then the SAME banded
     * Hamming machinery as [[simhashPairs]]: pigeonhole bands as the
     * candidate buckets, exact bit_count verification, bounded buckets
-    * with observable drops. Undecodable blobs (codec formats, tiny or
-    * malformed images) hash NULL and simply produce no pairs — the
-    * triage tier reports them, this operator never guesses. */
-  def imageNearDupPairs(df: DataFrame, bytesCol: String, idCol: String,
-                        maxHamming: Int = 6, bands: Int = 8,
-                        maxBucket: Int = 4096,
-                        capObs: Option[Observation] = None,
-                        keyBands: Int = 1): DataFrame = {
-    require(bands > maxHamming, // this operator's contract is EXACT recall
-      s"imageNearDupPairs pigeonhole needs bands > maxHamming, " +
-        s"got $bands <= $maxHamming")
-    val h = org.apache.spark.sql.Kernels.dHash64(col(bytesCol))
-    // null sketches are absorbed inside bandedHammingPairs (r17 opt:
-    // a filter here was predicate-pushed below the sketch Project and
-    // re-evaluated the whole decode kernel — guide §4.4)
-    bandedHammingPairs(
-      df.select(col(idCol).as("__id"), h.as("__sh")),
-      maxHamming, bands, maxBucket, capObs, keyBands)
-  }
-
-  /** Audio perceptual near-dup pairs (round 16): the image banding
-    * pattern applied to decoded PCM — the `audio_dhash64` kernel
-    * (temporal energy-envelope fingerprint over WAV/G.711/ADPCM/AU/
-    * AIFF/FLAC samples, integer-exact) sketches each blob to 64 bits,
-    * then the SAME banded Hamming machinery as [[imageNearDupPairs]]:
-    * pigeonhole bands, exact bit_count verification, bounded buckets
     * with observable drops, Manku-style keyBands subsets. Undecodable
-    * or sub-65-sample blobs hash NULL and produce no pairs. */
-  def audioNearDupPairs(df: DataFrame, bytesCol: String, idCol: String,
-                        maxHamming: Int = 6, bands: Int = 8,
-                        maxBucket: Int = 4096,
-                        capObs: Option[Observation] = None,
-                        keyBands: Int = 1): DataFrame = {
-    require(bands > maxHamming, // EXACT recall is this operator's contract
-      s"audioNearDupPairs pigeonhole needs bands > maxHamming, " +
-        s"got $bands <= $maxHamming")
-    val h = org.apache.spark.sql.Kernels.audioDhash64(col(bytesCol))
-    // null sketches are absorbed inside bandedHammingPairs (r17 opt:
-    // a filter here was predicate-pushed below the sketch Project and
-    // re-evaluated the whole decode kernel — guide §4.4)
-    bandedHammingPairs(
-      df.select(col(idCol).as("__id"), h.as("__sh")),
-      maxHamming, bands, maxBucket, capObs, keyBands)
-  }
-
-  /** Video near-dup pairs (round 16): [[audioNearDupPairs]]'s frame
-    * twin — the `video_dhash64` kernel (temporal
-    * luma-envelope over decoded MJPEG-MP4 / animated-GIF frames,
-    * integer-exact) sketches each blob, then the shared banded
-    * Hamming machinery. Frames never enter an exchange — the
-    * fingerprint collapses each video to 8 bytes inside the scan
+    * blobs hash NULL and simply produce no pairs — the triage tier
+    * reports them, this operator never guesses. Blobs never enter an
+    * exchange: the sketch collapses each to 8 bytes inside the scan
     * projection. */
-  def videoNearDupPairs(df: DataFrame, bytesCol: String, idCol: String,
-                        maxHamming: Int = 6, bands: Int = 8,
-                        maxBucket: Int = 4096,
-                        capObs: Option[Observation] = None,
-                        keyBands: Int = 1): DataFrame = {
-    require(bands > maxHamming, // EXACT recall is this operator's contract
-      s"videoNearDupPairs pigeonhole needs bands > maxHamming, " +
+  def sketchPairs(df: DataFrame, sketch: Column, idCol: String,
+                  maxHamming: Int = 6, bands: Int = 8,
+                  maxBucket: Int = 4096,
+                  capObs: Option[Observation] = None,
+                  keyBands: Int = 1): DataFrame = {
+    require(bands > maxHamming, // this operator's contract is EXACT recall
+      s"sketchPairs pigeonhole needs bands > maxHamming, " +
         s"got $bands <= $maxHamming")
-    val h = org.apache.spark.sql.Kernels.videoDhash64(col(bytesCol))
     // null sketches are absorbed inside bandedHammingPairs (r17 opt:
     // a filter here was predicate-pushed below the sketch Project and
     // re-evaluated the whole decode kernel — guide §4.4)
     bandedHammingPairs(
-      df.select(col(idCol).as("__id"), h.as("__sh")),
+      df.select(col(idCol).as("__id"), sketch.as("__sh")),
       maxHamming, bands, maxBucket, capObs, keyBands)
   }
 
@@ -370,7 +319,7 @@ object Dedup {
                         maxHamming: Int = 3): DataFrame = {
     val src = df.select(col(idCol).as("__id"), col(textCol).as("__t"))
     def sk(d: DataFrame) = d.select(col("__id"),
-      SimHash.simhashText(col("__t")).as("__sh"))
+      Kernels.simHashText(col("__t")).as("__sh"))
     // r17 opt: the broadcast nested-loop probe runs in the STREAMED
     // side's tasks — fan that side out so the O(n²) sketch compares
     // use every core (no-op at real scan parallelism; guide §2.5).
@@ -410,7 +359,7 @@ object Dedup {
     val src = sampled.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("__id"), col(vecCol).as("__raw"))
     def unit(d: DataFrame) = d.select(col("__id"),
-      VectorFunctions.l2Normalize(col("__raw")).as("__v"))
+      Kernels.vectorL2Normalize(col("__raw")).as("__v"))
     // r17 opt: the O(n²) dot products run in the streamed side's tasks
     // — fan that side out (no-op at real scan parallelism; guide §2.5).
     // r18: cost-gated at 64 KB/task (quadratic work per streamed row).
@@ -418,7 +367,7 @@ object Dedup {
       .select(col("__id").as("id_a"), col("__v").as("__va"))
     val b = unit(src).select(col("__id").as("id_b"), col("__v").as("__vb"))
     a.join(broadcast(b), col("id_a") < col("id_b"))
-      .withColumn("cosine", round(VectorFunctions.dot(col("__va"), col("__vb")), 6))
+      .withColumn("cosine", round(Kernels.vectorDot(col("__va"), col("__vb")), 6))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
   }
@@ -752,7 +701,7 @@ object Dedup {
     * xxhash immediately, so both exchanges — the per-gram
     * document-frequency aggregate and the duplicate-flag join back onto
     * (doc, gramHash) — carry ~16-byte rows, never gram text. The
-    * distinct-per-doc gram kernel ([[TextFunctions.wordNgrams]]) bounds
+    * distinct-per-doc gram kernel ([[Kernels.wordNgrams]]) bounds
     * any one gram's rows by the corpus doc count. A genuinely hot
     * boilerplate gram is a skew key of narrow rows in the dup-flag
     * join's probe side, and — measured, SCALING.md "Span dedup under
@@ -786,7 +735,7 @@ object Dedup {
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
     require(saltBuckets >= 1, s"saltBuckets must be >= 1, got $saltBuckets")
     val grams = docs.select(col(idCol).as("doc_id"),
-        explode(TextFunctions.wordNgrams(col(textCol), n)).as("__g"))
+        explode(Kernels.wordNgrams(col(textCol), n)).as("__g"))
       .select(col("doc_id"), xxhash64(col("__g")).as("__gh"))
     // wordNgrams is distinct-per-doc, so count(*) IS document frequency
     val dupGrams = grams.groupBy(col("__gh"))
@@ -819,7 +768,7 @@ object Dedup {
 
   /** Embedding near-duplicate pairs: cosine >= threshold, candidates from
     * random-hyperplane LSH buckets (see
-    * [[graft.functions.VectorFunctions.cosineLshBucket]]).
+    * [[Kernels.vectorLshBucket]]).
     *
     * `bands` independent hash tables OR-amplify recall: a pair is a
     * candidate if it collides in ANY band (recall = 1-(1-p^nBits)^bands
@@ -832,21 +781,21 @@ object Dedup {
                        bands: Int = 1): DataFrame = {
     require(bands >= 1, s"bands must be >= 1, got $bands")
     val unit = df.select(col(idCol).as("__id"),
-      VectorFunctions.l2Normalize(col(vecCol)).as("__v"))
+      Kernels.vectorL2Normalize(col(vecCol)).as("__v"))
     val v =
       if (bands == 1)
         unit.withColumn("__band", lit(0))
-          .withColumn("__bkt", VectorFunctions.cosineLshBucket(col("__v"), lshBits))
+          .withColumn("__bkt", Kernels.vectorLshBucket(col("__v"), lshBits))
       else
         unit.select(col("__id"), col("__v"),
           posexplode(array((0 until bands).map(b =>
-            VectorFunctions.cosineLshBucket(col("__v"), lshBits, seed = 42L + b)): _*))
+            Kernels.vectorLshBucket(col("__v"), lshBits, 42L + b)): _*))
             .as(Seq("__band", "__bkt")))
     val a = v.select(col("__band"), col("__bkt"), col("__id").as("id_a"), col("__v").as("__va"))
     val b = v.select(col("__band"), col("__bkt"), col("__id").as("id_b"), col("__v").as("__vb"))
     val scored = a.join(b, Seq("__band", "__bkt"))
       .filter(col("id_a") < col("id_b"))
-      .withColumn("cosine", round(VectorFunctions.dot(col("__va"), col("__vb")), 6))
+      .withColumn("cosine", round(Kernels.vectorDot(col("__va"), col("__vb")), 6))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
     // the same pair can collide in several bands — dedup AFTER the
@@ -961,7 +910,7 @@ object Dedup {
         TextFunctions.shingleHashes(col(textCol), shingleSize).as("__hs"))
       .filter(size(col("__hs")) > 0)
       .select(col("doc_id"),
-        minhashSignature(col("__hs"), numHashes).as("sig", meta))
+        Kernels.minHashes(col("__hs"), numHashes).as("sig", meta))
     val banded = sigs.select(col("doc_id"),
       posexplode(bandHashes(col("sig"), bands, r)).as(Seq("band", "bandhash")))
       .select(col("doc_id"), col("band"), col("bandhash").as("bandhash", meta))
@@ -1129,22 +1078,24 @@ object Dedup {
       .select(col("query_id").as("new_id"),
         col("corpus_id").as("hist_id"), col("cosine"))
 
-  /** dHash sketch index of an image corpus — the PERCEPTUAL member of
-    * the incremental family (round 15, VERDICT r14 #7), beside
-    * [[fingerprints]]/[[minhashIndex]]/[[cdcFpIndex]]: one row per
-    * (image, band) = (doc_id, hash, band, bandkey), ~28 B × bands per
-    * decodable image, and ingests never touch corpus BLOBS again.
-    * Persist PARTITIONED BY `band`: [[incrementalPhash]] probes only
-    * maxHamming+1 bands, so each ingest's scan prunes to
+  /** Persisted sketch index of a media corpus — the PERCEPTUAL member
+    * of the incremental family (round 15, VERDICT r14 #7), beside
+    * [[fingerprints]]/[[minhashIndex]]/[[cdcFpIndex]]: `sketch` is a
+    * 64-bit fingerprint kernel over the blob column (`dhash64` for
+    * images, `audio_dhash64` for audio; see [[sketchPairs]]), and each
+    * row is one (blob, band) = (doc_id, hash, band, bandkey), ~28 B ×
+    * bands per decodable blob, so ingests never touch corpus BLOBS
+    * again. Persist PARTITIONED BY `band`: [[incrementalSketch]] probes
+    * only maxHamming+1 bands, so each ingest's scan prunes to
     * (maxHamming+1)/bands of the index files. The banding construction
     * is [[bandedHammingPairs]]'s, so an index built here collides
-    * correctly with batches banded there. Undecodable blobs (codec
-    * damage, tiny images) hash NULL and are excluded — the triage tier
-    * reports them, the index never guesses. `bands` is stamped as
-    * column metadata so a mismatched ingest fails loudly.
+    * correctly with batches banded there. Undecodable blobs hash NULL
+    * and are excluded — the triage tier reports them, the index never
+    * guesses. `bands` is stamped as column metadata so a mismatched
+    * ingest fails loudly.
     */
-  def phashIndex(docs: DataFrame, bytesCol: String, idCol: String,
-                 bands: Int = 8, keyBands: Int = 1): DataFrame = {
+  def sketchIndex(docs: DataFrame, sketch: Column, idCol: String,
+                  bands: Int = 8, keyBands: Int = 1): DataFrame = {
     require(bands >= 2 && bands <= 32 && 64 % bands == 0,
       s"bands must divide 64 and be in [2, 32], got $bands")
     require(keyBands >= 1 && keyBands * (64 / bands) <= 63,
@@ -1159,39 +1110,11 @@ object Dedup {
     val meta = new MetadataBuilder()
       .putLong(MetaPhashBands, bands.toLong)
       .putLong(MetaPhashKeyBands, keyBands.toLong).build()
-    val h = org.apache.spark.sql.Kernels.dHash64(col(bytesCol))
-    sigIndexCore(docs, h, idCol, bands, keyBands, meta)
-  }
-
-  /** [[phashIndex]]'s audio twin (round 16): the persisted
-    * band-partitioned fingerprint index over
-    * the `audio_dhash64` kernel energy envelopes — same
-    * banding, same metadata stamp, same probe contract. */
-  def audioFingerprintIndex(docs: DataFrame, bytesCol: String,
-                            idCol: String, bands: Int = 8,
-                            keyBands: Int = 1): DataFrame = {
-    require(bands >= 2 && bands <= 32 && 64 % bands == 0,
-      s"bands must divide 64 and be in [2, 32], got $bands")
-    require(keyBands >= 1 && keyBands * (64 / bands) <= 63,
-      s"keyBands=$keyBands keys exceed 63 bits at bands=$bands")
-    require(bandSubsets(bands, keyBands).size <= 64,
-      s"keyBands=$keyBands over $bands bands is " +
-        s"${bandSubsets(bands, keyBands).size} tables — cap 64")
-    val meta = new MetadataBuilder()
-      .putLong(MetaPhashBands, bands.toLong)
-      .putLong(MetaPhashKeyBands, keyBands.toLong).build()
-    val h = org.apache.spark.sql.Kernels.audioDhash64(col(bytesCol))
-    sigIndexCore(docs, h, idCol, bands, keyBands, meta)
-  }
-
-  private def sigIndexCore(docs: DataFrame, h: Column, idCol: String,
-                           bands: Int, keyBands: Int,
-                           meta: org.apache.spark.sql.types.Metadata): DataFrame = {
     val keys: Seq[Column] = subsetKeys(col("__h"), bands, keyBands)
     // null-absorbing explode, not a filter — the filter form was
     // predicate-pushed below the hash Project and ran the decode
     // kernel twice per row (r17 opt, guide §4.4)
-    docs.select(col(idCol).as("doc_id"), h.as("__h"))
+    docs.select(col(idCol).as("doc_id"), sketch.as("__h"))
       .select(col("doc_id"), col("__h"),
         posexplode(when(col("__h").isNotNull, array(keys: _*)))
           .as(Seq("band", "bandkey")))
@@ -1202,11 +1125,12 @@ object Dedup {
   private val MetaPhashBands = "graft.phash.bands"
   private val MetaPhashKeyBands = "graft.phash.keyBands"
 
-  /** Ingestion-time perceptual near-dup screen — the image member of
-    * the incremental family: new-batch images are checked against the
-    * historical corpus through its persisted [[phashIndex]] at
-    * `indexDir` (written `partitionBy("band")`), never through its
-    * blobs.
+  /** Ingestion-time perceptual near-dup screen — the media member of
+    * the incremental family: new-batch blobs are fingerprinted with
+    * `sketch` (the same kernel the index was built with) and checked
+    * against the historical corpus through its persisted
+    * [[sketchIndex]] at `indexDir` (written `partitionBy("band")`),
+    * never through its blobs.
     *
     * PARTIAL-PROBE pigeonhole: a (new, hist) pair within `maxHamming`
     * bits differs in at most maxHamming of the `bands` band keys, so
@@ -1221,41 +1145,14 @@ object Dedup {
     *
     * @return (new_id, hist_id, hamming) with hamming ≤ `maxHamming`
     */
-  def incrementalPhash(newDocs: DataFrame, indexDir: String,
-                       bytesCol: String, idCol: String,
-                       maxHamming: Int = 6, bands: Int = 8,
-                       maxBucket: Int = 4096,
-                       capObs: Option[Observation] = None,
-                       keyBands: Int = 1): DataFrame = {
-    incrementalSig("incrementalPhash", newDocs, indexDir,
-      org.apache.spark.sql.Kernels.dHash64(col(bytesCol)),
-      idCol, maxHamming, bands, maxBucket, capObs, keyBands)
-  }
-
-  /** [[incrementalPhash]]'s audio twin (round 16): new-batch audio
-    * blobs are fingerprinted (the `audio_dhash64` kernel)
-    * and screened against a persisted [[audioFingerprintIndex]] with
-    * the same partial-probe pigeonhole, partition pruning and bounded
-    * buckets — blobs never enter an exchange, per-ingest shuffle is
-    * O(batch). */
-  def incrementalAudio(newDocs: DataFrame, indexDir: String,
-                       bytesCol: String, idCol: String,
-                       maxHamming: Int = 6, bands: Int = 8,
-                       maxBucket: Int = 4096,
-                       capObs: Option[Observation] = None,
-                       keyBands: Int = 1): DataFrame = {
-    incrementalSig("incrementalAudio", newDocs, indexDir,
-      org.apache.spark.sql.Kernels.audioDhash64(col(bytesCol)),
-      idCol, maxHamming, bands, maxBucket, capObs, keyBands)
-  }
-
-  private def incrementalSig(what: String, newDocs: DataFrame,
-                             indexDir: String, h: Column, idCol: String,
-                             maxHamming: Int, bands: Int, maxBucket: Int,
-                             capObs: Option[Observation],
-                             keyBands: Int): DataFrame = {
+  def incrementalSketch(newDocs: DataFrame, indexDir: String,
+                        sketch: Column, idCol: String,
+                        maxHamming: Int = 6, bands: Int = 8,
+                        maxBucket: Int = 4096,
+                        capObs: Option[Observation] = None,
+                        keyBands: Int = 1): DataFrame = {
     require(bands > maxHamming, // EXACT recall is this operator's contract
-      s"$what pigeonhole needs bands > maxHamming, " +
+      s"incrementalSketch pigeonhole needs bands > maxHamming, " +
         s"got $bands <= $maxHamming")
     requireKeyBands(bands, maxHamming, keyBands)
     val spark = newDocs.sparkSession
@@ -1266,7 +1163,7 @@ object Dedup {
         val gotK = if (f.metadata.contains(MetaPhashKeyBands))
           f.metadata.getLong(MetaPhashKeyBands) else 1L
         require(got == bands.toLong && gotK == keyBands.toLong,
-          s"$what: index at $indexDir was built with " +
+          s"incrementalSketch: index at $indexDir was built with " +
             s"(bands=$got, keyBands=$gotK) but this call uses " +
             s"(bands=$bands, keyBands=$keyBands) — rebuild the index " +
             "or match its parameters")
@@ -1287,7 +1184,7 @@ object Dedup {
     // null-absorbing explode, not a filter (r17 opt — see
     // bandedHammingPairs: the filter form re-ran the decode kernel)
     val batch = newDocs
-      .select(col(idCol).as("__nid"), h.as("__ha"))
+      .select(col(idCol).as("__nid"), sketch.as("__ha"))
       .select(struct(col("__nid").as("id"), col("__ha").as("sh")).as("__m"),
         posexplode(when(col("__ha").isNotNull, array(probeKeys: _*)))
           .as(Seq("band", "bandkey")))
@@ -1336,7 +1233,7 @@ object Dedup {
     */
   def cdcChunks(df: DataFrame, textCol: String, idCol: String,
                 maskBits: Int = 5, minLen: Int = 16, maxLen: Int = 128): DataFrame = {
-    val ends = TextFunctions.cdcBoundaries(col(textCol), maskBits, minLen, maxLen)
+    val ends = Kernels.cdcBoundaries(col(textCol), maskBits, minLen, maxLen)
     df.select(col(idCol), col(textCol).as("__text"), ends.as("__ends"))
       // empty text -> empty ends, but the prepended 0 in __starts would
       // zip one spurious (0, null) row; null text drops in the explode

@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.functions.JaroWinkler.jaro_winkler
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Kernels}
 import org.apache.spark.sql.functions._
 
 /** Similarity best-match join — the reference's `FuzzyMatch` step
@@ -98,8 +97,7 @@ object FuzzyMatch {
     // partitioning happened to deliver. Rows identical in the order AND
     // all projected columns are interchangeable, so any residual tie is
     // unobservable in the output.
-    val order = (if (lookupOrder.nonEmpty) lookupOrder else Seq.empty) ++
-      cols.map(col)
+    val order = lookupOrder ++ cols.map(col)
     // single partition (broadcast-sized by contract) + explicit sort:
     // __lk_order is then 0..n-1 in DECLARED order — deterministic under
     // any upstream partitioning and across task retries; also avoids a
@@ -133,7 +131,7 @@ object FuzzyMatch {
     val keep = appendCols.distinct.filterNot(mainCols.contains)
     val scored = withKey
       .crossJoin(broadcast(prepared(lookup, lookupField, appendCols, lookupOrder)))
-      .withColumn("__sim", jaro_winkler(lower(col(mainField)), lower(col("__lk_key"))))
+      .withColumn("__sim", Kernels.jaroWinkler(lower(col(mainField)), lower(col("__lk_key"))))
     val payload = struct(
       mainCols.map(col) ++
         keep.map(c => col(s"__lk_$c")) ++
@@ -186,7 +184,7 @@ object FuzzyMatch {
                 appendCols: Seq[String],
                 matchCol: String = "match_value",
                 scoreCol: String = "match_score",
-                lookupOrder: Seq[Column] = Seq.empty): DataFrame = {
+                lookupOrder: Seq[Column]): DataFrame = {
     val cols = main.columns.toSeq
     val groupable = !main.schema.exists(f => hasMap(f.dataType))
     if (!groupable) {
@@ -355,17 +353,16 @@ object FuzzyMatch {
     val jmin = (tauEff - 0.4) / 0.6
     val r = 3 * jmin - 2
     val frac = (3 * jmin - 1) * r / (1 + r)
-    import graft.functions.JaroWinkler.{fuzzy_length_band, fuzzy_signature}
     val m = main
       .filter(col(mainField).isNotNull)
       .select(lower(col(mainField)).as("__ft_mf")).distinct()
-      .withColumn("__ft_band", fuzzy_length_band(col("__ft_mf"), r))
+      .withColumn("__ft_band", Kernels.fuzzyLengthBand(col("__ft_mf"), r))
       .select(col("__ft_mf"), col("__ft_band"),
-        explode(fuzzy_signature(col("__ft_mf"), frac)).as("__ft_sig"))
+        explode(Kernels.fuzzySignature(col("__ft_mf"), frac)).as("__ft_sig"))
     val l = lookup
       .filter(col(lookupField).isNotNull)
       .select(lower(col(lookupField)).as("__ft_lf")).distinct()
-      .withColumn("__ft_b0", fuzzy_length_band(col("__ft_lf"), r))
+      .withColumn("__ft_b0", Kernels.fuzzyLengthBand(col("__ft_lf"), r))
       // a qualifying pair's bands differ by at most 1: the lookup side
       // fans into its three neighbor bands, each pair meets on exactly
       // one shift (plus possibly several shared signature chars — the
@@ -374,7 +371,7 @@ object FuzzyMatch {
         explode(array(col("__ft_b0") - 1, col("__ft_b0"), col("__ft_b0") + 1))
           .as("__ft_band"))
       .select(col("__ft_lf"), col("__ft_band"),
-        explode(fuzzy_signature(col("__ft_lf"), frac)).as("__ft_sig"))
+        explode(Kernels.fuzzySignature(col("__ft_lf"), frac)).as("__ft_sig"))
     (m, l)
   }
 
@@ -387,7 +384,7 @@ object FuzzyMatch {
     // one compared (oracle parity)
     val scoredVals = thresholdCandidates(main, mainField, lookup, lookupField, tau)
       .withColumn(scoreCol,
-        round(jaro_winkler(col("__ft_mf"), col("__ft_lf")), 6))
+        round(Kernels.jaroWinkler(col("__ft_mf"), col("__ft_lf")), 6))
       .filter(col(scoreCol) >= tau)
     // re-expand to rows: every (main row, lookup row) whose lowered
     // values form a qualifying pair, carrying the lookup row's ORIGINAL
@@ -410,7 +407,7 @@ object FuzzyMatch {
                     appendCols: Seq[String],
                     matchCol: String = "match_value",
                     scoreCol: String = "match_score",
-                    lookupOrder: Seq[Column] = Seq.empty): DataFrame =
+                    lookupOrder: Seq[Column]): DataFrame =
     bestByKey(main, mainId, mainField, main.columns.toSeq,
       lookup, lookupField, appendCols, matchCol, scoreCol, lookupOrder)
 }

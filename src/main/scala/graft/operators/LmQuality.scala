@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{TextFunctions => TF}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Kernels}
 import org.apache.spark.sql.functions._
 
 /** N-gram language-model quality scoring — the CCNet-style perplexity
@@ -53,7 +53,7 @@ object LmQuality {
             alpha: Double = 0.5, minCount: Int = 1): LmModel = {
     require(alpha > 0.0, s"alpha must be > 0, got $alpha")
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
-    val bg = corpus.select(explode(TF.allWordNgrams(col(textCol), 2)).as("__b"))
+    val bg = corpus.select(explode(Kernels.wordNgramsAll(col(textCol), 2)).as("__b"))
     // heads derive from the DISTINCT-bigram count table (tiny next to
     // the raw stream) — the head aggregation's input shrinks from every
     // bigram occurrence to every distinct bigram
@@ -82,7 +82,7 @@ object LmQuality {
     val av = lit(model.alpha * model.vocabSize)
     docs
       .select(col(idCol).as("id"),
-        explode(TF.allWordNgrams(col(textCol), 2)).as("__b"))
+        explode(Kernels.wordNgramsAll(col(textCol), 2)).as("__b"))
       .join(broadcast(model.bigrams), Seq("__b"), "left")
       .withColumn("__w1", substring_index(col("__b"), " ", 1))
       .join(broadcast(model.heads), Seq("__w1"), "left")

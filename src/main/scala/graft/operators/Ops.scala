@@ -910,15 +910,6 @@ object Ops {
       abs(exact.cast("double")) * lit(relTol)
   }
 
-  /** Point estimate from a `count_min_sketch(...)` binary column for a
-    * string item — pairs with Spark's own sketch aggregate to form the
-    * CMS side of the sketch-calibration family. CMS only over-counts:
-    * `exact <= estimate <= exact + eps*N` at the sketch's confidence,
-    * which is exactly the two-sided gate the calibration query asserts.
-    */
-  def cmsEstimate(sketch: Column, item: Column): Column =
-    org.apache.spark.sql.Kernels.cmsEstimate(sketch, item)
-
   /** Modulus for [[integrityChecksum]]: 2^61 − 1 (Mersenne prime) — big
     * enough that collisions across runs are ~2^-61 per row pair, small
     * enough that the reduced checksum is a plain BIGINT everywhere. */

@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.functions.VectorFunctions
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Kernels}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -77,7 +76,7 @@ object Similarity {
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("corpus_id"))
       .withColumn("cosine",
-        round(VectorFunctions.cosineSimilarity(col("__qv"), col("__cv")), 6))
+        round(Kernels.vectorCosine(col("__qv"), col("__cv")), 6))
     topKPerQuery(scored, k)
   }
 
@@ -120,15 +119,15 @@ object Similarity {
     val (mins, spans) = sq8Stats(corpus, vecCol)
     val c = corpus.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("corpus_id"),
-        VectorFunctions.sq8Encode(col(vecCol), mins, spans).as("__code"))
+        Kernels.sq8Encode(col(vecCol), mins, spans).as("__code"))
       .select(col("corpus_id"),
-        VectorFunctions.sq8Decode(col("__code"), mins, spans).as("__cv"))
+        Kernels.sq8Decode(col("__code"), mins, spans).as("__cv"))
     val q = queries.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("corpus_id"))
       .withColumn("cosine",
-        round(VectorFunctions.cosineSimilarity(col("__qv"), col("__cv")), 6))
+        round(Kernels.vectorCosine(col("__qv"), col("__cv")), 6))
     topKPerQuery(scored, k)
   }
 
@@ -142,16 +141,16 @@ object Similarity {
               vecCol: String, idCol: String, k: Int,
               nBits: Int = 8): DataFrame = {
     val c = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("__cv"))
-      .withColumn("__bkt", VectorFunctions.cosineLshBucket(col("__cv"), nBits))
+      .withColumn("__bkt", Kernels.vectorLshBucket(col("__cv"), nBits))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-      .withColumn("__qbkt", VectorFunctions.cosineLshBucket(col("__qv"), nBits))
+      .withColumn("__qbkt", Kernels.vectorLshBucket(col("__qv"), nBits))
       .withColumn("__bkt", explode(array(
         col("__qbkt") +: (0 until nBits).map(b =>
           col("__qbkt").bitwiseXOR(lit(1L << b))): _*)))
     val scored = c.join(q.drop("__qbkt"), Seq("__bkt"))
       .filter(col("query_id") =!= col("corpus_id"))
       .withColumn("cosine",
-        round(VectorFunctions.cosineSimilarity(col("__qv"), col("__cv")), 6))
+        round(Kernels.vectorCosine(col("__qv"), col("__cv")), 6))
     topKPerQuery(scored, k)
   }
 
@@ -161,7 +160,7 @@ object Similarity {
     * driver-side object; each iteration is one shuffle (the per-centroid
     * partial-sum reduce), and only nCentroids * dim doubles are
     * collected. Assignment runs through the codegen'd
-    * [[graft.functions.VectorFunctions.topCentroids]] kernel — no
+    * [[Kernels.topCentroids]] kernel — no
     * interpreted higher-order functions in the per-row path.
     */
   def kmeansCentroids(corpus: DataFrame, vecCol: String, idCol: String,
@@ -170,7 +169,7 @@ object Similarity {
     // (they would NPE in the partial-sum kernel)
     val unit = corpus.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("__id"),
-        VectorFunctions.l2Normalize(col(vecCol)).as("__v"))
+        Kernels.vectorL2Normalize(col(vecCol)).as("__v"))
     // the init collect plus every Lloyd iteration reads `unit`; without a
     // persist that is iters+1 full corpus scans + normalizations
     unit.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -201,7 +200,7 @@ object Similarity {
       // measured 30× the iteration cost at 200k×447 (TrainerProbe).
       // Two selects keep it evaluated once per vector; PlanSpec pins
       // the kernel below the Generate.
-      .select(element_at(VectorFunctions.topCentroids(col("__v"), centroids, 1), 1)
+      .select(element_at(Kernels.topCentroids(col("__v"), centroids, 1), 1)
         .as("centroid_id"), col("__v"))
       .select(col("centroid_id"), posexplode(col("__v")).as(Seq("__pos", "__x")))
       .groupBy(col("centroid_id"), col("__pos"))
@@ -276,9 +275,9 @@ object Similarity {
     corpus
       .filter(col(vecCol).isNotNull)
       .select(col(idCol).as("corpus_id"),
-        VectorFunctions.l2Normalize(col(vecCol)).as("unit_vec"))
+        Kernels.vectorL2Normalize(col(vecCol)).as("unit_vec"))
       .withColumn("centroid_id",
-        element_at(VectorFunctions.topCentroids(col("unit_vec"), centroids, 1), 1))
+        element_at(Kernels.topCentroids(col("unit_vec"), centroids, 1), 1))
       // co-locate each list before the partitioned write: without this,
       // partitionBy emits (writing tasks × touched centroids) files —
       // measured 32×141 ≈ 4.5k files for a 20k-vector build — and the
@@ -325,9 +324,9 @@ object Similarity {
     val probing = queries
       .filter(col(vecCol).isNotNull)
       .select(col(idCol).as("query_id"),
-        VectorFunctions.l2Normalize(col(vecCol)).as("__qv"))
+        Kernels.vectorL2Normalize(col(vecCol)).as("__qv"))
       .withColumn("centroid_id",
-        explode(VectorFunctions.topCentroids(col("__qv"), centroids, nProbes)))
+        explode(Kernels.topCentroids(col("__qv"), centroids, nProbes)))
     // the probed-ids collect below and the list join each evaluate this
     // subplan once. Recomputing it is the right trade: the repeated work
     // is |queries| × nCentroids × dim flops (trivial next to scoring the
@@ -343,7 +342,7 @@ object Similarity {
       .withColumn("centroid_id", col("centroid_id").cast("long"))
     lists.join(probing, Seq("centroid_id"))
       .filter(col("query_id") =!= col("corpus_id"))
-      .withColumn("cosine", round(VectorFunctions.dot(col("__qv"), col("unit_vec")), 6))
+      .withColumn("cosine", round(Kernels.vectorDot(col("__qv"), col("unit_vec")), 6))
   }
 
   /** Nearest-centroid classification over a LABELED embedding corpus —
@@ -369,7 +368,7 @@ object Similarity {
       s"labels must be numeric for the deterministic tie-break, got $labelType")
     val unit = df.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("__id"), col(labelCol).as("__lbl"),
-        VectorFunctions.l2Normalize(col(vecCol)).as("__v"))
+        Kernels.vectorL2Normalize(col(vecCol)).as("__v"))
     val centroids = unit
       .select(col("__lbl"), posexplode(col("__v")).as(Seq("__pos", "__x")))
       .groupBy(col("__lbl"), col("__pos"))
@@ -380,7 +379,7 @@ object Similarity {
         transform(col("__ps"), p => p.getField("__a")).as("__cv"))
     val scored = unit.crossJoin(broadcast(centroids))
       .withColumn("__s",
-        round(VectorFunctions.cosineSimilarity(col("__v"), col("__cv")), 6))
+        round(Kernels.vectorCosine(col("__v"), col("__cv")), 6))
     scored
       .groupBy(col("__id"), col("__lbl"))
       .agg(max_by(col("__clbl"),
@@ -393,7 +392,7 @@ object Similarity {
     * (non-spherical) L2 k-means, the product-quantization trainer.
     * Init: per subspace, the residual slices of the `nCodes` lowest-id
     * vectors (the coarse chain's init rule, replayed by the oracle).
-    * Assignment runs the codegen [[graft.functions.VectorFunctions.pqEncode]]
+    * Assignment runs the codegen [[Kernels.pqEncode]]
     * kernel (min L2 as argmax dot−½‖w‖², ties to the smaller code);
     * means come from ONE DataFrame hash aggregation keyed on
     * (subspace, code, position) — a single tiny map-side-combined
@@ -436,7 +435,7 @@ object Similarity {
   }
 
   /** One PQ Lloyd iteration's reduction, DataFrame-native: encode each
-    * residual through the codegen [[graft.functions.VectorFunctions.pqEncode]]
+    * residual through the codegen [[Kernels.pqEncode]]
     * kernel, posexplode the residual to (pos, x) cells, derive the
     * (subspace, codeword, within-subspace position) key arithmetically,
     * and hash-aggregate (sum, count) — ALL subspaces in one pass, one
@@ -450,7 +449,7 @@ object Similarity {
       // pqEncode in its own select BELOW the explode — the same
       // ExtractGenerator trap documented on [[kmeansIterSums]] (the
       // all-subspace argmin would otherwise run once per dimension)
-      .select(VectorFunctions.pqEncode(col(vecCol), books).as("__codes"),
+      .select(Kernels.pqEncode(col(vecCol), books).as("__codes"),
         col(vecCol).as("__rvec"))
       .select(col("__codes"), posexplode(col("__rvec")).as(Seq("__pos", "__x")))
       .select(floor(col("__pos") / lit(sub)).cast("int").as("__m"),
@@ -493,11 +492,11 @@ object Similarity {
     val corpusUnit = corpus
       .filter(col(vecCol).isNotNull)
       .select(col(idCol).as("corpus_id"),
-        VectorFunctions.l2Normalize(col(vecCol)).as("__cv"))
+        Kernels.vectorL2Normalize(col(vecCol)).as("__cv"))
       .withColumn("centroid_id",
-        element_at(VectorFunctions.topCentroids(col("__cv"), centroids, 1), 1))
+        element_at(Kernels.topCentroids(col("__cv"), centroids, 1), 1))
     val resid = corpusUnit.withColumn("__rv",
-      VectorFunctions.centroidResidual(col("__cv"), col("centroid_id"), centroids))
+      Kernels.centroidResidual(col("__cv"), col("centroid_id"), centroids))
     // training reads the residuals iters+1 times — persist like the
     // coarse k-means does; unpersisted once the codebooks are collected
     resid.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -509,7 +508,7 @@ object Similarity {
       return bruteForceTopK(corpus, queries, vecCol, idCol, k)
     // the compressed index: ids + list id + M codes, nothing else
     val encoded = resid
-      .withColumn("__codes", VectorFunctions.pqEncode(col("__rv"), books))
+      .withColumn("__codes", Kernels.pqEncode(col("__rv"), books))
       .select(col("corpus_id"), col("centroid_id"), col("__codes"))
     topKPerQuery(
       pqProbeExact(encoded, corpusUnit.select(col("corpus_id"), col("__cv")),
@@ -549,16 +548,16 @@ object Similarity {
         Ops.fanOutForCompute(qNarrow, probeFanOutBytes, col("query_id"))
       else qNarrow)
       .select(col("query_id"),
-        VectorFunctions.l2Normalize(col("__qraw")).as("__qv"))
-      .withColumn("__qtab", VectorFunctions.pqQueryTable(col("__qv"), books))
+        Kernels.vectorL2Normalize(col("__qraw")).as("__qv"))
+      .withColumn("__qtab", Kernels.pqQueryTable(col("__qv"), books))
       .withColumn("centroid_id",
-        explode(VectorFunctions.topCentroids(col("__qv"), centroids, nProbes)))
+        explode(Kernels.topCentroids(col("__qv"), centroids, nProbes)))
       .withColumn("__qc",
-        VectorFunctions.centroidDot(col("__qv"), col("centroid_id"), centroids))
+        Kernels.centroidDot(col("__qv"), col("centroid_id"), centroids))
     val approx = encoded.join(probing.drop("__qv"), Seq("centroid_id"))
       .filter(col("query_id") =!= col("corpus_id"))
       .withColumn("cosine", round(col("__qc") +
-        VectorFunctions.pqAdc(col("__qtab"), col("__codes"), pqCodes), 6))
+        Kernels.pqAdc(col("__qtab"), col("__codes"), pqCodes), 6))
     // approximate shortlist: same bounded top-k aggregation as every
     // ANN tier (map-side pruning, never a full candidate shuffle)
     val shortlist = topKPerQuery(approx, rerank)
@@ -568,9 +567,9 @@ object Similarity {
       .join(broadcast(queries
         .filter(col(vecCol).isNotNull)
         .select(col(idCol).as("query_id"),
-          VectorFunctions.l2Normalize(col(vecCol)).as("__qv"))), Seq("query_id"))
+          Kernels.vectorL2Normalize(col(vecCol)).as("__qv"))), Seq("query_id"))
       .withColumn("cosine",
-        round(VectorFunctions.dot(col("__qv"), col("__cv")), 6))
+        round(Kernels.vectorDot(col("__qv"), col("__cv")), 6))
     exact
   }
 
@@ -593,11 +592,11 @@ object Similarity {
     val resid = corpus
       .filter(col(vecCol).isNotNull)
       .select(col(idCol).as("corpus_id"),
-        VectorFunctions.l2Normalize(col(vecCol)).as("unit_vec"))
+        Kernels.vectorL2Normalize(col(vecCol)).as("unit_vec"))
       .withColumn("centroid_id",
-        element_at(VectorFunctions.topCentroids(col("unit_vec"), centroids, 1), 1))
+        element_at(Kernels.topCentroids(col("unit_vec"), centroids, 1), 1))
       .withColumn("__rv",
-        VectorFunctions.centroidResidual(col("unit_vec"), col("centroid_id"), centroids))
+        Kernels.centroidResidual(col("unit_vec"), col("centroid_id"), centroids))
     resid.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val books = pqCodebooks(resid.select(col("corpus_id"), col("__rv")),
@@ -626,7 +625,7 @@ object Similarity {
             field("m", lt), field("code", lt), field("w", at))))
         .write.mode("overwrite").parquet(s"$dir/codebooks")
       resid
-        .withColumn("codes", VectorFunctions.pqEncode(col("__rv"), books))
+        .withColumn("codes", Kernels.pqEncode(col("__rv"), books))
         .select(col("corpus_id"), col("codes"), col("unit_vec"), col("centroid_id"))
         .repartition(col("centroid_id"))
         .write.mode("overwrite").partitionBy("centroid_id").parquet(s"$dir/lists")
@@ -680,8 +679,8 @@ object Similarity {
     val pqCodes = books(0).length
     val probedIds = queries
       .filter(col(vecCol).isNotNull)
-      .select(explode(VectorFunctions.topCentroids(
-        VectorFunctions.l2Normalize(col(vecCol)), centroids, nProbes)).as("cid"))
+      .select(explode(Kernels.topCentroids(
+        Kernels.vectorL2Normalize(col(vecCol)), centroids, nProbes)).as("cid"))
       .distinct().collect().map(_.getLong(0))
     // filter BEFORE the cast so partition pruning sees the raw attribute
     val lists = spark.read.parquet(s"$dir/lists")
@@ -709,19 +708,19 @@ object Similarity {
     val corpusAssigned = corpus
       .filter(col(vecCol).isNotNull)
       .select(col(idCol).as("corpus_id"),
-        VectorFunctions.l2Normalize(col(vecCol)).as("__cv"))
+        Kernels.vectorL2Normalize(col(vecCol)).as("__cv"))
       .withColumn("centroid_id",
-        element_at(VectorFunctions.topCentroids(col("__cv"), centroids, 1), 1))
+        element_at(Kernels.topCentroids(col("__cv"), centroids, 1), 1))
     val queriesProbing = queries
       .filter(col(vecCol).isNotNull)
       .select(col(idCol).as("query_id"),
-        VectorFunctions.l2Normalize(col(vecCol)).as("__qv"))
+        Kernels.vectorL2Normalize(col(vecCol)).as("__qv"))
       .withColumn("centroid_id",
-        explode(VectorFunctions.topCentroids(col("__qv"), centroids, nProbes)))
+        explode(Kernels.topCentroids(col("__qv"), centroids, nProbes)))
     val scored = corpusAssigned.join(queriesProbing, Seq("centroid_id"))
       .filter(col("query_id") =!= col("corpus_id"))
       // unit vectors: cosine = dot
-      .withColumn("cosine", round(VectorFunctions.dot(col("__qv"), col("__cv")), 6))
+      .withColumn("cosine", round(Kernels.vectorDot(col("__qv"), col("__cv")), 6))
     topKPerQuery(scored, k)
   }
 }

@@ -2,7 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.commons.lang3.ClassUtils
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, ExpectsInputTypes, Expression, UnaryExpression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -21,7 +21,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Almost every kernel is one static call, so it is one [[Kernel]] entry
   * in the [[Kernels]] registry, run by the one generic [[KernelCall]]
   * expression; SQL registration ([[GraftSqlFunctions]]) and the Column
-  * API (`Kernels.x(cols, consts)`) derive from the entries. Hand-written
+  * API (`Kernels.x(cols, consts)`) derive from the entries, and both
+  * build the call through [[Kernel.expr]], which also casts numeric
+  * arrays to an `array<double>` input. Hand-written
   * below the registry: the aggregate [[CollectSmallest]],
   * [[SortedLongJaccard]] (its method depends on the input types) and
   * [[MultiMatch]] (its DFA builds lazily, once per plan reference).
@@ -86,8 +88,14 @@ final class Kernel private[sql] (
     }, vals))
   }
 
+  /** The call over `children`; an `array<double>` input accepts any
+    * numeric array through a cast (exact for floats, and dropped by the
+    * optimizer when the input already is `array<double>`). */
   def expr(children: Seq[Expression], vals: Seq[Any]): KernelCall =
-    KernelCall(this, children, vals ++ consts.drop(vals.length).map(c =>
+    KernelCall(this, children.zip(inputs).map {
+      case (e, ArrayType(DoubleType, _)) => Cast(e, ArrayType(DoubleType))
+      case (e, _) => e
+    }, vals ++ consts.drop(vals.length).map(c =>
       c.default.getOrElse(throw new IllegalArgumentException(s"$name: missing ${c.name}"))))
 
   private[sql] def validate(children: Seq[Expression], vals: Seq[Any]): Unit = {
@@ -192,8 +200,9 @@ case class KernelCall(kernel: Kernel, children: Seq[Expression], consts: Seq[Any
 }
 
 /** The kernel registry: one entry per kernel. Applying an entry builds
-  * its Column (`Kernels.minHashes(hashes, 128)`); SQL-callable entries
-  * (non-null `usage`) register under their name. */
+  * its Column (`Kernels.minHashes(hashes, 128)`), the kernel's one
+  * Column API; SQL-callable entries (non-null `usage`) register under
+  * their name. */
 object Kernels {
   private val entries = Seq.newBuilder[Kernel]
   private def kernel(name: String, inputs: Seq[DataType], result: DataType, call: String,
@@ -269,12 +278,16 @@ object Kernels {
           "must fit inside the shortest admissible chunk for boundaries to be " +
           "reset-free (CdcKernels scaladoc)")
       require(maxLen > minLen, s"maxLen ($maxLen) must be > minLen ($minLen)") })
+  /** CMS only over-counts: `exact <= estimate <= exact + eps * N` at the
+    * sketch's confidence. */
   val cmsEstimate = kernel("cms_estimate", Seq(B, S), L, "SketchKernels.cmsEstimate",
     usage = "cms_estimate(sketch, item) - point estimate from a " +
       "count_min_sketch binary for a string item")
 
   // ---- text statistics and tokenization ---------------------------------
 
+  /** One pass: n_chars, n_tokens, n_subtokens, n_punct and the
+    * per-language stop-word hits (see TextKernels.stats). */
   val textStats = kernel("text_stats", Seq(S), TextStats.schema, "TextKernels.stats",
     usage = "text_stats(text) - struct of per-document counts")
   val repetitionCounts = kernel("repetition_counts", Seq(S), RepetitionCounts.schema,
@@ -283,12 +296,16 @@ object Kernels {
   val gopherCounts = kernel("gopher_counts", Seq(S), GopherCounts.schema,
     "TextKernels.gopherCounts")
   val c4Counts = kernel("c4_counts", Seq(S), C4Counts.schema, "TextKernels.c4Counts")
+  /** Documents with fewer than n tokens yield an empty array. */
   val wordNgrams = kernel("word_ngrams", Seq(S), arr(S), "TextKernels.wordNgrams",
     consts = Seq(int("n")), check = atLeastOne("n"),
     usage = "word_ngrams(text, n) - distinct space-joined word n-grams, first-occurrence order")
   val wordNgramsAll = kernel("word_ngrams_all", Seq(S), arr(S), "TextKernels.allWordNgrams",
     consts = Seq(int("n")), check = atLeastOne("n"),
     usage = "word_ngrams_all(text, n) - ALL word n-grams in order, duplicates kept")
+  /** Windows of `maxTokens` whitespace tokens advancing by
+    * `maxTokens - overlap`, each re-joined with single spaces; empty
+    * trimmed text yields no chunks. */
   val chunkText = kernel("chunk_text", Seq(S), arr(S), "TextKernels.chunkTokens",
     consts = Seq(int("maxTokens"), int("overlap")),
     usage = "chunk_text(text, maxTokens, overlap) - sliding token-window chunks",
@@ -325,8 +342,11 @@ object Kernels {
     usage = "vector_dot(a, b) - dot product of numeric arrays")
   val vectorCosine = kernel("vector_cosine", Seq(ArrayType(D), ArrayType(D)), D,
     "VectorKernels.cosine", usage = "vector_cosine(a, b) - cosine similarity (0 on zero norm)")
+  /** A zero vector passes through unchanged. */
   val vectorL2Normalize = kernel("vector_l2_normalize", Seq(ArrayType(D)), arr(D),
     "VectorKernels.l2Normalize", usage = "vector_l2_normalize(a) - unit-length copy")
+  /** Sign bits of `nBits` pseudo-random hyperplane projections, each
+    * component derived from xxh64 of (seed, bit, dim). */
   val vectorLshBucket = kernel("vector_lsh_bucket", Seq(ArrayType(D)), L, "VectorKernels.lshBucket",
     consts = Seq(int("nBits"), KernelConst("seed", classOf[Long], Some(42L), sql = false)),
     usage = "vector_lsh_bucket(a, nBits) - hyperplane-sign LSH bucket",
@@ -344,18 +364,25 @@ object Kernels {
     check = { case Seq(c: Array[_], n: Int) =>
       require(n >= 1, s"n must be >= 1, got $n")
       require(c.nonEmpty, "centroids must be non-empty") })
+  /** vec − centroids(cid − 1): the residual a product quantizer codes. */
   val centroidResidual = kernel("centroid_residual", Seq(ArrayType(D), L), arr(D),
     "VectorKernels.centroidResidual", consts = Seq(ref("centroids", matrix)),
     check = nonEmptyCentroids)
+  /** dot(vec, centroids(cid − 1)). */
   val centroidDot = kernel("centroid_dot", Seq(ArrayType(D), L), D, "VectorKernels.centroidDot",
     consts = Seq(ref("centroids", matrix)), check = nonEmptyCentroids)
+  /** 1-based nearest-codeword id per subspace (min L2, ties to the
+    * smaller code). */
   val pqEncode = kernel("pq_encode", Seq(ArrayType(D)), arr(L), "VectorKernels.pqEncode",
     consts = Seq(ref("codebooks", codebooks)), check = nonEmptyCodebooks)
+  /** Flattened ADC table: tab(m · nCodes + c − 1) = dot(q_sub(m), w(m)(c − 1)). */
   val pqQueryTable = kernel("pq_query_table", Seq(ArrayType(D)), arr(D),
     "VectorKernels.pqQueryTable", consts = Seq(ref("codebooks", codebooks)),
     check = nonEmptyCodebooks)
+  /** Σ_m tab(m · nCodes + codes(m) − 1). */
   val pqAdc = kernel("pq_adc", Seq(ArrayType(D), ArrayType(L)), D, "VectorKernels.pqAdc",
     consts = Seq(int("nCodes")), check = atLeastOne("nCodes"))
+  /** One byte per dimension over trained per-dimension (min, span). */
   val sq8Encode = kernel("sq8_encode", Seq(ArrayType(D)), B, "VectorKernels.sq8Encode",
     consts = Seq(ref("mins", vector), ref("spans", vector)), check = sq8Ranges("sq8_encode"))
   val sq8Decode = kernel("sq8_decode", Seq(B), arr(D), "VectorKernels.sq8Decode",
@@ -363,19 +390,31 @@ object Kernels {
 
   // ---- media ------------------------------------------------------------
 
+  /** NULL for unrecognized or truncated blobs. */
   val imageMeta = kernel("image_meta", Seq(B), ImageMeta.schema, "MediaKernels.imageMeta",
     mayReturnNull = true,
     usage = "image_meta(blob) - struct(format, width, height) from the container header")
+  /** duration = n_frames / sample_rate; NULL for non-WAV or truncated blobs. */
   val audioMeta = kernel("audio_meta", Seq(B), AudioMeta.schema, "MediaKernels.audioMeta",
     mayReturnNull = true, usage = "audio_meta(blob) - struct(format, channels, " +
       "sample_rate, bits_per_sample, n_frames) from a WAV header")
+  /** seconds = duration / timescale; NULL for non-BMFF or corrupt blobs. */
   val videoMeta = kernel("video_meta", Seq(B), VideoMeta.schema, "MediaKernels.videoMeta",
     mayReturnNull = true, usage = "video_meta(blob) - struct(format, timescale, " +
       "duration, n_tracks) from an MP4/MOV container")
+  /** Per-track struct(handler, timescale, duration, n_samples,
+    * total_bytes) from the mdhd + hdlr + stsz walk; NULL for non-BMFF or
+    * corrupt blobs, NULL fields for tracks missing the boxes. */
   val videoTrackStats = kernel("video_track_stats", Seq(B), arr(VideoTrackStats.elementSchema),
     "MediaKernels.videoTrackStats", mayReturnNull = true)
+  /** Per-sample byte slices of an MJPEG track, each an independent
+    * baseline JPEG; NULL for non-BMFF blobs, compressed-codec tracks or
+    * inconsistent sample tables. */
   val mjpegFrames = kernel("mjpeg_frames", Seq(B), arr(B), "MediaKernels.mjpegFrames",
     mayReturnNull = true)
+  /** Per-frame struct(x, y, width, height, delay_cs, disposal,
+    * transparent_px, mean_r, mean_g, mean_b), each frame decoded against
+    * its own palette; NULL blob-wide on any structural failure. */
   val gifFrames = kernel("gif_frames", Seq(B), arr(GifFrames.elementSchema),
     "GifKernels.frameStats", mayReturnNull = true)
   /** Per-blob feature decode: the decoder function rides as a reference
@@ -451,6 +490,7 @@ object Kernels {
     "FeedKernels.feedEntries", mayReturnNull = true,
     usage = "feed_entries(xml) - RSS/Atom feed entries as array<struct(" +
       "kind, title, link, date, summary)>; NULL on malformed framing")
+  /** Resolution does not normalize: feed the result to [[urlParts]]. */
   val urlResolve = kernel("url_resolve", Seq(S, S), S, "UrlKernels.resolve", mayReturnNull = true,
     usage = "url_resolve(base, ref) - RFC 3986 reference resolution to an " +
       "absolute URL; NULL for an unparseable base")
@@ -462,6 +502,7 @@ object Kernels {
     usage = "html_meta(html) - page-head metadata as struct(title, " +
       "description, og_title, og_description, og_image, canonical, " +
       "lang); best-effort, NULL fields when absent")
+  /** Relative URLs are not resolved (see [[urlResolve]]). */
   val htmlLinks = kernel("html_links", Seq(S), arr(S), "HtmlKernels.htmlLinks",
     usage = "html_links(html) - href values of <a>/<area> tags in document " +
       "order, entity-decoded; script/style/comment content skipped")
@@ -469,10 +510,14 @@ object Kernels {
     usage = "html_extract(html) - plain text from HTML: tags stripped with " +
       "block separation, script/style/comments dropped, character " +
       "references decoded, whitespace collapsed")
+  /** Tables numbered in document order, nested tables separate, cell
+    * text entity-decoded and whitespace-collapsed. */
   val htmlTables = kernel("html_tables", Seq(S), arr(graft.functions.TableKernels.cellSchema),
     "TableKernels.tables", mayReturnNull = true,
     usage = "html_tables(html) - <table> cells as flat (table, row, col, " +
       "text) rows; NULL on an unclosed (truncated) table")
+  /** Keys beyond identifier characters are bracketed; NULL for anything
+    * that is not one valid RFC 8259 document. */
   val jsonPaths = kernel("json_paths", Seq(S), arr(graft.functions.JsonShapeKernels.rowSchema),
     "JsonShapeKernels.paths", mayReturnNull = true,
     usage = "json_paths(doc) - every JSON node as (path, jtype) rows, array " +

@@ -1,8 +1,8 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** SQL registration of graft's custom expressions, so `spark.sql` users
@@ -58,15 +58,12 @@ object GraftSqlFunctions {
 
   /** The SQL builder of the kernels sharing `name` (one per input count):
     * the inputs, then the kernel's SQL constants as literal integers.
-    * `array<double>` inputs accept any numeric array through a cast. */
+    * [[Kernel.expr]] casts numeric arrays, as for a Column-API call. */
   private def fromKernels(name: String, ks: Seq[Kernel]) =
     function(name, ks.head.usage, ks.map(_.sqlMin).min, ks.map(_.sqlMax).max) { c =>
       val k = ks.find(k => c.length >= k.sqlMin && c.length <= k.sqlMax).get
       val (in, lits) = c.splitAt(k.inputs.length)
-      k.expr(in.zip(k.inputs).map {
-        case (e, ArrayType(DoubleType, _)) => Cast(e, ArrayType(DoubleType))
-        case (e, _) => e
-      }, k.consts.zipWithIndex.map { case (const, i) =>
+      k.expr(in, k.consts.zipWithIndex.map { case (const, i) =>
         if (const.sql && i < lits.length) intArg(lits(i), name) else const.default.get
       })
     }

@@ -1,6 +1,8 @@
 package graft
 
 import graft.functions.AudioKernels
+import org.apache.spark.sql.Kernels
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[AudioKernels.energyDhash64]] — the temporal energy-envelope
@@ -98,7 +100,8 @@ class AudioFingerprintSpec extends SparkSpec {
       (4L, "junk".getBytes))
     val df = rows.toDF("doc_id", "clip")
     val pairs = graft.operators.Dedup
-      .audioNearDupPairs(df, "clip", "doc_id", maxHamming = 6, bands = 8,
+      .sketchPairs(df, Kernels.audioDhash64(col("clip")), "doc_id",
+        maxHamming = 6, bands = 8,
         keyBands = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)))
@@ -124,10 +127,12 @@ class AudioFingerprintSpec extends SparkSpec {
     val batch = Seq((20L, wav16(twin)),
       (21L, wav16(Array.tabulate(260)(k => (k * 7919 + 13) % 8000 - 4000))))
       .toDF("doc_id", "clip")
-    graft.operators.Dedup.audioFingerprintIndex(hist, "clip", "doc_id")
+    graft.operators.Dedup
+      .sketchIndex(hist, Kernels.audioDhash64(col("clip")), "doc_id")
       .write.mode("overwrite").partitionBy("band").parquet(dir)
     val out = graft.operators.Dedup
-      .incrementalAudio(batch, dir, "clip", "doc_id", maxHamming = 6)
+      .incrementalSketch(batch, dir, Kernels.audioDhash64(col("clip")), "doc_id",
+        maxHamming = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(out.contains((20L, 10L)), out)
   }

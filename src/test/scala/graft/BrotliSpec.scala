@@ -258,7 +258,7 @@ class BrotliSpec extends AnyFunSuite {
         "FROM br_t ORDER BY id").collect()
     assert(rows(0).getString(1) == "<html><body>payload text</body></html>")
     assert(rows(1).isNullAt(1))
-    val viaCol = df.select(graft.operators.Multimodal
+    val viaCol = df.select(org.apache.spark.sql.Kernels
       .brotliDecompress(org.apache.spark.sql.functions.col("b")).as("d"))
       .collect().map(r => Option(r.getAs[Array[Byte]]("d")))
     assert(viaCol.count(_.isDefined) == 1)

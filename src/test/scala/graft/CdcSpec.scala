@@ -1,7 +1,8 @@
 package graft
 
-import graft.functions.{CdcKernels, TextFunctions => TF}
+import graft.functions.CdcKernels
 import graft.operators.Dedup
+import org.apache.spark.sql.Kernels
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -160,7 +161,7 @@ class CdcSpec extends SparkSpec {
       (4L, "plain ascii stays"),       // isNormalized fast path
       (5L, null.asInstanceOf[String])
     ).toDF("id", "t")
-    val out = rows.select(col("id"), TF.nfcNormalize(col("t")).as("n"))
+    val out = rows.select(col("id"), Kernels.nfcNormalize(col("t")).as("n"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(out(1L) == "caf\u00e9")
     assert(out(2L) == "\u00c5")

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Decontaminate
-import graft.functions.{TextFunctions => TF}
+import org.apache.spark.sql.Kernels
 import org.apache.spark.sql.functions._
 
 class DecontaminateSpec extends SparkSpec {
@@ -59,7 +59,7 @@ class DecontaminateSpec extends SparkSpec {
   test("wordNgrams: short docs yield empty, n-gram count is tokens-n+1, distinct") {
     val g = Seq(("a b c d", 1), ("a b", 2), ("x x x x x x", 3))
       .toDF("text", "id")
-      .select(col("id"), TF.wordNgrams(col("text"), 3).as("g"))
+      .select(col("id"), Kernels.wordNgrams(col("text"), 3).as("g"))
       .as[(Int, Seq[String])].collect().toMap
     assert(g(1) == Seq("a b c", "b c d"))
     assert(g(2) == Seq.empty)

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, Ops}
+import org.apache.spark.sql.Kernels
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
@@ -759,9 +760,9 @@ class DedupSpec extends SparkSpec {
     val hist = df.filter(col("doc_id") % 4 === 0)
     val batch = df.filter(col("doc_id") % 4 =!= 0)
     val dir = java.nio.file.Files.createTempDirectory("phidx").toString
-    Dedup.phashIndex(hist, "img", "doc_id")
+    Dedup.sketchIndex(hist, Kernels.dHash64(col("img")), "doc_id")
       .write.mode("overwrite").partitionBy("band").parquet(dir)
-    val out = Dedup.incrementalPhash(batch, dir, "img", "doc_id",
+    val out = Dedup.incrementalSketch(batch, dir, Kernels.dHash64(col("img")), "doc_id",
       maxHamming = 6, bands = 8)
     val got = out.as[(Long, Long, Int)].collect().toSet
     // brute force over the same hashes, cross-split only
@@ -804,34 +805,34 @@ class DedupSpec extends SparkSpec {
     val batch = df.filter(col("doc_id") % 4 =!= 0)
     val d1 = java.nio.file.Files.createTempDirectory("ph_k1").toString
     val d2 = java.nio.file.Files.createTempDirectory("ph_k2").toString
-    Dedup.phashIndex(hist, "img", "doc_id", keyBands = 1)
+    Dedup.sketchIndex(hist, Kernels.dHash64(col("img")), "doc_id", keyBands = 1)
       .write.mode("overwrite").partitionBy("band").parquet(d1)
-    Dedup.phashIndex(hist, "img", "doc_id", keyBands = 2)
+    Dedup.sketchIndex(hist, Kernels.dHash64(col("img")), "doc_id", keyBands = 2)
       .write.mode("overwrite").partitionBy("band").parquet(d2)
-    val one = Dedup.incrementalPhash(batch, d1, "img", "doc_id",
+    val one = Dedup.incrementalSketch(batch, d1, Kernels.dHash64(col("img")), "doc_id",
       maxHamming = 6, bands = 8, keyBands = 1)
       .as[(Long, Long, Int)].collect().toSet
-    val two = Dedup.incrementalPhash(batch, d2, "img", "doc_id",
+    val two = Dedup.incrementalSketch(batch, d2, Kernels.dHash64(col("img")), "doc_id",
       maxHamming = 6, bands = 8, keyBands = 2)
       .as[(Long, Long, Int)].collect().toSet
     assert(one == two)
     assert(two.nonEmpty, "fixture must plant pairs")
     // a keyBands mismatch against the index is refused
     val e = intercept[IllegalArgumentException] {
-      Dedup.incrementalPhash(batch, d2, "img", "doc_id",
+      Dedup.incrementalSketch(batch, d2, Kernels.dHash64(col("img")), "doc_id",
         maxHamming = 6, bands = 8, keyBands = 1).collect()
     }
     assert(e.getMessage.contains("built with"))
     // pairs operator: keyBands=2 equals keyBands=1 equals brute force
-    val p1 = Dedup.imageNearDupPairs(df, "img", "doc_id",
+    val p1 = Dedup.sketchPairs(df, Kernels.dHash64(col("img")), "doc_id",
       maxHamming = 6, bands = 8).as[(Long, Long, Int)].collect().toSet
-    val p2 = Dedup.imageNearDupPairs(df, "img", "doc_id",
+    val p2 = Dedup.sketchPairs(df, Kernels.dHash64(col("img")), "doc_id",
       maxHamming = 6, bands = 8, keyBands = 2)
       .as[(Long, Long, Int)].collect().toSet
     assert(p1 == p2)
     // exactness precondition is enforced: keyBands=2 needs b-h >= 2
     intercept[IllegalArgumentException] {
-      Dedup.imageNearDupPairs(df, "img", "doc_id",
+      Dedup.sketchPairs(df, Kernels.dHash64(col("img")), "doc_id",
         maxHamming = 7, bands = 8, keyBands = 2)
     }
   }
@@ -871,21 +872,21 @@ class DedupSpec extends SparkSpec {
     "time (r15 review) — never an index every ingest would reject") {
     val df = Seq((0L, pgm9x8(i => i))).toDF("doc_id", "img")
     intercept[IllegalArgumentException] {
-      Dedup.phashIndex(df, "img", "doc_id", bands = 16, keyBands = 8)
+      Dedup.sketchIndex(df, Kernels.dHash64(col("img")), "doc_id", bands = 16, keyBands = 8)
     } // C(16,8) = 12870 tables
     intercept[IllegalArgumentException] {
-      Dedup.phashIndex(df, "img", "doc_id", bands = 2, keyBands = 2)
+      Dedup.sketchIndex(df, Kernels.dHash64(col("img")), "doc_id", bands = 2, keyBands = 2)
     } // 2 x 32-bit chunks = 64-bit key > 63
   }
 
   test("incrementalPhash: band-count mismatch with the index fails loudly") {
     val df = Seq((0L, pgm9x8(i => i * 3))).toDF("doc_id", "img")
     val dir = java.nio.file.Files.createTempDirectory("phidx4").toString
-    Dedup.phashIndex(df, "img", "doc_id", bands = 4)
+    Dedup.sketchIndex(df, Kernels.dHash64(col("img")), "doc_id", bands = 4)
       .write.mode("overwrite").partitionBy("band").parquet(dir)
     val e = intercept[IllegalArgumentException] {
-      Dedup.incrementalPhash(Seq((1L, pgm9x8(i => i * 3))).toDF("doc_id", "img"),
-        dir, "img", "doc_id", maxHamming = 3, bands = 8)
+      Dedup.incrementalSketch(Seq((1L, pgm9x8(i => i * 3))).toDF("doc_id", "img"),
+        dir, Kernels.dHash64(col("img")), "doc_id", maxHamming = 3, bands = 8)
     }
     assert(e.getMessage.contains("built with"))
   }

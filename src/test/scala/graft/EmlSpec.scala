@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.EmlKernels
+import org.apache.spark.sql.Kernels
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[EmlKernels]] — EML/MIME extraction: header unfolding, RFC 2047
@@ -162,7 +163,7 @@ class EmlSpec extends AnyFunSuite {
         "FROM eml_t ORDER BY id").collect()
     assert(rows(0).getString(1) == "hi" && rows(0).getString(2) == "sql body")
     assert(rows(1).isNullAt(1))
-    val viaCol = df.select(graft.operators.Multimodal.emlParts($"b")
+    val viaCol = df.select(Kernels.emlParts($"b")
       .getField("n_parts").as("n")).collect()
     assert(!viaCol(0).isNullAt(0) && viaCol(1).isNullAt(0))
   }

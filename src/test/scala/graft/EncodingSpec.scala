@@ -1,7 +1,7 @@
 package graft
 
-import graft.functions.{EncodingKernels, TextFunctions => TF}
-import org.apache.spark.sql.Row
+import graft.functions.EncodingKernels
+import org.apache.spark.sql.{Kernels, Row}
 import org.apache.spark.sql.functions._
 
 /** [[EncodingKernels.decodeText]] — the bytes → text ingest decode.
@@ -122,7 +122,7 @@ class EncodingSpec extends SparkSpec {
       (2L, Array[Byte]('b', 0xe9.toByte, 'd')),
       (3L, null.asInstanceOf[Array[Byte]])
     ).toDF("id", "blob")
-    val got = df.select(col("id"), TF.decodeText(col("blob")).as("d"))
+    val got = df.select(col("id"), Kernels.decodeText(col("blob")).as("d"))
       .select(col("id"), col("d.text"), col("d.encoding")).collect()
       .map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
     assert(got(1L) == (("good text", "utf-8")))

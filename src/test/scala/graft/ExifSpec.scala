@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.ExifKernels
+import org.apache.spark.sql.Kernels
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[ExifKernels]] — EXIF extraction from JPEG APP1 and bare TIFF:
@@ -75,7 +76,7 @@ class ExifSpec extends AnyFunSuite {
         "FROM exif_t ORDER BY id").collect()
     assert(rows(0).getInt(1) == 8 && rows(0).getString(2) == "SqlCam")
     assert(rows(1).isNullAt(1))
-    val viaCol = df.select(graft.operators.Multimodal.exifMeta($"b")
+    val viaCol = df.select(Kernels.exifMeta($"b")
       .getField("model").as("m")).collect()
     assert(viaCol(0).getString(0) == "S" && viaCol(1).isNullAt(0))
   }

@@ -85,7 +85,7 @@ class FeedSpec extends AnyFunSuite {
       .collect()
     assert(rows(0).getInt(1) == 1)
     assert(rows(1).isNullAt(1) || rows(1).getInt(1) == -1)
-    val viaCol = df.select(graft.functions.TextFunctions
+    val viaCol = df.select(org.apache.spark.sql.Kernels
       .feedEntries($"x").as("e")).collect()
     assert(!viaCol(0).isNullAt(0))
   }

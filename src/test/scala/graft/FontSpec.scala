@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.FontKernels
+import org.apache.spark.sql.Kernels
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[FontKernels]] — TTF/OTF/TTC/WOFF/WOFF2 triage over spec-faithful
@@ -98,7 +99,7 @@ class FontSpec extends AnyFunSuite {
       "SELECT id, font_meta(b).family AS f FROM font_t ORDER BY id").collect()
     assert(rows(0).getString(1) == "Sql Sans")
     assert(rows(1).isNullAt(1))
-    val viaCol = df.select(graft.operators.Multimodal.fontMeta($"b")
+    val viaCol = df.select(Kernels.fontMeta($"b")
       .getField("n_glyphs").as("g")).collect()
     assert(viaCol(0).getInt(0) == 10 && viaCol(1).isNullAt(0))
   }

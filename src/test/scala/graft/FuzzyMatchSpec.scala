@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.FuzzyMatch
+import org.apache.spark.sql.Kernels
 import org.apache.spark.sql.functions._
 
 class FuzzyMatchSpec extends SparkSpec {
@@ -12,7 +13,7 @@ class FuzzyMatchSpec extends SparkSpec {
     val lookup = Seq((10L, "Circuito de Jerez"), (20L, "Mugello"), (30L, "Assen"))
       .toDF("cid", "cname")
     val byId = FuzzyMatch.bestMatchById(main, "id", "name",
-        lookup, "cname", Seq("cid"))
+        lookup, "cname", Seq("cid"), lookupOrder = Nil)
       .select("id", "cid").as[(Long, Long)].collect().toMap
     assert(byId == Map(1L -> 10L, 2L -> 20L))
   }
@@ -20,7 +21,8 @@ class FuzzyMatchSpec extends SparkSpec {
   test("unfiltered best-match: even a poor match is returned (minimal=0)") {
     val main = Seq((1L, "zzzzz")).toDF("id", "name")
     val lookup = Seq((10L, "alpha"), (20L, "beta")).toDF("cid", "cname")
-    val out = FuzzyMatch.bestMatchById(main, "id", "name", lookup, "cname", Seq("cid"))
+    val out = FuzzyMatch.bestMatchById(main, "id", "name", lookup, "cname", Seq("cid"),
+        lookupOrder = Nil)
     assert(out.count() == 1) // always exactly one match per main row
   }
 
@@ -28,7 +30,8 @@ class FuzzyMatchSpec extends SparkSpec {
     val main = Seq((1L, "ab")).toDF("id", "name")
     // two equally-distant candidates; first in load order must win
     val lookup = Seq((10L, "ax"), (20L, "xb")).toDF("cid", "cname")
-    val out = FuzzyMatch.bestMatchById(main, "id", "name", lookup, "cname", Seq("cid"))
+    val out = FuzzyMatch.bestMatchById(main, "id", "name", lookup, "cname", Seq("cid"),
+        lookupOrder = Nil)
       .select("cid").as[Long].collect()
     assert(out.toSeq == Seq(10L))
   }
@@ -36,7 +39,7 @@ class FuzzyMatchSpec extends SparkSpec {
   test("duplicate main rows each emit their own match (Kettle 1:1 contract)") {
     val main = Seq("MUGELLO", "MUGELLO", "ASSEN").toDF("name")
     val lookup = Seq((1L, "Mugello"), (2L, "Assen")).toDF("cid", "cname")
-    val out = FuzzyMatch.bestMatch(main, "name", lookup, "cname", Seq("cid"))
+    val out = FuzzyMatch.bestMatch(main, "name", lookup, "cname", Seq("cid"), lookupOrder = Nil)
     assert(out.count() == 3)
     assert(out.filter(col("name") === "MUGELLO").count() == 2)
   }
@@ -86,7 +89,7 @@ class FuzzyMatchSpec extends SparkSpec {
     val main = Seq("MUGELLO", "MUGELLO", "MUGELLO", "ASSEN").toDF("name")
       .repartition(5)
     val lookup = Seq((1L, "Mugello"), (2L, "Assen")).toDF("cid", "cname")
-    val out = FuzzyMatch.bestMatch(main, "name", lookup, "cname", Seq("cid"))
+    val out = FuzzyMatch.bestMatch(main, "name", lookup, "cname", Seq("cid"), lookupOrder = Nil)
     assert(out.count() == 4)
     assert(out.filter(col("name") === "MUGELLO").count() == 3)
     assert(out.filter(col("name") === "MUGELLO").select("cid")
@@ -99,7 +102,7 @@ class FuzzyMatchSpec extends SparkSpec {
     // over- or under-counts
     val main = (Seq.fill(5000)("MUGELLO") ++ Seq("ASSEN")).toDF("name")
     val lookup = Seq((1L, "Mugello"), (2L, "Assen")).toDF("cid", "cname")
-    val out = FuzzyMatch.bestMatch(main, "name", lookup, "cname", Seq("cid"))
+    val out = FuzzyMatch.bestMatch(main, "name", lookup, "cname", Seq("cid"), lookupOrder = Nil)
     assert(out.count() == 5001)
     assert(out.filter(col("name") === "MUGELLO").count() == 5000)
   }
@@ -108,7 +111,7 @@ class FuzzyMatchSpec extends SparkSpec {
     val main = Seq(("MUGELLO", Map("k" -> "v")), ("ASSEN", Map.empty[String, String]))
       .toDF("name", "props")
     val lookup = Seq((1L, "Mugello"), (2L, "Assen")).toDF("cid", "cname")
-    val out = FuzzyMatch.bestMatch(main, "name", lookup, "cname", Seq("cid"))
+    val out = FuzzyMatch.bestMatch(main, "name", lookup, "cname", Seq("cid"), lookupOrder = Nil)
     assert(out.count() == 2)
     assert(out.filter(col("name") === "MUGELLO").select("cid").as[Long].head() == 1L)
     assert(out.columns.contains("props")) // the map column rides through
@@ -134,7 +137,7 @@ class FuzzyMatchSpec extends SparkSpec {
     sys.props("graft.fuzzy.maxLookupRows") = "10"
     try {
       val e = intercept[IllegalArgumentException] {
-        FuzzyMatch.bestMatchById(main, "id", "name", lookup, "cname", Seq("cid"))
+        FuzzyMatch.bestMatchById(main, "id", "name", lookup, "cname", Seq("cid"), lookupOrder = Nil)
       }
       // r13: the guard counts through limit(cap + 1), so it reads at
       // most 11 rows of the 50-row lookup before refusing — the message
@@ -145,7 +148,7 @@ class FuzzyMatchSpec extends SparkSpec {
       // at the cap is fine
       sys.props("graft.fuzzy.maxLookupRows") = "50"
       assert(FuzzyMatch.bestMatchById(main, "id", "name",
-        lookup, "cname", Seq("cid")).count() == 1)
+        lookup, "cname", Seq("cid"), lookupOrder = Nil).count() == 1)
     } finally {
       prev match {
         case Some(v) => sys.props("graft.fuzzy.maxLookupRows") = v
@@ -180,7 +183,7 @@ class FuzzyMatchSpec extends SparkSpec {
         .select("id", "cid", "match_score")
         .as[(Long, Long, Double)].collect().toSet
       val want = mains.crossJoin(lookups)
-        .withColumn("s", round(graft.functions.JaroWinkler.jaro_winkler(
+        .withColumn("s", round(Kernels.jaroWinkler(
           lower(col("name")), lower(col("cname"))), 6))
         .filter(col("s") >= tau)
         .select("id", "cid", "s").as[(Long, Long, Double)].collect().toSet
@@ -212,7 +215,7 @@ class FuzzyMatchSpec extends SparkSpec {
         .select("id", "cid", "match_score")
         .as[(Long, Long, Double)].collect().toSet
       val want = mains.crossJoin(lookups)
-        .withColumn("s", round(graft.functions.JaroWinkler.jaro_winkler(
+        .withColumn("s", round(Kernels.jaroWinkler(
           lower(col("name")), lower(col("cname"))), 6))
         .filter(col("s") >= tau)
         .select("id", "cid", "s").as[(Long, Long, Double)].collect().toSet
@@ -291,7 +294,8 @@ class FuzzyMatchSpec extends SparkSpec {
   test("appended score equals the scalar jaro_winkler") {
     val main = Seq((1L, "MARTHA")).toDF("id", "name")
     val lookup = Seq((10L, "MARHTA")).toDF("cid", "cname")
-    val score = FuzzyMatch.bestMatchById(main, "id", "name", lookup, "cname", Seq("cid"))
+    val score = FuzzyMatch.bestMatchById(main, "id", "name", lookup, "cname", Seq("cid"),
+        lookupOrder = Nil)
       .select("match_score").as[Double].collect().head
     assert(math.abs(score - graft.functions.JaroWinkler.sim("martha", "marhta")) < 1e-12)
   }

@@ -1,6 +1,7 @@
 package graft
 
-import graft.functions.{HtmlKernels, TextFunctions => TF}
+import graft.functions.HtmlKernels
+import org.apache.spark.sql.Kernels
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -122,7 +123,7 @@ class HtmlExtractSpec extends SparkSpec {
       (2L, null.asInstanceOf[String]),
       (3L, "plain")
     ).toDF("id", "html")
-    val got = df.select(col("id"), TF.htmlExtract(col("html")).as("t"))
+    val got = df.select(col("id"), Kernels.htmlExtract(col("html")).as("t"))
       .as[(Long, String)].collect().toMap
     assert(got(1L) == "Hello & goodbye")
     assert(got(2L) == null)
@@ -174,7 +175,7 @@ class HtmlExtractSpec extends SparkSpec {
       .as[Seq[String]].head()
     assert(got == Seq("/a", "/b"))
     val df = Seq((1L, null.asInstanceOf[String])).toDF("id", "html")
-      .select(TF.htmlLinks(col("html"))).collect()
+      .select(Kernels.htmlLinks(col("html"))).collect()
     assert(df.head.isNullAt(0))
   }
 

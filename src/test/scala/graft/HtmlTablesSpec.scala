@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.TableKernels
+import org.apache.spark.sql.Kernels
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -61,7 +62,7 @@ class HtmlTablesSpec extends SparkSpec {
   test("DataFrame + SQL surface") {
     val out = Seq(Tuple1("<table><tr><td>q</td><td>r</td></tr></table>"))
       .toDF("h")
-      .select(explode(graft.functions.TextFunctions.htmlTables(col("h"))).as("c"))
+      .select(explode(Kernels.htmlTables(col("h"))).as("c"))
       .select(col("c.table"), col("c.row"), col("c.col"), col("c.text"))
       .as[(Int, Int, Int, String)].collect().toSeq
     assert(out == Seq((0, 0, 0, "q"), (0, 0, 1, "r")))

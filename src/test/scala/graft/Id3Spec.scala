@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.Id3Kernels
+import org.apache.spark.sql.Kernels
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Id3Kernels]] — ID3v2.2/2.3/2.4 + ID3v1 tag extraction, the
@@ -113,7 +114,7 @@ class Id3Spec extends AnyFunSuite {
       "SELECT id, id3_tags(b).title AS t FROM id3_t ORDER BY id").collect()
     assert(rows(0).getString(1) == "sql song")
     assert(rows(1).isNullAt(1))
-    val viaCol = df.select(graft.operators.Multimodal.id3Tags($"b")
+    val viaCol = df.select(Kernels.id3Tags($"b")
       .getField("title").as("t")).collect()
     assert(viaCol(0).getString(0) == "sql song" && viaCol(1).isNullAt(0))
   }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.JsonShapeKernels
+import org.apache.spark.sql.Kernels
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -56,7 +57,7 @@ class JsonShapeSpec extends SparkSpec {
   test("DataFrame + SQL surface; profiling aggregation shape") {
     val docs = Seq("""{"a": 1}""", """{"a": "s"}""", "boom").toDF("j")
     val prof = docs
-      .select(explode_outer(graft.functions.TextFunctions.jsonPaths(col("j"))).as("p"))
+      .select(explode_outer(Kernels.jsonPaths(col("j"))).as("p"))
       .groupBy(col("p.path"), col("p.jtype")).agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     assert(prof == Set(

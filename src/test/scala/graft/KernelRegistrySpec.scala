@@ -47,7 +47,7 @@ class KernelRegistrySpec extends SparkSpec {
     "pq_adc" -> Seq(1),
     "sq8_encode" -> Seq(Array(-1.0, -1.0, -1.0), Array(4.0, 4.0, 4.0)),
     "sq8_decode" -> Seq(Array(-1.0, -1.0, -1.0), Array(4.0, 4.0, 4.0)),
-    "decode_features" -> Seq(4, graft.operators.Multimodal.stub),
+    "decode_features" -> Seq(4, MultimodalSpec.stub),
     "frame_chunks" -> Seq(4, 2))
 
   private val gz = {
@@ -114,6 +114,19 @@ class KernelRegistrySpec extends SparkSpec {
       for (q <- Seq(s"SELECT ${k.name}($folded)", s"SELECT ${k.name}($scanned) FROM kernel_nulls"))
         assert(spark.sql(q).collect().head.isNullAt(0), q)
     }
+  }
+
+  test("array<float> vectors cast the same way through SQL and the Column API") {
+    val df = spark.createDataFrame(java.util.Arrays.asList(
+        Row(Seq(1.0f, 2.0f, 2.0f), Seq(3.0f, 0.5f, 4.0f)), Row(Seq(0.0f), Seq(0.0f))),
+      StructType(Seq(StructField("a", ArrayType(FloatType)), StructField("b", ArrayType(FloatType)))))
+    df.createOrReplaceTempView("float_vectors")
+    val viaSql = spark.sql("SELECT vector_dot(a, b), vector_cosine(a, b) FROM float_vectors")
+      .collect().toSeq
+    val viaColumn = df.select(Kernels.vectorDot(col("a"), col("b")),
+      Kernels.vectorCosine(col("a"), col("b"))).collect().toSeq
+    assert(viaColumn == viaSql)
+    assert(viaSql.head.getDouble(0) == 12.0 && viaSql(1) == Row(0.0, 0.0))
   }
 
   test("interpreted evaluation equals generated code on a sample of every input type") {

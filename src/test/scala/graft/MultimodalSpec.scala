@@ -14,20 +14,23 @@ class MultimodalSpec extends SparkSpec {
   ).toDF("id", "txt").withColumn("blob", encode(col("txt"), "UTF-8"))
 
   test("featurize: schema, byte counts, fixed dim, deterministic") {
-    val out = Multimodal.featurize(media, "id", "blob", dim = 4)
+    val out = Multimodal.featurize(media, "id", "blob", dim = 4,
+      decoder = MultimodalSpec.stub)
     assert(out.columns.toSeq == Seq("media_id", "n_bytes", "feature"))
     val rows = out.select("media_id", "n_bytes")
       .as[(Long, Long)].collect().toMap
     assert(rows == Map(1L -> 22L, 2L -> 22L, 3L -> 0L))
     val f1 = out.filter(col("media_id") === 1).select("feature").as[Seq[Float]].collect().head
-    val f2 = Multimodal.featurize(media, "id", "blob", dim = 4)
+    val f2 = Multimodal.featurize(media, "id", "blob", dim = 4,
+      decoder = MultimodalSpec.stub)
       .filter(col("media_id") === 1).select("feature").as[Seq[Float]].collect().head
     assert(f1.size == 4 && f1 == f2)
     assert(f1.forall(v => v >= -1.0f && v <= 1.0f))
   }
 
   test("different payloads give different stub features") {
-    val out = Multimodal.featurize(media, "id", "blob", dim = 8)
+    val out = Multimodal.featurize(media, "id", "blob", dim = 8,
+      decoder = MultimodalSpec.stub)
       .select("media_id", "feature").as[(Long, Seq[Float])].collect().toMap
     assert(out(1L) != out(2L))
   }
@@ -83,7 +86,7 @@ class MultimodalSpec extends SparkSpec {
       (6L, png(9, 9).take(12)), (7L, null.asInstanceOf[Array[Byte]]),
       (8L, pngBadChunk), (9L, bmpCoreHeader), (10L, gif(0, 200)))
     val out = rows.toDF("id", "blob")
-      .select(col("id"), Multimodal.imageMeta(col("blob")).as("m"))
+      .select(col("id"), Kernels.imageMeta(col("blob")).as("m"))
       .select(col("id"), col("m.format"), col("m.width"), col("m.height"))
       .collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(1)) null else (r.getString(1), r.getInt(2), r.getInt(3)))).toMap
@@ -132,7 +135,7 @@ class MultimodalSpec extends SparkSpec {
       (7L, riff("ALPH", new Array[Byte](8))), // unknown first chunk
       (8L, vp8x.take(20))) // truncated
     val out = rows.toDF("id", "blob")
-      .select(col("id"), Multimodal.imageMeta(col("blob")).as("m"))
+      .select(col("id"), Kernels.imageMeta(col("blob")).as("m"))
       .select(col("id"), col("m.format"), col("m.width"), col("m.height"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null
         else (r.getString(1), r.getInt(2), r.getInt(3)))).toMap
@@ -162,7 +165,7 @@ class MultimodalSpec extends SparkSpec {
       (7L, Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte) ++
         b("""<svg width="7" height="8"></svg>""")))
     val out = rows.toDF("id", "blob")
-      .select(col("id"), Multimodal.imageMeta(col("blob")).as("m"))
+      .select(col("id"), Kernels.imageMeta(col("blob")).as("m"))
       .select(col("id"), col("m.format"), col("m.width"), col("m.height"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null
         else (r.getString(1), r.getInt(2), r.getInt(3)))).toMap
@@ -206,7 +209,7 @@ class MultimodalSpec extends SparkSpec {
       (3L, null.asInstanceOf[Array[Byte]]),
       (4L, adpcm), (5L, shortFmt), (6L, truncated))
     val out = rows.toDF("id", "blob")
-      .select(col("id"), Multimodal.audioMeta(col("blob")).as("m"))
+      .select(col("id"), Kernels.audioMeta(col("blob")).as("m"))
       .select(col("id"), col("m.channels"), col("m.sample_rate"), col("m.n_frames"))
       .collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(1)) null else (r.getInt(1), r.getInt(2), r.getLong(3)))).toMap
@@ -247,7 +250,7 @@ class MultimodalSpec extends SparkSpec {
       (2L, si(8000, 1, 16, 0L)),          // 0 = declared-unknown, in-spec
       (3L, si(44100, 2, 16, 192L).take(20))) // truncated head: refuse
     val out = rows.toDF("id", "blob")
-      .select(col("id"), Multimodal.audioMeta(col("blob")).as("m"))
+      .select(col("id"), Kernels.audioMeta(col("blob")).as("m"))
       .select(col("id"), col("m.format"), col("m.channels"),
         col("m.sample_rate"), col("m.bits_per_sample"), col("m.n_frames"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null
@@ -298,7 +301,7 @@ class MultimodalSpec extends SparkSpec {
     val rows = Seq((1L, cbr), (2L, vbr), (3L, id3), (4L, partial),
       (5L, falseSync), (6L, layerII), (7L, rateDrift))
     val out = rows.toDF("id", "blob")
-      .select(col("id"), Multimodal.audioMeta(col("blob")).as("m"))
+      .select(col("id"), Kernels.audioMeta(col("blob")).as("m"))
       .select(col("id"), col("m.format"), col("m.channels"),
         col("m.sample_rate"), col("m.bits_per_sample"), col("m.n_frames"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null
@@ -335,7 +338,7 @@ class MultimodalSpec extends SparkSpec {
     val rows = Seq((1L, mp4), (2L, "GIF89a definitely not mp4".getBytes),
       (3L, null.asInstanceOf[Array[Byte]]))
     val out = rows.toDF("id", "blob")
-      .select(col("id"), Multimodal.videoMeta(col("blob")).as("m"))
+      .select(col("id"), Kernels.videoMeta(col("blob")).as("m"))
       .select(col("id"), col("m.format"), col("m.timescale"), col("m.duration"),
         col("m.n_tracks"))
       .collect().map(r => r.getLong(0) ->
@@ -380,7 +383,7 @@ class MultimodalSpec extends SparkSpec {
       (3L, null.asInstanceOf[Array[Byte]]))
     val out = rows.toDF("id", "blob")
       .select(col("id"),
-        posexplode_outer(Multimodal.videoTrackStats(col("blob")))
+        posexplode_outer(Kernels.videoTrackStats(col("blob")))
           .as(Seq("ti", "t")))
       .select(col("id"), col("ti"), col("t.handler"), col("t.timescale"),
         col("t.duration"), col("t.n_samples"), col("t.total_bytes"))
@@ -532,8 +535,8 @@ class MultimodalSpec extends SparkSpec {
     val out = Seq((1L, craftedWav), (2L, emptyFtyp), (3L, unknownDur))
       .toDF("id", "blob")
       .select(col("id"),
-        Multimodal.audioMeta(col("blob")).as("a"),
-        Multimodal.videoMeta(col("blob")).as("v"))
+        Kernels.audioMeta(col("blob")).as("a"),
+        Kernels.videoMeta(col("blob")).as("v"))
       .collect().map(r => r.getLong(0) -> ((r.isNullAt(1), r.isNullAt(2)))).toMap
     assert(out(1L) == ((true, true)))  // crafted size: NULL, not a crash
     assert(out(2L) == ((true, true)))  // empty ftyp: no garbage brand
@@ -709,12 +712,38 @@ class MultimodalSpec extends SparkSpec {
     // for the rest: same rasters, a full-width vector for the text blob
     val rasterOrStub: Multimodal.Decoder = (bs, dim) => bs.map { b =>
       val r = Multimodal.raster(Seq(b), dim).head
-      if (r.nonEmpty) r else Multimodal.stub(Seq(b), dim).head
+      if (r.nonEmpty) r else MultimodalSpec.stub(Seq(b), dim).head
     }
     val mixed = Multimodal.featurize(df, "id", "blob", dim = 5,
         decoder = rasterOrStub)
       .collect().map(r => r.getLong(0) -> r.getSeq[Float](2)).toMap
     assert(mixed(1L) == out(1L) && mixed(2L) == out(2L))
     assert(mixed(3L).length == 5 && mixed(3L) != out(3L))
+  }
+}
+
+object MultimodalSpec {
+  /** Deterministic pseudo-feature batch decoder: stands in for a
+    * codec-bound decode + embed (compressed-codec video has no real
+    * decoder), so featurize's plumbing is exercisable without codecs. */
+  val stub: graft.operators.Multimodal.Decoder = (blobs, dim) => blobs.map(stubOne(_, dim))
+
+  private def stubOne(bytes: Array[Byte], dim: Int): Array[Float] = {
+    val out = new Array[Float](dim)
+    var h = 1125899906842597L // deterministic FNV-ish rolling hash
+    var i = 0
+    while (i < bytes.length) { h = h * 31 + (bytes(i) & 0xff); i += 1 }
+    var d = 0
+    while (d < dim) {
+      // murmur3 finalizer so low-bit payload differences avalanche
+      var x = h ^ (0x9e3779b97f4a7c15L * (d + 1))
+      x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
+      x ^= x >>> 33; x *= 0xc4ceb9fe1a85ec53L
+      x ^= x >>> 33
+      // top 52 bits -> [0, 1) -> [-1, 1)
+      out(d) = ((x >>> 12).toDouble / (1L << 52).toDouble * 2.0 - 1.0).toFloat
+      d += 1
+    }
+    out
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
-import graft.functions.{TextFunctions => TF}
 import graft.operators.{Dedup, FuzzyMatch, Multimodal}
+import org.apache.spark.sql.Kernels
 import org.apache.spark.sql.functions._
 
 /** Null / empty / degenerate inputs through every operator family —
@@ -18,7 +18,7 @@ class NullEdgeSpec extends SparkSpec {
   ).toDF("doc_id", "text")
 
   test("text stats survive null/empty/whitespace docs") {
-    val out = docs.select(col("doc_id"), TF.textStats(col("text")).as("st"))
+    val out = docs.select(col("doc_id"), Kernels.textStats(col("text")).as("st"))
       .select(col("doc_id"), col("st.n_tokens"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1)))
       .toMap
@@ -41,7 +41,8 @@ class NullEdgeSpec extends SparkSpec {
   test("fuzzy match: null main field still emits exactly one row per main row") {
     val main = Seq((1L, Some("alpha")), (2L, None)).toDF("id", "name")
     val lookup = Seq((10L, "alpha"), (20L, "beta")).toDF("cid", "cname")
-    val out = FuzzyMatch.bestMatchById(main, "id", "name", lookup, "cname", Seq("cid"))
+    val out = FuzzyMatch.bestMatchById(main, "id", "name", lookup, "cname", Seq("cid"),
+        lookupOrder = Nil)
     assert(out.count() == 2)
     // the null-name row still picks a (first-by-order) lookup row
     assert(out.filter(col("id") === 2L).count() == 1)
@@ -50,7 +51,8 @@ class NullEdgeSpec extends SparkSpec {
   test("multimodal featurize: null blob becomes an empty-payload feature") {
     val media = Seq((1L, Some("payload")), (2L, None)).toDF("id", "txt")
       .withColumn("blob", when(col("txt").isNotNull, encode(col("txt"), "UTF-8")))
-    val out = Multimodal.featurize(media, "id", "blob", dim = 4)
+    val out = Multimodal.featurize(media, "id", "blob", dim = 4,
+        decoder = MultimodalSpec.stub)
       .select("media_id", "n_bytes").as[(Long, Long)].collect().toMap
     assert(out == Map(1L -> 7L, 2L -> 0L))
   }
@@ -78,11 +80,9 @@ class NullEdgeSpec extends SparkSpec {
     def chain(t: Throwable): Seq[String] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
         .map(x => String.valueOf(x.getMessage)).toSeq
-    for (f <- Seq(
-        graft.functions.VectorFunctions.cosineSimilarity _,
-        graft.functions.VectorFunctions.dot _)) {
+    for (k <- Seq(Kernels.vectorCosine, Kernels.vectorDot)) {
       val e = intercept[Throwable] {
-        df.select(f(col("a"), col("b"))).collect()
+        df.select(k(col("a"), col("b"))).collect()
       }
       assert(chain(e).exists(_.contains("dimensions differ")), chain(e).mkString(" | "))
     }
@@ -94,7 +94,7 @@ class NullEdgeSpec extends SparkSpec {
       (2L, Array(0.0f, 0.0f))
     ).toDF("id", "v")
     val out = df.select(col("id"),
-      graft.functions.VectorFunctions.cosineSimilarity(col("v"), col("v")).as("c"))
+      Kernels.vectorCosine(col("v"), col("v")).as("c"))
       .as[(Long, Double)].collect().toMap
     assert(out == Map(1L -> 0.0, 2L -> 0.0))
   }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Ops
+import org.apache.spark.sql.Kernels
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -544,7 +545,7 @@ class OpsSpec extends SparkSpec {
     val sk = toks.agg(expr("count_min_sketch(token, 0.0001d, 0.99d, 7)").as("sk"))
     val exact = toks.groupBy("token").agg(count(lit(1)).as("cnt"))
     val rows = exact.crossJoin(sk)
-      .withColumn("est", Ops.cmsEstimate(col("sk"), col("token")))
+      .withColumn("est", Kernels.cmsEstimate(col("sk"), col("token")))
       .select("token", "cnt", "est").as[(String, Long, Long)].collect()
     assert(rows.length == 4)
     // a wide sketch (eps 1e-4 over 4 distinct tokens) has no collisions:
@@ -557,7 +558,7 @@ class OpsSpec extends SparkSpec {
     val otherSk = (1 to 400).map(i => s"other${i % 4}").toDF("token")
       .agg(expr("count_min_sketch(token, 0.0001d, 0.99d, 7)").as("sk"))
     val surviving = exact.crossJoin(otherSk)
-      .withColumn("est", Ops.cmsEstimate(col("sk"), col("token")))
+      .withColumn("est", Kernels.cmsEstimate(col("sk"), col("token")))
       .filter(col("est") >= col("cnt"))
     assert(surviving.count() == 0)
   }

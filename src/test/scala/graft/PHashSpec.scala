@@ -1,9 +1,10 @@
 package graft
 
 import graft.functions.PHashKernels
+import org.apache.spark.sql.Kernels
 import org.apache.spark.sql.functions._
 
-/** [[PHashKernels]] dHash + [[graft.operators.Dedup.imageNearDupPairs]]. */
+/** [[PHashKernels]] dHash + [[graft.operators.Dedup.sketchPairs]]. */
 class PHashSpec extends SparkSpec {
   import spark.implicits._
 
@@ -170,7 +171,8 @@ class PHashSpec extends SparkSpec {
     } :+ (999L, "not an image".getBytes("UTF-8").asInstanceOf[Array[Byte]])
     val df = rows.toDF("id", "img")
     val banded = graft.operators.Dedup
-      .imageNearDupPairs(df, "img", "id", maxHamming = 6, bands = 8)
+      .sketchPairs(df, Kernels.dHash64(col("img")), "id",
+        maxHamming = 6, bands = 8)
       .as[(Long, Long, Int)].collect().toSet
     // brute force over the same hashes
     val hs = rows.flatMap { case (id, b) =>

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.PdfKernels
+import org.apache.spark.sql.Kernels
 import org.apache.spark.sql.functions._
 
 /** [[PdfKernels]] — PDF triage + text extraction. Fixtures are built
@@ -737,8 +738,8 @@ class PdfSpec extends SparkSpec {
     val pdf = classicPdf(Seq("BT (df text) Tj ET"))
     val row = Seq((1L, pdf)).toDF("id", "blob")
       .select(col("id"),
-        graft.operators.Multimodal.pdfMeta(col("blob")).as("m"),
-        graft.operators.Multimodal.pdfText(col("blob")).as("t"))
+        Kernels.pdfMeta(col("blob")).as("m"),
+        Kernels.pdfText(col("blob")).as("t"))
       .select(col("m.version"), col("m.n_pages"), col("t")).head()
     assert(row.getString(0) == "1.4" && row.getInt(1) == 1 &&
       row.getString(2) == "df text")

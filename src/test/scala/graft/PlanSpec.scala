@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Kernels}
 
 /** Plan-shape regression tests: the properties that make these operators
   * scale are asserted on the physical plan, not just implied. If a
@@ -625,7 +625,7 @@ class PlanSpec extends SparkSpec {
     spark.read.parquet(s"$dir/embeddings.parquet")
       .filter(col("embedding").isNotNull)
       .select(col("vec_id").as("__id"),
-        graft.functions.VectorFunctions.l2Normalize(col("embedding")).as("__v"))
+        Kernels.vectorL2Normalize(col("embedding")).as("__v"))
 
   test("IVF trainer: Lloyd per-iteration reduction is a DataFrame hash " +
     "aggregation — no ExistingRDD / DeserializeToObject, partial+final combine") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.PptKernels
+import org.apache.spark.sql.Kernels
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[PptKernels]] — legacy .ppt slide-text extraction over real
@@ -74,7 +75,7 @@ class PptSpec extends AnyFunSuite {
       "SELECT id, ppt_text(b) AS t FROM ppt_t ORDER BY id").collect()
     assert(rows(0).getString(1) == "sql deck")
     assert(rows(1).isNullAt(1))
-    val viaCol = df.select(graft.operators.Multimodal.pptText($"b").as("t"))
+    val viaCol = df.select(Kernels.pptText($"b").as("t"))
       .collect().map(r => Option(r.getString(0)))
     assert(viaCol.count(_.isDefined) == 1)
   }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.PptxKernels
+import org.apache.spark.sql.Kernels
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[PptxKernels]] — PPTX slide-text extraction over real ZIP
@@ -78,7 +79,7 @@ class PptxSpec extends AnyFunSuite {
       "SELECT id, pptx_text(b) AS t FROM pptx_t ORDER BY id").collect()
     assert(rows(0).getString(1) == "sql deck")
     assert(rows(1).isNullAt(1))
-    val viaCol = df.select(graft.operators.Multimodal.pptxText($"b").as("t"))
+    val viaCol = df.select(Kernels.pptxText($"b").as("t"))
       .collect().map(r => Option(r.getString(0)))
     assert(viaCol.count(_.isDefined) == 1)
   }

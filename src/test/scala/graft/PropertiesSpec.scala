@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.{JaroWinkler, MinHashKernels}
 import graft.operators.{Dedup, Ops}
+import org.apache.spark.sql.Kernels
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 
@@ -110,7 +111,7 @@ class PropertiesSpec extends SparkSpec {
       val text = Seq.fill(rnd.nextInt(60))(alphabet(rnd.nextInt(alphabet.length))).mkString
       val maxTokens = 1 + rnd.nextInt(6)
       val chunks = Seq(text).toDF("t")
-        .select(graft.functions.TextFunctions.chunkText(col("t"), maxTokens))
+        .select(Kernels.chunkText(col("t"), maxTokens, 0))
         .as[Seq[String]].collect().head
       // reference tokenization: space-trim then Java split keeping
       // boundary empties — the kernel's documented contract

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.RtfKernels
+import org.apache.spark.sql.Kernels
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[RtfKernels]] — RTF text extraction: control words, destination
@@ -81,7 +82,7 @@ class RtfSpec extends AnyFunSuite {
       .collect()
     assert(rows(0).getString(1) == "sql body\n")
     assert(rows(1).isNullAt(1))
-    val viaCol = df.select(graft.operators.Multimodal.rtfText($"b").as("t"))
+    val viaCol = df.select(Kernels.rtfText($"b").as("t"))
       .collect().map(r => Option(r.getString(0)))
     assert(viaCol.count(_.isDefined) == 1)
   }

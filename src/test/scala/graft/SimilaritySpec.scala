@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Similarity
-import graft.functions.VectorFunctions
+import org.apache.spark.sql.Kernels
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -86,7 +86,7 @@ class SimilaritySpec extends SparkSpec {
     val df = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.6f, 0.6f)),
       (3L, Array(0.1f, 0.9f))).toDF("id", "v")
     val got = df.select(col("id"),
-        VectorFunctions.pqEncode(col("v"), books).as("c"))
+        Kernels.pqEncode(col("v"), books).as("c"))
       .as[(Long, Seq[Long])].collect().toMap
     assert(got(1L) == Seq(1L) && got(2L) == Seq(1L) && got(3L) == Seq(2L))
     // two subspaces tile a 4-dim vector independently
@@ -94,7 +94,7 @@ class SimilaritySpec extends SparkSpec {
       Array(Array(1.0, 0.0), Array(0.0, 1.0)),
       Array(Array(5.0, 5.0), Array(-1.0, -1.0)))
     val g2 = Seq((1L, Array(0.0f, 1.0f, -0.9f, -1.1f))).toDF("id", "v")
-      .select(VectorFunctions.pqEncode(col("v"), books2))
+      .select(Kernels.pqEncode(col("v"), books2))
       .as[Seq[Long]].head()
     assert(g2 == Seq(2L, 2L))
   }
@@ -213,11 +213,11 @@ class SimilaritySpec extends SparkSpec {
     val engineBooks = Similarity.pqCodebooks(
       emb.filter(col("embedding").isNotNull)
         .select(col("vec_id").as("corpus_id"),
-          VectorFunctions.l2Normalize(col("embedding")).as("__cv"))
+          Kernels.vectorL2Normalize(col("embedding")).as("__cv"))
         .withColumn("centroid_id",
-          element_at(VectorFunctions.topCentroids(col("__cv"), centroids, 1), 1))
+          element_at(Kernels.topCentroids(col("__cv"), centroids, 1), 1))
         .select(col("corpus_id"),
-          VectorFunctions.centroidResidual(col("__cv"), col("centroid_id"), centroids).as("__rv")),
+          Kernels.centroidResidual(col("__cv"), col("centroid_id"), centroids).as("__rv")),
       "__rv", "corpus_id", m, nCodes, iters)
     for (mi <- 0 until m; ci <- 0 until nCodes; j <- 0 until sub)
       assert(math.abs(engineBooks(mi)(ci)(j) - books(mi)(ci)(j)) < 1e-10,
@@ -272,7 +272,7 @@ class SimilaritySpec extends SparkSpec {
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val ref = c.crossJoin(q).filter(col("query_id") =!= col("corpus_id"))
       .withColumn("cosine", round(
-        VectorFunctions.cosineSimilarity(col("qv"), col("cv")), 6))
+        Kernels.vectorCosine(col("qv"), col("cv")), 6))
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
           .orderBy(col("cosine").desc, col("corpus_id").asc)))
@@ -408,10 +408,10 @@ class SimilaritySpec extends SparkSpec {
   test("vector functions: dot / norm / cosine / normalize") {
     val df = Seq((Array(3.0f, 4.0f), Array(3.0f, 4.0f))).toDF("a", "b")
     val row = df.select(
-      VectorFunctions.dot(col("a"), col("b")).as("d"),
-      sqrt(VectorFunctions.dot(col("a"), col("a"))).as("n"),
-      VectorFunctions.cosineSimilarity(col("a"), col("b")).as("c"),
-      element_at(VectorFunctions.l2Normalize(col("a")), 1).as("u0"))
+      Kernels.vectorDot(col("a"), col("b")).as("d"),
+      sqrt(Kernels.vectorDot(col("a"), col("a"))).as("n"),
+      Kernels.vectorCosine(col("a"), col("b")).as("c"),
+      element_at(Kernels.vectorL2Normalize(col("a")), 1).as("u0"))
       .as[(Double, Double, Double, Double)].collect().head
     assert(row._1 == 25.0 && row._2 == 5.0)
     assert(math.abs(row._3 - 1.0) < 1e-12)
@@ -420,7 +420,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("zero vectors: cosine defined as 0, normalize passes through") {
     val df = Seq((Array(0.0f, 0.0f), Array(1.0f, 0.0f))).toDF("a", "b")
-    val c = df.select(VectorFunctions.cosineSimilarity(col("a"), col("b")))
+    val c = df.select(Kernels.vectorCosine(col("a"), col("b")))
       .as[Double].collect().head
     assert(c == 0.0)
   }
@@ -458,8 +458,8 @@ class SimilaritySpec extends SparkSpec {
     assert(mins.length == 8 && spans.forall(_ > 0))
     val rows = df.select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"),
-        VectorFunctions.sq8Decode(
-          VectorFunctions.sq8Encode(col("embedding"), mins, spans),
+        Kernels.sq8Decode(
+          Kernels.sq8Encode(col("embedding"), mins, spans),
           mins, spans).as("vhat"))
       .as[(Long, Seq[Double], Seq[Double])].collect()
     for ((_, v, vhat) <- rows; i <- v.indices)
@@ -471,13 +471,13 @@ class SimilaritySpec extends SparkSpec {
     val df = Seq((1L, Array(3.5f, 1.0f)), (2L, Array(3.5f, 2.0f))).toDF("vec_id", "embedding")
     val (mins, spans) = Similarity.sq8Stats(df, "embedding")
     assert(spans(0) == 0.0)
-    val vhat = df.orderBy("vec_id").select(VectorFunctions.sq8Decode(
-        VectorFunctions.sq8Encode(col("embedding"), mins, spans), mins, spans))
+    val vhat = df.orderBy("vec_id").select(Kernels.sq8Decode(
+        Kernels.sq8Encode(col("embedding"), mins, spans), mins, spans))
       .as[Seq[Double]].collect()
     assert(vhat.forall(_.head == 3.5)) // min + 0*span = the constant
     val err = intercept[Throwable] {
       Seq((1L, Array(1.0f, 2.0f, 3.0f))).toDF("vec_id", "embedding")
-        .select(VectorFunctions.sq8Encode(col("embedding"), mins, spans)).collect()
+        .select(Kernels.sq8Encode(col("embedding"), mins, spans)).collect()
     }
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)

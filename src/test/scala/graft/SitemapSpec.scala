@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.SitemapKernels
+import org.apache.spark.sql.Kernels
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -96,11 +97,11 @@ class SitemapSpec extends SparkSpec {
     val xml = "<urlset><url><loc>/rel/1</loc></url>" +
       "<url><loc>https://Other.Example.com/abs</loc></url></urlset>"
     val df = Seq((robots, xml)).toDF("robots", "xml")
-      .select(element_at(graft.functions.TextFunctions.robotsSitemaps(col("robots")), 1)
-        .as("sm"), posexplode(graft.functions.TextFunctions.sitemapEntries(col("xml")))
+      .select(element_at(Kernels.robotsSitemaps(col("robots")), 1)
+        .as("sm"), posexplode(Kernels.sitemapEntries(col("xml")))
         .as(Seq("pos", "e")))
-      .select(graft.functions.TextFunctions.urlParts(
-        graft.functions.TextFunctions.urlResolve(col("sm"), col("e.loc")))
+      .select(Kernels.urlParts(
+        Kernels.urlResolve(col("sm"), col("e.loc")))
         .getField("normalized").as("url"))
     assert(df.as[String].collect().toSeq == Seq(
       "https://h.example.com/rel/1", "https://other.example.com/abs"))

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.{TextFunctions => TF}
 import graft.operators.{Bpe, Importance}
+import org.apache.spark.sql.Kernels
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -155,12 +156,12 @@ class StreamingKernelsSpec extends SparkSpec {
         "not img".getBytes("UTF-8")))
     def pipeline(df: org.apache.spark.sql.DataFrame) = df.select(
       col("id"),
-      element_at(TF.sitemapEntries(
-        decode(graft.operators.Multimodal.gunzip(col("smgz")), "UTF-8")), 1)
+      element_at(Kernels.sitemapEntries(
+        decode(Kernels.gunzip(col("smgz")), "UTF-8")), 1)
         .getField("loc").as("loc"),
-      graft.operators.Multimodal.pdfText(col("pdf")).as("ptext"),
-      graft.operators.Multimodal.pdfMeta(col("pdf")).getField("n_pages").as("np"),
-      org.apache.spark.sql.Kernels.dHash64(col("img")).as("dh"))
+      Kernels.pdfText(col("pdf")).as("ptext"),
+      Kernels.pdfMeta(col("pdf")).getField("n_pages").as("np"),
+      Kernels.dHash64(col("img")).as("dh"))
     val batch = pipeline(rows.toDF("id", "smgz", "pdf", "img"))
       .collect().map(_.toSeq).toSet
     val input = MemoryStream[(Long, Array[Byte], Array[Byte], Array[Byte])](
@@ -207,9 +208,9 @@ class StreamingKernelsSpec extends SparkSpec {
       (2L, "junk".getBytes("UTF-8"), "junk".getBytes("UTF-8"), "<table><tr>"))
     def pipeline(df: org.apache.spark.sql.DataFrame) = df.select(
       col("id"),
-      decode(graft.operators.Multimodal.zipExtract(col("z"), lit("m.txt")), "UTF-8").as("zt"),
-      decode(graft.operators.Multimodal.tarExtract(col("t"), lit("m.txt")), "UTF-8").as("tt"),
-      TF.htmlTables(col("h")).as("cells"))
+      decode(Kernels.zipExtract(col("z"), lit("m.txt")), "UTF-8").as("zt"),
+      decode(Kernels.tarExtract(col("t"), lit("m.txt")), "UTF-8").as("tt"),
+      Kernels.htmlTables(col("h")).as("cells"))
     val batch = pipeline(rows.toDF("id", "z", "t", "h")).collect().map(_.toSeq).toSet
     val input = MemoryStream[(Long, Array[Byte], Array[Byte], String)](
       spark, numPartitions = 1)
@@ -277,12 +278,12 @@ class StreamingKernelsSpec extends SparkSpec {
       (3L, null.asInstanceOf[String], "https://Sub.Host.org/path/"))
     def pipeline(df: org.apache.spark.sql.DataFrame) = df.select(
       col("doc_id"),
-      TF.htmlExtract(col("html")).as("text"),
-      TF.gopherRules(TF.htmlExtract(col("html")), minWords = 3)
+      Kernels.htmlExtract(col("html")).as("text"),
+      TF.gopherRules(Kernels.htmlExtract(col("html")), minWords = 3)
         .getField("keep").as("gopher_keep"),
-      TF.c4Rules(TF.htmlExtract(col("html")))
+      TF.c4Rules(Kernels.htmlExtract(col("html")))
         .getField("n_kept_lines").as("c4_kept"),
-      TF.urlParts(col("url")).getField("normalized").as("canon_url"))
+      Kernels.urlParts(col("url")).getField("normalized").as("canon_url"))
 
     val batch = pipeline(pages.toDF("doc_id", "html", "url"))
       .collect().map(_.toSeq).toSet
@@ -328,11 +329,11 @@ class StreamingKernelsSpec extends SparkSpec {
         "junk".getBytes("UTF-8")))
     def pipeline(df: org.apache.spark.sql.DataFrame) = df.select(
       col("id"),
-      decode(graft.operators.Multimodal.zstdDecompress(col("zst")), "UTF-8")
+      decode(Kernels.zstdDecompress(col("zst")), "UTF-8")
         .as("ztext"),
-      element_at(graft.operators.Multimodal.xlsxCells(col("xl")), 1)
+      element_at(Kernels.xlsxCells(col("xl")), 1)
         .getField("value").as("cell"),
-      org.apache.spark.sql.Kernels.dHash64(col("img")).as("dh"))
+      Kernels.dHash64(col("img")).as("dh"))
     val batch = pipeline(rows.toDF("id", "zst", "xl", "img"))
       .collect().map(_.toSeq).toSet
     val input = MemoryStream[(Long, Array[Byte], Array[Byte], Array[Byte])](
@@ -494,12 +495,12 @@ class StreamingKernelsSpec extends SparkSpec {
     def pipeline(df: org.apache.spark.sql.DataFrame) = {
       import graft.operators.Multimodal
       df.select(col("id"),
-        Multimodal.pptxText(col("px")).as("deck"),
+        Kernels.pptxText(col("px")).as("deck"),
         Multimodal.documentText(col("px")).as("dtext"),
-        size(Multimodal.mboxMessages(col("mb"))).as("nmsg"),
-        Multimodal.fontMeta(col("ft")).getField("family").as("fam"),
-        Multimodal.imageMeta(col("sv")).getField("format").as("ifmt"),
-        TF.htmlMeta(col("ht")).getField("og_title").as("ogt"))
+        size(Kernels.mboxMessages(col("mb"))).as("nmsg"),
+        Kernels.fontMeta(col("ft")).getField("family").as("fam"),
+        Kernels.imageMeta(col("sv")).getField("format").as("ifmt"),
+        Kernels.htmlMeta(col("ht")).getField("og_title").as("ogt"))
     }
     val batch = pipeline(rows.toDF("id", "px", "mb", "ft", "sv", "ht"))
       .collect().map(_.toSeq).toSet
@@ -534,11 +535,11 @@ class StreamingKernelsSpec extends SparkSpec {
     val rows = Seq((1L, exif, z, "dynamic text"),
       (2L, "x".getBytes, "x".getBytes, "other"))
     def pipeline(df: org.apache.spark.sql.DataFrame) = df.select(col("id"),
-      Multimodal.exifMeta(col("ex")).getField("model").as("model"),
-      Multimodal.lzwDecompress(col("lz")).cast("string").as("unz"),
-      Multimodal.lzwDecompress(Multimodal.lzwCompress(encode(col("tx"),
+      Kernels.exifMeta(col("ex")).getField("model").as("model"),
+      Kernels.lzwDecompress(col("lz")).cast("string").as("unz"),
+      Kernels.lzwDecompress(Kernels.lzwCompress(encode(col("tx"),
         "UTF-8"))).cast("string").as("rt"),
-      Multimodal.lz4Decompress(Multimodal.lz4CompressStore(encode(col("tx"),
+      Kernels.lz4Decompress(Kernels.lz4CompressStore(encode(col("tx"),
         "UTF-8"))).cast("string").as("rt4"))
     val batch = pipeline(rows.toDF("id", "ex", "lz", "tx"))
       .collect().map(_.toSeq).toSet

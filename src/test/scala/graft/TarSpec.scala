@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.TarKernels
+import org.apache.spark.sql.Kernels
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -114,10 +115,10 @@ class TarSpec extends SparkSpec {
     val g = new java.util.zip.GZIPOutputStream(bos)
     g.write(t1); g.close()
     val row = Seq((1L, bos.toByteArray)).toDF("id", "tgz")
-      .select(graft.operators.Multimodal.tarEntries(
-        graft.operators.Multimodal.gunzip(col("tgz"))).as("es"),
-        decode(graft.operators.Multimodal.tarExtract(
-          graft.operators.Multimodal.gunzip(col("tgz")), lit("m.txt")),
+      .select(Kernels.tarEntries(
+        Kernels.gunzip(col("tgz"))).as("es"),
+        decode(Kernels.tarExtract(
+          Kernels.gunzip(col("tgz")), lit("m.txt")),
           "UTF-8").as("t"))
       .select(col("es").getItem(0).getField("name"), col("t")).head()
     assert(row.getString(0) == "m.txt" && row.getString(1) == "tar gz payload")

@@ -120,6 +120,91 @@ class TestSeamSpec extends AnyFunSuite {
         found.mkString("\n  ", "\n  ", ""))
   }
 
+  /** A public def of a top-level object or class, as [[publicMember]]. */
+  private val publicDef = """(?m)^  (?:(?:final|implicit)\s+)*def\s+([A-Za-z_]\w*)""".r
+
+  /** Index of the bracket closing the one at `open`, or -1. */
+  private def closing(s: String, open: Int): Int = {
+    var depth = 0
+    var i = open
+    while (i < s.length) {
+      s(i) match {
+        case '(' | '[' | '{' => depth += 1
+        case ')' | ']' | '}' => depth -= 1; if (depth == 0) return i
+        case _ =>
+      }
+      i += 1
+    }
+    -1
+  }
+
+  /** The comma-separated parts of `s` outside any bracket, trimmed. */
+  private def topLevel(s: String): Seq[String] = {
+    val parts = Seq.newBuilder[String]
+    var depth = 0
+    var from = 0
+    for (i <- s.indices) s(i) match {
+      case '(' | '[' | '{' => depth += 1
+      case ')' | ']' | '}' => depth -= 1
+      case ',' if depth == 0 => parts += s.substring(from, i).trim; from = i + 1
+      case _ =>
+    }
+    parts += s.substring(from).trim
+    parts.result().filter(_.nonEmpty)
+  }
+
+  private val kernelCall = """(?:org\.apache\.spark\.sql\.)?Kernels\.(\w+)\(""".r
+
+  /** The `Kernels` entry that the def `name` declared in `decl` only
+    * forwards to: its whole body is one call of the entry, with the
+    * def's own parameters, unchanged and in order, as the arguments. */
+  private def forwardedEntry(decl: String, name: String): Option[String] = {
+    var i = decl.indexOf(name) + name.length
+    def skipSpace(): Unit = while (i < decl.length && decl(i).isWhitespace) i += 1
+    skipSpace()
+    if (i < decl.length && decl(i) == '[') { i = closing(decl, i) + 1; skipSpace() }
+    val params = Seq.newBuilder[String]
+    while (i > 0 && i < decl.length && decl(i) == '(') {
+      val end = closing(decl, i)
+      params ++= topLevel(decl.substring(i + 1, math.max(end, i + 1)))
+        .map(_.takeWhile(c => c.isLetterOrDigit || c == '_'))
+      i = end + 1
+      skipSpace()
+    }
+    // the body starts at the first `=` outside brackets that is not `=>`
+    var depth = 0
+    while (i > 0 && i < decl.length &&
+        !(depth == 0 && decl(i) == '=' && !decl.startsWith("=>", i))) {
+      decl(i) match {
+        case '(' | '[' | '{' => depth += 1
+        case ')' | ']' | '}' => depth -= 1
+        case _ =>
+      }
+      i += 1
+    }
+    if (i <= 0 || i >= decl.length) return None
+    val raw = decl.substring(i + 1).trim
+    val body =
+      if (raw.startsWith("{") && closing(raw, 0) == raw.length - 1) raw.substring(1, raw.length - 1).trim
+      else raw
+    kernelCall.findPrefixMatchOf(body).collect {
+      case m if closing(body, m.end - 1) == body.length - 1 &&
+          topLevel(body.substring(m.end, body.length - 1)) == params.result() => m.group(1)
+    }
+  }
+
+  test("no public def in graft only forwards to a Kernels entry") {
+    // each entry already is its own Column API (`Kernels.gunzip(col)`)
+    val found = for {
+      (path, src) <- sources if path.startsWith("src/main/scala/graft/")
+      m <- publicDef.findAllMatchIn(src).toSeq
+      entry <- forwardedEntry(src.substring(m.start, declarationSpan(src, m.start)._2), m.group(1))
+    } yield s"$path: ${m.group(1)} -> Kernels.$entry"
+    if (found.nonEmpty)
+      fail("defs that only forward to a Kernels entry; call the entry instead:" +
+        found.mkString("\n  ", "\n  ", ""))
+  }
+
   /** [start, end) of the declaration beginning at `at`: its first line
     * through the line before the next non-blank line indented no
     * deeper, a closing bracket at its own indentation included. */

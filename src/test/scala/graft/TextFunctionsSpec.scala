@@ -1,6 +1,7 @@
 package graft
 
-import graft.functions.{KernelReferences, SimHash, TextFunctions => TF}
+import graft.functions.{KernelReferences, TextFunctions => TF}
+import org.apache.spark.sql.Kernels
 import org.apache.spark.sql.functions._
 
 class TextFunctionsSpec extends SparkSpec {
@@ -18,7 +19,7 @@ class TextFunctionsSpec extends SparkSpec {
       (2L, ""), (3L, "   "),
       (4L, "one two")
     ).toDF("id", "t")
-    val out = df.select(col("id"), TF.chunkText(col("t"), maxTokens = 5, overlap = 1))
+    val out = df.select(col("id"), Kernels.chunkText(col("t"), 5, 1))
       .as[(Long, Seq[String])].collect().toMap
     assert(out(1L) == Seq("a b c d e", "e f g h i", "i j k"))
     assert(out(2L).isEmpty && out(3L).isEmpty)
@@ -55,7 +56,7 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("chunkText: zero overlap partitions tokens exactly; whitespace normalized") {
     val chunks = Seq("w1  w2\tw3   w4 w5").toDF("t")
-      .select(TF.chunkText(col("t"), maxTokens = 2))
+      .select(Kernels.chunkText(col("t"), 2, 0))
       .as[Seq[String]].collect().head
     assert(chunks == Seq("w1 w2", "w3 w4", "w5"))
     // every token appears exactly once across chunks at overlap 0
@@ -119,7 +120,7 @@ class TextFunctionsSpec extends SparkSpec {
   test("wordNgrams: null text yields null, short text empty array — not legacy size(null)") {
     val df = Seq((1L, null.asInstanceOf[String]), (2L, "one two"), (3L, "a b c"))
       .toDF("id", "t")
-    val out = df.select(col("id"), TF.wordNgrams(col("t"), 3).as("g"))
+    val out = df.select(col("id"), Kernels.wordNgrams(col("t"), 3).as("g"))
       .collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(1)) null else r.getSeq[String](1))).toMap
     assert(out(1L) == null)          // null propagates, regardless of sizeOfNull conf
@@ -201,7 +202,7 @@ class TextFunctionsSpec extends SparkSpec {
       "mixed123abc!@# end", "\n\nleading ws", "trailing ws  \t")
     val df = nasty.toDF("t")
     val viaKernel = df.select(
-      TF.textStats(col("t")).as("st")).select(
+      Kernels.textStats(col("t")).as("st")).select(
       col("st.n_tokens"), col("st.n_subtokens"),
       col("st.n_punct"), col("st.n_chars"),
       col("st.hits_en"), col("st.hits_fr"))
@@ -225,9 +226,9 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("simhashText kernel equals a direct sketch of the same tokens") {
     val df = Seq("Spark Engines AT scale", "  ", "one", "a\tb c").toDF("t")
-    val viaText = df.select(graft.functions.SimHash.simhashText(col("t")))
+    val viaText = df.select(Kernels.simHashText(col("t")))
       .as[Long].collect().toSeq
-    val viaTokens = df.select(graft.functions.SimHash.simhash64(
+    val viaTokens = df.select(Kernels.simHash64(
         filter(TF.tokens(lower(col("t"))), x => length(x) > 0)))
       .as[Long].collect().toSeq
     assert(viaText == viaTokens)
@@ -236,7 +237,7 @@ class TextFunctionsSpec extends SparkSpec {
   test("simhash: identical tokens → identical hash; deterministic") {
     val df = Seq("spark engines at scale", "spark engines at scale",
       "entirely unrelated words here").toDF("t")
-    val hs = df.select(SimHash.simhash64(TF.tokens(col("t")))).as[Long].collect()
+    val hs = df.select(Kernels.simHash64(TF.tokens(col("t")))).as[Long].collect()
     assert(hs(0) == hs(1))
     assert(hs(0) != hs(2))
   }

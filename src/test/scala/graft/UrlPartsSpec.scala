@@ -1,7 +1,7 @@
 package graft
 
-import graft.functions.{UrlKernels, TextFunctions => TF}
-import org.apache.spark.sql.Row
+import graft.functions.UrlKernels
+import org.apache.spark.sql.{Kernels, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -97,7 +97,7 @@ class UrlPartsSpec extends SparkSpec {
       (1L, "HTTPS://A.Example.com/p?utm_source=x&z=1"),
       (2L, "junk"), (3L, null.asInstanceOf[String])
     ).toDF("id", "u")
-    val got = df.select(col("id"), TF.urlParts(col("u")).as("p"))
+    val got = df.select(col("id"), Kernels.urlParts(col("u")).as("p"))
       .select(col("id"), col("p.normalized"), col("p.apex"))
       .collect().map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
     assert(got(1L) == (("https://a.example.com/p?z=1", "example.com")))

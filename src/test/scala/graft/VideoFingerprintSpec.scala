@@ -1,6 +1,8 @@
 package graft
 
 import graft.functions.MediaKernels
+import org.apache.spark.sql.Kernels
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable.ArrayBuffer
 
@@ -130,7 +132,8 @@ class VideoFingerprintSpec extends AnyFunSuite {
       (2L, mjpegMp4(twin)),
       (3L, "junk".getBytes))
     val pairs = graft.operators.Dedup
-      .videoNearDupPairs(rows.toDF("doc_id", "video"), "video", "doc_id",
+      .sketchPairs(rows.toDF("doc_id", "video"),
+        Kernels.videoDhash64(col("video")), "doc_id",
         maxHamming = 6, bands = 8, keyBands = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 2L)))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.WarcKernels
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Kernels, Row}
 import org.apache.spark.sql.functions._
 
 /** [[WarcKernels]] — WARC (ISO 28500) record parsing + HTTP payload
@@ -133,13 +133,13 @@ class WarcSpec extends SparkSpec {
 
   test("DataFrame + SQL path: explode records, split HTTP, extract text") {
     val df = Seq((1L, archive)).toDF("id", "blob")
-      .select(col("id"), explode(graft.operators.Multimodal.warcRecords(col("blob"))).as("r"))
+      .select(col("id"), explode(Kernels.warcRecords(col("blob"))).as("r"))
       .where(col("r.warc_type") === "response")
       .select(col("id"), col("r.target_uri").as("uri"),
-        graft.operators.Multimodal.httpParts(col("r.payload")).as("h"))
+        Kernels.httpParts(col("r.payload")).as("h"))
       .select(col("id"), col("uri"), col("h.status"),
-        graft.functions.TextFunctions.htmlExtract(
-          graft.functions.TextFunctions.decodeText(col("h.body"))
+        Kernels.htmlExtract(
+          Kernels.decodeText(col("h.body"))
             .getField("text")).as("text"))
     val row = df.head()
     assert(row.getString(1) == "https://h.example.com/p/1")
@@ -305,7 +305,7 @@ class WarcSpec extends SparkSpec {
     val two = gz(payload) ++ gz(" second member".getBytes("UTF-8"))
     val df = Seq((1, gz(payload)), (2, two), (3, payload))
       .toDF("id", "b")
-      .select(col("id"), graft.operators.Multimodal.gunzip(col("b")).as("o"))
+      .select(col("id"), Kernels.gunzip(col("b")).as("o"))
       .collect().map(r => r.getInt(0) ->
         Option(r.get(1)).map(x => new String(x.asInstanceOf[Array[Byte]], "UTF-8")).orNull)
       .toMap

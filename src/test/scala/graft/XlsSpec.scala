@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.XlsKernels
 import graft.functions.XlsKernels._
+import org.apache.spark.sql.Kernels
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -161,7 +162,7 @@ class XlsSpec extends AnyFunSuite {
       rows(1).getString(3) == "7.5")
     assert(rows(2).isNullAt(1) && rows(2).isNullAt(3))
     val viaCol = df.filter($"id" === 1)
-      .select(graft.operators.Multimodal.xlsCells($"b").as("c"))
+      .select(Kernels.xlsCells($"b").as("c"))
       .selectExpr("size(c)").as[Int].collect()
     assert(viaCol.sameElements(Array(2)))
   }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.XlsxKernels
+import org.apache.spark.sql.Kernels
 import org.apache.spark.sql.functions._
 
 /** [[XlsxKernels]] — the OOXML spreadsheet chain over the ZIP +
@@ -155,7 +156,7 @@ class XlsxSpec extends SparkSpec {
       |</sheetData></worksheet>""".stripMargin
     val xlsx = zip("xl/worksheets/sheet1.xml" -> sheet)
     val rows = Seq((1, xlsx)).toDF("id", "b")
-      .select(col("id"), explode(graft.operators.Multimodal.xlsxCells(col("b"))).as("c"))
+      .select(col("id"), explode(Kernels.xlsxCells(col("b"))).as("c"))
       .select(col("c.row"), col("c.col"), col("c.value"))
       .as[(Int, Int, String)].collect().toSeq
     assert(rows === Seq((1, 1, "df cell")))

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.ZipKernels
+import org.apache.spark.sql.Kernels
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -109,8 +110,8 @@ class ZipSpec extends SparkSpec {
       "word/document.xml" -> "<w:document><w:t>doc body text</w:t></w:document>")
     val row = Seq((1L, docx)).toDF("id", "blob")
       .select(col("id"),
-        size(graft.operators.Multimodal.zipEntries(col("blob"))).as("n"),
-        decode(graft.operators.Multimodal.zipExtract(col("blob"),
+        size(Kernels.zipEntries(col("blob"))).as("n"),
+        decode(Kernels.zipExtract(col("blob"),
           lit("word/document.xml")), "UTF-8").as("x"))
       .head()
     assert(row.getInt(1) == 2)

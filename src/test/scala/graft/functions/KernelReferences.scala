@@ -12,7 +12,7 @@ import TextFunctions.{StopwordsEn, tokens}
   */
 object KernelReferences {
 
-  // ---- text statistics: the per-field twins of TF.textStats ----
+  // ---- text statistics: the per-field twins of Kernels.textStats ----
 
   /** BPE-ish token count: counts maximal runs of letters, digits, or
     * other-non-space (a cheap proxy for subword tokenizers when sizing
