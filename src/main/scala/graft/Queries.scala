@@ -113,6 +113,23 @@ object Queries {
       unhex(when(pmod(col("doc_id"), lit(7)) === 0, substring(col("hex"), 1, cut))
         .otherwise(col("hex"))).as("blob"))
 
+  /** A DEFLATED ZIP archive of `(name, UTF-8 content)` members, built by
+    * the JDK's ZipOutputStream with every entry stamped 1980-01-01 00:00
+    * (the DOS epoch): without a set time each entry takes the clock's,
+    * and the archive bytes, the plan literal made of them and every
+    * hash over them would change from one build to the next. */
+  private def zipArchive(members: (String, String)*): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val z = new java.util.zip.ZipOutputStream(bos)
+    members.foreach { case (n, c) =>
+      val e = new java.util.zip.ZipEntry(n)
+      e.setTimeLocal(java.time.LocalDateTime.of(1980, 1, 1, 0, 0))
+      z.putNextEntry(e)
+      z.write(c.getBytes("UTF-8")); z.closeEntry()
+    }
+    z.close(); bos.toByteArray
+  }
+
   /** RFC 8878 store-mode frame built IN-PLAN: magic + single-segment
     * FHD + 4-byte FCS + raw blocks CHUNKED at Block_Maximum_Size
     * (128 KB), so the frame is spec-valid at ANY payload size. The r15
@@ -4704,12 +4721,13 @@ object Queries {
   /** BPE training under the 100 TB configuration: the dictionary capped
     * to the top-16 words by (count DESC, word ASC) — deterministic, and
     * small enough to bite at sf0.01 (31 distinct words) — AND the
-    * DISTRIBUTED incremental trainer forced (localDictLimit = 0, the
+    * dictionary forced off the driver (localDictLimit = 0, the
     * q_dup_clusters_dist pattern): the oracle replays the same capped
     * loop, so the production-scale path — Zipf-tail truncation plus
-    * incremental pair-count maintenance over DataFrames — is
-    * hash-checked end to end, while q_bpe_train exercises the
-    * driver-local budgeted path on the same corpus. */
+    * the words held in a persisted RDD, one job per merge returning
+    * pair-count changes — is hash-checked end to end, while
+    * q_bpe_train exercises the driver-local budgeted path on the same
+    * corpus. */
   private val qBpeTrainCapped = Q("q_bpe_train_capped",
     (s, dir) => {
       import s.implicits._
@@ -6122,14 +6140,8 @@ object Queries {
         le16(lit(0)), le16(lit(0)), le16(lit(0)), le32(r), le32(sz), le32(sz),
         le16(lit(name.length)), le16(lit(0)), le16(lit(0)), le16(lit(0)),
         le16(lit(0)), le32(lit(0)), le32(off), encode(lit(name), "UTF-8"))
-      val deflHex = {
-        val bos = new java.io.ByteArrayOutputStream()
-        val z = new java.util.zip.ZipOutputStream(bos)
-        z.putNextEntry(new java.util.zip.ZipEntry("d.txt"))
-        z.write("deflated entry payload".getBytes("UTF-8"))
-        z.closeEntry(); z.close()
-        bos.toByteArray.map("%02x".format(_)).mkString
-      }
+      val deflHex = zipArchive("d.txt" -> "deflated entry payload")
+        .map("%02x".format(_)).mkString
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"),
           pmod(id, lit(5)).as("__m5"), (pmod(id, lit(9)) === 0).as("__tr"),
@@ -6770,15 +6782,6 @@ object Queries {
       val idS = id.cast("string")
       val m = pmod(id, lit(12))
       def hexOf(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
-      def zipOf(members: (String, String)*): Array[Byte] = {
-        val bos = new java.io.ByteArrayOutputStream()
-        val z = new java.util.zip.ZipOutputStream(bos)
-        members.foreach { case (n, c) =>
-          z.putNextEntry(new java.util.zip.ZipEntry(n))
-          z.write(c.getBytes("UTF-8")); z.closeEntry()
-        }
-        z.close(); bos.toByteArray
-      }
       val pdf = {
         val out = new java.io.ByteArrayOutputStream()
         def es(x: String): Unit = out.write(x.getBytes("ISO-8859-1"))
@@ -6796,11 +6799,11 @@ object Queries {
         es(s"trailer << /Size 5 /Root 1 0 R >>\nstartxref\n$xo\n%%EOF")
         out.toByteArray
       }
-      val docx = zipOf("word/document.xml" ->
+      val docx = zipArchive("word/document.xml" ->
         "<w:document><w:body><w:p><w:r><w:t>docx lane text</w:t></w:r></w:p></w:body></w:document>")
-      val pptx = zipOf("ppt/slides/slide1.xml" ->
+      val pptx = zipArchive("ppt/slides/slide1.xml" ->
         "<p:sld><a:p><a:t>pptx lane text</a:t></a:p></p:sld>")
-      val xlsx = zipOf("xl/worksheets/sheet1.xml" ->
+      val xlsx = zipArchive("xl/worksheets/sheet1.xml" ->
         ("<worksheet><sheetData><row r=\"1\">" +
           "<c r=\"A1\" t=\"inlineStr\"><is><t>cell one</t></is></c></row>" +
           "<row r=\"2\"><c r=\"A2\" t=\"inlineStr\"><is><t>cell two</t></is></c>" +
@@ -7085,15 +7088,7 @@ object Queries {
         es(s"trailer << /Size 5 /Root 1 0 R >>\nstartxref\n$xo\n%%EOF")
         hexOf(out.toByteArray)
       }
-      val zipHex = {
-        val bos = new java.io.ByteArrayOutputStream()
-        val z = new java.util.zip.ZipOutputStream(bos)
-        z.putNextEntry(new java.util.zip.ZipEntry("a.txt"))
-        z.write("router zip".getBytes("UTF-8")); z.closeEntry()
-        z.putNextEntry(new java.util.zip.ZipEntry("b.txt"))
-        z.write("two".getBytes("UTF-8")); z.closeEntry(); z.close()
-        hexOf(bos.toByteArray)
-      }
+      val zipHex = hexOf(zipArchive("a.txt" -> "router zip", "b.txt" -> "two"))
       val tarHex = {
         val data = java.util.Arrays.copyOf("router tar".getBytes("UTF-8"), 512)
         val h = new Array[Byte](512)

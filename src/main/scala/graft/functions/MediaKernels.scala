@@ -938,31 +938,4 @@ object MediaKernels {
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(feats.head)
   }
-
-  /** Fixed-size frame chunks of a blob, keeping every `stride`-th chunk:
-    * array of (frame_no, bytes) structs for the `frame_chunks` codegen
-    * expression (explode it for one row per sampled frame). An empty
-    * blob yields an empty array (zero rows after explode); the last
-    * chunk may be shorter than `frameBytes`.
-    */
-  def frameChunks(blob: Array[Byte], frameBytes: Int, stride: Int)
-      : org.apache.spark.sql.catalyst.util.ArrayData = {
-    val total = blob.length
-    val nChunks = (total + frameBytes.toLong - 1) / frameBytes
-    val kept = ((nChunks + stride - 1) / stride).toInt
-    val out = new Array[Any](kept)
-    var i = 0L
-    var k = 0
-    while (i < nChunks) {
-      if (i % stride == 0) {
-        val from = (i * frameBytes).toInt
-        val until = math.min(from.toLong + frameBytes, total).toInt
-        out(k) = new GenericInternalRow(Array[Any](
-          i.toInt, java.util.Arrays.copyOfRange(blob, from, until)))
-        k += 1
-      }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
 }

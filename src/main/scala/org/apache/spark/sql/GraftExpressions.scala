@@ -425,11 +425,6 @@ object Kernels {
     "MediaKernels.decodeFeatures", consts = Seq(int("dim"),
       KernelConst("decoder", classOf[scala.Function2[_, _, _]], leading = true)),
     check = { case Seq(dim: Int, _) => require(dim >= 1, s"feature dim must be >= 1, got $dim") })
-  val frameChunks = kernel("frame_chunks", Seq(B), arr(FrameChunks.elementSchema),
-    "MediaKernels.frameChunks", consts = Seq(int("frameBytes"), int("stride")),
-    check = { case Seq(frameBytes: Int, stride: Int) =>
-      require(frameBytes >= 1, s"frameBytes must be >= 1, got $frameBytes")
-      require(stride >= 1, s"stride must be >= 1, got $stride") })
   val dHash64 = kernel("dhash64", Seq(B), L, "PHashKernels.dhash64", mayReturnNull = true,
     usage = "dhash64(binary) - 64-bit perceptual difference hash of a " +
       "raster or codec image (P6/P5/BMP; PNG/JPEG/GIF/TIFF since r15, " +
@@ -852,12 +847,6 @@ object GifFrames {
     StructField("mean_r", DoubleType, nullable = false),
     StructField("mean_g", DoubleType, nullable = false),
     StructField("mean_b", DoubleType, nullable = false)))
-}
-
-object FrameChunks {
-  val elementSchema: StructType = StructType(Seq(
-    StructField("frame_no", IntegerType, nullable = false),
-    StructField("frame", BinaryType, nullable = false)))
 }
 
 object RepetitionCounts {

@@ -75,13 +75,17 @@ class BpeSpec extends SparkSpec {
     }
   }
 
-  test("both trainer paths match the in-memory reference on random corpora") {
+  /** Three random 30-document corpora over a shared-stem vocabulary. */
+  private def randomCorpora: Seq[Seq[String]] = {
     val rnd = new scala.util.Random(47)
     val vocab = Seq("low", "lower", "lowest", "new", "newer", "newest",
       "wide", "wider", "widest", "ab", "aab", "aaab")
-    for (trial <- 1 to 3) {
-      val texts = Seq.fill(30)(
-        Seq.fill(1 + rnd.nextInt(8))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    Seq.fill(3)(Seq.fill(30)(
+      Seq.fill(1 + rnd.nextInt(8))(vocab(rnd.nextInt(vocab.size))).mkString(" ")))
+  }
+
+  test("both trainer paths match the in-memory reference on random corpora") {
+    for ((texts, trial) <- randomCorpora.zip(1 to 3)) {
       val df = texts.toDF("text")
       val want = BpeRef.train(texts, numMerges = 8)
       // driver-local budgeted path (the default at this dictionary size)
@@ -91,6 +95,36 @@ class BpeSpec extends SparkSpec {
       val dist = Bpe.train(df, "text", numMerges = 8, localDictLimit = 0)
       assert(dist == want, s"trial $trial distributed: $dist vs $want")
     }
+  }
+
+  test("the distributed trainer learns the same merges over 1 and 7 partitions") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => spark.conf.getOption(k))
+    try {
+      spark.conf.set(keys(1), "false")
+      for (parts <- Seq(1, 7); (texts, trial) <- randomCorpora.zip(1 to 3)) {
+        spark.conf.set(keys(0), parts.toString)
+        val dict = Bpe.wordDict(texts.toDF("text"), "text")
+        assert(dict.rdd.getNumPartitions == parts)
+        val dist = Bpe.train(texts.toDF("text"), "text", numMerges = 8, localDictLimit = 0)
+        val want = BpeRef.train(texts, numMerges = 8)
+        assert(dist == want, s"trial $trial, $parts partitions: $dist vs $want")
+      }
+    } finally keys.zip(saved).foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("the distributed trainer submits one job per merge after its census") {
+    val texts = randomCorpora.head
+    val (merges, shape) = JobShape.of(spark, "bpe-train-distributed")(
+      Bpe.train(texts.toDF("text"), "text", numMerges = 8, localDictLimit = 0))
+    assert(merges == BpeRef.train(texts, numMerges = 8) && merges.size == 8)
+    // the census is two jobs: the dictionary's shuffle stage, then the
+    // pair census that persists the first generation
+    assert(shape.jobs <= 8 + 2, s"${shape.jobs} jobs for 8 merges")
   }
 
   test("trainer early-stops when the dictionary runs out of pairs") {

@@ -47,8 +47,7 @@ class KernelRegistrySpec extends SparkSpec {
     "pq_adc" -> Seq(1),
     "sq8_encode" -> Seq(Array(-1.0, -1.0, -1.0), Array(4.0, 4.0, 4.0)),
     "sq8_decode" -> Seq(Array(-1.0, -1.0, -1.0), Array(4.0, 4.0, 4.0)),
-    "decode_features" -> Seq(4, MultimodalSpec.stub),
-    "frame_chunks" -> Seq(4, 2))
+    "decode_features" -> Seq(4, MultimodalSpec.stub))
 
   private val gz = {
     val bos = new java.io.ByteArrayOutputStream()
@@ -91,7 +90,7 @@ class KernelRegistrySpec extends SparkSpec {
       consts.getOrElse(k.name, Nil)): _*)
 
   test("every entry resolves a public static method") {
-    assert(Kernels.all.size == 96)
+    assert(Kernels.all.size == 95)
     assert(Kernels.all.map(_.key).distinct.size == Kernels.all.size)
     for (k <- Kernels.all) {
       assert(k.inputs.forall(t => samples.exists(_._1 == t)), s"${k.name}: no sample input")

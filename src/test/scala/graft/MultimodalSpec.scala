@@ -35,15 +35,6 @@ class MultimodalSpec extends SparkSpec {
     assert(out(1L) != out(2L))
   }
 
-  test("frame_chunks keeps every stride-th fixed-size chunk") {
-    val blob = Array.tabulate[Byte](300)(i => (i % 127).toByte)
-    val df = Seq((7L, blob)).toDF("id", "blob")
-    val frames = df.select(explode(Kernels.frameChunks(col("blob"), 64, 2)).as("f"))
-      .select("f.frame_no").as[Int].collect().toSeq.sorted
-    // 300 bytes -> chunks 0..4, strided -> 0, 2, 4
-    assert(frames == Seq(0, 2, 4))
-  }
-
   test("imageMeta parses real PNG/GIF/BMP/JPEG headers, rejects junk and truncation") {
     def png(w: Int, h: Int): Array[Byte] = {
       val b = java.nio.ByteBuffer.allocate(24)
