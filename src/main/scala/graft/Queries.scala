@@ -113,6 +113,13 @@ object Queries {
       unhex(when(pmod(col("doc_id"), lit(7)) === 0, substring(col("hex"), 1, cut))
         .otherwise(col("hex"))).as("blob"))
 
+  /** Lowercase hex of a byte array: how the fixtures below carry a
+    * built blob into a plan literal. */
+  private def hexOf(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
+
+  /** Uppercase hex of byte values held as ints (the JPEG fixtures). */
+  private def upperHexOf(a: Array[Int]): String = a.map(b => f"$b%02X").mkString
+
   /** A DEFLATED ZIP archive of `(name, UTF-8 content)` members, built by
     * the JDK's ZipOutputStream with every entry stamped 1980-01-01 00:00
     * (the DOS epoch): without a set time each entry takes the clock's,
@@ -2743,10 +2750,9 @@ object Queries {
       seg(0xdb, Array(0x00) ++ Array.fill(64)(8)) ++
       seg(0xc4, Array(0x00) ++ dcBits ++ dcVals) ++
       seg(0xc4, Array(0x10) ++ acBits ++ acVals)
-    def hexOf(a: Array[Int]): String = a.map(b => f"$b%02X").mkString
     val grayHead = common ++ sof(1) ++ sos(1)
     val colorHead = common ++ sof(3) ++ sos(3)
-    (hexOf(grayHead), hexOf(colorHead),
+    (upperHexOf(grayHead), upperHexOf(colorHead),
       grayHead.length + 2 + 2, colorHead.length + 4 + 2) // + entropy + EOI
   }
 
@@ -2792,8 +2798,7 @@ object Queries {
     val tail = seg(0xda, Array(1, 1, 0x00, 1, 63, 0)) ++ // AC [1,63] first
       Array(0xaf) ++ // one EOB0 (1010) + pad 1s
       Array(0xff, 0xd9)
-    def hexOf(a: Array[Int]): String = a.map(b => f"$b%02X").mkString
-    (hexOf(head), hexOf(tail), head.length + 2 + tail.length)
+    (upperHexOf(head), upperHexOf(tail), head.length + 2 + tail.length)
   }
 
   /** Constructed single-MCU JPEG blob for `id` (grayscale for even ids,
@@ -5536,15 +5541,14 @@ object Queries {
       def hintedHex(family: String, text: String, cs: String): String = {
         val b = s"""<meta charset="$family">""".getBytes("US-ASCII") ++
           text.getBytes(cs)
-        b.map("%02x".format(_)).mkString
+        hexOf(b)
       }
       val sjisHex = hintedHex("shift_jis", "こんにちは世界", "windows-31j")
       val gbkHex = hintedHex("gbk", "你好世界", "GBK")
       val eucKrHex = hintedHex("euc-kr", "안녕하세요", "x-windows-949")
       val big5Hex = hintedHex("big5", "繁體中文", "Big5")
-      val falseHex = ("""<meta charset="shift_jis">x"""
-        .getBytes("US-ASCII") ++ Array(0xff.toByte, 0xff.toByte))
-        .map("%02x".format(_)).mkString
+      val falseHex = hexOf(("""<meta charset="shift_jis">x"""
+        .getBytes("US-ASCII") ++ Array(0xff.toByte, 0xff.toByte)))
       val blob = when(m === 0, encode(clean, "UTF-8"))
         .when(m === 1, concat(unhex(lit("EFBBBF")), encode(clean, "UTF-8")))
         .when(m === 2, concat(encode(clean, "UTF-8"), unhex(lit("E9"))))
@@ -5917,7 +5921,7 @@ object Queries {
         val bos = new java.io.ByteArrayOutputStream()
         val g = new java.util.zip.GZIPOutputStream(bos)
         g.write(gzPage.getBytes("UTF-8")); g.close()
-        bos.toByteArray.map("%02x".format(_)).mkString
+        hexOf(bos.toByteArray)
       }
       val gzPayloadBin = concat(
         encode(lit("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n" +
@@ -5947,9 +5951,8 @@ object Queries {
       //  through LzwKernels like the gzip/br lanes; the x- alias form
       //  exercises the RFC 9110 alias
       val czPage = "<html><body><p>lzw body roundtrip ok</p></body></html>"
-      val czHex = graft.functions.LzwKernels
-        .compress(czPage.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
+      val czHex = hexOf(graft.functions.LzwKernels
+        .compress(czPage.getBytes("UTF-8")))
       val czPayloadBin = concat(
         encode(lit("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n" +
           "Content-Encoding: x-compress\r\n\r\n"), "UTF-8"),
@@ -6068,7 +6071,7 @@ object Queries {
       val eval = fixture.filter(pmod(col("doc_id"), lit(3)) === 0)
       val frame = Classifier
         .perDocCharFeatures(hist, "text", "doc_id", col("lang"), buckets, gramN)
-        .repartition(8, col("__id"))
+        .repartition(graft.operators.KMeans.LoopPartitions, col("__id"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val ws =
         try Classifier.trainLangId(frame, langs, buckets, iters, lr)
@@ -6140,8 +6143,7 @@ object Queries {
         le16(lit(0)), le16(lit(0)), le16(lit(0)), le32(r), le32(sz), le32(sz),
         le16(lit(name.length)), le16(lit(0)), le16(lit(0)), le16(lit(0)),
         le16(lit(0)), le32(lit(0)), le32(off), encode(lit(name), "UTF-8"))
-      val deflHex = zipArchive("d.txt" -> "deflated entry payload")
-        .map("%02x".format(_)).mkString
+      val deflHex = hexOf(zipArchive("d.txt" -> "deflated entry payload"))
       t(s, dir, "documents")
         .select(id.cast("bigint").as("doc_id"),
           pmod(id, lit(5)).as("__m5"), (pmod(id, lit(9)) === 0).as("__tr"),
@@ -6223,7 +6225,6 @@ object Queries {
       val id = col("doc_id")
       val idS = id.cast("string")
       val m = pmod(id, lit(6))
-      def hexOf(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
       val marker = "0000000"
       // splice `repl` (7 chars, fixed width) over the marker bytes
       def splice(blob: Array[Byte], needle: Array[Byte],
@@ -6287,7 +6288,6 @@ object Queries {
       val id = col("doc_id")
       val idS = id.cast("string")
       val m = pmod(id, lit(6))
-      def hexOf(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
       val marker = "0000000"
       def splice(blob: Array[Byte], needle: Array[Byte],
                  repl: Column): Column = {
@@ -6632,7 +6632,6 @@ object Queries {
       val idS = id.cast("string")
       val m = pmod(id, lit(5))
       val marker = "0000000"
-      def hexOf(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
       def splice(blob: Array[Byte], repl: Column): Column = {
         val needle = marker.getBytes("US-ASCII")
         val at = blob.indexOfSlice(needle)
@@ -6781,7 +6780,6 @@ object Queries {
       val id = col("doc_id")
       val idS = id.cast("string")
       val m = pmod(id, lit(12))
-      def hexOf(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
       val pdf = {
         val out = new java.io.ByteArrayOutputStream()
         def es(x: String): Unit = out.write(x.getBytes("ISO-8859-1"))
@@ -6958,7 +6956,6 @@ object Queries {
       val idS = id.cast("string")
       val m = pmod(id, lit(5))
       val marker = "0000000"
-      def hexOf(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
       val ttf = FontKernels.buildSfnt(otf = false, Seq(
         "name" -> FontKernels.buildNameTable(s"Font $marker"),
         "maxp" -> FontKernels.buildMaxp(256),
@@ -7022,7 +7019,6 @@ object Queries {
       val idS = id.cast("string")
       val m = pmod(id, lit(4))
       val marker = "0000000"
-      def hexOf(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
       val jpeg = ImageEncoders.jpegGrayBlocks(
         Array.tabulate(8, 8)((r, c) => (r * 7 + c * 3) % 256))
       val tagged = ExifKernels.app1Splice(jpeg,
@@ -7072,7 +7068,6 @@ object Queries {
     (s, dir) => {
       val id = col("doc_id")
       val idS = id.cast("string")
-      def hexOf(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
       val pdfHex = {
         val out = new java.io.ByteArrayOutputStream()
         def es(x: String): Unit = out.write(x.getBytes("ISO-8859-1"))
@@ -7180,31 +7175,27 @@ object Queries {
       // (detail = text length), .xls (detail = cell count), .ppt
       // (detail = text length), or a bare container (detail = entry
       // count).
-      val cfbHex = graft.functions.CfbKernels.buildDoc(
+      val cfbHex = hexOf(graft.functions.CfbKernels.buildDoc(
         "router doc", unicode = false,
-        extra = Seq("1Table" -> Array.fill[Byte](32)(5)))
-        .map("%02x".format(_)).mkString
+        extra = Seq("1Table" -> Array.fill[Byte](32)(5))))
       val xlsHex = {
         import graft.functions.XlsKernels
-        XlsKernels.build(Seq(Seq(
+        hexOf(XlsKernels.build(Seq(Seq(
           XlsKernels.XSst(0, 0, "router xls"),
           XlsKernels.XNum(1, 1, 5.0),
-          XlsKernels.XRkInt(2, 2, 7)))).map("%02x".format(_)).mkString
+          XlsKernels.XRkInt(2, 2, 7)))))
       }
-      val pptHex = graft.functions.PptKernels.build(
-        graft.functions.PptKernels.textBytes("router deck"))
-        .map("%02x".format(_)).mkString
-      val cfbPlainHex = graft.functions.CfbKernels.build(Seq(
+      val pptHex = hexOf(graft.functions.PptKernels.build(
+        graft.functions.PptKernels.textBytes("router deck")))
+      val cfbPlainHex = hexOf(graft.functions.CfbKernels.build(Seq(
         "Data" -> Array.fill[Byte](100)(1),
-        "Meta" -> "plain cfb".getBytes("UTF-8")))
-        .map("%02x".format(_)).mkString
+        "Meta" -> "plain cfb".getBytes("UTF-8"))))
       // archive triage lanes (r17 stretch): 7z + RAR5, CRC-verified
       // header walks, no payload decode
-      val szHex = graft.functions.ArchiveKernels.build7z(
+      val szHex = hexOf(graft.functions.ArchiveKernels.build7z(
         Array.tabulate[Byte](300)(i => (i * 7).toByte),
-        Array[Byte](0x17, 0x06, 0x01)).map("%02x".format(_)).mkString
-      val rarHex = graft.functions.ArchiveKernels.buildRar5(Seq(10, 20))
-        .map("%02x".format(_)).mkString
+        Array[Byte](0x17, 0x06, 0x01)))
+      val rarHex = hexOf(graft.functions.ArchiveKernels.buildRar5(Seq(10, 20)))
       // parquet (round 16, the r15 stretch lane): a REAL file written
       // by Spark's own writer at plan build — triage reads only the
       // footer (detail = num_rows)
@@ -7214,8 +7205,7 @@ object Queries {
           .coalesce(1).write.mode("overwrite").parquet(d)
         val part = new java.io.File(d).listFiles()
           .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.readAllBytes(part.toPath)
-          .map("%02x".format(_)).mkString
+        hexOf(java.nio.file.Files.readAllBytes(part.toPath))
       }
       val m9 = pmod(id, lit(18))
       val blob = when(m9 === 0, unhex(lit(pdfHex)))
@@ -7479,7 +7469,6 @@ object Queries {
         put(148, f"$sum%06o" + "\u0000 ")
         h
       }
-      def hex(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
       val readme = "archive readme: graft r14\n".getBytes("UTF-8")
       val readmeBlock = java.util.Arrays.copyOf(readme, 512)
       val zeros1024 = new Array[Byte](1024)
@@ -7488,10 +7477,10 @@ object Queries {
       val content = rpad(concat(lit("tar doc "), idS, lit(" says "), word),
         64, " ")
       val tarBin = concat(
-        unhex(lit(hex(h1))), encode(content, "UTF-8"),
-        unhex(lit(hex(new Array[Byte](448)))),
-        unhex(lit(hex(h2))), unhex(lit(hex(readmeBlock))),
-        unhex(lit(hex(zeros1024))))
+        unhex(lit(hexOf(h1))), encode(content, "UTF-8"),
+        unhex(lit(hexOf(new Array[Byte](448)))),
+        unhex(lit(hexOf(h2))), unhex(lit(hexOf(readmeBlock))),
+        unhex(lit(hexOf(zeros1024))))
       // the .tar.gz branch: a fixed archive gzipped at plan build
       val tgzHex = {
         val hh = hdr("gz/member.txt", 13)
@@ -7500,7 +7489,7 @@ object Queries {
         val bos = new java.io.ByteArrayOutputStream()
         val g = new java.util.zip.GZIPOutputStream(bos)
         g.write(tar); g.close()
-        bos.toByteArray.map("%02x".format(_)).mkString
+        hexOf(bos.toByteArray)
       }
       val blob0 = when(pmod(id, lit(4)) === 1,
           Kernels.gunzip(unhex(lit(tgzHex))))
@@ -7675,7 +7664,6 @@ object Queries {
         leB(crc1, 4) ++ leB(shared.length, 4) ++ leB(shared.length, 4) ++
         leB(n1.length, 2) ++ leB(0, 2) ++ leB(0, 2) ++ leB(0, 2) ++
         leB(0, 2) ++ leB(0, 4) ++ leB(0, 4) ++ n1.getBytes("UTF-8")
-      def hexOf(b: Array[Byte]) = b.map("%02x".format(_)).mkString
       val n2 = "xl/worksheets/sheet1.xml"
       val sheet = concat(
         lit("<worksheet><sheetData>" +
@@ -7755,7 +7743,6 @@ object Queries {
       val id = col("doc_id")
       val idS = id.cast("string")
       val m = pmod(id, lit(6))
-      def hexOf(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
       val marker = "0000000"
       def splice(blob: Array[Byte], needle: Array[Byte],
                  repl: Column): Column = {
@@ -8062,7 +8049,7 @@ object Queries {
       s4("RIFF"); le32(36 + n); s4("WAVE"); s4("fmt "); le32(16)
       le16(1); le16(1); le32(8000); le32(8000); le16(1); le16(8)
       s4("data"); le32(n)
-      bos.toByteArray.map("%02x".format(_)).mkString
+      hexOf(bos.toByteArray)
     }
     when(pmod(id, lit(13)) === 0, encode(lit("notaudio!"), "UTF-8"))
       .otherwise(unhex(concat(lit(hdrHex), samples)))
@@ -8253,7 +8240,7 @@ object Queries {
         es("xref\n0 5\n0000000000 65535 f \n")
         offs.foreach(o => es(f"$o%010d 00000 n \n"))
         es(s"trailer << /Size 5 /Root 1 0 R >>\nstartxref\n$xo\n%%EOF")
-        out.toByteArray.map("%02x".format(_)).mkString
+        hexOf(out.toByteArray)
       }
       def zb(x: String): Array[Byte] = {
         val d = new java.util.zip.Deflater()
@@ -8305,7 +8292,7 @@ object Queries {
         es("xref\n0 7\n0000000000 65535 f \n")
         offs.foreach(o => es(f"$o%010d 00000 n \n"))
         es(s"trailer << /Size 7 /Root 1 0 R >>\nstartxref\n$xo\n%%EOF")
-        out.toByteArray.map("%02x".format(_)).mkString
+        hexOf(out.toByteArray)
       }
       locally { // fixture honesty: the CMap must translate the codes
         val got = graft.functions.PdfKernels.text(
@@ -8319,12 +8306,11 @@ object Queries {
       // AES-128+Flate, and a real-user-password document the decoder
       // must refuse while meta still reports encrypted=true
       import graft.functions.PdfKernels
-      def hexB(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
-      val encRc4Hex = hexB(PdfKernels.buildEncryptedFixture(
+      val encRc4Hex = hexOf(PdfKernels.buildEncryptedFixture(
         "BT (rc4 secure page) Tj ET", 2, 3, 16, aes = false))
-      val encAesHex = hexB(PdfKernels.buildEncryptedFixture(
+      val encAesHex = hexOf(PdfKernels.buildEncryptedFixture(
         "BT (aes secure page) Tj ET", 4, 4, 16, aes = true, flate = true))
-      val encLockedHex = hexB(PdfKernels.buildEncryptedFixture(
+      val encLockedHex = hexOf(PdfKernels.buildEncryptedFixture(
         "BT (locked away) Tj ET", 2, 3, 16, aes = false, flipU = true))
       locally { // fixture honesty: decrypt works, wrong password refuses
         def un(h: String) = h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
@@ -8407,7 +8393,6 @@ object Queries {
       import graft.functions.{ImageEncoders, PdfKernels, PHashKernels}
       val id = col("doc_id")
       val m = pmod(id, lit(4))
-      def hexOf(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
       def pdfWith(extra: Seq[(String, Array[Byte])]): Array[Byte] = {
         val out = new java.io.ByteArrayOutputStream()
         val offsets = scala.collection.mutable.ArrayBuffer[Long](0L)
@@ -8578,7 +8563,7 @@ object Queries {
         val bos = new java.io.ByteArrayOutputStream()
         val g = new java.util.zip.GZIPOutputStream(bos)
         g.write(gzSmXml.getBytes("UTF-8")); g.close()
-        bos.toByteArray.map("%02x".format(_)).mkString
+        hexOf(bos.toByteArray)
       }
       val gzBytes = unhex(lit(gzSmHex))
       // round 16: the compressed-sitemap lane splits by id%8 — 1 ->

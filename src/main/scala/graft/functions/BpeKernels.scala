@@ -35,12 +35,6 @@ object BpeKernels {
     out.toArray
   }
 
-  /** Initial symbol string of a word: its code points joined in the
-    * doubled-separator form `\n\n s1 \n\n s2 \n\n` the trainer's
-    * replace-based merge pass operates on (see [[graft.operators.Bpe]]). */
-  def initRepr(word: UTF8String): UTF8String =
-    UTF8String.fromString(codepointSymbols(word.toString).mkString("\n\n", "\n\n", "\n\n"))
-
   /** One greedy left-to-right merge pass of (a, b) -> a+b. */
   def mergePass(syms: Array[String], a: String, b: String): Array[String] = {
     val out = new scala.collection.mutable.ArrayBuffer[String](syms.length)

@@ -33,15 +33,12 @@ object Bpe {
   private val WsClass = "[ \\t\\n\\x0B\\f\\r]+"
 
   /** The word dictionary of `textCol`: one row per distinct
-    * lowercased whitespace token, with its corpus count and initial
-    * symbol string (code points, doubled-separator form). */
+    * lowercased whitespace token, with its corpus count. */
   def wordDict(docs: DataFrame, textCol: String): DataFrame = {
     docs
       .select(explode(split(lower(trim(col(textCol))), WsClass)).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .withColumn("r",
-        org.apache.spark.sql.Kernels.bpeInitRepr(col("w")))
   }
 
   /** Train `numMerges` merges; returns them in rank order. Stops early
@@ -82,9 +79,8 @@ object Bpe {
     require(maxDictWords >= 1, s"maxDictWords must be >= 1, got $maxDictWords")
     require(localDictLimit >= 0, s"localDictLimit must be >= 0, got $localDictLimit")
     val full = wordDict(docs, textCol)
-    val capped = (if (maxDictWords == Int.MaxValue) full
-      else full.orderBy(desc("cnt"), asc("w")).limit(maxDictWords))
-      .select(col("w"), col("cnt"))
+    val capped = if (maxDictWords == Int.MaxValue) full
+      else full.orderBy(desc("cnt"), asc("w")).limit(maxDictWords)
     if (localDictLimit > 0) {
       // ONE census job gates AND fetches: collect limit+1 rows — if the
       // budget row arrives, the dictionary is over budget and the rows

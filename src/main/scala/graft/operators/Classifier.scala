@@ -1,12 +1,17 @@
 package graft.operators
 
+import graft.functions.VectorKernels
+import java.math.BigInteger
 import org.apache.spark.sql.{Column, DataFrame, Kernels}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 
 /** Distributed linear quality classifier over hashed token features —
   * the fastText/CCNet role (Joulin et al. 2016; Wenzek et al. 2020:
   * a cheap linear model over hashed n-grams labels documents for
-  * corpus curation), trained entirely in DataFrame aggregations.
+  * corpus curation): features built in DataFrame aggregations, weights
+  * trained by one RDD loop over the cached per-doc frame.
   *
   * DETERMINISM BY CONSTRUCTION (the PageRank trick applied to model
   * training): distributed training is normally not reproducible —
@@ -14,7 +19,7 @@ import org.apache.spark.sql.functions._
   * task retries, and AQE re-plans, and the drift compounds across
   * iterations. Here every order-sensitive reduction is fixed-point:
   * per-row gradient contributions are rounded to 1e-12 resolution and
-  * summed as exact decimals (commutative, associative), and the link
+  * summed as exact integers (commutative, associative), and the link
   * function is the "fast sigmoid" σ̃(z) = 0.5 + z / (2·(1+|z|)) whose
   * every operation (+, ·, /, |·|) is an exactly-specified IEEE-754 op
   * — unlike exp(), which varies between libm implementations. The
@@ -30,13 +35,12 @@ import org.apache.spark.sql.functions._
   * Scale shape: feature extraction is ONE explode + one partial-
   * aggregated shuffle into a cached per-doc incidence frame (id, y,
   * n_words, occupied-bucket set — bounded by `buckets` per row),
-  * pre-partitioned by document; each training iteration is then a
-  * narrow weight-literal projection, a doc-local dot product (no
-  * exchange — the frame is already partitioned by doc), and ONE tiny
-  * shuffle of (bucket, decimal) partial sums; the model itself is
-  * `buckets` doubles, collected (bounded — the centroid-pull
-  * contract) and re-broadcast as literals. A 100 TB corpus costs one
-  * scan to featurize and zero further scans to train.
+  * pre-partitioned by document; each training iteration is then ONE
+  * job over that cache: every partition folds its docs' dot products
+  * and errors into K·`buckets` exact long partial sums, which the
+  * driver merges and applies. The model itself is K·`buckets` doubles
+  * on the driver, shipped to the tasks in the job's closure. A 100 TB
+  * corpus costs one scan to featurize and zero further scans to train.
   */
 object Classifier {
 
@@ -47,6 +51,11 @@ object Classifier {
     * op exactly specified by IEEE-754 (same bits on every engine). */
   def fastSigmoid(z: Column): Column =
     lit(0.5) + z / (lit(2.0) * (lit(1.0) + abs(z)))
+
+  /** σ̃ on a driver or task double: the same IEEE-754 ops, in the same
+    * order, as the Column form — so the same bits. */
+  private[graft] def fastSigmoid(z: Double): Double =
+    0.5 + z / (2.0 * (1.0 + math.abs(z)))
 
   /** Hashed-unigram BINARY PRESENCE features, built in ONE corpus
     * aggregation: per doc (id, y, n_words, bs = set of occupied
@@ -89,8 +98,9 @@ object Classifier {
     * most `buckets` terms and each |w_j| ≤ lr·iters (every delta-rule
     * update moves a weight by at most lr·mean|err·x| ≤ lr), so
     * |z·1e12| ≤ buckets·lr·iters·1e12 — checked against Long range by
-    * the trainScore guard. (The CORPUS-sized gradient sum stays
-    * decimal: its term count grows with the data.)
+    * the trainScore guard. (The CORPUS-sized gradient sum is widened
+    * past long range when it needs to: its term count grows with the
+    * data — see [[GradSums]].)
     *
     * `qwArr` is the PRE-QUANTIZED weight array ([[quantize]] applied
     * per slot, once per iteration, driver-side), and the per-row sum
@@ -126,61 +136,107 @@ object Classifier {
     java.math.BigDecimal.valueOf(w * Scale)
       .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
 
-  /** HOW THE MODEL REACHES EXECUTORS — the three designs measured:
-    * the weights enter each iteration's plan as an ARRAY LITERAL
-    * (typedlit of the pre-quantized longs). Complex-typed literals
-    * become codegen REFERENCE OBJECTS, not inlined source, so all
-    * iteration plans still share one compiled class, and the array is
-    * one shared object per task — zero per-row cost. A broadcast
-    * one-row frame (the PageRank pattern) was tried and rejected: its
-    * BroadcastNestedLoopJoin APPENDS the weight array to every output
-    * row, copying buckets·8 bytes per document per iteration —
-    * measured at 4096 buckets / 200 k docs, 7× the iteration's real
-    * work. (A fully-unrolled single-DAG loop — the oracle's CTE chain
-    * as one Catalyst plan — was also tried: each iteration references
-    * the previous weights TWICE, and with no CTE materialization in
-    * Catalyst the plan grows 2^iters. The DuckDB oracle survives that
-    * shape only because of its MATERIALIZED barriers; the per-
-    * iteration collect below IS that barrier, driver-side.)
-    *
-    * Train `iters` delta-rule iterations from zero weights over the
-    * cached per-doc frame (__id, y, n_words, bs); returns the weight
-    * vector (index = bucket). All reductions fixed-point — see the
-    * object scaladoc for why that makes this bit-reproducible. Each
-    * iteration is ONE job: a narrow error projection over the cache,
-    * one explode + (bucket, decimal) partial-aggregated shuffle of
-    * ≤ `buckets`·partitions rows, and a bounded `buckets`-row
-    * collect — the inherently-sequential global barrier of full-batch
-    * gradient descent. */
+  /** Train `iters` delta-rule iterations from zero weights over the
+    * per-doc frame (__id, y, n_words, bs); returns the weight vector
+    * (index = bucket). All reductions fixed-point — see the object
+    * scaladoc for why that makes this bit-reproducible. One job per
+    * iteration over the frame (cache it first: every iteration reads
+    * it again) — the inherently-sequential global barrier of
+    * full-batch gradient descent. */
   def train(perDoc: DataFrame, buckets: Int, iters: Int,
             lr: Double): Array[Double] =
-    train(perDoc, buckets, iters, lr, perDoc.count())
+    trainLoop(perDoc, Seq(col("y")), buckets, iters, lr).head
 
-  /** [[train]] with the doc count supplied — the one-vs-rest caller
-    * ([[trainLangId]]) shares one count across every class instead of
-    * re-counting the SAME cached frame per label. Semantics identical:
-    * `n` enters the update rule as the fixed full-batch divisor. */
-  private[operators] def train(perDoc: DataFrame, buckets: Int, iters: Int,
-                               lr: Double, n: Long): Array[Double] = {
+  /** Exact gradient sums, one slot per (class, bucket): a long per
+    * slot, widened to a BigInteger only when it leaves long range, so
+    * no sum wraps and a corpus of any size trains. */
+  private[graft] final class GradSums(size: Int) extends Serializable {
+    var rows = 0L
+    private val small = new Array[Long](size)
+    private val big = new Array[BigInteger](size)
+
+    def add(j: Int, v: Long): Unit =
+      try small(j) = Math.addExact(small(j), v)
+      catch { case _: ArithmeticException =>
+        widen(j, BigInteger.valueOf(small(j)).add(BigInteger.valueOf(v)))
+        small(j) = 0L
+      }
+
+    private def widen(j: Int, v: BigInteger): Unit =
+      big(j) = if (big(j) == null) v else big(j).add(v)
+
+    def merge(o: GradSums): GradSums = {
+      rows += o.rows
+      for (j <- 0 until size) {
+        add(j, o.small(j))
+        if (o.big(j) != null) widen(j, o.big(j))
+      }
+      this
+    }
+
+    /** The slot's sum, correctly rounded to a double. */
+    def sum(j: Int): Double =
+      if (big(j) == null) small(j).toDouble
+      else big(j).add(BigInteger.valueOf(small(j))).doubleValue()
+  }
+
+  /** The one delta-rule trainer: a weight vector per target column
+    * (1.0 = in class, 0.0 = out, NULL = no gradient term), all trained
+    * jointly. The K problems are independent — class k never reads
+    * class j's weights — so one pass per iteration serves them all.
+    *
+    * The frame is planned ONCE (`toRdd` over bs and the targets) and
+    * each iteration is one `mapPartitions` job over it: per doc and
+    * class, z = `sum_indexed(bs, quantized w_k)` (the scoring kernel's
+    * own function), err = σ̃(z/1e12) − y, and [[quantize]](err) added
+    * to every occupied bucket's exact sum. The first job's row counts
+    * give n; a NULL target still counts. The driver applies
+    * w_j ← w_j − lr·(Σ/1e12)/n to every slot: a slot no doc occupies
+    * sums to 0 and keeps its bits. */
+  private def trainLoop(perDoc: DataFrame, targets: Seq[Column], buckets: Int,
+                        iters: Int, lr: Double): Seq[Array[Double]] = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    val w = Array.fill(buckets)(0.0)
-    if (n == 0) return w
-    for (_ <- 0 until iters) {
-      val qw = typedlit(w.map(quantize).toIndexedSeq)
-      val grads = perDoc
-        .select((fastSigmoid(zCol(qw, col("bs"))) - col("y")).as("__err"),
-          explode(col("bs")).as("b"))
-        .groupBy(col("b"))
-        .agg(sum(round(col("__err") * lit(Scale), 0)
-          .cast("decimal(38,0)")).as("g"))
-        .collect()
-      grads.foreach { r =>
-        val j = r.getLong(0).toInt
-        val s = r.getDecimal(1)
-        w(j) = w(j) - lr * (s.doubleValue() / Scale) / n
+    val k = targets.size
+    val ws = Array.fill(k)(new Array[Double](buckets))
+    val rows = perDoc.select(col("bs") +: targets.map(_.cast("double")): _*)
+      .queryExecution.toRdd
+    var n = -1L // unknown until the first job counts the rows
+    for (_ <- 0 until iters if n != 0) {
+      val qws = ws.map(_.map(quantize))
+      val g = rows.mapPartitions(rs => Iterator(gradPartials(rs, qws, buckets)))
+        .collect().foldLeft(new GradSums(k * buckets))(_.merge(_))
+      n = g.rows
+      if (n > 0) for (ki <- 0 until k; j <- 0 until buckets)
+        ws(ki)(j) = ws(ki)(j) - lr * (g.sum(ki * buckets + j) / Scale) / n
+    }
+    ws.toSeq
+  }
+
+  /** One partition's exact gradient partials over rows (bs, y_1..y_K). */
+  private def gradPartials(rs: Iterator[InternalRow], qws: Array[Array[Long]],
+                           buckets: Int): GradSums = {
+    val qw = qws.map(UnsafeArrayData.fromPrimitiveArray)
+    val g = new GradSums(qws.length * buckets)
+    rs.foreach { r =>
+      g.rows += 1
+      if (!r.isNullAt(0)) {
+        val bs = r.getArray(0)
+        var ki = 0
+        while (ki < qw.length) {
+          if (!r.isNullAt(1 + ki)) {
+            val z = VectorKernels.sumIndexed(bs, qw(ki)).toDouble / Scale
+            val term = quantize(fastSigmoid(z) - r.getDouble(1 + ki))
+            var i = 0
+            while (i < bs.numElements()) {
+              g.add(ki * buckets + bs.getLong(i).toInt, term)
+              i += 1
+            }
+          }
+          ki += 1
+        }
       }
     }
-    w
+    g
   }
 
   /** Score rows against an already-trained weight vector as a PURE
@@ -286,73 +342,21 @@ object Classifier {
         collect_set(col("b")).as("bs"))
   }
 
-  /** One-vs-rest training over a cached [[perDocCharFeatures]] frame,
-    * JOINT per iteration (round 15, the corpus-scale training shape):
-    * the K one-vs-rest problems are INDEPENDENT — class k's chain
-    * never reads class j's weights — so iteration i can compute every
-    * class's gradient in ONE aggregation pass (K error projections
-    * over the shared cache, one explode, one (bucket, K decimal sums)
-    * shuffle, one ≤`buckets`-row collect) instead of K separate jobs.
-    * Weights are BIT-IDENTICAL to the sequential per-class chain
-    * (same values, same fixed-point reductions, same within-class
-    * order — ClassifierSpec pins equality), so q_langid_model's
-    * oracle replays unchanged while the barrier count drops from
-    * K·iters to iters: at fastText's ~200 languages that is the
-    * difference between 800 and 4 sequential full-corpus passes. The
-    * error projections stay BELOW the Generate (one evaluation per
-    * doc, not per exploded bucket — the r14 ExtractGenerator trap,
-    * pinned in PlanSpec). */
+  /** One-vs-rest training over a cached [[perDocCharFeatures]] frame:
+    * one target per label, (__lang = label) as 0/1 (NULL lang: no
+    * term), all K classes trained JOINTLY by [[trainLoop]] — one job
+    * per iteration whatever K is, not K: at fastText's ~200 languages
+    * that is the difference between 800 and 4 sequential full-corpus
+    * passes. Weights are BIT-IDENTICAL to K separate [[train]] chains
+    * (ClassifierSpec pins equality against the SQL reference), so
+    * q_langid_model's oracle replays each class's chain unchanged. */
   def trainLangId(charFrame: DataFrame, labels: Seq[String], buckets: Int,
                   iters: Int, lr: Double): Seq[Array[Double]] = {
     require(labels.nonEmpty && labels.distinct == labels,
       s"labels must be non-empty and distinct, got $labels")
     requireFixedPointHeadroom(lr * iters.max(1), buckets,
       s"trainLangId(iters=$iters, lr=$lr)")
-    val n = charFrame.count() // one count, shared by every class
-    val k = labels.size
-    val ws = Array.fill(k)(Array.fill(buckets)(0.0))
-    if (n == 0) return ws.toSeq
-    for (_ <- 0 until iters) {
-      val grads = langIdIterGrads(charFrame, labels, ws).collect()
-      grads.foreach { r =>
-        val j = r.getLong(0).toInt
-        var ki = 0
-        while (ki < k) {
-          val s = r.getDecimal(1 + ki)
-          if (s != null) ws(ki)(j) = ws(ki)(j) - lr * (s.doubleValue() / Scale) / n
-          ki += 1
-        }
-      }
-    }
-    ws.toSeq
-  }
-
-  /** One joint gradient pass: all K error projections evaluated in
-    * their OWN select (once per doc), then a second select that
-    * explodes the bucket set over cheap attribute refs, then one
-    * (bucket, K decimal sums) aggregation. The two-select split is
-    * load-bearing: with the explode in the same select,
-    * ExtractGenerator hoists the error expressions into the Project
-    * ABOVE the Generate and each σ̃(w·bs) dot product re-runs once per
-    * exploded bucket element — O(K·|bs|²) per doc instead of O(K·|bs|)
-    * (the r14 trap, measured 30× on the trainers; PlanSpec pins every
-    * sum_indexed kernel below the Generate). */
-  private[graft] def langIdIterGrads(charFrame: DataFrame,
-      labels: Seq[String], ws: Array[Array[Double]]): DataFrame = {
-    val errCols = labels.zipWithIndex.map { case (lbl, ki) =>
-      val qw = typedlit(ws(ki).map(quantize).toIndexedSeq)
-      (fastSigmoid(zCol(qw, col("bs"))) -
-        (col("__lang") === lbl).cast("double")).as(s"__err$ki")
-    }
-    val gradExprs = labels.indices.map(ki =>
-      sum(round(col(s"__err$ki") * lit(Scale), 0)
-        .cast("decimal(38,0)")).as(s"__g$ki"))
-    charFrame
-      .select(errCols :+ col("bs"): _*)
-      .select(labels.indices.map(ki => col(s"__err$ki")) :+
-        explode(col("bs")).as("b"): _*)
-      .groupBy(col("b"))
-      .agg(gradExprs.head, gradExprs.tail: _*)
+    trainLoop(charFrame, labels.map(l => col("__lang") === l), buckets, iters, lr)
   }
 
   /** Predicted label as a PURE PROJECTION over a bucket-set column —

@@ -198,7 +198,7 @@ object KMeans {
     * parallelism, not a cap. Size-derived widths were measured and
     * reverted (OPTIMIZATION_r18.md): one partition at the benched SF
     * serialized the per-iteration work. */
-  private[operators] val LoopPartitions = 8
+  private[graft] val LoopPartitions = 8
 
   /** Fit `iters` Lloyd iterations from farthest-first seeds over the
     * quantized frame (__id, __qv), its points hash-split by id

@@ -217,8 +217,8 @@ object Similarity {
     val dim = centroids(0).length
     for (_ <- 1 to iters) {
       // one corpus scan, one nCentroids·dim-cell shuffle, a bounded
-      // nCentroids·dim-row collect — the per-iteration SQL template
-      // Classifier.train also uses (KMeans.fitLoop runs as plain RDD jobs)
+      // nCentroids·dim-row collect (KMeans.fitLoop and Classifier.train
+      // run the same loop as plain RDD jobs)
       val cells = kmeansIterSums(unit, centroids).collect()
       val sums = new java.util.HashMap[Long, (Array[Double], Long)]()
       cells.foreach { r =>

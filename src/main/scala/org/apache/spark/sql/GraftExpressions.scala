@@ -313,8 +313,6 @@ object Kernels {
       require(maxTokens >= 1, s"maxTokens must be >= 1, got $maxTokens")
       require(overlap >= 0 && overlap < maxTokens,
         s"overlap must be in [0, maxTokens), got $overlap") })
-  /** Initial BPE symbol string of a word (see [[graft.operators.Bpe]]). */
-  val bpeInitRepr = kernel("bpe_init_repr", Seq(S), S, "BpeKernels.initRepr")
   /** Corpus-scale BPE encode; the ranked merges ride as references. */
   val bpeTokens = kernel("bpe_tokens", Seq(S), arr(S), "BpeKernels.tokens",
     consts = Seq(ref("mergesA", classOf[Array[String]]), ref("mergesB", classOf[Array[String]])),

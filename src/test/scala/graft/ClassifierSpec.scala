@@ -111,8 +111,7 @@ class ClassifierSpec extends SparkSpec {
   }
 
   test("trainLangId JOINT per-iteration gradients are BIT-IDENTICAL to " +
-    "the sequential per-class chain (r15) — iters jobs instead of " +
-    "K*iters; error kernels stay below the Generate") {
+    "the sequential per-class SQL chain") {
     import spark.implicits._
     val langs = Seq("en", "fr", "ru", "el")
     val vocab = Map(
@@ -134,5 +133,91 @@ class ClassifierSpec extends SparkSpec {
         s"class ${langs(ki)} diverged from the sequential chain")
     }
     assert(joint.exists(_.exists(_ != 0.0)), "trained weights all zero?")
+  }
+
+  test("the Double sigmoid twin is bit-identical to the Column fast sigmoid") {
+    val zs = Seq(-100.0, -2.0, -0.5, 0.0, 0.5, 2.0, 100.0)
+    val viaColumn = zs.toDF("z").select(Classifier.fastSigmoid(col("z")))
+      .as[Double].collect()
+    assert(viaColumn.toSeq.map(java.lang.Double.doubleToRawLongBits) ==
+      zs.map(z => java.lang.Double.doubleToRawLongBits(Classifier.fastSigmoid(z))))
+  }
+
+  test("gradient partials widen past long range instead of wrapping") {
+    val a = new Classifier.GradSums(2)
+    a.add(0, Long.MaxValue); a.add(0, Long.MaxValue); a.add(1, -5L)
+    val b = new Classifier.GradSums(2)
+    b.add(0, Long.MaxValue); b.add(1, Long.MinValue); b.add(1, Long.MinValue)
+    val m = a.merge(b)
+    assert(m.sum(0) == (BigInt(Long.MaxValue) * 3).toDouble)
+    assert(m.sum(1) == (BigInt(Long.MinValue) * 2 - 5).toDouble)
+    // back inside long range after a widening: still exact
+    val c = new Classifier.GradSums(1)
+    c.add(0, Long.MaxValue); c.add(0, 2L); c.add(0, -12L)
+    assert(c.sum(0) == (BigInt(Long.MaxValue) - 10).toDouble)
+  }
+
+  /** Random per-doc frames over a 40-word vocabulary: `y` is 1, 0 or
+    * NULL, `lang` one of four labels or NULL. */
+  private def randomDocs(seed: Int) = {
+    val rnd = new scala.util.Random(seed)
+    val langs = Seq("en", "fr", "ru", "el")
+    (1 to 90).map { i =>
+      val text = Seq.fill(1 + rnd.nextInt(9))(s"w${rnd.nextInt(40)}").mkString(" ")
+      val y = rnd.nextInt(3) match { case 2 => None; case v => Some(v) }
+      val lang = if (rnd.nextInt(6) == 0) None else Some(langs(rnd.nextInt(4)))
+      (i.toLong, text, y, lang)
+    }.toDF("doc_id", "text", "y", "lang")
+  }
+
+  test("the RDD trainer is BIT-IDENTICAL to the SQL reference on random " +
+    "corpora, at 1 and 7 partitions, K = 1 and K = 4") {
+    import graft.operators.ClassifierReference
+    val langs = Seq("en", "fr", "ru", "el")
+    for (buckets <- Seq(64, 256); lr <- Seq(2.0, 8.0)) {
+      val seed = buckets + lr.toInt
+      val docs = randomDocs(seed)
+      val yFrame = Classifier.perDocFeatures(docs, "text", "doc_id", col("y"), buckets)
+      val langFrame = Classifier.perDocCharFeatures(
+        docs, "text", "doc_id", col("lang"), buckets)
+      val wantY = ClassifierReference.train(yFrame, buckets, 4, lr)
+      val wantLang = ClassifierReference.trainLangIdSequential(langFrame, langs, buckets, 4, lr)
+      assert(wantY.exists(_ != 0.0) && wantLang.forall(_.exists(_ != 0.0)))
+      for (parts <- Seq(1, 7)) {
+        val at = s"seed $seed, $buckets buckets, lr $lr, $parts partitions"
+        val y = yFrame.repartition(parts, col("__id"))
+        assert(java.util.Arrays.equals(Classifier.train(y, buckets, 4, lr), wantY), at)
+        val lang = langFrame.repartition(parts, col("__id"))
+        val got = Classifier.trainLangId(lang, langs, buckets, 4, lr)
+        langs.indices.foreach { ki =>
+          assert(java.util.Arrays.equals(got(ki), wantLang(ki)), s"$at, class ${langs(ki)}")
+        }
+      }
+    }
+    // an empty frame trains to zero weights
+    val empty = Classifier.perDocFeatures(randomDocs(1).limit(0), "text", "doc_id",
+      col("y"), 64)
+    assert(Classifier.train(empty, 64, 4, 2.0).forall(_ == 0.0))
+  }
+
+  test("training submits one job per iteration over a materialized cache") {
+    val frame = Classifier.perDocFeatures(corpus(200), "text", "doc_id", col("y"), 64)
+      .repartition(4, col("__id")).cache()
+    val charFrame = Classifier.perDocCharFeatures(randomDocs(5), "text", "doc_id",
+      col("lang"), 64).repartition(4, col("__id")).cache()
+    try {
+      frame.count(); charFrame.count()
+      val (w, one) = JobShape.of(spark, "classifier-train")(
+        Classifier.train(frame, 64, iters = 8, lr = 2.0))
+      // iters + c jobs with c = 0: the first iteration's row counts are
+      // the doc count, and the partials come back without a shuffle
+      assert(w.exists(_ != 0.0))
+      assert(one.jobs <= 8 && one.shuffleBytes == 0, one)
+      val (ws, joint) = JobShape.of(spark, "classifier-train-langid")(
+        Classifier.trainLangId(charFrame, Seq("en", "fr", "ru", "el"), 64,
+          iters = 4, lr = 2.0))
+      assert(ws.size == 4)
+      assert(joint.jobs <= 4 && joint.shuffleBytes == 0, joint)
+    } finally { frame.unpersist(); charFrame.unpersist() }
   }
 }

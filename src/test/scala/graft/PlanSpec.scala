@@ -664,26 +664,6 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("langid trainer: every per-class error projection (sum_indexed " +
-    "dot product) evaluates BELOW the Generate — once per doc, not per " +
-    "exploded bucket element") {
-    // the r15 joint-training select fused errCols with explode(bs), so
-    // ExtractGenerator hoisted all K sum_indexed dot products above the
-    // Generate (O(K·|bs|²) per doc). r16 splits the selects like
-    // kmeansIterSums/pqIterSums; pin the shape.
-    val docs = spark.read.parquet(s"$dir/documents.parquet").limit(64)
-    val labels = Seq("en", "de", "fr")
-    val charFrame = graft.operators.Classifier.perDocCharFeatures(
-      docs, "text", "doc_id", org.apache.spark.sql.functions.lit("en"), 64)
-    val ws = Array.fill(labels.size)(Array.fill(64)(0.01))
-    val plan = graft.operators.Classifier
-      .langIdIterGrads(charFrame, labels, ws)
-      .queryExecution.executedPlan
-    val p = plan.toString
-    assert("sum_indexed".r.findAllIn(p).size >= labels.size, p)
-    assertKernelBelowGenerate(plan, "sum_indexed")
-  }
-
   test("PQ trainer: per-iteration reduction is a DataFrame hash " +
     "aggregation over (subspace, code, position) — no RDD exit") {
     val unit = trainerUnit
